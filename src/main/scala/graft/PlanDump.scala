@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Deliverable helper: write `.explain("formatted")` of named registered
   * queries to plans/<outDir>/<name>_<tag>.txt. Lifecycle queries execute
@@ -13,16 +12,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, tag, names) = args.take(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSession.local(defaultCpus = 32)
     new java.io.File(outDir).mkdirs()
     names.split(',').foreach { name =>
       val df   = SparkEntry.queries(name)(spark, sfDir)

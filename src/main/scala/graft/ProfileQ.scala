@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement-only harness (guide §1): run one registered query with a
   * job listener attached and print every Spark job's wall time + call
@@ -17,16 +16,7 @@ object ProfileQ {
     val name  = args(0)
     val reps  = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSession.local(defaultCpus = 32)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val done = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Double)]

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** A snapshot-versioned parquet table (the IceLite format):
   *
@@ -16,14 +17,29 @@ import scala.collection.mutable.ArrayBuffer
   * }}}
   *
   * Commit protocol (SURVEY.md §7.5): executors write parquet data files
-  * first, then the commit's manifest (per-file stats, computed and written
-  * executor-side); the driver then writes `v<N>.json` — holding only the
+  * first, then the commit stages its manifests (per-file stats, JSON
+  * lines); the driver then publishes `v<N>.json` — holding only the
   * snapshot log with manifest POINTERS, so its size is O(commits), not
-  * O(files) — to a temp name and atomically `FileSystem.rename`s it into
-  * place, finally updating the version hint. Readers resolve the hint (or
-  * highest vN) and plan from the snapshot's manifests — so a reader never
-  * observes a half-committed version. Single-writer per table, like the
-  * reference's drop-and-recreate loader.
+  * O(files) — by compare-and-swap, finally updating the version hint
+  * (best-effort: readers walk forward from a stale hint). Readers resolve
+  * the hint (or highest vN) and plan from the snapshot's manifests — so a
+  * reader never observes a half-committed version.
+  *
+  * Every committing method goes through ONE primitive, [[commit]]. Each
+  * attempt reads the current version and its metadata once, resolves the
+  * base snapshot (a branch head, or main), and calls the operation's
+  * build function, which validates and returns the change: a new snapshot
+  * (the primitive numbers it and advances the branch or main), new
+  * metadata, or "already applied" for a replayed commit token. The CAS
+  * then publishes `v<N+1>.json`. Data commits rebase on a lost race and
+  * retry, up to [[IceTable.MaxCommitAttempts]] attempts; metadata-only
+  * operations (rollback, refs, schema evolution, cherry-pick, expire)
+  * make one attempt and fail loudly, because their change was computed
+  * from a version that is no longer current. The manifests a commit
+  * staged are deleted only when it is known not to have published: its
+  * build function threw before the CAS, or every CAS attempt lost. An
+  * exception from the CAS itself deletes nothing — the version may have
+  * landed.
   *
   * STORE CONTRACT. The protocol needs exactly two guarantees from the
   * underlying store: (1) per-object atomic visibility — a written file is
@@ -183,25 +199,120 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
   def metadataLocation: String = new Path(metadataDir, s"v$currentVersion.json").toString
 
   /** CAS commit of `md` as version `next`; false = lost the race. The
-    * hint update runs only after winning and is best-effort (readers walk
-    * forward from it, so a stale hint is harmless). */
+    * hint update runs only after winning and is best-effort: readers walk
+    * forward from a stale hint, and `v<next>.json` is already published,
+    * so a failed hint write must not report (or make a caller undo) a
+    * commit that landed. */
   private def commitCasAt(next: Int, md: TableMetadata): Boolean =
     if (!writeFileIfAbsent(new Path(metadataDir, s"v$next.json"), md.toJson)) false
-    else { writeFileAtomic(hintFile, next.toString); true }
+    else {
+      try writeFileAtomic(hintFile, next.toString)
+      catch {
+        case NonFatal(e) =>
+          IceTable.log.warn(s"committed v$next.json of $location but could not update $hintFile", e)
+      }
+      true
+    }
 
-  /** Single-attempt commit for metadata-only operations (rollback, refs,
-    * expire…): these compute their update from the current version, so a
-    * lost race means the computation is stale — fail LOUDLY rather than
-    * clobber the winner (pre-CAS behavior) or silently re-apply. Appends
-    * rebase-and-retry instead (see appendInternal). */
-  private def commit(md: TableMetadata): Int = {
-    val next = currentVersion + 1
-    if (!commitCasAt(next, md))
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent commit to ${location}: v$next.json already exists; " +
-          "re-read the table and retry the operation")
-    next
+  /** One commit attempt as a build function sees it: the metadata read at
+    * the attempt's version and the base snapshot (the branch head, or
+    * main's). A manifest the build writes goes through [[stage]], so an
+    * aborted commit reclaims it. */
+  private final class Attempt(
+      val md: TableMetadata, val base: Option[Snapshot], staged: ArrayBuffer[String]) {
+    def stage(prefix: String, entries: Seq[ManifestEntry]): String = {
+      val rel = stageManifest(prefix, entries)
+      staged += rel
+      rel
+    }
   }
+
+  /** The one commit primitive (see the class header). `build` returns
+    * the attempt's change or throws when a validation fails; `rebase`
+    * retries a lost race on the winner's metadata, otherwise the first
+    * lost race fails loudly. `ref` names the branch a snapshot commits to
+    * (None = main). `staged` are the manifests written for this commit
+    * before it started; they and every manifest the build staged are
+    * deleted if the build throws or every CAS loses. Returns the table's
+    * metadata after the commit. */
+  private def commit(what: String, rebase: Boolean, ref: Option[String], staged: Seq[String])(
+      build: Attempt => IceTable.Change): TableMetadata = {
+    val written = ArrayBuffer(staged: _*)
+    def abort(e: Throwable): Nothing = {
+      written.foreach(rel => fs.delete(new Path(location, rel), true))
+      throw e
+    }
+    val attempts = if (rebase) IceTable.MaxCommitAttempts else 1
+    var attempt  = 0
+    while (attempt < attempts) {
+      val (v, md, base, change) =
+        try {
+          val v  = currentVersion
+          val md = metadataAt(v)
+          val base = ref match {
+            case Some(r) =>
+              val info = md.refMap.getOrElse(r, throw new NoSuchElementException(s"no ref $r"))
+              require(info.ref_type == "branch", s"ref $r is a tag — tags are immutable")
+              md.snapshot(info.snapshot_id)
+            case None => md.currentSnapshot
+          }
+          (v, md, base, build(new Attempt(md, base, written)))
+        } catch { case NonFatal(e) => abort(e) }
+      val next = change match {
+        case IceTable.AlreadyApplied => return md
+        case IceTable.NewMetadata(m) => m
+        case IceTable.NewSnapshot(m, draft) =>
+          val id   = IceTable.nextSnapshotId(m)
+          val snap = draft.copy(snapshot_id = id, timestamp_ms = System.currentTimeMillis(),
+            parent_snapshot_id = base.map(_.snapshot_id))
+          val withSnap = m.copy(snapshots = m.snapshots :+ snap)
+          ref match {
+            case Some(r) => withSnap.copy(refs = Some(m.refMap + (r -> RefInfo(id, "branch"))))
+            case None    => withSnap.copy(current_snapshot_id = id)
+          }
+      }
+      if (commitCasAt(v + 1, next)) return next
+      attempt += 1
+    }
+    abort(new java.util.ConcurrentModificationException(
+      s"$what commit to $location lost the commit race $attempts time(s) — " +
+        "re-read the table and retry the operation"))
+  }
+
+  /** One-attempt [[commit]] of a metadata-only change built from the
+    * current metadata. */
+  private def commitMetadata(what: String)(build: TableMetadata => IceTable.Change): TableMetadata =
+    commit(what, rebase = false, None, Nil)(a => build(a.md))
+
+  /** Stage `entries` (in the given order) as a new manifest directory;
+    * returns its path relative to the table location. */
+  private def stageManifest(prefix: String, entries: Seq[ManifestEntry]): String = {
+    val rel = s"metadata/manifests/$prefix-${java.util.UUID.randomUUID().toString.take(8)}"
+    fs.mkdirs(new Path(location, rel))
+    writeFileAtomic(new Path(location, s"$rel/part-0.json"), entries.map(_.toJson).mkString("\n"))
+    rel
+  }
+
+  /** `sn`'s manifests with their summaries (empty when unrecorded). */
+  private def summarized(sn: Snapshot): Seq[(String, Map[String, ColRange])] =
+    sn.manifests.zipWithIndex.map { case (m, i) => m -> sn.summaryAt(i).getOrElse(Map.empty) }
+
+  /** Manifest-granular carry of `sn` without the `removed` files: a
+    * manifest holding none of them carries by POINTER with its summary
+    * (zero IO); one holding some is rewritten without them; one holding
+    * only removed files is dropped — so a rewrite's commit cost tracks
+    * its blast radius, never table size. */
+  private def carryWithout(sn: Snapshot, removed: Set[String], a: Attempt)
+      : Seq[(String, Map[String, ColRange])] =
+    summarized(sn).flatMap { case (m, summary) =>
+      val entries = readManifest(m)
+      if (!entries.exists(e => removed(e.file))) Some(m -> summary)
+      else {
+        val remaining = entries.filterNot(e => removed(e.file))
+        if (remaining.isEmpty) None
+        else Some(a.stage("m-rw", remaining) -> summarize(a.md.schema, remaining))
+      }
+    }
 
   // ------------------------------------------------------------------ writes
 
@@ -221,17 +332,19 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
   def replace(df: DataFrame): IceTable = appendInternal(df, replace = true)
 
   /** Write `df` as new data files and commit a snapshot.
-    * `replace=false` carries the current snapshot's manifests forward by
-    * pointer; `replace=true` starts from `carryManifests` only (empty =
-    * full replace) — which is how manifest-granular rewrites keep
-    * untouched data by reference instead of copying it. The commit payload
+    * `replace=false` carries the base snapshot's manifests forward by
+    * pointer; `replace=true` keeps only what `carry` keeps (None = full
+    * replace) — which is how manifest-granular rewrites keep untouched
+    * data by reference instead of copying it. The commit payload
     * is O(delta): one new manifest for the just-written files plus one
     * snapshot entry of manifest pointers — never the table's file list. */
   private def appendInternal(
       df: DataFrame,
       replace: Boolean,
       operation: String = "",
-      carry: Seq[(String, Map[String, ColRange])] = Nil, // (manifest, summary)
+      // replace only: keep this snapshot's manifests minus these files
+      // (manifest-granular, see carryWithout); None = full replace
+      carry: Option[(Snapshot, Set[String])] = None,
       ref: Option[String] = None,
       token: Option[String] = None,
       // declared when the caller WROTE df under a sort order (sorted/
@@ -242,7 +355,7 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     // the data + manifest write happens ONCE, off any commit race: the
     // files are immutable and addressed by a UUID-suffixed dir, so a
     // rebased commit attempt re-points at the same delta unchanged
-    val snapId0 = md0.snapshots.map(_.snapshot_id).foldLeft(0L)(math.max) + 1
+    val snapId0 = IceTable.nextSnapshotId(md0)
     val dataRel = s"data/snap-$snapId0-${java.util.UUID.randomUUID().toString.take(8)}"
     val dataDir = new Path(location, dataRel)
     val parts   = md0.partitionCols
@@ -269,91 +382,51 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
       val sorted = buf.sortBy(_._1).toIndexedSeq
       (sorted.map(_._1), sorted.toMap)
     }
-    // sort-order id resolved against the pre-write metadata; the CAS loop
-    // re-resolves on rebase and rewrites the (O(delta), driver-cached)
-    // manifest in the rare case a racing commit claimed the id first
-    var stampId = sortOrder.map(f => resolveSortOrder(md0, f)._1)
-    var newManifest =
-      writeManifest(md0.schema, dataDir, dataRel, files, snapId0, fileSizes, parts.toSet,
-        sortOrderId = stampId)
+    // sort-order id resolved against the pre-write metadata; each commit
+    // attempt re-resolves on its own metadata and restages the (O(delta),
+    // driver-cached) manifest in the rare case a racing commit claimed
+    // the id first
+    val stampId = sortOrder.map(f => resolveSortOrder(md0, f)._1)
+    val newManifest = stageManifest(s"m-$snapId0",
+      manifestEntries(md0.schema, dataDir, dataRel, files, fileSizes, parts.toSet, stampId))
     // the new manifest's summary folds its per-file stats (the delta was
     // just written, so this driver read is O(delta) and warms the cache)
     val newSummary = summarize(md0.schema, readManifest(newManifest))
 
-    // CAS commit with rebase-and-retry: two concurrent appends BOTH land —
-    // the loser re-reads the winner's metadata, recomputes its snapshot on
-    // top (new snapshot id, winner's manifests carried), and retries the
-    // rename-as-CAS at the next version (Iceberg's optimistic-concurrency
-    // protocol; the REST path does the same server-side at
-    // RestCatalog.scala:327).
-    var attempt = 0
-    while (attempt < 10) {
-      val v  = currentVersion
-      val md = metadataAt(v)
-      // base snapshot: the target ref's head (main = current pointer)
-      val baseSnap = ref match {
-        case Some(r) =>
-          val info = md.refMap.getOrElse(r, throw new NoSuchElementException(s"no ref $r"))
-          require(info.ref_type == "branch", s"ref $r is a tag — tags are immutable")
-          md.snapshot(info.snapshot_id)
-        case None => md.currentSnapshot
-      }
+    // rebase-and-retry: two concurrent appends BOTH land — the loser
+    // rebuilds its snapshot on the winner's metadata (new snapshot id,
+    // winner's manifests carried) and retries at the next version
+    // (Iceberg's optimistic-concurrency protocol; the REST path does the
+    // same server-side at RestCatalog.scala:327)
+    val op = if (operation.nonEmpty) operation else if (replace) "replace" else "append"
+    commit(op, rebase = true, ref, Seq(newManifest)) { a =>
       // idempotency re-check on the rebased state: the racing winner may
       // have been a retry of this very token
-      if (token.exists(md.knownTokens.contains)) return this
-      val snapId = md.snapshots.map(_.snapshot_id).foldLeft(0L)(math.max) + 1
-      // carried (manifest, summary) pairs: an append carries the parent's
-      // wholesale; a replace starts from the caller's (possibly empty) set
-      val base: Seq[(String, Map[String, ColRange])] =
-        if (replace) carry
-        else baseSnap.toSeq.flatMap(sn =>
-          sn.manifests.zipWithIndex.map { case (m, i) =>
-            m -> sn.summaryAt(i).getOrElse(Map.empty)
-          })
-      // register the sort order on the REBASED metadata; if a racing
-      // commit allocated our stamped id to a DIFFERENT order, rewrite the
-      // delta manifest (O(delta) JSON, immutable new dir) with the true id
-      val (mdOrdered, orderId) = sortOrder match {
-        case Some(f) =>
-          val (oid, m) = resolveSortOrder(md, f)
-          (m, Some(oid))
-        case None => (md, None)
+      if (token.exists(a.md.knownTokens.contains)) IceTable.AlreadyApplied
+      else {
+        val base =
+          if (replace) carry.toSeq.flatMap { case (sn, removed) => carryWithout(sn, removed, a) }
+          else a.base.toSeq.flatMap(summarized)
+        val (md, manifest) = sortOrder match {
+          case Some(f) =>
+            val (oid, ordered) = resolveSortOrder(a.md, f)
+            (ordered,
+              if (stampId.contains(oid)) newManifest
+              else a.stage(s"m-${IceTable.nextSnapshotId(a.md)}",
+                readManifest(newManifest).map(_.copy(sortOrderId = Some(oid)))))
+          case None => (a.md, newManifest)
+        }
+        IceTable.NewSnapshot(md, IceTable.draft(op, base :+ (manifest -> newSummary),
+          carriedDeletes(a.base, base.nonEmpty), token))
       }
-      if (orderId != stampId && orderId.isDefined) {
-        val fixed = readManifest(newManifest).map(_.copy(sortOrderId = orderId))
-        val rel   = s"metadata/manifests/m-$snapId-${java.util.UUID.randomUUID().toString.take(8)}"
-        fs.mkdirs(new Path(location, rel))
-        writeFileAtomic(new Path(location, s"$rel/part-0.json"),
-          fixed.map(_.toJson).mkString("\n"))
-        newManifest = rel
-        stampId = orderId
-      }
-      val snap = Snapshot(
-        snapshot_id = snapId,
-        timestamp_ms = System.currentTimeMillis(),
-        operation = if (operation.nonEmpty) operation else if (replace) "replace" else "append",
-        manifests = (base.map(_._1) :+ newManifest).toList,
-        manifest_summaries = Some((base.map(_._2) :+ newSummary).toList),
-        parent_snapshot_id = baseSnap.map(_.snapshot_id),
-        commit_token = token,
-        delete_manifests = carriedDeletes(baseSnap, base.nonEmpty)
-      )
-      val withSnap = mdOrdered.copy(snapshots = mdOrdered.snapshots :+ snap)
-      val newMd = ref match {
-        case Some(r) => withSnap.copy(refs = Some(md.refMap + (r -> RefInfo(snapId, "branch"))))
-        case None    => withSnap.copy(current_snapshot_id = snapId)
-      }
-      if (commitCasAt(v + 1, newMd)) return this
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"append to $location lost the commit race 10 times — giving up")
+    this
   }
 
   /** Commit already-staged data files (the DataSource V2 write path:
     * executors wrote the parquet + collected stats themselves, so the
     * commit is pure metadata — one manifest write + the same CAS
-    * rebase-and-retry loop appends use). `entries` carry paths RELATIVE
+    * rebase-and-retry commit appends use). `entries` carry paths RELATIVE
     * to the table location plus per-file stats/rows from the writers. */
   private[graft] def commitStagedEntries(
       entries: Seq[ManifestEntry],
@@ -366,66 +439,22 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     val md0 = metadata
     // idempotency (streaming epochs): a replayed commit is a no-op
     if (token.exists(md0.knownTokens.contains)) return this
-    val rel = s"metadata/manifests/m-w-${java.util.UUID.randomUUID().toString.take(8)}"
-    val dir = new Path(location, rel)
-    fs.mkdirs(dir)
-    writeFileAtomic(new Path(dir, "part-0.json"), entries.map(_.toJson).mkString("\n"))
     val newSummary = summarize(md0.schema, entries)
-    var attempt = 0
-    while (attempt < 10) {
-      val v  = currentVersion
-      val md = metadataAt(v)
-      if (token.exists(md.knownTokens.contains)) return this // raced replay
-      // WAP: base on the branch head and advance the branch pointer —
-      // main is untouched until fast_forward publishes
-      val baseSnap = ref match {
-        case Some(r) =>
-          val info = md.refMap.getOrElse(r, throw new NoSuchElementException(
-            s"no branch $r (graft.wap.branch must name an existing branch)"))
-          require(info.ref_type == "branch", s"ref $r is a tag — tags are immutable")
-          md.snapshot(info.snapshot_id)
-        case None => md.currentSnapshot
+    val rel        = stageManifest("m-w", entries)
+    val op         = if (replace) "replace" else "append"
+    commit(op, rebase = true, ref, Seq(rel)) { a =>
+      if (token.exists(a.md.knownTokens.contains)) IceTable.AlreadyApplied // raced replay
+      else {
+        // WAP: the base is the branch head and the branch pointer advances
+        // — main is untouched until fast_forward publishes
+        val base = if (replace) Nil else a.base.toSeq.flatMap(summarized)
+        IceTable.NewSnapshot(a.md, IceTable.draft(op, base :+ (rel -> newSummary),
+          carriedDeletes(a.base, base.nonEmpty), token))
       }
-      val snapId = md.snapshots.map(_.snapshot_id).foldLeft(0L)(math.max) + 1
-      val base: Seq[(String, Map[String, ColRange])] =
-        if (replace) Nil
-        else baseSnap.toSeq.flatMap(sn =>
-          sn.manifests.zipWithIndex.map { case (m, i) =>
-            m -> sn.summaryAt(i).getOrElse(Map.empty)
-          })
-      val snap = Snapshot(
-        snapshot_id = snapId,
-        timestamp_ms = System.currentTimeMillis(),
-        operation = if (replace) "replace" else "append",
-        manifests = (base.map(_._1) :+ rel).toList,
-        manifest_summaries = Some((base.map(_._2) :+ newSummary).toList),
-        parent_snapshot_id = baseSnap.map(_.snapshot_id),
-        commit_token = token,
-        delete_manifests = carriedDeletes(baseSnap, base.nonEmpty))
-      val withSnap = md.copy(snapshots = md.snapshots :+ snap)
-      val newMd = ref match {
-        case Some(r) => withSnap.copy(refs = Some(md.refMap + (r -> RefInfo(snapId, "branch"))))
-        case None    => withSnap.copy(current_snapshot_id = snapId)
-      }
-      if (commitCasAt(v + 1, newMd)) return this
-      attempt += 1
     }
-    throw new java.util.ConcurrentModificationException(
-      s"staged commit to $location lost the commit race 10 times — giving up")
+    this
   }
 
-  /** Commit for group-based (copy-on-write) ROW-LEVEL SQL operations
-    * (`DELETE FROM` / `UPDATE` / `MERGE INTO` through the V2 connector):
-    * the row-level scan read exactly `removed` (the affected file set —
-    * files that MAY contain matching rows, after manifest min/max
-    * pruning), executors staged the surviving+new rows as `entries`, and
-    * this commit atomically swaps the two. Manifest-granular carry, as in
-    * [[deleteRange]]: a manifest touching no removed file carries by
-    * POINTER (zero IO); a partially-affected one is rewritten minus the
-    * removed entries — so commit cost tracks the operation's blast
-    * radius, never table size. Rebase-and-retry like every other commit:
-    * a racing APPEND's new manifests carry straight through (they cannot
-    * reference `removed`, which existed before the scan). */
   /** METADATA-ONLY DELETE planning: classify every current data file
     * against a pushed filter conjunction as all-match (droppable), no-match
     * (carried untouched) or mixed. Returns the droppable set, or None if
@@ -614,6 +643,18 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     Some(removable.result())
   }
 
+  /** Commit for group-based (copy-on-write) ROW-LEVEL SQL operations
+    * (`DELETE FROM` / `UPDATE` / `MERGE INTO` through the V2 connector):
+    * the row-level scan read exactly `removed` (the affected file set —
+    * files that MAY contain matching rows, after manifest min/max
+    * pruning), executors staged the surviving+new rows as `entries`, and
+    * this commit atomically swaps the two. Manifest-granular carry
+    * ([[carryWithout]]): a manifest touching no removed file carries by
+    * POINTER (zero IO); a partially-affected one is rewritten minus the
+    * removed entries — so commit cost tracks the operation's blast
+    * radius, never table size. Rebase-and-retry like every other commit:
+    * a racing APPEND's new manifests carry straight through (they cannot
+    * reference `removed`, which existed before the scan). */
   private[graft] def commitReplaceScanned(
       removed: Set[String],
       entries: Seq[ManifestEntry],
@@ -621,46 +662,13 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     val md0 = metadata
     val newManifest =
       if (entries.isEmpty) None
-      else {
-        val rel = s"metadata/manifests/m-rl-${java.util.UUID.randomUUID().toString.take(8)}"
-        val dir = new Path(location, rel)
-        fs.mkdirs(dir)
-        writeFileAtomic(new Path(dir, "part-0.json"), entries.map(_.toJson).mkString("\n"))
-        Some(rel -> summarize(md0.schema, entries))
-      }
-    var attempt = 0
-    while (attempt < 10) {
-      val v        = currentVersion
-      val md       = metadataAt(v)
-      val baseSnap = md.currentSnapshot
-      val carried = baseSnap.toSeq.flatMap(sn => sn.manifests.zipWithIndex.flatMap {
-        case (m, i) =>
-          val summary = sn.summaryAt(i).getOrElse(Map.empty[String, ColRange])
-          val es      = readManifest(m)
-          if (!es.exists(e => removed(e.file))) Some(m -> summary)
-          else {
-            val remaining = es.filterNot(e => removed(e.file))
-            if (remaining.isEmpty) None
-            else Some(writeFilteredManifest(remaining) -> summarize(md.schema, remaining))
-          }
-      })
-      val all    = carried ++ newManifest.toSeq
-      val snapId = md.snapshots.map(_.snapshot_id).foldLeft(0L)(math.max) + 1
-      val snap = Snapshot(
-        snapshot_id = snapId,
-        timestamp_ms = System.currentTimeMillis(),
-        operation = operation,
-        manifests = all.map(_._1).toList,
-        manifest_summaries = Some(all.map(_._2).toList),
-        parent_snapshot_id = baseSnap.map(_.snapshot_id),
-        commit_token = None,
-        delete_manifests = carriedDeletes(baseSnap, carried.nonEmpty))
-      val newMd = md.copy(snapshots = md.snapshots :+ snap, current_snapshot_id = snapId)
-      if (commitCasAt(v + 1, newMd)) return this
-      attempt += 1
+      else Some(stageManifest("m-rl", entries) -> summarize(md0.schema, entries))
+    commit(operation, rebase = true, None, newManifest.map(_._1).toSeq) { a =>
+      val carried = a.base.toSeq.flatMap(carryWithout(_, removed, a))
+      IceTable.NewSnapshot(a.md, IceTable.draft(operation, carried ++ newManifest,
+        carriedDeletes(a.base, carried.nonEmpty), None))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"row-level commit to $location lost the commit race 10 times — giving up")
+    this
   }
 
   /** `data/snap-N-x` prefix of a snapshot-relative file path. */
@@ -683,9 +691,9 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     full.substring(i)
   }
 
-  /** Write the commit's manifest: per-file min/max of every rangeable
-    * column (the stats Iceberg keeps per data file) plus row counts, as
-    * JSON-lines entries.
+  /** The commit manifest's entries for just-written `files`, sorted by
+    * path: per-file min/max of every rangeable column (the stats Iceberg
+    * keeps per data file) plus row counts.
     *
     * The stats come from the just-written files' PARQUET FOOTERS (round
     * 18, guide §1.2/§6): the writer already computed exact min/max/row
@@ -703,26 +711,22 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * whole commit falls back to the previous behavior — one distributed
     * scan over the snapshot dir — so the manifest content is identical
     * either way (`graft.manifest.stats=scan` forces the old path;
-    * ManifestStatsSpec diffs the two on every shape). Returns the
-    * manifest dir path relative to the table location. */
-  private def writeManifest(
+    * ManifestStatsSpec diffs the two on every shape). */
+  private def manifestEntries(
       schema: org.apache.spark.sql.types.StructType,
       dataDir: Path,
       dataRel: String,
       files: Seq[String],
-      snapId: Long,
-      fileSizes: Map[String, Long] = Map.empty,
+      fileSizes: Map[String, Long],
       // string columns whose bounds stay FULL: partition columns (their
       // min=max IS the partition value — exactness feeds metadata deletes)
       // and a position-delete manifest's file_path (delete-applies-to-file
       // pruning is useless on truncated paths; Iceberg keeps full metrics
       // there too)
-      exactCols: Set[String] = Set.empty,
+      exactCols: Set[String],
       // registered sort-order id the files were written under (None =
       // unsorted); rides each manifest entry as `sortOrderId`
-      sortOrderId: Option[Int] = None): String = {
-    val rel  = s"metadata/manifests/m-$snapId-${java.util.UUID.randomUUID().toString.take(8)}"
-    val dir  = new Path(location, rel)
+      sortOrderId: Option[Int]): Seq[ManifestEntry] = {
     val cols = schema.fields.filter(f => rangeable(f.dataType)).map(_.name)
     val entries: Seq[ManifestEntry] =
       if (files.isEmpty) Seq.empty
@@ -744,10 +748,7 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
       case Some(id) => entries.map(_.copy(sortOrderId = Some(id)))
       case None     => entries
     }
-    fs.mkdirs(dir)
-    writeFileAtomic(new Path(dir, "part-00000.json"),
-      stamped.sortBy(_.file).map(_.toJson).mkString("\n"))
-    rel
+    stamped.sortBy(_.file)
   }
 
   /** Per-file manifest entries straight from the parquet footers the write
@@ -1063,25 +1064,8 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
       dataEntries: Seq[ManifestEntry],
       operation: String): IceTable = {
     if (deletes.isEmpty && dataEntries.isEmpty) return this // no-op delta
-    val md0 = metadata
-    def stage(prefix: String, es: Seq[ManifestEntry]): Option[String] =
-      if (es.isEmpty) None
-      else {
-        val rel = s"metadata/manifests/$prefix-${java.util.UUID.randomUUID().toString.take(8)}"
-        val dir = new Path(location, rel)
-        fs.mkdirs(dir)
-        writeFileAtomic(new Path(dir, "part-0.json"), es.map(_.toJson).mkString("\n"))
-        Some(rel)
-      }
-    val delManifest  = stage("m-del", deletes)
-    val dataManifest = stage("m-w", dataEntries)
-    // an aborted commit (concurrent-rewrite validation, lost race) must
-    // not leave the just-staged manifest dirs as metadata orphans — the
-    // V2 abort path only sweeps the data/deletes staging dirs
-    def unstage(): Unit =
-      (delManifest.toSeq ++ dataManifest.toSeq).foreach(rel =>
-        fs.delete(new Path(location, rel), true))
-    val dataSummary  = summarize(md0.schema, dataEntries)
+    val md0         = metadata
+    val dataSummary = summarize(md0.schema, dataEntries)
     // Exact target set of the planned position deletes (distinct file_path
     // over the staged delete parquets — O(affected files) driver rows, one
     // small job). Validated against EVERY rebase below: a concurrent
@@ -1094,45 +1078,23 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
       else spark.read.schema(IceTable.PositionDeleteSchema)
         .parquet(deletes.map(e => new Path(location, e.file).toString): _*)
         .select("file_path").distinct().collect().map(_.getString(0)).toSet
-    var attempt = 0
-    while (attempt < 10) {
-      val v        = currentVersion
-      val md       = metadataAt(v)
-      val baseSnap = md.currentSnapshot
+    val delManifest  = if (deletes.isEmpty) None else Some(stageManifest("m-del", deletes))
+    val dataManifest = if (dataEntries.isEmpty) None else Some(stageManifest("m-w", dataEntries))
+    commit(operation, rebase = true, None, delManifest.toSeq ++ dataManifest) { a =>
       if (plannedTargets.nonEmpty) {
-        val present = baseSnap.toSeq.flatMap(filesOf).toSet
-        val missing = plannedTargets -- present
-        if (missing.nonEmpty) {
-          unstage()
+        val missing = plannedTargets -- a.base.toSeq.flatMap(filesOf)
+        if (missing.nonEmpty)
           throw new java.util.ConcurrentModificationException(
             s"row-delta commit to $location aborted: position deletes target " +
               s"${missing.size} data file(s) no longer in the current snapshot " +
               s"(concurrent rewrite?): ${missing.take(3).mkString(", ")}")
-        }
       }
-      val base: Seq[(String, Map[String, ColRange])] =
-        baseSnap.toSeq.flatMap(sn => sn.manifests.zipWithIndex.map { case (m, i) =>
-          m -> sn.summaryAt(i).getOrElse(Map.empty[String, ColRange])
-        })
-      val all = base ++ dataManifest.map(_ -> dataSummary).toSeq
-      val allDeletes = baseSnap.toSeq.flatMap(_.deleteManifests) ++ delManifest.toSeq
-      val snapId = md.snapshots.map(_.snapshot_id).foldLeft(0L)(math.max) + 1
-      val snap = Snapshot(
-        snapshot_id = snapId,
-        timestamp_ms = System.currentTimeMillis(),
-        operation = operation,
-        manifests = all.map(_._1).toList,
-        manifest_summaries = Some(all.map(_._2).toList),
-        parent_snapshot_id = baseSnap.map(_.snapshot_id),
-        commit_token = None,
-        delete_manifests = if (allDeletes.isEmpty) None else Some(allDeletes.toList))
-      val newMd = md.copy(snapshots = md.snapshots :+ snap, current_snapshot_id = snapId)
-      if (commitCasAt(v + 1, newMd)) return this
-      attempt += 1
+      val allDeletes = a.base.toSeq.flatMap(_.deleteManifests) ++ delManifest
+      IceTable.NewSnapshot(a.md, IceTable.draft(operation,
+        a.base.toSeq.flatMap(summarized) ++ dataManifest.map(_ -> dataSummary),
+        if (allDeletes.isEmpty) None else Some(allDeletes.toList), None))
     }
-    unstage()
-    throw new java.util.ConcurrentModificationException(
-      s"row-delta commit to $location lost the commit race 10 times — giving up")
+    this
   }
 
   /** COUNT(*) of `snap` answered from manifest metadata alone — no data
@@ -1312,21 +1274,23 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * them with the merged schema, absent columns as null). */
   def evolveAppend(df: DataFrame): IceTable = {
     import org.apache.spark.sql.functions._
-    val md     = metadata
-    val old    = md.schema
-    val newFs  = df.schema.fields.filterNot(f => old.fieldNames.contains(f.name))
-    val merged = org.apache.spark.sql.types.StructType(old.fields ++ newFs)
+    val merged = commitMetadata("evolve schema") { md =>
+      val newFs = df.schema.fields.filterNot(f => md.schema.fieldNames.contains(f.name))
+      if (newFs.isEmpty) IceTable.AlreadyApplied
+      else {
+        val nextId = md.lastColumnId + 1 // never re-issues a dropped field's id
+        val addedFields = newFs.zipWithIndex.map { case (f, i) =>
+          FieldInfo(nextId + i, f.name, f.dataType.catalogString, required = !f.nullable)
+        }
+        IceTable.NewMetadata(md.copy(
+          schemaJson = org.apache.spark.sql.types.StructType(md.schema.fields ++ newFs).json,
+          fields = md.fields ++ addedFields))
+      }
+    }.schema
     val aligned = df.select(merged.fields.map { f =>
       if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
-    if (newFs.nonEmpty) {
-      val nextId = md.lastColumnId + 1 // never re-issues a dropped field's id
-      val addedFields = newFs.zipWithIndex.map { case (f, i) =>
-        FieldInfo(nextId + i, f.name, f.dataType.catalogString, required = !f.nullable)
-      }
-      commit(md.copy(schemaJson = merged.json, fields = md.fields ++ addedFields))
-    }
     appendInternal(aligned, replace = false)
   }
 
@@ -1339,17 +1303,18 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * new columns at read time (same contract as evolveAppend, without a
     * data write). CAS-committed like every other metadata operation. */
   def addColumns(newFields: Seq[org.apache.spark.sql.types.StructField]): IceTable = {
-    val md = metadata
-    newFields.foreach { f =>
-      require(!md.schema.fieldNames.contains(f.name), s"column ${f.name} already exists")
-      require(f.nullable, s"evolved column ${f.name} must be nullable (old files lack it)")
+    commitMetadata("add columns") { md =>
+      newFields.foreach { f =>
+        require(!md.schema.fieldNames.contains(f.name), s"column ${f.name} already exists")
+        require(f.nullable, s"evolved column ${f.name} must be nullable (old files lack it)")
+      }
+      val newSchema = org.apache.spark.sql.types.StructType(md.schema.fields ++ newFields)
+      val maxId     = md.lastColumnId // never re-issues a dropped field's id
+      val added = newFields.zipWithIndex.map { case (f, i) =>
+        FieldInfo(maxId + i + 1, f.name, f.dataType.catalogString, required = false)
+      }
+      IceTable.NewMetadata(md.copy(schemaJson = newSchema.json, fields = md.fields ++ added.toList))
     }
-    val newSchema = org.apache.spark.sql.types.StructType(md.schema.fields ++ newFields)
-    val maxId     = md.lastColumnId // never re-issues a dropped field's id
-    val added = newFields.zipWithIndex.map { case (f, i) =>
-      FieldInfo(maxId + i + 1, f.name, f.dataType.catalogString, required = false)
-    }
-    commit(md.copy(schemaJson = newSchema.json, fields = md.fields ++ added.toList))
     this
   }
 
@@ -1361,25 +1326,26 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * file. Partition columns are refused: the hive layout encodes their
     * NAMES in directory paths. */
   def renameColumns(renames: Seq[(String, String)]): IceTable = {
-    val md = metadata
-    renames.foreach { case (o, n) =>
-      require(md.schema.fieldNames.contains(o), s"no column $o to rename")
-      require(!md.schema.fieldNames.contains(n), s"column $n already exists")
-      require(!md.partitionCols.contains(o),
-        s"cannot rename hive partition column $o (directory paths encode the name)")
+    commitMetadata("rename columns") { md =>
+      renames.foreach { case (o, n) =>
+        require(md.schema.fieldNames.contains(o), s"no column $o to rename")
+        require(!md.schema.fieldNames.contains(n), s"column $n already exists")
+        require(!md.partitionCols.contains(o),
+          s"cannot rename hive partition column $o (directory paths encode the name)")
+      }
+      requireFieldIdStamps(md, "rename column")
+      val rm = renames.toMap
+      val newSchema = org.apache.spark.sql.types.StructType(
+        md.schema.fields.map(f => rm.get(f.name).map(n => f.copy(name = n)).getOrElse(f)))
+      val newInfos = md.fields.map(fi =>
+        rm.get(fi.name).map(n => fi.copy(name = n)).getOrElse(fi))
+      IceTable.NewMetadata(md.copy(schemaJson = newSchema.json, fields = newInfos,
+        read_by_id = Some(true),
+        // old names retire AT THIS SNAPSHOT: a later column reusing one must
+        // not consult its name-keyed stats in files from at-or-before here
+        retired_columns = Some(md.retiredWatermarks ++
+          renames.map(_._1 -> md.current_snapshot_id))))
     }
-    requireFieldIdStamps(md, "rename column")
-    val rm = renames.toMap
-    val newSchema = org.apache.spark.sql.types.StructType(
-      md.schema.fields.map(f => rm.get(f.name).map(n => f.copy(name = n)).getOrElse(f)))
-    val newInfos = md.fields.map(fi =>
-      rm.get(fi.name).map(n => fi.copy(name = n)).getOrElse(fi))
-    commit(md.copy(schemaJson = newSchema.json, fields = newInfos,
-      read_by_id = Some(true),
-      // old names retire AT THIS SNAPSHOT: a later column reusing one must
-      // not consult its name-keyed stats in files from at-or-before here
-      retired_columns = Some(md.retiredWatermarks ++
-        renames.map(_._1 -> md.current_snapshot_id))))
     this
   }
 
@@ -1389,25 +1355,26 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * resurrect — the guarantee read-by-id exists for). Data files keep
     * the physical column untouched; zero data IO. */
   def dropColumns(names: Seq[String]): IceTable = {
-    val md = metadata
-    names.foreach { c =>
-      require(md.schema.fieldNames.contains(c), s"no column $c to drop")
-      require(!md.partitionCols.contains(c), s"cannot drop hive partition column $c")
+    commitMetadata("drop columns") { md =>
+      names.foreach { c =>
+        require(md.schema.fieldNames.contains(c), s"no column $c to drop")
+        require(!md.partitionCols.contains(c), s"cannot drop hive partition column $c")
+      }
+      require(md.schema.fields.length > names.length, "cannot drop every column")
+      requireFieldIdStamps(md, "drop column")
+      val drop = names.toSet
+      IceTable.NewMetadata(md.copy(
+        schemaJson = org.apache.spark.sql.types.StructType(
+          md.schema.fields.filterNot(f => drop(f.name))).json,
+        fields = md.fields.filterNot(fi => drop(fi.name)),
+        read_by_id = Some(true),
+        // pin the retired ids out of circulation forever, and retire the
+        // names at this snapshot so a re-added column never consults the
+        // old files' stats (later files' stats describe the successor)
+        last_column_id = Some(md.lastColumnId),
+        retired_columns = Some(md.retiredWatermarks ++
+          names.map(_ -> md.current_snapshot_id))))
     }
-    require(md.schema.fields.length > names.length, "cannot drop every column")
-    requireFieldIdStamps(md, "drop column")
-    val drop = names.toSet
-    commit(md.copy(
-      schemaJson = org.apache.spark.sql.types.StructType(
-        md.schema.fields.filterNot(f => drop(f.name))).json,
-      fields = md.fields.filterNot(fi => drop(fi.name)),
-      read_by_id = Some(true),
-      // pin the retired ids out of circulation forever, and retire the
-      // names at this snapshot so a re-added column never consults the
-      // old files' stats (later files' stats describe the successor)
-      last_column_id = Some(md.lastColumnId),
-      retired_columns = Some(md.retiredWatermarks ++
-        names.map(_ -> md.current_snapshot_id))))
     this
   }
 
@@ -1422,32 +1389,33 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
   def promoteColumnTypes(
       promotions: Seq[(String, org.apache.spark.sql.types.DataType)]): IceTable = {
     import org.apache.spark.sql.types._
-    val md  = metadata
-    val pm  = promotions.toMap
-    promotions.foreach { case (c, _) =>
-      require(md.schema.fieldNames.contains(c), s"no column $c to promote") }
-    val newFields = md.schema.fields.map { f =>
-      pm.get(f.name) match {
-        case Some(nt) =>
-          require((f.dataType, nt) match {
-            case (IntegerType, LongType) | (FloatType, DoubleType) => true
-            case _                                                 => false
-          }, s"unsupported type promotion ${f.dataType.catalogString} -> " +
-            s"${nt.catalogString} for ${f.name} (int->bigint, float->double only)")
-          f.copy(dataType = nt)
-        case None => f
+    val pm = promotions.toMap
+    commitMetadata("promote column types") { md =>
+      promotions.foreach { case (c, _) =>
+        require(md.schema.fieldNames.contains(c), s"no column $c to promote") }
+      val newFields = md.schema.fields.map { f =>
+        pm.get(f.name) match {
+          case Some(nt) =>
+            require((f.dataType, nt) match {
+              case (IntegerType, LongType) | (FloatType, DoubleType) => true
+              case _                                                 => false
+            }, s"unsupported type promotion ${f.dataType.catalogString} -> " +
+              s"${nt.catalogString} for ${f.name} (int->bigint, float->double only)")
+            f.copy(dataType = nt)
+          case None => f
+        }
       }
-    }
-    // field ids are PRESERVED — only the declared type string changes
-    val newInfos = md.fields.map { fi =>
-      pm.get(fi.name) match {
-        case Some(nt) => fi.copy(`type` = nt.catalogString)
-        case None     => fi
+      // field ids are PRESERVED — only the declared type string changes
+      val newInfos = md.fields.map { fi =>
+        pm.get(fi.name) match {
+          case Some(nt) => fi.copy(`type` = nt.catalogString)
+          case None     => fi
+        }
       }
+      IceTable.NewMetadata(md.copy(
+        schemaJson = org.apache.spark.sql.types.StructType(newFields).json,
+        fields = newInfos))
     }
-    commit(md.copy(
-      schemaJson = org.apache.spark.sql.types.StructType(newFields).json,
-      fields = newInfos))
     this
   }
 
@@ -1461,11 +1429,12 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * both. This is the "table grew, add partitioning now" path — zero
     * data rewritten, exactly the evolution story the Iceberg spec sells. */
   def evolvePartitioning(newCols: Seq[String]): IceTable = {
-    val md = metadata
-    newCols.foreach(c =>
-      require(md.schema.fieldNames.contains(c), s"partition column $c not in schema"))
-    commit(md.copy(
-      partition_columns = if (newCols.isEmpty) None else Some(newCols.toList)))
+    commitMetadata("evolve partitioning") { md =>
+      newCols.foreach(c =>
+        require(md.schema.fieldNames.contains(c), s"partition column $c not in schema"))
+      IceTable.NewMetadata(md.copy(
+        partition_columns = if (newCols.isEmpty) None else Some(newCols.toList)))
+    }
     this
   }
 
@@ -1903,33 +1872,12 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     val md       = metadata
     val snap     = md.currentSnapshot
     val affected = planFiles(colName, Some(lower), Some(upper))
-    val hitSet   = affected.toSet
-    val carried = snap.toSeq.flatMap(sn => sn.manifests.zipWithIndex.flatMap { case (m, i) =>
-      val summary = sn.summaryAt(i).getOrElse(Map.empty)
-      val entries = readManifest(m)
-      if (!entries.exists(e => hitSet(e.file)))
-        Some(m -> summary) // untouched: carry pointer + summary as-is
-      else {
-        val remaining = entries.filterNot(e => hitSet(e.file))
-        if (remaining.isEmpty) None
-        else Some(writeFilteredManifest(remaining) -> summarize(md.schema, remaining))
-      }
-    })
     val colType  = md.schema(colName).dataType
     val hit      = col(colName) >= lit(lower).cast(colType) && col(colName) <= lit(upper).cast(colType)
     val survivors = snap.map(readFilesOf(md, _, affected)).getOrElse(readFiles(md, affected))
       .filter(not(coalesce(hit, lit(false))))
-    appendInternal(survivors, replace = true, operation = "delete", carry = carried)
-  }
-
-  /** Driver-side rewrite of a partially-affected manifest (entry subset
-    * with stats carried verbatim). O(one manifest), never O(table). */
-  private def writeFilteredManifest(entries: Seq[ManifestEntry]): String = {
-    val rel = s"metadata/manifests/m-rw-${java.util.UUID.randomUUID().toString.take(8)}"
-    val dir = new Path(location, rel)
-    fs.mkdirs(dir)
-    writeFileAtomic(new Path(dir, "part-00000.json"), entries.map(_.toJson).mkString("\n"))
-    rel
+    appendInternal(survivors, replace = true, operation = "delete",
+      carry = snap.map(_ -> affected.toSet))
   }
 
   /** Upsert (merge-by-key, copy-on-write): rows of `updates` replace
@@ -1986,18 +1934,6 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
       min(col(keyCol)).cast("string").as("lo"), max(col(keyCol)).cast("string").as("hi")).head()
     if (bounds.isNullAt(0)) return this // empty source: nothing matches, nothing inserts
     val affected = planFiles(keyCol, Some(bounds.getString(0)), Some(bounds.getString(1)))
-    val hitSet   = affected.toSet
-    val carried = snap.toSeq.flatMap(sn => sn.manifests.zipWithIndex.flatMap { case (m, i) =>
-      val summary = sn.summaryAt(i).getOrElse(Map.empty)
-      val entries = readManifest(m)
-      if (!entries.exists(e => hitSet(e.file)))
-        Some(m -> summary)
-      else {
-        val remaining = entries.filterNot(e => hitSet(e.file))
-        if (remaining.isEmpty) None
-        else Some(writeFilteredManifest(remaining) -> summarize(md.schema, remaining))
-      }
-    })
     val t      = snap.map(readFilesOf(md, _, affected)).getOrElse(readFiles(md, affected)).alias("t")
     val srcA   = aligned.alias("s")
     val tKey   = col(s"t.$keyCol")
@@ -2016,7 +1952,7 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
         .otherwise(col(s"t.${f.name}"))
         .cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
-    appendInternal(out, replace = true, operation = "merge", carry = carried)
+    appendInternal(out, replace = true, operation = "merge", carry = snap.map(_ -> affected.toSet))
   }
 
   /** Roll the current pointer back to an earlier snapshot (Iceberg
@@ -2025,9 +1961,10 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * snapshot remains time-travelable and a later rollback can restore it.
     * No data IO at any table size: the operation rewrites one pointer. */
   def rollback(snapshotId: Long): IceTable = {
-    val md = metadata
-    require(md.snapshot(snapshotId).isDefined, s"no snapshot $snapshotId to roll back to")
-    commit(md.copy(current_snapshot_id = snapshotId))
+    commitMetadata("rollback") { md =>
+      require(md.snapshot(snapshotId).isDefined, s"no snapshot $snapshotId to roll back to")
+      IceTable.NewMetadata(md.copy(current_snapshot_id = snapshotId))
+    }
     this
   }
 
@@ -2047,12 +1984,13 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     createRef(name, at, "tag")
 
   private def createRef(name: String, at: Option[Long], refType: String): IceTable = {
-    val md = metadata
-    require(name.nonEmpty && name != "main", s"invalid ref name: $name")
-    require(!md.refMap.contains(name), s"ref $name already exists")
-    val snapId = at.getOrElse(md.current_snapshot_id)
-    require(snapId == 0L || md.snapshot(snapId).isDefined, s"no snapshot $snapId for ref $name")
-    commit(md.copy(refs = Some(md.refMap + (name -> RefInfo(snapId, refType)))))
+    commitMetadata(s"create $refType") { md =>
+      require(name.nonEmpty && name != "main", s"invalid ref name: $name")
+      require(!md.refMap.contains(name), s"ref $name already exists")
+      val snapId = at.getOrElse(md.current_snapshot_id)
+      require(snapId == 0L || md.snapshot(snapId).isDefined, s"no snapshot $snapId for ref $name")
+      IceTable.NewMetadata(md.copy(refs = Some(md.refMap + (name -> RefInfo(snapId, refType)))))
+    }
     this
   }
 
@@ -2092,12 +2030,13 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * diverged merge must instead replay commits (append the branch delta),
     * exactly as in Nessie/Git. */
   def fastForward(branch: String): IceTable = {
-    val md   = metadata
-    val info = md.refMap.getOrElse(branch, throw new NoSuchElementException(s"no ref $branch"))
-    require(info.ref_type == "branch", s"cannot fast-forward to tag $branch")
-    require(isAncestor(md.current_snapshot_id, info.snapshot_id),
-      s"main is not an ancestor of $branch — not a fast-forward")
-    commit(md.copy(current_snapshot_id = info.snapshot_id))
+    commitMetadata("fast-forward") { md =>
+      val info = md.refMap.getOrElse(branch, throw new NoSuchElementException(s"no ref $branch"))
+      require(info.ref_type == "branch", s"cannot fast-forward to tag $branch")
+      require(isAncestor(md.current_snapshot_id, info.snapshot_id),
+        s"main is not an ancestor of $branch — not a fast-forward")
+      IceTable.NewMetadata(md.copy(current_snapshot_id = info.snapshot_id))
+    }
     this
   }
 
@@ -2112,48 +2051,38 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * The source snapshot itself stays where it is (its branch is
     * untouched), exactly like a Git cherry-pick. */
   def cherryPick(snapshotId: Long): IceTable = {
-    val md  = metadata
-    val src = md.snapshot(snapshotId).getOrElse(
-      throw new NoSuchElementException(s"no snapshot $snapshotId to cherry-pick"))
-    require(src.operation == "append",
-      s"cherry-pick supports append snapshots only, got '${src.operation}'")
-    require(!isAncestor(snapshotId, md.current_snapshot_id),
-      s"snapshot $snapshotId is already in main's history")
-    // durable double-apply guard: every pick RECORDS its source id, and a
-    // re-pick is refused if that id appears anywhere in main's ancestry.
-    // The manifest-path check below is insufficient alone — a compact()
-    // after the first pick rewrites main's manifests, the paths no longer
-    // match, and a path-only guard would silently duplicate every row.
-    require(!pickedSources(md).contains(snapshotId),
-      s"snapshot $snapshotId was already cherry-picked onto main")
-    val parentId = src.parent_snapshot_id.getOrElse(0L)
-    val parentManifests: Set[String] =
-      if (parentId == 0L) Set.empty
-      else md.snapshot(parentId).getOrElse(throw new IllegalStateException(
-        s"cherry-pick needs the source's parent snapshot $parentId in the log " +
-          "(expired?)")).manifests.toSet
-    val delta = src.manifests.zipWithIndex.filterNot { case (m, _) => parentManifests(m) }
-    require(delta.nonEmpty, s"snapshot $snapshotId added no manifests — nothing to pick")
-    val head = md.currentSnapshot
-    val headManifests = head.toSeq.flatMap(_.manifests)
-    require(delta.forall { case (m, _) => !headManifests.contains(m) },
-      s"snapshot $snapshotId's delta is already applied to main")
-    val baseSums = head.toSeq.flatMap(sn =>
-      sn.manifests.indices.map(i => sn.summaryAt(i).getOrElse(Map.empty[String, ColRange])))
-    val newId = md.snapshots.map(_.snapshot_id).foldLeft(0L)(math.max) + 1
-    val snap = Snapshot(
-      snapshot_id = newId,
-      timestamp_ms = System.currentTimeMillis(),
-      operation = "append", // the replayed change IS an append (incremental reads see it)
-      manifests = headManifests.toList ++ delta.map(_._1),
-      manifest_summaries = Some((baseSums ++ delta.map { case (_, i) =>
-        src.summaryAt(i).getOrElse(Map.empty[String, ColRange]) }).toList),
-      parent_snapshot_id = head.map(_.snapshot_id),
-      commit_token = None,
-      // an append snapshot introduces no deletes; main's live delete debt carries
-      delete_manifests = head.flatMap(_.delete_manifests),
-      source_snapshot_id = Some(snapshotId))
-    commit(md.copy(snapshots = md.snapshots :+ snap, current_snapshot_id = newId))
+    commitMetadata("cherry-pick") { md =>
+      val src = md.snapshot(snapshotId).getOrElse(
+        throw new NoSuchElementException(s"no snapshot $snapshotId to cherry-pick"))
+      require(src.operation == "append",
+        s"cherry-pick supports append snapshots only, got '${src.operation}'")
+      require(!isAncestor(snapshotId, md.current_snapshot_id),
+        s"snapshot $snapshotId is already in main's history")
+      // durable double-apply guard: every pick RECORDS its source id, and a
+      // re-pick is refused if that id appears anywhere in main's ancestry.
+      // The manifest-path check below is insufficient alone — a compact()
+      // after the first pick rewrites main's manifests, the paths no longer
+      // match, and a path-only guard would silently duplicate every row.
+      require(!pickedSources(md).contains(snapshotId),
+        s"snapshot $snapshotId was already cherry-picked onto main")
+      val parentId = src.parent_snapshot_id.getOrElse(0L)
+      val parentManifests: Set[String] =
+        if (parentId == 0L) Set.empty
+        else md.snapshot(parentId).getOrElse(throw new IllegalStateException(
+          s"cherry-pick needs the source's parent snapshot $parentId in the log " +
+            "(expired?)")).manifests.toSet
+      val delta = summarized(src).filterNot { case (m, _) => parentManifests(m) }
+      require(delta.nonEmpty, s"snapshot $snapshotId added no manifests — nothing to pick")
+      val head = md.currentSnapshot.toSeq.flatMap(summarized)
+      require(delta.forall { case (m, _) => !head.exists(_._1 == m) },
+        s"snapshot $snapshotId's delta is already applied to main")
+      IceTable.NewSnapshot(md, IceTable.draft(
+        "append", // the replayed change IS an append (incremental reads see it)
+        head ++ delta,
+        // an append snapshot introduces no deletes; main's live delete debt carries
+        md.currentSnapshot.flatMap(_.delete_manifests), None)
+        .copy(source_snapshot_id = Some(snapshotId)))
+    }
     this
   }
 
@@ -2199,9 +2128,10 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
   /** Delete a branch or tag ref (snapshots stay; expiration reclaims them
     * once unreferenced). */
   def dropRef(name: String): IceTable = {
-    val md = metadata
-    require(md.refMap.contains(name), s"no ref $name")
-    commit(md.copy(refs = Some(md.refMap - name)))
+    commitMetadata("drop ref") { md =>
+      require(md.refMap.contains(name), s"no ref $name")
+      IceTable.NewMetadata(md.copy(refs = Some(md.refMap - name)))
+    }
     this
   }
 
@@ -2345,43 +2275,49 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * for the kept window; storage for dropped history is reclaimed. */
   def expireSnapshots(keepLast: Int): IceTable = {
     require(keepLast >= 1, "must keep at least the current snapshot")
-    val md = metadata
-    // main (the current pointer) is itself a ref head — a rolled-back
-    // current snapshot outside the keep-last window must survive too
-    val refHeads = md.refMap.values.map(_.snapshot_id).toSet + md.current_snapshot_id
-    val keep = (md.snapshots.sortBy(_.snapshot_id).takeRight(keepLast) ++
-      md.snapshots.filter(s => refHeads.contains(s.snapshot_id)))
-      .distinctBy(_.snapshot_id).sortBy(_.snapshot_id)
-    if (keep.size == md.snapshots.size) return this
-    // splice expired snapshots out of the commit DAG: a kept snapshot whose
-    // parent is dropped re-parents to its nearest kept ancestor, so
-    // ancestry checks (fastForward, scanIncremental) keep working across
-    // the expired gap instead of dead-ending on a missing id.
-    val keptIds = keep.map(_.snapshot_id).toSet
-    val byId    = md.snapshots.map(s => s.snapshot_id -> s).toMap
-    def nearestKept(id: Long): Long = {
-      var cur = id
-      while (cur != 0L && !keptIds.contains(cur))
-        cur = byId.get(cur).flatMap(_.parent_snapshot_id).getOrElse(0L)
-      cur
-    }
-    val spliced = keep.map { sn =>
-      val p  = sn.parent_snapshot_id.getOrElse(0L)
-      val np = nearestKept(p)
-      if (np == p) sn
-      else sn.copy(parent_snapshot_id = if (np == 0L) None else Some(np))
-    }
-    // idempotency tokens outlive their snapshots: a replayed streaming
-    // batch must stay a no-op even after maintenance expired its commit
-    val dropped       = md.snapshots.filterNot(s => keptIds.contains(s.snapshot_id))
-    val retiredTokens = (md.retired_tokens.getOrElse(Nil) ++ dropped.flatMap(_.commit_token)).distinct
+    var dropped = Seq.empty[Snapshot]
+    val keep = commitMetadata("expire snapshots") { md =>
+      // main (the current pointer) is itself a ref head — a rolled-back
+      // current snapshot outside the keep-last window must survive too
+      val refHeads = md.refMap.values.map(_.snapshot_id).toSet + md.current_snapshot_id
+      val keep = (md.snapshots.sortBy(_.snapshot_id).takeRight(keepLast) ++
+        md.snapshots.filter(s => refHeads.contains(s.snapshot_id)))
+        .distinctBy(_.snapshot_id).sortBy(_.snapshot_id)
+      if (keep.size == md.snapshots.size) IceTable.AlreadyApplied
+      else {
+        // splice expired snapshots out of the commit DAG: a kept snapshot
+        // whose parent is dropped re-parents to its nearest kept ancestor,
+        // so ancestry checks (fastForward, scanIncremental) keep working
+        // across the expired gap instead of dead-ending on a missing id.
+        val keptIds = keep.map(_.snapshot_id).toSet
+        val byId    = md.snapshots.map(s => s.snapshot_id -> s).toMap
+        def nearestKept(id: Long): Long = {
+          var cur = id
+          while (cur != 0L && !keptIds.contains(cur))
+            cur = byId.get(cur).flatMap(_.parent_snapshot_id).getOrElse(0L)
+          cur
+        }
+        val spliced = keep.map { sn =>
+          val p  = sn.parent_snapshot_id.getOrElse(0L)
+          val np = nearestKept(p)
+          if (np == p) sn
+          else sn.copy(parent_snapshot_id = if (np == 0L) None else Some(np))
+        }
+        // idempotency tokens outlive their snapshots: a replayed streaming
+        // batch must stay a no-op even after maintenance expired its commit
+        dropped = md.snapshots.filterNot(s => keptIds.contains(s.snapshot_id))
+        val retiredTokens =
+          (md.retired_tokens.getOrElse(Nil) ++ dropped.flatMap(_.commit_token)).distinct
+        IceTable.NewMetadata(md.copy(snapshots = spliced,
+          retired_tokens = if (retiredTokens.isEmpty) None else Some(retiredTokens)))
+      }
+    }.snapshots
+    if (dropped.isEmpty) return this
     // delete files (MoR) are live exactly like data files: a kept snapshot's
     // position deletes must survive or its reads resurrect deleted rows
     val referenced = (keep.flatMap(filesOf) ++ keep.flatMap(deleteEntriesOf).map(_.file)).toSet
-    val orphaned = (md.snapshots.flatMap(filesOf) ++
-      md.snapshots.flatMap(deleteEntriesOf).map(_.file)).toSet -- referenced
-    commit(md.copy(snapshots = spliced,
-      retired_tokens = if (retiredTokens.isEmpty) None else Some(retiredTokens)))
+    val orphaned = (dropped.flatMap(filesOf) ++
+      dropped.flatMap(deleteEntriesOf).map(_.file)).toSet -- referenced
     // snapshot dirs with no referenced file left are removed recursively
     // (also sweeps non-data markers like _SUCCESS); partially-referenced
     // dirs only lose their orphaned parquet files
@@ -2395,7 +2331,7 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     // manifests only expired snapshots referenced are reclaimed too
     // (delete manifests alike)
     val liveManifests = (keep.flatMap(_.manifests) ++ keep.flatMap(_.deleteManifests)).toSet
-    ((md.snapshots.flatMap(_.manifests) ++ md.snapshots.flatMap(_.deleteManifests)).toSet --
+    ((dropped.flatMap(_.manifests) ++ dropped.flatMap(_.deleteManifests)).toSet --
       liveManifests).foreach { rel =>
       val dir = new Path(location, rel)
       if (fs.exists(dir)) fs.delete(dir, true)
@@ -2436,7 +2372,6 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
           org.apache.spark.sql.types.StringType, nullable = false))))
     val cleaned = delDF.join(liveDF, Seq("file_path"), "left_semi").distinct()
     val kept = cleaned.count() // maintenance-sized extra pass; exact file sizing below
-    val snapId0 = md0.snapshots.map(_.snapshot_id).foldLeft(0L)(math.max) + 1
     val newManifest: Option[String] =
       if (kept == 0L) None
       else {
@@ -2455,39 +2390,24 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
           }
           buf.sorted.toIndexedSeq
         }
-        val m = writeManifest(IceTable.PositionDeleteSchema, dir, rel, files, snapId0,
-          exactCols = Set("file_path"))
         // drop zero-row part files from the manifest (a skewed range split
         // can leave empty partitions; a statless delete file would defeat
         // reader-side pruning forever)
-        val nonEmpty = readManifest(m).filter(_.rows.exists(_ > 0L))
+        val nonEmpty = manifestEntries(IceTable.PositionDeleteSchema, dir, rel, files,
+          Map.empty, Set("file_path"), None).filter(_.rows.exists(_ > 0L))
         if (nonEmpty.isEmpty) None
-        else if (nonEmpty.size == readManifest(m).size) Some(m)
-        else Some(writeFilteredManifest(nonEmpty))
+        else Some(stageManifest(s"m-${IceTable.nextSnapshotId(md0)}", nonEmpty))
       }
-    var attempt = 0
-    while (attempt < 10) {
-      val v    = currentVersion
-      val md   = metadataAt(v)
-      val base = md.currentSnapshot.getOrElse(
+    commit("rewrite-deletes", rebase = true, None, newManifest.toSeq) { a =>
+      val base = a.base.getOrElse(
         throw new IllegalStateException("table lost its current snapshot mid-maintenance"))
       if (base.deleteManifests != planned)
         throw new java.util.ConcurrentModificationException(
           s"delete manifests of $location moved during rewritePositionDeletes — rerun")
-      val snapId = md.snapshots.map(_.snapshot_id).foldLeft(0L)(math.max) + 1
-      val snap = base.copy(
-        snapshot_id = snapId,
-        timestamp_ms = System.currentTimeMillis(),
-        operation = "rewrite-deletes",
-        parent_snapshot_id = Some(base.snapshot_id),
-        commit_token = None,
-        delete_manifests = newManifest.map(List(_)))
-      val newMd = md.copy(snapshots = md.snapshots :+ snap, current_snapshot_id = snapId)
-      if (commitCasAt(v + 1, newMd)) return this
-      attempt += 1
+      IceTable.NewSnapshot(a.md, base.copy(operation = "rewrite-deletes", commit_token = None,
+        delete_manifests = newManifest.map(List(_))))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"rewrite-deletes commit to $location lost the commit race 10 times — giving up")
+    this
   }
 
   /** Orphan-file cleanup (Iceberg's `remove_orphan_files`): delete parquet
@@ -2529,6 +2449,36 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
 }
 
 object IceTable {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[IceTable])
+
+  /** Attempts a rebasing commit makes before giving up on a contended table. */
+  private val MaxCommitAttempts = 10
+
+  /** What a commit's build function returns for one attempt. */
+  private sealed trait Change
+  /** Append `snap` to `md`; the commit sets its id, timestamp and parent. */
+  private final case class NewSnapshot(md: TableMetadata, snap: Snapshot) extends Change
+  /** Publish `md` as it is (metadata-only operations). */
+  private final case class NewMetadata(md: TableMetadata) extends Change
+  /** The table already holds this change (a replayed commit token, or
+    * nothing to do): commit nothing. */
+  private case object AlreadyApplied extends Change
+
+  /** A snapshot of `manifests` (with their summaries) for a commit to number. */
+  private def draft(
+      operation: String,
+      manifests: Seq[(String, Map[String, ColRange])],
+      deletes: Option[List[String]],
+      token: Option[String]): Snapshot =
+    Snapshot(snapshot_id = 0L, timestamp_ms = 0L, operation = operation,
+      manifests = manifests.map(_._1).toList,
+      manifest_summaries = Some(manifests.map(_._2).toList),
+      commit_token = token, delete_manifests = deletes)
+
+  /** The id the next snapshot committed on top of `md` gets. */
+  private def nextSnapshotId(md: TableMetadata): Long =
+    md.snapshots.map(_.snapshot_id).foldLeft(0L)(math.max) + 1
 
   /** Default orphan-file age cutoff (3 days, matching Iceberg's
     * remove_orphan_files default): younger unreferenced files are treated
@@ -2648,7 +2598,7 @@ object IceTable {
   /** Count of actual manifest parses (cache misses) — observability for
     * specs asserting summary-level skipping never opens a pruned manifest. */
   private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong(0L)
-  // which stats path each writeManifest took (round 18): footer = driver
+  // which stats path each manifestEntries call took (round 18): footer = driver
   // footer reads, scan = the distributed fallback. Diagnostic + spec gate.
   private[graft] val footerStatsCommits = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] val scanStatsCommits   = new java.util.concurrent.atomic.AtomicLong(0L)

@@ -4553,7 +4553,7 @@ object IceQueries {
     * skipping inputs made user-queryable (what `SELECT * FROM t.files`
     * shows in real Iceberg). The oracle recomputes each file's stats
     * string from the source rows it was written from, so this gates that
-    * commit-time stats collection (IceTable.writeManifest) actually
+    * commit-time stats collection (IceTable.manifestEntries) actually
     * aggregates the right values per file, not just that files exist.
     * Pure metadata read: O(manifest entries), zero data IO. */
   private def filesQ(s: SparkSession, d: String): DataFrame = {

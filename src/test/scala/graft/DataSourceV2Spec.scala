@@ -233,6 +233,28 @@ class DataSourceV2Spec extends SparkSpec {
     }
   }
 
+  test("a failed version-hint update does not fail an INSERT whose version landed") {
+    import spark.implicits._
+    val wh = scratch("v2hint")
+    spark.conf.set("spark.sql.catalog.hint_spec", "graft.sources.IceLiteCatalog")
+    spark.conf.set("spark.sql.catalog.hint_spec.warehouse", wh)
+    try {
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS hint_spec.ns")
+      spark.sql("CREATE TABLE hint_spec.ns.h (k BIGINT, v STRING)")
+      // a non-empty directory where the hint goes makes every hint write fail
+      val t    = new FsCatalog(spark, wh).loadTable("ns", "h")
+      val hint = new org.apache.hadoop.fs.Path(t.location, "metadata/version-hint.text")
+      val fs   = hint.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(fs.delete(hint, false) && fs.mkdirs(new org.apache.hadoop.fs.Path(hint, "blocker")))
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").createOrReplaceTempView("hint_src")
+      spark.sql("INSERT INTO hint_spec.ns.h SELECT * FROM hint_src")
+      assert(spark.sql("SELECT count(*) FROM hint_spec.ns.h").collect()(0).getLong(0) == 2L)
+    } finally {
+      spark.conf.unset("spark.sql.catalog.hint_spec")
+      spark.conf.unset("spark.sql.catalog.hint_spec.warehouse")
+    }
+  }
+
   test("SQL time travel through the catalog: VERSION/TIMESTAMP AS OF pin and error paths") {
     val wh = scratch("v2sqltt")
     spark.conf.set("spark.sql.catalog.tt_spec", "graft.sources.IceLiteCatalog")

@@ -517,6 +517,16 @@ class MaintenanceSpec extends SparkSpec {
     assert(!t.refs().contains("v2"))
   }
 
+  test("a commit to a missing branch reclaims the manifest it staged") {
+    val cat    = new FsCatalog(spark, scratch("brmissing"))
+    val nation = Tables.nation(spark, sfDir)
+    val t      = cat.createOrReplaceTable("ns", "nations_brm", nation)
+    intercept[NoSuchElementException](t.appendToBranch("missing", nation))
+    assert(unreferencedManifests(t).isEmpty,
+      s"the aborted commit left staged manifests behind: ${unreferencedManifests(t)}")
+    assert(t.scan().count() == 25)
+  }
+
   test("scanIncremental rejects windows crossing a rollback fork") {
     val cat    = new FsCatalog(spark, scratch("incfork"))
     val nation = Tables.nation(spark, sfDir)

@@ -321,6 +321,8 @@ class MorSpec extends SparkSpec {
       t.commitRowDeltas(Seq(entry), Nil, "delete")
     }
     assert(ex.getMessage.contains("no longer in the current snapshot"), ex.getMessage)
+    assert(unreferencedManifests(t).isEmpty,
+      s"the aborted delta left staged manifests behind: ${unreferencedManifests(t)}")
     // control: a delete planned against the POST-compact file commits fine
     val fresh = t.filesOf(t.metadata.currentSnapshot.get).head
     val stage2 = new org.apache.hadoop.fs.Path(t.location, "data/deletes-advrace2")

@@ -17,6 +17,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
     p.toString
   }
+
+  /** Manifest directories of `t` that no snapshot references — what an
+    * aborted commit must not leave behind. */
+  def unreferencedManifests(t: graft.icelite.IceTable): Set[String] = {
+    val dir = new org.apache.hadoop.fs.Path(t.location, "metadata/manifests")
+    val fs  = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listed =
+      if (!fs.exists(dir)) Set.empty[String]
+      else fs.listStatus(dir).filter(_.isDirectory)
+        .map(s => s"metadata/manifests/${s.getPath.getName}").toSet
+    listed -- t.snapshots().flatMap(s => s.manifests ++ s.deleteManifests)
+  }
 }
 
 object SparkSpec {

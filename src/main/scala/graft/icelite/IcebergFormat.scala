@@ -2030,9 +2030,9 @@ object IcebergFormat {
     * writeSingleFile calls costs N full job round-trips (~40-80 ms each
     * of scheduler/plan fixed cost at any data size — ic89's 24-commit
     * evolution lifecycle spent more time BETWEEN jobs than in them);
-    * this pays one. Group values must stringify safely as partition
-    * directory names (ints/short tokens — fixture keys, not user data).
-    * Commit granularity is untouched: callers still commit the returned
+    * this pays one. The result is keyed by group value (the Hive-escaped
+    * directory token unescaped); `nameOf` must map it to a valid file
+    * name. Commit granularity is untouched: callers still commit the returned
     * files one (or few) at a time, so snapshot history is identical. */
   def writeGroupedFiles(spark: SparkSession, stagingDir: String, loc: String,
       df: DataFrame, groupExpr: org.apache.spark.sql.Column,
@@ -2045,12 +2045,17 @@ object IcebergFormat {
       .withColumn("__grp", groupExpr.cast("string"))
       .repartition(spark.sparkContext.defaultParallelism,
         org.apache.spark.sql.functions.col("__grp"))
-      .write.partitionBy("__grp").mode("overwrite").parquet(stage)
+      // 0 overrides a session `spark.sql.files.maxRecordsPerFile`, which
+      // would split a group across files
+      .write.option("maxRecordsPerFile", 0L)
+      .partitionBy("__grp").mode("overwrite").parquet(stage)
     val dirs = fs.listStatus(new Path(stage)).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("__grp="))
     fs.mkdirs(new Path(s"$loc/data"))
     val out = dirs.map { st =>
-      val g     = st.getPath.getName.stripPrefix("__grp=")
+      // the directory token is Hive-escaped (`:` -> `%3A`); key by the value
+      val g     = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(st.getPath.getName.stripPrefix("__grp="))
       val parts = fs.listStatus(st.getPath).map(_.getPath)
         .filter(_.getName.endsWith(".parquet"))
       require(parts.length == 1,

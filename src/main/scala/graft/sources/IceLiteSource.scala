@@ -1,25 +1,20 @@
 package graft.sources
 
-import graft.icelite.{FsCatalog, IceTable, Snapshot}
+import graft.icelite.{FsCatalog, IceTable, IcebergFormat, Snapshot}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.parquet.schema.{MessageType, PrimitiveType}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Coalesce, Expression, GenericInternalRow, JoinedRow, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -29,7 +24,6 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import java.io.{ObjectInputStream, ObjectOutputStream}
 import java.util.{Map => JMap}
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** DataSource V2 packaging of the IceLite table format (SURVEY.md §4's
   * "idiomatic packaging" — `/root/reference` exposes its tables to DuckDB
@@ -46,9 +40,9 @@ import scala.jdk.CollectionConverters._
   *    `scanRange` callers got it. The scan node's `description()` reports
   *    `files=<survivors>/<total>` so pruning is visible in
   *    `.explain("formatted")` and assertable by PlanAuditSpec.
-  *  - `SupportsPushDownRequiredColumns`: the pruned schema is converted to
-  *    a parquet projection (`parquet.read.schema`), so unprojected columns
-  *    are never decoded — `ReadSchema` semantics at the file level.
+  *  - `SupportsPushDownRequiredColumns`: the pruned schema is what Spark's
+  *    parquet reader is asked for, so unprojected columns are never
+  *    decoded — `ReadSchema` semantics at the file level.
   *  - `SupportsReportPartitioning` + `HasPartitionKey`: hive-layout
   *    partitioned tables report `KeyGroupedPartitioning(identity(p), n)`,
   *    one input partition per partition value. Under
@@ -149,10 +143,6 @@ object IceLiteSource {
     * — the counter specs use to prove a delete file is never read for a
     * data file outside its manifest `file_path` range. Test-only observability. */
   private[graft] val deleteFilesOpened = new java.util.concurrent.atomic.LongAdder()
-  /** Parquet footers opened DURING PLANNING (driver-side, serial — the
-    * 100 TB anti-pattern). Stays 0 for files whose manifests carry
-    * `split_offsets`; only externally-written oversized files pay it. */
-  private[graft] val planningFootersOpened = new java.util.concurrent.atomic.LongAdder()
 }
 
 /** V2 Table over one resolved IceLite snapshot (None = empty, pre-commit).
@@ -528,9 +518,9 @@ final class IceLiteScan(
     val loc = ice.location.toString
     if (partCols.isEmpty) {
       // oversized files whose manifests recorded size + split offsets fan
-      // out into row-group-aligned ranged partitions (reader resolves row
-      // numbering from its own footer open — `_pos` stays file-global, so
-      // position deletes apply split-invariantly). Restricted to the
+      // out into row-group-aligned ranged partitions (`_pos` is Spark's
+      // file-global row index, so position deletes apply the same in
+      // every split). Restricted to the
       // unpartitioned path: HasPartitionKey requires distinct keys across
       // partitions, which splitting a keyed partition would violate.
       val target = SparkSession.active.conf.get("graft.split.size",
@@ -619,9 +609,8 @@ final class IceLiteScan(
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new IceLiteReaderFactory(
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration),
-      required, partCols.toArray, md.scanSchema, limit, deleteFiles)
+    IceLiteReaderFactory(required, partCols.toArray, md.scanSchema, limit, deleteFiles, Nil,
+      partitionDeletes = false)
 
   /** `spark.readStream.format("icelite")`: tail the snapshot log as a
     * Structured Streaming source — each micro-batch is exactly the files
@@ -630,9 +619,7 @@ final class IceLiteScan(
     * window bit-identically. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new IceLiteMicroBatchStream(ice, required,
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration),
-      maxSnaps)
+    new IceLiteMicroBatchStream(ice, required, maxSnaps)
 }
 
 final case class IceLiteOffset(snapshotId: Long)
@@ -656,7 +643,6 @@ final case class IceLiteOffset(snapshotId: Long)
 final class IceLiteMicroBatchStream(
     ice: IceTable,
     required: StructType,
-    conf: SerializableHadoopConf,
     maxSnaps: Option[Int] = None)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
@@ -734,9 +720,10 @@ final class IceLiteMicroBatchStream(
     }
   }
 
+  // the initial batch's partitions carry the pinned snapshot's deletes
   override def createReaderFactory(): PartitionReaderFactory =
-    new IceLiteReaderFactory(conf, required,
-      ice.metadata.partitionCols.toArray, tableSchema)
+    IceLiteReaderFactory(required, ice.metadata.partitionCols.toArray, tableSchema, None, Nil, Nil,
+      partitionDeletes = true)
 
   override def commit(end: Offset): Unit = () // snapshots are immutable
   override def stop(): Unit = ()
@@ -813,43 +800,19 @@ final case class IceLitePartition(
   override def partitionKey(): InternalRow = key
 }
 
-/** A row-group-aligned byte slice of one parquet file: the reader opens
-  * only row groups whose midpoint falls in [start, end) and numbers rows
-  * from `startRow`, so `_pos` (and therefore position-delete application)
-  * stays file-global across splits. Lets one oversized file fan out to
-  * many tasks instead of serializing on a single reader. */
-final case class IceLiteFileRange(start: Long, end: Long, startRow: Long, rows: Long)
+/** A byte slice [start, end) of one parquet file. Spark's parquet reader
+  * reads the row groups whose midpoint falls in it and reports each row's
+  * file-global index, so `_pos` (and therefore position-delete
+  * application) is the same whichever split reads a row. Lets one
+  * oversized file fan out to many tasks instead of serializing on a
+  * single reader. */
+final case class IceLiteFileRange(start: Long, end: Long)
 
 /** Hadoop Configuration isn't Serializable; standard writable-based wrapper. */
 final class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
   private def writeObject(out: ObjectOutputStream): Unit = { out.defaultWriteObject(); value.write(out) }
   private def readObject(in: ObjectInputStream): Unit = {
     in.defaultReadObject(); value = new Configuration(false); value.readFields(in)
-  }
-}
-
-/** Executor-side reader: parquet-mr example API (GroupReadSupport) with a
-  * per-file projection schema — only required columns are decoded. Flat
-  * 8-primitive surface only, guaranteed by IceTable.create's validation.
-  * Deliberately row-at-a-time: this is the PACKAGING layer; the headline
-  * scan path for bulk analytics remains Spark's vectorized parquet reader
-  * via the library scan. Correct-by-construction beats re-implementing the
-  * vectorized reader against internal APIs. */
-final class IceLiteReaderFactory(
-    conf: SerializableHadoopConf,
-    required: StructType,
-    partCols: Array[String],
-    tableSchema: StructType,
-    limit: Option[Int] = None,
-    deletes: Seq[PositionDeleteFile] = Nil,
-    eqDeletes: Seq[EqualityDeleteFile] = Nil)
-    extends PartitionReaderFactory {
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[IceLitePartition]
-    new IceLitePartitionReader(conf.value, p, required, partCols, tableSchema, limit,
-      deletes ++ p.deletes, // set-union semantics: factory-wide + partition-scoped
-      eqDeletes)
   }
 }
 
@@ -877,169 +840,193 @@ final case class EqualityDeleteFile(
     seq: Long,
     keyCols: Seq[String])
 
-final class IceLitePartitionReader(
-    conf: Configuration,
-    partition: IceLitePartition,
-    required: StructType,
-    partCols: Array[String],
-    tableSchema: StructType,
-    limit: Option[Int] = None,
-    deletes: Seq[PositionDeleteFile] = Nil,
-    eqDeletes: Seq[EqualityDeleteFile] = Nil)
-    extends PartitionReader[InternalRow] {
+/** Per-scan reader factory. Spark's own parquet reader
+  * (`ParquetFileFormat`, vectorized where the schema allows) decodes every
+  * data and delete file; its reader functions are built once per scan on
+  * the driver and run on the executors. The partition reader keeps only
+  * the table-format work that reader does not know: position deletes and
+  * deletion vectors, equality deletes, the `_file` / `_pos` / `_row_id` /
+  * `_last_updated_sequence_number` metadata columns, partition constants
+  * and the pushed limit.
+  *
+  * `read` returns rows of the scan's read schema: the projected table
+  * columns, any equality-delete key columns beyond them, the physical
+  * lineage columns when those are requested, and Spark's row index when
+  * positions matter. `output` and `eqKeys` are bound over that row joined
+  * with a per-file constant row: `_file`, the file's first row id, its
+  * data sequence number, then one value per partition column. A null
+  * `output` means the read rows already are the scan's rows. */
+final class IceLiteReaderFactory private (
+    private[sources] val read: PartitionedFile => Iterator[InternalRow],
+    private[sources] val readDeletes: Option[PartitionedFile => Iterator[InternalRow]],
+    private[sources] val readEqDeletes: Map[Seq[String], PartitionedFile => Iterator[InternalRow]],
+    private[sources] val output: Seq[Expression],
+    private[sources] val eqKeys: Map[Seq[String], Seq[Expression]],
+    private[sources] val posOrdinal: Int,
+    private[sources] val partTypes: Array[DataType],
+    private[sources] val limit: Option[Int],
+    private[sources] val deletes: Seq[PositionDeleteFile],
+    private[sources] val eqDeletes: Seq[EqualityDeleteFile])
+    extends PartitionReaderFactory {
 
-  private val partIdx: Map[String, Int] = partCols.zipWithIndex.toMap
-  private var emitted = 0L
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new IceLitePartitionReader(this, partition.asInstanceOf[IceLitePartition])
+}
 
-  // Field-id resolution (rename/drop-evolved tables): the scan passes an
-  // id-stamped tableSchema (TableMetadata.scanSchema / PlanHeader
-  // readById), and file columns bind by parquet field id instead of name.
-  // A dropped-and-readded column's name maps to a FRESH id absent from
-  // old files, so their retired values can never resurrect through a
-  // name match.
-  private val fieldIdOf: Map[String, Int] = tableSchema.fields
-    .filter(_.metadata.contains("parquet.field.id"))
-    .map(f => f.name -> f.metadata.getLong("parquet.field.id").toInt).toMap
-  private val byId: Boolean = fieldIdOf.nonEmpty
+object IceLiteReaderFactory {
+  /** `_file`, first row id, data sequence number; partition values follow. */
+  private[sources] val FileConstants = 3
 
-  /** The FILE's column type for table column `name`: by field id on an
-    * evolved table (loud failure if the file carries no ids at all — a
-    * silent name fallback could resurrect dropped data), by name
-    * otherwise. None = the file predates the column (reads as null). */
-  private def fileFieldOf(msg: MessageType, name: String)
-      : Option[org.apache.parquet.schema.Type] = {
-    import scala.jdk.CollectionConverters._
-    fieldIdOf.get(name) match {
-      case Some(id) if byId =>
-        val hit = msg.getFields.asScala.find(t => t.getId != null && t.getId.intValue == id)
-        // a file with NO ids at all cannot be bound soundly on an evolved
-        // table — its columns may carry pre-rename names (so containsField
-        // is exactly the check that CANNOT see the problem). Same loud
-        // contract as the Spark-read paths (fieldId.read.ignoreMissing
-        // defaults false).
-        if (hit.isEmpty && !msg.getFields.asScala.exists(_.getId != null))
-          throw new IllegalStateException(
-            s"table requires field-id resolution (rename/drop evolution) but a data " +
-              s"file carries no parquet field ids; refusing to bind '$name'")
-        hit
-      case _ =>
-        if (msg.containsField(name)) Some(msg.getType(msg.getFieldIndex(name)))
-        else None
+  private val MetaColumns = Set("_file", "_pos", "_row_id", "_last_updated_sequence_number")
+  private val LineageColumns = Seq("_row_id", "_last_updated_sequence_number")
+  private val RowIndex = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
+
+  /** Build the scan's reader functions and row layout. `tableSchema`
+    * carries `parquet.field.id` metadata on a rename/drop-evolved table:
+    * its columns then bind by id under [[IcebergFormat.idReadSession]],
+    * and a data file without ids fails loudly (Spark's
+    * `fieldId.read.ignoreMissing` is false). `partitionDeletes` is true
+    * when partitions may carry their own position-delete files. */
+  def apply(
+      required: StructType,
+      partCols: Array[String],
+      tableSchema: StructType,
+      limit: Option[Int],
+      deletes: Seq[PositionDeleteFile],
+      eqDeletes: Seq[EqualityDeleteFile],
+      partitionDeletes: Boolean): IceLiteReaderFactory = {
+    val spark   = SparkSession.active
+    val byId    = tableSchema.fields.exists(_.metadata.contains("parquet.field.id"))
+    val session = if (byId) IcebergFormat.idReadSession(spark) else spark
+    // `_file`/`_pos`/... are metadata only when the table declares no
+    // column of that name (Spark hides the metadata column on conflict)
+    def isMeta(n: String) = MetaColumns(n) && !tableSchema.fieldNames.contains(n)
+    def tableField(n: String): StructField = tableSchema.fields.find(_.name == n)
+      .getOrElse(throw new NoSuchElementException(s"column $n not in table schema"))
+      .copy(nullable = true)
+    val meta    = required.fieldNames.filter(isMeta)
+    val needPos = meta.exists(n => n == "_pos" || n == "_row_id") ||
+      deletes.nonEmpty || partitionDeletes
+    val dataCols = (required.fieldNames.filterNot(isMeta) ++ eqDeletes.flatMap(_.keyCols)).distinct
+    // lineage columns decode physically where a rewrite materialized
+    // them; Spark reads them as null from files that lack them
+    val readSchema = StructType(dataCols.map(n => withExistenceDefault(tableField(n))) ++
+      LineageColumns.filter(meta.contains).map(StructField(_, LongType)) ++
+      (if (needPos) Seq(StructField(RowIndex, LongType)) else Nil))
+
+    val nRead = readSchema.length
+    def readRef(n: String): Expression = {
+      val i = readSchema.fieldIndex(n)
+      BoundReference(i, readSchema(i).dataType, nullable = true)
     }
+    def constRef(i: Int, dt: DataType): Expression = BoundReference(nRead + i, dt, nullable = true)
+    // a partition column's non-null value IS the column's value in every
+    // file of that partition (identity partitioning), so it fills files
+    // that omit the column; under a null partition value the file's own
+    // column wins, or its `initial-default` when the file lacks it
+    def value(n: String): Expression = partCols.indexOf(n) match {
+      case -1 => readRef(n)
+      case i  => Coalesce(Seq(constRef(FileConstants + i, readSchema(n).dataType), readRef(n)))
+    }
+    val output = required.fieldNames.toSeq.map {
+      case n @ "_file" if isMeta(n) => constRef(0, StringType)
+      case n @ "_pos" if isMeta(n)  => readRef(RowIndex)
+      case n @ "_row_id" if isMeta(n) =>
+        Coalesce(Seq(readRef(n), Add(constRef(1, LongType), readRef(RowIndex))))
+      case n @ "_last_updated_sequence_number" if isMeta(n) =>
+        Coalesce(Seq(readRef(n), constRef(2, LongType)))
+      case n => value(n)
+    }
+    val passThrough = output.length == nRead && output.zipWithIndex.forall {
+      case (b: BoundReference, i) => b.ordinal == i
+      case _                      => false
+    }
+    val keySets = eqDeletes.map(_.keyCols).distinct
+    new IceLiteReaderFactory(
+      parquetReader(session, readSchema),
+      if (deletes.nonEmpty || partitionDeletes)
+        Some(parquetReader(spark, IceTable.PositionDeleteSchema))
+      else None,
+      // non-null key columns: a delete file that lacks one fails loudly
+      keySets.map(k => k -> parquetReader(session,
+        StructType(k.map(tableField(_).copy(nullable = false))))).toMap,
+      if (passThrough) null else output,
+      keySets.map(k => k -> k.map(value)).toMap,
+      if (needPos) readSchema.fieldIndex(RowIndex) else -1,
+      partCols.map(tableField(_).dataType),
+      limit, deletes, eqDeletes)
   }
 
-  // metadata-column ordinals in the required schema (`_file`/`_pos` are
-  // metadata only when the user schema doesn't declare them — Spark hides
-  // the metadata column on conflict, so a physical column of that name
-  // must decode normally)
-  private def isMetaName(n: String): Boolean =
-    (n == "_file" || n == "_pos" || n == "_row_id" ||
-      n == "_last_updated_sequence_number") && !tableSchema.fieldNames.contains(n)
-  private def ordsOf(n: String): Array[Int] =
-    required.fields.indices.filter(i =>
-      required.fields(i).name == n && isMetaName(n)).toArray
-  private val fileOrds: Array[Int] = ordsOf("_file")
-  private val posOrds: Array[Int]  = ordsOf("_pos")
-  // v3 row lineage (filled per-row unless the file physically carries
-  // the column — a rewrite materialized it — in which case it decodes
-  // like any data column and the per-file fill list below goes empty)
-  private val rowIdOrds: Array[Int]   = ordsOf("_row_id")
-  private val lastSeqOrds: Array[Int] = ordsOf("_last_updated_sequence_number")
-  private val hasMeta =
-    fileOrds.nonEmpty || posOrds.nonEmpty || rowIdOrds.nonEmpty || lastSeqOrds.nonEmpty
+  private def parquetReader(session: SparkSession, schema: StructType)
+      : PartitionedFile => Iterator[InternalRow] =
+    new ParquetFileFormat().buildReaderWithPartitionValues(session, schema, new StructType(),
+      schema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      session.sessionState.newHadoopConf())
 
-  private var fileIdx: Int = 0
-  private var reader: ParquetReader[Group] = _
-  private var rowFns: Array[Group => Any] = _ // one per required field; null fn = filled post-hoc (_pos)
-  private var constRow: InternalRow = _ // when no data columns are projected
-  private var constRemaining: Long = 0L
-  // synthetic-position mode: no data column decodes, but positions matter
-  // (metadata columns requested and/or deletes to apply)
-  private var synthActive = false
-  private var synthTotal: Long = 0L
-  private var synthBase: Array[Any] = _
-  private var curPos: Long = 0L
-  private var curRange: IceLiteFileRange = _ // active byte-range split, or null
-  private var curRelUtf8: UTF8String = _
-  private var curFirstRowId: java.lang.Long = _ // null = lineage unassigned for this file
-  private var curFileSeqBox: java.lang.Long = _ // null = no sequence known (non-MoR path)
-  private var rowIdFill: Array[Int] = Array.empty   // rowIdOrds unless physically present
-  private var lastSeqFill: Array[Int] = Array.empty // lastSeqOrds unless physically present
+  /** v3 `initial-default` (carried as `graft.initial-default` JSON by
+    * IcebergMorV2Table.schema()) as Spark's existence default: both of
+    * Spark's parquet readers fill it for files that lack the column, and
+    * files that carry it keep their explicit nulls. */
+  private def withExistenceDefault(f: StructField): StructField =
+    if (!f.metadata.contains("graft.initial-default")) f
+    else {
+      val v = IcebergFormat.decodeDefault(f.dataType,
+        org.json4s.jackson.JsonMethods.parse(f.metadata.getString("graft.initial-default")))
+      f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
+        .putString(ResolveDefaultColumns.EXISTS_DEFAULT_COLUMN_METADATA_KEY,
+          Literal.create(v, f.dataType).sql).build())
+    }
+}
+
+final class IceLitePartitionReader(f: IceLiteReaderFactory, partition: IceLitePartition)
+    extends PartitionReader[InternalRow] {
+
+  private val deletes = f.deletes ++ partition.deletes // factory-wide + partition-scoped
+  private val consts  = new GenericInternalRow(IceLiteReaderFactory.FileConstants + f.partTypes.length)
+  private val joined  = new JoinedRow()
+  private val project: InternalRow => InternalRow =
+    if (f.output == null) identity
+    else {
+      val p = UnsafeProjection.create(f.output)
+      r => p(joined(r, consts))
+    }
+  private val keyProjections = f.eqKeys.map { case (k, es) => k -> UnsafeProjection.create(es) }
+
+  private var fileIdx = 0
+  private var rows: Iterator[InternalRow] = Iterator.empty
   private var delSet: java.util.BitSet = _ // null = no deletes touch this file
-  // per-group row predicates of the equality deletes applicable to the
-  // current file (strictly-newer deletes only); null = none apply
-  private var eqChecks: Array[Group => Boolean] = _
+  // the equality deletes applicable to the current file, each as (key
+  // projection of a data row, key set of the delete file)
+  private var eqChecks: Seq[(UnsafeProjection, java.util.Set[UnsafeRow])] = Nil
+  private var emitted = 0L
   private var current: InternalRow = _
 
   // equality-delete key sets, loaded at most once per task and shared
   // across the partition's data files (the per-task "delete index")
-  private val eqKeyCache = scala.collection.mutable.Map.empty[String, Set[List[Any]]]
+  private val eqKeyCache = mutable.Map.empty[String, java.util.Set[UnsafeRow]]
 
-  /** Key rows of equality-delete file `d` as Catalyst-typed tuples (types
-    * from the TABLE schema, decoded with the same converters as data rows
-    * so membership compares exactly; null keys match null values, the
+  private def wholeFile(path: String): PartitionedFile =
+    PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), 0L, Long.MaxValue)
+
+  private def closeRows(it: Iterator[InternalRow]): Unit = it match {
+    case c: java.io.Closeable => c.close()
+    case _                    =>
+  }
+
+  /** Key rows of equality-delete file `d`, typed like the table columns
+    * the data rows' keys come from (null keys match null values, the
     * spec's null-safe equality). */
-  private def loadEqKeys(d: EqualityDeleteFile): Set[List[Any]] =
+  private def loadEqKeys(d: EqualityDeleteFile): java.util.Set[UnsafeRow] =
     eqKeyCache.getOrElseUpdate(d.path, {
       IceLiteSource.deleteFilesOpened.increment()
-      val dPath  = new Path(d.path)
-      val inFile = HadoopInputFile.fromPath(dPath, conf)
-      val fr     = ParquetFileReader.open(inFile)
-      val msg    = try fr.getFooter.getFileMetaData.getSchema finally fr.close()
-      val proj = new MessageType("spark_schema",
-        d.keyCols.map(c => fileFieldOf(msg, c).getOrElse(throw new NoSuchElementException(
-          s"equality-delete file ${d.path} lacks key column $c"))): _*)
-      val c2 = new Configuration(conf)
-      c2.set(ReadSupport.PARQUET_READ_SCHEMA, proj.toString)
-      val fns = d.keyCols.zipWithIndex.map { case (kc, i) =>
-        val dt = tableSchema.fields.find(_.name == kc).getOrElse(
-          throw new NoSuchElementException(s"equality-delete key column $kc not in table schema")
-        ).dataType
-        IceLiteConverters.fieldReader(proj.getType(i).asPrimitiveType(), dt, i)
-      }
-      val rdr = ParquetReader.builder(new GroupReadSupport(), dPath).withConf(c2).build()
-      val out = scala.collection.mutable.HashSet.empty[List[Any]]
-      try {
-        var g = rdr.read()
-        while (g != null) { out += fns.map(_(g)).toList; g = rdr.read() }
-      } finally rdr.close()
-      out.toSet
+      val key = UnsafeProjection.create(f.eqKeys(d.keyCols).zipWithIndex.map { case (e, i) =>
+        BoundReference(i, e.dataType, nullable = true): Expression
+      })
+      val out = new java.util.HashSet[UnsafeRow]()
+      val it  = f.readEqDeletes(d.keyCols)(wholeFile(d.path))
+      try it.foreach(r => out.add(key(r).copy())) finally closeRows(it)
+      out
     })
-
-  /** Partition-column constant for required field `name` (parsed from the
-    * partition key row — already Catalyst-typed), or null if absent. */
-  private def partConst(name: String): Any =
-    partIdx.get(name) match {
-      case Some(i) if partition.key != null =>
-        val dt = tableSchema.fields.find(_.name == partCols(i)).get.dataType
-        partition.key.get(i, dt)
-      case _ => null
-    }
-
-  // v3 `initial-default` literals riding the scan schema's field metadata
-  // (set by IcebergMorV2Table.schema()), Catalyst-typed for InternalRow
-  private lazy val initDefaults: Map[String, Any] = tableSchema.fields.flatMap { f =>
-    if (!f.metadata.contains("graft.initial-default")) None
-    else {
-      val v = graft.icelite.IcebergFormat.decodeDefault(f.dataType,
-        org.json4s.jackson.JsonMethods.parse(f.metadata.getString("graft.initial-default")))
-      Some(f.name -> (v match {
-        case s: String        => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-        case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
-        case other            => other
-      }))
-    }
-  }.toMap
-
-  /** Constant for a required field this FILE does not physically hold:
-    * its partition value, else its v3 `initial-default` (pre-evolution
-    * files read the default INSTEAD of null; files that carry the column
-    * keep explicit nulls — presence decides, which is why this fallback
-    * only runs when the file lacks the field). */
-  private def fillConst(name: String): Any = {
-    val p = partConst(name)
-    if (p != null) p else initDefaults.getOrElse(name, null)
-  }
 
   /** Manifest-relative path of an absolute data-file path (anchored at the
     * `data/snap-` segment every committed file lives under) — the `_file`
@@ -1071,250 +1058,71 @@ final class IceLitePartitionReader(
     }
     if (covering.isEmpty) return null
     val bs = new java.util.BitSet()
+    def mark(p: Long): Unit = {
+      require(p >= 0 && p <= Int.MaxValue.toLong, s"delete position $p out of bitmap range")
+      bs.set(p.toInt)
+    }
+    val relU = UTF8String.fromString(rel)
     covering.foreach { d =>
+      IceLiteSource.deleteFilesOpened.increment()
       d.dv match {
         case Some((off, sz, _)) =>
-          IceLiteSource.deleteFilesOpened.increment()
           val it = graft.icelite.DeletionVectors.readBitmap(d.path, off, sz).getLongIterator
-          while (it.hasNext) {
-            val p = it.next()
-            require(p >= 0 && p <= Int.MaxValue.toLong,
-              s"deletion-vector position $p out of bitmap range")
-            bs.set(p.toInt)
-          }
+          while (it.hasNext) mark(it.next())
         case None =>
-          IceLiteSource.deleteFilesOpened.increment()
-          val rdr = ParquetReader.builder(new GroupReadSupport(), new Path(d.path))
-            .withConf(conf).build()
-          try {
-            var g = rdr.read()
-            while (g != null) {
-              if (g.getString("file_path", 0) == rel) {
-                val p = g.getLong("pos", 0)
-                require(p >= 0 && p <= Int.MaxValue.toLong, s"delete position $p out of bitmap range")
-                bs.set(p.toInt)
-              }
-              g = rdr.read()
-            }
-          } finally rdr.close()
+          val it = f.readDeletes.get(wholeFile(d.path))
+          try it.foreach(r => if (r.getUTF8String(0) == relU) mark(r.getLong(1)))
+          finally closeRows(it)
       }
     }
     if (bs.isEmpty) null else bs
   }
 
-  /** Is the current decoded row removed by an applicable equality delete? */
-  private def eqDeleted(g: Group): Boolean = {
-    if (eqChecks == null) return false
-    var i = 0
-    while (i < eqChecks.length) { if (eqChecks(i)(g)) return true; i += 1 }
-    false
-  }
-
   private def openNextFile(): Boolean = {
     if (fileIdx >= partition.files.length) return false
-    val full  = partition.files(fileIdx)
-    val path  = new Path(full)
-    val range = if (partition.ranges.nonEmpty) partition.ranges(fileIdx) else null
-    // data sequence number gates equality-delete application: only deletes
-    // STRICTLY newer than the file apply (a restated row survives). Files
-    // planned without seqs (non-MoR paths) never see equality deletes.
-    val fileSeq = if (partition.seqs.nonEmpty) partition.seqs(fileIdx) else Long.MaxValue
-    val eqApplicable = eqDeletes.filter(_.seq > fileSeq)
-    curRange = range
-    curFirstRowId = partition.firstRowIds.lift(fileIdx).flatten
-      .map(Long.box).orNull
-    curFileSeqBox =
-      if (partition.seqs.nonEmpty) Long.box(partition.seqs(fileIdx)) else null
+    val i    = fileIdx
+    val path = partition.files(i)
     fileIdx += 1
     IceLiteSource.filesOpened.increment()
-
-    val rel = relOf(full)
-    curRelUtf8 = UTF8String.fromString(rel)
+    val rel = relOf(path)
+    // data sequence number: only equality deletes STRICTLY newer than the
+    // file apply (a restated row survives); files planned without one
+    // (non-MoR paths) never see equality deletes
+    val seq = partition.seqs.lift(i)
+    consts.update(0, UTF8String.fromString(rel))
+    consts.update(1, partition.firstRowIds.lift(i).flatten.map(Long.box).orNull)
+    consts.update(2, seq.map(Long.box).orNull)
+    f.partTypes.indices.foreach { j =>
+      consts.update(IceLiteReaderFactory.FileConstants + j,
+        if (partition.key == null) null else partition.key.get(j, f.partTypes(j)))
+    }
     delSet = loadDeletes(rel)
-
-    val inFile  = HadoopInputFile.fromPath(path, conf)
-    val fr      = ParquetFileReader.open(inFile)
-    val fileMsg = try {
-      if (range != null && range.startRow < 0) {
-        // planner-deferred range (manifest split_offsets, zero planning
-        // IO): resolve startRow/rows from the footer THIS open already
-        // paid for — blocks whose midpoint falls in [start, end) are
-        // exactly what parquet's range filter will read
-        var startRow = 0L
-        var rows     = 0L
-        fr.getFooter.getBlocks.forEach { b =>
-          val mid = b.getStartingPos + b.getCompressedSize / 2
-          if (mid < range.start) startRow += b.getRowCount
-          else if (mid < range.end) rows += b.getRowCount
-        }
-        curRange = IceLiteFileRange(range.start, range.end, startRow, rows)
-      }
-      fr.getFooter.getFileMetaData.getSchema
-    } finally fr.close()
-    curPos = if (curRange != null) curRange.startRow else 0L
-
-    // physical presence wins: a partition-listed column decodes from the
-    // file when the file actually holds it (e.g. a delta insert file on a
-    // partitioned iceberg-format table, committed with null partition
-    // metadata); partConst fills it only for files that omit the column
-    // (hive layout / spec Column Projection). Binding is by name, or by
-    // parquet field id on a rename/drop-evolved table (fileFieldOf).
-    val dataBinds: Array[(org.apache.spark.sql.types.StructField, org.apache.parquet.schema.Type)] =
-      required.fields.flatMap(f => fileFieldOf(fileMsg, f.name).map(t => (f, t)))
-    // v3 lineage fill lists for THIS file: physical presence wins (a
-    // rewrite materialized the column into the data); otherwise the
-    // implicit value fills per-row below
-    rowIdFill =
-      if (fileFieldOf(fileMsg, "_row_id").isDefined) Array.empty else rowIdOrds
-    lastSeqFill =
-      if (fileFieldOf(fileMsg, "_last_updated_sequence_number").isDefined) Array.empty
-      else lastSeqOrds
-
-    // equality-delete key columns the file physically holds beyond the
-    // required projection — decoded alongside (never emitted) so delete
-    // keys compare against real row values
-    val eqExtraBinds: Array[(String, org.apache.parquet.schema.Type)] =
-      eqApplicable.flatMap(_.keyCols).distinct
-        .filter(c => !dataBinds.exists(_._1.name == c))
-        .flatMap(c => fileFieldOf(fileMsg, c).map(t => (c, t))).toArray
-
-    eqChecks = null
-    if (dataBinds.isEmpty && eqExtraBinds.isEmpty) {
-      // no column decodes at all: any applicable equality delete keys on
-      // per-file CONSTANTS (partition value / evolved-in null) — one
-      // membership test decides the whole file
-      val allDeleted = eqApplicable.exists { d =>
-        loadEqKeys(d).contains(d.keyCols.map(fillConst).toList)
-      }
-      if (allDeleted) { reader = null; constRow = null; synthActive = false; return true }
-    }
-
-    if (dataBinds.isEmpty && eqExtraBinds.isEmpty) {
-      // nothing to decode from the row groups: row count from the range
-      // (or the footer for a whole file); plain constants when positions
-      // are irrelevant, position iteration when metadata columns are
-      // requested or deletes must be applied
-      val n = if (curRange != null) curRange.rows else {
-        val fr2 = ParquetFileReader.open(inFile)
-        try fr2.getRecordCount finally fr2.close()
-      }
-      reader = null
-      if (!hasMeta && delSet == null) {
-        constRow = new GenericInternalRow(required.fields.map(f => fillConst(f.name)): Array[Any])
-        constRemaining = n
-        synthActive = false
-      } else {
-        constRow = null
-        synthActive = true
-        synthTotal = curPos + n
-        synthBase = required.fields.map(f => fillConst(f.name): Any)
-      }
-      true
-    } else {
-      // projection in FILE terms (an evolved table's file may carry a
-      // pre-rename name for a required column); posOf keys stay TABLE
-      // names, positions index the projection
-      val projFields = dataBinds.map { case (f, t) => (f.name, t) } ++ eqExtraBinds
-      val projNames = projFields.map(_._1)
-      val projection = new MessageType("spark_schema", projFields.map(_._2): _*)
-      val c = new Configuration(conf)
-      c.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-      val b = ParquetReader.builder(new GroupReadSupport(), path).withConf(c)
-      reader = (if (range != null) b.withFileRange(range.start, range.end) else b).build()
-      val posOf = projNames.zipWithIndex.toMap
-      if (eqApplicable.nonEmpty) {
-        eqChecks = eqApplicable.map { d =>
-          val keys = loadEqKeys(d)
-          val fns: Seq[Group => Any] = d.keyCols.map { kc =>
-            posOf.get(kc) match {
-              case Some(i) =>
-                val dt = tableSchema.fields.find(_.name == kc).get.dataType
-                IceLiteConverters.fieldReader(projection.getType(i).asPrimitiveType(), dt, i)
-              case None =>
-                val const = fillConst(kc)
-                (_: Group) => const
-            }
-          }
-          (g: Group) => keys.contains(fns.map(_(g)).toList)
-        }.toArray
-      }
-      val relU  = curRelUtf8
-      rowFns = required.fields.map { f =>
-        posOf.get(f.name) match {
-          case Some(i) =>
-            val fn = IceLiteConverters.fieldReader(
-              projection.getType(i).asPrimitiveType(), f.dataType, i)
-            (g: Group) => fn(g)
-          case None if f.name == "_file" && isMetaName("_file") =>
-            (_: Group) => relU
-          case None if f.name == "_pos" && isMetaName("_pos") =>
-            null // filled per-row from the position counter
-          case None if f.name == "_row_id" && isMetaName("_row_id") =>
-            null // filled per-row: curFirstRowId + pos (null when unassigned)
-          case None if f.name == "_last_updated_sequence_number" &&
-              isMetaName("_last_updated_sequence_number") =>
-            null // filled per-row from the file's data sequence number
-          case None =>
-            val const = fillConst(f.name) // partition/default, or evolved-in null
-            (_: Group) => const
-        }
-      }
-      constRow = null
-      synthActive = false
-      true
-    }
+    eqChecks = f.eqDeletes.filter(d => seq.exists(d.seq > _))
+      .map(d => (keyProjections(d.keyCols), loadEqKeys(d)))
+    val range = partition.ranges.lift(i)
+    rows = f.read(range.fold(wholeFile(path))(r =>
+      PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path), r.start, r.end - r.start)))
+    true
   }
 
+  private def live(r: InternalRow): Boolean =
+    (delSet == null || {
+      val p = r.getLong(f.posOrdinal)
+      p > Int.MaxValue.toLong || !delSet.get(p.toInt)
+    }) && (eqChecks.isEmpty || {
+      joined(r, consts)
+      !eqChecks.exists { case (key, keys) => keys.contains(key(joined)) }
+    })
+
   override def next(): Boolean = {
-    if (limit.exists(emitted >= _)) return false // pushed partial limit
+    if (f.limit.exists(emitted >= _)) return false // pushed partial limit
     while (true) {
-      if (constRow != null) {
-        if (constRemaining > 0) {
-          constRemaining -= 1; current = constRow; emitted += 1; return true
-        }
-        constRow = null
-      } else if (synthActive) {
-        while (curPos < synthTotal) {
-          val p = curPos; curPos += 1
-          if (delSet == null || p > Int.MaxValue.toLong || !delSet.get(p.toInt)) {
-            val vals = synthBase.clone()
-            fileOrds.foreach(i => vals(i) = curRelUtf8)
-            posOrds.foreach(i => vals(i) = p)
-            rowIdFill.foreach(i => vals(i) =
-              if (curFirstRowId == null) null else curFirstRowId.longValue() + p)
-            lastSeqFill.foreach(i => vals(i) = curFileSeqBox)
-            current = new GenericInternalRow(vals); emitted += 1; return true
-          }
-        }
-        synthActive = false
-      } else if (reader != null) {
-        var g = reader.read()
-        var emittedOne = false
-        while (g != null && !emittedOne) {
-          val p = curPos; curPos += 1
-          if ((delSet == null || p > Int.MaxValue.toLong || !delSet.get(p.toInt)) &&
-              !eqDeleted(g)) {
-            val vals: Array[Any] = rowFns.map(fn => if (fn == null) null else fn(g))
-            posOrds.foreach(i => vals(i) = p)
-            rowIdFill.foreach(i => vals(i) =
-              if (curFirstRowId == null) null else curFirstRowId.longValue() + p)
-            lastSeqFill.foreach(i => vals(i) = curFileSeqBox)
-            current = new GenericInternalRow(vals)
-            emitted += 1
-            emittedOne = true
-          } else g = reader.read()
-        }
-        if (emittedOne) return true
-        reader.close(); reader = null
-        // ranged split invariant: the row groups parquet's midpoint filter
-        // selected must hold EXACTLY the rows the planner counted from the
-        // footer — otherwise `_pos` drifts file-globally and position
-        // deletes would hit the wrong rows. Fail loudly, never silently.
-        if (curRange != null)
-          require(curPos - curRange.startRow == curRange.rows,
-            s"ranged split consumed ${curPos - curRange.startRow} rows, " +
-              s"planner counted ${curRange.rows} (range $curRange)")
+      while (rows.hasNext) {
+        val r = rows.next()
+        if (live(r)) { current = project(r); emitted += 1; return true }
       }
+      closeRows(rows)
+      rows = Iterator.empty
       if (!openNextFile()) return false
     }
     false
@@ -1322,58 +1130,5 @@ final class IceLitePartitionReader(
 
   override def get(): InternalRow = current
 
-  override def close(): Unit = if (reader != null) { reader.close(); reader = null }
-}
-
-object IceLiteConverters {
-
-  private val JulianEpochDay = 2440588L
-
-  /** Group-field reader for primitive `pt` at projection position `pos`,
-    * producing the Catalyst value for `sparkType`. Null-safe (repetition
-    * count 0 = null). Handles the physical encodings Spark/pyarrow emit
-    * for the flat surface: BINARY-UTF8, INT32 (+DATE), INT64 (+TIMESTAMP
-    * millis/micros), INT96 timestamps, FLOAT, DOUBLE, BOOLEAN. */
-  def fieldReader(pt: PrimitiveType, sparkType: DataType, pos: Int): Group => Any = {
-    val read: Group => Any = pt.getPrimitiveTypeName match {
-      case PrimitiveTypeName.BINARY | PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY =>
-        sparkType match {
-          case StringType => g => UTF8String.fromBytes(g.getBinary(pos, 0).getBytes)
-          case _          => g => g.getBinary(pos, 0).getBytes
-        }
-      case PrimitiveTypeName.INT32 =>
-        sparkType match {
-          case LongType => g => g.getInteger(pos, 0).toLong
-          case _        => g => g.getInteger(pos, 0) // Int: IntegerType + DateType(days)
-        }
-      case PrimitiveTypeName.INT64 =>
-        val scale = pt.getLogicalTypeAnnotation match {
-          case t: TimestampLogicalTypeAnnotation
-              if t.getUnit == LogicalTypeAnnotationUnit.MILLIS => 1000L
-          case _ => 1L
-        }
-        if (scale == 1L) g => g.getLong(pos, 0) else g => g.getLong(pos, 0) * scale
-      case PrimitiveTypeName.INT96 => // legacy spark timestamps: (nanos LE, julian day LE)
-        g => {
-          val b  = g.getInt96(pos, 0).getBytes
-          val bb = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val nanos = bb.getLong
-          val jday  = bb.getInt
-          (jday - JulianEpochDay) * 86400000000L + nanos / 1000L
-        }
-      case PrimitiveTypeName.FLOAT =>
-        sparkType match {
-          case DoubleType => g => g.getFloat(pos, 0).toDouble
-          case _          => g => g.getFloat(pos, 0)
-        }
-      case PrimitiveTypeName.DOUBLE  => g => g.getDouble(pos, 0)
-      case PrimitiveTypeName.BOOLEAN => g => g.getBoolean(pos, 0)
-    }
-    g => if (g.getFieldRepetitionCount(pos) == 0) null else read(g)
-  }
-
-  // tiny indirection: LogicalTypeAnnotation.TimeUnit nested-enum import alias
-  private object LogicalTypeAnnotationUnit {
-    val MILLIS = org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MILLIS
-  }
+  override def close(): Unit = { closeRows(rows); rows = Iterator.empty }
 }

@@ -2,10 +2,7 @@ package graft.sources
 
 import graft.icelite.{IceTable, IcebergFormat}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsRowLevelOperations, Table, TableCapability}
@@ -17,7 +14,6 @@ import org.apache.spark.sql.types.{BooleanType, DateType, IntegerType, LongType,
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.util.Locale
-import scala.jdk.CollectionConverters._
 
 /** SQL row-level DML over a table in the STANDARD Iceberg v2 format
   * (Avro manifests + metadata JSON — the layout the reference's external
@@ -125,10 +121,10 @@ final class IcebergMorV2Table(spark: SparkSession, location: String)
   * (`blog-zero-cost-data-lakehouse-part-2.md:277-281`). All filters are
   * returned as residuals (bounds can never prove a row-level predicate;
   * Spark re-checks survivors, same contract as parquet row-group stats).
-  * Surviving oversized files split into row-group-aligned ranged
-  * partitions (manifest `sizeBytes` gates the footer read), and position
-  * deletes ride with their manifest `file_path` bounds so the reader
-  * opens a delete file only for data files inside its range. */
+  * Surviving oversized files split into byte-ranged partitions (manifest
+  * `sizeBytes` and `split_offsets` decide, no footer is read), and
+  * position deletes ride with their manifest `file_path` bounds so the
+  * reader opens a delete file only for data files inside its range. */
 final class IcebergMorScanBuilder(
     tableSchema: StructType,
     header: IcebergFormat.PlanHeader,
@@ -476,13 +472,11 @@ object IcebergMorScan {
     * ~128 MB tasks instead of serializing on a single reader. */
   val DefaultSplitBytes: Long = 128L * 1024 * 1024
 
-  /** Ranged partitions for one file from RECORDED split offsets (the
-    * zero-planning-IO path, shared by the standard-format and IceLite V2
-    * scans): per-block byte weight = distance to the next offset (file
-    * tail for the last), greedy ~target chunks over those weights.
-    * `startRow`/`rows` stay -1 sentinels the READER resolves from the
-    * footer it opens anyway. None when the offsets don't justify >= 2
-    * chunks. */
+  /** Ranged partitions for one file from RECORDED split offsets (shared
+    * by the standard-format and IceLite V2 scans): per-block byte weight =
+    * distance to the next offset (file tail for the last), greedy ~target
+    * chunks over those weights, each range starting at a row group. None
+    * when the offsets don't justify >= 2 chunks. */
   private[graft] def rangedFromOffsets(
       path: String, sizeBytes: Long, offs: Seq[Long],
       target: Long, key: InternalRow, seq: Long,
@@ -502,28 +496,25 @@ object IcebergMorScan {
       val end   = if (i == chunkStarts.size - 1) Long.MaxValue
                   else offs(chunkStarts(i + 1))
       IceLitePartition(Array(path), key,
-        ranges = Seq(IceLiteFileRange(start, end, -1L, -1L)),
+        ranges = Seq(IceLiteFileRange(start, end)),
         seqs = Seq(seq), firstRowIds = Seq(firstRowId)): InputPartition
     })
   }
 
   /** Partition(s) for one planned file: whole-file normally; files at
-    * least 2× the split target (by manifest `sizeBytes`) split into
-    * row-group-aligned byte ranges. The ZERO-IO path uses the manifest's
-    * `split_offsets` (recorded at write time, the spec's field 132) to
-    * chunk by row-group starts, leaving `startRow`/`rows` as -1 sentinels
-    * the READER resolves from the footer it opens anyway — planning never
-    * touches the file. Only externally-written files without recorded
-    * offsets fall back to one driver-side footer read (counter-gated),
-    * whose exact block row counts fill the range eagerly. Either way each
-    * range's rows exactly match the row groups parquet's midpoint filter
-    * selects for [start, end) and `_pos` stays file-global
-    * (position-delete application is split-invariant). Cost note: each
-    * split re-opens the delete files covering the file (bitmaps are
-    * per-task); acceptable because covering deletes are range-pruned and
-    * a delete's blast radius is small next to an oversized data file. */
+    * least 2× the split target (by manifest `sizeBytes`) split into byte
+    * ranges. With the manifest's `split_offsets` (recorded at write time,
+    * the spec's field 132) the ranges start at row groups; without them
+    * they are fixed strides of the target, which is how Spark splits
+    * files. Either way parquet hands each row group to the range holding
+    * its midpoint and `_pos` stays file-global, so planning never touches
+    * the file and position-delete application is split-invariant. Cost
+    * note: each split re-opens the delete files covering the file
+    * (bitmaps are per-task); acceptable because covering deletes are
+    * range-pruned and a delete's blast radius is small next to an
+    * oversized data file. */
   private[graft] def partitionsFor(
-      f: IcebergFormat.PlannedFile, conf: Configuration, target: Long,
+      f: IcebergFormat.PlannedFile, target: Long,
       key: InternalRow = null): Seq[InputPartition] = {
     val path = f.path.toString
     def whole = Seq(IceLitePartition(Array(path), key, seqs = Seq(f.seq),
@@ -532,35 +523,11 @@ object IcebergMorScan {
     if (f.splitOffsets.size >= 2)
       return rangedFromOffsets(path, f.sizeBytes, f.splitOffsets, target, key, f.seq,
         f.firstRowId).getOrElse(whole)
-    IceLiteSource.planningFootersOpened.increment()
-    val fr = ParquetFileReader.open(HadoopInputFile.fromPath(f.path, conf))
-    val blocks = try fr.getFooter.getBlocks.asScala.toVector finally fr.close()
-    if (blocks.size < 2) return whole
-    // greedy row-group chunks of ~target compressed bytes
-    val chunks = scala.collection.mutable.ArrayBuffer(
-      scala.collection.mutable.ArrayBuffer(blocks.head))
-    var acc = blocks.head.getCompressedSize
-    blocks.tail.foreach { b =>
-      if (acc + b.getCompressedSize > target) {
-        chunks += scala.collection.mutable.ArrayBuffer(b); acc = b.getCompressedSize
-      } else { chunks.last += b; acc += b.getCompressedSize }
-    }
-    if (chunks.size < 2) return whole
-    var startRow = 0L
-    chunks.zipWithIndex.map { case (c, i) =>
-      // [start, end) bounds chosen so each block's midpoint falls in
-      // exactly one chunk: a block's midpoint sits in
-      // [startingPos, nextBlock.startingPos), and chunk boundaries ARE
-      // block starting positions (0 / MaxValue at the file edges)
-      val start = if (i == 0) 0L else c.head.getStartingPos
-      val end   = if (i == chunks.size - 1) Long.MaxValue else chunks(i + 1).head.getStartingPos
-      val rows  = c.map(_.getRowCount).sum
-      val part  = IceLitePartition(Array(path), key,
-        ranges = Seq(IceLiteFileRange(start, end, startRow, rows)),
+    (0L until f.sizeBytes by target).map { start =>
+      val end = if (start + target >= f.sizeBytes) Long.MaxValue else start + target
+      IceLitePartition(Array(path), key, ranges = Seq(IceLiteFileRange(start, end)),
         seqs = Seq(f.seq), firstRowIds = Seq(f.firstRowId)): InputPartition
-      startRow += rows
-      part
-    }.toSeq
+    }
   }
 }
 
@@ -684,13 +651,11 @@ final class IcebergMorScan(
     val rk = runtimeKept
     val c  = partitionsCache
     if (c != null && (c._1 eq rk)) return c._2
-    val spark  = SparkSession.active
-    val target = spark.conf.get("graft.split.size",
+    val target = SparkSession.active.conf.get("graft.split.size",
       IcebergMorScan.DefaultSplitBytes.toString).toLong
-    val conf = spark.sparkContext.hadoopConfiguration
     val surv = if (rk.isEmpty) survivors else survivors.filter(runtimeHit)
     val ps = surv.flatMap(f =>
-      IcebergMorScan.partitionsFor(f, conf, target, keyFor(f))).toArray
+      IcebergMorScan.partitionsFor(f, target, keyFor(f))).toArray
     partitionsComputed = Some(ps.length)
     partitionsCache = (rk, ps)
     ps
@@ -729,12 +694,10 @@ final class IcebergMorScan(
     }
   }
   override def createReaderFactory(): PartitionReaderFactory =
-    new IceLiteReaderFactory(
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration),
-      required, partCols, tableSchema, limit, deleteFiles, eqDeleteFiles)
-  // IO-free by contract: EXPLAIN must never force `partitions` (ranged
-  // splits may open parquet footers); split counts print only if planning
-  // already ran
+    IceLiteReaderFactory(required, partCols, tableSchema, limit, deleteFiles, eqDeleteFiles,
+      partitionDeletes = false)
+  // EXPLAIN never forces `partitions`; split counts print only if
+  // planning already ran
   override def description(): String = {
     val push = if (pushed.isEmpty) "" else s", pushed=[${pushed.mkString(", ")}]"
     val sp = partitionsComputed match {

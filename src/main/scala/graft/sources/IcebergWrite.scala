@@ -72,8 +72,7 @@ final class IcebergV2Table(location: String, providedSchema: StructType) extends
                 f.dataType == DateType || f.dataType == TimestampType ||
                 f.dataType == TimestampNTZType,
               s"iceberg streaming read supports flat primitive schemas; got ${f.dataType} for ${f.name}"))
-            new IcebergMicroBatchStream(location, providedSchema,
-              new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration))
+            new IcebergMicroBatchStream(location, providedSchema)
           }
         }
     }
@@ -159,8 +158,7 @@ final class IcebergV2Write(location: String, schema: StructType, replace: Boolea
   * window crossing row-level deletes fails loudly (incrementalFiles). */
 final class IcebergMicroBatchStream(
     location: String,
-    schema: StructType,
-    conf: SerializableHadoopConf)
+    schema: StructType)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
 
   import org.apache.spark.sql.connector.read.streaming.Offset
@@ -193,7 +191,7 @@ final class IcebergMicroBatchStream(
 
   override def createReaderFactory()
       : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new IceLiteReaderFactory(conf, schema, Array.empty, schema)
+    IceLiteReaderFactory(schema, Array.empty, schema, None, Nil, Nil, partitionDeletes = false)
 
   override def commit(end: Offset): Unit = () // snapshots are immutable
   override def stop(): Unit = ()

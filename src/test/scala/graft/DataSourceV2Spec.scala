@@ -111,8 +111,18 @@ class DataSourceV2Spec extends SparkSpec {
                  SELECT CAST(n_nationkey + 9000000000 AS BIGINT),
                         CAST(n_nationkey + 0.1 AS DOUBLE)
                  FROM nation_widen_src WHERE n_nationkey = 0""")
+    val cat = new FsCatalog(spark, whW)
+    val lib = cat.loadTable("ns", "nation_w").scan()
+      .select(col("k").cast("bigint").as("k"), col("v").cast("double").as("v"))
+    def sameAsLibrary(sql: String, want: org.apache.spark.sql.DataFrame, vec: String): Unit = {
+      val got = spark.sql(sql)
+      assert(got.schema.map(_.dataType) == want.schema.map(_.dataType) &&
+        got.count() == want.count() && got.except(want).isEmpty && want.except(got).isEmpty,
+        s"catalog read diverged from the library scan: $sql (vectorized=$vec)")
+    }
     // the read coercion, on BOTH parquet readers: old int32/float chunks
-    // surface as long/double, new wide rows intact
+    // surface as long/double, new wide rows intact and equal to the library
+    // scan, also under a filter on the promoted column
     Seq("true", "false").foreach { vec =>
       spark.conf.set("spark.sql.parquet.enableVectorizedReader", vec)
       try {
@@ -122,10 +132,14 @@ class DataSourceV2Spec extends SparkSpec {
           s"narrow row not widened (vectorized=$vec)")
         assert(out.last.getLong(0) == 9000000000L && out.last.getDouble(1) == 0.1d,
           s"wide row lost (vectorized=$vec)")
+        sameAsLibrary("SELECT * FROM ice_w.ns.nation_w", lib, vec)
+        sameAsLibrary("SELECT * FROM ice_w.ns.nation_w WHERE k > 2147483647",
+          lib.filter(col("k") > 2147483647L), vec)
+        sameAsLibrary("SELECT * FROM ice_w.ns.nation_w WHERE v < 3.0",
+          lib.filter(col("v") < 3.0), vec)
       } finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
     }
     // field ids preserved across the promotion
-    val cat = new FsCatalog(spark, whW)
     val ids = cat.loadTable("ns", "nation_w").metadata.fields.map(f => f.name -> f.id)
     assert(ids == Seq("k" -> 1, "v" -> 2), s"field ids changed: $ids")
   }

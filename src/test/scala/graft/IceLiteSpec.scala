@@ -509,4 +509,27 @@ class IceLiteSpec extends SparkSpec {
       .map(r => (r.getInt(0), if (r.isNullAt(1)) None else Some(r.getInt(1))))
     assert(rows.toSeq == Seq((2, None), (5, Some(7))), rows.mkString(","))
   }
+
+  test("writeGroupedFiles keys its result by the unescaped group value") {
+    import spark.implicits._
+    val root = scratch("grouped_esc")
+    val df   = Seq((1, "a:b"), (2, "a:b"), (3, "c")).toDF("id", "g")
+    val out  = IcebergFormat.writeGroupedFiles(spark, s"$root/stage", s"$root/t", df,
+      col("g"), g => "grp_" + g.replaceAll("[^A-Za-z0-9]", "_"))
+    assert(out.keySet == Set("a:b", "c"), s"group keys: ${out.keySet}")
+    assert(out("a:b").recordCount == 2L && out("c").recordCount == 1L)
+  }
+
+  test("writeGroupedFiles writes one file per group under a session maxRecordsPerFile") {
+    import spark.implicits._
+    val root = scratch("grouped_maxrec")
+    val df   = Seq((1, 0), (2, 0), (3, 0), (4, 1), (5, 1)).toDF("id", "g")
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+    try {
+      val out = IcebergFormat.writeGroupedFiles(spark, s"$root/stage", s"$root/t", df,
+        col("g"), g => s"grp_$g")
+      assert(out.map { case (g, f) => g -> f.recordCount } == Map("0" -> 3L, "1" -> 2L))
+      assert(spark.read.parquet(out("0").path).count() == 3L)
+    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+  }
 }

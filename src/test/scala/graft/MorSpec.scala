@@ -861,7 +861,6 @@ class MorSpec extends SparkSpec {
         s"manifest carries ${planned0.splitOffsets.size} split offsets; expected >= 2")
 
       IceLiteSource.filesOpened.reset()
-      IceLiteSource.planningFootersOpened.reset()
       // count(col), NOT count(*): the metadata-only count shortcut would
       // answer count(*) without planning any partition — this test is
       // about the ranged-split DATA path
@@ -870,14 +869,9 @@ class MorSpec extends SparkSpec {
       assert(n0 == total, "split read lost rows")
       val splits = IceLiteSource.filesOpened.sum()
       assert(splits >= 2, s"oversized file planned $splits partition(s); expected ranged splits")
-      // the 100 TB property: with manifest split_offsets, planning opened
-      // ZERO parquet footers on the driver (ranges resolve executor-side)
-      assert(IceLiteSource.planningFootersOpened.sum() == 0,
-        s"planning opened ${IceLiteSource.planningFootersOpened.sum()} footers " +
-          "despite recorded split_offsets")
 
-      // position deletes stay file-global across splits (the reader's
-      // range invariant is live here): delete every 10th order, re-read
+      // position deletes stay file-global across splits: delete every
+      // 10th order, re-read
       spark.sql(s"DELETE FROM $cat.graft.ord_split WHERE o_orderkey % 10 = 0")
       val want = ord.filter(!(col("o_orderkey") % 10 === 0))
       val got  = spark.sql(s"SELECT * FROM $cat.graft.ord_split")
@@ -890,23 +884,20 @@ class MorSpec extends SparkSpec {
         .head().getLong(0) == 0L)
 
       // FALLBACK path: an externally-written table whose manifests lack
-      // split_offsets still range-splits — via exactly one driver-side
-      // footer read — and reads identically
+      // split_offsets still range-splits — into fixed byte strides that
+      // need not start at row groups — and reads identically
       val loc2 = s"$wh/graft/ord_nooff"
       val w2   = new IcebergFormat.Writer(spark, loc2, ord.schema)
       w2.commit(Seq(
         IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc2, "big", ord)
           .copy(splitOffsets = Nil)))
       IceLiteSource.filesOpened.reset()
-      IceLiteSource.planningFootersOpened.reset()
       // count(col) again: the metadata-only count(*) shortcut would skip
       // the data path this fallback test exists to exercise
       val n2 = spark.sql(s"SELECT count(o_orderkey) AS n FROM $cat.graft.ord_nooff")
         .head().getLong(0)
       assert(n2 == total, "fallback split read lost rows")
       assert(IceLiteSource.filesOpened.sum() >= 2, "fallback path did not split")
-      assert(IceLiteSource.planningFootersOpened.sum() == 1,
-        s"fallback planning opened ${IceLiteSource.planningFootersOpened.sum()} footers; expected 1")
     } finally {
       hconf.unset("parquet.block.size")
       spark.conf.unset("graft.split.size")
@@ -942,7 +933,6 @@ class MorSpec extends SparkSpec {
       assert(big.sizeBytes.exists(_ >= 2 * 8192), "fixture: file too small to split")
       spark.conf.set("graft.split.size", "8192")
       IceLiteSource.filesOpened.reset()
-      IceLiteSource.planningFootersOpened.reset()
       val total = ord.count()
       // a DATA-reading query (count(*) answers from manifest metadata and
       // would open nothing)
@@ -951,8 +941,6 @@ class MorSpec extends SparkSpec {
       assert(n0 == total, "icelite split read lost rows")
       assert(IceLiteSource.filesOpened.sum() >= 3, // 1 small + >=2 ranged splits
         s"icelite oversized file did not split (${IceLiteSource.filesOpened.sum()} opens)")
-      assert(IceLiteSource.planningFootersOpened.sum() == 0,
-        "icelite planning opened parquet footers (offsets were recorded)")
       // MoR deletes stay split-invariant (_pos is file-global across ranges)
       spark.sql(s"DELETE FROM $cat.graft.ord_il WHERE o_orderkey % 10 = 0")
       val want = ord.filter(!(col("o_orderkey") % 10 === 0))

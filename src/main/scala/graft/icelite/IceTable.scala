@@ -504,31 +504,27 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     def trusted(c: String): Boolean =
       retiredW.get(c).forall(w => entrySnap.exists(_ > w))
 
-    def noNulls(c: String, stats: Map[String, ColRange]): Boolean =
-      fieldOf.get(c).exists(!_.nullable) || (partSet(c) && stats.contains(c))
+    // a partition column's recorded VALUE (a null partition records none)
+    def partValue(c: String, stats: Map[String, ColRange]): Boolean =
+      partSet(c) && stats.get(c).exists(_.min.isDefined)
 
-    def statsRecordable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-      case org.apache.spark.sql.types.StringType | org.apache.spark.sql.types.IntegerType |
-          org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.FloatType |
-          org.apache.spark.sql.types.DoubleType => true
-      case _ => false
-    }
+    def noNulls(c: String, stats: Map[String, ColRange]): Boolean =
+      fieldOf.get(c).exists(!_.nullable) || partValue(c, stats)
 
     /** A hive NULL-partition file: the partition value is uniformly NULL
-      * (stats absent for a col whose type WOULD have been recorded), so
-      * every comparison predicate on it is false for every row. */
+      * (no value recorded for a col whose type WOULD have one), so every
+      * comparison predicate on it is false for every row. */
     def isNullPartFile(c: String, stats: Map[String, ColRange]): Boolean =
-      partSet(c) && !stats.contains(c) &&
-        fieldOf.get(c).exists(f => statsRecordable(f.dataType))
+      partSet(c) && !partValue(c, stats) &&
+        fieldOf.get(c).exists(f => BoundOrder.rangeable(f.dataType))
 
     def range(c: String, stats: Map[String, ColRange]): Option[(String, String, (String, String) => Int)] =
       for {
         f  <- fieldOf.get(c)
         if trusted(c)
         r  <- stats.get(c)
-        lo <- r.min
-        hi <- r.max
-      } yield (lo, hi, cmpFor(f.dataType))
+        (lo, hi) <- BoundOrder.usable(f.dataType, r)
+      } yield (lo, hi, BoundOrder.of(f.dataType))
 
     def eval(f: Filter, stats: Map[String, ColRange]): Int = f match {
       case And(l, r) =>
@@ -555,7 +551,7 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
       // a NULL literal in a comparison is never true in SQL (unknown), so
       // it provably matches NO row of any file — and must not reach the
       // String.valueOf below, where it would become the string "null"
-      // (NumberFormatException inside cmpFor on numeric columns, and a
+      // (NumberFormatException in BoundOrder on numeric columns, and a
       // false match on a string column whose value is literally "null")
       case EqualTo(_, null) => NONE
       case GreaterThan(_, null) | GreaterThanOrEqual(_, null) => NONE
@@ -619,7 +615,7 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
       }
       case IsNotNull(c) =>
         if (isNullPartFile(c, stats)) NONE
-        else if (noNulls(c, Map.empty) || (partSet(c) && stats.contains(c))) ALL
+        else if (noNulls(c, stats)) ALL
         else MIXED
       case AlwaysTrue() => ALL
       case _ => MIXED
@@ -674,14 +670,6 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
   /** `data/snap-N-x` prefix of a snapshot-relative file path. */
   private def snapDirOf(relPath: String): String = relPath.split('/').take(2).mkString("/")
 
-  /** Columns whose min/max ranges the planner can use for file skipping. */
-  private def rangeable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-    case org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
-        org.apache.spark.sql.types.DoubleType | org.apache.spark.sql.types.FloatType |
-        org.apache.spark.sql.types.StringType => true
-    case _                                    => false
-  }
-
   /** Path string -> path relative to the table location, anchored at the
     * snapshot data dir (`dataRel`), robust to scheme prefixes and hive
     * partition subdirectories. */
@@ -727,7 +715,7 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
       // registered sort-order id the files were written under (None =
       // unsorted); rides each manifest entry as `sortOrderId`
       sortOrderId: Option[Int]): Seq[ManifestEntry] = {
-    val cols = schema.fields.filter(f => rangeable(f.dataType)).map(_.name)
+    val cols = schema.fields.filter(f => BoundOrder.rangeable(f.dataType)).map(_.name)
     val entries: Seq[ManifestEntry] =
       if (files.isEmpty) Seq.empty
       else {
@@ -971,6 +959,12 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
           .as("file"),
         statsMap.as("stats"),
         col("__rows").as("rows"))
+    // a float/double column holding a NaN records no bounds (Spark's max
+    // is then NaN, and no finite range bounds the column)
+    val nanCols = schema.fields.collect {
+      case f if f.dataType == org.apache.spark.sql.types.DoubleType ||
+          f.dataType == org.apache.spark.sql.types.FloatType => f.name
+    }.toSet
     // a zero-row file has no scan group: its entry keeps rows = 0,
     // not null (we know it is empty — the listing produced it)
     filesDF.join(statsDF, Seq("file"), "left")
@@ -979,7 +973,7 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
         val stats =
           if (r.isNullAt(r.fieldIndex("stats"))) None
           else Some(r.getMap[String, org.apache.spark.sql.Row](r.fieldIndex("stats"))
-            .map { case (k, v) =>
+            .collect { case (k, v) if !(nanCols(k) && v.getString(1) == "NaN") =>
               k -> ColRange(Option(v.getString(0)), Option(v.getString(1)))
             }.toMap)
         ManifestEntry(
@@ -1124,16 +1118,6 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     snap.manifests.flatMap(m =>
       readManifest(m).flatMap(e => e.stats.map(e.file -> _))).toMap
 
-  /** Type-aware value compare for stringified stats (numeric columns
-    * compare numerically — "9" > "10" lexically would corrupt pruning). */
-  private def cmpFor(dt: org.apache.spark.sql.types.DataType): (String, String) => Int =
-    dt match {
-      case org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
-          org.apache.spark.sql.types.DoubleType | org.apache.spark.sql.types.FloatType =>
-        (a, b) => BigDecimal(a).compare(BigDecimal(b))
-      case _ => (a, b) => a.compareTo(b)
-    }
-
   /** Fold a manifest's per-file stats into one per-column range — the
     * manifest-list summary. A column appears only when EVERY file in the
     * manifest recorded both ends for it (a gap would make skipping on the
@@ -1142,13 +1126,13 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
       schema: org.apache.spark.sql.types.StructType,
       entries: Seq[ManifestEntry]): Map[String, ColRange] = {
     if (entries.isEmpty) return Map.empty
-    schema.fields.filter(f => rangeable(f.dataType)).flatMap { f =>
-      val cmp = cmpFor(f.dataType)
-      val ranges = entries.map(_.stats.flatMap(_.get(f.name)))
-      if (ranges.exists(r => r.isEmpty || r.get.min.isEmpty || r.get.max.isEmpty)) None
+    schema.fields.filter(f => BoundOrder.rangeable(f.dataType)).flatMap { f =>
+      val cmp = BoundOrder.of(f.dataType)
+      val ranges = entries.map(_.stats.flatMap(_.get(f.name)).flatMap(BoundOrder.usable(f.dataType, _)))
+      if (ranges.exists(_.isEmpty)) None
       else {
-        val mins = ranges.map(_.get.min.get)
-        val maxs = ranges.map(_.get.max.get)
+        val mins = ranges.map(_.get._1)
+        val maxs = ranges.map(_.get._2)
         Some(f.name -> ColRange(
           Some(mins.reduce((a, b) => if (cmp(a, b) <= 0) a else b)),
           Some(maxs.reduce((a, b) => if (cmp(a, b) >= 0) a else b))))
@@ -1716,9 +1700,9 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
       bounds: Map[String, (Option[String], Option[String])]): Seq[String] = {
     val md = metadata
     if (bounds.isEmpty) return filesOf(snap)
-    val cmps = bounds.keys.map { c =>
-      c -> cmpFor(md.schema.fields.find(_.name == c).map(_.dataType)
-        .getOrElse(org.apache.spark.sql.types.StringType))
+    val types = bounds.keys.map { c =>
+      c -> md.schema.fields.find(_.name == c).map(_.dataType)
+        .getOrElse(org.apache.spark.sql.types.StringType)
     }.toMap
     // stats under a RETIRED name may belong to a dropped/renamed-away
     // column: a same-named successor must never prune by them — UNLESS
@@ -1729,11 +1713,12 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     def hit(stats: Option[Map[String, ColRange]], fileSnap: Option[Long]): Boolean =
       bounds.forall { case (c, (lo, hi)) =>
         val trusted = retired.get(c).forall(w => fileSnap.exists(_ > w))
-        stats.flatMap(s => if (trusted) s.get(c) else None) match {
-          case Some(ColRange(Some(mn), Some(mx))) =>
-            val cmp = cmps(c)
+        stats.flatMap(s => if (trusted) s.get(c) else None)
+          .flatMap(BoundOrder.usable(types(c), _)) match {
+          case Some((mn, mx)) =>
+            val cmp = BoundOrder.of(types(c))
             lo.forall(l => cmp(mx, l) >= 0) && hi.forall(h => cmp(mn, h) <= 0)
-          case _ => true // no (trustworthy) recorded range: can't skip
+          case None => true // no (trustworthy) recorded range: can't skip
         }
       }
     snap.manifests.zipWithIndex.flatMap { case (m, i) =>
@@ -1808,7 +1793,7 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     // spec-compliant planner): one map-side pass, collected at O(#files) —
     // the same planning-sized driver data Iceberg itself holds when
     // writing manifests
-    val statCols = md.schema.fields.filter(f => rangeable(f.dataType)).map(_.name)
+    val statCols = md.schema.fields.filter(f => BoundOrder.rangeable(f.dataType)).map(_.name)
     val aggs = count(lit(1)).as("n") +: statCols.flatMap(c =>
       Seq(min(col(c)).cast("string").as(s"min_$c"), max(col(c)).cast("string").as(s"max_$c")))
     val statIdOf = md.fields.map(fi => fi.name -> fi.id).toMap
@@ -2220,7 +2205,9 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
         else {
           val ranges = newDelEntries.map(_.stats.flatMap(_.get("file_path")))
           def covered(f: String): Boolean = ranges.exists {
-            case Some(r) => r.min.forall(_.compareTo(f) <= 0) && r.max.forall(f.compareTo(_) <= 0)
+            case Some(r) =>
+              r.min.forall(BoundOrder.compareStrings(_, f) <= 0) &&
+                r.max.forall(BoundOrder.compareStrings(f, _) <= 0)
             case None    => true // statless delete file: conservative keep
           }
           val cands    = parent.toSeq.flatMap(filesOf).filter(covered)

@@ -1460,6 +1460,12 @@ object IcebergFormat {
     p.files.filter(fileCanMatch(p, _, colName, lower, upper)).map(_.path.toString)
   }
 
+  private def nanBound(v: Any): Boolean = v match {
+    case d: Double => d.isNaN
+    case f: Float  => f.isNaN
+    case _         => false
+  }
+
   /** Can `f` hold rows with `colName` in [lower, upper]? The single
     * per-file pruning predicate behind both [[planFiles]] (library scans)
     * and the standard-format V2 scan's `SupportsPushDownFilters`
@@ -1494,7 +1500,7 @@ object IcebergFormat {
           case (Some(x), Some(y)) => java.lang.Long.compare(x, y)
           case _                  => 0
         }
-      case _                      => a.compareTo(b)
+      case _                      => BoundOrder.compareStrings(a, b)
     }
     // identity partition value first: for a partitioned table it prunes
     // exactly (the file holds ONLY rows with that value), even when the
@@ -1520,7 +1526,7 @@ object IcebergFormat {
                 case None => true
                 case Some(t) =>
                   val c = (pval, t) match {
-                    case (p: String, tt: String) => p.compareTo(tt)
+                    case (p: String, tt: String) => BoundOrder.compareStrings(p, tt)
                     case (p, tt)                 => java.lang.Long.compare(num(p), num(tt))
                   }
                   if (isLower) c >= 0 else c <= 0
@@ -1535,7 +1541,8 @@ object IcebergFormat {
           case _ => f.bounds.get(fieldId) match {
             case Some((lo, hi)) =>
               (decodeBound(dt, lo), decodeBound(dt, hi)) match {
-                case (Some(mn), Some(mx)) =>
+                // a NaN bound (older writers recorded them) bounds nothing
+                case (Some(mn), Some(mx)) if !nanBound(mn) && !nanBound(mx) =>
                   lower.forall(l => cmp(mx.toString, l) >= 0) &&
                     upper.forall(u => cmp(mn.toString, u) <= 0)
                 case _ => true
@@ -1634,12 +1641,12 @@ object IcebergFormat {
     * defeats manifest pruning at exactly the scale it targets. Lower bound
     * = 16-code-point prefix (a prefix is ≤ the value in any consistent
     * order). Upper bound = the prefix with its last incrementable code
-    * point bumped — strictly greater than the value. Only code points
-    * below the surrogate block (U+D7FF) are bumped, so the result compares
-    * identically in UTF-16 (the pruner's String.compareTo) and code-point
-    * (the spec's UTF-8 byte) order; when no position can bump (wildly
-    * unlikely outside adversarial input) the upper bound is dropped
-    * entirely, which every pruner treats as unbounded — conservative. */
+    * point bumped — strictly greater than the value in the spec's UTF-8
+    * byte order, which every pruner compares in ([[BoundOrder]]). Only code
+    * points below the surrogate block (U+D7FF) are bumped; when no
+    * position can bump (wildly unlikely outside adversarial input) the
+    * upper bound is dropped entirely, which every pruner treats as
+    * unbounded — conservative. */
   private[graft] val boundTruncWidth = 16
 
   private[graft] def truncateLowerBound(s: String, w: Int = boundTruncWidth): String =
@@ -2422,7 +2429,7 @@ object IcebergFormat {
         java.lang.Double.compare(a.asInstanceOf[Number].doubleValue, b.asInstanceOf[Number].doubleValue)
       case "boolean" =>
         java.lang.Boolean.compare(a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-      case _ => a.toString.compareTo(b.toString)
+      case _ => BoundOrder.compareStrings(a.toString, b.toString)
     }
 
     /** Single-value serialization of a partition value (spec Appendix D —

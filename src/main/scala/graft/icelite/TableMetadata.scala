@@ -1,6 +1,6 @@
 package graft.icelite
 
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.jackson.Serialization
@@ -31,6 +31,51 @@ final case class RefInfo(snapshot_id: Long, ref_type: String) // "branch" | "tag
 /** Per-file, per-column value range (stringified; parsed per schema type).
   * The planner skips files whose range can't satisfy a predicate. */
 final case class ColRange(min: Option[String], max: Option[String])
+
+/** The one order stats bounds are recorded and compared in, which is
+  * Spark's own: strings by their UTF-8 bytes (unsigned), numbers by value.
+  * Every bound-compare site and the connector's inline min/max use it, so
+  * a bound never disagrees with the comparison Spark runs on the rows. */
+object BoundOrder {
+  private def numeric(dt: DataType): Boolean = dt match {
+    case IntegerType | LongType | FloatType | DoubleType => true
+    case _                                               => false
+  }
+
+  /** Columns whose min/max every writer records and pruners compare. */
+  def rangeable(dt: DataType): Boolean = numeric(dt) || dt == StringType
+
+  /** Compare for stringified values and bounds of a column of type `dt`
+    * (numbers by value — "9" > "10" lexically would corrupt pruning). */
+  def of(dt: DataType): (String, String) => Int =
+    if (numeric(dt)) compareNumbers else compareStrings
+
+  /** A recorded range a pruner may use: both ends present and, on a
+    * numeric column, finite numbers. Anything else bounds nothing. */
+  def usable(dt: DataType, r: ColRange): Option[(String, String)] =
+    for {
+      lo <- r.min
+      hi <- r.max
+      if !numeric(dt) || Seq(lo, hi).forall(finite(_).isDefined)
+    } yield (lo, hi)
+
+  def compareStrings(a: String, b: String): Int =
+    org.apache.spark.unsafe.types.UTF8String.fromString(a)
+      .binaryCompare(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+
+  /** Numbers by value; when a side is not finite (a NaN or infinite
+    * literal) Spark's double order decides, NaN above every number. */
+  def compareNumbers(a: String, b: String): Int = (finite(a), finite(b)) match {
+    case (Some(x), Some(y)) => x.compare(y)
+    case _                  => java.lang.Double.compare(a.toDouble, b.toDouble)
+  }
+
+  /** `s` as a finite number, or None. A recorded numeric bound that is not
+    * finite (the `"NaN"` older writers put in manifests) bounds nothing,
+    * so pruners treat it as absent. */
+  def finite(s: String): Option[BigDecimal] =
+    try Some(BigDecimal(s)) catch { case _: NumberFormatException => None }
+}
 
 /** One field of a sort order (Iceberg spec §Sort Orders): the source
   * column's field id, a transform (`identity` for plain lexicographic

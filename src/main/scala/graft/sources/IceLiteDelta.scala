@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.icelite.{IceTable, ManifestEntry, Snapshot}
+import graft.icelite.{IceTable, Snapshot}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -133,23 +133,23 @@ final class IceLiteDeltaWrite(
       Expressions.identity(c), SortDirection.ASCENDING, NullOrdering.NULLS_FIRST)).toArray
 
   override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
-    private val conf =
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration)
     private val tag       = java.util.UUID.randomUUID().toString.take(8)
     private val deleteRel = s"data/deletes-$tag"
     private val dataRel   = s"data/snap-d-$tag"
 
+    // inserts exist only for UPDATE/MERGE: a DELETE never prepares (nor
+    // checks the schema of) the data files it cannot write
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-      new IceLiteDeltaWriterFactory(conf, location, deleteRel, dataRel, schema, partCols)
+      new IceLiteDeltaWriterFactory(IceLiteWrite.files(IceTable.PositionDeleteSchema),
+        Option.when(command != RowLevelOperation.Command.DELETE)(IceLiteWrite.files(
+          StructType(schema.fields.filterNot(f => partCols.contains(f.name))))),
+        location, deleteRel, dataRel, schema, partCols)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val msgs = messages.toSeq.map(_.asInstanceOf[IceLiteDeltaMessage])
-      def entries(ws: Seq[IceLiteWriteMessage]): Seq[ManifestEntry] =
-        ws.map(w => ManifestEntry(w.relPath, Some(w.stats), Some(w.rows),
-        Some(w.sizeBytes).filter(_ > 0), Some(w.splitOffsets.toList).filter(_.nonEmpty)))
-          .filter(_.rows.exists(_ > 0L)) // empty task outputs add no files
-      val dels = entries(msgs.flatMap(_.deleteFile))
-      val ins  = entries(msgs.flatMap(_.dataFiles))
+      val dels = IceLiteWrite.entries(msgs.flatMap(_.deleteFile),
+        IceTable.PositionDeleteSchema, Set("file_path"))
+      val ins  = IceLiteWrite.entries(msgs.flatMap(_.dataFiles), schema, partCols.toSet)
       if (dels.isEmpty && ins.isEmpty) return // nothing matched: no snapshot
       val t = IceTable.load(SparkSession.active, location)
       t.commitRowDeltas(dels, ins, operation)
@@ -157,7 +157,8 @@ final class IceLiteDeltaWrite(
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(location).getFileSystem(conf.value)
+      val fs = new Path(location)
+        .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
       fs.delete(new Path(location, deleteRel), true)
       fs.delete(new Path(location, dataRel), true)
     }
@@ -165,12 +166,13 @@ final class IceLiteDeltaWrite(
 }
 
 final case class IceLiteDeltaMessage(
-    deleteFile: Option[IceLiteWriteMessage],
-    dataFiles: Seq[IceLiteWriteMessage])
+    deleteFile: Option[WrittenFile],
+    dataFiles: Seq[WrittenFile])
     extends WriterCommitMessage
 
 final class IceLiteDeltaWriterFactory(
-    conf: SerializableHadoopConf,
+    deletes: ParquetFiles,
+    inserts: Option[ParquetFiles],
     location: String,
     deleteRel: String,
     dataRel: String,
@@ -179,13 +181,13 @@ final class IceLiteDeltaWriterFactory(
     extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new IceLiteDeltaWriter(conf, location, deleteRel, dataRel, schema, partCols,
+    new IceLiteDeltaWriter(deletes, inserts, location, deleteRel, dataRel, schema, partCols,
       partitionId, taskId)
 }
 
 /** Executor-side delta writer. `delete` receives the projected row ID
   * `(_file, _pos)` and STREAMS it into a position-delete parquet via the
-  * same stats-collecting [[IceLiteDataWriter]] data files use — the
+  * same stats-collecting [[ParquetDataWriter]] data files use — the
   * `file_path` min/max it records per delete file is what lets readers
   * range-prune which delete files to open. No buffering: the delta plan is
   * a narrow filter+project over the scan (rows arrive file-clustered,
@@ -193,7 +195,8 @@ final class IceLiteDeltaWriterFactory(
   * output stays correct — readers apply deletes as a set. Inserts stage
   * ordinary data files. */
 final class IceLiteDeltaWriter(
-    conf: SerializableHadoopConf,
+    deletes: ParquetFiles,
+    inserts: Option[ParquetFiles],
     location: String,
     deleteRel: String,
     dataRel: String,
@@ -203,7 +206,7 @@ final class IceLiteDeltaWriter(
     taskId: Long)
     extends DeltaWriter[InternalRow] {
 
-  private var delWriter: IceLiteDataWriter = _
+  private var delWriter: ParquetDataWriter = _
   // inserts on a hive layout stage through the SAME rolling partitioned
   // writer SQL INSERT uses (one `pc=v/` file per value per task, min=max
   // partition stats); flat tables keep the single-file writer
@@ -212,8 +215,7 @@ final class IceLiteDeltaWriter(
 
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     if (delWriter == null)
-      delWriter = new IceLiteDataWriter(conf, location, deleteRel,
-        IceTable.PositionDeleteSchema, partitionId, taskId)
+      delWriter = deletes.writer(location, ParquetFiles.partFile(deleteRel, partitionId, taskId))
     val pos = id.getLong(1)
     require(pos >= 0 && pos <= Int.MaxValue.toLong,
       s"row position $pos outside the position-delete range")
@@ -224,13 +226,16 @@ final class IceLiteDeltaWriter(
   }
 
   override def insert(row: InternalRow): Unit = {
-    if (insWriter == null)
+    if (insWriter == null) {
+      val files = inserts.getOrElse(
+        throw new IllegalStateException("icelite delta DELETE received an insert row"))
       insWriter =
         if (partCols.isEmpty)
-          new IceLiteDataWriter(conf, location, dataRel, schema, partitionId, taskId)
+          files.writer(location, ParquetFiles.partFile(dataRel, partitionId, taskId))
         else
-          new IceLitePartitionedDataWriter(conf, location, dataRel, schema, partCols,
+          new IceLitePartitionedDataWriter(files, location, dataRel, schema, partCols,
             partitionId, taskId)
+    }
     insWriter.write(row)
   }
 
@@ -242,10 +247,10 @@ final class IceLiteDeltaWriter(
   override def reinsert(metadata: InternalRow, row: InternalRow): Unit = insert(row)
 
   override def commit(): WriterCommitMessage = IceLiteDeltaMessage(
-    Option(delWriter).map(_.commit().asInstanceOf[IceLiteWriteMessage]),
+    Option(delWriter).map(_.commit()),
     Option(insWriter).map(_.commit()).toSeq.flatMap {
       case p: IceLitePartitionedWriteMessage => p.entries
-      case m: IceLiteWriteMessage            => Seq(m)
+      case m: WrittenFile                    => Seq(m)
     })
 
   override def abort(): Unit = {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.icelite.{IceTable, ManifestEntry, Snapshot}
+import graft.icelite.{IceTable, Snapshot}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -104,26 +104,22 @@ final class IceLiteReplaceDataWrite(
     extends Write {
 
   override def toBatch: BatchWrite = new BatchWrite {
-    private val conf =
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration)
     private val dataRel = s"data/snap-rl-${java.util.UUID.randomUUID().toString.take(8)}"
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      new IceLiteRowLevelWriterFactory(conf, location, dataRel, schema)
+      new IceLiteRowLevelWriterFactory(IceLiteWrite.files(schema), location, dataRel)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val entries = messages.toSeq.map { m =>
-        val w = m.asInstanceOf[IceLiteWriteMessage]
-        ManifestEntry(w.relPath, Some(w.stats), Some(w.rows),
-        Some(w.sizeBytes).filter(_ > 0), Some(w.splitOffsets.toList).filter(_.nonEmpty))
-      }.filter(_.rows.exists(_ > 0L)) // empty task outputs add no files
+      val entries = IceLiteWrite.entries(
+        messages.toSeq.map(_.asInstanceOf[WrittenFile]), schema, Set.empty)
       val t = IceTable.load(SparkSession.active, location)
       t.commitReplaceScanned(scannedFiles(), entries, operation)
       onCommit.foreach(_(t))
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new org.apache.hadoop.fs.Path(location).getFileSystem(conf.value)
+      val fs = new org.apache.hadoop.fs.Path(location)
+        .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(location, dataRel), true)
     }
   }
@@ -138,20 +134,16 @@ final class IceLiteReplaceDataWrite(
   * (arity+1)-field row is (op, data...) — strip the op via a reusable
   * ProjectingInternalRow and drop rows marked DELETE; an arity-field row
   * (the DELETE rewrite's remaining-rows plan) passes straight through. */
-final class IceLiteRowLevelWriterFactory(
-    conf: SerializableHadoopConf,
-    location: String,
-    dataRel: String,
-    schema: StructType)
+final class IceLiteRowLevelWriterFactory(files: ParquetFiles, location: String, dataRel: String)
     extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
       private val inner =
-        new IceLiteDataWriter(conf, location, dataRel, schema, partitionId, taskId)
-      private val arity = schema.fields.length
+        files.writer(location, ParquetFiles.partFile(dataRel, partitionId, taskId))
+      private val arity = files.schema.fields.length
       private val proj = new org.apache.spark.sql.catalyst.ProjectingInternalRow(
-        schema, (1 to arity).toIndexedSeq)
+        files.schema, (1 to arity).toIndexedSeq)
 
       override def write(row: InternalRow): Unit =
         if (row.numFields == arity + 1) {

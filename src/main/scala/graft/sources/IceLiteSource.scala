@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.icelite.{FsCatalog, IceTable, IcebergFormat, Snapshot}
+import graft.icelite.{BoundOrder, FsCatalog, IceTable, IcebergFormat, Snapshot}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.paths.SparkPath
@@ -404,11 +404,6 @@ final class IceLiteScan(
   private val md       = ice.metadata
   private val partCols = md.partitionCols
 
-  private def numericPart(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | DoubleType | FloatType => true
-    case _                                               => false
-  }
-
   /** Partition-column bounds are applied on the k=v path values (exact,
     * directory-granular) — they never appear in file stats because hive
     * layout strips them from the data files. */
@@ -420,9 +415,7 @@ final class IceLiteScan(
         val v  = IceLiteScan.unescapePath(raw)
         if (v == IceLiteScan.HiveNullPart) false // bounded col: null can't match a comparison
         else {
-          val cmp: (String, String) => Int =
-            if (numericPart(dt)) (a, b) => BigDecimal(a).compare(BigDecimal(b))
-            else (a, b) => a.compareTo(b)
+          val cmp = BoundOrder.of(dt)
           lo.forall(l => cmp(v, l) >= 0) && hi.forall(h => cmp(v, h) <= 0)
         }
     }
@@ -1053,7 +1046,8 @@ final class IceLitePartitionReader(f: IceLiteReaderFactory, partition: IceLitePa
       d.dv match {
         case Some((_, _, ref)) => strip(ref) == relN
         case None =>
-          d.minFp.forall(_.compareTo(rel) <= 0) && d.maxFp.forall(rel.compareTo(_) <= 0)
+          d.minFp.forall(BoundOrder.compareStrings(_, rel) <= 0) &&
+            d.maxFp.forall(BoundOrder.compareStrings(rel, _) <= 0)
       }
     }
     if (covering.isEmpty) return null

@@ -3,12 +3,6 @@ package graft.sources
 import graft.icelite.{ColRange, IceTable, ManifestEntry}
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
@@ -18,10 +12,11 @@ import org.apache.spark.sql.types._
   * .option("location", dir).mode("append"|"overwrite").save()`.
   *
   * Executors write parquet files straight into a staging snapshot dir
-  * under the table location via parquet-mr, collecting per-file min/max +
+  * under the table location with Spark's own parquet writer under the
+  * session codec ([[ParquetDataWriter]]), collecting per-file min/max +
   * row count AS THEY WRITE (one pass — no post-hoc stats scan); the
   * driver's commit is then pure metadata: one manifest of the writers'
-  * entries plus the same rename-as-CAS rebase-and-retry snapshot commit
+  * entries ([[IceLiteWrite.entries]]) plus the same CAS snapshot commit
   * appends use. At 100 TB this is the right shape: data volume moves only
   * executor-side, the driver handles O(files) metadata, and a concurrent
   * library-path append cannot be clobbered (shared CAS protocol).
@@ -105,9 +100,7 @@ final class IceLiteWrite(
       Expressions.identity(c), SortDirection.ASCENDING, NullOrdering.NULLS_FIRST)).toArray
 
   override def toBatch: BatchWrite =
-    new IceLiteBatchWrite(location, schema, partCols, replace, dynamic,
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration),
-      onCommit, byFilter)
+    new IceLiteBatchWrite(location, schema, partCols, replace, dynamic, onCommit, byFilter)
 
   /** `df.writeStream.format("icelite")`: every epoch commits one snapshot
     * through the CAS protocol with `(queryId, epochId)` as the commit
@@ -124,9 +117,7 @@ final class IceLiteWrite(
     require(partCols.isEmpty,
       "icelite streaming write supports unpartitioned tables; " +
         "use foreachBatch + the batch write for hive layouts")
-    new IceLiteStreamingWrite(location, schema, queryId,
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration),
-      onCommit)
+    new IceLiteStreamingWrite(location, schema, queryId, onCommit)
   }
 }
 
@@ -134,31 +125,27 @@ final class IceLiteStreamingWrite(
     location: String,
     schema: StructType,
     queryId: String,
-    conf: SerializableHadoopConf,
     onCommit: Option[IceTable => Unit] = None)
     extends streaming.StreamingWrite {
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): streaming.StreamingDataWriterFactory =
-    IceLiteStreamingWriterFactory(conf, location, schema)
+    IceLiteStreamingWriterFactory(IceLiteWrite.files(schema), location)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     // zero-row task outputs add no files: a stats-less empty file would be
     // unprunable forever (no recorded range = conservative keep)
-    val entries = messages.toSeq.map { m =>
-      val w = m.asInstanceOf[IceLiteWriteMessage]
-      ManifestEntry(w.relPath, Some(w.stats), Some(w.rows),
-        Some(w.sizeBytes).filter(_ > 0), Some(w.splitOffsets.toList).filter(_.nonEmpty))
-    }.filter(_.rows.exists(_ > 0L))
+    val entries = IceLiteWrite.entries(
+      messages.toSeq.map(_.asInstanceOf[WrittenFile]), schema, Set.empty)
     val t = IceTable.load(SparkSession.active, location)
     t.commitStagedEntries(entries, replace = false, token = Some(s"v2-$queryId-epoch-$epochId"))
     onCommit.foreach(_(t))
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(location).getFileSystem(conf.value)
+    val fs = new Path(location).getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
     messages.foreach {
-      case m: IceLiteWriteMessage => fs.delete(new Path(location, m.relPath), false)
+      case m: WrittenFile => fs.delete(new Path(location, m.relPath), false)
       case _                      =>
     }
   }
@@ -170,7 +157,6 @@ final class IceLiteBatchWrite(
     partCols: Seq[String],
     replace: Boolean,
     dynamic: Boolean,
-    conf: SerializableHadoopConf,
     onCommit: Option[IceTable => Unit] = None,
     byFilter: Option[Array[org.apache.spark.sql.sources.Filter]] = None)
     extends BatchWrite {
@@ -179,8 +165,10 @@ final class IceLiteBatchWrite(
   private val dataRel = s"data/snap-w-${java.util.UUID.randomUUID().toString.take(8)}"
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    if (partCols.isEmpty) new IceLiteWriterFactory(conf, location, dataRel, schema)
-    else new IceLitePartitionedWriterFactory(conf, location, dataRel, schema, partCols)
+    if (partCols.isEmpty) new ParquetDataWriterFactory(IceLiteWrite.files(schema), location, dataRel)
+    else new IceLitePartitionedWriterFactory(
+      IceLiteWrite.files(StructType(schema.fields.filterNot(f => partCols.contains(f.name)))),
+      location, dataRel, schema, partCols)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // write-audit-publish (Iceberg's `spark.wap.branch` idiom): with
@@ -193,12 +181,10 @@ final class IceLiteBatchWrite(
     require(wap.isEmpty || (byFilter.isEmpty && !dynamic && !replace),
       "graft.wap.branch supports plain INSERT INTO appends only")
     // zero-row task outputs add no files (see streaming commit note)
-    val entries = messages.toSeq.flatMap {
+    val entries = IceLiteWrite.entries(messages.toSeq.flatMap {
       case p: IceLitePartitionedWriteMessage => p.entries
-      case m: IceLiteWriteMessage            => Seq(m)
-    }.map(w => ManifestEntry(w.relPath, Some(w.stats), Some(w.rows),
-        Some(w.sizeBytes).filter(_ > 0), Some(w.splitOffsets.toList).filter(_.nonEmpty)))
-      .filter(_.rows.exists(_ > 0L))
+      case m: WrittenFile                    => Seq(m)
+    }, schema, partCols.toSet)
     val t = IceTable.load(SparkSession.active, location)
     if (byFilter.isDefined) {
       // filter-based overwrite: atomically swap the provably-matching
@@ -222,33 +208,25 @@ final class IceLiteBatchWrite(
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(location).getFileSystem(conf.value)
+    val fs = new Path(location).getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
     fs.delete(new Path(location, dataRel), true)
   }
 }
 
-final case class IceLiteWriteMessage(
-    relPath: String,
-    rows: Long,
-    stats: Map[String, ColRange],
-    sizeBytes: Long = 0L, // file length, read executor-side at close
-    splitOffsets: Seq[Long] = Nil) // row-group starts (zero-IO ranged splits)
-    extends WriterCommitMessage
-
-/** One partitioned task's output: one file entry per partition value the
-  * task held (clustering makes that set disjoint across tasks). */
-final case class IceLitePartitionedWriteMessage(entries: Seq[IceLiteWriteMessage])
+/** One partitioned task's output: one file per partition value the task
+  * held (clustering makes that set disjoint across tasks). */
+final case class IceLitePartitionedWriteMessage(entries: Seq[WrittenFile])
     extends WriterCommitMessage
 
 final case class IceLitePartitionedWriterFactory(
-    conf: SerializableHadoopConf,
+    files: ParquetFiles,
     location: String,
     dataRel: String,
     schema: StructType,
     partCols: Seq[String])
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new IceLitePartitionedDataWriter(conf, location, dataRel, schema, partCols,
+    new IceLitePartitionedDataWriter(files, location, dataRel, schema, partCols,
       partitionId, taskId)
 }
 
@@ -257,7 +235,7 @@ final case class IceLitePartitionedWriterFactory(
   * writer keeps exactly ONE parquet file open, rolling to a new
   * `pc=v/...` file when the partition key changes. Each rolled file's
   * entry carries (a) the data-column min/max collected inline by the
-  * wrapped [[IceLiteDataWriter]] and (b) min=max=value ranges for the
+  * wrapped [[ParquetDataWriter]] and (b) min=max=value ranges for the
   * partition columns — the same per-file stats the library's hive-layout
   * manifest pass records, so partition-predicate file pruning, DPP,
   * storage-partitioned joins and metadata COUNT(*) behave identically
@@ -265,7 +243,7 @@ final case class IceLitePartitionedWriterFactory(
   * escaping; data files do not repeat the columns — the read path
   * restores them, DataSourceV2Spec's round-trip contract). */
 final class IceLitePartitionedDataWriter(
-    conf: SerializableHadoopConf,
+    files: ParquetFiles,
     location: String,
     dataRel: String,
     schema: StructType,
@@ -277,12 +255,11 @@ final class IceLitePartitionedDataWriter(
   private val partIdx: IndexedSeq[Int] = partCols.map(schema.fieldIndex).toIndexedSeq
   private val dataIdx: IndexedSeq[Int] =
     schema.fields.indices.filterNot(partIdx.contains).toIndexedSeq
-  private val dataSchema = StructType(dataIdx.map(schema.fields))
-  private val proj = new org.apache.spark.sql.catalyst.ProjectingInternalRow(dataSchema, dataIdx)
+  private val proj = new org.apache.spark.sql.catalyst.ProjectingInternalRow(files.schema, dataIdx)
 
   private var curKey: Seq[String] = null // cast-to-string partition values (null = SQL NULL)
-  private var cur: IceLiteDataWriter = _
-  private val done = scala.collection.mutable.ListBuffer.empty[IceLiteWriteMessage]
+  private var cur: ParquetDataWriter = _
+  private val done = scala.collection.mutable.ListBuffer.empty[WrittenFile]
 
   /** Partition value -> its `CAST(v AS STRING)` form (what the library's
     * stats pass records and the path carries pre-escaping). */
@@ -302,13 +279,12 @@ final class IceLitePartitionedDataWriter(
   }
 
   private def roll(): Unit = if (cur != null) {
-    val m = cur.commit().asInstanceOf[IceLiteWriteMessage]
-    // min=max=value partition-column ranges (null value -> omitted:
-    // conservative keep, matching the library's null-group stats)
-    val partStats = partCols.indices.flatMap { i =>
-      Option(curKey(i)).map(v => partCols(i) -> ColRange(Some(v), Some(v)))
-    }.toMap
-    done += m.copy(stats = m.stats ++ partStats)
+    val m = cur.commit()
+    // min=max=value partition-column ranges; a null value records no
+    // value, like the library's null-group stats
+    done += m.copy(bounds = m.bounds ++ partCols.indices.map { i =>
+      partCols(i) -> Option(curKey(i)).map(v => (v, v))
+    })
     cur = null
   }
 
@@ -323,8 +299,8 @@ final class IceLitePartitionedDataWriter(
           .getOrElse(IceLiteScan.HiveNullPart)
         s"${partCols(i)}=$seg"
       }
-      cur = new IceLiteDataWriter(conf, location,
-        s"$dataRel/${segs.mkString("/")}", dataSchema, partitionId, taskId)
+      cur = files.writer(location,
+        ParquetFiles.partFile(s"$dataRel/${segs.mkString("/")}", partitionId, taskId))
     }
     proj.project(row)
     cur.write(proj)
@@ -337,224 +313,62 @@ final class IceLitePartitionedDataWriter(
 
   override def abort(): Unit = {
     if (cur != null) cur.abort()
-    val fs = new Path(location).getFileSystem(conf.value)
+    val fs = new Path(location).getFileSystem(files.conf.value)
     done.foreach(m => fs.delete(new Path(location, m.relPath), false))
   }
 
   override def close(): Unit = if (cur != null) cur.close()
 }
 
-final case class IceLiteStreamingWriterFactory(
-    conf: SerializableHadoopConf,
-    location: String,
-    schema: StructType)
+final case class IceLiteStreamingWriterFactory(files: ParquetFiles, location: String)
     extends streaming.StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
-    new IceLiteDataWriter(conf, location,
-      s"data/snap-e$epochId-${f"$partitionId%05d"}", schema, partitionId, taskId)
+    files.writer(location,
+      ParquetFiles.partFile(f"data/snap-e$epochId-$partitionId%05d", partitionId, taskId))
 }
 
-final class IceLiteWriterFactory(
-    conf: SerializableHadoopConf,
-    location: String,
-    dataRel: String,
-    schema: StructType)
-    extends DataWriterFactory {
+object IceLiteWrite {
 
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new IceLiteDataWriter(conf, location, dataRel, schema, partitionId, taskId)
-}
-
-/** Row-at-a-time parquet writer (parquet-mr Group API) with inline stats
-  * collection. The min/max strings use the same representations the
-  * library path's Spark `cast(string)` stats produce (Long/Int toString,
-  * Java Double/Float toString, raw strings compared with String.compareTo
-  * — the exact comparator cmpFor prunes with), so files written here
-  * participate in file skipping identically. */
-final class IceLiteDataWriter(
-    conf: SerializableHadoopConf,
-    location: String,
-    dataRel: String,
-    schema: StructType,
-    partitionId: Int,
-    taskId: Long)
-    extends DataWriter[InternalRow] {
-
-  private val relPath = f"$dataRel/part-$partitionId%05d-$taskId.parquet"
-  private val path    = new Path(location, relPath)
-  private val msgType = IceLiteWriteSchema.messageTypeFor(schema)
-  private val factory = new SimpleGroupFactory(msgType)
-  private val writer  = ExampleParquetWriter
-    .builder(HadoopOutputFile.fromPath(path, conf.value))
-    .withType(msgType)
-    .withConf(conf.value)
-    // honor the standard row-group size knob (the builder ignores the
-    // hadoop conf, unlike ParquetOutputFormat) — row-group granularity is
-    // what ranged splits parallelize over
-    .withRowGroupSize(conf.value.getLong("parquet.block.size", 128L * 1024 * 1024))
-    .build()
-
-  private var rows = 0L
-  // per-rangeable-column running (min, max); strings via compareTo,
-  // integers as Long, floats as Double — matching cmpFor's semantics
-  private val statCols: Array[(Int, DataType)] = schema.fields.zipWithIndex.collect {
-    case (f, i) if IceLiteWriteSchema.rangeable(f.dataType) => (i, f.dataType)
-  }
-  private val mins = new Array[Any](statCols.length)
-  private val maxs = new Array[Any](statCols.length)
-
-  override def write(row: InternalRow): Unit = {
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.fields.length) {
-      if (!row.isNullAt(i)) {
-        val name = schema.fields(i).name
-        schema.fields(i).dataType match {
-          case StringType  => g.append(name, Binary.fromString(row.getUTF8String(i).toString))
-          case IntegerType | DateType => g.append(name, row.getInt(i))
-          case LongType | TimestampType | TimestampNTZType => g.append(name, row.getLong(i))
-          case FloatType   => g.append(name, row.getFloat(i))
-          case DoubleType  => g.append(name, row.getDouble(i))
-          case BooleanType => g.append(name, row.getBoolean(i))
-          case other => throw new UnsupportedOperationException(
-            s"icelite V2 write: unsupported type $other for column $name")
-        }
-      }
-      i += 1
-    }
-    var s = 0
-    while (s < statCols.length) {
-      val (idx, dt) = statCols(s)
-      if (!row.isNullAt(idx)) {
-        val v: Any = dt match {
-          case StringType            => row.getUTF8String(idx).toString
-          case IntegerType           => row.getInt(idx).toLong
-          case LongType              => row.getLong(idx)
-          case FloatType             => row.getFloat(idx).toDouble
-          case DoubleType            => row.getDouble(idx)
-          case _                     => null
-        }
-        if (v != null) {
-          if (mins(s) == null || lt(v, mins(s))) mins(s) = v
-          if (maxs(s) == null || lt(maxs(s), v)) maxs(s) = v
-        }
-      }
-      s += 1
-    }
-    writer.write(g)
-    rows += 1L
+  /** The files of an IceLite write of `schema`: the flat primitive
+    * surface, checked here on the driver, carrying the field ids the
+    * schema is stamped with ([[graft.icelite.TableMetadata.stampedSchema]]),
+    * none when it carries none. */
+  def files(schema: StructType): ParquetFiles = {
+    schema.fields.foreach(f => f.dataType match {
+      case StringType | IntegerType | LongType | FloatType | DoubleType | BooleanType |
+          DateType | TimestampType | TimestampNTZType =>
+      case other => throw new UnsupportedOperationException(
+        s"icelite V2 write: unsupported type $other for column ${f.name} " +
+          "(flat primitive surface only; decimals go through the catalog append)")
+    })
+    ParquetFiles(schema, schema.fields.collect {
+      case f if f.metadata.contains("parquet.field.id") =>
+        f.name -> f.metadata.getLong("parquet.field.id").toInt
+    }.toMap)
   }
 
-  private def lt(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Long, y: Long)     => x < y
-    case (x: Double, y: Double) => x < y
-    case (x: String, y: String) => x.compareTo(y) < 0
-    case _                      => false
-  }
-
-  /** Value -> the stats string representation the pruner compares. Floats
-    * ride Double.toString like Spark's cast; Long covers int columns. */
-  private def statStr(dt: DataType, v: Any): String = (dt, v) match {
-    case (IntegerType, x: Long) => x.toInt.toString
-    case (FloatType, x: Double) => x.toFloat.toString
-    case (_, x)                 => x.toString
-  }
-
-  override def commit(): WriterCommitMessage = {
-    writer.close()
-    val stats = statCols.indices.flatMap { s =>
-      val (idx, dt) = statCols(s)
-      if (mins(s) == null) None
-      else {
-        val lo = statStr(dt, mins(s))
-        val hi = statStr(dt, maxs(s))
-        // string bounds land TRUNCATED (Iceberg truncate(16): prefix lower,
-        // incremented-prefix upper) — a long-text column must never put two
-        // document-sized strings in every manifest entry. A missing upper
-        // (no code point could bump) reads as unbounded — conservative.
-        // EXEMPT: a position-delete file's file_path bounds stay FULL
-        // (Iceberg keeps full metrics there — truncated path bounds are
-        // useless for delete-applies-to-file pruning, since every path in
-        // a table shares a long prefix).
-        val exempt = schema.fieldNames.sameElements(IceTable.PositionDeleteSchema.fieldNames)
-        val range = dt match {
-          case StringType if !exempt => ColRange(
-            Some(graft.icelite.IcebergFormat.truncateLowerBound(lo)),
+  /** Manifest entries of the non-empty written files (a zero-row task
+    * output adds no file). Bounds are the `cast(string)` forms the library
+    * stats pass records; string bounds land TRUNCATED (Iceberg
+    * truncate(16): prefix lower, incremented-prefix upper, a missing upper
+    * reads as unbounded) so a long-text column never puts two
+    * document-sized strings in every entry. `exact` columns keep full
+    * bounds: partition columns (one uniform value per file) and a
+    * position-delete file's `file_path` (every path in a table shares a
+    * long prefix, so truncated path bounds could not prune). */
+  def entries(files: Seq[WrittenFile], schema: StructType, exact: Set[String])
+      : Seq[ManifestEntry] =
+    files.filter(_.rows > 0L).map { w =>
+      val stats = w.bounds.map {
+        case (c, None) => c -> ColRange(None, None)
+        case (c, Some((lo, hi))) if schema(c).dataType == StringType && !exact(c) =>
+          c -> ColRange(Some(graft.icelite.IcebergFormat.truncateLowerBound(lo)),
             graft.icelite.IcebergFormat.truncateUpperBound(hi))
-          case _ => ColRange(Some(lo), Some(hi))
-        }
-        Some(schema.fields(idx).name -> range)
+        case (c, Some((lo, hi))) => c -> ColRange(Some(lo), Some(hi))
       }
-    }.toMap
-    // size + split_offsets from the just-written footer (executor-side,
-    // file still hot) — manifests carry them so an oversized file can be
-    // range-split at plan time with zero IO
-    val (size, offsets) = if (rows == 0) (0L, Nil) else {
-      import scala.jdk.CollectionConverters._
-      val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf.value))
-      try {
-        val blocks = fr.getFooter.getBlocks.asScala
-        (path.getFileSystem(conf.value).getFileStatus(path).getLen,
-          blocks.map(_.getStartingPos).toSeq)
-      } finally fr.close()
+      ManifestEntry(w.relPath, Some(stats), Some(w.rows), Some(w.sizeBytes),
+        Some(w.splitOffsets.toList).filter(_.nonEmpty))
     }
-    IceLiteWriteMessage(relPath, rows, stats, size, offsets)
-  }
-
-  override def abort(): Unit = {
-    writer.close()
-    val fs = path.getFileSystem(conf.value)
-    fs.delete(path, false)
-  }
-
-  override def close(): Unit = ()
-}
-
-object IceLiteWriteSchema {
-
-  def rangeable(dt: DataType): Boolean = dt match {
-    case IntegerType | LongType | DoubleType | FloatType | StringType => true
-    case _                                                            => false
-  }
-
-  /** Parquet MessageType for the flat primitive surface, physical layouts
-    * matching what Spark's own writer emits (so the V2 reader, Spark's
-    * vectorized reader and DuckDB all read these files identically). */
-  def messageTypeFor(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val t = f.dataType match {
-        case StringType =>
-          Types.optional(BINARY).as(LogicalTypeAnnotation.stringType())
-        case IntegerType => Types.optional(INT32)
-        case LongType    => Types.optional(INT64)
-        case FloatType   => Types.optional(FLOAT)
-        case DoubleType  => Types.optional(DOUBLE)
-        case BooleanType => Types.optional(BOOLEAN)
-        case DateType =>
-          Types.optional(INT32).as(LogicalTypeAnnotation.dateType())
-        case TimestampType =>
-          Types.optional(INT64).as(LogicalTypeAnnotation.timestampType(
-            true, LogicalTypeAnnotation.TimeUnit.MICROS))
-        case TimestampNTZType =>
-          Types.optional(INT64).as(LogicalTypeAnnotation.timestampType(
-            false, LogicalTypeAnnotation.TimeUnit.MICROS))
-        case other => throw new UnsupportedOperationException(
-          s"icelite V2 write: unsupported type $other for column ${f.name} " +
-            "(flat primitive surface only; decimals go through the catalog append)")
-      }
-      // carry the table's field id into the parquet schema when the
-      // StructField is stamped (TableMetadata.stampedSchema) — what keeps
-      // these files resolvable by id after a rename/drop evolution
-      val named = t.named(f.name)
-      b.addField(
-        if (f.metadata.contains("parquet.field.id"))
-          named.withId(f.metadata.getLong("parquet.field.id").toInt)
-        else named)
-    }
-    b.named("spark_schema")
-  }
 }

@@ -351,12 +351,12 @@ object IcebergMorScan {
           case (Some(x), Some(y)) => java.lang.Long.compare(x, y)
           case _                  => 0
         }
-      case _ => a.toString.compareTo(b)
+      case _ => graft.icelite.BoundOrder.compareStrings(a.toString, b)
     }
     // transformed-space compare (ints from temporal/bucket, source-typed
     // truncate); incomparable pairs read as overlap (keep)
     def cmpT(a: Any, b: Any): Option[Int] = (a, b) match {
-      case (x: String, y: String) => Some(x.compareTo(y))
+      case (x: String, y: String) => Some(graft.icelite.BoundOrder.compareStrings(x, y))
       case (x: Number, y: Number) => Some(java.lang.Long.compare(x.longValue, y.longValue))
       case _                      => None
     }
@@ -440,13 +440,24 @@ object IcebergMorScan {
     }
   }
 
-  /** Smallest string no `prefix`-prefixed string can reach: increment the
-    * last non-U+FFFF char, dropping the tail (None for all-U+FFFF — no
-    * finite upper bound exists). Inclusive use stays conservative. */
+  /** Smallest string no `prefix`-prefixed string can reach in UTF-8 byte
+    * order: increment the last code point that can be incremented (past
+    * the surrogate block; a lone surrogate is skipped), dropping the tail.
+    * None when every code point is U+10FFFF — no finite upper bound
+    * exists. Inclusive use stays conservative. */
   private[graft] def prefixSuccessor(prefix: String): Option[String] = {
-    val trimmed = prefix.reverse.dropWhile(_ == '\uffff').reverse
-    if (trimmed.isEmpty) None
-    else Some(trimmed.init + (trimmed.last + 1).toChar)
+    var i = prefix.length
+    while (i > 0) {
+      val cp    = prefix.codePointBefore(i)
+      val start = i - Character.charCount(cp)
+      val lone  = cp >= Character.MIN_SURROGATE && cp <= Character.MAX_SURROGATE
+      if (cp < Character.MAX_CODE_POINT && !lone) {
+        val next = if (cp + 1 == Character.MIN_SURROGATE) 0xE000 else cp + 1
+        return Some(prefix.substring(0, start) + new String(Character.toChars(next)))
+      }
+      i = start
+    }
+    None
   }
 
   private def isLit(v: Any): Boolean = v match {
@@ -789,49 +800,40 @@ final class IcebergMorDeltaWrite(
       Expressions.identity(c._2), SortDirection.ASCENDING, NullOrdering.NULLS_FIRST)).toArray
 
   override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
-    private val conf =
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration)
     private val tag       = java.util.UUID.randomUUID().toString.take(8)
     private val deleteRel = s"data/deletes-$tag"
     private val dataRel   = s"data/delta-$tag"
 
+    // insert files stamp the table's REAL field ids and its tracked
+    // nested ids (stable across nested evolution); inserts exist only
+    // for UPDATE/MERGE
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-      new IcebergMorDeltaWriterFactory(conf, location, deleteRel, dataRel, tableSchema,
-        p.fieldIds, // insert files stamp the table's REAL field ids
-        if (wantsClustering) partCols else Nil,
-        p.nestedIds) // tracked nested ids (stable across nested evolution)
+      new IcebergMorDeltaWriterFactory(IceLiteWrite.files(IceTable.PositionDeleteSchema),
+        Option.when(command != RowLevelOperation.Command.DELETE)(
+          IcebergWrite.files(tableSchema, p.fieldIds, p.nestedIds)),
+        location, deleteRel, dataRel, tableSchema,
+        if (wantsClustering) partCols else Nil)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val msgs = messages.toSeq.map(_.asInstanceOf[IcebergMorDeltaMessage])
       val s    = SparkSession.active
-      val fs   = new Path(location).getFileSystem(s.sparkContext.hadoopConfiguration)
       // content-1 position deletes, each with the spec-reserved
       // file_path field's [min, max] from the writer's inline
       // stats — what lets every reader range-prune this delete
       val delInfos = msgs.flatMap(_.deleteFile).filter(_.rows > 0L).map { m =>
-        val abs = new Path(location, m.relPath)
-        val pathBounds = m.stats.get("file_path").toSeq.flatMap { r =>
+        val pathBounds = m.bounds.get("file_path").flatten.toSeq.flatMap { case (lo, hi) =>
           for {
-            lo <- r.min; hi <- r.max
             loB <- IcebergFormat.encodeBound(StringType, lo)
             hiB <- IcebergFormat.encodeBound(StringType, hi)
           } yield IcebergFormat.PosDeletePathFieldId -> (loB, hiB)
         }.toMap
-        IcebergFormat.DataFileInfo(abs.toString, m.rows,
-          fs.getFileStatus(abs).getLen, bounds = pathBounds, content = 1)
+        IcebergFormat.DataFileInfo(new Path(location, m.relPath).toString, m.rows,
+          m.sizeBytes, bounds = pathBounds, content = 1)
       }
-      // content-0 insert files: bounds arrive keyed by schema
-      // position+1 — remap to the table's REAL field ids (sparse
-      // after evolution) so pruning keys match the metadata
-      val dataInfos = msgs.flatMap(_.dataFiles).filter(_.rows > 0L).map { m =>
-        def remap[A](byPos: Map[Int, A]): Map[Int, A] = byPos.flatMap { case (id, v) =>
-          val idx = id - 1
-          if (idx >= 0 && idx < p.fieldIds.length) Some(p.fieldIds(idx) -> v)
-          else None
-        }
-        IcebergFormat.DataFileInfo(m.absPath, m.rows, m.sizeBytes,
-          bounds = remap(m.bounds), splitOffsets = m.splitOffsets,
-          nullCounts = remap(m.nullCounts), partitionValues = m.partitionValues)
+      // content-0 insert files, keyed by the table's REAL field ids
+      // (sparse after evolution) so pruning keys match the metadata
+      val dataInfos = msgs.flatMap(_.dataFiles).filter(_._1.rows > 0L).map { case (m, pv) =>
+        IcebergWrite.dataFileInfo(location, tableSchema, p.fieldIds, m, pv)
       }
       if (delInfos.isEmpty && dataInfos.isEmpty) return // nothing matched: no snapshot
       val w = IcebergFormat.resumeWriter(s, location)
@@ -845,7 +847,8 @@ final class IcebergMorDeltaWrite(
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(location).getFileSystem(conf.value)
+      val fs = new Path(location)
+        .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
       fs.delete(new Path(location, deleteRel), true)
       fs.delete(new Path(location, dataRel), true)
       ()
@@ -853,61 +856,63 @@ final class IcebergMorDeltaWrite(
   }
 }
 
+/** A task's position-delete file and its insert files, each insert with
+  * its REAL partition tuple (identity values by spec field name; empty
+  * when unpartitioned), so DML insert files commit under the partitioned
+  * spec and external engines prune them. */
 final case class IcebergMorDeltaMessage(
-    deleteFile: Option[IceLiteWriteMessage],
-    dataFiles: Seq[IcebergWriteMessage])
+    deleteFile: Option[WrittenFile],
+    dataFiles: Seq[(WrittenFile, Map[String, Any])])
     extends WriterCommitMessage
 
 /** Top-level (serializable) factory — an inner anonymous class would drag
   * the whole operation, table plan included, into the task closure. */
 final class IcebergMorDeltaWriterFactory(
-    conf: SerializableHadoopConf,
+    deletes: ParquetFiles,
+    inserts: Option[ParquetFiles],
     location: String,
     deleteRel: String,
     dataRel: String,
     schema: StructType,
-    fieldIds: Seq[Int] = Nil,
-    partCols: Seq[(String, String)] = Nil, // (spec field name, source column)
-    nestedIds: Map[String, Int] = Map.empty)
+    partCols: Seq[(String, String)]) // (spec field name, source column)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new IcebergMorDeltaWriter(conf, location, deleteRel, dataRel, schema, partitionId, taskId,
-      fieldIds, partCols, nestedIds)
+    new IcebergMorDeltaWriter(deletes, inserts, location, deleteRel, dataRel, schema,
+      partitionId, taskId, partCols)
 }
 
 /** Executor-side delta writer: streams `(_file, _pos)` row ids into one
   * position-delete parquet per task (spec content-1 shape: `file_path`
   * string + `pos` long, the exact columns [[IcebergFormat.scanFiles]] and
   * DuckDB anti-join on), and UPDATE/MERGE insert rows into v2-layout data
-  * parquets via the field-id-preserving [[IcebergNestedDataWriter]]
-  * (inline min/max stats → manifest bounds). On an identity-partitioned
-  * default spec (`partCols` non-empty; rows arrive CLUSTERED + SORTED on
-  * them per RequiresDistributionAndOrdering) the insert path ROLLS one
-  * file per partition value per task and stamps the REAL partition tuple
-  * on its commit message — the files then commit under the partitioned
-  * spec and every conforming engine prunes them. */
+  * parquets through the same [[ParquetDataWriter]], every node stamped
+  * with the table's field ids (inline min/max stats → manifest bounds).
+  * On an identity-partitioned default spec (`partCols` non-empty; rows
+  * arrive CLUSTERED + SORTED on them per RequiresDistributionAndOrdering)
+  * the insert path ROLLS one file per partition value per task and stamps
+  * the REAL partition tuple on its commit message — the files then commit
+  * under the partitioned spec and every conforming engine prunes them. */
 final class IcebergMorDeltaWriter(
-    conf: SerializableHadoopConf,
+    deletes: ParquetFiles,
+    inserts: Option[ParquetFiles],
     location: String,
     deleteRel: String,
     dataRel: String,
     schema: StructType,
     partitionId: Int,
     taskId: Long,
-    fieldIds: Seq[Int] = Nil,
-    partCols: Seq[(String, String)] = Nil, // (spec field name, source column)
-    nestedIds: Map[String, Int] = Map.empty)
+    partCols: Seq[(String, String)]) // (spec field name, source column)
     extends DeltaWriter[InternalRow] {
 
-  private var delWriter: IceLiteDataWriter = _
-  private var insWriter: IcebergNestedDataWriter = _
+  private var delWriter: ParquetDataWriter = _
+  private var insWriter: ParquetDataWriter = _
   private val delRow =
     new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
 
   private val partIdx: IndexedSeq[Int] = partCols.map(f => schema.fieldIndex(f._2)).toIndexedSeq
   private var curKey: IndexedSeq[Any] = null // boxed identity values (null = SQL NULL)
   private var rollSeq = 0
-  private val rolled = scala.collection.mutable.ListBuffer.empty[IcebergWriteMessage]
+  private val rolled = scala.collection.mutable.ListBuffer.empty[(WrittenFile, Map[String, Any])]
 
   /** Boxed identity partition value in the manifest's avro type. */
   private def partValue(i: Int, row: InternalRow): Any = {
@@ -924,20 +929,23 @@ final class IcebergMorDeltaWriter(
   }
 
   private def rollInsert(): Unit = if (insWriter != null) {
-    val m = insWriter.commit().asInstanceOf[IcebergWriteMessage]
     // tuples key by the SPEC FIELD name — buildEntry/summarize look them
     // up there; a field named differently from its source column would
     // otherwise publish a null tuple and external engines would prune
     // away the restated rows
-    rolled += m.copy(partitionValues =
-      partCols.map(_._1).zip(curKey).filter(_._2 != null).toMap)
+    rolled += insWriter.commit() ->
+      partCols.map(_._1).zip(curKey).filter(_._2 != null).toMap
     insWriter = null
   }
 
+  private def newInsertFile(relPath: String): ParquetDataWriter =
+    inserts.getOrElse(
+      throw new IllegalStateException("iceberg-format delta DELETE received an insert row")
+    ).writer(location, relPath)
+
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     if (delWriter == null)
-      delWriter = new IceLiteDataWriter(conf, location, deleteRel,
-        IceTable.PositionDeleteSchema, partitionId, taskId)
+      delWriter = deletes.writer(location, ParquetFiles.partFile(deleteRel, partitionId, taskId))
     delRow.update(0, id.getUTF8String(0).clone())
     delRow.update(1, id.getLong(1))
     delWriter.write(delRow)
@@ -949,14 +957,12 @@ final class IcebergMorDeltaWriter(
       if (insWriter == null || key != curKey) {
         rollInsert()
         curKey = key
-        insWriter = new IcebergNestedDataWriter(conf, location, dataRel, schema,
-          partitionId, taskId, fieldIds, nameSuffix = f"-p$rollSeq%04d",
-          nestedIds = nestedIds)
+        insWriter = newInsertFile(
+          f"$dataRel/part-$partitionId%05d-$taskId-p$rollSeq%04d.parquet")
         rollSeq += 1
       }
     } else if (insWriter == null)
-      insWriter = new IcebergNestedDataWriter(conf, location, dataRel, schema,
-        partitionId, taskId, fieldIds, nestedIds = nestedIds)
+      insWriter = newInsertFile(ParquetFiles.partFile(dataRel, partitionId, taskId))
     insWriter.write(row)
   }
 
@@ -967,11 +973,10 @@ final class IcebergMorDeltaWriter(
   override def reinsert(metadata: InternalRow, row: InternalRow): Unit = insert(row)
 
   override def commit(): WriterCommitMessage = {
-    val inserts =
+    val written =
       if (partCols.nonEmpty) { rollInsert(); rolled.toSeq }
-      else Option(insWriter).map(_.commit().asInstanceOf[IcebergWriteMessage]).toSeq
-    IcebergMorDeltaMessage(
-      Option(delWriter).map(_.commit().asInstanceOf[IceLiteWriteMessage]), inserts)
+      else Option(insWriter).map(_.commit() -> Map.empty[String, Any]).toSeq
+    IcebergMorDeltaMessage(Option(delWriter).map(_.commit()), written)
   }
 
   override def abort(): Unit = {
@@ -981,8 +986,8 @@ final class IcebergMorDeltaWriter(
     // to the table — a retried task would otherwise leave them as orphans
     // next to live data (the job-level abort never runs when the retry
     // succeeds); same pattern as IceLitePartitionedWriter.abort
-    val fs = new Path(location).getFileSystem(conf.value)
-    rolled.foreach(m => fs.delete(new Path(m.absPath), false))
+    val fs = new Path(location).getFileSystem(deletes.conf.value)
+    rolled.foreach { case (m, _) => fs.delete(new Path(location, m.relPath), false) }
     rolled.clear()
   }
   override def close(): Unit = ()

@@ -3,36 +3,28 @@ package graft.sources
 import graft.icelite.IcebergFormat
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.parquet.schema.Type.Repetition
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type => PType, Types}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** NESTED-TYPE write path into a REAL Iceberg v2 table through the V2
   * connector: `df.write.format("icelite").option("iceberg", "true")
   * .option("location", dir).mode("overwrite").save()` — executors write
-  * nested parquet (struct / list / map over the primitive surface)
-  * row-at-a-time via the parquet-mr Group API, with every parquet field
-  * carrying the SAME field id the committed Iceberg schema JSON assigns
-  * (the spec's name-independent column identity — id-based projection is
-  * what makes rename/evolution safe), and the driver commit is pure
-  * metadata through [[IcebergFormat.Writer]] (Avro manifests, snapshot
-  * log, version-hint). Top-level primitive columns collect inline min/max
-  * stats so the committed manifests file-skip exactly like the flat path.
+  * nested parquet (struct / list / map over the primitive surface) with
+  * Spark's own parquet writer under the session codec
+  * ([[ParquetDataWriter]]), with every parquet field — list elements and
+  * map keys and values included — carrying the SAME field id the
+  * committed Iceberg schema JSON assigns (the spec's name-independent
+  * column identity — id-based projection is what makes rename/evolution
+  * safe), and the driver commit is pure metadata through
+  * [[IcebergFormat.Writer]] (Avro manifests, snapshot log, version-hint).
+  * Top-level primitive columns collect inline min/max stats so the
+  * committed manifests file-skip exactly like the flat path.
   *
   * Round-trips against the v2 READER (`Engine.scanIcebergMetadata`, ic51)
   * and DuckDB's nested-parquet reader (the ic61 oracle). Scope: table
@@ -68,7 +60,7 @@ final class IcebergV2Table(location: String, providedSchema: StructType) extends
           override def toMicroBatchStream(checkpointLocation: String)
               : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
             providedSchema.fields.foreach(f => require(
-              IceLiteWriteSchema.rangeable(f.dataType) || f.dataType == BooleanType ||
+              graft.icelite.BoundOrder.rangeable(f.dataType) || f.dataType == BooleanType ||
                 f.dataType == DateType || f.dataType == TimestampType ||
                 f.dataType == TimestampNTZType,
               s"iceberg streaming read supports flat primitive schemas; got ${f.dataType} for ${f.name}"))
@@ -90,12 +82,14 @@ final class IcebergV2Write(location: String, schema: StructType, replace: Boolea
     extends Write {
 
   override def toBatch: BatchWrite = new BatchWrite {
-    private val conf =
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration)
     private val dataRel = s"data/snap-w-${java.util.UUID.randomUUID().toString.take(8)}"
 
+    // fresh table: top-level ids 1..n, nested ids derived after them,
+    // exactly as the committed schema JSON assigns them
+    private val ids = 1 to schema.length
+
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      new IcebergWriterFactory(conf, location, dataRel, schema)
+      new ParquetDataWriterFactory(IcebergWrite.files(schema, ids, Map.empty), location, dataRel)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val s    = SparkSession.active
@@ -128,9 +122,8 @@ final class IcebergV2Write(location: String, schema: StructType, replace: Boolea
         (v, metas, datas)
       } else (0, Nil, Nil)
       val infos = messages.toSeq.collect {
-        case m: IcebergWriteMessage if m.rows > 0 =>
-          IcebergFormat.DataFileInfo(m.absPath, m.rows, m.sizeBytes, bounds = m.bounds,
-            splitOffsets = m.splitOffsets, nullCounts = m.nullCounts)
+        case m: WrittenFile if m.rows > 0 =>
+          IcebergWrite.dataFileInfo(location, schema, ids, m, Map.empty)
       }
       val w = new IcebergFormat.Writer(s, location, schema,
         startVersion = oldVersion, fileTag = dataRel.stripPrefix("data/snap-w-"))
@@ -141,7 +134,8 @@ final class IcebergV2Write(location: String, schema: StructType, replace: Boolea
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(location).getFileSystem(conf.value)
+      val fs = new Path(location)
+        .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
       fs.delete(new Path(location, dataRel), true)
     }
   }
@@ -197,297 +191,60 @@ final class IcebergMicroBatchStream(
   override def stop(): Unit = ()
 }
 
-final case class IcebergWriteMessage(
-    absPath: String,
-    rows: Long,
-    sizeBytes: Long,
-    bounds: Map[Int, (Array[Byte], Array[Byte])],
-    splitOffsets: Seq[Long] = Nil, // row-group starts, read executor-side at close
-    nullCounts: Map[Int, Long] = Map.empty, // keyed by POSITION+1, remapped at commit
-    // REAL partition tuple (identity values by spec field name), stamped by
-    // the rolling delta writer so DML insert files commit under the
-    // partitioned spec and external engines prune them
-    partitionValues: Map[String, Any] = Map.empty)
-    extends WriterCommitMessage
+object IcebergWrite {
 
-final class IcebergWriterFactory(
-    conf: SerializableHadoopConf,
-    location: String,
-    dataRel: String,
-    schema: StructType)
-    extends DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new IcebergNestedDataWriter(conf, location, dataRel, schema, partitionId, taskId)
-}
-
-/** Row-at-a-time nested parquet writer (parquet-mr Group API) with inline
-  * top-level primitive stats. The physical layout matches what Spark's
-  * own writer emits (3-level LIST, key_value MAP), so Spark's vectorized
-  * reader, our v2 reader and DuckDB all read these files identically. */
-final class IcebergNestedDataWriter(
-    conf: SerializableHadoopConf,
-    location: String,
-    dataRel: String,
-    schema: StructType,
-    partitionId: Int,
-    taskId: Long,
-    fieldIds: Seq[Int] = Nil, // real top-level ids (sparse tables); Nil = 1..n
-    nameSuffix: String = "", // rolling partitioned writes: one file per value
-    nestedIds: Map[String, Int] = Map.empty) // tracked nested ids (evolved tables)
-    extends DataWriter[InternalRow] {
-
-  private val relPath = f"$dataRel/part-$partitionId%05d-$taskId$nameSuffix.parquet"
-  private val path    = new Path(location, relPath)
-  private val msgType = IcebergWriteSchema.messageTypeFor(schema, fieldIds, nestedIds)
-  private val factory = new SimpleGroupFactory(msgType)
-  private val writer  = ExampleParquetWriter
-    .builder(HadoopOutputFile.fromPath(path, conf.value))
-    .withType(msgType)
-    .withConf(conf.value)
-    // honor the standard row-group size knob (the builder ignores the
-    // hadoop conf, unlike ParquetOutputFormat) — row-group granularity is
-    // what ranged splits parallelize over
-    .withRowGroupSize(conf.value.getLong("parquet.block.size", 128L * 1024 * 1024))
-    .build()
-
-  private var rows = 0L
-  // inline min/max for top-level rangeable primitives, keyed by POSITION;
-  // converted to field-id-keyed Iceberg bounds at commit (top-level field
-  // ids are 1..n by construction — IcebergFormat.icebergSchemaJson)
-  private val statCols: Array[(Int, DataType)] = schema.fields.zipWithIndex.collect {
-    case (f, i) if IceLiteWriteSchema.rangeable(f.dataType) => (i, f.dataType)
-  }
-  private val mins = new Array[Any](statCols.length)
-  private val maxs = new Array[Any](statCols.length)
-
-  private val nullCounters = new Array[Long](schema.fields.length)
-
-  override def write(row: InternalRow): Unit = {
-    val g = factory.newGroup()
-    var i = 0
-    while (i < schema.fields.length) {
-      if (!row.isNullAt(i)) {
-        val f = schema.fields(i)
-        IcebergWriteSchema.appendValue(g, f.name, f.dataType, row.get(i, f.dataType))
-      } else nullCounters(i) += 1L
-      i += 1
-    }
-    var s = 0
-    while (s < statCols.length) {
-      val (idx, dt) = statCols(s)
-      if (!row.isNullAt(idx)) {
-        val v: Any = dt match {
-          case StringType  => row.getUTF8String(idx).toString
-          case IntegerType => row.getInt(idx).toLong
-          case LongType    => row.getLong(idx)
-          case FloatType   => row.getFloat(idx).toDouble
-          case DoubleType  => row.getDouble(idx)
-          case _           => null
-        }
-        if (v != null) {
-          if (mins(s) == null || lt(v, mins(s))) mins(s) = v
-          if (maxs(s) == null || lt(maxs(s), v)) maxs(s) = v
-        }
-      }
-      s += 1
-    }
-    writer.write(g)
-    rows += 1L
-  }
-
-  private def lt(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: Long, y: Long)     => x < y
-    case (x: Double, y: Double) => x < y
-    case (x: String, y: String) => x.compareTo(y) < 0
-    case _                      => false
-  }
-
-  private def statStr(dt: DataType, v: Any): String = (dt, v) match {
-    case (IntegerType, x: Long) => x.toInt.toString
-    case (FloatType, x: Double) => x.toFloat.toString
-    case (_, x)                 => x.toString
-  }
-
-  override def commit(): WriterCommitMessage = {
-    writer.close()
-    val bounds = statCols.indices.flatMap { s =>
-      val (idx, dt) = statCols(s)
-      if (mins(s) == null) None
-      else {
-        // string bounds land TRUNCATED (Iceberg truncate(16) semantics):
-        // prefix lower bound, incremented-prefix upper. A string whose
-        // upper can't increment drops the whole pair — the format stores
-        // lower/upper together and an unpaired bound would be
-        // spec-ambiguous; absent bounds are conservative for every pruner.
-        val loS = statStr(dt, mins(s))
-        val hiS = statStr(dt, maxs(s))
-        val pair = dt match {
-          case StringType =>
-            IcebergFormat.truncateUpperBound(hiS)
-              .map(hi => (IcebergFormat.truncateLowerBound(loS), hi))
-          case _ => Some((loS, hiS))
-        }
-        for {
-          (loT, hiT) <- pair
-          lo <- IcebergFormat.encodeBound(dt, loT)
-          hi <- IcebergFormat.encodeBound(dt, hiT)
-        } yield (idx + 1) -> (lo, hi) // field id = position + 1 at top level
-      }
-    }.toMap
-    // split_offsets from the just-written footer (executor-side, file
-    // still hot) — manifests carry them so planners range-split with no IO
-    val offsets = if (rows == 0) Nil else {
-      import scala.jdk.CollectionConverters._
-      val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf.value))
-      try fr.getFooter.getBlocks.asScala.map(_.getStartingPos).toSeq
-      finally fr.close()
-    }
-    val fs = path.getFileSystem(conf.value)
-    IcebergWriteMessage(path.toString, rows,
-      if (rows > 0) fs.getFileStatus(path).getLen else 0L, bounds, offsets,
-      nullCounters.indices.map(i => (i + 1) -> nullCounters(i)).toMap)
-  }
-
-  override def abort(): Unit = {
-    writer.close()
-    val fs = path.getFileSystem(conf.value)
-    fs.delete(path, false)
-  }
-
-  override def close(): Unit = ()
-}
-
-object IcebergWriteSchema {
-
-  /** Nested-capable parquet MessageType whose every field carries the
-    * Iceberg field id — assigned by the SAME traversal
-    * [[IcebergFormat.icebergSchemaJson]] uses (top-level fields 1..n by
-    * default, or the caller's REAL ids for sparse externally-evolved
-    * tables; nested ids continuing after the max in declaration order;
-    * struct children pre-order; list element-id before its element's
-    * nested ids; map key-id then value-id before either side's nested
-    * ids), so parquet metadata and table schema agree on column
-    * identity. */
-  def messageTypeFor(schema: StructType, topIds: Seq[Int] = Nil,
-      nestedIds: Map[String, Int] = Map.empty): MessageType = {
-    val ids = if (topIds.nonEmpty) topIds else 1 to schema.fields.length
-    require(ids.length == schema.fields.length, "field id count != column count")
-    // nested ids come from the table's TRACKED map when given (an evolved
-    // table's nested ids are sparse and must re-emit verbatim); the
-    // positional derivation below is byte-identical for fresh tables
-    val nested =
-      if (nestedIds.nonEmpty) nestedIds
-      else graft.icelite.IcebergFormat.deriveNestedIds(schema, ids)
-    val idOf = (p: String) => nested.getOrElse(p,
-      throw new IllegalStateException(s"no tracked field id for nested path $p"))
-    val b = Types.buildMessage()
-    schema.fields.zipWithIndex.foreach { case (f, i) =>
-      b.addField(typeFor(f.name, f.dataType, ids(i), Repetition.OPTIONAL, s"${f.name}.", idOf))
-    }
-    b.named("spark_schema")
-  }
-
-  private def typeFor(
-      name: String,
-      dt: DataType,
-      id: Int,
-      rep: Repetition,
-      prefix: String,
-      idOf: String => Int): PType = dt match {
-    case st: StructType =>
-      // mirror typeJson: each child resolves its id by path
-      val children = st.fields.map { f =>
-        typeFor(f.name, f.dataType, idOf(prefix + f.name), Repetition.OPTIONAL,
-          s"$prefix${f.name}.", idOf)
-      }
-      children.foldLeft(Types.buildGroup(rep))(_.addField(_))
-        .id(id).named(name)
-    case at: ArrayType =>
-      val elem = typeFor("element", at.elementType, idOf(prefix + "element"),
-        Repetition.OPTIONAL, prefix + "element.", idOf)
-      Types.buildGroup(rep).as(LogicalTypeAnnotation.listType())
-        .addField(Types.repeatedGroup().addField(elem).named("list"))
-        .id(id).named(name)
-    case mt: MapType =>
-      val k = typeFor("key", mt.keyType, idOf(prefix + "key"),
-        Repetition.REQUIRED, prefix + "key.", idOf)
-      val v = typeFor("value", mt.valueType, idOf(prefix + "value"),
-        Repetition.OPTIONAL, prefix + "value.", idOf)
-      Types.buildGroup(rep).as(LogicalTypeAnnotation.mapType())
-        .addField(Types.repeatedGroup().addField(k).addField(v).named("key_value"))
-        .id(id).named(name)
-    case p => primitiveFor(name, p, id, rep)
-  }
-
-  private def primitiveFor(name: String, dt: DataType, id: Int, rep: Repetition): PType = {
-    val b = dt match {
-      case StringType =>
-        Types.primitive(BINARY, rep).as(LogicalTypeAnnotation.stringType())
-      case BinaryType       => Types.primitive(BINARY, rep)
-      case IntegerType      => Types.primitive(INT32, rep)
-      case LongType         => Types.primitive(INT64, rep)
-      case FloatType        => Types.primitive(FLOAT, rep)
-      case DoubleType       => Types.primitive(DOUBLE, rep)
-      case BooleanType      => Types.primitive(BOOLEAN, rep)
-      case DateType         => Types.primitive(INT32, rep).as(LogicalTypeAnnotation.dateType())
-      case TimestampType    => Types.primitive(INT64, rep).as(
-        LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS))
-      case TimestampNTZType => Types.primitive(INT64, rep).as(
-        LogicalTypeAnnotation.timestampType(false, LogicalTypeAnnotation.TimeUnit.MICROS))
+  /** The files of an Iceberg write of `schema` (nested struct / list / map
+    * over the primitive surface plus binary, checked here on the driver).
+    * Every node carries its field id: `topIds` for the columns, and for
+    * nested positions the table's TRACKED `nestedIds` when given (an
+    * evolved table's nested ids are sparse and must re-emit verbatim),
+    * else the ids [[IcebergFormat.deriveNestedIds]] assigns — struct
+    * children pre-order, a list's element before its element's nested
+    * ids, a map's key then value before either side's — so parquet
+    * metadata and table schema agree on column identity. */
+  def files(schema: StructType, topIds: Seq[Int], nestedIds: Map[String, Int]): ParquetFiles = {
+    require(topIds.length == schema.length, "field id count != column count")
+    def check(name: String, dt: DataType): Unit = dt match {
+      case st: StructType => st.fields.foreach(f => check(f.name, f.dataType))
+      case at: ArrayType  => check("element", at.elementType)
+      case mt: MapType    => check("key", mt.keyType); check("value", mt.valueType)
+      case StringType | BinaryType | IntegerType | LongType | FloatType | DoubleType |
+          BooleanType | DateType | TimestampType | TimestampNTZType =>
       case other => throw new UnsupportedOperationException(
         s"iceberg V2 write: unsupported type $other for column $name")
     }
-    b.id(id).named(name)
+    schema.fields.foreach(f => check(f.name, f.dataType))
+    val nested =
+      if (nestedIds.nonEmpty) nestedIds else IcebergFormat.deriveNestedIds(schema, topIds)
+    ParquetFiles(schema, schema.fieldNames.zip(topIds).toMap ++ nested)
   }
 
-  /** Append one non-null Catalyst value into `g` under `name`, recursing
-    * through struct/list/map. Null HANDLING is by omission, parquet-mr
-    * style: a null field is simply never appended (optional repetition). */
-  def appendValue(g: Group, name: String, dt: DataType, v: Any): Unit = dt match {
-    case st: StructType =>
-      val row = v.asInstanceOf[InternalRow]
-      val sub = g.addGroup(name)
-      var i = 0
-      while (i < st.fields.length) {
-        if (!row.isNullAt(i)) {
-          val f = st.fields(i)
-          appendValue(sub, f.name, f.dataType, row.get(i, f.dataType))
-        }
-        i += 1
-      }
-    case at: ArrayType =>
-      val arr = v.asInstanceOf[ArrayData]
-      val lg  = g.addGroup(name)
-      var i = 0
-      while (i < arr.numElements()) {
-        val item = lg.addGroup("list") // one repeated "list" group per element
-        if (!arr.isNullAt(i))
-          appendValue(item, "element", at.elementType, arr.get(i, at.elementType))
-        i += 1
-      }
-    case mt: MapType =>
-      val map  = v.asInstanceOf[MapData]
-      val keys = map.keyArray()
-      val vals = map.valueArray()
-      val mg   = g.addGroup(name)
-      var i = 0
-      while (i < map.numElements()) {
-        val kv = mg.addGroup("key_value")
-        appendValue(kv, "key", mt.keyType, keys.get(i, mt.keyType))
-        if (!vals.isNullAt(i))
-          appendValue(kv, "value", mt.valueType, vals.get(i, mt.valueType))
-        i += 1
-      }
-    case StringType  => g.append(name, Binary.fromString(v.asInstanceOf[UTF8String].toString))
-    case BinaryType  => g.append(name, Binary.fromConstantByteArray(v.asInstanceOf[Array[Byte]]))
-    case IntegerType | DateType => g.append(name, v.asInstanceOf[Int])
-    case LongType | TimestampType | TimestampNTZType => g.append(name, v.asInstanceOf[Long])
-    case FloatType   => g.append(name, v.asInstanceOf[Float])
-    case DoubleType  => g.append(name, v.asInstanceOf[Double])
-    case BooleanType => g.append(name, v.asInstanceOf[Boolean])
-    case other => throw new UnsupportedOperationException(
-      s"iceberg V2 write: unsupported type $other for column $name")
+  /** A written data file as the Iceberg manifest records it: bounds and
+    * null counts keyed by field id (`ids` in schema order). String bounds
+    * land TRUNCATED (Iceberg truncate(16): prefix lower, incremented-prefix
+    * upper); a string whose upper cannot increment drops the pair — the
+    * format stores lower/upper together, and absent bounds are
+    * conservative for every pruner. */
+  def dataFileInfo(location: String, schema: StructType, ids: Seq[Int], w: WrittenFile,
+      partitionValues: Map[String, Any]): IcebergFormat.DataFileInfo = {
+    val idOf = schema.fieldNames.zip(ids).toMap
+    val bounds = w.bounds.flatMap {
+      case (c, Some((lo, hi))) =>
+        val dt = schema(c).dataType
+        val pair =
+          if (dt != StringType) Some((lo, hi))
+          else IcebergFormat.truncateUpperBound(hi)
+            .map(h => (IcebergFormat.truncateLowerBound(lo), h))
+        for {
+          (l, h) <- pair
+          lb <- IcebergFormat.encodeBound(dt, l)
+          hb <- IcebergFormat.encodeBound(dt, h)
+        } yield idOf(c) -> (lb, hb)
+      case _ => None
+    }
+    IcebergFormat.DataFileInfo(new Path(location, w.relPath).toString, w.rows, w.sizeBytes,
+      bounds = bounds, splitOffsets = w.splitOffsets,
+      nullCounts = w.nullCounts.map { case (c, n) => idOf(c) -> n },
+      partitionValues = partitionValues)
   }
 }

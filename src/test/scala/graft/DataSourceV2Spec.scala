@@ -232,6 +232,12 @@ class DataSourceV2Spec extends SparkSpec {
       val cat = new graft.icelite.FsCatalog(spark, wh)
       val t = cat.loadTable("ns", "p")
       assert(t.metadata.currentSnapshot.get.operation == "delete")
+      // IS NOT NULL never drops a NULL-partition file, whether its stats
+      // record the partition column as valueless (library write) or not
+      cat.createOrReplaceTable("ns", "lib", spark.table("mdd_src"), Seq("d"))
+      spark.sql("DELETE FROM md_spec.ns.lib WHERE d IS NOT NULL")
+      assert(spark.sql("SELECT k FROM md_spec.ns.lib").collect().map(_.getLong(0)).toSeq ==
+        Seq(3L), "IS NOT NULL dropped the NULL partition")
       // TRUNCATE TABLE = the same metadata path with an always-true match
       spark.sql("TRUNCATE TABLE md_spec.ns.p")
       assert(spark.sql("SELECT COUNT(*) FROM md_spec.ns.p").collect()(0).getLong(0) == 0L)
@@ -717,5 +723,194 @@ class DataSourceV2Spec extends SparkSpec {
       "rename-evolved scan must bind pre-rename files by field id")
     assert(spark.conf.get("spark.sql.parquet.fieldId.read.enabled") == "false",
       "read-by-id scan leaked fieldId.read.enabled into the caller's session")
+  }
+
+  /** Footers of every parquet file under `dir`. */
+  private def footers(dir: String): Seq[org.apache.parquet.hadoop.metadata.ParquetMetadata] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val it   = root.getFileSystem(conf).listFiles(root, true)
+    val out  = Seq.newBuilder[org.apache.parquet.hadoop.metadata.ParquetMetadata]
+    while (it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.endsWith(".parquet")) {
+        val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+        try out += fr.getFooter finally fr.close()
+      }
+    }
+    out.result()
+  }
+
+  /** Every node of a parquet schema by path (`c`, `c.f`, `c.element`,
+    * `c.key`, `c.value` — a list's or map's repeated wrapper has no path
+    * of its own) with its field id. */
+  private def fileIds(g: org.apache.parquet.schema.GroupType, prefix: String = "")
+      : Map[String, Option[Int]] = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{ListLogicalTypeAnnotation, MapLogicalTypeAnnotation}
+    import scala.jdk.CollectionConverters._
+    g.getFields.asScala.flatMap { f =>
+      val path = prefix + f.getName
+      val self = path -> Option(f.getId).map(_.intValue)
+      if (f.isPrimitive) Seq(self)
+      else {
+        val inner = f.getLogicalTypeAnnotation match {
+          case _: ListLogicalTypeAnnotation | _: MapLogicalTypeAnnotation =>
+            f.asGroupType.getType(0).asGroupType
+          case _ => f.asGroupType
+        }
+        self +: fileIds(inner, path + ".").toSeq
+      }
+    }.toMap
+  }
+
+  test("connector-written files: session codec, OPTIONAL columns, micros timestamps, every field id") {
+    import graft.icelite.IcebergFormat
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType, Type}
+    import scala.jdk.CollectionConverters._
+    val wh = scratch("v2phys")
+    spark.conf.set("spark.sql.catalog.pf", "graft.sources.IceLiteCatalog")
+    spark.conf.set("spark.sql.catalog.pf.warehouse", wh)
+    def codecs(dir: String): Set[CompressionCodecName] =
+      footers(dir).flatMap(_.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec))).toSet
+    def sessionCodec = CompressionCodecName.fromConf(
+      spark.conf.get("spark.sql.parquet.compression.codec"))
+    try {
+      // icelite: a stamped table's files carry its ids, every column is
+      // OPTIONAL, timestamps are INT64 micros, the codec is the session's
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS pf.ns")
+      spark.sql("""CREATE TABLE pf.ns.t AS SELECT CAST(1 AS BIGINT) AS k, 'x' AS s,
+                   TIMESTAMP'2024-01-02 03:04:05.123456' AS ts,
+                   TIMESTAMP_NTZ'2024-01-02 03:04:05.123456' AS ntz""")
+      val t = new FsCatalog(spark, wh).loadTable("ns", "t")
+      val tableIds = t.metadata.fields.map(f => f.name -> Option(f.id)).toMap
+      val data = t.location.toString + "/data"
+      assert(sessionCodec == CompressionCodecName.SNAPPY)
+      assert(codecs(data) == Set(sessionCodec), s"codec ${codecs(data)}")
+      footers(data).map(_.getFileMetaData.getSchema).foreach { msg =>
+        assert(msg.getFields.asScala.forall(_.getRepetition == Type.Repetition.OPTIONAL), msg)
+        assert(fileIds(msg) == tableIds, msg)
+        def ts(c: String) = msg.getFields.get(msg.getFieldIndex(c)).asPrimitiveType
+        assert(ts("ts").getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.INT64 &&
+          ts("ts").getLogicalTypeAnnotation ==
+            LogicalTypeAnnotation.timestampType(true, LogicalTypeAnnotation.TimeUnit.MICROS), msg)
+        assert(ts("ntz").getPrimitiveTypeName == PrimitiveType.PrimitiveTypeName.INT64 &&
+          ts("ntz").getLogicalTypeAnnotation ==
+            LogicalTypeAnnotation.timestampType(false, LogicalTypeAnnotation.TimeUnit.MICROS), msg)
+      }
+      assert(spark.sql("SELECT CAST(ts AS STRING), CAST(ntz AS STRING) FROM pf.ns.t")
+        .collect().head.toSeq == Seq("2024-01-02 03:04:05.123456", "2024-01-02 03:04:05.123456"))
+      // the codec follows the session conf
+      spark.conf.set("spark.sql.parquet.compression.codec", "gzip")
+      try {
+        spark.sql("INSERT INTO pf.ns.t SELECT 2, 'y', ts, ntz FROM pf.ns.t")
+        assert(codecs(data) == Set(CompressionCodecName.SNAPPY, CompressionCodecName.GZIP))
+      } finally spark.conf.unset("spark.sql.parquet.compression.codec")
+      // an unstamped schema's files carry no id (position-delete files)
+      spark.conf.set("graft.delete.mode", "merge-on-read")
+      try spark.sql("DELETE FROM pf.ns.t WHERE k = 1")
+      finally spark.conf.unset("graft.delete.mode")
+      val deleteFiles = footers(data).map(_.getFileMetaData.getSchema)
+        .filter(_.getFieldCount == 2).filter(_.containsField("file_path"))
+      assert(deleteFiles.nonEmpty && deleteFiles.forall(m => fileIds(m).values.forall(_.isEmpty)),
+        deleteFiles.mkString("\n"))
+      assert(spark.sql("SELECT k FROM pf.ns.t").collect().map(_.getLong(0)).toSeq == Seq(2L))
+
+      // iceberg: a nested V2 write and a MoR MERGE's insert file carry
+      // every id the schema JSON assigns, list element and map key/value
+      // included
+      val loc = s"$wh/ns/nested"
+      val src = Tables.orders(spark, sfDir).filter(col("o_orderkey") < 40)
+        .select(col("o_orderkey").as("k"),
+          struct(col("o_orderstatus").as("status"), col("o_totalprice").as("total")).as("info"),
+          array(col("o_orderpriority"), col("o_orderstatus")).as("tags"),
+          map(col("o_orderstatus"), col("o_totalprice")).as("attrs"))
+      src.write.format("icelite").option("iceberg", "true")
+        .option("location", loc).mode("overwrite").save()
+      val w = IcebergFormat.resumeWriter(spark, loc)
+      val jsonIds = (w.schemaNow.fieldNames.zip(w.fieldIdsNow) ++ w.nestedIdsNow)
+        .map { case (p, id) => p -> Option(id) }.toMap
+      assert(Seq("tags.element", "attrs.key", "attrs.value").forall(jsonIds.contains), jsonIds)
+      def idsOf(dir: String) = footers(dir).map(f => fileIds(f.getFileMetaData.getSchema))
+      assert(idsOf(s"$loc/data").nonEmpty && idsOf(s"$loc/data").forall(_ == jsonIds),
+        s"${idsOf(s"$loc/data")} != $jsonIds")
+      val few = src.filter(col("k") < 10)
+      few.union(few.withColumn("k", col("k") + 1000)).createOrReplaceTempView("pf_merge_src")
+      spark.sql("""MERGE INTO pf.ns.nested t USING pf_merge_src s ON t.k = s.k
+                   WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""")
+      val deltaDirs = new java.io.File(s"$loc/data").listFiles().map(_.getName)
+        .filter(_.startsWith("delta-"))
+      assert(deltaDirs.length == 1, deltaDirs.mkString(","))
+      assert(idsOf(s"$loc/data/${deltaDirs.head}").forall(_ == jsonIds))
+      assert(spark.sql("SELECT count(*) FROM pf.ns.nested").head().getLong(0) ==
+        src.count() + few.count())
+    } finally {
+      spark.conf.unset("spark.sql.catalog.pf")
+      spark.conf.unset("spark.sql.catalog.pf.warehouse")
+    }
+  }
+
+  test("string bounds compare in Spark's UTF-8 order: a supplementary character is never pruned") {
+    import graft.icelite.IcebergFormat
+    import spark.implicits._
+    val wh = scratch("v2utf8")
+    spark.conf.set("spark.sql.catalog.u8", "graft.sources.IceLiteCatalog")
+    spark.conf.set("spark.sql.catalog.u8.warehouse", wh)
+    val emoji = "\uD83D\uDE00" // U+1F600, above U+FF21 in UTF-8, below it in UTF-16
+    try {
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS u8.ns")
+      // icelite, SQL INSERT: the connector's inline stats
+      spark.sql("CREATE TABLE u8.ns.ins (s STRING)")
+      spark.sql(s"INSERT INTO u8.ns.ins VALUES ('$emoji')")
+      // icelite, library create + append: footer stats
+      new FsCatalog(spark, wh).createOrReplaceTable("ns", "app", Seq(emoji).toDF("s"))
+      // iceberg format
+      val loc = s"$wh/ns/ice"
+      val df  = Seq(emoji).toDF("s")
+      new IcebergFormat.Writer(spark, loc, df.schema)
+        .commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "f1", df)))
+      for (tbl <- Seq("ins", "app", "ice")) {
+        def n(pred: String) =
+          spark.sql(s"SELECT count(*) FROM u8.ns.$tbl WHERE $pred").head().getLong(0)
+        assert(n("s > '\uFF21'") == 1L, s"$tbl: s > U+FF21 pruned the row")
+        assert(n("s >= 'z'") == 1L && n("s < '\uFF21'") == 0L, tbl)
+        assert(n(s"s LIKE '$emoji%'") == 1L, tbl)
+      }
+    } finally {
+      spark.conf.unset("spark.sql.catalog.u8")
+      spark.conf.unset("spark.sql.catalog.u8.warehouse")
+    }
+  }
+
+  test("a NaN never drops a live row nor fails a pruned query") {
+    import graft.icelite.ColRange
+    import spark.implicits._
+    val wh = scratch("v2nan")
+    spark.conf.set("spark.sql.catalog.nn", "graft.sources.IceLiteCatalog")
+    spark.conf.set("spark.sql.catalog.nn.warehouse", wh)
+    try {
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS nn.ns")
+      for ((name, rows) <- Seq("nan_last" -> Seq(5.0, Double.NaN), "nan_first" -> Seq(Double.NaN, 5.0))) {
+        spark.sql(s"CREATE TABLE nn.ns.$name (d DOUBLE)")
+        rows.toDF("d").coalesce(1).createOrReplaceTempView("nan_src")
+        spark.sql(s"INSERT INTO nn.ns.$name SELECT d FROM nan_src")
+        def n(pred: String) =
+          spark.sql(s"SELECT count(*) FROM nn.ns.$name WHERE $pred").head().getLong(0)
+        // Spark orders NaN above every number
+        assert(n("d > 100") == 1L && n("d < 100") == 1L && n("d = 5.0") == 1L, name)
+        // the file holding the NaN records no bounds for d
+        val t = new FsCatalog(spark, wh).loadTable("ns", name)
+        val es = t.entriesOf(t.metadata.currentSnapshot.get)
+        assert(es.length == 1 && es.head.stats.exists(!_.contains("d")), es.toString)
+        // a "NaN" bound already on disk bounds nothing and fails nothing
+        t.commitReplaceScanned(es.map(_.file).toSet,
+          es.map(_.copy(stats = Some(Map("d" -> ColRange(Some("NaN"), Some("NaN")))))), "overwrite")
+        assert(n("d > 100") == 1L && n("d < 100") == 1L, s"$name with a NaN bound on disk")
+      }
+    } finally {
+      spark.conf.unset("spark.sql.catalog.nn")
+      spark.conf.unset("spark.sql.catalog.nn.warehouse")
+    }
   }
 }

@@ -171,4 +171,20 @@ class PureUtilsSpec extends AnyFunSuite {
         s"levBounded('$a','$b',$t) = $got, reference = $r")
     }
   }
+
+  // ------------------------------------------------------- bound order
+
+  test("prefixSuccessor is an upper bound of every prefixed string in UTF-8 byte order") {
+    import graft.sources.IcebergMorScan.prefixSuccessor
+    import org.apache.spark.unsafe.types.UTF8String
+    def compareStrings(a: String, b: String) =
+      UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+    val tails = Seq("", "a", "\uFFFF", "\uD83D\uDE00", "\uDBFF\uDFFF")
+    for (p <- Seq("ab", "a\uD7FF", "x\uFF21", "\uD83D\uDE00", "a\uDBFF\uDFFF", "\uFFFF")) {
+      val succ = prefixSuccessor(p)
+      assert(succ.isDefined, p)
+      tails.foreach(t => assert(compareStrings(p + t, succ.get) < 0, s"'$p$t' >= '${succ.get}'"))
+    }
+    assert(prefixSuccessor("\uDBFF\uDFFF").isEmpty) // nothing sorts above U+10FFFF
+  }
 }

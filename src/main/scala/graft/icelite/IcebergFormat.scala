@@ -5,7 +5,7 @@ import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -19,10 +19,11 @@ import org.json4s.jackson.JsonMethods
   * (SURVEY.md §7.1).
   *
   * Reader: `vN.metadata.json` → current snapshot → manifest-list Avro →
-  * manifest Avro entries (skipping deleted entries and delete manifests)
-  * → parquet file list + schema → one planned Spark scan. Planning cost is
-  * O(manifests) on the driver, exactly like Iceberg's own planner; the
-  * data read is a normal pushdown-capable parquet scan.
+  * manifest Avro entries (skipping deleted entries) → data and delete file
+  * plan. Planning cost is O(manifests) on the driver, exactly like
+  * Iceberg's own planner; the scans read through the DSv2 connector
+  * (`IcebergMorV2Table`), which applies deletes, partition values,
+  * defaults and lineage per file inside Spark's parquet reader.
   *
   * Writer: enough of the spec to commit genuine flat-schema tables —
   * per-commit manifest Avro (with spec field-ids in the Avro schema),
@@ -266,12 +267,7 @@ object IcebergFormat {
       // evolution, after which file columns resolve by parquet field id
       // (by-name would miss every pre-rename file's column)
       readById: Boolean = false,
-      nestedIds: Map[String, Int] = Map.empty, // path -> id (nested levels)
-      // v3 default values: field id -> decoded initial-default, and the
-      // schema-era map (file seq -> defaulted fields ABSENT in that era)
-      // deciding which files read the default instead of null
-      fieldDefaults: Map[Int, Any] = Map.empty,
-      absentBySeq: Map[Long, Set[Int]] = Map.empty)
+      nestedIds: Map[String, Int] = Map.empty) // path -> id (nested levels)
 
   /** One partition field's summary from a manifest-LIST entry (spec field
     * 507 `partitions`, ordered like the manifest's spec fields): whether
@@ -819,31 +815,6 @@ object IcebergFormat {
     val readById =
       (md \ "properties" \ "graft.read-by-id").extractOpt[String].contains("true")
 
-    // v3 default values: decode each defaulted field's initial-default,
-    // and compute which SCHEMA ERAS lack the field — a file reads the
-    // default iff the schema its commit wrote under didn't have the
-    // column yet (presence in later files decides null-vs-default)
-    val defaultsJ = parseDefaultsJson(schemaObj)
-    val fieldDefaults: Map[Int, Any] = defaultsJ.map { case (id, j) =>
-      id -> decodeDefault(sparkSchema.fields(fieldIds.indexOf(id)).dataType, j)
-    }
-    val absentBySeq: Map[Long, Set[Int]] =
-      if (fieldDefaults.isEmpty) Map.empty
-      else {
-        val schemaTopIds: Map[Int, Set[Int]] = (md \ "schemas") match {
-          case JArray(ss) => ss.map(s => (
-            (s \ "schema-id").extractOpt[Int].getOrElse(0),
-            (s \ "fields").extract[List[JObject]].map(f => (f \ "id").extract[Int]).toSet)).toMap
-          case _ => Map.empty
-        }
-        (md \ "snapshots").extract[List[JObject]].map { s =>
-          val seqN    = (s \ "sequence-number").extractOpt[Long].getOrElse(0L)
-          val schId   = (s \ "schema-id").extractOpt[Int].getOrElse(0)
-          val present = schemaTopIds.getOrElse(schId, Set.empty[Int])
-          seqN -> fieldDefaults.keySet.filterNot(present)
-        }.filter(_._2.nonEmpty).toMap
-      }
-
     val defaultSpecId = (md \ "default-spec-id").extractOpt[Int].getOrElse(0)
     // per-spec field lookups, memoized — an evolved table's manifests name
     // several specs, and each manifest prunes by its own
@@ -855,8 +826,7 @@ object IcebergFormat {
     val currentId = snapshotId.getOrElse(
       (md \ "current-snapshot-id").extractOpt[Long].getOrElse(-1L))
     if (currentId < 0)
-      return TablePlan(sparkSchema, fieldIds, Nil, Nil, readById, nestedIds,
-        fieldDefaults, absentBySeq)
+      return TablePlan(sparkSchema, fieldIds, Nil, Nil, readById, nestedIds)
     val snapshot = (md \ "snapshots").extract[List[JObject]]
       .find(s => (s \ "snapshot-id").extract[Long] == currentId)
       .getOrElse(throw new NoSuchElementException(s"snapshot $currentId not in metadata"))
@@ -1024,7 +994,7 @@ object IcebergFormat {
     }
     TablePlan(sparkSchema, fieldIds,
       planned.collect { case Left(f) => f }, planned.collect { case Right(d) => d },
-      readById, nestedIds, fieldDefaults, absentBySeq)
+      readById, nestedIds)
   }
 
   /** Parse a manifest-list entry's `partitions` summaries (spec field 507)
@@ -1073,16 +1043,19 @@ object IcebergFormat {
     }
   }
 
-  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
   /** Scan a standard Iceberg table pinned to the given metadata file (the
     * reference's `iceberg_scan('{metadata}')` contract), with v2 row-level
     * deletes applied. */
-  def scan(spark: SparkSession, metadataPath: String): DataFrame = {
-    val p = plan(spark, metadataPath)
-    scanFiles(spark, p, p.files)
-  }
+  def scan(spark: SparkSession, metadataPath: String): DataFrame = read(spark, metadataPath)
+
+  /** Every library scan: a DataFrame over the connector's table pinned to
+    * `metadataPath` (and `snapshotId`, or the pre-pruned `planned`), so
+    * manifest pruning, metadata-only COUNT(*), statistics and runtime
+    * filtering apply as they do to catalog reads. */
+  private[graft] def read(spark: SparkSession, metadataPath: String, snapshotId: Option[Long] = None,
+      planned: Option[TablePlan] = None): DataFrame =
+    org.apache.spark.sql.graft.bridge.tableFrame(spark,
+      graft.sources.IcebergMorV2Table.pinned(spark, metadataPath, snapshotId, planned))
 
   /** Snapshot ids of the metadata file in APPEND ORDER (the order the
     * `snapshots` array records them — real Iceberg ids are random longs,
@@ -1213,232 +1186,23 @@ object IcebergFormat {
     * the sequence numbers THAT snapshot's manifest list carries, so a
     * pre-delete snapshot reads the undeleted rows. */
   def scanAt(spark: SparkSession, metadataPath: String, snapshotId: Long): DataFrame = {
-    val p = plan(spark, metadataPath, Some(snapshotId))
-    scanFiles(spark, p, p.files)
+    // an expired or unknown snapshot fails here, not when the scan plans
+    if (!snapshotLog(spark, metadataPath).contains(snapshotId))
+      throw new NoSuchElementException(s"snapshot $snapshotId not in metadata")
+    read(spark, metadataPath, Some(snapshotId))
   }
 
-  /** Read `files` with the plan's delete files applied (spec "Scan
-    * Planning" / "Row-level deletes"):
-    *
-    *   - position deletes (content 1) remove `(file_path, pos)` rows from
-    *     data files whose data sequence number <= the delete's;
-    *   - equality deletes (content 2) remove rows matching any delete row
-    *     on the `equality_ids` columns (null-safe, per spec) from data
-    *     files STRICTLY older than the delete.
-    *
-    * Both are anti-joins keyed by `_metadata` columns — delete files are
-    * per-partition-sized in a real table, so at scale these broadcast and
-    * the data side streams map-side; no extra shuffle of the fact scan. */
-  private def scanFiles(spark: SparkSession, p: TablePlan, files: Seq[PlannedFile],
-      lineage: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val outNames =
-      if (lineage) p.schema.fieldNames.toSeq ++ Seq("_row_id", "_last_updated_sequence_number")
-      else p.schema.fieldNames.toSeq
-    val lineageFields = Seq(
-      StructField("_row_id", LongType, nullable = true),
-      StructField("_last_updated_sequence_number", LongType, nullable = true))
-    if (files.isEmpty)
-      return emptyFrame(spark,
-        if (lineage) StructType(p.schema.fields ++ lineageFields) else p.schema)
-    // a rename/drop-evolved table resolves file columns by parquet field
-    // id: the read schema carries the ids, and the relation is built under
-    // the [[idReadSession]] twin so the id-matching flag is live at
-    // execution WITHOUT mutating the caller's session conf. A data file
-    // without stamped ids fails LOUDLY here — by-name fallback could
-    // resurrect a dropped-and-readded column's old values.
-    val readSchema0 =
-      if (p.readById) withParquetFieldIds(p.schema, p.fieldIds, p.nestedIds) else p.schema
-    // lineage columns read as PHYSICAL columns where a rewrite
-    // materialized them (Spark null-fills the files that lack them)
-    val readSchema =
-      if (lineage) StructType(readSchema0.fields ++ lineageFields) else readSchema0
-    val readSpark = if (p.readById) idReadSession(spark) else spark
-    // The manifests already planned these exact files; Spark's relation
-    // builder still stats them, and above the parallel-discovery
-    // threshold (32) it does so with a DISTRIBUTED listing job — ~1 s of
-    // scheduler churn per scan for metadata the driver can fetch in
-    // milliseconds (measured: 256-file scan 1.67 s -> 0.27 s). Listing is
-    // eager at relation creation, so a scoped raise of the threshold —
-    // serialized per session by [[withDriverListing]] so concurrent scans
-    // can never observe or clobber each other's value (round 18) — keeps
-    // driver-side listing for manifest-planned file lists without leaking
-    // into other reads. Bounded: past `graft.scan.driverListingBound`
-    // files (default 4096) sequential driver stats would themselves be
-    // the bottleneck and the distributed job is the right tool again.
-    val driverListBound = spark.conf.get("graft.scan.driverListingBound", "4096").toInt
-    val base = if (files.size <= driverListBound) {
-      withDriverListing(readSpark, files.size) {
-        readSpark.read.schema(readSchema).parquet(files.map(_.path.toString): _*)
-      }
-    } else readSpark.read.schema(readSchema).parquet(files.map(_.path.toString): _*)
-
-    // Identity partition columns recorded in the manifests' partition
-    // records (spec "Column Projection"): an identity source column may be
-    // OMITTED from data files, its per-file constant living only in
-    // partition metadata. Reconstruct via a broadcast (path -> value) join;
-    // files that do carry the column win through coalesce — for identity
-    // both sides hold the same constant by definition.
-    val idToField = p.fieldIds.zip(p.schema.fields).toMap
-    val overlayIds = p.fieldIds.filter { id =>
-      files.exists(_.partition.contains(id)) && (idToField(id).dataType match {
-        case IntegerType | LongType | FloatType | DoubleType | BooleanType | StringType => true
-        case _ => false
-      })
-    }
-    if (p.deletes.isEmpty && overlayIds.isEmpty && p.fieldDefaults.isEmpty && !lineage)
-      return base
-
-    // URI-scheme normalization so manifest paths (`file:/x`, `/x`) and
-    // Spark's `_metadata.file_path` (`file:///x`) compare equal. Local and
-    // bucket-style paths only — an authority component would need the
-    // full-URI form on both sides.
-    def normStr(s: String): String  = s.replaceFirst("^[a-z][a-z0-9+.-]*:/+", "/")
-    def normCol(c: Column): Column = regexp_replace(c, "^[a-z][a-z0-9+.-]*:/+", "/")
-
-    var data = base
-      .withColumn("__path", normCol(col("_metadata.file_path")))
-      .withColumn("__pos", col("_metadata.row_index"))
-
-    if (overlayIds.nonEmpty) {
-      val pSchema = StructType(StructField("__path", StringType) +:
-        overlayIds.map(id => StructField(s"__pv_$id", StringType)))
-      val pRows = files.map(f => org.apache.spark.sql.Row.fromSeq(
-        normStr(f.path.toString) +: overlayIds.map(id => f.partition.get(id).map(_.toString).orNull)))
-      val pdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(pRows, 1), pSchema)
-      data = data.join(broadcast(pdf), Seq("__path"), "left")
-      overlayIds.foreach { id =>
-        val fld = idToField(id)
-        data = data.withColumn(fld.name,
-          coalesce(col(fld.name), col(s"__pv_$id").cast(fld.dataType)))
-      }
-    }
-
-    // v3 default values: a file whose schema era predates a defaulted
-    // column reads `initial-default` for it; files that physically carry
-    // the column keep their values INCLUDING explicit nulls (presence
-    // decides, not coalesce). Same broadcast path->flag overlay as the
-    // partition reconstruction above.
-    val defNeeds: Seq[(Int, Set[String])] = p.fieldDefaults.keys.toSeq.sorted.map { id =>
-      id -> files.filter(f => p.absentBySeq.getOrElse(f.seq, Set.empty[Int]).contains(id))
-        .map(f => normStr(f.path.toString)).toSet
-    }.filter(_._2.nonEmpty)
-    if (defNeeds.nonEmpty) {
-      val dSchema = StructType(StructField("__path", StringType) +:
-        defNeeds.map { case (id, _) => StructField(s"__df_$id", BooleanType) })
-      val dRows = files.map { f =>
-        val n = normStr(f.path.toString)
-        org.apache.spark.sql.Row.fromSeq(
-          n +: defNeeds.map { case (_, set) => Boolean.box(set(n)) })
-      }
-      val ddf = spark.createDataFrame(spark.sparkContext.parallelize(dRows, 1), dSchema)
-      data = data.join(broadcast(ddf), Seq("__path"), "left")
-      defNeeds.foreach { case (id, _) =>
-        val fld = idToField(id)
-        data = data.withColumn(fld.name,
-          when(col(s"__df_$id"), lit(p.fieldDefaults(id)).cast(fld.dataType))
-            .otherwise(col(fld.name)))
-      }
-    }
-
-    // v3 row lineage: implicit values derive per file (first_row_id +
-    // position; last-updated = the file's data sequence number) unless a
-    // rewrite materialized them physically — physical wins via coalesce
-    if (lineage) {
-      val ldf = spark.createDataFrame(files.map(f =>
-        (normStr(f.path.toString), f.firstRowId.getOrElse(-1L),
-          f.firstRowId.isDefined, f.seq)))
-        .toDF("__path", "__frbase", "__frset", "__fseq")
-      data = data.join(broadcast(ldf), Seq("__path"), "left")
-        .withColumn("_row_id", coalesce(col("_row_id"),
-          when(col("__frset"), col("__frbase") + col("__pos"))))
-        .withColumn("_last_updated_sequence_number",
-          coalesce(col("_last_updated_sequence_number"), col("__fseq")))
-    }
-
-    if (p.deletes.isEmpty)
-      return data.select(outNames.map(col).toIndexedSeq: _*)
-
-    val seqRows = files.map(f => (normStr(f.path.toString), f.seq))
-    val seqDf   = spark.createDataFrame(seqRows).toDF("__path", "__dataseq")
-    data = data.join(broadcast(seqDf), "__path")
-
-    // v3 deletion vectors: ONE effective DV per data file (the max-seq
-    // vector supersedes — its writer merged every prior delete for the
-    // file, the v3 contract). Blob fetch + bitmap expansion run on
-    // EXECUTORS (one task per vector, ranged read of exactly the blob),
-    // so driver work is O(#vectors) metadata only. Older parquet
-    // position deletes the vector absorbed may still apply below — the
-    // anti-join is idempotent, so that costs IO, never correctness.
-    val dvDeletes = p.deletes.filter(d => d.content == 1 && d.dvRef.isDefined)
-    if (dvDeletes.nonEmpty) {
-      val dvByFile = dvDeletes.groupBy(d => normStr(d.dvRef.get))
-        .map { case (f, ds) => f -> ds.maxBy(_.seq) }
-      val metas = dvByFile.toSeq.map { case (f, d) =>
-        (f, d.seq, d.path.toString, d.dvOffset, d.dvSize)
-      }
-      val dvRows = spark.sparkContext
-        .parallelize(metas, math.max(1, math.min(metas.size, 64)))
-        .flatMap { case (f, dseq, blobPath, off, sz) =>
-          val bm = DeletionVectors.readBitmap(blobPath, off, sz)
-          val it = bm.getLongIterator
-          // NOTE: Iterator inherits a legacy `seq: this.type` member, so
-          // the captured sequence number must not be named `seq` here
-          new Iterator[(String, Long, Long)] {
-            override def hasNext: Boolean = it.hasNext
-            override def next(): (String, Long, Long) = (f, it.next(), dseq)
-          }
+  /** The data files `df`'s Iceberg-format connector scans read after
+    * manifest and pushed-filter pruning: `Dataset.inputFiles` for these
+    * scans, which Spark reports only for file-source relations. */
+  def inputFiles(df: DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan match {
+          case s: graft.sources.IcebergMorScan => s.survivors.map(_.path.toString)
+          case _                               => Nil
         }
-      val dvDf = spark.createDataFrame(dvRows).toDF("__dp", "__dpos", "__delseq")
-      data = data.join(broadcast(dvDf),
-        col("__path") === col("__dp") && col("__pos") === col("__dpos") &&
-          col("__dataseq") <= col("__delseq"),
-        "left_anti")
-    }
-
-    val posDeletes = p.deletes.filter(d => d.content == 1 && d.dvRef.isEmpty)
-    if (posDeletes.nonEmpty) {
-      val dels = posDeletes.groupBy(_.seq).map { case (seq, group) =>
-        // explicit schema: the (file_path, pos) layout is fixed by the
-        // spec, and a schemaless read fires a footer-inference job per
-        // delete group (round 18 — metadata-only, the rows still stream)
-        spark.read.schema(positionDeletesSchema)
-          .parquet(group.map(_.path.toString): _*)
-          .select(normCol(col("file_path")).as("__dp"), col("pos").as("__dpos"),
-            lit(seq).as("__delseq"))
-      }.reduce(_ unionAll _)
-      data = data.join(broadcast(dels),
-        col("__path") === col("__dp") && col("__pos") === col("__dpos") &&
-          col("__dataseq") <= col("__delseq"),
-        "left_anti")
-    }
-
-    val idToName = p.fieldIds.zip(p.schema.fieldNames).toMap
-    p.deletes.filter(_.content == 2).groupBy(d => (d.seq, d.equalityIds)).foreach {
-      case ((seq, eqIds), group) =>
-        require(eqIds.nonEmpty, "equality delete file without equality_ids")
-        val keyNames = eqIds.map(id => idToName.getOrElse(id,
-          throw new NoSuchElementException(s"equality_id $id not in schema")))
-        // on a rename-evolved table the delete file may carry pre-rename
-        // names: bind its key columns by their equality ids
-        val keySchema = StructType(keyNames.map(n =>
-          p.schema.fields(p.schema.fieldNames.indexOf(n)).copy(nullable = true)))
-        val delBase =
-          if (p.readById)
-            idReadSession(spark).read.schema(withParquetFieldIds(keySchema, eqIds))
-              .parquet(group.map(_.path.toString): _*)
-          // explicit key schema by name (an un-evolved table's delete file
-          // carries current names): skips the per-group footer-inference job
-          else spark.read.schema(keySchema).parquet(group.map(_.path.toString): _*)
-        val delKeys = delBase
-          .select(keyNames.map(n => col(n).as(s"__eq_$n")): _*).distinct()
-        val keyMatch = keyNames.map(n => col(n) <=> col(s"__eq_$n")).reduce(_ && _)
-        data = data.join(broadcast(delKeys), keyMatch && col("__dataseq") < lit(seq), "left_anti")
-    }
-
-    data.select(outNames.map(col).toIndexedSeq: _*)
-  }
+    }.flatten.distinct
 
   /** Scan with the v3 ROW-LINEAGE metadata columns appended: `_row_id`
     * (file `first_row_id` + position, or the physically-materialized
@@ -1446,8 +1210,9 @@ object IcebergFormat {
     * for files committed before lineage tracking — the spec's
     * unassigned state. */
   def scanWithLineage(spark: SparkSession, metadataPath: String): DataFrame = {
-    val p = plan(spark, metadataPath)
-    scanFiles(spark, p, p.files, lineage = true)
+    val df = read(spark, metadataPath)
+    df.select((df.columns ++ Seq("_row_id", "_last_updated_sequence_number"))
+      .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
   }
 
   /** Files of the current snapshot whose recorded [lower, upper] bounds for
@@ -1467,8 +1232,8 @@ object IcebergFormat {
   }
 
   /** Can `f` hold rows with `colName` in [lower, upper]? The single
-    * per-file pruning predicate behind both [[planFiles]] (library scans)
-    * and the standard-format V2 scan's `SupportsPushDownFilters`
+    * per-file pruning predicate behind [[planFiles]], [[scanRange]],
+    * [[scanPoints]] and the standard-format V2 scan's `SupportsPushDownFilters`
     * (IcebergMorScanBuilder): identity partition values prune exactly,
     * order-preserving transforms prune ranges, bucket transforms prune
     * point lookups, column bounds prune conservatively, and a file with
@@ -1554,9 +1319,6 @@ object IcebergFormat {
     }
   }
 
-  /** Range-pruned scan over a standard Iceberg table: reads only files
-    * whose bounds can contain `colName` in [lower, upper]; the caller
-    * still applies the row-level predicate. */
   /** (manifest path, content 0=data 1=deletes) entries of the current
     * snapshot's manifest list — lets gates assert planning-cost effects
     * (e.g. rewrite_manifests collapsing O(commits) manifests to O(specs)). */
@@ -1582,11 +1344,14 @@ object IcebergFormat {
     }
   }
 
+  /** Range-pruned scan over a standard Iceberg table: reads only files
+    * whose bounds can contain `colName` in [lower, upper], with the plan's
+    * deletes; the caller still applies the row-level predicate. */
   def scanRange(spark: SparkSession, metadataPath: String, colName: String,
       lower: Option[String], upper: Option[String]): DataFrame = {
-    val p    = plan(spark, metadataPath)
-    val keep = planFiles(spark, metadataPath, colName, lower, upper).toSet
-    scanFiles(spark, p, p.files.filter(f => keep(f.path.toString)))
+    val p = plan(spark, metadataPath)
+    read(spark, metadataPath,
+      planned = Some(p.copy(files = p.files.filter(fileCanMatch(p, _, colName, lower, upper)))))
   }
 
   /** IN-list-pruned scan in ONE plan: keeps files that can match ANY of
@@ -1627,7 +1392,7 @@ object IcebergFormat {
       vset.flatMap(s => pinned(f).map(s.contains)).getOrElse(
         values.exists(v => fileCanMatch(p, f, colName, Some(v), Some(v))))
     }
-    (scanFiles(spark, p, keep), keep.size, p.files.size)
+    (read(spark, metadataPath, planned = Some(p.copy(files = keep))), keep.size, p.files.size)
   }
 
   // ----------------------------------- single-value serialization (spec D)
@@ -1984,29 +1749,6 @@ object IcebergFormat {
       ns.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
       ns
     })
-
-  /** Per-session monitor serializing the scoped discovery-threshold
-    * set/relation-create/restore window in [[scanFiles]] (round 18,
-    * VERDICT r17 item 6): without it two concurrent scans could
-    * interleave and restore a mid-flight value, or one could driver-stat
-    * a genuinely large path set it observed under the other's raised
-    * threshold. Relation creation for a driver-listed (≤ bound) file set
-    * is milliseconds of driver work, so the serialization is free. */
-  private val listLocks =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, Object]()
-  private def withDriverListing[T](session: SparkSession, nFiles: Int)(body: => T): T = {
-    val threshKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val lock = listLocks.computeIfAbsent(session, _ => new Object)
-    lock.synchronized {
-      val saved = session.conf.getOption(threshKey)
-      session.conf.set(threshKey, (nFiles + 1).toString)
-      try body
-      finally saved match {
-        case Some(v) => session.conf.set(threshKey, v)
-        case None    => session.conf.unset(threshKey)
-      }
-    }
-  }
 
   /** `df` with its top-level columns re-aliased to carry `parquet.field.id`
     * metadata, so the parquet files this write produces are id-stamped.

@@ -145,44 +145,24 @@ object MatView {
 
   /** Read `files` of `p` RAW (no delete application) with normalized
     * `__path` / `__pos` provenance — the building block both insert and
-    * retraction partials resolve rows through. Identity-partition values
-    * omitted from data files are reconstructed from the manifests'
-    * partition records, as the spec's Column Projection requires. */
+    * retraction partials resolve rows through. The scan is the library
+    * scan pinned to `metaPath`, so identity-partition values omitted from
+    * data files come from the manifests' partition records like in every
+    * other read. `__path` is the file's full normalized path, the form
+    * the delete pairs below carry; the scan's `_file` is manifest-relative
+    * for files under `data/snap-`, so it is mapped back per file. */
   private def readRaw(
       spark: SparkSession,
+      metaPath: String,
       p: IcebergFormat.TablePlan,
       files: Seq[IcebergFormat.PlannedFile]): DataFrame = {
-    val readSchema =
-      if (p.readById) IcebergFormat.withParquetFieldIds(p.schema, p.fieldIds, p.nestedIds)
-      else p.schema
-    val rs   = if (p.readById) IcebergFormat.idReadSession(spark) else spark
-    var data = rs.read.schema(readSchema).parquet(files.map(_.path.toString): _*)
-      .withColumn("__path", normCol(col("_metadata.file_path")))
-      .withColumn("__pos", col("_metadata.row_index"))
-    // identity partition overlay (files may omit the column entirely)
-    val idToField = p.fieldIds.zip(p.schema.fields).toMap
-    val overlayIds = p.fieldIds.filter { id =>
-      files.exists(_.partition.contains(id)) && (idToField(id).dataType match {
-        case IntegerType | LongType | FloatType | DoubleType | BooleanType | StringType => true
-        case _ => false
-      })
-    }
-    if (overlayIds.nonEmpty) {
-      val pSchema = StructType(StructField("__path", StringType) +:
-        overlayIds.map(id => StructField(s"__pv_$id", StringType)))
-      val pRows = files.map(f => org.apache.spark.sql.Row.fromSeq(
-        normStr(f.path.toString) +:
-          overlayIds.map(id => f.partition.get(id).map(_.toString).orNull)))
-      val pdf = spark.createDataFrame(spark.sparkContext.parallelize(pRows, 1), pSchema)
-      data = data.join(broadcast(pdf), Seq("__path"), "left")
-      overlayIds.foreach { id =>
-        val fld = idToField(id)
-        data = data.withColumn(fld.name,
-          coalesce(col(fld.name), col(s"__pv_$id").cast(fld.dataType)))
-      }
-      data = data.select((p.schema.fieldNames :+ "__path" :+ "__pos").map(col).toIndexedSeq: _*)
-    }
-    data
+    val paths = files.map(_.path.toString).distinct
+    val full  = paths.map(f => graft.sources.IceLiteReaderFactory.relOf(f) -> normStr(f)).toMap
+    require(full.size == paths.size, "two data files share one manifest-relative path")
+    IcebergFormat.read(spark, metaPath, planned = Some(p.copy(files = files, deletes = Nil)))
+      .select((p.schema.fieldNames.map(col) :+
+        element_at(typedLit(full), col("_file")).as("__path") :+
+        col("_pos").as("__pos")).toIndexedSeq: _*)
   }
 
   /** Distributed multi-file write of `df` into `loc`'s data dir: one
@@ -316,7 +296,7 @@ object MatView {
     // delseq, equality deletes strictly-older — both false for new files).
     val inserts: Option[DataFrame] =
       if (added.isEmpty) None
-      else Some(readRaw(spark, toPlan, added).withColumn("__sign", lit(1)))
+      else Some(readRaw(spark, basePath, toPlan, added).withColumn("__sign", lit(1)))
 
     // ---- retraction partials: rows the NEW deletes target — parquet
     // position-delete rows AND deletion-vector bitmaps both contribute
@@ -375,7 +355,7 @@ object MatView {
         else {
           val seqDf = spark.createDataFrame(
             refFiles.map(f => (normStr(f.path.toString), f.seq))).toDF("__path", "__dataseq")
-          val rows = readRaw(spark, toPlan, refFiles)
+          val rows = readRaw(spark, basePath, toPlan, refFiles)
             .join(broadcast(seqDf), "__path")
             .join(broadcast(newPairs), Seq("__path", "__pos"))
             .filter(col("__dataseq") <= col("__delseq"))

@@ -1730,8 +1730,8 @@ object Sim {
     val idx = cellsToRead.toSeq.sorted
       .map(c => IcebergFormat.scanRange(s, meta, "cell", Some(c.toString), Some(c.toString)))
       .reduce(_ unionByName _)
-    require(idx.inputFiles.length <= cellsToRead.size,
-      s"index scan read ${idx.inputFiles.length} files for ${cellsToRead.size} cells — " +
+    require(IcebergFormat.inputFiles(idx).length <= cellsToRead.size,
+      s"index scan read ${IcebergFormat.inputFiles(idx).length} files for ${cellsToRead.size} cells — " +
         "manifest cell bounds failed to prune")
     probedTopK(s, idx, queries)
   }
@@ -2033,9 +2033,9 @@ object Sim {
     val idx = cellsToRead.toSeq.sorted
       .map(c => IcebergFormat.scanRange(s, meta, "cell", Some(c.toString), Some(c.toString)))
       .reduce(_ unionByName _)
-    require(idx.inputFiles.length == 2 * cellsToRead.size,
+    require(IcebergFormat.inputFiles(idx).length == 2 * cellsToRead.size,
       s"expected base+delta per probed cell (${2 * cellsToRead.size} files), " +
-        s"scan planned ${idx.inputFiles.length}")
+        s"scan planned ${IcebergFormat.inputFiles(idx).length}")
     probedTopK(s, idx, queries)
   }
 
@@ -2094,9 +2094,9 @@ object Sim {
     val idx = cellsToRead.toSeq.sorted
       .map(c => IcebergFormat.scanRange(s, meta, "cell", Some(c.toString), Some(c.toString)))
       .reduce(_ unionByName _)
-    require(idx.inputFiles.length == cellsToRead.size,
+    require(IcebergFormat.inputFiles(idx).length == cellsToRead.size,
       s"post-compaction search should open ONE file per probed cell " +
-        s"(${cellsToRead.size}), planned ${idx.inputFiles.length}")
+        s"(${cellsToRead.size}), planned ${IcebergFormat.inputFiles(idx).length}")
     probedTopK(s, idx, queries)
   }
 

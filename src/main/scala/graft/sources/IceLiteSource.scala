@@ -100,8 +100,9 @@ final class IceLiteSource extends TableProvider with DataSourceRegister {
         throw new UnsupportedOperationException(
           s"no Iceberg table at $loc to infer a schema from; writes pass the " +
             "DataFrame schema, batch reads go through Engine.scanIcebergMetadata")
-      graft.icelite.IcebergFormat.scan(SparkSession.active,
-        graft.icelite.IcebergFormat.currentMetadataPath(SparkSession.active, loc)).schema
+      // the library scan's schema from ONE metadata-JSON read (the
+      // table's plan header); no manifest is planned
+      new IcebergMorV2Table(SparkSession.active, loc).schema()
     } else loadIce(options).metadata.schema
 
   override def inferPartitioning(options: CaseInsensitiveStringMap): Array[Transform] =
@@ -820,7 +821,11 @@ final case class PositionDeleteFile(
     // v3 deletion vector: (blob offset, blob size, referenced data file).
     // Set => `path` is a Puffin file and the vector applies to exactly
     // the referenced file (no range semantics).
-    dv: Option[(Long, Long, String)] = None)
+    dv: Option[(Long, Long, String)] = None,
+    // data sequence number (Iceberg spec): the delete applies only to
+    // data files at most this new, so a path a delete names before the
+    // file exists keeps its rows; None applies to every covered file
+    seq: Option[Long] = None)
 
 /** One live merge-on-read EQUALITY-delete file (spec content 2): its rows
   * are delete KEYS over `keyCols`, applied to data files whose data
@@ -874,6 +879,14 @@ object IceLiteReaderFactory {
   private val LineageColumns = Seq("_row_id", "_last_updated_sequence_number")
   private val RowIndex = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
 
+  /** Manifest-relative path of an absolute data-file path (anchored at the
+    * `data/snap-` segment every committed file lives under) — the `_file`
+    * value the scan emits for that file. */
+  def relOf(full: String): String = {
+    val i = full.indexOf("/data/snap-")
+    if (i >= 0) full.substring(i + 1) else full
+  }
+
   /** Build the scan's reader functions and row layout. `tableSchema`
     * carries `parquet.field.id` metadata on a rename/drop-evolved table:
     * its columns then bind by id under [[IcebergFormat.idReadSession]],
@@ -901,9 +914,13 @@ object IceLiteReaderFactory {
     val needPos = meta.exists(n => n == "_pos" || n == "_row_id") ||
       deletes.nonEmpty || partitionDeletes
     val dataCols = (required.fieldNames.filterNot(isMeta) ++ eqDeletes.flatMap(_.keyCols)).distinct
+    // a nested column Spark pruned reads as its pruned type: the scan's
+    // output binds subfields by position in `required`
+    def readField(n: String): StructField = required.find(_.name == n)
+      .fold(tableField(n))(r => tableField(n).copy(dataType = r.dataType))
     // lineage columns decode physically where a rewrite materialized
     // them; Spark reads them as null from files that lack them
-    val readSchema = StructType(dataCols.map(n => withExistenceDefault(tableField(n))) ++
+    val readSchema = StructType(dataCols.map(n => withExistenceDefault(readField(n))) ++
       LineageColumns.filter(meta.contains).map(StructField(_, LongType)) ++
       (if (needPos) Seq(StructField(RowIndex, LongType)) else Nil))
 
@@ -1021,34 +1038,32 @@ final class IceLitePartitionReader(f: IceLiteReaderFactory, partition: IceLitePa
       out
     })
 
-  /** Manifest-relative path of an absolute data-file path (anchored at the
-    * `data/snap-` segment every committed file lives under) — the `_file`
-    * value, and the key position-delete files match on. */
-  private def relOf(full: String): String = {
-    val i = full.indexOf("/data/snap-")
-    if (i >= 0) full.substring(i + 1) else full
-  }
-
-  /** Deleted positions of data file `rel` as a bitmap, or null when no
-    * delete file's path range covers it. Bounded work: only covering
-    * delete files are opened (range-pruned), and the bitmap holds only
-    * this file's deleted positions — the per-task "delete index" shape
-    * Iceberg MoR readers use. */
-  private def loadDeletes(rel: String): java.util.BitSet = {
-    def strip(s: String) = s.replaceFirst("^[a-z][a-z0-9+.-]*:/+", "/")
-    val relN = strip(rel)
+  /** Deleted positions of data file `path` (`_file` value `rel`, data
+    * sequence number `seq`) as a bitmap, or null when no delete file's
+    * path range covers it. Bounded work: only covering delete files are
+    * opened (range-pruned), and the bitmap holds only this file's deleted
+    * positions — the per-task "delete index" shape Iceberg MoR readers
+    * use. A delete names the file either by `rel` (the connector's own
+    * deltas write `_file`) or by its full path (spec writers and deletion
+    * vectors), and scheme-insensitively: writers record one local file as
+    * `file:/x`, `file:///x` or `/x`. */
+  private def loadDeletes(path: String, rel: String, seq: Option[Long]): java.util.BitSet = {
+    def strip(s: String) =
+      if (s.indexOf(":/") < 0) s else s.replaceFirst("^[a-z][a-z0-9+.-]*:/+", "/")
+    val names = Seq(strip(rel), strip(path)).distinct
     // v3 deletion vectors match their referenced file EXACTLY (fields
     // 143-145); parquet delete files match by their recorded path range.
     // When multiple vectors name the file, older ones are subsets of the
     // newest (the v3 superset contract), so OR-ing all of them equals
     // applying the newest.
     val covering = deletes.filter { d =>
-      d.dv match {
-        case Some((_, _, ref)) => strip(ref) == relN
-        case None =>
-          d.minFp.forall(BoundOrder.compareStrings(_, rel) <= 0) &&
-            d.maxFp.forall(BoundOrder.compareStrings(rel, _) <= 0)
-      }
+      d.seq.forall(ds => seq.forall(_ <= ds)) && (d.dv match {
+        case Some((_, _, ref)) => names.contains(strip(ref))
+        case None => names.exists { n =>
+          d.minFp.forall(lo => BoundOrder.compareStrings(strip(lo), n) <= 0) &&
+            d.maxFp.forall(hi => BoundOrder.compareStrings(n, strip(hi)) <= 0)
+        }
+      })
     }
     if (covering.isEmpty) return null
     val bs = new java.util.BitSet()
@@ -1056,7 +1071,9 @@ final class IceLitePartitionReader(f: IceLiteReaderFactory, partition: IceLitePa
       require(p >= 0 && p <= Int.MaxValue.toLong, s"delete position $p out of bitmap range")
       bs.set(p.toInt)
     }
-    val relU = UTF8String.fromString(rel)
+    val forms = (Seq(rel, path) ++ names.flatMap(n =>
+      n +: (if (n.startsWith("/")) Seq(s"file:$n", s"file://$n") else Nil)))
+      .distinct.map(UTF8String.fromString).toArray
     covering.foreach { d =>
       IceLiteSource.deleteFilesOpened.increment()
       d.dv match {
@@ -1065,7 +1082,10 @@ final class IceLitePartitionReader(f: IceLiteReaderFactory, partition: IceLitePa
           while (it.hasNext) mark(it.next())
         case None =>
           val it = f.readDeletes.get(wholeFile(d.path))
-          try it.foreach(r => if (r.getUTF8String(0) == relU) mark(r.getLong(1)))
+          try it.foreach { r =>
+            val fp = r.getUTF8String(0)
+            if (forms.exists(_ == fp)) mark(r.getLong(1))
+          }
           finally closeRows(it)
       }
     }
@@ -1078,10 +1098,11 @@ final class IceLitePartitionReader(f: IceLiteReaderFactory, partition: IceLitePa
     val path = partition.files(i)
     fileIdx += 1
     IceLiteSource.filesOpened.increment()
-    val rel = relOf(path)
+    val rel = IceLiteReaderFactory.relOf(path)
     // data sequence number: only equality deletes STRICTLY newer than the
-    // file apply (a restated row survives); files planned without one
-    // (non-MoR paths) never see equality deletes
+    // file apply (a restated row survives), position deletes at least as
+    // new; files planned without one (non-MoR paths) never see equality
+    // deletes
     val seq = partition.seqs.lift(i)
     consts.update(0, UTF8String.fromString(rel))
     consts.update(1, partition.firstRowIds.lift(i).flatten.map(Long.box).orNull)
@@ -1090,7 +1111,7 @@ final class IceLitePartitionReader(f: IceLiteReaderFactory, partition: IceLitePa
       consts.update(IceLiteReaderFactory.FileConstants + j,
         if (partition.key == null) null else partition.key.get(j, f.partTypes(j)))
     }
-    delSet = loadDeletes(rel)
+    delSet = loadDeletes(path, rel, seq)
     eqChecks = f.eqDeletes.filter(d => seq.exists(d.seq > _))
       .map(d => (keyProjections(d.keyCols), loadEqKeys(d)))
     val range = partition.ranges.lift(i)

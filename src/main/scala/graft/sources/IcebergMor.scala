@@ -23,10 +23,10 @@ import java.util.Locale
   * `file_path`/`pos` rows) plus ordinary v2-layout data files for
   * UPDATE/MERGE inserts, and [[IcebergFormat.resumeWriter]] commits them
   * as one delta snapshot — every existing data file is carried by pointer,
-  * byte-untouched. Readers on BOTH surfaces agree: this table's V2 batch
-  * scan applies the deletes from per-file bitmaps, and the library/DuckDB
-  * reader (`IcebergFormat.scan`, ic21/ic51) applies them through the
-  * spec's sequence-numbered anti-join.
+  * byte-untouched. This table's V2 batch scan applies the deletes from
+  * per-file bitmaps, and it is also the library reader: `IcebergFormat
+  * .scan` and its siblings (the DuckDB `iceberg_scan` path, ic21/ic51)
+  * are DataFrames over [[IcebergMorV2Table.pinned]].
   *
   * Scope mirrors the resumed-commit surface: flat primitive schemas,
   * including identity/bucket/temporal-partitioned and additively
@@ -51,18 +51,36 @@ object IcebergMorV2Table {
       g != null && g.nonEmpty
     }
   }
+
+  /** The table pinned to `metaPath` (the `iceberg_scan(metadata.json)`
+    * contract) and, for time travel, to `snapshotId`. `planned` is a plan
+    * the caller already pruned to a file subset: scans read exactly its
+    * files and deletes instead of planning the manifests again. */
+  def pinned(spark: SparkSession, metaPath: String, snapshotId: Option[Long] = None,
+      planned: Option[IcebergFormat.TablePlan] = None): IcebergMorV2Table =
+    new IcebergMorV2Table(spark, new Path(metaPath).getParent.getParent.toString, metaPath,
+      snapshotId, planned)
 }
 
-final class IcebergMorV2Table(spark: SparkSession, location: String)
+final class IcebergMorV2Table private (
+    spark: SparkSession,
+    location: String,
+    metaPath: String,
+    snapshotId: Option[Long],
+    planned: Option[IcebergFormat.TablePlan])
     extends Table with SupportsRead with SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
-  private val metaPath = IcebergFormat.currentMetadataPath(spark, location)
+  def this(spark: SparkSession, location: String) =
+    this(spark, location, IcebergFormat.currentMetadataPath(spark, location), None, None)
+
   // stage-1: ONE metadata-JSON read — schema + identity axes; the full
   // manifest walk is deferred until a scan (which prunes whole manifests
   // by the pushed filters) or a DML op (which needs every file) forces it
   private val header = IcebergFormat.planHeader(spark, metaPath)
-  private[sources] lazy val tablePlan = IcebergFormat.plan(spark, metaPath)
+  private def planWith(keep: IcebergFormat.ManifestHandle => Boolean) =
+    planned.getOrElse(IcebergFormat.plan(spark, metaPath, snapshotId, keep))
+  private[sources] lazy val tablePlan = planWith(_ => true)
 
   override def name(): String = s"iceberg.$location"
   // read-time nullable coercion, same reasoning as IceLiteV2Table; a
@@ -100,8 +118,7 @@ final class IcebergMorV2Table(spark: SparkSession, location: String)
       IceLiteMetaColumn("_last_updated_sequence_number", LongType))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new IcebergMorScanBuilder(schema(), header,
-      keep => IcebergFormat.plan(spark, metaPath, keepManifest = keep))
+    new IcebergMorScanBuilder(schema(), header, planWith)
 
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder =
@@ -116,8 +133,8 @@ final class IcebergMorV2Table(spark: SparkSession, location: String)
   * [[IcebergFormat.fileCanMatch]] (column bounds + partition values)
   * before any partition is planned, so a selective predicate over a
   * 100 TB table reads only the files whose recorded [min, max] can
-  * match — the same planning step the library scan ([[IcebergFormat
-  * .planFiles]]) and the reference's pushed reads assume
+  * match — the same per-file predicate [[IcebergFormat.planFiles]] uses,
+  * and the planning step the reference's pushed reads assume
   * (`blog-zero-cost-data-lakehouse-part-2.md:277-281`). All filters are
   * returned as residuals (bounds can never prove a row-level predicate;
   * Spark re-checks survivors, same contract as parquet row-group stats).
@@ -512,6 +529,40 @@ object IcebergMorScan {
     })
   }
 
+  /** Partitions for planned files (each with its partition key) in plan
+    * order: [[partitionsFor]] splits each oversized file, and consecutive
+    * smaller files with the same key share a partition, packed as Spark
+    * packs its file scans (`FilePartition.maxSplitBytes`): a file weighs
+    * its size plus the open cost, and a partition holds up to min(target,
+    * max(open cost, total weight / default parallelism)). A probe of many
+    * small files then runs in a few tasks, not one per file. */
+  private[graft] def packed(
+      files: Seq[(IcebergFormat.PlannedFile, InternalRow)], target: Long): Seq[InputPartition] = {
+    val spark    = SparkSession.active
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxBytes = math.min(if (target > 0) target else Long.MaxValue, math.max(openCost,
+      files.map(_._1.sizeBytes + openCost).sum / spark.sparkContext.defaultParallelism))
+    val out   = Seq.newBuilder[InputPartition]
+    val group = scala.collection.mutable.ArrayBuffer.empty[(IcebergFormat.PlannedFile, InternalRow)]
+    var bytes = 0L
+    def flush(): Unit = if (group.nonEmpty) {
+      val fs = group.map(_._1)
+      out += IceLitePartition(fs.map(_.path.toString).toArray, group.head._2,
+        seqs = fs.map(_.seq).toSeq, firstRowIds = fs.map(_.firstRowId).toSeq)
+      group.clear(); bytes = 0L
+    }
+    files.foreach { case fk @ (f, key) =>
+      if (target > 0 && f.sizeBytes >= 2 * target) { flush(); out ++= partitionsFor(f, target, key) }
+      else {
+        val w = f.sizeBytes + openCost
+        if (group.nonEmpty && (bytes + w > maxBytes || key != group.head._2)) flush()
+        group += fk; bytes += w
+      }
+    }
+    flush()
+    out.result()
+  }
+
   /** Partition(s) for one planned file: whole-file normally; files at
     * least 2× the split target (by manifest `sizeBytes`) split into byte
     * ranges. With the manifest's `split_offsets` (recorded at write time,
@@ -551,19 +602,19 @@ final class IcebergMorScan(
     extends Scan with Batch with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 
-  // position deletes name files by path, so (unlike equality deletes)
-  // sequence-number filtering is redundant under never-reused paths — a
-  // bitmap simply has no bits for files the delete never named. The
-  // manifest's file_path [min, max] rides along so the reader opens a
+  // position deletes name files by path and apply to data files whose
+  // data sequence number is at most theirs (spec "Scan Planning"): a
+  // delete naming a path before that file was committed leaves its rows.
+  // The manifest's file_path [min, max] rides along so the reader opens a
   // delete file only for data files inside its range.
   private val deleteFiles: Seq[PositionDeleteFile] =
     p.deletes.filter(_.content == 1).map { d =>
       d.dvRef match {
         // v3 deletion vector: exact-file application via the blob range
         case Some(ref) => PositionDeleteFile(d.path.toString, None, None,
-          Some((d.dvOffset, d.dvSize, ref)))
-        case None =>
-          PositionDeleteFile(d.path.toString, d.pathBounds.map(_._1), d.pathBounds.map(_._2))
+          Some((d.dvOffset, d.dvSize, ref)), Some(d.seq))
+        case None => PositionDeleteFile(d.path.toString,
+          d.pathBounds.map(_._1), d.pathBounds.map(_._2), seq = Some(d.seq))
       }
     }
 
@@ -665,8 +716,7 @@ final class IcebergMorScan(
     val target = SparkSession.active.conf.get("graft.split.size",
       IcebergMorScan.DefaultSplitBytes.toString).toLong
     val surv = if (rk.isEmpty) survivors else survivors.filter(runtimeHit)
-    val ps = surv.flatMap(f =>
-      IcebergMorScan.partitionsFor(f, target, keyFor(f))).toArray
+    val ps = IcebergMorScan.packed(surv.map(f => f -> keyFor(f)), target).toArray
     partitionsComputed = Some(ps.length)
     partitionsCache = (rk, ps)
     ps
@@ -704,9 +754,12 @@ final class IcebergMorScan(
         if (known) java.util.OptionalLong.of(rows) else java.util.OptionalLong.empty()
     }
   }
-  override def createReaderFactory(): PartitionReaderFactory =
+  // built once per scan: the driver-side parquet reader setup is not
+  // free, and Spark's physical planning asks for the factory more than once
+  private lazy val readerFactory =
     IceLiteReaderFactory(required, partCols, tableSchema, limit, deleteFiles, eqDeleteFiles,
       partitionDeletes = false)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
   // EXPLAIN never forces `partitions`; split counts print only if
   // planning already ran
   override def description(): String = {
@@ -883,8 +936,8 @@ final class IcebergMorDeltaWriterFactory(
 
 /** Executor-side delta writer: streams `(_file, _pos)` row ids into one
   * position-delete parquet per task (spec content-1 shape: `file_path`
-  * string + `pos` long, the exact columns [[IcebergFormat.scanFiles]] and
-  * DuckDB anti-join on), and UPDATE/MERGE insert rows into v2-layout data
+  * string + `pos` long, the exact columns this table's scan and DuckDB
+  * match on), and UPDATE/MERGE insert rows into v2-layout data
   * parquets through the same [[ParquetDataWriter]], every node stamped
   * with the table's field ids (inline min/max stats → manifest bounds).
   * On an identity-partitioned default spec (`partCols` non-empty; rows

@@ -32,4 +32,15 @@ object bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** A DataFrame over a catalog-less DSv2 table (`Dataset.ofRows` over
+    * `DataSourceV2Relation.create`, both `private[sql]`): the table's scan
+    * builder then gets Spark's pushdown, statistics and runtime filtering
+    * exactly as a catalog table does. */
+  def tableFrame(
+      spark: org.apache.spark.sql.SparkSession,
+      table: org.apache.spark.sql.connector.catalog.Table): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(table, None, None))
 }

@@ -662,6 +662,11 @@ class DataSourceV2Spec extends SparkSpec {
         struct(col("o_orderstatus").as("status"), col("o_totalprice").as("total")).as("info"))
     base.write.format("icelite").option("iceberg", "true")
       .option("location", loc).mode("overwrite").save()
+    // a nested subfield Spark prunes to reads its own values
+    def totals(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("info.total")).collect().map(_.getDouble(0)).sorted.toSeq
+    assert(totals(IcebergFormat.scan(spark, IcebergFormat.currentMetadataPath(spark, loc))) ==
+      totals(base))
     def metaJson(): String = {
       val p  = new org.apache.hadoop.fs.Path(
         IcebergFormat.currentMetadataPath(spark, loc))

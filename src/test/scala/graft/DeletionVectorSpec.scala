@@ -112,6 +112,67 @@ class DeletionVectorSpec extends SparkSpec {
     assert(IcebergFormat.scanAt(spark, mp, snap0).count() == 10L)
   }
 
+  test("scanRange and scanPoints keep the plan's deletes in the files they keep") {
+    val root = scratch("dv_pruned")
+    val loc  = s"$root/t"
+    def bound(v: Long) = IcebergFormat.encodeBound(
+      org.apache.spark.sql.types.LongType, v.toString).get
+    def bounded(name: String, lo: Long, hi: Long) =
+      stage(root, loc, name, (lo to hi).toDF("v")).copy(bounds = Map(1 -> (bound(lo), bound(hi))))
+    val w = new IcebergFormat.Writer(spark, loc, (0L until 1L).toDF("v").schema)
+    w.commit(Seq(bounded("f1", 0, 19), bounded("f2", 20, 39), bounded("f3", 40, 59)))
+    // a vector on f1 (v = 3), then a parquet position delete on f2 (pos 1:
+    // v = 21) that also names pos 0 of f4, a file committed after it
+    DeletionVectors.deleteWhere(spark, loc, col("v") === 3)
+    val f2 = IcebergFormat.plan(spark, IcebergFormat.currentMetadataPath(spark, loc))
+      .files.map(_.path.toString).find(_.endsWith("f2.parquet")).get
+    val f4 = new org.apache.hadoop.fs.Path(s"$loc/data/f4.parquet").toString
+    IcebergFormat.resumeWriter(spark, loc).commitDelta(Seq(
+      stage(root, loc, "pd", Seq((f2, 1L), (f4, 0L)).toDF("file_path", "pos"), content = 1)))
+    IcebergFormat.resumeWriter(spark, loc).commit(Seq(bounded("f4", 60, 79)))
+    val mp   = IcebergFormat.currentMetadataPath(spark, loc)
+    val live = (0L until 40L).toSet -- Set(3L, 21L)
+    def vals(df: org.apache.spark.sql.DataFrame) = df.select("v").collect().map(_.getLong(0)).toSet
+    assert(vals(IcebergFormat.scanRange(spark, mp, "v", Some("0"), Some("39"))) == live)
+    // the older delete leaves the newer f4 whole (spec sequence numbers)
+    val (pts, kept, total) = IcebergFormat.scanPoints(spark, mp, "v", Seq("5", "25", "60"))
+    assert((kept, total) == ((3, 4)))
+    assert(vals(pts) == live ++ (60L to 79L))
+    assert(pts.count() == live.size + 20L)
+  }
+
+  test("deletes naming data/snap- files by full path apply to library scans and view refresh") {
+    import graft.ops.{MatView, MvAgg}
+    val root = scratch("dv_snapw")
+    val loc  = s"$root/t"
+    val mv   = s"$root/mv"
+    val rows = (0L until 40L).map(v => (s"k${v % 4}", v))
+    // the V2 write stages its files under data/snap-w-*
+    rows.toDF("k", "v").repartition(2).write.format("icelite").option("iceberg", "true")
+      .option("location", loc).mode("overwrite").save()
+    val files = IcebergFormat.plan(spark, IcebergFormat.currentMetadataPath(spark, loc))
+      .files.map(_.path.toString)
+    assert(files.nonEmpty && files.forall(_.contains("/data/snap-w-")), files)
+    MatView.create(spark, loc, mv, Seq("k"), Seq(MvAgg("count", "*", "cnt"), MvAgg("sum", "v", "sv")))
+    // a vector (v = 3), then a spec-style position delete (v = 21); both
+    // name the data file by its full path
+    DeletionVectors.deleteWhere(spark, loc, col("v") === 3)
+    val pd = spark.read.parquet(files: _*)
+      .where(col("v") === 21)
+      .select(col("_metadata.file_path").as("file_path"), col("_metadata.row_index").as("pos"))
+    IcebergFormat.resumeWriter(spark, loc)
+      .commitDelta(Seq(stage(root, loc, "pd", pd, content = 1)))
+    val mp   = IcebergFormat.currentMetadataPath(spark, loc)
+    val live = rows.filterNot(r => r._2 == 3L || r._2 == 21L)
+    assert(IcebergFormat.scan(spark, mp).count() == live.size.toLong)
+    assert(scanVals(loc) == live.map(_._2).toSet)
+    val st = MatView.refresh(spark, mv)
+    assert(st.mode == "retract", st)
+    val want = live.groupBy(_._1).map { case (k, rs) =>
+      org.apache.spark.sql.Row(k, rs.size.toLong, rs.map(_._2).sum) }.toSet
+    assert(MatView.read(spark, mv).collect().toSet == want)
+  }
+
   test("SQL read path (DSv2) applies vectors; MoR DML works on a vectored table") {
     val wh = scratch("dv_sql_wh")
     spark.conf.set("spark.sql.catalog.dv_cat", "graft.sources.IceLiteCatalog")

@@ -94,8 +94,9 @@ class IceLiteSpec extends SparkSpec {
     assert(back.count() == 50)
     // zero copy: every planned file lives under the ICELITE table location
     val tablePrefix = t.location.toString
-    assert(back.inputFiles.nonEmpty &&
-      back.inputFiles.forall(f => new Path(f).toUri.getPath.startsWith(
+    val backFiles = IcebergFormat.inputFiles(back)
+    assert(backFiles.nonEmpty &&
+      backFiles.forall(f => new Path(f).toUri.getPath.startsWith(
         new Path(tablePrefix).toUri.getPath)))
     // and the export dir holds metadata only — no parquet was copied
     val fs = new Path(dest).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -127,7 +128,7 @@ class IceLiteSpec extends SparkSpec {
     val (one, kOne, _) =
       IcebergFormat.scanPoints(spark, mdPath, "n_nationkey", Seq("3", "4"))
     assert(kOne == 1, s"in-list pruning kept $kOne of $total files")
-    assert(one.inputFiles.length == 1)
+    assert(IcebergFormat.inputFiles(one).length == 1)
     assert(one.filter(col("n_nationkey").isin(3, 4)).count() == 2)
     // an empty in-list keeps nothing
     val (none, kNone, _) =
@@ -146,7 +147,7 @@ class IceLiteSpec extends SparkSpec {
     val planned = IcebergFormat.planFiles(spark, mdPath, "n_nationkey", Some("3"), Some("3"))
     assert(planned.size == 1, s"bounds pruning failed: $planned")
     val pruned = IcebergFormat.scanRange(spark, mdPath, "n_nationkey", Some("3"), Some("3"))
-    assert(pruned.inputFiles.length == 1)
+    assert(IcebergFormat.inputFiles(pruned).length == 1)
     assert(pruned.filter(col("n_nationkey") === 3).count() == 1)
     // unbounded keeps both; a string column prunes lexically
     assert(IcebergFormat.planFiles(spark, mdPath, "n_nationkey", None, None).size == 2)

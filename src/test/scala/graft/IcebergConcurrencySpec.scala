@@ -124,13 +124,8 @@ class IcebergConcurrencySpec extends SparkSpec {
   }
 
   test("concurrent manifest-planned scans never leak the discovery threshold") {
-    // round 18 (VERDICT r17 item 6): scanFiles' scoped raise of
-    // spark.sql.sources.parallelPartitionDiscovery.threshold around
-    // relation creation is now serialized per session — two racing scans
-    // can no longer interleave set/restore and leave a mid-flight value
-    // behind. This races scans while sampling the conf: any observed value
-    // must be either the original or THIS table's scoped raise (files+1),
-    // and the original value must be restored once the race ends.
+    // Library scans read through the DSv2 connector and set no session
+    // conf, so racing scans cannot leave a discovery threshold behind.
     val threshKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     val before    = spark.conf.getOption(threshKey)
 

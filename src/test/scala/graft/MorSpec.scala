@@ -518,6 +518,26 @@ class MorSpec extends SparkSpec {
     } finally dropIcebergFixture(cat)
   }
 
+  test("iceberg-format library scan reads through the connector: file pruning, metadata-only count") {
+    import graft.icelite.IcebergFormat
+    import graft.sources.IceLiteSource
+    val (cat, loc, _) = icebergNationFixture("libscan")
+    try {
+      val md = IcebergFormat.currentMetadataPath(spark, loc)
+      val one = IcebergFormat.scan(spark, md).where(col("n_nationkey") === 3)
+      assert(one.select("n_nationkey").collect().map(_.getInt(0)).toSeq == Seq(3))
+      val plan = one.queryExecution.executedPlan.toString
+      assert(plan.contains("IcebergMorScan(files=1/2"), s"pushed filter did not prune files: $plan")
+      val cnt = IcebergFormat.scan(spark, md).groupBy().count()
+      assert(cnt.queryExecution.executedPlan.toString.contains("metadata-only count"),
+        "library COUNT(*) did not push to the metadata scan")
+      IceLiteSource.filesOpened.reset()
+      assert(cnt.head().getLong(0) == 25L)
+      assert(IceLiteSource.filesOpened.sum() == 0,
+        s"metadata count opened ${IceLiteSource.filesOpened.sum()} data files")
+    } finally dropIcebergFixture(cat)
+  }
+
   test("iceberg-format scan: IN-list, prefix, and null-count pruning") {
     import graft.icelite.IcebergFormat
     import graft.sources.IceLiteSource
@@ -995,7 +1015,7 @@ class MorSpec extends SparkSpec {
       // count(*) (no data columns at all) is delete-aware too
       val n = spark.sql(s"SELECT count(*) AS n FROM $cat.graft.nat_eq").head().getLong(0)
       assert(n == want.count(), "count(*) ignored equality deletes")
-      // library reader (sequence-numbered anti-join) agrees row-for-row
+      // the library scan (the same connector, pinned to the metadata file) agrees row-for-row
       val lib = IcebergFormat.scan(spark, IcebergFormat.currentMetadataPath(spark, loc))
       assert(lib.except(want).isEmpty && want.except(lib).isEmpty,
         "library scan diverged on the equality-delete table")

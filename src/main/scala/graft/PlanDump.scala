@@ -2,7 +2,7 @@ package graft
 
 
 /** Deliverable helper: write `.explain("formatted")` of named registered
-  * queries to plans/<outDir>/<name>_<tag>.txt. Lifecycle queries execute
+  * queries to <outDir>/<name>_<tag>.txt. Lifecycle queries execute
   * their side effects while the DataFrame is constructed; the captured
   * plan is the returned (final) frame's.
   *

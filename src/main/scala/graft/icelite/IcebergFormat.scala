@@ -25,11 +25,15 @@ import org.json4s.jackson.JsonMethods
   * (`IcebergMorV2Table`), which applies deletes, partition values,
   * defaults and lineage per file inside Spark's parquet reader.
   *
-  * Writer: enough of the spec to commit genuine flat-schema tables —
-  * per-commit manifest Avro (with spec field-ids in the Avro schema),
-  * per-snapshot manifest list, and the metadata JSON with schemas /
-  * partition-specs / snapshot log. Used by the ic21 gate to produce a
-  * fixture that an independent Iceberg reader could consume.
+  * Writer: data and delete files go through ONE writer, the library
+  * write [[graft.sources.IcebergWrite.writeFiles]] that
+  * [[writeSingleFile]] and [[writeGroupedFiles]] wrap: Spark's parquet
+  * writer under the session codec, every field id stamped (list elements
+  * and map keys/values included), inline bounds and null counts. The
+  * commit is metadata only — per-commit manifest Avro (with spec
+  * field-ids in the Avro schema), per-snapshot manifest list, and the
+  * metadata JSON with schemas / partition-specs / snapshot log — which an
+  * independent Iceberg reader can consume (the ic21 gate).
   */
 object IcebergFormat {
 
@@ -1669,22 +1673,10 @@ object IcebergFormat {
       s"cannot decode default $other as ${t.catalogString}")
   }
 
-  /** A writer session for committing genuine Iceberg v2 metadata over
-    * already-written parquet data files. Each `commit` appends a snapshot
-    * (carrying prior manifests by pointer, as the spec intends) and writes
-    * `v<N>.metadata.json` + `version-hint.text`. Single-writer, fixed
-    * timestamps for reproducible fixtures. */
-  /** Write `df` as ONE parquet file at `loc/data/<name>.parquet` (staged
-    * through a temp dir under `stagingDir`, then renamed) and return its
-    * manifest entry. The single-partition write preserves the caller's
-    * sort order, which makes file positions deterministic — the property
-    * position deletes address. */
   /** `schema` with `parquet.field.id` metadata on every top-level field —
-    * the key Spark's parquet paths honor on BOTH sides: the writer stamps
-    * the ids into the file schema (`spark.sql.parquet.fieldId.write
-    * .enabled`, default on), and a reader with
-    * `spark.sql.parquet.fieldId.read.enabled` resolves file columns by id
-    * instead of name. Id resolution is what makes RENAME/DROP COLUMN
+    * the key Spark's parquet reader honors: with
+    * `spark.sql.parquet.fieldId.read.enabled` it resolves file columns by
+    * id instead of name. Id resolution is what makes RENAME/DROP COLUMN
     * readable across old files (spec "Column Projection": names are
     * display only, identity is the field id). */
   private[graft] def withParquetFieldIds(
@@ -1750,149 +1742,55 @@ object IcebergFormat {
       ns
     })
 
-  /** `df` with its top-level columns re-aliased to carry `parquet.field.id`
-    * metadata, so the parquet files this write produces are id-stamped.
-    * Purely additive: name-based readers are unaffected. */
-  private[graft] def stampFieldIds(
-      df: DataFrame, ids: Seq[Int], nestedIds: Map[String, Int] = Map.empty): DataFrame = {
-    // nested struct ids ride the CAST's target type metadata (Spark's
-    // parquet writer reads parquet.field.id off nested StructFields);
-    // default = the same positional assignment the schema JSON gets
-    val nested  = if (nestedIds.nonEmpty) nestedIds else deriveNestedIds(df.schema, ids)
-    val stamped = withParquetFieldIds(df.schema, ids, nested)
-    df.select(stamped.fields.map { f =>
-      val c = org.apache.spark.sql.functions.col(f.name)
-      // cast is a no-op for flat columns (identical type) and a metadata-
-      // carrying rebuild for nested ones — the writer sees the stamped type
-      val typed = if (f.dataType == df.schema(f.name).dataType) c else c.cast(f.dataType)
-      typed.as(f.name, f.metadata)
-    }.toIndexedSeq: _*)
-  }
-
-  /** Batched twin of [[writeSingleFile]] for lifecycle fixtures that
-    * commit one file per group value: ONE staged Spark job writes every
-    * group's parquet file (hash-partitioned on the group expression so a
-    * group lands wholly in one task; dynamic-partition write emits one
-    * file per group per task), each file is renamed to
-    * `loc/data/<nameOf(group)>.parquet`, and manifest entries come from
-    * the same footer read [[writeSingleFile]] uses. A loop of N
-    * writeSingleFile calls costs N full job round-trips (~40-80 ms each
-    * of scheduler/plan fixed cost at any data size — ic89's 24-commit
-    * evolution lifecycle spent more time BETWEEN jobs than in them);
-    * this pays one. The result is keyed by group value (the Hive-escaped
-    * directory token unescaped); `nameOf` must map it to a valid file
-    * name. Commit granularity is untouched: callers still commit the returned
-    * files one (or few) at a time, so snapshot history is identical. */
-  def writeGroupedFiles(spark: SparkSession, stagingDir: String, loc: String,
-      df: DataFrame, groupExpr: org.apache.spark.sql.Column,
-      nameOf: String => String, fieldIds: Seq[Int] = Nil): Map[String, DataFileInfo] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs   = new Path(loc).getFileSystem(conf)
-    val stampIds = if (fieldIds.nonEmpty) fieldIds else 1 to df.schema.fields.length
-    val stage = s"$stagingDir/stage_grouped"
-    stampFieldIds(df, stampIds)
-      .withColumn("__grp", groupExpr.cast("string"))
-      .repartition(spark.sparkContext.defaultParallelism,
-        org.apache.spark.sql.functions.col("__grp"))
-      // 0 overrides a session `spark.sql.files.maxRecordsPerFile`, which
-      // would split a group across files
-      .write.option("maxRecordsPerFile", 0L)
-      .partitionBy("__grp").mode("overwrite").parquet(stage)
-    val dirs = fs.listStatus(new Path(stage)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__grp="))
-    fs.mkdirs(new Path(s"$loc/data"))
-    val out = dirs.map { st =>
-      // the directory token is Hive-escaped (`:` -> `%3A`); key by the value
-      val g     = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .unescapePathName(st.getPath.getName.stripPrefix("__grp="))
-      val parts = fs.listStatus(st.getPath).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-      require(parts.length == 1,
-        s"group $g split across ${parts.length} files — hash repartition broken")
-      val dest = new Path(s"$loc/data/${nameOf(g)}.parquet")
-      require(fs.rename(parts.head, dest), s"stage rename failed for group $g")
-      g -> fileInfoFromFooter(spark, dest, df.schema, fieldIds = fieldIds)
-    }.toMap
-    fs.delete(new Path(stage), true)
-    out
-  }
-
-  def writeSingleFile(spark: SparkSession, stagingDir: String, loc: String, name: String,
+  /** Write `df` as ONE parquet file at `loc/data/<name>.parquet` through
+    * the library write ([[graft.sources.IcebergWrite.writeFiles]]) and
+    * return its manifest entry. The single-task write preserves the
+    * caller's sort order, which makes file positions deterministic — the
+    * property position deletes address. Field ids are positional unless
+    * the caller passes a sparse layout; a position-delete file takes the
+    * spec-reserved pair, an equality-delete file its key fields' ids. An
+    * empty `df` still yields its (empty) file. */
+  def writeSingleFile(spark: SparkSession, loc: String, name: String,
       df: DataFrame, content: Int = 0, equalityIds: Seq[Int] = Nil,
       fieldIds: Seq[Int] = Nil, nestedIds: Map[String, Int] = Map.empty): DataFileInfo = {
-    val fs  = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = s"$stagingDir/stage_$name"
-    // stamp parquet field ids (positional when the caller didn't pass a
-    // sparse layout; the spec-reserved pair for position-delete files) —
-    // costs nothing, and makes every file this path writes resolvable by
-    // id after a rename/drop evolution
-    val stampIds =
+    val ids =
       if (fieldIds.nonEmpty) fieldIds
       else if (content == 1 && df.schema.fieldNames.sameElements(Array("file_path", "pos")))
         Seq(PosDeletePathFieldId, PosDeletePosFieldId)
       else if (content == 2 && equalityIds.length == df.schema.fields.length)
         equalityIds // an equality-delete file's columns ARE the key fields
       else 1 to df.schema.fields.length
-    stampFieldIds(df, stampIds, nestedIds).coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-      .find(_.getName.endsWith(".parquet")).get
-    val dest = new Path(s"$loc/data/$name.parquet")
-    fs.mkdirs(dest.getParent)
-    require(fs.rename(part, dest), s"stage rename failed for $name")
-    fs.delete(new Path(tmp), true)
-    fileInfoFromFooter(spark, dest, df.schema, content, equalityIds, fieldIds)
+    val rel = s"data/$name.parquet"
+    graft.sources.IcebergWrite.writeFiles(spark, df.coalesce(1), loc, ids, nestedIds,
+      content, equalityIds)((_, _) => rel).headOption.map(_._2).getOrElse {
+      // no task held a row: write the empty file on the driver
+      val empty = graft.sources.IcebergWrite.files(df.schema, ids, nestedIds)
+        .writer(loc, rel).commit()
+      graft.sources.IcebergWrite.dataFileInfo(loc, df.schema, ids, empty,
+        content = content, equalityIds = equalityIds)
+    }
   }
 
-  /** Manifest entry for an already-written parquet file: ONE footer read
-    * yields split_offsets (spec field 132), the exact row count, and
-    * per-column null counts (spec field 110 — parquet chunk statistics
-    * record numNulls exactly): no second pass over the data for stats,
-    * ever. Null-count keys default to the positional 1..n id layout;
-    * sparse-id callers pass real ids. */
-  private[graft] def fileInfoFromFooter(spark: SparkSession, dest: Path, schema: StructType,
-      content: Int = 0, equalityIds: Seq[Int] = Nil,
-      fieldIds: Seq[Int] = Nil): DataFileInfo = {
-    val fs  = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = if (fieldIds.nonEmpty) fieldIds else 1 to schema.fields.length
-    require(ids.length == schema.fields.length, "field id count != column count")
-    val (offsets, rows, nullCounts) = {
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
-      import scala.jdk.CollectionConverters._
-      val fr = ParquetFileReader.open(HadoopInputFile.fromPath(dest,
-        spark.sparkContext.hadoopConfiguration))
-      try {
-        val blocks = fr.getFooter.getBlocks.asScala.toSeq
-        val offs   = blocks.map(_.getStartingPos)
-        val nRows  = blocks.map(_.getRowCount).sum
-        // only FLAT (primitive) columns: a leaf chunk's numNulls equals
-        // the column's null count exactly then; nested columns record no
-        // stat (absent = conservative for the IS [NOT] NULL pruner)
-        val flat = schema.fields.zipWithIndex.collect {
-          case (f, i) if !f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType] &&
-            !f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] &&
-            !f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] =>
-            f.name -> i
-        }.toMap
-        val acc  = new Array[Long](schema.fields.length)
-        val seen = new Array[Boolean](schema.fields.length)
-        java.util.Arrays.fill(seen, true)
-        blocks.foreach(_.getColumns.asScala.foreach { c =>
-          val path = c.getPath.toArray
-          if (path.length == 1) flat.get(path(0)).foreach { i =>
-            val st = c.getStatistics
-            if (st == null || !st.isNumNullsSet) seen(i) = false
-            else acc(i) += st.getNumNulls
-          }
-        })
-        val ncs = (if (content == 0) flat.values.toSeq else Nil)
-          .filter(seen(_)).map(i => ids(i) -> acc(i)).toMap
-        (offs, nRows, ncs)
-      } finally fr.close()
-    }
-    DataFileInfo(dest.toString, rows, fs.getFileStatus(dest).getLen,
-      content = content, equalityIds = equalityIds, splitOffsets = offsets,
-      nullCounts = nullCounts)
+  /** Batched twin of [[writeSingleFile]] for lifecycle fixtures that
+    * commit one file per group value: ONE Spark job, hash-partitioned and
+    * sorted on the group expression so a group lands wholly in one task
+    * as one run, writes each group's file straight to
+    * `loc/data/<nameOf(group)>.parquet`. A loop of N writeSingleFile calls
+    * costs N full job round-trips (~40-80 ms each of scheduler/plan fixed
+    * cost at any data size — ic89's 24-commit evolution lifecycle spent
+    * more time BETWEEN jobs than in them); this pays one. The result is
+    * keyed by the group value cast to string; `nameOf` runs on the
+    * executors and must map it to a valid file name. Commit granularity is
+    * untouched: callers still commit the returned files one (or few) at a
+    * time, so snapshot history is identical. */
+  def writeGroupedFiles(spark: SparkSession, loc: String,
+      df: DataFrame, groupExpr: org.apache.spark.sql.Column,
+      nameOf: String => String, fieldIds: Seq[Int] = Nil): Map[String, DataFileInfo] = {
+    val g = groupExpr.cast(StringType)
+    graft.sources.IcebergWrite.writeFiles(spark,
+      df.repartition(spark.sparkContext.defaultParallelism, g).sortWithinPartitions(g), loc,
+      if (fieldIds.nonEmpty) fieldIds else 1 to df.schema.fields.length,
+      group = Some(g))((_, key) => s"data/${nameOf(key)}.parquet").toMap
   }
 
   /** Avro primitive for an identity partition value in the manifest's

@@ -191,17 +191,13 @@ object TableStats {
       }
     val df  = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
     val tag = java.util.UUID.randomUUID().toString.take(8)
-    val path = new Path(location, f"metadata/partition-stats-$snapId%05d-$tag.parquet")
-    val fs   = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp  = new Path(location, s"metadata/_tmp-pstats-$tag")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp).map(_.getPath).find(_.getName.endsWith(".parquet")).get
-    require(fs.rename(part, path), s"partition-stats rename failed for $path")
-    fs.delete(tmp, true)
+    val rel = f"metadata/partition-stats-$snapId%05d-$tag.parquet"
+    val file = graft.sources.IcebergWrite.writeFiles(spark, df, location,
+      1 to schema.length)((_, _) => rel).head._2
     val w = IcebergFormat.resumeWriter(spark, location)
     w.recordPartitionStatistics(IcebergFormat.PartitionStatsEntry(
-      snapId, path.toString, fs.getFileStatus(path).getLen))
-    path
+      snapId, file.path, file.sizeBytes))
+    new Path(file.path)
   }
 
   /** `statistics` metadata table: one row per registered blob — the

@@ -1546,7 +1546,7 @@ object Dedup {
         .select(col("doc_id"), col("text")))
     val loc = s"$root/band_index"
     val w   = new IcebergFormat.Writer(s, loc, idxRows.schema)
-    w.commit(Sim.stageIndexCells(s, idxRows, s"$root/stage", loc, "b", sortCol = "doc_id"))
+    w.commit(Sim.writeIndexCells(s, idxRows, loc, "b", sortCol = "doc_id"))
     w.currentMetadataPath
   }
 
@@ -1594,7 +1594,7 @@ object Dedup {
     val idxRows = bands.filter(col("source") =!= servedBatchSrc).drop("source")
     val loc = s"$root/band_index"
     val w   = new IcebergFormat.Writer(s, loc, idxRows.schema)
-    w.commit(Sim.stageIndexCells(s, idxRows, s"$root/stage", loc, "b", sortCol = "doc_id"))
+    w.commit(Sim.writeIndexCells(s, idxRows, loc, "b", sortCol = "doc_id"))
     probeBandIndex(s, d, batchBands(s, bands), w.currentMetadataPath, maxFilesPerCell = 1)
   }
 
@@ -1638,10 +1638,10 @@ object Dedup {
     val mid = if (midRow.isNullAt(0)) 0L else midRow.getLong(0)
     val loc = s"$root/band_index"
     val w   = new IcebergFormat.Writer(s, loc, idxRows.schema)
-    w.commit(Sim.stageIndexCells(
-      s, idxRows.filter(col("doc_id") <= mid), s"$root/stage_b", loc, "b", sortCol = "doc_id"))
-    w.commit(Sim.stageIndexCells(
-      s, idxRows.filter(col("doc_id") > mid), s"$root/stage_d", loc, "d", sortCol = "doc_id"))
+    w.commit(Sim.writeIndexCells(
+      s, idxRows.filter(col("doc_id") <= mid), loc, "b", sortCol = "doc_id"))
+    w.commit(Sim.writeIndexCells(
+      s, idxRows.filter(col("doc_id") > mid), loc, "d", sortCol = "doc_id"))
     // mid-lifecycle plan audit: a probe between append and compaction must
     // still prune to the probed cells, paying at most base+delta per cell
     // (planning only — counts come from manifests, no data read; the
@@ -1657,8 +1657,8 @@ object Dedup {
     // COMPACT: fold base+delta back to one file per cell, rewrite snapshot
     val fragmented = IcebergFormat.scan(s, w.currentMetadataPath)
       .select(col("cell"), col("doc_id"), col("band_id"), col("bsig"), col("sig"))
-    w.rewriteDataFiles(Sim.stageIndexCells(
-      s, fragmented, s"$root/stage_c", loc, "c", sortCol = "doc_id"))
+    w.rewriteDataFiles(Sim.writeIndexCells(
+      s, fragmented, loc, "c", sortCol = "doc_id"))
     probeBandIndex(s, d, batch, w.currentMetadataPath,
       maxFilesPerCell = 1, knownCells = Some(probedCells))
   }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.icelite.IcebergFormat
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -148,50 +147,31 @@ object MatView {
     * retraction partials resolve rows through. The scan is the library
     * scan pinned to `metaPath`, so identity-partition values omitted from
     * data files come from the manifests' partition records like in every
-    * other read. `__path` is the file's full normalized path, the form
-    * the delete pairs below carry; the scan's `_file` is manifest-relative
-    * for files under `data/snap-`, so it is mapped back per file. */
+    * other read. `__path` is the scan's `_file` (the file's full path)
+    * normalized, the form the delete pairs below carry. */
   private def readRaw(
       spark: SparkSession,
       metaPath: String,
       p: IcebergFormat.TablePlan,
       files: Seq[IcebergFormat.PlannedFile]): DataFrame = {
-    val paths = files.map(_.path.toString).distinct
-    val full  = paths.map(f => graft.sources.IceLiteReaderFactory.relOf(f) -> normStr(f)).toMap
-    require(full.size == paths.size, "two data files share one manifest-relative path")
     IcebergFormat.read(spark, metaPath, planned = Some(p.copy(files = files, deletes = Nil)))
       .select((p.schema.fieldNames.map(col) :+
-        element_at(typedLit(full), col("_file")).as("__path") :+
+        normCol(col("_file")).as("__path") :+
         col("_pos").as("__pos")).toIndexedSeq: _*)
   }
 
-  /** Distributed multi-file write of `df` into `loc`'s data dir: one
-    * staged parquet job (`n` tasks), rename each part in, one footer read
-    * per file for stats — never a per-file Spark job. Empty parts are
-    * dropped. */
+  /** Distributed multi-file write of `df` into `loc`'s data dir: ONE
+    * library write (`n` tasks), one file per task that holds rows — never
+    * a per-file Spark job. */
   private def writeDataFiles(
       spark: SparkSession, loc: String, prefix: String, df: DataFrame,
-      n: Int): Seq[IcebergFormat.DataFileInfo] = {
-    val fs  = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(s"$loc/_tmp/stage_$prefix")
-    try {
-      // n == 1 merges the upstream partitions narrowly (no exchange, no
-      // sort-before-repartition pass); an explicit multi-file layout keeps
-      // the round-robin repartition so files come out balanced
-      val shaped = IcebergFormat.stampFieldIds(df, 1 to df.schema.fields.length)
-      (if (n == 1) shaped.coalesce(1) else shaped.repartition(n))
-        .write.mode("overwrite").parquet(tmp.toString)
-      val parts = fs.listStatus(tmp).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      fs.mkdirs(new Path(s"$loc/data"))
-      parts.toSeq.zipWithIndex.flatMap { case (part, i) =>
-        val dest = new Path(s"$loc/data/$prefix-$i.parquet")
-        require(fs.rename(part, dest), s"stage rename failed for $dest")
-        val info = IcebergFormat.fileInfoFromFooter(spark, dest, df.schema)
-        if (info.recordCount == 0L) { fs.delete(dest, false); None } else Some(info)
-      }
-    } finally { fs.delete(tmp, true); () }
-  }
+      n: Int): Seq[IcebergFormat.DataFileInfo] =
+    // n == 1 merges the upstream partitions narrowly (no exchange, no
+    // sort-before-repartition pass); an explicit multi-file layout keeps
+    // the round-robin repartition so files come out balanced
+    graft.sources.IcebergWrite.writeFiles(spark,
+      if (n == 1) df.coalesce(1) else df.repartition(n), loc, 1 to df.schema.fields.length)(
+      (i, _) => s"data/$prefix-$i.parquet").map(_._2)
 
   // ------------------------------------------------------------------ API
 
@@ -474,7 +454,7 @@ object MatView {
       col(k).cast(stored(k).dataType).as(k)): _*)
     val ver = IcebergFormat.snapshotLog(spark, mvPath).size + 1
     val eqDel = IcebergFormat.writeSingleFile(
-      spark, s"$mvLoc/_tmp", mvLoc, f"mv-del-$ver%08d", affected,
+      spark, mvLoc, f"mv-del-$ver%08d", affected,
       content = 2, equalityIds = 1 to keys.size)
     val dataFiles = writeDataFiles(spark, mvLoc, f"mv-$ver%08d", alive, 1)
     w.commit(eqDel +: dataFiles)
@@ -505,7 +485,7 @@ object MatView {
     w.setProperty(P_SNAP, to.toString)
     val ver = IcebergFormat.snapshotLog(spark, mvPath).size + 1
     val eqDel = IcebergFormat.writeSingleFile(
-      spark, s"$mvLoc/_tmp", mvLoc, f"mv-del-$ver%08d", allKeys,
+      spark, mvLoc, f"mv-del-$ver%08d", allKeys,
       content = 2, equalityIds = 1 to keys.size)
     val dataFiles = writeDataFiles(spark, mvLoc, f"mv-$ver%08d", casted, 1)
     w.commit(eqDel +: dataFiles)

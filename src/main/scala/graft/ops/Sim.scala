@@ -1532,20 +1532,17 @@ object Sim {
   private def ivfIndexMetadata(s: SparkSession, d: String): String =
     ivfIndexCache.computeIfAbsent(d, _ => buildIvfIndex(s, d))
 
-  /** SINGLE-JOB index write: one `repartition(cell)` shuffle +
-    * `partitionBy` write lands every cell's file in one pass (the driver
-    * never loops over cells — round 7's per-cell filter/coalesce/write
-    * loop was 1 + 2×cells jobs; this is one logical shuffle-write at any
-    * cell count, plus fixed bookkeeping: the centroid collect, parquet
-    * footer reads, and AQE's per-stage jobs — OpsSpec pins the total at
-    * ≤6, cell-count-free). The manifest comes from
-    * the LISTING: per-cell row counts are read from the parquet footers —
-    * O(cells) driver-side metadata reads, no extra Spark job. Hash
-    * repartitioning on `cell` puts each cell wholly in one task, so the
-    * one-file-per-cell layout (and the manifest cell bounds sm26 prunes
-    * by) is structural, not a coalesce accident. Sorting carries the
-    * partition column as prefix so the dynamic-partition writer reuses
-    * our sort instead of inserting its own. */
+  /** SINGLE-JOB index write: one `repartition(cell)` shuffle whose tasks
+    * stream every cell's file in one pass ([[writeIndexCells]]; the
+    * driver never loops over cells — round 7's per-cell
+    * filter/coalesce/write loop was 1 + 2×cells jobs; this is one logical
+    * shuffle-write at any cell count, plus fixed bookkeeping: the
+    * centroid collect and AQE's per-stage jobs — OpsSpec pins the total at
+    * ≤6, cell-count-free). Row counts and bounds come from the writer's
+    * own stats: no footer read, no extra Spark job. Hash repartitioning on
+    * `cell` puts each cell wholly in one task, so the one-file-per-cell
+    * layout (and the manifest cell bounds sm26 prunes by) is structural,
+    * not a coalesce accident. */
   private[graft] def buildIvfIndex(s: SparkSession, d: String): String = {
     import s.implicits._
     import graft.icelite.IcebergFormat
@@ -1572,25 +1569,20 @@ object Sim {
       }
       .toDF("cell", "vec_id", "embedding", "label")
     val w = new IcebergFormat.Writer(s, loc, assigned.schema)
-    w.commit(stageIndexCells(s, assigned, s"$root/stage", loc, "f"))
+    w.commit(writeIndexCells(s, assigned, loc, "f"))
     w.currentMetadataPath
   }
 
-  /** One single-job staged write of cell-assigned vectors: hash
-    * repartition on `cell` (one task = one whole cell), dynamic-partition
-    * write to `stageDir`, rename each cell file into `loc/data/`, and
-    * return manifest entries whose field-1 (cell) bounds are min=max=cid
-    * — the structural one-file-per-cell-per-commit layout that makes the
-    * probed-cell pruning of sm26/sm29/sm30 a manifest-bounds lookup. Row
-    * counts come from parquet footers: O(cells) driver-side metadata
-    * reads, no extra Spark job. */
-  private[graft] def stageIndexCells(
-      s: SparkSession, assigned: org.apache.spark.sql.DataFrame,
-      stage: String, loc: String, tag: String,
-      sortCol: String = "vec_id"): Seq[graft.icelite.IcebergFormat.DataFileInfo] = {
-    import graft.icelite.IcebergFormat
-    import org.apache.hadoop.fs.Path
-    val conf = s.sparkContext.hadoopConfiguration
+  /** One single-job write of cell-assigned vectors (`cell`, a long, is
+    * field 1): hash repartition on `cell` (one task = whole cells), sort
+    * on cell then `sortCol`, and stream each cell into its own file
+    * `loc/data/cell<cid>-<tag>0.parquet` through the library write. The
+    * writer's min = max bounds on field 1 make this structural
+    * one-file-per-cell-per-commit layout what sm26/sm29/sm30's
+    * probed-cell pruning looks up in the manifests. */
+  private[graft] def writeIndexCells(
+      s: SparkSession, assigned: org.apache.spark.sql.DataFrame, loc: String, tag: String,
+      sortCol: String = "vec_id"): Seq[graft.icelite.IcebergFormat.DataFileInfo] =
     // EXPLICIT task count: a bare repartition(col) inherits
     // spark.sql.shuffle.partitions and AQE then coalesces the KB-scale
     // post-shuffle exchange to ONE partition — serializing the whole
@@ -1600,51 +1592,11 @@ object Sim {
     // cell still land in one task) while the file writes spread across
     // the cluster; cores is the right width at any scale because cells
     // >> cores and each task then streams cells/cores files.
-    assigned.withColumn("cellp", col("cell")) // keep cell IN the data files too
-      .repartition(s.sparkContext.defaultParallelism, col("cell"))
-      .sortWithinPartitions("cellp", sortCol)
-      .write.partitionBy("cellp").mode("overwrite").parquet(stage)
-    val fsL = new Path(loc).getFileSystem(conf)
-    val enc0 = (cid: Long) =>
-      IcebergFormat.encodeBound(org.apache.spark.sql.types.LongType, cid.toString).get
-    // per-cell rename + footer row-count, parallelized across a bounded
-    // pool: still zero Spark jobs, but a 256-cell index (dd23's band
-    // buckets) stops paying 256 sequential footer opens on the driver
-    val cellDirs = fsL.listStatus(new Path(stage)).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cellp="))
-      .sortBy(_.getPath.getName)
-    fsL.mkdirs(new Path(s"$loc/data"))
-    val pool  = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, math.max(1, cellDirs.size)))
-    val infos =
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        Await.result(Future.traverse(cellDirs) { st => Future {
-          val cid   = st.getPath.getName.stripPrefix("cellp=").toLong
-          val parts = fsL.listStatus(st.getPath).map(_.getPath)
-            .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-          require(parts.length == 1,
-            s"cell $cid split across ${parts.length} files — hash repartition broken")
-          parts.zipWithIndex.map { case (part, i) =>
-            val dest = new Path(s"$loc/data/cell$cid-$tag$i.parquet")
-            require(fsL.rename(part, dest), s"stage rename failed for cell$cid")
-            // row count from the parquet footer: driver-side metadata read,
-            // no Spark job
-            val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dest, conf))
-            val n   = try rdr.getRecordCount finally rdr.close()
-            val e   = enc0(cid)
-            IcebergFormat.DataFileInfo(dest.toString, n, fsL.getFileStatus(dest).getLen)
-              .copy(bounds = Map(1 -> (e, e))) // field 1 = cell: min = max = cid
-          }.toSeq
-        } }, Duration.Inf).flatten
-      } finally pool.shutdown()
-    fsL.delete(new Path(stage), true)
-    infos
-  }
+    graft.sources.IcebergWrite.writeFiles(s,
+      assigned.repartition(s.sparkContext.defaultParallelism, col("cell"))
+        .sortWithinPartitions("cell", sortCol),
+      loc, 1 to assigned.schema.length, group = Some(col("cell")))(
+      (_, cid) => s"data/cell$cid-${tag}0.parquet").map(_._2)
 
   /** sm25: the index-build job's audit — read BACK the persisted Iceberg
     * index table and report per-cell membership. Gates that the committed
@@ -2019,10 +1971,8 @@ object Sim {
     val emb = Tables.embeddings(s, d)
     val w   = new IcebergFormat.Writer(s, loc,
       assign(emb.limit(0)).schema)
-    w.commit(stageIndexCells(s, assign(emb.filter(col("vec_id") <= mid)),
-      s"$root/stage_b", loc, "b"))
-    w.commit(stageIndexCells(s, assign(emb.filter(col("vec_id") > mid)),
-      s"$root/stage_d", loc, "d"))
+    w.commit(writeIndexCells(s, assign(emb.filter(col("vec_id") <= mid)), loc, "b"))
+    w.commit(writeIndexCells(s, assign(emb.filter(col("vec_id") > mid)), loc, "d"))
     val meta = w.currentMetadataPath
     def probeCells(v: Array[Double]): Set[Long] =
       cents.map { case (cid, cv, _) => (cid, dist2(v, cv)) }
@@ -2042,7 +1992,7 @@ object Sim {
   /** sm31: INDEX COMPACTION — closes the served-index lifecycle
     * (sm25 build → sm30 append → compact): after an append, each probed
     * cell costs base+delta file opens; one re-clustering job
-    * (the same single-shuffle stageIndexCells write) folds every cell
+    * (the same single-shuffle writeIndexCells write) folds every cell
     * back to ONE file and commits it as a REWRITE snapshot
     * ([[graft.icelite.IcebergFormat.Writer.rewriteDataFiles]]) — readers
     * on pre-compaction snapshots are untouched (time travel intact), new
@@ -2075,15 +2025,13 @@ object Sim {
         .toDF("cell", "vec_id", "embedding")
     val emb = Tables.embeddings(s, d)
     val w   = new IcebergFormat.Writer(s, loc, assign(emb.limit(0)).schema)
-    w.commit(stageIndexCells(s, assign(emb.filter(col("vec_id") <= mid)),
-      s"$root/stage_b", loc, "b"))
-    w.commit(stageIndexCells(s, assign(emb.filter(col("vec_id") > mid)),
-      s"$root/stage_d", loc, "d"))
+    w.commit(writeIndexCells(s, assign(emb.filter(col("vec_id") <= mid)), loc, "b"))
+    w.commit(writeIndexCells(s, assign(emb.filter(col("vec_id") > mid)), loc, "d"))
     // COMPACT: re-cluster the fragmented index (base+delta per cell) into
     // one file per cell, committed as a rewrite snapshot
     val fragmented = IcebergFormat.scan(s, w.currentMetadataPath)
       .select(col("cell"), col("vec_id"), col("embedding"))
-    w.rewriteDataFiles(stageIndexCells(s, fragmented, s"$root/stage_c", loc, "c"))
+    w.rewriteDataFiles(writeIndexCells(s, fragmented, loc, "c"))
     val meta = w.currentMetadataPath
     def probeCells(v: Array[Double]): Set[Long] =
       cents.map { case (cid, cv, _) => (cid, dist2(v, cv)) }
@@ -2419,11 +2367,11 @@ object Sim {
       .toDF("cell", "vec_id", "codes", "embedding")
     val idxLoc = s"$root/ivfpq_index"
     val wIdx = new IcebergFormat.Writer(s, idxLoc, assigned.schema)
-    wIdx.commit(stageIndexCells(s, assigned, s"$root/stage", idxLoc, "f"))
+    wIdx.commit(writeIndexCells(s, assigned, idxLoc, "f"))
     def sidecar(name: String, df: org.apache.spark.sql.DataFrame): String = {
       val loc = s"$root/$name"
       val w   = new IcebergFormat.Writer(s, loc, df.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$root/stage", loc, name, df)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, name, df)))
       w.currentMetadataPath
     }
     val cbMeta = sidecar("pq_codebook",

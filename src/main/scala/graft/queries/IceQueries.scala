@@ -221,7 +221,7 @@ object IceQueries {
         .select("o_orderkey", "o_orderstatus")
         .orderBy("o_orderkey") // bounded slice: the sort pins positions
       val w = new IcebergFormat.Writer(s, loc, ord.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f1", ord)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f1", ord)))
       require(s.sql("SELECT * FROM ice_i88.graft.orders_i88.position_deletes").count() == 0,
         "position_deletes not empty before any DELETE")
       s.sql("DELETE FROM ice_i88.graft.orders_i88 WHERE o_orderkey % 7 = 0")
@@ -671,12 +671,6 @@ object IceQueries {
          UNION ALL SELECT * FROM nation WHERE n_regionkey <= 1)
        ORDER BY n_nationkey, n_name"""
 
-  /** One-file staging into `loc/data/<name>.parquet` (sort order preserved
-    * -> deterministic positions); see IcebergFormat.writeSingleFile. */
-  private def stageIcebergFile(s: SparkSession, root: String, loc: String, name: String,
-      df: DataFrame, content: Int = 0, equalityIds: Seq[Int] = Nil): IcebergFormat.DataFileInfo =
-    IcebergFormat.writeSingleFile(s, root, loc, name, df, content, equalityIds)
-
   /** Merge-on-read POSITION deletes through the standard-Iceberg chain
     * (spec row-level deletes, content=1): snapshot 1 commits two sorted
     * data files, snapshot 2 commits a position-delete file removing rows
@@ -692,8 +686,8 @@ object IceQueries {
     val root   = freshDir(s, "mor_pos")
     val loc    = s"$root/nations_mor"
     val nation = Tables.nation(s, d).orderBy("n_nationkey")
-    val lo   = stageIcebergFile(s, root, loc, "lo", nation.filter(col("n_nationkey") < 10))
-    val mid  = stageIcebergFile(s, root, loc, "mid",
+    val lo   = IcebergFormat.writeSingleFile(s, loc, "lo", nation.filter(col("n_nationkey") < 10))
+    val mid  = IcebergFormat.writeSingleFile(s, loc, "mid",
       nation.filter(col("n_nationkey") >= 10 && col("n_nationkey") < 20))
     val latePath = s"$loc/data/late.parquet" // known before the file exists
     val delDf = Seq(
@@ -702,15 +696,15 @@ object IceQueries {
     ).toDF("file_path", "pos")
     val w = new IcebergFormat.Writer(s, loc, nation.schema)
     w.commit(Seq(lo, mid))                                                    // seq 1: data
-    w.commit(Seq(stageIcebergFile(s, root, loc, "del1", delDf, content = 1))) // seq 2: deletes
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "del1", delDf, content = 1))) // seq 2: deletes
     // seq 3: the late data file TOGETHER with a position delete on its own
     // pos 4 (key 24). Position deletes apply to dataseq <= delseq — same
     // commit included — unlike equality deletes' strictly-older rule, so
     // key 24 must vanish while seq 2's probes at pos 0/1 still must not.
     val sameCommitDel = Seq((latePath, 4L)).toDF("file_path", "pos")
     w.commit(Seq(
-      stageIcebergFile(s, root, loc, "late", nation.filter(col("n_nationkey") >= 20)),
-      stageIcebergFile(s, root, loc, "del2", sameCommitDel, content = 1)))
+      IcebergFormat.writeSingleFile(s, loc, "late", nation.filter(col("n_nationkey") >= 20)),
+      IcebergFormat.writeSingleFile(s, loc, "del2", sameCommitDel, content = 1)))
     new Engine(s, new FsCatalog(s, freshDir(s, "mor_pos_wh")))
       .scanIcebergMetadata(w.currentMetadataPath)
       .orderBy("n_nationkey")
@@ -731,11 +725,11 @@ object IceQueries {
     val loc    = s"$root/nations_moreq"
     val nation = Tables.nation(s, d).orderBy("n_nationkey")
     val keyFieldId = nation.schema.fieldNames.indexOf("n_nationkey") + 1 // 1-based spec ids
-    val base = stageIcebergFile(s, root, loc, "base", nation)
-    val eqDel = stageIcebergFile(s, root, loc, "eqdel",
+    val base = IcebergFormat.writeSingleFile(s, loc, "base", nation)
+    val eqDel = IcebergFormat.writeSingleFile(s, loc, "eqdel",
       nation.filter(col("n_nationkey").isin(10, 11)).select("n_nationkey"),
       content = 2, equalityIds = Seq(keyFieldId))
-    val restated = stageIcebergFile(s, root, loc, "restated",
+    val restated = IcebergFormat.writeSingleFile(s, loc, "restated",
       nation.filter(col("n_nationkey").isin(10, 11))
         .withColumn("n_name", concat(lit("RESTATED_"), col("n_name"))))
     val w = new IcebergFormat.Writer(s, loc, nation.schema)
@@ -773,7 +767,7 @@ object IceQueries {
       // region 4's file KEEPS the column (both spec-legal layouts in one
       // table: present-in-file wins via coalesce, absent reconstructs)
       val slice = nation.filter(col("n_regionkey") === rk)
-      stageIcebergFile(s, root, loc, s"r$rk",
+      IcebergFormat.writeSingleFile(s, loc, s"r$rk",
         if (rk == 4) slice else slice.drop("n_regionkey"))
         .copy(partitionValues = Map("n_regionkey" -> Int.box(rk)))
     }
@@ -795,9 +789,9 @@ object IceQueries {
     val loc    = s"$root/nations_tt_ice"
     val nation = Tables.nation(s, d).orderBy("n_nationkey")
     val w = new IcebergFormat.Writer(s, loc, nation.schema)
-    w.commit(Seq(stageIcebergFile(s, root, loc, "lo",
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "lo",
       nation.filter(col("n_nationkey") < 10))))                      // snapshot 1
-    w.commit(Seq(stageIcebergFile(s, root, loc, "hi",
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "hi",
       nation.filter(col("n_nationkey") >= 10))))                     // snapshot 2
     require(IcebergFormat.scan(s, w.currentMetadataPath).count() == nation.count(),
       "current scan must see both commits")
@@ -865,7 +859,7 @@ object IceQueries {
     val byBucket = keys.groupBy(k =>
       (IcebergFormat.specHashLong(k.toLong) & Int.MaxValue) % nBuckets)
     val infos = byBucket.toSeq.sortBy(_._1).map { case (b, ks) =>
-      stageIcebergFile(s, root, loc, s"b$b",
+      IcebergFormat.writeSingleFile(s, loc, s"b$b",
         nation.filter(col("n_nationkey").isin(ks.toIndexedSeq: _*)))
         .copy(partitionValues = Map("n_nationkey_bucket" -> Int.box(b)))
     }
@@ -931,10 +925,10 @@ object IceQueries {
     val nation = Tables.nation(s, d).orderBy("n_nationkey")
     val evolved = nation.withColumn("n_comment", concat(lit("c_"), col("n_name")))
     val w = new IcebergFormat.Writer(s, loc, nation.schema)
-    w.commit(Seq(stageIcebergFile(s, root, loc, "v0rows",
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "v0rows",
       nation.filter(col("n_nationkey") < 10))))               // schema 0
     w.evolveSchema(evolved.schema)
-    w.commit(Seq(stageIcebergFile(s, root, loc, "v1rows",
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "v1rows",
       evolved.filter(col("n_nationkey") >= 10))))             // schema 1
     new Engine(s, new FsCatalog(s, freshDir(s, "icevo_wh")))
       .scanIcebergMetadata(w.currentMetadataPath)
@@ -1009,7 +1003,7 @@ object IceQueries {
       partitionBy = Seq("years(o_orderdate)"))
     val years = orders.select(year(col("o_orderdate"))).distinct().as[Int].collect().sorted
     val infos = years.map { y =>
-      stageIcebergFile(s, root, loc, s"y$y",
+      IcebergFormat.writeSingleFile(s, loc, s"y$y",
         orders.filter(year(col("o_orderdate")) === y))
         .copy(partitionValues = Map("o_orderdate_year" -> Int.box(y - 1970)))
     }
@@ -1055,11 +1049,11 @@ object IceQueries {
     val loc    = s"$root/nations_specev"
     val nation = Tables.nation(s, d).orderBy("n_nationkey")
     val w = new IcebergFormat.Writer(s, loc, nation.schema) // spec 0: unpartitioned
-    w.commit(Seq(stageIcebergFile(s, root, loc, "legacy",
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "legacy",
       nation.filter(col("n_nationkey") < 12))))
     w.evolveSpec(Seq("n_regionkey")) // spec 1: identity(n_regionkey)
     val infos = (0 to 4).map { rk =>
-      stageIcebergFile(s, root, loc, s"r$rk",
+      IcebergFormat.writeSingleFile(s, loc, s"r$rk",
         nation.filter(col("n_nationkey") >= 12 && col("n_regionkey") === rk))
         .copy(partitionValues = Map("n_regionkey" -> Int.box(rk)))
     }
@@ -1095,13 +1089,13 @@ object IceQueries {
     val w = new IcebergFormat.Writer(s, loc, nation.schema)
     // bucket by key mod 5 (NOT region): covers every row at any scale
     val staged = (0 to 4).map { b =>
-      stageIcebergFile(s, root, loc, s"b$b",
+      IcebergFormat.writeSingleFile(s, loc, s"b$b",
         nation.filter(pmod(col("n_nationkey"), lit(5)) === b).orderBy("n_nationkey"))
     }
     staged.foreach(f => w.commit(Seq(f))) // 5 commits -> 5 data manifests
     // seq 6: position delete killing bucket 0's first row (its min key)
     val delDf = Seq((staged(0).path, 0L)).toDF("file_path", "pos")
-    w.commit(Seq(stageIcebergFile(s, root, loc, "del", delDf, content = 1)))
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "del", delDf, content = 1)))
     val before = IcebergFormat.manifestListPaths(s, w.currentMetadataPath)
     require(before.count(_._2 == 0) == 5 && before.count(_._2 == 1) == 1,
       s"expected 5 data + 1 delete manifests pre-rewrite, got $before")
@@ -1141,7 +1135,7 @@ object IceQueries {
     val nation = Tables.nation(s, d).orderBy("n_nationkey")
     val w = new IcebergFormat.Writer(s, loc, nation.schema)
     (0 to 4).foreach { rk =>
-      w.commit(Seq(stageIcebergFile(s, root, loc, s"r$rk",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, s"r$rk",
         nation.filter(col("n_regionkey") === rk).orderBy("n_nationkey"))))
     }
     w.rewriteManifests() // snapshot 6: per-commit manifests now unreachable
@@ -1323,15 +1317,15 @@ object IceQueries {
     val root   = freshDir(s, "icerw")
     val loc    = s"$root/nations_rw_ice"
     val nation = Tables.nation(s, d).orderBy("n_nationkey")
-    val lo  = stageIcebergFile(s, root, loc, "lo", nation.filter(col("n_nationkey") < 10))
-    val hi  = stageIcebergFile(s, root, loc, "hi", nation.filter(col("n_nationkey") >= 10))
+    val lo  = IcebergFormat.writeSingleFile(s, loc, "lo", nation.filter(col("n_nationkey") < 10))
+    val hi  = IcebergFormat.writeSingleFile(s, loc, "hi", nation.filter(col("n_nationkey") >= 10))
     val del = Seq((lo.path, 0L), (lo.path, 3L), (lo.path, 7L)).toDF("file_path", "pos")
     val w = new IcebergFormat.Writer(s, loc, nation.schema)
     w.commit(Seq(lo, hi))                                                     // snap 1
-    w.commit(Seq(stageIcebergFile(s, root, loc, "del", del, content = 1)))    // snap 2
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "del", del, content = 1)))    // snap 2
     val preRewrite = IcebergFormat.scan(s, w.currentMetadataPath)
       .orderBy("n_nationkey")
-    val compacted = stageIcebergFile(s, root, loc, "compacted", preRewrite)
+    val compacted = IcebergFormat.writeSingleFile(s, loc, "compacted", preRewrite)
     w.rewriteDataFiles(Seq(compacted))                                        // snap 3
     val planned = IcebergFormat.planFiles(s, w.currentMetadataPath, "n_nationkey", None, None)
     require(planned.size == 1, s"bin-pack left ${planned.size} files, expected 1")
@@ -2377,7 +2371,7 @@ object IceQueries {
       val eraA = nation.filter(col("n_nationkey") < 12)
       val eraB = nation.filter(col("n_nationkey") >= 12)
       // era A: spec 0 = identity(n_regionkey), one commit (=> manifest) per
-      // region. The files for ALL regions stage in ONE job (r17 — a
+      // region. The files for ALL regions write in ONE job (r17 — a
       // writeSingleFile loop paid a full job round-trip per commit for
       // scale-constant 25-row fixtures); the commits stay one per region,
       // so the snapshot/manifest history is byte-equivalent.
@@ -2385,7 +2379,7 @@ object IceQueries {
       val regsA = eraA.select("n_regionkey").distinct()
         .collect().map(_.getInt(0)).sorted
       val filesA = IcebergFormat.writeGroupedFiles(
-        s, s"$wh/stage", loc, eraA, col("n_regionkey"), g => s"a_r$g")
+        s, loc, eraA, col("n_regionkey"), g => s"a_r$g")
       regsA.foreach { r =>
         w.commit(Seq(filesA(r.toString)
           .copy(partitionValues = Map("n_regionkey" -> Int.box(r)))))
@@ -2404,7 +2398,7 @@ object IceQueries {
         ks.map { case (k, _) => k -> s"r${r}_b$b" }
       }.toMap
       val filesB = IcebergFormat.writeGroupedFiles(
-        s, s"$wh/stage", loc, eraB,
+        s, loc, eraB,
         element_at(typedLit(keyToCell), col("n_nationkey")), g => s"b_$g")
       cells.foreach { case ((r, b), _) =>
         w.commit(Seq(filesB(s"r${r}_b$b")
@@ -2542,7 +2536,7 @@ object IceQueries {
       def le4(v: Int): Array[Byte] = java.nio.ByteBuffer.allocate(4)
         .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(v).array()
       w.commit(Seq(
-        IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "narrow", narrowDf)
+        IcebergFormat.writeSingleFile(s, loc, "narrow", narrowDf)
           .copy(bounds = Map(1 -> (le4(0), le4(24)))))) // key_i in [0, 24], int-serialized
       val widened = StructType(Seq(
         StructField("key_i", LongType), StructField("n_name", StringType),
@@ -2551,7 +2545,7 @@ object IceQueries {
       val wideDf = nation.filter(col("n_nationkey") < 5).select(
         (col("n_nationkey") + lit(9000000000L)).cast("long").as("key_i"), col("n_name"),
         (col("n_nationkey") + lit(0.1)).cast("double").as("score"))
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "wide", wideDf)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "wide", wideDf)))
       // the narrow file's int-serialized bounds must still prune under
       // the widened long schema: a wide-range probe keeps only the wide file
       val planned = IcebergFormat.planFiles(
@@ -2674,9 +2668,9 @@ object IceQueries {
         .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(v).array()
       val w = new IcebergFormat.Writer(s, loc, df0.schema)
       w.commit(Seq(
-        IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "era1lo",
+        IcebergFormat.writeSingleFile(s, loc, "era1lo",
           df0.filter(col("region_code") <= 1)).copy(bounds = Map(3 -> (le4(0), le4(1)))),
-        IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "era1hi",
+        IcebergFormat.writeSingleFile(s, loc, "era1hi",
           df0.filter(col("region_code") >= 2)).copy(bounds = Map(3 -> (le4(2), le4(4))))))
       w.renameColumn("region_code", "region_id")
       w.dropColumn("n_name")
@@ -2695,7 +2689,7 @@ object IceQueries {
       val era2 = nation.filter(col("n_nationkey") < 5).select(
         (col("n_nationkey") + 100).cast("bigint").as("key_i"),
         col("n_regionkey").cast("int").as("region_id"), col("n_name"))
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "era2", era2,
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "era2", era2,
         fieldIds = Seq(1, 3, 4))))
       val nativeScan = IcebergFormat.scan(s, w.currentMetadataPath)
       requireSameRows(nativeScan,
@@ -2796,9 +2790,9 @@ object IceQueries {
         .filter(col("n_nationkey") < 25)
         .select(col("n_nationkey").cast("bigint").as("k"), col("n_name"))
       val w = new IcebergFormat.Writer(s, loc, nat.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f1",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f1",
         nat.filter(col("k") < 15))))
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f2",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f2",
         nat.filter(col("k") >= 15))))
       s.sql("CREATE NAMESPACE IF NOT EXISTS ice_i94.graft")
       s.sql("DELETE FROM ice_i94.graft.nat_i94 WHERE k % 5 = 0") // MoR -> op "delete"
@@ -2986,7 +2980,7 @@ object IceQueries {
           col("o_orderpriority").as("prio"),
           col("o_totalprice").as("total"))
       val w = new IcebergFormat.Writer(s, loc, base.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f1", base)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f1", base)))
       s.sql("CREATE NAMESPACE IF NOT EXISTS ice_i97.graft")
       s.sql("ALTER TABLE ice_i97.graft.ord_i97 ALTER COLUMN k TYPE BIGINT")
       s.sql("ALTER TABLE ice_i97.graft.ord_i97 RENAME COLUMN prio TO priority")
@@ -3171,9 +3165,9 @@ object IceQueries {
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       val w = new IcebergFormat.Writer(s, loc, ord.schema)
       // two data files over two snapshots: the delete must span both
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f1",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f1",
         ord.filter(col("o_orderkey") % 2 === 0).repartition(1))))
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f2",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f2",
         ord.filter(col("o_orderkey") % 2 === 1).repartition(1))))
       val fs = new Path(loc).getFileSystem(s.sparkContext.hadoopConfiguration)
       def planNow() = IcebergFormat.plan(s, IcebergFormat.currentMetadataPath(s, loc))
@@ -3252,9 +3246,9 @@ object IceQueries {
       val ord = Tables.orders(s, d)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
       val w = new IcebergFormat.Writer(s, loc, ord.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f1",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f1",
         ord.filter(col("o_orderkey") % 2 === 0).repartition(1))))
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f2",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f2",
         ord.filter(col("o_orderkey") % 2 === 1).repartition(1))))
       val fs = new Path(loc).getFileSystem(s.sparkContext.hadoopConfiguration)
       def planNow() = IcebergFormat.plan(s, IcebergFormat.currentMetadataPath(s, loc))
@@ -3313,7 +3307,7 @@ object IceQueries {
       val cust = Tables.customer(s, d)
         .select("c_custkey", "c_nationkey", "c_acctbal").orderBy("c_custkey")
       val w = new IcebergFormat.Writer(s, loc, cust.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f1", cust)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f1", cust)))
       Tables.customer(s, d)
         .select("c_custkey", "c_nationkey", "c_acctbal")
         .filter(col("c_custkey") % 6 === 0)
@@ -3399,14 +3393,14 @@ object IceQueries {
         .select("c_custkey", "c_nationkey", "c_acctbal").orderBy("c_custkey")
       val w = new IcebergFormat.Writer(s, loc, cust.schema)
       // snapshot 1: the full base data
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f1", cust)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f1", cust)))
       // snapshot 2: CDC-style equality delete keyed on c_custkey (field 1)
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "del1",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "del1",
         cust.filter(col("c_custkey") % 7 === 0).select("c_custkey"),
         content = 2, equalityIds = Seq(1))))
       // snapshot 3: a subset of the deleted keys RESTATED — strictly newer
       // than the delete, so the spec's ordering keeps these rows
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f2",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f2",
         cust.filter(col("c_custkey") % 14 === 0)
           .withColumn("c_acctbal", col("c_acctbal") + 500.0))))
 
@@ -3451,12 +3445,12 @@ object IceQueries {
       val cust = Tables.customer(s, d)
         .select("c_custkey", "c_nationkey", "c_acctbal").orderBy("c_custkey")
       val w = new IcebergFormat.Writer(s, loc, cust.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f1", cust)))
-      val del1 = IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "del1",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f1", cust)))
+      val del1 = IcebergFormat.writeSingleFile(s, loc, "del1",
         cust.filter(col("c_custkey") % 7 === 0).select("c_custkey"),
         content = 2, equalityIds = Seq(1))
       w.commit(Seq(del1))
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f2",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f2",
         cust.filter(col("c_custkey") % 14 === 0)
           .withColumn("c_acctbal", col("c_acctbal") + 500.0))))
       // the staged delete file's footer already carries its row count —
@@ -3544,11 +3538,11 @@ object IceQueries {
         .collect().map(_.getString(0)).sorted
       // one commit per priority -> one data manifest per priority, each
       // with a single-value partition summary in the manifest list. The
-      // per-priority files stage in ONE job/scan (r17 — the old loop
+      // per-priority files write in ONE job/scan (r17 — the old loop
       // re-scanned the full orders slice once per priority); commit
       // granularity and manifest history are unchanged.
       val files = IcebergFormat.writeGroupedFiles(
-        s, s"$wh/stage", loc, ord, col("o_orderpriority"), g => s"p${g.take(1)}")
+        s, loc, ord, col("o_orderpriority"), g => s"p${g.take(1)}")
       prios.foreach { p =>
         w.commit(Seq(files(p).copy(partitionValues = Map("o_orderpriority" -> p))))
       }
@@ -3594,10 +3588,10 @@ object IceQueries {
       val w = new IcebergFormat.Writer(s, loc, ord.schema, Seq("years(o_odate)"))
       val years = ord.select(year(col("o_odate")).as("y")).distinct()
         .collect().map(_.getInt(0)).sorted
-      // per-year files stage in ONE job/scan (r17, as ic82); one commit
+      // per-year files write in ONE job/scan (r17, as ic82); one commit
       // per year keeps the manifest-per-year layout under test
       val files = IcebergFormat.writeGroupedFiles(
-        s, s"$wh/stage", loc, ord, year(col("o_odate")), g => s"y$g")
+        s, loc, ord, year(col("o_odate")), g => s"y$g")
       years.foreach { y =>
         w.commit(Seq(files(y.toString)
           .copy(partitionValues = Map("o_odate_year" -> (y - 1970)))))
@@ -3641,9 +3635,9 @@ object IceQueries {
       val cust = Tables.customer(s, d).select("c_custkey", "c_nationkey", "c_acctbal")
       val w = new IcebergFormat.Writer(s, loc, cust.schema)
       // two commits -> the count sums across manifests
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f1",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f1",
         cust.filter(col("c_custkey") % 2 === 0))))
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f2",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f2",
         cust.filter(col("c_custkey") % 2 =!= 0))))
       val q = s.sql("SELECT count(*) AS n_rows FROM ice_i84.graft.cust_i84")
       require(q.queryExecution.executedPlan.toString.contains("metadata-only count"),
@@ -3689,10 +3683,10 @@ object IceQueries {
       // fieldIds MUST match the sparse layout: stats (null counts, bounds)
       // are keyed by field id, and positional 1..n keys would publish
       // counts under the retired id 2 — Writer.commit now rejects that.
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f1",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f1",
         ord.filter(col("o_orderkey") % 2 === 0).repartition(1),
         fieldIds = Seq(1, 3, 4))))
-      w.commit(Seq(IcebergFormat.writeSingleFile(s, s"$wh/stage", loc, "f2",
+      w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "f2",
         ord.filter(col("o_orderkey") % 2 === 1).repartition(1),
         fieldIds = Seq(1, 3, 4))))
       // the published metadata really is sparse
@@ -3847,7 +3841,7 @@ object IceQueries {
         split(col("o_orderpriority"), "-").as("prio_parts"),
         map(lit("cust"), col("o_custkey")).as("attrs"))
       .orderBy("o_orderkey")
-    val f = IcebergFormat.writeSingleFile(s, root, loc, "b1", base)
+    val f = IcebergFormat.writeSingleFile(s, loc, "b1", base)
     val w = new IcebergFormat.Writer(s, loc, base.schema)
     w.commit(Seq(f))
     val scanned = new Engine(s, new FsCatalog(s, freshDir(s, "icenest_wh")))
@@ -4094,9 +4088,9 @@ object IceQueries {
     val orders = Tables.orders(s, d)
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
     val w = new IcebergFormat.Writer(s, loc, orders.schema)
-    w.commit(Seq(stageIcebergFile(s, root, loc, "seed",
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "seed",
       orders.filter(col("o_orderkey") % 3 =!= 0))))
-    IcebergFormat.resumeWriter(s, loc).commit(Seq(stageIcebergFile(s, root, loc, "delta",
+    IcebergFormat.resumeWriter(s, loc).commit(Seq(IcebergFormat.writeSingleFile(s, loc, "delta",
       orders.filter(col("o_orderkey") % 3 === 0 && col("o_orderkey") % 2 === 0))))
     s.conf.set("spark.sql.catalog.ice_i102", "graft.sources.IceLiteCatalog")
     s.conf.set("spark.sql.catalog.ice_i102.warehouse", root)
@@ -4119,7 +4113,7 @@ object IceQueries {
       require(digest("") == survivorsBefore,
         "compaction must MATERIALIZE row ids, not renumber them")
       // post-compaction append: fresh span, no collisions with kept ids
-      IcebergFormat.resumeWriter(s, loc).commit(Seq(stageIcebergFile(s, root, loc, "late",
+      IcebergFormat.resumeWriter(s, loc).commit(Seq(IcebergFormat.writeSingleFile(s, loc, "late",
         orders.filter(col("o_orderkey") % 3 === 0 && col("o_orderkey") % 2 === 1))))
       val n1 = s.sql(
         "SELECT COUNT(*), COUNT(DISTINCT _row_id) FROM ice_i102.graft.ord_i102").head()
@@ -4161,18 +4155,18 @@ object IceQueries {
     val prios  = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
     val w = new IcebergFormat.Writer(s, loc, orders.schema,
       partitionBy = Seq("o_orderpriority"))
-    // both commits stage their per-priority files in ONE grouped job each
+    // both commits write their per-priority files in ONE grouped job each
     // (round 18, the r17 ic82/ic83/ic89 batching — was 7 single-file write
     // jobs); commit granularity and partition values are unchanged
     val seedFiles = IcebergFormat.writeGroupedFiles(
-      s, s"$root/stage", loc, orders.filter(col("o_orderkey") % 2 === 1),
+      s, loc, orders.filter(col("o_orderkey") % 2 === 1),
       col("o_orderpriority"), g => s"seed-${g.take(1)}")
     w.commit(prios.map { pr =>
       seedFiles(pr).copy(partitionValues = Map("o_orderpriority" -> pr))
     })
     // second commit: two partitions grow a second file each
     val deltaFiles = IcebergFormat.writeGroupedFiles(
-      s, s"$root/stage", loc,
+      s, loc,
       orders.filter(col("o_orderpriority").isin(prios.take(2): _*) &&
         col("o_orderkey") % 2 === 0),
       col("o_orderpriority"), g => s"delta-${g.take(1)}")
@@ -4232,7 +4226,7 @@ object IceQueries {
     val orders = Tables.orders(s, d)
       .select("o_orderkey", "o_orderpriority", "o_totalprice")
     val w = new IcebergFormat.Writer(s, loc, orders.schema)
-    w.commit(Seq(stageIcebergFile(s, root, loc, "seed",
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "seed",
       orders.filter(col("o_orderkey") % 3 =!= 0))))
     s.conf.set("spark.sql.catalog.ice_i100", "graft.sources.IceLiteCatalog")
     s.conf.set("spark.sql.catalog.ice_i100.warehouse", root)
@@ -4241,7 +4235,7 @@ object IceQueries {
       s.sql("ALTER TABLE ice_i100.graft.ord_i100 ADD COLUMN channel STRING DEFAULT 'legacy'")
       // post-evolution rows carry explicit channels, some NULL — those
       // nulls must NOT read back as 'legacy'
-      IcebergFormat.resumeWriter(s, loc).commit(Seq(stageIcebergFile(s, root, loc, "delta",
+      IcebergFormat.resumeWriter(s, loc).commit(Seq(IcebergFormat.writeSingleFile(s, loc, "delta",
         orders.filter(col("o_orderkey") % 3 === 0).withColumn("channel",
           when(col("o_orderkey") % 5 === 0, lit(null).cast("string")).otherwise(lit("web"))))))
       // MoR DELETE keyed on the defaulted column: only pre-evolution rows
@@ -4295,8 +4289,8 @@ object IceQueries {
     val orders = Tables.orders(s, d)
     val w      = new IcebergFormat.Writer(s, loc, orders.schema)
     w.commit(Seq(
-      stageIcebergFile(s, root, loc, "even", orders.filter(col("o_orderkey") % 2 === 0)),
-      stageIcebergFile(s, root, loc, "odd", orders.filter(col("o_orderkey") % 2 === 1))))
+      IcebergFormat.writeSingleFile(s, loc, "even", orders.filter(col("o_orderkey") % 2 === 0)),
+      IcebergFormat.writeSingleFile(s, loc, "odd", orders.filter(col("o_orderkey") % 2 === 1))))
     // (1) vector delete: %10==3 rows are all odd -> exactly one vector
     val n1 = DeletionVectors.deleteWhere(s, loc, col("o_orderkey") % 10 === 3)
     require(n1 == 1, s"one touched file must mean one vector, got $n1")
@@ -4353,10 +4347,10 @@ object IceQueries {
     val cust = Tables.customer(s, d)
     val cols = Seq("c_custkey", "c_nationkey", "c_mktsegment")
     val w    = new IcebergFormat.Writer(s, loc, cust.schema)
-    w.commit(Seq(stageIcebergFile(s, root, loc, "seed",
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, loc, "seed",
       cust.filter(col("c_custkey") % 4 =!= 0))))
     TableStats.analyze(s, loc, cols)
-    IcebergFormat.resumeWriter(s, loc).commit(Seq(stageIcebergFile(s, root, loc, "delta",
+    IcebergFormat.resumeWriter(s, loc).commit(Seq(IcebergFormat.writeSingleFile(s, loc, "delta",
       cust.filter(col("c_custkey") % 4 === 0))))
     // second ANALYZE through the SQL procedure surface, and the
     // t.statistics listing must then cover both snapshots' blobs

@@ -28,10 +28,6 @@ object MvQueries {
     p.toString
   }
 
-  private def stage(s: SparkSession, root: String, loc: String, name: String,
-      df: DataFrame, content: Int = 0, eqIds: Seq[Int] = Nil): IcebergFormat.DataFileInfo =
-    IcebergFormat.writeSingleFile(s, s"$root/stage", loc, name, df, content, eqIds)
-
   /** mv01: count/sum/avg view over orders grouped by customer — create on
     * a seed, APPEND a delta (refresh must run in `append` mode reading
     * only the new files), then a SQL MoR `DELETE FROM` on the native base
@@ -45,14 +41,16 @@ object MvQueries {
     val mvLoc   = s"$root/graft/orders_mv"
     val orders  = Tables.orders(s, d)
     val w = new IcebergFormat.Writer(s, baseLoc, orders.schema)
-    w.commit(Seq(stage(s, root, baseLoc, "seed", orders.filter(col("o_orderkey") % 7 =!= 0))))
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, baseLoc, "seed",
+      orders.filter(col("o_orderkey") % 7 =!= 0))))
     MatView.create(s, baseLoc, mvLoc, Seq("o_custkey"), Seq(
       MvAgg("count", "*", "cnt"),
       MvAgg("sum", "CAST(o_totalprice AS DECIMAL(12,2))", "total"),
       MvAgg("avg", "CAST(o_totalprice AS DECIMAL(12,2))", "avg_total")))
     // ---- append window
-    IcebergFormat.resumeWriter(s, baseLoc).commit(Seq(stage(s, root, baseLoc, "delta1",
-      orders.filter(col("o_orderkey") % 7 === 0 && col("o_orderkey") % 2 === 0))))
+    IcebergFormat.resumeWriter(s, baseLoc).commit(Seq(
+      IcebergFormat.writeSingleFile(s, baseLoc, "delta1",
+        orders.filter(col("o_orderkey") % 7 === 0 && col("o_orderkey") % 2 === 0))))
     val st1 = MatView.refresh(s, mvLoc)
     require(st1.mode == "append" && st1.dataFilesReopened == 0,
       s"append window must refresh incrementally without reopening the base: $st1")
@@ -97,14 +95,16 @@ object MvQueries {
     val mvLoc   = s"$root/graft/orders_mm_mv"
     val orders  = Tables.orders(s, d)
     val w = new IcebergFormat.Writer(s, baseLoc, orders.schema)
-    w.commit(Seq(stage(s, root, baseLoc, "seed", orders.filter(col("o_orderkey") % 3 =!= 0))))
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, baseLoc, "seed",
+      orders.filter(col("o_orderkey") % 3 =!= 0))))
     MatView.create(s, baseLoc, mvLoc, Seq("o_orderpriority"), Seq(
       MvAgg("count", "*", "cnt"),
       MvAgg("min", "o_totalprice", "min_p"),
       MvAgg("max", "o_totalprice", "max_p")))
     // ---- append window: min/max maintain fine forward
-    IcebergFormat.resumeWriter(s, baseLoc).commit(Seq(stage(s, root, baseLoc, "delta1",
-      orders.filter(col("o_orderkey") % 3 === 0))))
+    IcebergFormat.resumeWriter(s, baseLoc).commit(Seq(
+      IcebergFormat.writeSingleFile(s, baseLoc, "delta1",
+        orders.filter(col("o_orderkey") % 3 === 0))))
     val st1 = MatView.refresh(s, mvLoc)
     require(st1.mode == "append" && st1.dataFilesReopened == 0,
       s"append window must refresh incrementally: $st1")
@@ -113,7 +113,8 @@ object MvQueries {
     val delKeys = orders.filter(col("o_custkey") % 11 === 7)
       .select("o_custkey").distinct()
     IcebergFormat.resumeWriter(s, baseLoc).commitDelta(Seq(
-      stage(s, root, baseLoc, "eqdel", delKeys, content = 2, eqIds = Seq(custFieldId))))
+      IcebergFormat.writeSingleFile(s, baseLoc, "eqdel", delKeys,
+        content = 2, equalityIds = Seq(custFieldId))))
     val st2 = MatView.refresh(s, mvLoc)
     require(st2.mode == "full",
       s"equality-delete window must fall back to a full recompute: $st2")
@@ -140,15 +141,17 @@ object MvQueries {
     val mvLoc   = s"$root/graft/ev_mv"
     val events  = Tables.events(s, d).select("user_id", "event_type", "value")
     val w = new IcebergFormat.Writer(s, baseLoc, events.schema)
-    w.commit(Seq(stage(s, root, baseLoc, "seed", events.filter(col("user_id") % 2 === 0))))
+    w.commit(Seq(IcebergFormat.writeSingleFile(s, baseLoc, "seed",
+      events.filter(col("user_id") % 2 === 0))))
     s.conf.set("spark.sql.catalog.mv03cat", "graft.sources.IceLiteCatalog")
     s.conf.set("spark.sql.catalog.mv03cat.warehouse", root)
     try {
       s.sql("CREATE NAMESPACE IF NOT EXISTS mv03cat.graft")
       s.sql("""CALL mv03cat.system.create_mv('graft', 'ev_base', 'ev_mv', 'event_type',
                'count:*:cnt;sum:CAST(value AS DECIMAL(12,2)):total;avg:CAST(value AS DECIMAL(12,2)):avg_v')""")
-      IcebergFormat.resumeWriter(s, baseLoc).commit(Seq(stage(s, root, baseLoc, "delta1",
-        events.filter(col("user_id") % 2 === 1))))
+      IcebergFormat.resumeWriter(s, baseLoc).commit(Seq(
+        IcebergFormat.writeSingleFile(s, baseLoc, "delta1",
+          events.filter(col("user_id") % 2 === 1))))
       val r1 = s.sql("CALL mv03cat.system.refresh_mv('graft', 'ev_mv')").head()
       require(r1.getString(0) == "append" && r1.getLong(5) == 0L,
         s"SQL refresh audit row must report a delta-proportional append: $r1")

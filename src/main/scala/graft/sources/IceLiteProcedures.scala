@@ -307,13 +307,13 @@ private[graft] object IceLiteProcedures {
 
   /** Standard-format `rewrite_data_files` — the maintenance op that CLEARS
     * merge-on-read delete debt, equality deletes (content 2) included: the
-    * compacted files are staged from a scan of the CURRENT state (which
+    * compacted files are written from a scan of the CURRENT state (which
     * applies position AND equality deletes, ic79's read path), and the
     * commit replaces every manifest — data and delete — so afterwards the
     * table is pure data files again. Older snapshots keep their own
     * manifest lists, so pre-compaction time travel still sees (and still
     * applies) the original deletes. Unpartitioned default specs only: the
-    * staged files carry no partition tuples, and committing tuple-less
+    * written files carry no partition tuples, and committing tuple-less
     * files under a partitioned spec is the exact spec violation the delta
     * writer refuses. */
   private def rewriteStandardFormat(loc: String, targetFiles: Int): java.util.Iterator[Scan] = {
@@ -326,7 +326,7 @@ private[graft] object IceLiteProcedures {
     val w        = IcebergFormat.resumeWriter(spark, loc)
     require(!w.defaultSpecIsPartitioned,
       "standard-format rewrite_data_files supports unpartitioned default specs " +
-        "(staged files carry no partition tuples)")
+        "(written files carry no partition tuples)")
     val n   = math.max(1, targetFiles)
     // v3 ROW LINEAGE: a rewrite changes positions, so implicit
     // (first_row_id + pos) ids would be destroyed — the spec's answer is
@@ -338,31 +338,21 @@ private[graft] object IceLiteProcedures {
       if (lineageActive) IcebergFormat.scanWithLineage(spark, metaPath)
       else IcebergFormat.scan(spark, metaPath) // deletes applied here
     val tag = java.util.UUID.randomUUID().toString.take(8)
-    val fs  = new org.apache.hadoop.fs.Path(loc)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // stage n files in ONE distributed write, then register each from its
-    // own footer (rows/split_offsets/null counts — no second data pass)
-    val tmp = new org.apache.hadoop.fs.Path(loc, s"stage-rw-$tag")
-    cur.repartition(n).write.mode("overwrite").parquet(tmp.toString)
-    val parts = fs.listStatus(tmp).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
-    // materialized lineage columns take engine-assigned ids from the
+    // n files in ONE distributed write, each entry from the writer's own
+    // stats (rows/split_offsets/bounds/null counts — no second data pass).
+    // Materialized lineage columns take engine-assigned ids from the
     // reserved range (they are never table-schema fields); their stats
     // are stripped before commit so the schema-id gate stays honest
-    val lineageIds  = Seq(2147483540, 2147483539)
-    val stageIds    = if (lineageActive) plan0.fieldIds ++ lineageIds else plan0.fieldIds
-    val staged = parts.zipWithIndex.map { case (p, i) =>
-      val dest = new org.apache.hadoop.fs.Path(s"$loc/data/compact-$tag-$i.parquet")
-      fs.mkdirs(dest.getParent)
-      require(fs.rename(p, dest), s"compaction stage rename failed: $p")
-      val info = IcebergFormat.fileInfoFromFooter(spark, dest, cur.schema, fieldIds = stageIds)
+    val lineageIds = Seq(2147483540, 2147483539)
+    val ids = if (lineageActive) plan0.fieldIds ++ lineageIds else plan0.fieldIds
+    val written = IcebergWrite.writeFiles(spark, cur.repartition(n), loc, ids, plan0.nestedIds)(
+      (i, _) => s"data/compact-$tag-$i.parquet").map { case (_, info) =>
       if (!lineageActive) info
       else info.copy(
         bounds = info.bounds -- lineageIds, nullCounts = info.nullCounts -- lineageIds,
         lineageMaterialized = true)
-    }.filter(_.recordCount > 0L)
-    fs.delete(tmp, true)
-    w.rewriteDataFiles(staged)
+    }
+    w.rewriteDataFiles(written)
     val planAfter = IcebergFormat.plan(spark,
       IcebergFormat.currentMetadataPath(spark, loc))
     resultScan(

@@ -853,7 +853,10 @@ final case class EqualityDeleteFile(
   * positions matter. `output` and `eqKeys` are bound over that row joined
   * with a per-file constant row: `_file`, the file's first row id, its
   * data sequence number, then one value per partition column. A null
-  * `output` means the read rows already are the scan's rows. */
+  * `output` means the read rows already are the scan's rows. `_file` is
+  * the file's full path on a spec-format scan (`absoluteFile`), which is
+  * what the spec's position deletes name, and its manifest-relative path
+  * on an IceLite scan. */
 final class IceLiteReaderFactory private (
     private[sources] val read: PartitionedFile => Iterator[InternalRow],
     private[sources] val readDeletes: Option[PartitionedFile => Iterator[InternalRow]],
@@ -864,7 +867,8 @@ final class IceLiteReaderFactory private (
     private[sources] val partTypes: Array[DataType],
     private[sources] val limit: Option[Int],
     private[sources] val deletes: Seq[PositionDeleteFile],
-    private[sources] val eqDeletes: Seq[EqualityDeleteFile])
+    private[sources] val eqDeletes: Seq[EqualityDeleteFile],
+    private[sources] val absoluteFile: Boolean)
     extends PartitionReaderFactory {
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -881,8 +885,8 @@ object IceLiteReaderFactory {
 
   /** Manifest-relative path of an absolute data-file path (anchored at the
     * `data/snap-` segment every committed file lives under) — the `_file`
-    * value the scan emits for that file. */
-  def relOf(full: String): String = {
+    * value an IceLite scan emits for that file. */
+  private[sources] def relOf(full: String): String = {
     val i = full.indexOf("/data/snap-")
     if (i >= 0) full.substring(i + 1) else full
   }
@@ -900,7 +904,8 @@ object IceLiteReaderFactory {
       limit: Option[Int],
       deletes: Seq[PositionDeleteFile],
       eqDeletes: Seq[EqualityDeleteFile],
-      partitionDeletes: Boolean): IceLiteReaderFactory = {
+      partitionDeletes: Boolean,
+      absoluteFile: Boolean = false): IceLiteReaderFactory = {
     val spark   = SparkSession.active
     val byId    = tableSchema.fields.exists(_.metadata.contains("parquet.field.id"))
     val session = if (byId) IcebergFormat.idReadSession(spark) else spark
@@ -964,7 +969,7 @@ object IceLiteReaderFactory {
       keySets.map(k => k -> k.map(value)).toMap,
       if (needPos) readSchema.fieldIndex(RowIndex) else -1,
       partCols.map(tableField(_).dataType),
-      limit, deletes, eqDeletes)
+      limit, deletes, eqDeletes, absoluteFile)
   }
 
   private def parquetReader(session: SparkSession, schema: StructType)
@@ -1043,8 +1048,8 @@ final class IceLitePartitionReader(f: IceLiteReaderFactory, partition: IceLitePa
     * path range covers it. Bounded work: only covering delete files are
     * opened (range-pruned), and the bitmap holds only this file's deleted
     * positions — the per-task "delete index" shape Iceberg MoR readers
-    * use. A delete names the file either by `rel` (the connector's own
-    * deltas write `_file`) or by its full path (spec writers and deletion
+    * use. A delete names the file either by `rel` (IceLite deltas write
+    * `_file`) or by its full path (spec writers and deletion
     * vectors), and scheme-insensitively: writers record one local file as
     * `file:/x`, `file:///x` or `/x`. */
   private def loadDeletes(path: String, rel: String, seq: Option[Long]): java.util.BitSet = {
@@ -1104,7 +1109,7 @@ final class IceLitePartitionReader(f: IceLiteReaderFactory, partition: IceLitePa
     // new; files planned without one (non-MoR paths) never see equality
     // deletes
     val seq = partition.seqs.lift(i)
-    consts.update(0, UTF8String.fromString(rel))
+    consts.update(0, UTF8String.fromString(if (f.absoluteFile) path else rel))
     consts.update(1, partition.firstRowIds.lift(i).flatten.map(Long.box).orNull)
     consts.update(2, seq.map(Long.box).orNull)
     f.partTypes.indices.foreach { j =>

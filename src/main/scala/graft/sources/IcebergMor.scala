@@ -758,7 +758,7 @@ final class IcebergMorScan(
   // free, and Spark's physical planning asks for the factory more than once
   private lazy val readerFactory =
     IceLiteReaderFactory(required, partCols, tableSchema, limit, deleteFiles, eqDeleteFiles,
-      partitionDeletes = false)
+      partitionDeletes = false, absoluteFile = true)
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
   // EXPLAIN never forces `partitions`; split counts print only if
   // planning already ran
@@ -870,19 +870,13 @@ final class IcebergMorDeltaWrite(
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val msgs = messages.toSeq.map(_.asInstanceOf[IcebergMorDeltaMessage])
       val s    = SparkSession.active
-      // content-1 position deletes, each with the spec-reserved
-      // file_path field's [min, max] from the writer's inline
-      // stats — what lets every reader range-prune this delete
-      val delInfos = msgs.flatMap(_.deleteFile).filter(_.rows > 0L).map { m =>
-        val pathBounds = m.bounds.get("file_path").flatten.toSeq.flatMap { case (lo, hi) =>
-          for {
-            loB <- IcebergFormat.encodeBound(StringType, lo)
-            hiB <- IcebergFormat.encodeBound(StringType, hi)
-          } yield IcebergFormat.PosDeletePathFieldId -> (loB, hiB)
-        }.toMap
-        IcebergFormat.DataFileInfo(new Path(location, m.relPath).toString, m.rows,
-          m.sizeBytes, bounds = pathBounds, content = 1)
-      }
+      // content-1 position deletes, each with its file_path [min, max]
+      // from the writer's inline stats — what lets every reader
+      // range-prune this delete
+      val delInfos = msgs.flatMap(_.deleteFile).filter(_.rows > 0L).map(m =>
+        IcebergWrite.dataFileInfo(location, IceTable.PositionDeleteSchema,
+          Seq(IcebergFormat.PosDeletePathFieldId, IcebergFormat.PosDeletePosFieldId), m,
+          content = 1))
       // content-0 insert files, keyed by the table's REAL field ids
       // (sparse after evolution) so pruning keys match the metadata
       val dataInfos = msgs.flatMap(_.dataFiles).filter(_._1.rows > 0L).map { case (m, pv) =>

@@ -168,12 +168,11 @@ final class ParquetDataWriter private[sources] (
         val dt = schema(c).dataType
         schema(c).name -> Option(mins(s)).map(lo => (statStr(dt, lo), statStr(dt, maxs(s))))
     }.toMap
-    val (size, offsets) = if (rows == 0) (0L, Nil) else {
-      val in = HadoopInputFile.fromPath(path, conf)
-      val fr = ParquetFileReader.open(in)
+    val in = HadoopInputFile.fromPath(path, conf)
+    val fr = ParquetFileReader.open(in)
+    val (size, offsets) =
       try (in.getLength, fr.getFooter.getBlocks.asScala.map(_.getStartingPos).toSeq)
       finally fr.close()
-    }
     WrittenFile(relPath, rows, size, offsets, bounds,
       schema.fieldNames.zip(nulls).toMap)
   }

@@ -327,9 +327,9 @@ object StreamQueries {
         batch.persist()
         try {
           if (batch.count() > 0) {
-            val del = IcebergFormat.writeSingleFile(s, root, loc, s"del-$batchId",
+            val del = IcebergFormat.writeSingleFile(s, loc, s"del-$batchId",
               batch.select("user_id"), content = 2, equalityIds = Seq(1))
-            val data = IcebergFormat.writeSingleFile(s, root, loc, s"data-$batchId",
+            val data = IcebergFormat.writeSingleFile(s, loc, s"data-$batchId",
               batch.select("user_id", "n_purchases", "total"))
             w.commit(Seq(del, data)) // one snapshot: retire old rows, add new
           }
@@ -378,7 +378,7 @@ object StreamQueries {
         try {
           if (batch.count() > 0) {
             w.commit(Seq(IcebergFormat.writeSingleFile(
-              s, root, loc, s"data-$batchId", batch.orderBy("event_id"))))
+              s, loc, s"data-$batchId", batch.orderBy("event_id"))))
             // inline maintenance: compact + expire once metadata sprawls
             val dataManifests = IcebergFormat
               .manifestListPaths(s, w.currentMetadataPath).count(_._2 == 0)
@@ -664,14 +664,14 @@ object StreamQueries {
     val loc = s"$root/events_ice"
     val w   = new IcebergFormat.Writer(s, loc, ev.schema)
     def snap(n: Int): Unit = w.commit(Seq(IcebergFormat.writeSingleFile(
-      s, root, loc, s"b$n", ev.filter(col("event_id") % 4 === n))))
-    // the three pre-stream snapshots stage in ONE grouped job instead of
+      s, loc, s"b$n", ev.filter(col("event_id") % 4 === n))))
+    // the three pre-stream snapshots write in ONE grouped job instead of
     // three full events scans (round 18, the r17 ic89 batching pattern);
     // the commits stay one per snapshot so the snapshot log under test —
     // and both file-open counter gates — are unchanged
     locally {
       val filesA = IcebergFormat.writeGroupedFiles(
-        s, root, loc, ev.filter(col("event_id") % 4 < 3),
+        s, loc, ev.filter(col("event_id") % 4 < 3),
         pmod(col("event_id"), lit(4)), g => s"b$g")
       (0 to 2).foreach(n => w.commit(Seq(filesA(n.toString))))
     }

@@ -456,7 +456,7 @@ class DataSourceV2Spec extends SparkSpec {
       val df0 = Tables.nation(spark, sfDir)
         .select(col("n_nationkey").cast("bigint").as("k"), col("n_name").as("label"))
       val w = new IcebergFormat.Writer(spark, loc, df0.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "f1", df0)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f1", df0)))
       w.renameColumn("label", "title")
       w.publishSchemaChange()
       spark.sql("CREATE NAMESPACE IF NOT EXISTS ice_rn.ns")
@@ -487,7 +487,7 @@ class DataSourceV2Spec extends SparkSpec {
       val df0 = Tables.nation(spark, sfDir)
         .select(col("n_nationkey").cast("bigint").as("k"), col("n_name").as("v"))
       val w = new IcebergFormat.Writer(spark, loc, df0.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "f1", df0)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f1", df0)))
       spark.sql("CREATE NAMESPACE IF NOT EXISTS ice_ops.ns")
       spark.sql("DELETE FROM ice_ops.ns.nat_ops WHERE k % 2 = 0") // MoR position deletes
       spark.sql("UPDATE ice_ops.ns.nat_ops SET v = 'X' WHERE k = 1") // deletes + inserts
@@ -503,7 +503,7 @@ class DataSourceV2Spec extends SparkSpec {
         s"snapshot operations wrong: $ops")
       // the operations survive a resume + further commit
       IcebergFormat.appendWithRetry(spark, loc,
-        Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "f2",
+        Seq(IcebergFormat.writeSingleFile(spark, loc, "f2",
           df0.filter(col("k") < 2))))
       val ops2 = opsOf(IcebergFormat.currentMetadataPath(spark, loc))
       assert(ops2 == Seq("append", "delete", "overwrite", "append"),
@@ -524,7 +524,7 @@ class DataSourceV2Spec extends SparkSpec {
       val df0 = Tables.nation(spark, sfDir).select(
         col("n_nationkey").cast("int").as("k"), col("n_name").as("label"))
       val w = new IcebergFormat.Writer(spark, loc, df0.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "f1", df0)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f1", df0)))
       spark.sql("CREATE NAMESPACE IF NOT EXISTS ice_na.ns")
       spark.sql("ALTER TABLE ice_na.ns.nat_na ALTER COLUMN k TYPE BIGINT")
       spark.sql("ALTER TABLE ice_na.ns.nat_na RENAME COLUMN label TO title")
@@ -699,7 +699,7 @@ class DataSourceV2Spec extends SparkSpec {
       .select(col("o_orderkey"),
         struct(col("o_totalprice").as("total")).as("info"),
         col("o_orderpriority").as("note"))
-    val f = IcebergFormat.writeSingleFile(spark, root, loc, "f2", df2,
+    val f = IcebergFormat.writeSingleFile(spark, loc, "f2", df2,
       fieldIds = w3.fieldIdsNow, nestedIds = w3.nestedIdsNow)
     w3.commit(Seq(f))
     val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -840,6 +840,16 @@ class DataSourceV2Spec extends SparkSpec {
       def idsOf(dir: String) = footers(dir).map(f => fileIds(f.getFileMetaData.getSchema))
       assert(idsOf(s"$loc/data").nonEmpty && idsOf(s"$loc/data").forall(_ == jsonIds),
         s"${idsOf(s"$loc/data")} != $jsonIds")
+      // the library write of the same frame: same ids, list element and
+      // map key/value included
+      val libLoc = s"$wh/ns/nested_lib"
+      new IcebergFormat.Writer(spark, libLoc, src.schema)
+        .commit(Seq(IcebergFormat.writeSingleFile(spark, libLoc, "f1", src)))
+      val lw = IcebergFormat.resumeWriter(spark, libLoc)
+      val libJsonIds = (lw.schemaNow.fieldNames.zip(lw.fieldIdsNow) ++ lw.nestedIdsNow)
+        .map { case (p, id) => p -> Option(id) }.toMap
+      assert(libJsonIds == jsonIds, s"$libJsonIds != $jsonIds")
+      assert(idsOf(s"$libLoc/data") == Seq(jsonIds), s"${idsOf(s"$libLoc/data")} != $jsonIds")
       val few = src.filter(col("k") < 10)
       few.union(few.withColumn("k", col("k") + 1000)).createOrReplaceTempView("pf_merge_src")
       spark.sql("""MERGE INTO pf.ns.nested t USING pf_merge_src s ON t.k = s.k
@@ -874,7 +884,7 @@ class DataSourceV2Spec extends SparkSpec {
       val loc = s"$wh/ns/ice"
       val df  = Seq(emoji).toDF("s")
       new IcebergFormat.Writer(spark, loc, df.schema)
-        .commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "f1", df)))
+        .commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f1", df)))
       for (tbl <- Seq("ins", "app", "ice")) {
         def n(pred: String) =
           spark.sql(s"SELECT count(*) FROM u8.ns.$tbl WHERE $pred").head().getLong(0)

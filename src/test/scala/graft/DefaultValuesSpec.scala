@@ -11,16 +11,16 @@ class DefaultValuesSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def stage(root: String, loc: String, name: String,
+  private def stage(loc: String, name: String,
       df: org.apache.spark.sql.DataFrame): IcebergFormat.DataFileInfo =
-    IcebergFormat.writeSingleFile(spark, root, loc, name, df)
+    IcebergFormat.writeSingleFile(spark, loc, name, df)
 
   test("library path: old files read the default, explicit nulls survive, no-default adds read null") {
     val root = scratch("dflt_lib")
     val loc  = s"$root/t"
     val df1  = Seq((1L, "a"), (2L, "b")).toDF("k", "s")
     val w    = new IcebergFormat.Writer(spark, loc, df1.schema)
-    w.commit(Seq(stage(root, loc, "f1", df1)))
+    w.commit(Seq(stage(loc, "f1", df1)))
     // evolve: channel STRING DEFAULT 'legacy', n INT (no default)
     val w2 = IcebergFormat.resumeWriter(spark, loc)
     w2.evolveSchema(org.apache.spark.sql.types.StructType(w2.schemaNow.fields ++ Seq(
@@ -31,7 +31,7 @@ class DefaultValuesSpec extends SparkSpec {
     // post-evolution file with an EXPLICIT null channel
     val df2 = Seq((3L, "c", "web", 7), (4L, "d", null.asInstanceOf[String], 8))
       .toDF("k", "s", "channel", "n")
-    IcebergFormat.resumeWriter(spark, loc).commit(Seq(stage(root, loc, "f2", df2)))
+    IcebergFormat.resumeWriter(spark, loc).commit(Seq(stage(loc, "f2", df2)))
     val got = IcebergFormat.scan(spark, IcebergFormat.currentMetadataPath(spark, loc))
       .select("k", "channel", "n").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1),
@@ -45,14 +45,14 @@ class DefaultValuesSpec extends SparkSpec {
     val loc  = s"$root/t"
     val df1  = Seq(1L, 2L).toDF("k")
     val w    = new IcebergFormat.Writer(spark, loc, df1.schema)
-    w.commit(Seq(stage(root, loc, "f1", df1)))
+    w.commit(Seq(stage(loc, "f1", df1)))
     val w2 = IcebergFormat.resumeWriter(spark, loc)
     w2.evolveSchema(org.apache.spark.sql.types.StructType(w2.schemaNow.fields :+
       org.apache.spark.sql.types.StructField("flag", org.apache.spark.sql.types.IntegerType)))
     w2.setInitialDefault("flag", 42)
     w2.publishSchemaChange()
     // an unrelated resumed commit must not lose the default
-    IcebergFormat.resumeWriter(spark, loc).commit(Seq(stage(root, loc, "f2",
+    IcebergFormat.resumeWriter(spark, loc).commit(Seq(stage(loc, "f2",
       Seq((3L, 5)).toDF("k", "flag"))))
     val mp = IcebergFormat.currentMetadataPath(spark, loc)
     val fs = new org.apache.hadoop.fs.Path(mp)
@@ -74,7 +74,7 @@ class DefaultValuesSpec extends SparkSpec {
       val loc = s"$wh/ns/t"
       val df  = (0L until 10L).toDF("v")
       val w   = new IcebergFormat.Writer(spark, loc, df.schema)
-      w.commit(Seq(stage(wh, loc, "f1", df)))
+      w.commit(Seq(stage(loc, "f1", df)))
       spark.sql("CREATE NAMESPACE IF NOT EXISTS df_cat.ns")
       spark.sql("ALTER TABLE df_cat.ns.t ADD COLUMN channel STRING DEFAULT 'legacy'")
       assert(spark.sql("SELECT COUNT(*) FROM df_cat.ns.t WHERE channel = 'legacy'")
@@ -105,7 +105,7 @@ class DefaultValuesSpec extends SparkSpec {
       val loc = s"$wh/ns/t"
       val df  = (0L until 5L).toDF("v")
       val w   = new IcebergFormat.Writer(spark, loc, df.schema)
-      w.commit(Seq(stage(wh, loc, "f1", df)))
+      w.commit(Seq(stage(loc, "f1", df)))
       spark.sql("CREATE NAMESPACE IF NOT EXISTS dr_cat.ns")
       spark.sql("ALTER TABLE dr_cat.ns.t ADD COLUMN tag STRING DEFAULT 'x'")
       spark.sql("ALTER TABLE dr_cat.ns.t RENAME COLUMN tag TO label")

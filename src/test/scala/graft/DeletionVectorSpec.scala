@@ -12,10 +12,10 @@ class DeletionVectorSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def stage(root: String, loc: String, name: String,
+  private def stage(loc: String, name: String,
       df: org.apache.spark.sql.DataFrame, content: Int = 0,
       eqIds: Seq[Int] = Nil): IcebergFormat.DataFileInfo =
-    IcebergFormat.writeSingleFile(spark, root, loc, name, df, content, eqIds)
+    IcebergFormat.writeSingleFile(spark, loc, name, df, content, eqIds)
 
   private def scanVals(loc: String): Set[Long] =
     IcebergFormat.scan(spark, IcebergFormat.currentMetadataPath(spark, loc))
@@ -45,8 +45,8 @@ class DeletionVectorSpec extends SparkSpec {
     val df1  = (0L until 20L).toDF("v")
     val df2  = (20L until 40L).toDF("v")
     val w    = new IcebergFormat.Writer(spark, loc, df1.schema)
-    w.commit(Seq(stage(root, loc, "f1", df1)))
-    IcebergFormat.resumeWriter(spark, loc).commit(Seq(stage(root, loc, "f2", df2)))
+    w.commit(Seq(stage(loc, "f1", df1)))
+    IcebergFormat.resumeWriter(spark, loc).commit(Seq(stage(loc, "f2", df2)))
     val n = DeletionVectors.deleteWhere(spark, loc, col("v") % 10 === 3)
     assert(n == 2, s"both files hold matching rows, got $n vectors")
     assert(scanVals(loc) == (0L until 40L).filter(_ % 10 != 3).toSet)
@@ -63,7 +63,7 @@ class DeletionVectorSpec extends SparkSpec {
     val loc  = s"$root/t"
     val df   = (0L until 30L).toDF("v")
     val w    = new IcebergFormat.Writer(spark, loc, df.schema)
-    w.commit(Seq(stage(root, loc, "f1", df)))
+    w.commit(Seq(stage(loc, "f1", df)))
     DeletionVectors.deleteWhere(spark, loc, col("v") < 5)
     DeletionVectors.deleteWhere(spark, loc, col("v") >= 25)
     assert(scanVals(loc) == (5L until 25L).toSet)
@@ -78,14 +78,14 @@ class DeletionVectorSpec extends SparkSpec {
     val loc  = s"$root/t"
     val df   = (0L until 30L).toDF("v")
     val w    = new IcebergFormat.Writer(spark, loc, df.schema)
-    w.commit(Seq(stage(root, loc, "f1", df)))
+    w.commit(Seq(stage(loc, "f1", df)))
     DeletionVectors.deleteWhere(spark, loc, col("v") < 3)
     // a later parquet position delete (the v2 shape) on the same file
     val p  = IcebergFormat.plan(spark, IcebergFormat.currentMetadataPath(spark, loc))
     val fp = p.files.head.path.toString
     val delDf = Seq((fp, 10L), (fp, 11L)).toDF("file_path", "pos")
     IcebergFormat.resumeWriter(spark, loc)
-      .commitDelta(Seq(stage(root, loc, "pd", delDf, content = 1)))
+      .commitDelta(Seq(stage(loc, "pd", delDf, content = 1)))
     assert(scanVals(loc) == (3L until 30L).toSet -- Set(10L, 11L))
     // and a THIRD vector delete folds everything for the file
     DeletionVectors.deleteWhere(spark, loc, col("v") === 29)
@@ -100,12 +100,12 @@ class DeletionVectorSpec extends SparkSpec {
     val loc  = s"$root/t"
     val df1  = (0L until 10L).toDF("v")
     val w    = new IcebergFormat.Writer(spark, loc, df1.schema)
-    w.commit(Seq(stage(root, loc, "f1", df1)))
+    w.commit(Seq(stage(loc, "f1", df1)))
     val mp0   = IcebergFormat.currentMetadataPath(spark, loc)
     val snap0 = IcebergFormat.currentSnapshotId(spark, mp0).get
     DeletionVectors.deleteWhere(spark, loc, col("v") < 9)
     IcebergFormat.resumeWriter(spark, loc).commit(Seq(
-      stage(root, loc, "f2", (100L until 105L).toDF("v"))))
+      stage(loc, "f2", (100L until 105L).toDF("v"))))
     assert(scanVals(loc) == Set(9L) ++ (100L until 105L))
     // pre-vector snapshot still reads the full file
     val mp = IcebergFormat.currentMetadataPath(spark, loc)
@@ -118,7 +118,7 @@ class DeletionVectorSpec extends SparkSpec {
     def bound(v: Long) = IcebergFormat.encodeBound(
       org.apache.spark.sql.types.LongType, v.toString).get
     def bounded(name: String, lo: Long, hi: Long) =
-      stage(root, loc, name, (lo to hi).toDF("v")).copy(bounds = Map(1 -> (bound(lo), bound(hi))))
+      stage(loc, name, (lo to hi).toDF("v")).copy(bounds = Map(1 -> (bound(lo), bound(hi))))
     val w = new IcebergFormat.Writer(spark, loc, (0L until 1L).toDF("v").schema)
     w.commit(Seq(bounded("f1", 0, 19), bounded("f2", 20, 39), bounded("f3", 40, 59)))
     // a vector on f1 (v = 3), then a parquet position delete on f2 (pos 1:
@@ -128,7 +128,7 @@ class DeletionVectorSpec extends SparkSpec {
       .files.map(_.path.toString).find(_.endsWith("f2.parquet")).get
     val f4 = new org.apache.hadoop.fs.Path(s"$loc/data/f4.parquet").toString
     IcebergFormat.resumeWriter(spark, loc).commitDelta(Seq(
-      stage(root, loc, "pd", Seq((f2, 1L), (f4, 0L)).toDF("file_path", "pos"), content = 1)))
+      stage(loc, "pd", Seq((f2, 1L), (f4, 0L)).toDF("file_path", "pos"), content = 1)))
     IcebergFormat.resumeWriter(spark, loc).commit(Seq(bounded("f4", 60, 79)))
     val mp   = IcebergFormat.currentMetadataPath(spark, loc)
     val live = (0L until 40L).toSet -- Set(3L, 21L)
@@ -161,7 +161,7 @@ class DeletionVectorSpec extends SparkSpec {
       .where(col("v") === 21)
       .select(col("_metadata.file_path").as("file_path"), col("_metadata.row_index").as("pos"))
     IcebergFormat.resumeWriter(spark, loc)
-      .commitDelta(Seq(stage(root, loc, "pd", pd, content = 1)))
+      .commitDelta(Seq(stage(loc, "pd", pd, content = 1)))
     val mp   = IcebergFormat.currentMetadataPath(spark, loc)
     val live = rows.filterNot(r => r._2 == 3L || r._2 == 21L)
     assert(IcebergFormat.scan(spark, mp).count() == live.size.toLong)
@@ -181,7 +181,7 @@ class DeletionVectorSpec extends SparkSpec {
       val loc = s"$wh/ns/t"
       val df  = (0L until 50L).toDF("v")
       val w   = new IcebergFormat.Writer(spark, loc, df.schema)
-      w.commit(Seq(stage(wh, loc, "f1", df)))
+      w.commit(Seq(stage(loc, "f1", df)))
       spark.sql("CREATE NAMESPACE IF NOT EXISTS dv_cat.ns")
       DeletionVectors.deleteWhere(spark, loc, col("v") % 5 === 0)
       val got = spark.sql("SELECT v FROM dv_cat.ns.t ORDER BY v")
@@ -202,13 +202,13 @@ class DeletionVectorSpec extends SparkSpec {
     val loc  = s"$root/t"
     val df   = (0L until 25L).toDF("v")
     val w    = new IcebergFormat.Writer(spark, loc, df.schema)
-    w.commit(Seq(stage(root, loc, "f1", df)))
+    w.commit(Seq(stage(loc, "f1", df)))
     val p  = IcebergFormat.plan(spark, IcebergFormat.currentMetadataPath(spark, loc))
     val fp = p.files.head.path.toString
     IcebergFormat.resumeWriter(spark, loc).commitDelta(Seq(
-      stage(root, loc, "pd1", Seq((fp, 1L), (fp, 2L)).toDF("file_path", "pos"), content = 1)))
+      stage(loc, "pd1", Seq((fp, 1L), (fp, 2L)).toDF("file_path", "pos"), content = 1)))
     IcebergFormat.resumeWriter(spark, loc).commitDelta(Seq(
-      stage(root, loc, "pd2", Seq((fp, 3L)).toDF("file_path", "pos"), content = 1)))
+      stage(loc, "pd2", Seq((fp, 3L)).toDF("file_path", "pos"), content = 1)))
     val n = DeletionVectors.convertPositionDeletes(spark, loc)
     assert(n == 1)
     assert(scanVals(loc) == (0L until 25L).toSet -- Set(1L, 2L, 3L))
@@ -218,7 +218,7 @@ class DeletionVectorSpec extends SparkSpec {
     // compaction clears ALL delete debt, vectors included
     val w2 = IcebergFormat.resumeWriter(spark, loc)
     val merged = IcebergFormat.scan(spark, IcebergFormat.currentMetadataPath(spark, loc))
-    w2.rewriteDataFiles(Seq(stage(root, loc, "compacted", merged)))
+    w2.rewriteDataFiles(Seq(stage(loc, "compacted", merged)))
     val after = IcebergFormat.plan(spark, IcebergFormat.currentMetadataPath(spark, loc))
     assert(after.deletes.isEmpty && scanVals(loc) == (0L until 25L).toSet -- Set(1L, 2L, 3L))
   }
@@ -230,7 +230,7 @@ class DeletionVectorSpec extends SparkSpec {
     val mv   = s"$root/mv"
     val df   = Seq(("a", 1L), ("a", 2L), ("b", 3L), ("b", 4L)).toDF("k", "v")
     val w    = new IcebergFormat.Writer(spark, loc, df.schema)
-    w.commit(Seq(stage(root, loc, "f1", df)))
+    w.commit(Seq(stage(loc, "f1", df)))
     MatView.create(spark, loc, mv, Seq("k"),
       Seq(MvAgg("count", "*", "cnt"), MvAgg("sum", "v", "sv")))
     DeletionVectors.deleteWhere(spark, loc, col("v") === 2)
@@ -252,7 +252,7 @@ class DeletionVectorSpec extends SparkSpec {
     val p  = IcebergFormat.plan(spark, IcebergFormat.currentMetadataPath(spark, loc))
     val fp = p.files.head.path.toString
     IcebergFormat.resumeWriter(spark, loc).commitDelta(Seq(
-      stage(root, loc, "pd", Seq((fp, 0L)).toDF("file_path", "pos"), content = 1)))
+      stage(loc, "pd", Seq((fp, 0L)).toDF("file_path", "pos"), content = 1)))
     DeletionVectors.deleteWhere(spark, loc, col("v") === 3)
     val st3 = MatView.refresh(spark, mv)
     assert(st3.mode == "retract", st3)

@@ -392,7 +392,7 @@ class IceLiteSpec extends SparkSpec {
     val w = new IcebergFormat.Writer(spark, loc, df.schema,
       partitionBy = Seq("truncate(10, n_nationkey)"))
     val infos = (0 to 2).map { b =>
-      IcebergFormat.writeSingleFile(spark, root, loc, s"t$b",
+      IcebergFormat.writeSingleFile(spark, loc, s"t$b",
         df.filter(col("n_nationkey") >= b * 10 && col("n_nationkey") < (b + 1) * 10))
         .copy(partitionValues = Map("n_nationkey_trunc" -> Int.box(b * 10)))
     }
@@ -414,7 +414,7 @@ class IceLiteSpec extends SparkSpec {
     val loc    = s"$root/t_rw"
     val nation = Tables.nation(spark, sfDir)
     def stage(name: String, df: org.apache.spark.sql.DataFrame) =
-      IcebergFormat.writeSingleFile(spark, root, loc, name, df)
+      IcebergFormat.writeSingleFile(spark, loc, name, df)
     val w = new IcebergFormat.Writer(spark, loc, nation.schema)
     w.commit(Seq(stage("a", nation.filter(col("n_nationkey") < 10))))   // snap 1
     w.commit(Seq(stage("b", nation.filter(col("n_nationkey") >= 10))))  // snap 2
@@ -438,7 +438,7 @@ class IceLiteSpec extends SparkSpec {
     val loc  = s"$root/t_life"
     val fs   = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def stage(name: String, df: org.apache.spark.sql.DataFrame): IcebergFormat.DataFileInfo = {
-      IcebergFormat.writeSingleFile(spark, root, loc, name, df)
+      IcebergFormat.writeSingleFile(spark, loc, name, df)
     }
     val w = new IcebergFormat.Writer(spark, loc, nation.schema) // spec 0: unpartitioned
     w.commit(Seq(stage("legacy", nation.filter(col("n_nationkey") < 10))))
@@ -515,7 +515,7 @@ class IceLiteSpec extends SparkSpec {
     import spark.implicits._
     val root = scratch("grouped_esc")
     val df   = Seq((1, "a:b"), (2, "a:b"), (3, "c")).toDF("id", "g")
-    val out  = IcebergFormat.writeGroupedFiles(spark, s"$root/stage", s"$root/t", df,
+    val out  = IcebergFormat.writeGroupedFiles(spark, s"$root/t", df,
       col("g"), g => "grp_" + g.replaceAll("[^A-Za-z0-9]", "_"))
     assert(out.keySet == Set("a:b", "c"), s"group keys: ${out.keySet}")
     assert(out("a:b").recordCount == 2L && out("c").recordCount == 1L)
@@ -527,10 +527,32 @@ class IceLiteSpec extends SparkSpec {
     val df   = Seq((1, 0), (2, 0), (3, 0), (4, 1), (5, 1)).toDF("id", "g")
     spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
     try {
-      val out = IcebergFormat.writeGroupedFiles(spark, s"$root/stage", s"$root/t", df,
+      val out = IcebergFormat.writeGroupedFiles(spark, s"$root/t", df,
         col("g"), g => s"grp_$g")
       assert(out.map { case (g, f) => g -> f.recordCount } == Map("0" -> 3L, "1" -> 2L))
       assert(spark.read.parquet(out("0").path).count() == 3L)
     } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+  }
+
+  test("writeGroupedFiles whose task fails midway leaves no parquet under data/") {
+    import spark.implicits._
+    val root = scratch("grouped_abort")
+    // two group values the write's hash repartition puts in ONE task:
+    // the task writes group `a` in full, then fails opening group `b`
+    val tasks = spark.sparkContext.defaultParallelism
+    val byTask = (0 until 64).map(_.toString).toDF("g")
+      .select(col("g"), pmod(hash(col("g")), lit(tasks)).as("t"))
+      .collect().groupBy(_.getInt(1)).values.map(_.map(_.getString(0)).sorted).find(_.length >= 2)
+      .get
+    val (a, b) = (byTask(0), byTask(1))
+    val df = Seq((1, a), (2, a), (3, b)).toDF("id", "g")
+    val err = intercept[org.apache.spark.SparkException] {
+      IcebergFormat.writeGroupedFiles(spark, s"$root/t", df, col("g"),
+        g => if (g == b) throw new IllegalStateException(s"no file for group $g") else s"grp_$g")
+    }
+    assert(err.getMessage.contains(s"no file for group $b"), err.getMessage)
+    val data = new java.io.File(s"$root/t/data")
+    val left = Option(data.listFiles()).toSeq.flatten.map(_.getName).filter(_.endsWith(".parquet"))
+    assert(left.isEmpty, s"aborted write left ${left.mkString(", ")}")
   }
 }

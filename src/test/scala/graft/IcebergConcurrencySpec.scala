@@ -51,14 +51,14 @@ class IcebergConcurrencySpec extends SparkSpec {
     val loc  = s"$root/t_conc"
     val base = nation.filter(col("n_nationkey") < 10).orderBy("n_nationkey")
     val w0 = new IcebergFormat.Writer(spark, loc, nation.schema)
-    w0.commit(Seq(IcebergFormat.writeSingleFile(spark, root, loc, "base", base)))
+    w0.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "base", base)))
 
     // two writers resumed at the same base version
     val wA = IcebergFormat.resumeWriter(spark, loc)
     val wB = IcebergFormat.resumeWriter(spark, loc)
-    val fA = IcebergFormat.writeSingleFile(spark, root, loc, "a",
+    val fA = IcebergFormat.writeSingleFile(spark, loc, "a",
       nation.filter(col("n_nationkey") >= 10 && col("n_nationkey") < 20))
-    val fB = IcebergFormat.writeSingleFile(spark, root, loc, "b",
+    val fB = IcebergFormat.writeSingleFile(spark, loc, "b",
       nation.filter(col("n_nationkey") >= 20))
     wA.commit(Seq(fA)) // wins snapshot 2
 
@@ -80,14 +80,14 @@ class IcebergConcurrencySpec extends SparkSpec {
     val root = scratch("conc_race")
     val loc  = s"$root/t_race"
     val w0 = new IcebergFormat.Writer(spark, loc, nation.schema)
-    w0.commit(Seq(IcebergFormat.writeSingleFile(spark, root, loc, "base",
+    w0.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "base",
       nation.filter(col("n_nationkey") < 5))))
 
     // stage both deltas up front — the race is purely over commits
     val staged = Seq(
-      IcebergFormat.writeSingleFile(spark, root, loc, "t1",
+      IcebergFormat.writeSingleFile(spark, loc, "t1",
         nation.filter(col("n_nationkey") >= 5 && col("n_nationkey") < 15)),
-      IcebergFormat.writeSingleFile(spark, root, loc, "t2",
+      IcebergFormat.writeSingleFile(spark, loc, "t2",
         nation.filter(col("n_nationkey") >= 15)))
     val barrier = new java.util.concurrent.CyclicBarrier(2)
     val errors  = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -132,9 +132,9 @@ class IcebergConcurrencySpec extends SparkSpec {
     val root = scratch("conc_scan")
     val loc  = s"$root/t"
     val w    = new IcebergFormat.Writer(spark, loc, nation.schema)
-    w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$root/stage", loc, "f1",
+    w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f1",
       nation.filter(col("n_nationkey") % 2 === 0))))
-    w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$root/stage", loc, "f2",
+    w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f2",
       nation.filter(col("n_nationkey") % 2 === 1))))
     val mdPath   = IcebergFormat.currentMetadataPath(spark, loc)
     val expected = nation.count()

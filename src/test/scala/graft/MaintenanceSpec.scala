@@ -205,7 +205,7 @@ class MaintenanceSpec extends SparkSpec {
       nft.filter(col("sort_order_id") === 0).count() == 1)
     // resume + commit: the declared order survives the round-trip
     val w = IcebergFormat.resumeWriter(spark, dest)
-    w.commit(Seq(IcebergFormat.writeSingleFile(spark, scratch("sortord_stage"), dest, "fx",
+    w.commit(Seq(IcebergFormat.writeSingleFile(spark, dest, "fx",
       orders.select("o_orderkey", "o_orderpriority", "o_totalprice").limit(5))))
     val json2 = {
       val src = scala.io.Source.fromFile(new java.net.URI(

@@ -13,9 +13,9 @@ class MatViewSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def stage(root: String, loc: String, name: String, df: DataFrame,
+  private def stage(loc: String, name: String, df: DataFrame,
       content: Int = 0, eqIds: Seq[Int] = Nil): IcebergFormat.DataFileInfo =
-    IcebergFormat.writeSingleFile(spark, root, loc, name, df, content, eqIds)
+    IcebergFormat.writeSingleFile(spark, loc, name, df, content, eqIds)
 
   /** (file_path, pos) rows of the CURRENT base matching `pred` — how a
     * row-level DELETE engine would address them. */
@@ -51,7 +51,7 @@ class MatViewSpec extends SparkSpec {
     val loc  = s"$root/base"
     val w    = new IcebergFormat.Writer(spark, loc,
       rows.toDF("k", "v").schema)
-    w.commit(Seq(stage(root, loc, "f1", rows.toDF("k", "v"))))
+    w.commit(Seq(stage(loc, "f1", rows.toDF("k", "v"))))
     (root, loc, s"$root/mv")
   }
 
@@ -71,7 +71,7 @@ class MatViewSpec extends SparkSpec {
     val (root, loc, mv) = freshBase("mv_append", seed)
     MatView.create(spark, loc, mv, Seq("k"), aggs)
     val w = IcebergFormat.resumeWriter(spark, loc)
-    w.commit(Seq(stage(root, loc, "f2",
+    w.commit(Seq(stage(loc, "f2",
       Seq(("a", java.lang.Long.valueOf(3L)), ("d", java.lang.Long.valueOf(7L)),
         (null, null.asInstanceOf[java.lang.Long])).toDF("k", "v"))))
     val st = MatView.refresh(spark, mv)
@@ -85,13 +85,13 @@ class MatViewSpec extends SparkSpec {
   test("retract window: negative partials, only referenced files reopened") {
     val (root, loc, mv) = freshBase("mv_retract", seed)
     val w = IcebergFormat.resumeWriter(spark, loc)
-    w.commit(Seq(stage(root, loc, "f2",
+    w.commit(Seq(stage(loc, "f2",
       Seq(("a", java.lang.Long.valueOf(3L)), ("d", java.lang.Long.valueOf(7L))).toDF("k", "v"))))
     MatView.create(spark, loc, mv, Seq("k"), aggs)
     // delete ("a",2) and (null,5) — both rows live in f1 only
     val del = posDeleteDf(loc, ($"k" === "a" && $"v" === 2L) || ($"v" === 5L && $"k".isNull))
     IcebergFormat.resumeWriter(spark, loc)
-      .commitDelta(Seq(stage(root, loc, "d1", del, content = 1)))
+      .commitDelta(Seq(stage(loc, "d1", del, content = 1)))
     val st = MatView.refresh(spark, mv)
     assert(st.mode == "retract", st)
     assert(st.addedFilesRead == 0, st)
@@ -107,7 +107,7 @@ class MatViewSpec extends SparkSpec {
     MatView.create(spark, loc, mv, Seq("k"), aggs)
     val del = posDeleteDf(loc, $"v" === 4L)
     IcebergFormat.resumeWriter(spark, loc)
-      .commitDelta(Seq(stage(root, loc, "d1", del, content = 1)))
+      .commitDelta(Seq(stage(loc, "d1", del, content = 1)))
     assert(MatView.refresh(spark, mv).mode == "retract")
     val g = MatView.read(spark, mv).filter($"k" === "g").head()
     assert(g.getLong(1) == 1L && g.isNullAt(2) && g.isNullAt(3), g)
@@ -119,7 +119,7 @@ class MatViewSpec extends SparkSpec {
     MatView.create(spark, loc, mv, Seq("k"), aggs)
     val del = posDeleteDf(loc, $"k" === "b")
     IcebergFormat.resumeWriter(spark, loc)
-      .commitDelta(Seq(stage(root, loc, "d1", del, content = 1)))
+      .commitDelta(Seq(stage(loc, "d1", del, content = 1)))
     assert(MatView.refresh(spark, mv).mode == "retract")
     assert(!MatView.read(spark, mv).collect().exists(r => r.getString(0) == "b"))
     assert(readSet(mv) == expected(loc, Seq("k"), aggSql))
@@ -129,11 +129,11 @@ class MatViewSpec extends SparkSpec {
     val (root, loc, mv) = freshBase("mv_netout", seed)
     MatView.create(spark, loc, mv, Seq("k"), aggs)
     val w = IcebergFormat.resumeWriter(spark, loc)
-    w.commit(Seq(stage(root, loc, "f2",
+    w.commit(Seq(stage(loc, "f2",
       Seq(("e", java.lang.Long.valueOf(100L)), ("e", java.lang.Long.valueOf(200L))).toDF("k", "v"))))
     val del = posDeleteDf(loc, $"v" === 100L)
     IcebergFormat.resumeWriter(spark, loc)
-      .commitDelta(Seq(stage(root, loc, "d1", del, content = 1)))
+      .commitDelta(Seq(stage(loc, "d1", del, content = 1)))
     val st = MatView.refresh(spark, mv)
     assert(st.mode == "retract" && st.addedFilesRead == 1 && st.dataFilesReopened == 0, st)
     val e = MatView.read(spark, mv).filter($"k" === "e").head()
@@ -146,14 +146,14 @@ class MatViewSpec extends SparkSpec {
     // window 1: delete ("a",1); refresh
     val del1 = posDeleteDf(loc, $"k" === "a" && $"v" === 1L)
     IcebergFormat.resumeWriter(spark, loc)
-      .commitDelta(Seq(stage(root, loc, "d1", del1, content = 1)))
+      .commitDelta(Seq(stage(loc, "d1", del1, content = 1)))
     MatView.create(spark, loc, mv, Seq("k"), aggs) // created AFTER delete 1
     // window 2: a delete file listing BOTH the old pair and ("a",2) —
     // the old pair must be suppressed or group a would go negative
     val del2 = posDeleteDf(loc, $"k" === "a" && $"v" === 2L)
     val old  = posDeleteDf(loc, $"k" === "a" && $"v" === 1L) // reads raw: row still in file
     IcebergFormat.resumeWriter(spark, loc)
-      .commitDelta(Seq(stage(root, loc, "d2", del2.unionAll(old), content = 1)))
+      .commitDelta(Seq(stage(loc, "d2", del2.unionAll(old), content = 1)))
     val st = MatView.refresh(spark, mv)
     assert(st.mode == "retract", st)
     assert(!MatView.read(spark, mv).collect().exists(r => r.getString(0) == "a"),
@@ -168,7 +168,7 @@ class MatViewSpec extends SparkSpec {
     val mmSql = Seq("MIN(v) AS vmin", "MAX(v) AS vmax", "COUNT(*) AS cnt")
     MatView.create(spark, loc, mv, Seq("k"), mmAggs)
     val w = IcebergFormat.resumeWriter(spark, loc)
-    w.commit(Seq(stage(root, loc, "f2",
+    w.commit(Seq(stage(loc, "f2",
       Seq(("a", java.lang.Long.valueOf(0L)), ("b", java.lang.Long.valueOf(99L))).toDF("k", "v"))))
     val st1 = MatView.refresh(spark, mv)
     assert(st1.mode == "append", st1)
@@ -176,7 +176,7 @@ class MatViewSpec extends SparkSpec {
     // now a position delete: min/max are not subtractable -> loud full
     val del = posDeleteDf(loc, $"k" === "a" && $"v" === 0L)
     IcebergFormat.resumeWriter(spark, loc)
-      .commitDelta(Seq(stage(root, loc, "d1", del, content = 1)))
+      .commitDelta(Seq(stage(loc, "d1", del, content = 1)))
     val st2 = MatView.refresh(spark, mv)
     assert(st2.mode == "full", st2)
     assert(readSet(mv) == expected(loc, Seq("k"), mmSql))
@@ -187,7 +187,7 @@ class MatViewSpec extends SparkSpec {
     MatView.create(spark, loc, mv, Seq("k"), aggs)
     val eqDel = Seq("a").toDF("k") // retire every 'a' row by key
     IcebergFormat.resumeWriter(spark, loc)
-      .commitDelta(Seq(stage(root, loc, "eq1", eqDel, content = 2, eqIds = Seq(1))))
+      .commitDelta(Seq(stage(loc, "eq1", eqDel, content = 2, eqIds = Seq(1))))
     val st = MatView.refresh(spark, mv)
     assert(st.mode == "full", st)
     assert(!MatView.read(spark, mv).collect().exists(r => r.getString(0) == "a"))
@@ -197,13 +197,13 @@ class MatViewSpec extends SparkSpec {
   test("rewrite (compaction) window falls back to full and stays correct") {
     val (root, loc, mv) = freshBase("mv_rewrite", seed)
     val w = IcebergFormat.resumeWriter(spark, loc)
-    w.commit(Seq(stage(root, loc, "f2", Seq(("d", java.lang.Long.valueOf(7L))).toDF("k", "v"))))
+    w.commit(Seq(stage(loc, "f2", Seq(("d", java.lang.Long.valueOf(7L))).toDF("k", "v"))))
     MatView.create(spark, loc, mv, Seq("k"), aggs)
     // compact: one replacement file carrying the merged content — the
     // window removes files, which the delta algebra refuses to attribute
     val merged = IcebergFormat.scan(spark, IcebergFormat.currentMetadataPath(spark, loc))
     IcebergFormat.resumeWriter(spark, loc)
-      .rewriteDataFiles(Seq(stage(root, loc, "compacted", merged)))
+      .rewriteDataFiles(Seq(stage(loc, "compacted", merged)))
     val st = MatView.refresh(spark, mv)
     assert(st.mode == "full", st)
     assert(readSet(mv) == expected(loc, Seq("k"), aggSql))
@@ -216,7 +216,7 @@ class MatViewSpec extends SparkSpec {
     try {
       val loc = s"$wh/ns/base"
       val w   = new IcebergFormat.Writer(spark, loc, seed.toDF("k", "v").schema)
-      w.commit(Seq(stage(wh, loc, "f1", seed.toDF("k", "v"))))
+      w.commit(Seq(stage(loc, "f1", seed.toDF("k", "v"))))
       spark.sql("CREATE NAMESPACE IF NOT EXISTS mv_pr.ns")
       val created = spark.sql(
         "CALL mv_pr.system.create_mv('ns', 'base', 'base_mv', 'k', " +
@@ -226,7 +226,7 @@ class MatViewSpec extends SparkSpec {
       assert(spark.sql("CALL mv_pr.system.refresh_mv('ns', 'base_mv')")
         .head().getString(0) == "noop")
       // append + refresh through SQL, audit row checked
-      IcebergFormat.resumeWriter(spark, loc).commit(Seq(stage(wh, loc, "f2",
+      IcebergFormat.resumeWriter(spark, loc).commit(Seq(stage(loc, "f2",
         Seq(("d", java.lang.Long.valueOf(7L))).toDF("k", "v"))))
       val r = spark.sql("CALL mv_pr.system.refresh_mv('ns', 'base_mv')").head()
       assert(r.getString(0) == "append" && r.getLong(3) == 1L && r.getLong(5) == 0L, r)
@@ -241,6 +241,31 @@ class MatViewSpec extends SparkSpec {
     }
   }
 
+  test("SQL DELETE on a connector-written table retracts the deleted row from the view") {
+    val wh = scratch("mv_v2del_wh")
+    spark.conf.set("spark.sql.catalog.mv_vd", "graft.sources.IceLiteCatalog")
+    spark.conf.set("spark.sql.catalog.mv_vd.warehouse", wh)
+    try {
+      val loc = s"$wh/ns/base"
+      val mv  = s"$wh/ns/base_mv"
+      // the V2 write lands its files under data/snap-w-*, where a
+      // manifest-relative `_file` and the absolute path differ
+      seed.toDF("k", "v").write.format("icelite").option("iceberg", "true")
+        .option("location", loc).mode("overwrite").save()
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS mv_vd.ns")
+      MatView.create(spark, loc, mv, Seq("k"), aggs)
+      spark.sql("DELETE FROM mv_vd.ns.base WHERE v = 2")
+      val st = MatView.refresh(spark, mv)
+      assert(st.mode == "retract", st)
+      val a = MatView.read(spark, mv).filter($"k" === "a").head()
+      assert(a.getLong(1) == 1L && a.getLong(2) == 1L, a)
+      assert(readSet(mv) == expected(loc, Seq("k"), aggSql))
+    } finally {
+      spark.conf.unset("spark.sql.catalog.mv_vd")
+      spark.conf.unset("spark.sql.catalog.mv_vd.warehouse")
+    }
+  }
+
   test("SQL MoR DELETE on a native table drives a retract refresh end-to-end") {
     val wh = scratch("mv_sqldel_wh")
     spark.conf.set("spark.sql.catalog.mv_sd", "graft.sources.IceLiteCatalog")
@@ -249,7 +274,7 @@ class MatViewSpec extends SparkSpec {
       val loc = s"$wh/ns/base"
       val mv  = s"$wh/ns/base_mv"
       val w   = new IcebergFormat.Writer(spark, loc, seed.toDF("k", "v").schema)
-      w.commit(Seq(stage(wh, loc, "f1", seed.toDF("k", "v"))))
+      w.commit(Seq(stage(loc, "f1", seed.toDF("k", "v"))))
       spark.sql("CREATE NAMESPACE IF NOT EXISTS mv_sd.ns")
       MatView.create(spark, loc, mv, Seq("k"), aggs)
       spark.sql("DELETE FROM mv_sd.ns.base WHERE v = 2")

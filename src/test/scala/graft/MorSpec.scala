@@ -426,9 +426,9 @@ class MorSpec extends SparkSpec {
       val nat = Tables.nation(spark, sfDir)
         .select("n_nationkey", "n_name", "n_regionkey").orderBy("n_nationkey")
       val w = new IcebergFormat.Writer(spark, loc, nat.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "a",
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "a",
         nat.filter(col("n_nationkey") < 12))))
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "b",
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "b",
         nat.filter(col("n_nationkey") >= 12))))
       val full = nat.count()
       // metadata columns resolve on the standard-format table
@@ -478,9 +478,9 @@ class MorSpec extends SparkSpec {
     def b(v: Int) = IcebergFormat.encodeBound(kt, v.toString).get
     val w = new IcebergFormat.Writer(spark, loc, nat.schema)
     w.commit(Seq(
-      IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "a",
+      IcebergFormat.writeSingleFile(spark, loc, "a",
         nat.filter(col("n_nationkey") < 12)).copy(bounds = Map(1 -> (b(0), b(11)))),
-      IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "b",
+      IcebergFormat.writeSingleFile(spark, loc, "b",
         nat.filter(col("n_nationkey") >= 12)).copy(bounds = Map(1 -> (b(12), b(24))))))
     (cat, loc, nat)
   }
@@ -576,9 +576,9 @@ class MorSpec extends SparkSpec {
         org.apache.spark.sql.types.StringType, v).get
       val w = new IcebergFormat.Writer(spark, loc, lo.schema)
       w.commit(Seq(
-        IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "lo", lo)
+        IcebergFormat.writeSingleFile(spark, loc, "lo", lo)
           .copy(bounds = Map(2 -> (sb("apple"), sb("melon")))),
-        IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "hi", hi)
+        IcebergFormat.writeSingleFile(spark, loc, "hi", hi)
           .copy(bounds = Map(2 -> (sb("nectarine"), sb("zebra"))))))
       // fixture really recorded null counts (spec field 110)
       val planned = IcebergFormat.plan(spark, IcebergFormat.currentMetadataPath(spark, loc))
@@ -712,7 +712,7 @@ class MorSpec extends SparkSpec {
       val regions = nat.select("n_regionkey").distinct()
         .collect().map(_.getInt(0)).sorted
       w.commit(regions.toSeq.map { r =>
-        IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, s"r$r",
+        IcebergFormat.writeSingleFile(spark, loc, s"r$r",
           nat.filter(col("n_regionkey") === r).drop("n_regionkey"))
           .copy(partitionValues = Map("n_regionkey" -> r))
       })
@@ -817,12 +817,12 @@ class MorSpec extends SparkSpec {
       val nat = Tables.nation(spark, sfDir)
         .select("n_nationkey", "n_name", "n_regionkey").orderBy("n_nationkey")
       val w = new IcebergFormat.Writer(spark, loc, nat.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "old",
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "old",
         nat.filter(col("n_nationkey") < 12))))
       val evolved = StructType(nat.schema.fields :+
         StructField("n_extra", LongType, nullable = true))
       w.evolveSchema(evolved)
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "new",
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "new",
         nat.filter(col("n_nationkey") >= 12)
           .withColumn("n_extra", col("n_nationkey").cast("long") * 10))))
       // resumed DELETE on the two-schema table (previously refused)
@@ -862,7 +862,7 @@ class MorSpec extends SparkSpec {
         .select("o_orderkey", "o_orderstatus", "o_totalprice").orderBy("o_orderkey")
       val total = ord.count()
       val w = new IcebergFormat.Writer(spark, loc, ord.schema)
-      val info = IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "big", ord)
+      val info = IcebergFormat.writeSingleFile(spark, loc, "big", ord)
       w.commit(Seq(info))
       // fixture guard: the file really has multiple row groups and is
       // oversized relative to the split target below
@@ -909,7 +909,7 @@ class MorSpec extends SparkSpec {
       val loc2 = s"$wh/graft/ord_nooff"
       val w2   = new IcebergFormat.Writer(spark, loc2, ord.schema)
       w2.commit(Seq(
-        IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc2, "big", ord)
+        IcebergFormat.writeSingleFile(spark, loc2, "big", ord)
           .copy(splitOffsets = Nil)))
       IceLiteSource.filesOpened.reset()
       // count(col) again: the metadata-only count(*) shortcut would skip
@@ -990,11 +990,11 @@ class MorSpec extends SparkSpec {
       val w = new IcebergFormat.Writer(spark, loc, nat.schema)
       // snapshot 1: base data; snapshot 2: CDC equality delete on keys
       // 3/7/11; snapshot 3: key 7 RESTATED (newer than the delete)
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "f1", nat)))
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "del1",
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f1", nat)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "del1",
         nat.filter(col("n_nationkey").isin(3, 7, 11)).select("n_nationkey"),
         content = 2, equalityIds = Seq(1))))
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "f2",
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f2",
         nat.filter(col("n_nationkey") === 7).withColumn("n_name", lit("RESTATED")))))
 
       val want = nat.filter(!col("n_nationkey").isin(3, 11))
@@ -1047,7 +1047,7 @@ class MorSpec extends SparkSpec {
       // carrying a single-value partition summary (spec field 507)
       regions.foreach { r =>
         w.commit(Seq(
-          IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, s"r$r",
+          IcebergFormat.writeSingleFile(spark, loc, s"r$r",
             nat.filter(col("n_regionkey") === r))
             .copy(partitionValues = Map("n_regionkey" -> r))))
       }
@@ -1111,7 +1111,7 @@ class MorSpec extends SparkSpec {
       val wd = new IcebergFormat.Writer(spark, dLoc, days.schema, Seq("days(d)"))
       Seq("2024-01-01", "2024-01-02", "2024-01-03").foreach { day =>
         val ed = java.time.LocalDate.parse(day).toEpochDay.toInt
-        wd.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", dLoc, s"d$ed",
+        wd.commit(Seq(IcebergFormat.writeSingleFile(spark, dLoc, s"d$ed",
           days.filter(col("d") === lit(java.sql.Date.valueOf(day))))
           .copy(partitionValues = Map("d_day" -> ed))))
       }
@@ -1133,7 +1133,7 @@ class MorSpec extends SparkSpec {
       val tLoc = s"$wh/graft/t_trunc"
       val wt = new IcebergFormat.Writer(spark, tLoc, nums.schema, Seq("truncate(10, k)"))
       Seq(0L, 10L, 20L).foreach { g =>
-        wt.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", tLoc, s"g$g",
+        wt.commit(Seq(IcebergFormat.writeSingleFile(spark, tLoc, s"g$g",
           nums.filter(col("k") >= g && col("k") < g + 10))
           .copy(partitionValues = Map("k_trunc" -> g))))
       }
@@ -1151,7 +1151,7 @@ class MorSpec extends SparkSpec {
       val byBucket = names.groupBy(n =>
         IcebergFormat.bucketOf(org.apache.spark.sql.types.StringType, n, 4).get)
       byBucket.toSeq.sortBy(_._1).foreach { case (b, ns) =>
-        wb.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", bLoc, s"b$b",
+        wb.commit(Seq(IcebergFormat.writeSingleFile(spark, bLoc, s"b$b",
           nat.filter(col("n_name").isin(ns.toSeq: _*)))
           .copy(partitionValues = Map("n_name_bucket" -> b))))
       }
@@ -1174,7 +1174,7 @@ class MorSpec extends SparkSpec {
       val ws = new IcebergFormat.Writer(spark, sLoc, evs.schema, Seq("days(ts)"))
       (1 to 3).foreach { dd =>
         val ed = java.time.LocalDate.parse(f"2024-01-0$dd").toEpochDay.toInt
-        ws.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", sLoc, s"ts$dd",
+        ws.commit(Seq(IcebergFormat.writeSingleFile(spark, sLoc, s"ts$dd",
           evs.filter(dayofmonth(col("ts")) === dd))
           .copy(partitionValues = Map("ts_day" -> ed))))
       }
@@ -1206,7 +1206,7 @@ class MorSpec extends SparkSpec {
     try {
       val nat = Tables.nation(spark, sfDir).select("n_nationkey", "n_name", "n_regionkey")
       val w = new IcebergFormat.Writer(spark, loc, nat.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "f1", nat)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f1", nat)))
       val big = spark.range(0, 100000)
         .selectExpr("id", "CAST(id % 25 AS INT) AS k")
       big.createOrReplaceTempView("big_stats")
@@ -1236,7 +1236,7 @@ class MorSpec extends SparkSpec {
       val w = new IcebergFormat.Writer(spark, loc, nat.schema, Seq("n_regionkey"))
       val regions = nat.select("n_regionkey").distinct().collect().map(_.getInt(0)).sorted
       w.commit(regions.toSeq.map { r =>
-        IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, s"r$r",
+        IcebergFormat.writeSingleFile(spark, loc, s"r$r",
           nat.filter(col("n_regionkey") === r))
           .copy(partitionValues = Map("n_regionkey" -> r))
       })
@@ -1270,7 +1270,7 @@ class MorSpec extends SparkSpec {
     try {
       val nat = Tables.nation(spark, sfDir).select("n_nationkey", "n_name")
       val w = new IcebergFormat.Writer(spark, loc, nat.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, "f1", nat)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f1", nat)))
       val q = spark.sql(s"SELECT count(*) FROM $cat.graft.nat_cnt")
       assert(q.queryExecution.executedPlan.toString.contains("metadata-only count"),
         "COUNT(*) did not push to the metadata scan")
@@ -1373,7 +1373,7 @@ class MorSpec extends SparkSpec {
       // data files KEEP the column (no projection) so reads stay correct
       // even where pre-rename manifests decode conservatively
       w.commit(regions.toSeq.map { r =>
-        IcebergFormat.writeSingleFile(spark, s"$wh/stage", loc, s"r$r",
+        IcebergFormat.writeSingleFile(spark, loc, s"r$r",
           nat.filter(col("n_regionkey") === r))
           .copy(partitionValues = Map("n_regionkey" -> r))
       })

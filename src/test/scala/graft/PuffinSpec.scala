@@ -55,7 +55,7 @@ class PuffinSpec extends SparkSpec {
     val loc  = s"$root/t"
     val df1  = Seq(("x", 1L), ("y", 2L), ("x", 3L)).toDF("k", "v")
     val w    = new IcebergFormat.Writer(spark, loc, df1.schema)
-    w.commit(Seq(IcebergFormat.writeSingleFile(spark, root, loc, "f1", df1)))
+    w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f1", df1)))
     TableStats.analyze(spark, loc)
     def entries = IcebergFormat.statisticsEntries(spark,
       IcebergFormat.currentMetadataPath(spark, loc))
@@ -68,7 +68,7 @@ class PuffinSpec extends SparkSpec {
     assert(entries.size == 1)
     // append + analyze: a second entry for the new snapshot
     IcebergFormat.resumeWriter(spark, loc).commit(Seq(
-      IcebergFormat.writeSingleFile(spark, root, loc, "f2",
+      IcebergFormat.writeSingleFile(spark, loc, "f2",
         Seq(("z", 4L)).toDF("k", "v"))))
     TableStats.analyze(spark, loc)
     assert(entries.size == 2, s"expected entries for both snapshots: $entries")
@@ -86,11 +86,11 @@ class PuffinSpec extends SparkSpec {
     val loc  = s"$root/t"
     val df1  = Seq(1L, 2L, 3L).toDF("v")
     val w    = new IcebergFormat.Writer(spark, loc, df1.schema)
-    w.commit(Seq(IcebergFormat.writeSingleFile(spark, root, loc, "f1", df1)))
+    w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f1", df1)))
     TableStats.analyze(spark, loc)
     // an unrelated commit must carry the registration forward
     val w2 = IcebergFormat.resumeWriter(spark, loc)
-    w2.commit(Seq(IcebergFormat.writeSingleFile(spark, root, loc, "f2",
+    w2.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f2",
       Seq(4L).toDF("v"))))
     def entries = IcebergFormat.statisticsEntries(spark,
       IcebergFormat.currentMetadataPath(spark, loc))
@@ -109,7 +109,7 @@ class PuffinSpec extends SparkSpec {
       val loc = s"$wh/ns/t"
       val df  = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
       val w   = new IcebergFormat.Writer(spark, loc, df.schema)
-      w.commit(Seq(IcebergFormat.writeSingleFile(spark, wh, loc, "f1", df)))
+      w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f1", df)))
       TableStats.analyze(spark, loc)
       spark.sql("CREATE NAMESPACE IF NOT EXISTS pf_cat.ns")
       val rows = spark.sql(
@@ -128,7 +128,7 @@ class PuffinSpec extends SparkSpec {
     val df   = Seq((1L, "x"), (2L, "x"), (3L, "y")).toDF("v", "p")
     val w    = new IcebergFormat.Writer(spark, loc, df.schema, partitionBy = Seq("p"))
     def slice(tag: String, pv: String, rows: Seq[(Long, String)]) =
-      IcebergFormat.writeSingleFile(spark, root, loc, tag, rows.toDF("v", "p"))
+      IcebergFormat.writeSingleFile(spark, loc, tag, rows.toDF("v", "p"))
         .copy(partitionValues = Map("p" -> pv))
     w.commit(Seq(slice("x1", "x", Seq((1L, "x"), (2L, "x"))), slice("y1", "y", Seq((3L, "y")))))
     graft.icelite.TableStats.computePartitionStats(spark, loc)
@@ -156,7 +156,7 @@ class PuffinSpec extends SparkSpec {
     // unpartitioned table: loud refusal
     val loc2 = s"$root/u"
     val w2   = new IcebergFormat.Writer(spark, loc2, Seq(1L).toDF("v").schema)
-    w2.commit(Seq(IcebergFormat.writeSingleFile(spark, root, loc2, "f", Seq(1L).toDF("v"))))
+    w2.commit(Seq(IcebergFormat.writeSingleFile(spark, loc2, "f", Seq(1L).toDF("v"))))
     intercept[IllegalArgumentException](
       graft.icelite.TableStats.computePartitionStats(spark, loc2))
   }

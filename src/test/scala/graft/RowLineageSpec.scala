@@ -10,9 +10,9 @@ class RowLineageSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private def stage(root: String, loc: String, name: String,
+  private def stage(loc: String, name: String,
       df: org.apache.spark.sql.DataFrame): IcebergFormat.DataFileInfo =
-    IcebergFormat.writeSingleFile(spark, root, loc, name, df)
+    IcebergFormat.writeSingleFile(spark, loc, name, df)
 
   private def idsOf(sql: String): Map[Long, Long] =
     spark.sql(sql).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -24,9 +24,9 @@ class RowLineageSpec extends SparkSpec {
     try {
       val loc = s"$wh/ns/t"
       val w   = new IcebergFormat.Writer(spark, loc, (0L until 5L).toDF("v").schema)
-      w.commit(Seq(stage(wh, loc, "f1", (0L until 5L).toDF("v"))))
+      w.commit(Seq(stage(loc, "f1", (0L until 5L).toDF("v"))))
       IcebergFormat.resumeWriter(spark, loc).commit(Seq(
-        stage(wh, loc, "f2", (5L until 8L).toDF("v"))))
+        stage(loc, "f2", (5L until 8L).toDF("v"))))
       spark.sql("CREATE NAMESPACE IF NOT EXISTS rl_cat.ns")
       val m = idsOf("SELECT v, _row_id FROM rl_cat.ns.t")
       assert(m == (0L until 8L).map(v => v -> v).toMap,
@@ -54,7 +54,7 @@ class RowLineageSpec extends SparkSpec {
     try {
       val loc = s"$wh/ns/t"
       val w   = new IcebergFormat.Writer(spark, loc, (0L until 10L).toDF("v").schema)
-      w.commit(Seq(stage(wh, loc, "f1", (0L until 10L).toDF("v"))))
+      w.commit(Seq(stage(loc, "f1", (0L until 10L).toDF("v"))))
       spark.sql("CREATE NAMESPACE IF NOT EXISTS rc_cat.ns")
       val before = idsOf("SELECT v, _row_id FROM rc_cat.ns.t")
       spark.sql("DELETE FROM rc_cat.ns.t WHERE v % 3 = 0")
@@ -72,7 +72,7 @@ class RowLineageSpec extends SparkSpec {
         s"rewrite does not 'update' rows — original sequence survives: ${seqs.toSeq}")
       // post-compaction append continues the allocator without collisions
       IcebergFormat.resumeWriter(spark, loc).commit(Seq(
-        stage(wh, loc, "f2", (100L until 103L).toDF("v"))))
+        stage(loc, "f2", (100L until 103L).toDF("v"))))
       val all = idsOf("SELECT v, _row_id FROM rc_cat.ns.t")
       assert(all.values.toSeq.distinct.size == all.size, s"id collision: $all")
       assert((100L until 103L).forall(v => all(v) >= 10L),
@@ -92,7 +92,7 @@ class RowLineageSpec extends SparkSpec {
     val root = scratch("rl_meta")
     val loc  = s"$root/t"
     val w    = new IcebergFormat.Writer(spark, loc, (0L until 4L).toDF("v").schema)
-    w.commit(Seq(stage(root, loc, "f1", (0L until 4L).toDF("v"))))
+    w.commit(Seq(stage(loc, "f1", (0L until 4L).toDF("v"))))
     val mp1 = IcebergFormat.currentMetadataPath(spark, loc)
     val fs = new org.apache.hadoop.fs.Path(mp1)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -103,7 +103,7 @@ class RowLineageSpec extends SparkSpec {
     assert(json(mp1).contains(""""next-row-id":4"""))
     assert(json(mp1).contains(""""first-row-id":0"""))
     IcebergFormat.resumeWriter(spark, loc).commit(Seq(
-      stage(root, loc, "f2", (4L until 6L).toDF("v"))))
+      stage(loc, "f2", (4L until 6L).toDF("v"))))
     val mp2 = IcebergFormat.currentMetadataPath(spark, loc)
     assert(json(mp2).contains(""""next-row-id":6"""))
     assert(json(mp2).contains(""""first-row-id":4"""))

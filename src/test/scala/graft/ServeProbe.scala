@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * A synthetic band index is generated DIRECTLY at a given scale — no
   * corpus, no shingling; index rows are (cell, doc_id, band_id, bsig,
   * sig) with bsig/sig derived from a per-group hash — and committed
-  * through the exact production layout (`Sim.stageIndexCells` +
+  * through the exact production layout (`Sim.writeIndexCells` +
   * `IcebergFormat.Writer`, one file per cell with manifest cell bounds).
   * A FIXED batch then probes it through the same plan dd23 serves with:
   * `scanPoints` on the batch's distinct cells, the (cell, band_id, bsig)
@@ -89,8 +89,7 @@ object ServeProbe {
     val idx = indexRows(s, n)
     val loc = s"$root/band_index"
     val w   = new IcebergFormat.Writer(s, loc, idx.schema)
-    w.commit(graft.ops.Sim.stageIndexCells(s, idx, s"$root/stage", loc, "b",
-      sortCol = "doc_id"))
+    w.commit(graft.ops.Sim.writeIndexCells(s, idx, loc, "b", sortCol = "doc_id"))
     val buildSec = (System.nanoTime() - t0) / 1e9
 
     // batch: doc ids above the index range; even ids dup an index group,

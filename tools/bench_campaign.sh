@@ -1,7 +1,7 @@
 #!/bin/bash
 # Three-leg bench campaign: the full sf0.1 map (Bench's default dataset),
 # the organic sf1 map, and the 100x heavy subset. Each leg writes its own
-# map, bench_<leg>_<tag>.json at the repo root, via SPARK_GRAFT_BENCH_OUT
+# map, history/bench_<leg>_<tag>.json, via SPARK_GRAFT_BENCH_OUT
 # (an ad-hoc run cannot stomp a campaign artifact), and keeps its stdout
 # and stderr under target/bench_<tag>/ (a campaign-only failure is
 # undiagnosable without the leg's stderr).
@@ -17,10 +17,10 @@ LOGS=target/bench_$TAG
 mkdir -p "$LOGS"
 set -x
 
-SPARK_GRAFT_BENCH_OUT=bench_sf01_$TAG.json \
+SPARK_GRAFT_BENCH_OUT=history/bench_sf01_$TAG.json \
   sbt -batch "runMain graft.Bench" > "$LOGS/sf01.stdout" 2> "$LOGS/sf01.stderr"
 
-SPARK_GRAFT_BENCH_OUT=bench_sf1_$TAG.json SPARK_GRAFT_SF_DIR=target/scratch/sf1 \
+SPARK_GRAFT_BENCH_OUT=history/bench_sf1_$TAG.json SPARK_GRAFT_SF_DIR=target/scratch/sf1 \
   sbt -batch "runMain graft.Bench" > "$LOGS/sf1.stdout" 2> "$LOGS/sf1.stderr"
 
 HEAVY=an04_window_topn,an31_window_nav,an35_scd2,an39_column_stats,an48_pagerank,\
@@ -37,7 +37,7 @@ mm03_decode,mm13_dhash,pp02_pack,pp07_neardup_curation,sm08_kmeans_iter,\
 sm20_ivf_pq_search,sm25_ivf_index_build,sm32_ivfpq_index_search,st01_stream_hourly,\
 st04_stream_join,st21_stream_mor_source,st22_stream_dedup_probe,tx08_tfidf,\
 tx11_segment_dedup,tx26_lang_profile_overlap,tx29_bpe_apply
-SPARK_GRAFT_BENCH_OUT=bench_sf10sim_$TAG.json \
+SPARK_GRAFT_BENCH_OUT=history/bench_sf10sim_$TAG.json \
 SPARK_GRAFT_ONLY=$HEAVY SPARK_GRAFT_SF_DIR=target/scratch/sf10sim \
   sbt -batch "runMain graft.Bench" > "$LOGS/sf10sim.stdout" 2> "$LOGS/sf10sim.stderr"
 set +x
@@ -50,7 +50,7 @@ import json, sys
 tag, logs = sys.argv[1], sys.argv[2]
 bad = False
 for leg in ("sf01", "sf1", "sf10sim"):
-    f = f"bench_{leg}_{tag}.json"
+    f = f"history/bench_{leg}_{tag}.json"
     try:
         m = json.load(open(f))
     except Exception as e:

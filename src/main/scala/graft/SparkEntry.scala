@@ -5,7 +5,7 @@ import graft.ops.{Dedup, Multimodal, Pipeline, Sim, Text}
 import graft.streaming.StreamQueries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Query registry: reference-parity shapes ([[queries.Ref]]), broader
   * analytics ([[queries.Analytics]]), IceLite lifecycle ([[queries.IceQueries]]),

@@ -1045,7 +1045,9 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
   /** Commit a merge-on-read row delta (the V2 `SupportsDelta` write path —
     * SQL `DELETE`/`UPDATE`/`MERGE` without rewriting any data file):
     * `deletes` are staged position-delete files, `dataEntries` staged
-    * inserts (MERGE's NOT MATCHED rows / UPDATE's rewritten rows). The new
+    * inserts (MERGE's NOT MATCHED rows / UPDATE's rewritten rows), and
+    * `targets` the distinct data files the deletes point at (the delta
+    * writers collect them as they write). The new
     * snapshot carries ALL parent data manifests by pointer, appends the
     * delta manifests, and lands through the same CAS rebase-and-retry
     * protocol as appends — a racing append's files commute (its positions
@@ -1056,27 +1058,21 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
   private[graft] def commitRowDeltas(
       deletes: Seq[ManifestEntry],
       dataEntries: Seq[ManifestEntry],
-      operation: String): IceTable = {
+      operation: String,
+      targets: Set[String]): IceTable = {
     if (deletes.isEmpty && dataEntries.isEmpty) return this // no-op delta
     val md0         = metadata
     val dataSummary = summarize(md0.schema, dataEntries)
-    // Exact target set of the planned position deletes (distinct file_path
-    // over the staged delete parquets — O(affected files) driver rows, one
-    // small job). Validated against EVERY rebase below: a concurrent
+    // `targets` is validated against EVERY rebase below: a concurrent
     // compact/CoW rewrite between delta planning and commit replaces the
     // targeted data files, and deletes referencing absent files are
     // IGNORED at read time — committing them would silently resurrect the
     // rows. Iceberg's RowDelta makes the same validation and aborts.
-    val plannedTargets: Set[String] =
-      if (deletes.isEmpty) Set.empty
-      else spark.read.schema(IceTable.PositionDeleteSchema)
-        .parquet(deletes.map(e => new Path(location, e.file).toString): _*)
-        .select("file_path").distinct().collect().map(_.getString(0)).toSet
     val delManifest  = if (deletes.isEmpty) None else Some(stageManifest("m-del", deletes))
     val dataManifest = if (dataEntries.isEmpty) None else Some(stageManifest("m-w", dataEntries))
     commit(operation, rebase = true, None, delManifest.toSeq ++ dataManifest) { a =>
-      if (plannedTargets.nonEmpty) {
-        val missing = plannedTargets -- a.base.toSeq.flatMap(filesOf)
+      if (targets.nonEmpty) {
+        val missing = targets -- a.base.toSeq.flatMap(filesOf)
         if (missing.nonEmpty)
           throw new java.util.ConcurrentModificationException(
             s"row-delta commit to $location aborted: position deletes target " +

@@ -1764,8 +1764,9 @@ object IcebergFormat {
     graft.sources.IcebergWrite.writeFiles(spark, df.coalesce(1), loc, ids, nestedIds,
       content, equalityIds)((_, _) => rel).headOption.map(_._2).getOrElse {
       // no task held a row: write the empty file on the driver
-      val empty = graft.sources.IcebergWrite.files(df.schema, ids, nestedIds)
-        .writer(loc, rel).commit()
+      val w = graft.sources.IcebergWrite.files(df.schema, ids, nestedIds).writer(loc, rel)
+      w.open()
+      val empty = w.commit()
       graft.sources.IcebergWrite.dataFileInfo(loc, df.schema, ids, empty,
         content = content, equalityIds = equalityIds)
     }

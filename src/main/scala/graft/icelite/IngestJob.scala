@@ -8,6 +8,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * inference (header, multiLine for quoted newlines) -> normalize onto the
   * 8-type system -> create-or-replace table + snapshot commit.
   *
+  * A load reads its CSV files once per distinct header line: a merged load
+  * of any number of files under H headers runs 2H CSV jobs (header, then
+  * inference) before its write, and no job after the commit.
+  *
   * Distribution shape: the driver resolves names and commits metadata;
   * executors parse CSV partitions and write parquet — the 100 TB-scalable
   * version of the reference's single-process loop. (`multiLine` CSVs are
@@ -29,9 +33,9 @@ final case class IngestResult(namespace: String, table: String, rows: Long, loca
 
 final class IngestJob(spark: SparkSession, catalog: FsCatalog, tmpDir: String) {
 
-  /** First line of a file — the CSV header, for near-zero-cost drift
-    * detection. (A quoted, embedded-newline header would read partially;
-    * such files just take the safe per-file merge path.) */
+  /** First line of a file: the CSV header the files are grouped by (a
+    * quoted header with an embedded newline reads up to its first line
+    * break). */
   private def headerLine(path: String): String = {
     val p  = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -57,35 +61,35 @@ final class IngestJob(spark: SparkSession, catalog: FsCatalog, tmpDir: String) {
     catalog.createNamespace(conf.namespace)
 
     if (conf.mergeGlob && files.size > 1) {
-      // merged load: all files -> one table. Spark's multi-path CSV read
-      // matches columns by POSITION, which silently misaligns files whose
-      // headers drifted — so the column sets are checked first: identical
-      // headers take the fast single-inference read; drifted headers fall
-      // back to per-file reads merged with unionByName(null-fill), the
-      // schema-evolution semantics a lakehouse loader owes its caller.
       val name = conf.explicitTableName.getOrElse(
         NameResolver.tableNameFor(files.head._2, conf.pluralizeNames))
-      // drift detection reads only each file's HEADER LINE (not a full
-      // per-file inference pass): identical headers take the single
-      // multi-path inference read; drifted headers fall back to per-file
-      // reads merged by name
-      val df =
-        if (files.map(f => headerLine(f._1)).distinct.size == 1)
-          readCsv(files.map(_._1), conf.multiLine)
-        else files.map(f => readCsv(Seq(f._1), conf.multiLine))
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      val t = catalog.createOrReplaceTable(conf.namespace, name, df)
-      Seq(IngestResult(conf.namespace, name, t.scan().count(), t.location.toString))
+      Seq(load(conf.namespace, name, files.map(_._1), conf.multiLine))
     } else {
       // one table per file; explicit name only honored for single-file loads
       files.map { case (path, fileName) =>
         val name =
           if (files.size == 1 && conf.explicitTableName.isDefined) conf.explicitTableName.get
           else NameResolver.tableNameFor(fileName, conf.pluralizeNames)
-        val df = readCsv(Seq(path), conf.multiLine)
-        val t  = catalog.createOrReplaceTable(conf.namespace, name, df)
-        IngestResult(conf.namespace, name, t.scan().count(), t.location.toString)
+        load(conf.namespace, name, Seq(path), conf.multiLine)
       }
     }
+  }
+
+  /** One table from `paths`: one CSV read per distinct header line, over
+    * that header's files, in order of first appearance, merged by name
+    * with null-fill. Spark's multi-path CSV read matches columns by
+    * POSITION, so only files whose header lines are identical may share a
+    * read; a drifted header gets a read of its own, and `unionByName`
+    * lines the reads up (the first read's columns, then the ones later
+    * reads add). The row count comes from the new snapshot's manifests;
+    * the table is scanned only when they cannot answer. */
+  private def load(ns: String, name: String, paths: Seq[String], multiLine: Boolean): IngestResult = {
+    val headers = paths.map(headerLine)
+    val df = headers.distinct
+      .map(h => readCsv(paths.zip(headers).collect { case (p, `h`) => p }, multiLine))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val t = catalog.createOrReplaceTable(ns, name, df)
+    val rows = t.metadata.currentSnapshot.flatMap(t.statsRowCount).getOrElse(t.scan().count())
+    IngestResult(ns, name, rows, t.location.toString)
   }
 }

@@ -1574,7 +1574,6 @@ object Dedup {
 
   private def servedBandIndex(s: SparkSession, d: String): DataFrame = {
     import graft.icelite.IcebergFormat
-    import org.apache.hadoop.fs.Path
     // eager localCheckpoint: the band rows feed the index write AND the
     // batch probe; without it each consumer re-runs the whole shingle +
     // minhash pipeline (stage metrics showed the ~7 s-CPU band compute
@@ -1586,11 +1585,7 @@ object Dedup {
 
     // build + commit the index table (the ingest-time job; probes below
     // read ONLY this artifact)
-    val root  = "/root/repo/target/scratch/bandidx_" +
-      java.lang.Integer.toHexString(d.hashCode)
-    val rootP = new Path(root)
-    val fs    = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootP)) fs.delete(rootP, true)
+    val root  = graft.Scratch.freshDir(s, "bandidx_" + java.lang.Integer.toHexString(d.hashCode))
     val idxRows = bands.filter(col("source") =!= servedBatchSrc).drop("source")
     val loc = s"$root/band_index"
     val w   = new IcebergFormat.Writer(s, loc, idxRows.schema)
@@ -1619,16 +1614,11 @@ object Dedup {
     * verify), so the same oracle proves the lifecycle loses nothing. */
   private def servedBandIndexMaintenance(s: SparkSession, d: String): DataFrame = {
     import graft.icelite.IcebergFormat
-    import org.apache.hadoop.fs.Path
     import s.implicits._
     // eager localCheckpoint, same rationale as [[servedBandIndex]]: the
     // band pipeline must run ONCE for the two index halves AND the batch
     val bands = bandedDocs(s, d).localCheckpoint()
-    val root  = "/root/repo/target/scratch/bandmnt_" +
-      java.lang.Integer.toHexString(d.hashCode)
-    val rootP = new Path(root)
-    val fs    = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootP)) fs.delete(rootP, true)
+    val root  = graft.Scratch.freshDir(s, "bandmnt_" + java.lang.Integer.toHexString(d.hashCode))
     val idxRows = bands.filter(col("source") =!= servedBatchSrc).drop("source")
     // shard boundary: base = older half of the index docs, delta = newer
     // (an all-batch corpus has no index side — commit two empty halves

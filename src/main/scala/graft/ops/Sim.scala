@@ -1546,14 +1546,7 @@ object Sim {
   private[graft] def buildIvfIndex(s: SparkSession, d: String): String = {
     import s.implicits._
     import graft.icelite.IcebergFormat
-    import org.apache.hadoop.fs.Path
-    val root = "/root/repo/target/scratch/ivfidx_" +
-      java.lang.Integer.toHexString(d.hashCode)
-    val rootP = new Path(root)
-    val conf  = s.sparkContext.hadoopConfiguration
-    val fs    = rootP.getFileSystem(conf)
-    if (fs.exists(rootP)) fs.delete(rootP, true)
-    fs.mkdirs(rootP)
+    val root  = graft.Scratch.freshDir(s, "ivfidx_" + java.lang.Integer.toHexString(d.hashCode))
     val loc   = s"$root/ivf_index"
     val cents = collectMatrix(s, d, idBound = ivfCells) // job 1: k×64 doubles
     val bc    = s.sparkContext.broadcast(cents)
@@ -1948,13 +1941,7 @@ object Sim {
   private def ivfIndexAppend(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.icelite.IcebergFormat
-    import org.apache.hadoop.fs.Path
-    val root  = "/root/repo/target/scratch/ivfinc_" +
-      java.lang.Integer.toHexString(d.hashCode)
-    val rootP = new Path(root)
-    val fs    = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootP)) fs.delete(rootP, true)
-    fs.mkdirs(rootP)
+    val root  = graft.Scratch.freshDir(s, "ivfinc_" + java.lang.Integer.toHexString(d.hashCode))
     val loc   = s"$root/ivf_index"
     val cents = collectMatrix(s, d, idBound = ivfCells)
     val bc    = s.sparkContext.broadcast(cents)
@@ -2003,13 +1990,7 @@ object Sim {
   private def ivfIndexCompact(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.icelite.IcebergFormat
-    import org.apache.hadoop.fs.Path
-    val root  = "/root/repo/target/scratch/ivfcmp_" +
-      java.lang.Integer.toHexString(d.hashCode)
-    val rootP = new Path(root)
-    val fs    = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootP)) fs.delete(rootP, true)
-    fs.mkdirs(rootP)
+    val root  = graft.Scratch.freshDir(s, "ivfcmp_" + java.lang.Integer.toHexString(d.hashCode))
     val loc   = s"$root/ivf_index"
     val cents = collectMatrix(s, d, idBound = ivfCells)
     val bc    = s.sparkContext.broadcast(cents)
@@ -2339,13 +2320,7 @@ object Sim {
   private[graft] def buildIvfPqIndex(s: SparkSession, d: String): (String, String, String) = {
     import s.implicits._
     import graft.icelite.IcebergFormat
-    import org.apache.hadoop.fs.Path
-    val root = "/root/repo/target/scratch/ivfpqidx_" +
-      java.lang.Integer.toHexString(d.hashCode)
-    val rootP = new Path(root)
-    val fs    = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootP)) fs.delete(rootP, true)
-    fs.mkdirs(rootP)
+    val root = graft.Scratch.freshDir(s, "ivfpqidx_" + java.lang.Integer.toHexString(d.hashCode))
     val cents = collectMatrix(s, d, idBound = ivfCells)
     val books = pqBooks(s, d, cents)
     val bc    = s.sparkContext.broadcast((cents, books))

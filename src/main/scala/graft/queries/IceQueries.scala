@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.Scratch.freshDir
 import graft.icelite._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,16 +16,6 @@ import org.apache.spark.sql.functions._
   * the relational operators.
   */
 object IceQueries {
-
-  private val scratchRoot = "/root/repo/target/scratch"
-
-  private def freshDir(s: SparkSession, name: String): String = {
-    val p  = new Path(s"$scratchRoot/$name")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    p.toString
-  }
 
   private val nationOracle = "SELECT * FROM nation ORDER BY n_nationkey"
 

@@ -1,9 +1,9 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.Scratch.freshDir
 import graft.icelite.IcebergFormat
 import graft.ops.{MatView, MvAgg}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -17,16 +17,6 @@ import org.apache.spark.sql.functions._
   * (`query_iceberg.ipynb:160-210`); this family is that workload shaped
   * for 100 TB — refresh cost follows the change, not the base. */
 object MvQueries {
-
-  private val scratchRoot = "/root/repo/target/scratch"
-
-  private def freshDir(s: SparkSession, name: String): String = {
-    val p  = new Path(s"$scratchRoot/$name")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.mkdirs(p)
-    p.toString
-  }
 
   /** mv01: count/sum/avg view over orders grouped by customer — create on
     * a seed, APPEND a delta (refresh must run in `append` mode reading

@@ -10,6 +10,7 @@ import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.util.Locale
 
@@ -152,7 +153,7 @@ final class IceLiteDeltaWrite(
       val ins  = IceLiteWrite.entries(msgs.flatMap(_.dataFiles), schema, partCols.toSet)
       if (dels.isEmpty && ins.isEmpty) return // nothing matched: no snapshot
       val t = IceTable.load(SparkSession.active, location)
-      t.commitRowDeltas(dels, ins, operation)
+      t.commitRowDeltas(dels, ins, operation, msgs.flatMap(_.targets).toSet)
       onCommit.foreach(_(t))
     }
 
@@ -165,9 +166,12 @@ final class IceLiteDeltaWrite(
   }
 }
 
+/** One delta task's output: its position-delete file, its insert files,
+  * and the distinct `file_path`s its deletes target. */
 final case class IceLiteDeltaMessage(
     deleteFile: Option[WrittenFile],
-    dataFiles: Seq[WrittenFile])
+    dataFiles: Seq[WrittenFile],
+    targets: Set[String])
     extends WriterCommitMessage
 
 final class IceLiteDeltaWriterFactory(
@@ -192,8 +196,9 @@ final class IceLiteDeltaWriterFactory(
   * range-prune which delete files to open. No buffering: the delta plan is
   * a narrow filter+project over the scan (rows arrive file-clustered,
   * positions ascending), and even if a future plan shuffles them the
-  * output stays correct — readers apply deletes as a set. Inserts stage
-  * ordinary data files. */
+  * output stays correct — readers apply deletes as a set. The distinct
+  * target paths travel back in the commit message, for the driver's
+  * concurrent-rewrite check. Inserts stage ordinary data files. */
 final class IceLiteDeltaWriter(
     deletes: ParquetFiles,
     inserts: Option[ParquetFiles],
@@ -212,6 +217,8 @@ final class IceLiteDeltaWriter(
   // partition stats); flat tables keep the single-file writer
   private var insWriter: DataWriter[InternalRow] = _
   private val delRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
+  private val targets = scala.collection.mutable.Set.empty[String]
+  private var lastTarget: UTF8String = _
 
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     if (delWriter == null)
@@ -220,7 +227,10 @@ final class IceLiteDeltaWriter(
     require(pos >= 0 && pos <= Int.MaxValue.toLong,
       s"row position $pos outside the position-delete range")
     // copy the UTF8String: the projected row is a view over the input row
-    delRow.update(0, id.getUTF8String(0).clone())
+    val target = id.getUTF8String(0).clone()
+    // rows arrive file-clustered: a path is decoded once per run
+    if (target != lastTarget) { targets += target.toString; lastTarget = target }
+    delRow.update(0, target)
     delRow.update(1, pos)
     delWriter.write(delRow)
   }
@@ -251,7 +261,8 @@ final class IceLiteDeltaWriter(
     Option(insWriter).map(_.commit()).toSeq.flatMap {
       case p: IceLitePartitionedWriteMessage => p.entries
       case m: WrittenFile                    => Seq(m)
-    })
+    },
+    targets.toSet)
 
   override def abort(): Unit = {
     if (delWriter != null) delWriter.abort()

@@ -11,7 +11,7 @@ import org.apache.parquet.schema.{GroupType, MessageType, Type}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, WriterCommitMessage}
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
@@ -96,8 +96,12 @@ final class ParquetDataWriterFactory(files: ParquetFiles, location: String, dir:
   * position-delete file: rows go to Spark's parquet writer, and one pass
   * over the same rows keeps the null counts and the min/max of each
   * rangeable column, compared in Spark's order (strings by UTF-8 bytes).
-  * `commit` closes the file and reads its footer back for the file size
-  * and the row-group starts (split offsets); `abort` deletes the file. */
+  * The file is opened by the first row (or [[open]]), so a writer that
+  * gets no rows leaves no file: its `commit` returns a 0-row
+  * [[WrittenFile]] with nothing behind it, which every driver commit
+  * drops. `commit` closes the file and reads its footer back for the file
+  * size and the row-group starts (split offsets); `abort` deletes the
+  * file. */
 final class ParquetDataWriter private[sources] (
     factory: OutputWriterFactory,
     conf: Configuration,
@@ -107,8 +111,13 @@ final class ParquetDataWriter private[sources] (
     extends DataWriter[InternalRow] {
 
   private val path = new Path(location, relPath)
-  private val out  = factory.newInstance(path.toString, schema,
-    new TaskAttemptContextImpl(conf, new TaskAttemptID()))
+  private var out: OutputWriter = _
+
+  /** Opens the file now: a writer that then gets no rows commits a real
+    * 0-row file. */
+  def open(): Unit = if (out == null)
+    out = factory.newInstance(path.toString, schema,
+      new TaskAttemptContextImpl(conf, new TaskAttemptID()))
 
   private var rows = 0L
   private val nulls = new Array[Long](schema.length)
@@ -121,6 +130,7 @@ final class ParquetDataWriter private[sources] (
   private val nan  = new Array[Boolean](statCols.length)
 
   override def write(row: InternalRow): Unit = {
+    open()
     out.write(row)
     rows += 1L
     var i = 0
@@ -161,23 +171,24 @@ final class ParquetDataWriter private[sources] (
   }
 
   override def commit(): WrittenFile = {
-    out.close()
     val bounds = statCols.indices.collect {
       case s if !nan(s) =>
         val c  = statCols(s)
         val dt = schema(c).dataType
         schema(c).name -> Option(mins(s)).map(lo => (statStr(dt, lo), statStr(dt, maxs(s))))
     }.toMap
-    val in = HadoopInputFile.fromPath(path, conf)
-    val fr = ParquetFileReader.open(in)
-    val (size, offsets) =
+    val (size, offsets) = if (out == null) (0L, Nil) else {
+      out.close()
+      val in = HadoopInputFile.fromPath(path, conf)
+      val fr = ParquetFileReader.open(in)
       try (in.getLength, fr.getFooter.getBlocks.asScala.map(_.getStartingPos).toSeq)
       finally fr.close()
+    }
     WrittenFile(relPath, rows, size, offsets, bounds,
       schema.fieldNames.zip(nulls).toMap)
   }
 
-  override def abort(): Unit =
+  override def abort(): Unit = if (out != null)
     try out.close()
     finally path.getFileSystem(conf).delete(path, false)
 

@@ -194,12 +194,7 @@ object StreamQueries {
       dirName: String,
       table: String,
       schema: org.apache.spark.sql.types.StructType): (graft.icelite.FsCatalog, graft.icelite.IceTable) = {
-    import org.apache.hadoop.fs.Path
-    val whPath = new Path(s"/root/repo/target/scratch/$dirName")
-    val fs     = whPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(whPath)) fs.delete(whPath, true)
-    fs.mkdirs(whPath)
-    val cat = new graft.icelite.FsCatalog(s, whPath.toString)
+    val cat = new graft.icelite.FsCatalog(s, graft.Scratch.freshDir(s, dirName))
     val t = cat.createOrReplaceTable("graft", table,
       s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
     (cat, t)
@@ -293,13 +288,8 @@ object StreamQueries {
     * the batch aggregate — convergence of the whole CDC pipeline. */
   private def streamIcebergCdc(s: SparkSession, d: String): DataFrame = {
     import graft.icelite.IcebergFormat
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.types._
-    val root = "/root/repo/target/scratch/st07"
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
-    fs.mkdirs(rootPath)
+    val root = graft.Scratch.freshDir(s, "st07")
     // several source files -> several micro-batches under AvailableNow
     val src = s"$root/src"
     graft.Tables.events(s, d).repartition(3).write.parquet(src)
@@ -355,11 +345,8 @@ object StreamQueries {
   private def streamCompaction(s: SparkSession, d: String): DataFrame = {
     import graft.icelite.IcebergFormat
     import org.apache.hadoop.fs.Path
-    val root     = "/root/repo/target/scratch/st08"
-    val rootPath = new Path(root)
-    val fs       = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
-    fs.mkdirs(rootPath)
+    val root     = graft.Scratch.freshDir(s, "st08")
+    val fs       = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
     val src = s"$root/src"
     graft.Tables.events(s, d).repartition(4).write.parquet(src)
     val loc = s"$root/purchases_ice"
@@ -537,13 +524,8 @@ object StreamQueries {
     * to the full-corpus aggregate the oracle recomputes. */
   private def streamTableSource(s: SparkSession, d: String): DataFrame = {
     import graft.icelite.FsCatalog
-    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(s.sparkContext.hadoopConfiguration)
-    val wh = "/root/repo/target/scratch/st14_wh"
-    val ckpt = "/root/repo/target/scratch/st14_ckpt"
-    Seq(wh, ckpt).foreach { p0 =>
-      val p = new org.apache.hadoop.fs.Path(p0)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val wh = graft.Scratch.freshDir(s, "st14_wh")
+    val ckpt = graft.Scratch.freshDir(s, "st14_ckpt")
     val ev = Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
     val cat = new FsCatalog(s, wh)
     val t = cat.createOrReplaceTable("graft", "events_src",
@@ -595,13 +577,8 @@ object StreamQueries {
     * aggregate the oracle recomputes. */
   private def streamTableSink(s: SparkSession, d: String): DataFrame = {
     import graft.icelite.FsCatalog
-    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(s.sparkContext.hadoopConfiguration)
-    val wh   = "/root/repo/target/scratch/st15_wh"
-    val ckpt = "/root/repo/target/scratch/st15_ckpt"
-    Seq(wh, ckpt).foreach { p0 =>
-      val p = new org.apache.hadoop.fs.Path(p0)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val wh   = graft.Scratch.freshDir(s, "st15_wh")
+    val ckpt = graft.Scratch.freshDir(s, "st15_ckpt")
     val ev  = Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
     val cat = new FsCatalog(s, wh)
     val t   = cat.createOrReplaceTable("graft", "events_sink", ev.limit(0))
@@ -652,14 +629,8 @@ object StreamQueries {
     * a CDC consumer needs on a 100 TB table. */
   private def streamIcebergSource(s: SparkSession, d: String): DataFrame = {
     import graft.icelite.IcebergFormat
-    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(s.sparkContext.hadoopConfiguration)
-    val root = "/root/repo/target/scratch/st17"
-    val ckpt = "/root/repo/target/scratch/st17_ckpt"
-    Seq(root, ckpt).foreach { p0 =>
-      val p = new org.apache.hadoop.fs.Path(p0)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    fs.mkdirs(new org.apache.hadoop.fs.Path(root))
+    val root = graft.Scratch.freshDir(s, "st17")
+    val ckpt = graft.Scratch.freshDir(s, "st17_ckpt")
     val ev  = Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
     val loc = s"$root/events_ice"
     val w   = new IcebergFormat.Writer(s, loc, ev.schema)
@@ -717,13 +688,8 @@ object StreamQueries {
     * into a new sink snapshot. */
   private def streamTableToTable(s: SparkSession, d: String): DataFrame = {
     import graft.icelite.FsCatalog
-    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(s.sparkContext.hadoopConfiguration)
-    val wh   = "/root/repo/target/scratch/st16_wh"
-    val ckpt = "/root/repo/target/scratch/st16_ckpt"
-    Seq(wh, ckpt).foreach { p0 =>
-      val p = new org.apache.hadoop.fs.Path(p0)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val wh   = graft.Scratch.freshDir(s, "st16_wh")
+    val ckpt = graft.Scratch.freshDir(s, "st16_ckpt")
     val ev  = Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
     val cat = new FsCatalog(s, wh)
     val src = cat.createOrReplaceTable("graft", "ev_bronze",
@@ -772,13 +738,8 @@ object StreamQueries {
     * watermark read is O(1) — a singleton table. */
   private def streamCdcApply(s: SparkSession, d: String): DataFrame = {
     import graft.icelite.FsCatalog
-    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(s.sparkContext.hadoopConfiguration)
-    val wh   = "/root/repo/target/scratch/st18_wh"
-    val ckpt = "/root/repo/target/scratch/st18_ckpt"
-    Seq(wh, ckpt).foreach { p0 =>
-      val p = new org.apache.hadoop.fs.Path(p0)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val wh   = graft.Scratch.freshDir(s, "st18_wh")
+    val ckpt = graft.Scratch.freshDir(s, "st18_ckpt")
     s.conf.set("spark.sql.catalog.ice_cdc", "graft.sources.IceLiteCatalog")
     s.conf.set("spark.sql.catalog.ice_cdc.warehouse", wh)
     try {
@@ -852,13 +813,8 @@ object StreamQueries {
     * event_id % 3 thirds the commits were built from. */
   private def streamRateLimitedBackfill(s: SparkSession, d: String): DataFrame = {
     import graft.icelite.FsCatalog
-    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(s.sparkContext.hadoopConfiguration)
-    val wh   = "/root/repo/target/scratch/st19_wh"
-    val ckpt = "/root/repo/target/scratch/st19_ckpt"
-    Seq(wh, ckpt).foreach { p0 =>
-      val p = new org.apache.hadoop.fs.Path(p0)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val wh   = graft.Scratch.freshDir(s, "st19_wh")
+    val ckpt = graft.Scratch.freshDir(s, "st19_ckpt")
     val ev  = Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
     val cat = new FsCatalog(s, wh)
     val src = cat.createOrReplaceTable("graft", "ev_backfill",
@@ -895,13 +851,8 @@ object StreamQueries {
     * the escaped '4-NOT SPECIFIED'. */
   private def streamPartitionedSource(s: SparkSession, d: String): DataFrame = {
     import graft.icelite.FsCatalog
-    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(s.sparkContext.hadoopConfiguration)
-    val wh   = "/root/repo/target/scratch/st20_wh"
-    val ckpt = "/root/repo/target/scratch/st20_ckpt"
-    Seq(wh, ckpt).foreach { p0 =>
-      val p = new org.apache.hadoop.fs.Path(p0)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val wh   = graft.Scratch.freshDir(s, "st20_wh")
+    val ckpt = graft.Scratch.freshDir(s, "st20_ckpt")
     val ord = Tables.orders(s, d).select("o_orderkey", "o_orderpriority", "o_totalprice")
     val cat = new FsCatalog(s, wh)
     val src = cat.createOrReplaceTable("graft", "orders_pstream",
@@ -945,13 +896,8 @@ object StreamQueries {
     * resumes as a plain manifest-delta window. */
   private def streamMorSource(s: SparkSession, d: String): DataFrame = {
     import graft.icelite.FsCatalog
-    val fs = new org.apache.hadoop.fs.Path("/").getFileSystem(s.sparkContext.hadoopConfiguration)
-    val wh   = "/root/repo/target/scratch/st21_wh"
-    val ckpt = "/root/repo/target/scratch/st21_ckpt"
-    Seq(wh, ckpt).foreach { p0 =>
-      val p = new org.apache.hadoop.fs.Path(p0)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val wh   = graft.Scratch.freshDir(s, "st21_wh")
+    val ckpt = graft.Scratch.freshDir(s, "st21_ckpt")
     val ev  = Tables.events(s, d).select("event_id", "user_id", "event_type", "value")
     val cat = new FsCatalog(s, wh)
     val t = cat.createOrReplaceTable("graft", "events_mor_stream",
@@ -1024,11 +970,7 @@ object StreamQueries {
     * (kafka source instead of files, object-store sink instead of
     * parquet-append); state is zero — the index table is the state. */
   private def streamDedupProbe(s: SparkSession, d: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val root  = "/root/repo/target/scratch/st22"
-    val rootP = new Path(root)
-    val fs    = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootP)) fs.delete(rootP, true)
+    val root  = graft.Scratch.freshDir(s, "st22")
     // ingest-time: commit the index (every non-src19 doc)
     val meta = graft.ops.Dedup.buildServedIndex(s, d, s"$root/index")
     // the incoming shard (the family's shared batch source, so index and

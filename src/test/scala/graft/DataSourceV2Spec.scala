@@ -275,6 +275,29 @@ class DataSourceV2Spec extends SparkSpec {
     }
   }
 
+  test("an INSERT with more tasks than rows leaves no parquet file outside the snapshot") {
+    val wh = scratch("v2sparse")
+    spark.conf.set("spark.sql.catalog.sparse_spec", "graft.sources.IceLiteCatalog")
+    spark.conf.set("spark.sql.catalog.sparse_spec.warehouse", wh)
+    try {
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS sparse_spec.ns")
+      spark.sql("CREATE TABLE sparse_spec.ns.s (k BIGINT, v STRING)")
+      // 8 write tasks, 2 rows: six tasks get none
+      spark.sql("INSERT INTO sparse_spec.ns.s SELECT id, CAST(id AS STRING) FROM range(0, 2, 1, 8)")
+      val t  = new FsCatalog(spark, wh).loadTable("ns", "s")
+      val fs = t.location.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val prefix = fs.makeQualified(t.location).toString + "/"
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(t.location, "data"), true)
+      val onDisk = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString)
+        .filter(_.endsWith(".parquet")).map(_.stripPrefix(prefix)).toSet
+      assert(onDisk == t.filesOf(t.metadata.currentSnapshot.get).toSet)
+      assert(spark.sql("SELECT count(*) FROM sparse_spec.ns.s").collect()(0).getLong(0) == 2L)
+    } finally {
+      spark.conf.unset("spark.sql.catalog.sparse_spec")
+      spark.conf.unset("spark.sql.catalog.sparse_spec.warehouse")
+    }
+  }
+
   test("SQL time travel through the catalog: VERSION/TIMESTAMP AS OF pin and error paths") {
     val wh = scratch("v2sqltt")
     spark.conf.set("spark.sql.catalog.tt_spec", "graft.sources.IceLiteCatalog")

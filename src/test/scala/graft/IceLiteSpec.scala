@@ -300,21 +300,58 @@ class IceLiteSpec extends SparkSpec {
   test("glob-merge with drifted headers unions by name with null-fill") {
     val csvDir = java.nio.file.Paths.get(scratch("drift_csv"))
     java.nio.file.Files.createDirectories(csvDir)
-    // b.csv drifts: drops `name`, adds `city` — a positional union would
-    // silently land city values in the name column
-    java.nio.file.Files.writeString(csvDir.resolve("a.csv"), "id,name\n1,ann\n2,bo\n")
+    // b.csv drifts between two same-header files: drops `name` and `code`,
+    // adds `city` — a positional union would silently land city values in
+    // the name column. `code` infers as int in a.csv and string in c.csv.
+    java.nio.file.Files.writeString(csvDir.resolve("a.csv"), "id,name,code\n1,ann,7\n2,bo,8\n")
     java.nio.file.Files.writeString(csvDir.resolve("b.csv"), "id,city\n3,oslo\n")
+    java.nio.file.Files.writeString(csvDir.resolve("c.csv"), "id,name,code\n4,cy,x9\n")
     val cat = new FsCatalog(spark, scratch("drift_wh"))
     val job = new IngestJob(spark, cat, scratch("drift_tmp"))
-    val res = job.run(IngestConfig(
-      source = csvDir.toString, globPattern = Some("*.csv"), namespace = "db",
-      explicitTableName = Some("drifted"), mergeGlob = true))
-    assert(res.map(r => (r.table, r.rows)) == Seq(("drifted", 3L)))
+    var res = Seq.empty[IngestResult]
+    val jobs = jobNames {
+      res = job.run(IngestConfig(
+        source = csvDir.toString, globPattern = Some("*.csv"), namespace = "db",
+        explicitTableName = Some("drifted"), mergeGlob = true))
+    }
+    // one read per distinct header: at most a header job and an inference job each
+    assert(jobs.count(_.startsWith("csv at IngestJob")) <= 2 * 2, jobs)
     val out = new Engine(spark, cat).table("db.drifted")
-    assert(out.schema.fieldNames.toSet == Set("id", "name", "city"))
-    val rows = out.orderBy("id")
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("name"), r.getAs[String]("city")))
-    assert(rows.toSeq == Seq((1L, "ann", null), (2L, "bo", null), (3L, null, "oslo")))
+    assert(res.map(r => (r.table, r.rows)) == Seq(("drifted", 4L)))
+    assert(res.head.rows == out.count())
+    // the first header's columns, then the ones the drifted file adds
+    assert(out.schema.map(f => f.name -> f.dataType) == Seq(
+      "id" -> IntegerType, "name" -> StringType, "code" -> StringType, "city" -> StringType))
+    val rows = out.orderBy("id").collect().map(r =>
+      (r.getAs[Int]("id"), r.getAs[String]("name"), r.getAs[String]("code"), r.getAs[String]("city")))
+    assert(rows.toSeq == Seq((1, "ann", "7", null), (2, "bo", "8", null), (3, null, null, "oslo"),
+      (4, "cy", "x9", null)))
+  }
+
+  /** Names of the Spark jobs `body` runs (each its result stage's name,
+    * `<action> at <File>:<line>`), as a listener local to the call sees
+    * them. */
+  private def jobNames(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        names.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the bus delivers events in order: once a marker job is seen, every
+      // job `body` ran has been seen too
+      val marker = "jobNames marker"
+      sc.setCallSite(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearCallSite()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!names.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(names.contains(marker), "listener never saw the marker job")
+      names.toArray(Array.empty[String]).toSeq.filterNot(_ == marker)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("ingest from a file:// url goes through the download path") {

@@ -318,7 +318,7 @@ class MorSpec extends SparkSpec {
     // the race: a compaction lands between delta planning and commit
     t.compact(1)
     val ex = intercept[java.util.ConcurrentModificationException] {
-      t.commitRowDeltas(Seq(entry), Nil, "delete")
+      t.commitRowDeltas(Seq(entry), Nil, "delete", Set(target))
     }
     assert(ex.getMessage.contains("no longer in the current snapshot"), ex.getMessage)
     assert(unreferencedManifests(t).isEmpty,
@@ -331,7 +331,7 @@ class MorSpec extends SparkSpec {
     val part2 = fs.listStatus(stage2).map(_.getPath).find(_.getName.endsWith(".parquet")).get
     val before = t.scan().count()
     t.commitRowDeltas(Seq(graft.icelite.ManifestEntry(
-      s"data/deletes-advrace2/${part2.getName}", rows = Some(1L))), Nil, "delete")
+      s"data/deletes-advrace2/${part2.getName}", rows = Some(1L))), Nil, "delete", Set(fresh))
     assert(t.scan().count() == before - 1, "valid delta did not apply")
   }
 

@@ -79,7 +79,7 @@ object ServeProbe {
     import graft.icelite.IcebergFormat
     import org.apache.hadoop.fs.Path
     import s.implicits._
-    val root  = s"/root/repo/target/scratch/serveprobe_$tag"
+    val root  = s"${graft.Scratch.root}/serveprobe_$tag"
     val rootP = new Path(root)
     val fs    = rootP.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(rootP)) fs.delete(rootP, true)

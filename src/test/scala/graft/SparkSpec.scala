@@ -13,7 +13,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
 
   def scratch(name: String): String = {
-    val p = java.nio.file.Paths.get(s"/root/repo/target/scratch/test_$name")
+    val p = java.nio.file.Paths.get(graft.Scratch.root, s"test_$name")
     org.apache.commons.io.FileUtils.deleteQuietly(p.toFile)
     p.toString
   }

@@ -2,7 +2,6 @@ package graft.icelite
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
@@ -13,7 +12,7 @@ import scala.util.control.NonFatal
   *   data/snap-<id>-<uuid>/part-*.parquet       // files of one commit
   *   metadata/manifests/m-<id>-<uuid>/part-*.json // file list + stats of one commit
   *   metadata/v<N>.json                          // TableMetadata versions
-  *   metadata/version-hint.text                  // latest N (fast lookup)
+  *   metadata/version-hint.text                  // latest N (a hint: MetadataFiles)
   * }}}
   *
   * Commit protocol (SURVEY.md §7.5): executors write parquet data files
@@ -41,20 +40,9 @@ import scala.util.control.NonFatal
   * exception from the CAS itself deletes nothing — the version may have
   * landed.
   *
-  * STORE CONTRACT. The protocol needs exactly two guarantees from the
-  * underlying store: (1) per-object atomic visibility — a written file is
-  * either fully visible or absent, never partial (every object store's
-  * PUT; local FS via temp+rename); (2) an atomic PUBLISH-IF-ABSENT for
-  * the `v<N>.json` CAS. On rename-atomic filesystems (file://, HDFS) that
-  * is exists+rename under a commit lock; on object stores — which have NO
-  * atomic rename (rename is copy+delete and silently overwrites) — it is
-  * conditional create (`PUT If-None-Match`, Hadoop `create(p,
-  * overwrite=false)`), selected by URI scheme via
-  * [[IceTable.conditionalPutSchemes]]. Nothing else in the protocol
-  * renames at commit time, so eventual-consistency of LIST (S3-classic)
-  * only delays the walk-forward hint, never correctness.
-  * ObjectStoreCommitSpec runs the CAS, racing-append, row-delta and
-  * orphan flows over an in-process shim with exactly those semantics.
+  * What the protocol needs from the store, and the version-file CAS,
+  * hint and resolver that provide it, live in [[MetadataFiles]], which
+  * the Iceberg-spec writer shares.
   *
   * Scans hand Spark the snapshot's file list with the frozen schema —
   * filters/projections push into the parquet reader exactly as for a plain
@@ -66,151 +54,28 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
   private def fs: FileSystem = location.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def metadataDir = new Path(location, "metadata")
-  private def hintFile    = new Path(metadataDir, "version-hint.text")
 
   // ------------------------------------------------------------- metadata io
 
-  private def readFile(p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n   = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-  }
+  private def versionFile(v: Int): Path = new Path(metadataDir, IceTable.versionName(v))
 
-  private def writeFileAtomic(p: Path, content: String): Unit = {
-    val tmp = new Path(p.getParent, p.getName + "." + java.util.UUID.randomUUID() + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p)) throw new IllegalStateException(s"commit rename failed: $tmp -> $p")
-  }
-
-  /** Rename-as-CAS: land `content` at `p` ONLY if `p` does not exist yet —
-    * the compare-and-swap the filesystem commit protocol needs so a
-    * concurrent writer's `vN.json` is never clobbered (the REST catalog
-    * path has a server-side CAS at RestCatalog.scala; this is the
-    * filesystem twin). Content is fully staged to a tmp file first, so no
-    * reader ever observes a partial metadata file. Atomicity: HDFS-like
-    * stores guarantee rename-fails-if-destination-exists; for the local FS
-    * a per-location JVM lock + existence check makes same-process racers
-    * (the realistic local case, incl. the MaintenanceSpec race) fully
-    * safe. Returns false when the version was taken — caller rebases. */
-  /** Publish `content` at `p` iff nothing is there — the ONE primitive the
-    * whole commit protocol reduces to. Two arms, by what the store can
-    * promise (see the class-header contract):
-    *  - object stores (no atomic rename, but conditional create — S3/GCS/
-    *    R2 `PUT If-None-Match`, mapped to `fs.create(p, overwrite=false)`):
-    *    write the final object conditionally; the store arbitrates races.
-    *    Rename-as-CAS would be UNSAFE here: object-store rename is
-    *    copy+delete and silently overwrites (ObjectStoreCommitSpec proves
-    *    the hazard on the shim).
-    *  - rename-atomic filesystems (file://, HDFS): temp write + exists/
-    *    rename under a per-path JVM lock (single-writer-process per table,
-    *    or an external lock service, is the documented requirement there).
-    */
-  private def writeFileIfAbsent(p: Path, content: String): Boolean =
-    if (IceTable.conditionalPutSchemes.contains(
-        Option(location.toUri.getScheme).getOrElse("file"))) {
-      try {
-        val out = fs.create(p, false)
-        try out.write(content.getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-        true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case _: java.nio.file.FileAlreadyExistsException        => false
-      }
-    } else {
-      val tmp = new Path(p.getParent, p.getName + "." + java.util.UUID.randomUUID() + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(content.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      val won = IceTable.commitLock(p.toString).synchronized {
-        !fs.exists(p) && fs.rename(tmp, p)
-      }
-      if (!won) fs.delete(tmp, false)
-      won
-    }
-
-  /** Latest committed version. The hint file is a HINT, not truth: a
-    * concurrent writer may have advanced past it (its update is
-    * best-effort after the CAS), so walk forward from it until the next
-    * version is absent — O(1) amortized, correct under stale hints. */
-  def currentVersion: Int = {
-    val hinted =
-      if (fs.exists(hintFile)) scala.util.Try(readFile(hintFile).trim.toInt).getOrElse(0)
-      else 0
-    if (hinted <= 0) {
-      val versions = listVersions()
-      if (versions.isEmpty) 0 else versions.max
-    } else {
-      var v = hinted
-      while (fs.exists(new Path(metadataDir, s"v${v + 1}.json"))) v += 1
-      v
-    }
-  }
-
-  private def listVersions(): Seq[Int] =
-    if (!fs.exists(metadataDir)) Seq.empty
-    else {
-      // a racing writer's staging tmp — or the hint file mid-update (its
-      // rewrite is delete+rename on local FS) — can vanish between the
-      // directory read and the per-entry stat (RawLocalFileSystem shells
-      // out for permissions and throws RuntimeException, and object-store
-      // listings are similarly non-atomic) — retry with backoff past the
-      // racer's window; the vN.json files we are after are immutable once
-      // committed, so a clean listing always converges
-      // only the RACE shapes retry: an entry that vanished between the
-      // directory read and the per-entry stat (FileNotFound cause, or the
-      // shell-stat message RawLocalFileSystem wraps it in). A persistent
-      // failure (permissions, bad config) surfaces immediately.
-      def isVanishedEntry(e: Throwable): Boolean = {
-        val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(8).toSeq
-        chain.exists {
-          case _: java.io.FileNotFoundException => true
-          case t =>
-            val m = Option(t.getMessage).getOrElse("")
-            m.contains("No such file") || m.contains("does not exist") ||
-              m.contains("Error while running command to get file permissions")
-        }
-      }
-      def attempt(left: Int): Seq[org.apache.hadoop.fs.FileStatus] =
-        try fs.listStatus(metadataDir).toIndexedSeq
-        catch {
-          case e: RuntimeException if left > 0 && isVanishedEntry(e) =>
-            Thread.sleep(5L << (6 - left)); attempt(left - 1)
-        }
-      attempt(6)
-        .map(_.getPath.getName)
-        .collect { case n if n.startsWith("v") && n.endsWith(".json") => n.stripPrefix("v").stripSuffix(".json") }
-        .flatMap(s => scala.util.Try(s.toInt).toOption)
-    }
+  /** Latest committed version (0 for none), resolved by [[MetadataFiles]]. */
+  def currentVersion: Int = MetadataFiles.currentVersion(fs, metadataDir, IceTable.versionName)
 
   def metadata: TableMetadata = metadataAt(currentVersion)
 
   def metadataAt(version: Int): TableMetadata =
-    TableMetadata.fromJson(readFile(new Path(metadataDir, s"v$version.json")))
+    TableMetadata.fromJson(MetadataFiles.read(fs, versionFile(version)))
 
-  def metadataLocation: String = new Path(metadataDir, s"v$currentVersion.json").toString
+  def metadataLocation: String = versionFile(currentVersion).toString
 
   /** CAS commit of `md` as version `next`; false = lost the race. The
-    * hint update runs only after winning and is best-effort: readers walk
-    * forward from a stale hint, and `v<next>.json` is already published,
-    * so a failed hint write must not report (or make a caller undo) a
-    * commit that landed. */
+    * hint update runs only after winning and never throws: `v<next>.json`
+    * is already published, so a failed hint write must not report (or
+    * make a caller undo) a commit that landed. */
   private def commitCasAt(next: Int, md: TableMetadata): Boolean =
-    if (!writeFileIfAbsent(new Path(metadataDir, s"v$next.json"), md.toJson)) false
-    else {
-      try writeFileAtomic(hintFile, next.toString)
-      catch {
-        case NonFatal(e) =>
-          IceTable.log.warn(s"committed v$next.json of $location but could not update $hintFile", e)
-      }
+    MetadataFiles.publishIfAbsent(fs, versionFile(next), md.toJson) && {
+      MetadataFiles.writeHint(fs, metadataDir, next)
       true
     }
 
@@ -288,8 +153,10 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * returns its path relative to the table location. */
   private def stageManifest(prefix: String, entries: Seq[ManifestEntry]): String = {
     val rel = s"metadata/manifests/$prefix-${java.util.UUID.randomUUID().toString.take(8)}"
-    fs.mkdirs(new Path(location, rel))
-    writeFileAtomic(new Path(location, s"$rel/part-0.json"), entries.map(_.toJson).mkString("\n"))
+    val part = new Path(location, s"$rel/part-0.json")
+    fs.mkdirs(part.getParent)
+    require(MetadataFiles.publishIfAbsent(fs, part, entries.map(_.toJson).mkString("\n")),
+      s"manifest $part already exists")
     rel
   }
 
@@ -994,7 +861,7 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
         .filter(s => !s.isDirectory && s.getPath.getName.startsWith("part-"))
         .sortBy(_.getPath.getName)
         .flatMap { st =>
-          readFile(st.getPath).split('\n').toIndexedSeq
+          MetadataFiles.read(fs, st.getPath).split('\n').toIndexedSeq
             .map(_.trim).filter(_.nonEmpty).map(ManifestEntry.fromJson)
         }
         // deterministic scan order within a commit (listings already sort
@@ -2433,10 +2300,12 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
 
 object IceTable {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(classOf[IceTable])
+  /** Attempts a rebasing commit makes before giving up on a contended
+    * table (the Iceberg-spec writer's retry loop shares it). */
+  private[icelite] val MaxCommitAttempts = 10
 
-  /** Attempts a rebasing commit makes before giving up on a contended table. */
-  private val MaxCommitAttempts = 10
+  /** File name of metadata version `v`. */
+  private def versionName(v: Int): String = s"v$v.json"
 
   /** What a commit's build function returns for one attempt. */
   private sealed trait Change
@@ -2511,11 +2380,11 @@ object IceTable {
     val t  = new IceTable(spark, new Path(location))
     val fs = t.location.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(t.location)) throw new IllegalStateException(s"table location exists: $location")
-    fs.mkdirs(new Path(t.location, "metadata"))
-    t.writeFileAtomic(
-      new Path(new Path(t.location, "metadata"), "v1.json"),
-      TableMetadata.create(name, namespace, location, schema, partitionColumns).toJson)
-    t.writeFileAtomic(new Path(new Path(t.location, "metadata"), "version-hint.text"), "1")
+    fs.mkdirs(t.metadataDir)
+    if (!MetadataFiles.publishIfAbsent(fs, t.versionFile(1),
+        TableMetadata.create(name, namespace, location, schema, partitionColumns).toJson))
+      throw new IllegalStateException(s"table location exists: $location")
+    MetadataFiles.writeHint(fs, t.metadataDir, 1)
     t
   }
 
@@ -2585,23 +2454,6 @@ object IceTable {
   // footer reads, scan = the distributed fallback. Diagnostic + spec gate.
   private[graft] val footerStatsCommits = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] val scanStatsCommits   = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** URI schemes whose stores offer CONDITIONAL CREATE (`PUT
-    * If-None-Match`, surfaced by Hadoop as `create(p, overwrite=false)`)
-    * but NOT atomic rename — the object-store commit contract. The CAS
-    * commit publishes metadata through conditional create on these;
-    * everything else (data/manifest writes) only needs atomic-visibility
-    * PUTs, which every object store gives per object. `objstore` is the
-    * test shim (ObjectStoreCommitSpec). */
-  private[graft] val conditionalPutSchemes: Set[String] =
-    Set("objstore", "s3", "s3a", "gs", "abfs", "r2")
-
-  /** Per-destination JVM lock backing writeFileIfAbsent's exists+rename
-    * CAS on filesystems whose rename overwrites (local FS). Keyed by the
-    * metadata file path; bounded by distinct commit destinations. */
-  private val commitLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[icelite] def commitLock(key: String): Object =
-    commitLocks.computeIfAbsent(key, _ => new Object)
 
   private[graft] def resetManifestCacheForTest(): Unit = {
     manifestEntries.clear()

@@ -519,7 +519,7 @@ object IcebergFormat {
     implicit val fmts: Formats = DefaultFormats
     val mPath = new Path(metadataPath)
     val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(readText(fs, mPath))
+    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
     val schemaObj = (md \ "schemas") match {
       case JArray(ss) =>
         val cur = (md \ "current-schema-id").extractOpt[Int].getOrElse(0)
@@ -607,7 +607,7 @@ object IcebergFormat {
     implicit val fmts: Formats = DefaultFormats
     val mPath = new Path(metadataPath)
     val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(readText(fs, mPath))
+    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
     (md \ "partition-statistics").extractOpt[List[JObject]].getOrElse(Nil).map { e =>
       PartitionStatsEntry(
         (e \ "snapshot-id").extract[Long],
@@ -626,7 +626,7 @@ object IcebergFormat {
     implicit val fmts: Formats = DefaultFormats
     val mPath = new Path(metadataPath)
     val fsys  = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(readText(fsys, mPath))
+    val md    = JsonMethods.parse(MetadataFiles.read(fsys, mPath))
     val cur   = (md \ "current-snapshot-id").extractOpt[Long].getOrElse(-1L)
     val rows = ((md \ "snapshots") match {
       case JArray(ss) => ss
@@ -680,7 +680,7 @@ object IcebergFormat {
     implicit val fmts: Formats = DefaultFormats
     val mPath = new Path(metadataPath)
     val fsys  = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(readText(fsys, mPath))
+    val md    = JsonMethods.parse(MetadataFiles.read(fsys, mPath))
     val cur   = (md \ "current-snapshot-id").extractOpt[Long].getOrElse(-1L)
     val listPath = ((md \ "snapshots") match {
       case JArray(ss) => ss
@@ -758,7 +758,7 @@ object IcebergFormat {
     implicit val fmts: Formats = DefaultFormats
     val mPath = new Path(metadataPath)
     val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(readText(fs, mPath))
+    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
     val schemaObj = (md \ "schemas") match {
       case JArray(ss) =>
         val cur = (md \ "current-schema-id").extractOpt[Int].getOrElse(0)
@@ -799,7 +799,7 @@ object IcebergFormat {
     implicit val fmts: Formats = DefaultFormats
     val mPath = new Path(metadataPath)
     val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(readText(fs, mPath))
+    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
 
     val formatVersion = (md \ "format-version").extract[Int]
     require(formatVersion == 1 || formatVersion == 2, s"unsupported format-version $formatVersion")
@@ -1069,7 +1069,7 @@ object IcebergFormat {
     implicit val fmts: Formats = DefaultFormats
     val mPath = new Path(metadataPath)
     val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(readText(fs, mPath))
+    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
     (md \ "snapshots") match {
       case JArray(ss) => ss.map(s => (s \ "snapshot-id").extract[Long])
       case _          => Nil
@@ -1096,7 +1096,7 @@ object IcebergFormat {
     implicit val fmts: Formats = DefaultFormats
     val mPath = new Path(metadataPath)
     val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(readText(fs, mPath))
+    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
     (md \ "statistics").extractOpt[List[JObject]].getOrElse(Nil).map { e =>
       StatsEntry(
         (e \ "snapshot-id").extract[Long],
@@ -1121,7 +1121,7 @@ object IcebergFormat {
     implicit val fmts: Formats = DefaultFormats
     val mPath = new Path(metadataPath)
     val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(readText(fs, mPath))
+    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
     (md \ "properties").extractOpt[Map[String, String]].getOrElse(Map.empty)
   }
 
@@ -1131,7 +1131,7 @@ object IcebergFormat {
     implicit val fmts: Formats = DefaultFormats
     val mPath = new Path(metadataPath)
     val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(readText(fs, mPath))
+    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
     (md \ "current-snapshot-id").extractOpt[Long].filter(_ >= 0)
   }
 
@@ -1156,32 +1156,24 @@ object IcebergFormat {
     to.files.map(_.path.toString).filterNot(fromFiles)
   }
 
-  /** Current metadata file of an Iceberg table directory, resolved through
-    * `version-hint.text` (the writer's commit protocol). */
-  def currentMetadataPath(spark: SparkSession, location: String): String = {
-    val hint = new Path(location, "metadata/version-hint.text")
-    val fs   = hint.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the hint is advisory: tolerate a missing/garbled one (a reader
-    // racing the flip, or an externally-written table without a hint) by
-    // falling back to the metadata-dir listing, then walk forward past
-    // any newer committed versions — the same recovery Iceberg's
-    // HadoopTableOperations performs
-    val VPat = raw"v(\d+)\.metadata\.json".r
-    def latestListed(): Int = fs.listStatus(new Path(location, "metadata")).toSeq
-      .map(_.getPath.getName)
-      .collect { case VPat(n) => n.toInt }
-      .maxOption.getOrElse(
-        throw new IllegalStateException(s"no metadata versions at $location"))
-    var v = (try readText(fs, hint).trim.toInt
-    catch {
-      case _: NumberFormatException | _: java.io.IOException => latestListed()
-    })
-    // a numerically-valid hint can still point past every real version
-    // (copied table, external tooling): validate it resolves, else list
-    if (!fs.exists(new Path(location, f"metadata/v$v%05d.metadata.json")))
-      v = latestListed()
-    while (fs.exists(new Path(location, f"metadata/v${v + 1}%05d.metadata.json"))) v += 1
-    new Path(location, f"metadata/v$v%05d.metadata.json").toString
+  /** File name of metadata version `v`. */
+  private def metadataName(v: Int): String = f"v$v%05d.metadata.json"
+
+  /** Latest committed metadata version of the table at `location` (0 when
+    * there is none), resolved by [[MetadataFiles.currentVersion]]. */
+  def currentVersion(spark: SparkSession, location: String): Int = {
+    val dir = new Path(location, "metadata")
+    MetadataFiles.currentVersion(
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration), dir, metadataName)
+  }
+
+  /** Current metadata file of an Iceberg table directory. */
+  def currentMetadataPath(spark: SparkSession, location: String): String =
+    metadataPath(location, currentVersion(spark, location))
+
+  private def metadataPath(location: String, version: Int): String = {
+    if (version == 0) throw new IllegalStateException(s"no metadata versions at $location")
+    new Path(location, s"metadata/${metadataName(version)}").toString
   }
 
   /** Time travel: scan the table as of snapshot `snapshotId` from the
@@ -1331,7 +1323,7 @@ object IcebergFormat {
     implicit val fmts: Formats = DefaultFormats
     val mPath = new Path(metadataPath)
     val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(readText(fs, mPath))
+    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
     val location  = (md \ "location").extract[String]
     val currentId = (md \ "current-snapshot-id").extractOpt[Long].getOrElse(-1L)
     if (currentId < 0) return Nil
@@ -1482,12 +1474,6 @@ object IcebergFormat {
   private def resolve(location: String, p: String): Path =
     if (p.startsWith("/") || p.contains("://")) new Path(p)
     else new Path(new Path(location), p)
-
-  private def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
 
   /** Test-only visibility for avro manifest reads (orphan audits). */
   private[graft] def readAvroForTest(fs: FileSystem, p: Path): Seq[GenericRecord] =
@@ -1815,8 +1801,8 @@ object IcebergFormat {
       tableUuid: String = "11111111-2222-3333-4444-555555555555",
       // in-place REPLACE support: number new metadata JSONs above the old
       // table's versions and tag manifest/list names so nothing the old
-      // snapshot references is overwritten before the hint flips — the
-      // superseded files are deleted only AFTER the new hint is live
+      // snapshot references is overwritten before the new version is
+      // published — the superseded files are deleted only AFTER it is live
       startVersion: Int = 0,
       fileTag: String = "",
       // REAL top-level field ids (possibly SPARSE — a dropped-column
@@ -1925,7 +1911,7 @@ object IcebergFormat {
     private var version = startVersion
     // snapshot ids (= sequence numbers) are MONOTONE FOREVER, never
     // recycled: `committed.size + 1` would re-issue the ids of expired
-    // snapshots, re-using their manifest/list names (a rename-as-CAS
+    // snapshots, re-using their manifest/list names (a publish-if-absent
     // conflict with the tombstoned files) and rewinding sequence numbers
     // the spec requires to only grow
     private var lastSnapId = 0L
@@ -2112,14 +2098,14 @@ object IcebergFormat {
 
     // files successfully created by the current commit attempt — the
     // rollback set a losing optimistic commit deletes (exclusively
-    // created via no-clobber, so every tracked file is this attempt's own)
+    // published if absent, so every tracked file is this attempt's own)
     private var attemptCreated: List[Path] = Nil
 
     /** Run one optimistic commit attempt: on a lost race
-      * (ConcurrentModificationException from any no-clobber write), delete
+      * (ConcurrentModificationException from any publish-if-absent), delete
       * every file this attempt created, restore the writer's in-memory
       * snapshot state, and rethrow — the caller resumes from the winner's
-      * metadata and retries (see [[IcebergFormat.appendWithRetry]]). */
+      * metadata and retries (see [[IcebergFormat.withRetry]]). */
     private def withCommitRollback[T](body: => T): T = {
       val (m0, c0, v0, s0) = (manifests, committed, version, lastSnapId)
       attemptCreated = Nil
@@ -2132,65 +2118,30 @@ object IcebergFormat {
       }
     }
 
+    /** Publish an Avro file at a snapshot-scoped name (manifest, manifest
+      * list), claimed exactly once: a second writer racing the same
+      * snapshot id loses HERE, before any published metadata can point at
+      * overwritten files. Returns the file's length. */
     private def writeAvroFile(p: Path, schema: Schema, records: Seq[GenericRecord],
-        meta: Map[String, String], noClobber: Boolean = false): Long = {
-      // temp (uuid-named: concurrent writers may target the same final
-      // name) + rename so a failed write can't leave a truncated avro
-      // file at its final name; the writer (and its FS stream) always
-      // closes
-      val tmp = new Path(p.getParent,
-        p.getName + "." + java.util.UUID.randomUUID().toString.take(8) + ".tmp")
-      val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
-      try {
-        meta.foreach { case (k, v) => w.setMeta(k, v) }
-        w.create(schema, fs.create(tmp, true))
-        records.foreach(w.append)
-      } finally w.close()
-      if (noClobber) {
-        // claim-as-CAS: snapshot-scoped names (manifests, manifest
-        // lists) are claimed exactly once; a second writer racing the
-        // same snapshot id loses HERE, before any published metadata
-        // can point at overwritten files
-        if (!claimExactlyOnce(tmp, p)) {
-          fs.delete(tmp, false)
-          throw new java.util.ConcurrentModificationException(
-            s"concurrent commit to $location: ${p.getName} already exists; " +
-              "resume the writer from current metadata and retry")
-        }
-        // only exclusively-claimed files may enter the rollback set: a
-        // path that pre-existed is someone else's committed artifact
-        attemptCreated = p :: attemptCreated
-      } else {
-        if (fs.exists(p)) fs.delete(p, false)
-        require(fs.rename(tmp, p), s"avro commit rename failed: $tmp -> $p")
+        meta: Map[String, String]): Long = {
+      val won = MetadataFiles.publishIfAbsent(fs, p) { out =>
+        val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
+        try {
+          meta.foreach { case (k, v) => w.setMeta(k, v) }
+          w.create(schema, out)
+          records.foreach(w.append)
+        } finally w.close()
       }
+      if (!won) throw lostRace(p)
+      // only exclusively-claimed files may enter the rollback set: a
+      // path that pre-existed is someone else's committed artifact
+      attemptCreated = p :: attemptCreated
       fs.getFileStatus(p).getLen
     }
 
-    /** Atomically promote `tmp` to `dst` iff `dst` does not exist.
-      * Local paths get a TRUE cross-process CAS: hard-link creation is
-      * O_EXCL-atomic on POSIX (EEXIST when another process got there
-      * first) — plain rename(2) would silently REPLACE the winner's
-      * file. Non-local filesystems fall back to exists+rename under a
-      * per-path JVM lock (exact within one driver; multi-driver safety
-      * there needs a conditional-put store, see IceTable's
-      * conditionalPutSchemes). */
-    private def claimExactlyOnce(tmp: Path, dst: Path): Boolean = {
-      val scheme = Option(dst.toUri.getScheme).getOrElse("file")
-      if (scheme == "file") {
-        import java.nio.file.{Files, Paths, FileAlreadyExistsException}
-        try {
-          Files.createLink(Paths.get(dst.toUri.getPath), Paths.get(tmp.toUri.getPath))
-          fs.delete(tmp, false)
-          true
-        } catch {
-          case _: FileAlreadyExistsException => false
-          case _: java.nio.file.FileSystemException if fs.exists(dst) => false
-        }
-      } else IceTable.commitLock(dst.toString).synchronized {
-        !fs.exists(dst) && fs.rename(tmp, dst)
-      }
-    }
+    private def lostRace(p: Path) = new java.util.ConcurrentModificationException(
+      s"concurrent commit to $location: ${p.getName} already exists; " +
+        "resume the writer from current metadata and retry")
 
     /** Additive schema evolution for subsequent commits, the spec way:
       * the metadata JSON keeps EVERY historical schema in `schemas` and
@@ -2655,7 +2606,7 @@ object IcebergFormat {
             "partition-spec" -> s"[${specJson(specFields)}]",
             "partition-spec-id" -> specId.toString,
             "format-version" -> "2",
-            "content" -> (if (kind == 0) "data" else "deletes")), noClobber = true)
+            "content" -> (if (kind == 0) "data" else "deletes")))
         manifests = manifests :+ ManifestRec(manifestPath.toString, manifestLen, snapId, seq,
           kind, group.size, group.map(_.recordCount).sum, specId,
           summaries = summarize(specFields, group.map(f => f.partitionValues.get _)))
@@ -2740,7 +2691,7 @@ object IcebergFormat {
           "partition-spec" -> s"[${specJson(specs(sid))}]",
           "partition-spec-id" -> sid.toString,
           "format-version" -> "2",
-          "content" -> "data"), noClobber = true)
+          "content" -> "data"))
         // list seq = the group's MIN so a null-seq entry can never be
         // treated as newer than it was (entries carry explicit seqs anyway)
         ManifestRec(path.toString, len, snapId, group.map(_.seq).min, 0,
@@ -2834,8 +2785,7 @@ object IcebergFormat {
         "format-version" -> "2",
         "snapshot-id" -> snapId.toString,
         "sequence-number" -> seq.toString,
-        "parent-snapshot-id" -> parent),
-        noClobber = true)
+        "parent-snapshot-id" -> parent))
       committed = committed :+ ((snapId, listPath.toString))
       lastSnapId = snapId
       writeMetadata()
@@ -2891,42 +2841,16 @@ object IcebergFormat {
            "current-snapshot-id":$snapId,
            "snapshots":[$snapshotsJson],
            "snapshot-log":[],"metadata-log":[]}""".replaceAll("\n\\s*", "")
-      val mdPath = new Path(metadataDir, f"v$version%05d.metadata.json")
-      // version-file CAS (same protocol as IceTable.commitCasAt): whoever
-      // claims v{N}.metadata.json owns snapshot N; a loser rolls back via
-      // withCommitRollback and retries from the winner's state
-      val tmp = new Path(metadataDir,
-        mdPath.getName + "." + java.util.UUID.randomUUID().toString.take(8) + ".tmp")
-      val out = fs.create(tmp, true)
-      try out.write(metadataJson.getBytes("UTF-8")) finally out.close()
-      if (!claimExactlyOnce(tmp, mdPath)) {
-        fs.delete(tmp, false)
-        throw new java.util.ConcurrentModificationException(
-          s"concurrent commit to $location: ${mdPath.getName} already exists; " +
-            "resume the writer from current metadata and retry")
-      }
+      val mdPath = new Path(metadataDir, metadataName(version))
+      // whoever publishes v{N}.metadata.json owns snapshot N; a loser
+      // rolls back via withCommitRollback and retries from the winner's
+      // state
+      if (!MetadataFiles.publishIfAbsent(fs, mdPath, metadataJson)) throw lostRace(mdPath)
       attemptCreated = mdPath :: attemptCreated
-      // the hint is advisory (readers walk forward from it) and only
-      // winners reach this line — but it must flip ATOMICALLY (tmp +
-      // rename-replace): a plain overwriting create truncates first, and
-      // a concurrent reader would see an empty hint
-      val hintTmp = new Path(metadataDir,
-        "version-hint." + java.util.UUID.randomUUID().toString.take(8) + ".tmp")
-      val hint = fs.create(hintTmp, true)
-      try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
-      val hintPath = new Path(metadataDir, "version-hint.text")
-      if (!fs.rename(hintTmp, hintPath)) {
-        // some FS contracts refuse rename-onto-existing: replace under the
-        // hint's own lock so no reader ever observes a missing hint window
-        IceTable.commitLock(hintPath.toString).synchronized {
-          fs.delete(hintPath, false)
-          require(fs.rename(hintTmp, hintPath), s"hint flip failed at $hintPath")
-        }
-      }
+      MetadataFiles.writeHint(fs, metadataDir, version)
     }
 
-    def currentMetadataPath: String =
-      new Path(metadataDir, f"v$version%05d.metadata.json").toString
+    def currentMetadataPath: String = new Path(metadataDir, metadataName(version)).toString
 
     /** Rehydrate a session over an EXISTING table (see
       * [[IcebergFormat.resumeWriter]]): the snapshot log, the current
@@ -2998,7 +2922,7 @@ object IcebergFormat {
     * session — the missing half of the writer's "single session owns the
     * lineage" design, and what lets SQL row-level operations commit DELTA
     * snapshots onto tables loaded from disk (ic76–ic79). State is rebuilt
-    * from public metadata only: version from `version-hint.text`, the
+    * from public metadata only: version from [[currentVersion]], the
     * snapshot log from the metadata JSON's `snapshots` array, the carried
     * manifest pointers from the current snapshot's manifest list avro
     * (every field the list schema records), and the FULL schema + spec
@@ -3012,23 +2936,28 @@ object IcebergFormat {
   }
 
   /** Optimistic-concurrency append: commit `files` to the table at
-    * `location`, resuming from the CURRENT metadata and retrying on a
-    * lost commit race — the Iceberg commit protocol for parallel jobs
-    * appending to one table. The data files are already staged and
-    * immutable, so a retry re-publishes metadata only (O(manifest), no
-    * data IO); the losing attempt's partial metadata files were rolled
-    * back by the writer before the ConcurrentModificationException
-    * surfaced. Returns the winning writer (for follow-up reads). */
-  def appendWithRetry(spark: SparkSession, location: String,
-      files: Seq[DataFileInfo], maxAttempts: Int = 10): Writer = {
-    var attempt = 0
+    * `location` through [[withRetry]] — the Iceberg commit protocol for
+    * parallel jobs appending to one table. The data files are already
+    * staged and immutable, so a retry re-publishes metadata only
+    * (O(manifest), no data IO). Returns the winning writer (for
+    * follow-up reads). */
+  def appendWithRetry(spark: SparkSession, location: String, files: Seq[DataFileInfo]): Writer =
+    withRetry(spark, location)(_.commit(files))
+
+  /** The resume-and-retry loop of every optimistic commit to a spec table:
+    * resume a writer from the CURRENT metadata, apply `op` (which
+    * publishes), and on a lost commit race — whose partial metadata files
+    * the writer rolled back before the ConcurrentModificationException
+    * surfaced — start over from the winner's metadata, up to
+    * [[IceTable.MaxCommitAttempts]] attempts. Returns the winning writer. */
+  def withRetry(spark: SparkSession, location: String)(op: Writer => Unit): Writer = {
+    var attempt = 1
     while (true) {
       val w = resumeWriterImpl(spark, location)
-      try { w.commit(files); return w }
+      try { op(w); return w }
       catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt >= maxAttempts) throw e
+        case e: java.util.ConcurrentModificationException
+            if attempt < IceTable.MaxCommitAttempts => attempt += 1
       }
     }
     throw new IllegalStateException("unreachable")
@@ -3036,10 +2965,13 @@ object IcebergFormat {
 
   private def resumeWriterImpl(spark: SparkSession, location: String): Writer = {
     implicit val fmts: Formats = DefaultFormats
-    val metaPath = currentMetadataPath(spark, location)
+    // the RESOLVED version (the resolver walks forward past a stale
+    // hint), not the raw hint value
+    val version  = currentVersion(spark, location)
+    val metaPath = metadataPath(location, version)
     val mPath    = new Path(metaPath)
     val fs       = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md       = JsonMethods.parse(readText(fs, mPath))
+    val md       = JsonMethods.parse(MetadataFiles.read(fs, mPath))
     require((md \ "format-version").extract[Int] == 2,
       "resumeWriter supports format-version 2 only")
     // schema history, ordered by schema-id; ids contiguous-from-0, current = last
@@ -3086,15 +3018,6 @@ object IcebergFormat {
         }: Seq[(String, Int, Int, String)]
       }
     val uuid = (md \ "table-uuid").extract[String]
-    // version of the RESOLVED metadata file (currentMetadataPath walks
-    // forward past a stale hint), not the raw hint value
-    val version = {
-      val VPat = raw"v(\d+)\.metadata\.json".r
-      mPath.getName match {
-        case VPat(n) => n.toInt
-        case other   => throw new IllegalStateException(s"unversioned metadata file $other")
-      }
-    }
     // one walk over the snapshots array feeds all three restored maps —
     // resumeWriter runs per DML commit, so the extraction cost matters
     // on long snapshot logs

@@ -81,13 +81,31 @@ final class IngestJob(spark: SparkSession, catalog: FsCatalog, tmpDir: String) {
     * POSITION, so only files whose header lines are identical may share a
     * read; a drifted header gets a read of its own, and `unionByName`
     * lines the reads up (the first read's columns, then the ones later
-    * reads add). The row count comes from the new snapshot's manifests;
-    * the table is scanned only when they cannot answer. */
+    * reads add). A column one read infers as string and another as
+    * anything else is read as string by all of them: the union's type
+    * coercion would otherwise widen it to the other type and fail the
+    * load on the first string value. The row count comes from the new
+    * snapshot's manifests; the table is scanned only when they cannot
+    * answer. */
   private def load(ns: String, name: String, paths: Seq[String], multiLine: Boolean): IngestResult = {
+    import org.apache.spark.sql.types.StringType
     val headers = paths.map(headerLine)
-    val df = headers.distinct
+    val reads = headers.distinct
       .map(h => readCsv(paths.zip(headers).collect { case (p, `h`) => p }, multiLine))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val key: String => String =
+      if (spark.sessionState.conf.caseSensitiveAnalysis) identity
+      else _.toLowerCase(java.util.Locale.ROOT)
+    val fields = reads.flatMap(_.schema.fields)
+    val mixed = fields.groupBy(f => key(f.name)).collect {
+      case (k, fs) if fs.exists(_.dataType == StringType) && fs.exists(_.dataType != StringType) => k
+    }.toSet
+    val df = reads.map { r =>
+      val casts = r.schema.fields.collect {
+        case f if mixed(key(f.name)) && f.dataType != StringType =>
+          f.name -> r.col(s"`${f.name.replace("`", "``")}`").cast(StringType)
+      }
+      if (casts.isEmpty) r else r.withColumns(casts.toMap)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
     val t = catalog.createOrReplaceTable(ns, name, df)
     val rows = t.metadata.currentSnapshot.flatMap(t.statsRowCount).getOrElse(t.scan().count())
     IngestResult(ns, name, rows, t.location.toString)

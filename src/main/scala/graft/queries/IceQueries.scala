@@ -1627,11 +1627,7 @@ object IceQueries {
     base.write.format("icelite").option("iceberg", "true")
       .option("location", loc).mode("overwrite").save()
     val fs   = new Path(loc).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val hint = new Path(loc, "metadata/version-hint.text")
-    val ver  = new String(
-      org.apache.hadoop.io.IOUtils.readFullyToByteArray(fs.open(hint)),
-      java.nio.charset.StandardCharsets.UTF_8).trim
-    val meta = f"$loc/metadata/v${ver.toInt}%05d.metadata.json"
+    val meta = IcebergFormat.currentMetadataPath(s, loc)
     val scanned = new Engine(s, new FsCatalog(s, freshDir(s, "icev2w_wh")))
       .scanIcebergMetadata(meta)
     require(scanned.schema.catalogString == base.schema.catalogString,

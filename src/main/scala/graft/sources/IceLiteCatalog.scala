@@ -440,13 +440,11 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     // drops), and every promoted name must resolve — a rename in the
     // same batch must not silently swallow a promotion. The publish can
     // lose a race to a concurrent data commit; the change is metadata-only
-    // and idempotent to re-derive, so re-resume and retry like
-    // appendWithRetry does for appends.
+    // and idempotent to re-derive, so it goes through the same
+    // resume-and-retry loop as appends.
     nativeDir(ns, ident.name()).foreach { loc =>
-      val spark   = SparkSession.active
-      var attempt = 0
-      while (true) {
-        val w  = graft.icelite.IcebergFormat.resumeWriter(spark, loc)
+      val spark = SparkSession.active
+      graft.icelite.IcebergFormat.withRetry(spark, loc) { w =>
         val pm = promotes.toMap
         pm.keys.foreach(c => require(w.schemaNow.fieldNames.contains(c),
           s"no column $c to promote"))
@@ -460,15 +458,9 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
         nestedAdds.foreach { case (path, f) => w.addNestedColumn(path, f) }
         nestedRenames.foreach { case (path, n) => w.renameNestedColumn(path, n) }
         nestedDrops.foreach(w.dropNestedColumn)
-        try {
-          w.publishSchemaChange()
-          return new IcebergMorV2Table(spark, loc)
-        } catch {
-          case e: java.util.ConcurrentModificationException =>
-            attempt += 1
-            if (attempt >= 10) throw e
-        }
+        w.publishSchemaChange()
       }
+      return new IcebergMorV2Table(spark, loc)
     }
     require(nestedAdds.isEmpty && nestedRenames.isEmpty && nestedDrops.isEmpty,
       "nested-column ALTER is supported on native Iceberg v2 tables only " +
@@ -630,45 +622,17 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
         ("queryColumnNames" -> info.queryColumnNames().toList) ~
         ("columnAliases" -> info.columnAliases().toList) ~
         ("properties" -> info.properties().asScala.toMap)))
-    // tmp + rename: a reader never sees a half-written view definition. For
-    // replace on a LOCAL filesystem, nio ATOMIC_MOVE renames OVER the live
-    // file — the old definition stays readable until the instant the new
-    // one lands and a crash leaves the old view intact (no drop-then-create
-    // window; Hadoop's FileSystem.rename refuses an existing destination,
-    // so it can't express this). Non-local filesystems fall back to
-    // delete+rename — their rename is non-atomic anyway, so the window is
-    // inherent to the store, not this code path.
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + ".tmp")
-    fs.mkdirs(p.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    val scheme = Option(p.toUri.getScheme).getOrElse("file")
-    if (overwrite && fs.exists(p) && scheme == "file") {
-      // the nio move bypasses Hadoop's ChecksumFileSystem, so drop both
-      // crc sidecars first — the target's would be STALE after the move
-      // (every read then throws ChecksumException) and the tmp's would be
-      // orphaned; an absent crc just skips verification. Old view data
-      // stays readable throughout: only the sidecars go before the move.
-      val dir = java.nio.file.Paths.get(p.getParent.toUri.getPath)
-      java.nio.file.Files.deleteIfExists(dir.resolve("." + p.getName + ".crc"))
-      java.nio.file.Files.deleteIfExists(dir.resolve("." + tmp.getName + ".crc"))
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath), java.nio.file.Paths.get(p.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    } else {
-      if (overwrite && fs.exists(p)) fs.delete(p, false)
-      require(fs.rename(tmp, p), s"view publish rename failed: $p")
-    }
+    // a reader never sees a half-written view definition, and a replace
+    // swaps the whole file: the old definition stays readable until the
+    // new one lands, and a crash leaves the old view intact
+    if (!overwrite) {
+      if (!graft.icelite.MetadataFiles.publishIfAbsent(fs, p, json))
+        throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(ident)
+    } else graft.icelite.MetadataFiles.replace(fs, p, json)
     loadView(ident)
   }
 
-  override def createView(info: ViewInfo): View = {
-    val ident = info.ident()
-    if (hfs(viewFile(ident)).exists(viewFile(ident)))
-      throw new org.apache.spark.sql.catalyst.analysis.ViewAlreadyExistsException(ident)
-    writeViewFile(info, overwrite = false)
-  }
+  override def createView(info: ViewInfo): View = writeViewFile(info, overwrite = false)
 
   override def replaceView(info: ViewInfo, orCreate: Boolean): View = {
     val ident = info.ident()

@@ -93,10 +93,8 @@ final class IceLiteSource extends TableProvider with DataSourceRegister {
       // an EXISTING table infers from its committed metadata (the
       // streaming-read path); an absent one has no schema to infer — the
       // write path hands the DataFrame schema to getTable directly
-      val loc  = resolveLocation(options)
-      val hint = new org.apache.hadoop.fs.Path(loc, "metadata/version-hint.text")
-      val fs   = hint.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-      if (!fs.exists(hint))
+      val loc = resolveLocation(options)
+      if (IcebergFormat.currentVersion(SparkSession.active, loc) == 0)
         throw new UnsupportedOperationException(
           s"no Iceberg table at $loc to infer a schema from; writes pass the " +
             "DataFrame schema, batch reads go through Engine.scanIcebergMetadata")

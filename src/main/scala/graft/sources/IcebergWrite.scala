@@ -23,7 +23,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * committed Iceberg schema JSON assigns (the spec's name-independent
   * column identity — id-based projection is what makes rename/evolution
   * safe), and the driver commit is pure metadata through
-  * [[IcebergFormat.Writer]] (Avro manifests, snapshot log, version-hint).
+  * [[IcebergFormat.Writer]] (Avro manifests, snapshot log, version hint).
   * Top-level primitive columns collect inline min/max stats so the
   * committed manifests file-skip exactly like the flat path.
   *
@@ -97,31 +97,27 @@ final class IcebergV2Write(location: String, schema: StructType, replace: Boolea
       val loc  = new Path(location)
       val fs   = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
       val metaDir = new Path(location, "metadata")
-      val hint = new Path(metaDir, "version-hint.text")
-      val existed = fs.exists(hint)
+      val oldVersion = IcebergFormat.currentVersion(s, location)
+      val existed    = oldVersion > 0
       if (existed) require(replace,
         s"$location already holds an Iceberg table; the V2 writer supports " +
           "mode(\"overwrite\") (full replace) — use IcebergFormat.Writer to append")
       // replace is commit-THEN-delete: the new metadata is written under
       // names the old snapshot can't collide with (version numbered past
-      // the old hint, tag-suffixed manifests), the hint flip publishes it,
-      // and only then is the superseded state reclaimed — a failure at any
-      // point leaves a readable table (old before the flip, new after),
-      // never a destroyed one.
-      val (oldVersion, oldMetaFiles, oldDataDirs) = if (existed) {
-        val v = {
-          val in = fs.open(hint)
-          try scala.io.Source.fromInputStream(in).mkString.trim.toInt finally in.close()
-        }
+      // the old one, tag-suffixed manifests), the new version publishes
+      // it, and only then is the superseded state reclaimed — a failure at
+      // any point leaves a readable table (old before the publish, new
+      // after), never a destroyed one.
+      val (oldMetaFiles, oldDataDirs) = if (existed) {
         val metas = fs.listStatus(metaDir).map(_.getPath)
-          .filterNot(_.getName == "version-hint.text").toSeq
+          .filterNot(graft.icelite.MetadataFiles.isHint).toSeq
         val dataDir = new Path(location, "data")
         val datas = if (fs.exists(dataDir))
           fs.listStatus(dataDir).map(_.getPath)
             .filterNot(p => s"data/${p.getName}" == dataRel).toSeq
         else Nil
-        (v, metas, datas)
-      } else (0, Nil, Nil)
+        (metas, datas)
+      } else (Nil, Nil)
       val infos = messages.toSeq.collect {
         case m: WrittenFile if m.rows > 0 =>
           IcebergWrite.dataFileInfo(location, schema, ids, m, Map.empty)
@@ -129,7 +125,7 @@ final class IcebergV2Write(location: String, schema: StructType, replace: Boolea
       val w = new IcebergFormat.Writer(s, location, schema,
         startVersion = oldVersion, fileTag = dataRel.stripPrefix("data/snap-w-"))
       w.commit(infos)
-      // new hint is live — reclaim the old snapshot's files
+      // the new version is live — reclaim the old snapshot's files
       oldMetaFiles.foreach(p => fs.delete(p, true))
       oldDataDirs.foreach(p => fs.delete(p, true))
     }

@@ -1013,18 +1013,19 @@ object StreamQueries {
     * (the manager Spark itself falls back to when FileContext is
     * unavailable; same-directory rename is atomic on POSIX) halves the
     * lifecycle: a minimal stream-stream join repro goes 4.96 s → 2.01 s.
-    * Parameterised: `graft.streaming.checkpointFileManager` overrides the
-    * class, and `default` keeps Spark's stack — which is the right choice
-    * when checkpoints live on HDFS/object storage, where the FileContext
-    * manager's atomic overwrite-rename and the checksum layer's
-    * corruption detection earn their cost. Conf is saved/restored around
-    * each lifecycle; results are unaffected (checkpoint IO only). */
-  private[graft] def withLocalCkptManager[T](s: SparkSession)(body: => T): T = {
+    * The swap applies only when the checkpoint root (`root`, by default
+    * [[graft.Scratch.root]]) resolves to `file:`: on HDFS or object
+    * storage the FileContext manager's atomic overwrite-rename and the
+    * checksum layer's corruption detection earn their cost, so Spark's
+    * stack stays. Conf is saved/restored around each lifecycle; results
+    * are unaffected (checkpoint IO only). */
+  private[graft] def withLocalCkptManager[T](s: SparkSession, root: String = graft.Scratch.root)(
+      body: => T): T = {
     val key = "spark.sql.streaming.checkpointFileManagerClass"
-    val chosen = s.conf.get("graft.streaming.checkpointFileManager",
-      sys.env.getOrElse("SPARK_GRAFT_CKPT_MANAGER",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager"))
+    val chosen = "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "FileSystemBasedCheckpointFileManager"
+    val scheme = Option(new org.apache.hadoop.fs.Path(root).toUri.getScheme).getOrElse(
+      org.apache.hadoop.fs.FileSystem.getDefaultUri(s.sparkContext.hadoopConfiguration).getScheme)
     // Eagerly drop the lifecycle's state-store providers once its streams
     // have terminated (round 18). A finished AvailableNow drain leaves its
     // HDFSBackedStateStoreProvider instances — one per state partition per
@@ -1038,7 +1039,7 @@ object StreamQueries {
     // here is pure cleanup of this query's own scratch state — checkpoints
     // stay on disk and a resumed query reloads from them as usual.
     def unload(): Unit = org.apache.spark.sql.graft.bridge.unloadStateStores()
-    if (chosen == "default") {
+    if (scheme != "file") {
       try body finally unload()
     } else {
       // depth-counted set/restore (round 18, VERDICT r17 item 6): with a

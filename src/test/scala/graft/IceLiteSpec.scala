@@ -326,6 +326,23 @@ class IceLiteSpec extends SparkSpec {
       (r.getAs[Int]("id"), r.getAs[String]("name"), r.getAs[String]("code"), r.getAs[String]("city")))
     assert(rows.toSeq == Seq((1, "ann", "7", null), (2, "bo", "8", null), (3, null, null, "oslo"),
       (4, "cy", "x9", null)))
+
+    // `code` infers as int in one header group and as string in the
+    // other: both read it as string (the union would widen it to BIGINT
+    // and fail the load on 'x9')
+    val mixedDir = java.nio.file.Paths.get(scratch("drift_mixed_csv"))
+    java.nio.file.Files.createDirectories(mixedDir)
+    java.nio.file.Files.writeString(mixedDir.resolve("a.csv"), "id,code\n1,7\n")
+    java.nio.file.Files.writeString(mixedDir.resolve("b.csv"), "id,code,city\n2,x9,oslo\n")
+    val mixed = job.run(IngestConfig(
+      source = mixedDir.toString, globPattern = Some("*.csv"), namespace = "db",
+      explicitTableName = Some("mixed"), mergeGlob = true))
+    assert(mixed.map(r => (r.table, r.rows)) == Seq(("mixed", 2L)))
+    val m = new Engine(spark, cat).table("db.mixed")
+    assert(m.schema.map(f => f.name -> f.dataType) == Seq(
+      "id" -> IntegerType, "code" -> StringType, "city" -> StringType))
+    assert(m.orderBy("id").collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq ==
+      Seq((1, "7", null), (2, "x9", "oslo")))
   }
 
   /** Names of the Spark jobs `body` runs (each its result stage's name,

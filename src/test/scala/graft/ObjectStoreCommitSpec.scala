@@ -1,8 +1,9 @@
 package graft
 
-import graft.icelite.FsCatalog
+import graft.icelite.{FsCatalog, IceTable, IcebergFormat}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** The commit protocol over the OBJECT-STORE contract (third-round carry:
   * everything else runs on file:// where rename is atomic; the reference
@@ -12,7 +13,8 @@ import org.apache.spark.sql.functions._
   * racing appends both land via conditional-put arbitration, row-delta
   * commits CAS the same way, maintenance never sweeps live files, and
   * the rename hazard itself is demonstrated (why rename-as-CAS would be
-  * silent data loss off the local FS). */
+  * silent data loss off the local FS). Both table formats publish their
+  * metadata without a rename, race, and survive a failed hint write. */
 class ObjectStoreCommitSpec extends SparkSpec {
 
   private def objScratch(name: String): String =
@@ -112,5 +114,79 @@ class ObjectStoreCommitSpec extends SparkSpec {
     assert(t.removeOrphans(olderThanMillis = 0L).size >= 1, "loose orphan not swept on objstore")
     assert(!fs.exists(junk), "orphan file survived the sweep")
     assert(t.scan().count() == full)
+  }
+
+  private def nation = Tables.nation(spark, sfDir)
+
+  private def specFile(loc: String, name: String, keys: org.apache.spark.sql.Column) =
+    IcebergFormat.writeSingleFile(spark, loc, name, nation.filter(keys))
+
+  test("neither format renames under metadata/ on the object store") {
+    val loc = objScratch("norename_spec")
+    ObjectStoreFileSystem.renames.clear()
+    new IcebergFormat.Writer(spark, loc, nation.schema)
+      .commit(Seq(specFile(loc, "a", col("n_nationkey") < 10)))
+    IcebergFormat.appendWithRetry(spark, loc, Seq(specFile(loc, "b", col("n_nationkey") >= 10)))
+    IcebergFormat.resumeWriter(spark, loc).expireSnapshots(keepLast = 1)
+    assert(IcebergFormat.scan(spark, IcebergFormat.currentMetadataPath(spark, loc)).count() ==
+      nation.count())
+    val t = new FsCatalog(spark, objScratch("norename_ice"))
+      .createOrReplaceTable("ns", "nation_norename", nation)
+    t.append(nation)
+    assert(t.scan().count() == 2 * nation.count())
+    val renamed = ObjectStoreFileSystem.renames.asScala.toSeq
+      .filter { case (src, dst) => src.contains("/metadata/") || dst.contains("/metadata/") }
+    assert(renamed.isEmpty, s"metadata renames on the object store: ${renamed.mkString(", ")}")
+  }
+
+  test("racing spec-table appends BOTH land: contiguous versions, no orphan metadata") {
+    val loc = objScratch("race_spec")
+    new IcebergFormat.Writer(spark, loc, nation.schema)
+      .commit(Seq(specFile(loc, "base", col("n_nationkey") < 5)))
+    val staged = Seq(
+      specFile(loc, "t1", col("n_nationkey") >= 5 && col("n_nationkey") < 15),
+      specFile(loc, "t2", col("n_nationkey") >= 15))
+    val barrier = new java.util.concurrent.CyclicBarrier(2)
+    val errors  = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = staged.map { f =>
+      new Thread(() => {
+        try {
+          barrier.await()
+          IcebergFormat.appendWithRetry(spark, loc, Seq(f))
+        } catch { case t: Throwable => errors.add(t) }
+      })
+    }
+    threads.foreach(_.start()); threads.foreach(_.join(120000))
+    assert(threads.forall(!_.isAlive), "a racing append hung past the join timeout")
+    assert(errors.isEmpty, s"racing append failed: ${errors.peek()}")
+    assert(IcebergFormat.scan(spark, IcebergFormat.currentMetadataPath(spark, loc)).count() ==
+      nation.count(), "a racing append was lost")
+    val fs     = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val onDisk = fs.listStatus(new Path(loc, "metadata")).map(_.getPath.getName).toSet
+    assert(onDisk.filter(_.endsWith(".metadata.json")).toSeq.sorted ==
+      Seq("v00001.metadata.json", "v00002.metadata.json", "v00003.metadata.json"),
+      s"non-contiguous version history: $onDisk")
+    val orphans = onDisk -- reachableSpecMetadata(loc)
+    assert(orphans.isEmpty, s"orphan metadata files: ${orphans.mkString(",")}")
+  }
+
+  test("a commit whose hint write fails returns normally; the next resolution finds it") {
+    val loc = objScratch("hintfault_spec")
+    val w   = new IcebergFormat.Writer(spark, loc, nation.schema)
+    w.commit(Seq(specFile(loc, "a", col("n_nationkey") < 10)))
+    val t = new FsCatalog(spark, objScratch("hintfault_ice"))
+      .createOrReplaceTable("ns", "nation_hintfault", nation)
+    ObjectStoreFileSystem.failCreate.set(Some("^version-hint".r))
+    try {
+      w.commit(Seq(specFile(loc, "b", col("n_nationkey") >= 10)))
+      t.append(nation)
+    } finally ObjectStoreFileSystem.failCreate.set(None)
+    // the hints still name the previous versions: the resolver walks past them
+    val mp = IcebergFormat.currentMetadataPath(spark, loc)
+    assert(mp.endsWith("/metadata/v00002.metadata.json"), mp)
+    assert(IcebergFormat.scan(spark, mp).count() == nation.count())
+    val reloaded = IceTable.load(spark, t.location.toString)
+    assert(reloaded.currentVersion == 3) // create, the first append, the faulted one
+    assert(reloaded.scan().count() == 2 * nation.count())
   }
 }

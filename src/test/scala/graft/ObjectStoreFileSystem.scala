@@ -14,11 +14,16 @@ import java.net.URI
   *  - `rename` is COPY + DELETE (CopyObject semantics): never atomic,
   *    succeeds even when the destination exists, silently overwriting —
   *    the reason rename-as-CAS is unsafe off the local FS.
-  *  - `create(p, overwrite = false)` is CONDITIONAL PUT (`If-None-Match`):
-  *    an atomic exists-check-and-create under a store-wide lock, the one
-  *    primitive the CAS commit relies on here. (Real stores arbitrate at
-  *    request commit; the shim arbitrates at create — same mutual
-  *    exclusion, observable earlier.)
+  *  - `create(p, overwrite = false)` is CONDITIONAL PUT (`If-None-Match`),
+  *    the one primitive the CAS commit relies on here. Like a real PUT the
+  *    object appears whole at `close`, which is where the store arbitrates
+  *    (an atomic hard link of the staged bytes; the create already fails
+  *    when the key exists).
+  *
+  * Two test hooks on the companion: [[ObjectStoreFileSystem.renames]]
+  * logs every rename's source and destination, and
+  * [[ObjectStoreFileSystem.failCreate]] makes `create` of a path whose
+  * name matches a regex throw an IOException (a PUT the store rejects).
   *
   * Implemented as a path-translating wrapper over a RawLocalFileSystem
   * (objstore:/x ↔ file:/x), so Spark executors read and write through it
@@ -56,15 +61,37 @@ class ObjectStoreFileSystem extends FileSystem {
       bufferSize: Int,
       replication: Short,
       blockSize: Long,
-      progress: Progressable): FSDataOutputStream =
+      progress: Progressable): FSDataOutputStream = {
+    ObjectStoreFileSystem.failCreate.get.foreach { r =>
+      if (r.findFirstIn(f.getName).isDefined)
+        throw new java.io.IOException(s"injected create fault: $f")
+    }
     if (overwrite)
       local.create(toLocal(f), permission, true, bufferSize, replication, blockSize, progress)
-    else ObjectStoreFileSystem.putLock.synchronized {
-      if (local.exists(toLocal(f)))
-        throw new org.apache.hadoop.fs.FileAlreadyExistsException(
-          s"conditional put lost: $f exists")
-      local.create(toLocal(f), permission, false, bufferSize, replication, blockSize, progress)
+    else {
+      def lost() = new org.apache.hadoop.fs.FileAlreadyExistsException(s"conditional put lost: $f exists")
+      if (local.exists(toLocal(f))) throw lost()
+      val dst    = toLocal(f)
+      val staged = new Path(dst.getParent, s".${f.getName}.${java.util.UUID.randomUUID()}.put")
+      val out = local.create(staged, permission, false, bufferSize, replication, blockSize, progress)
+      val put = new java.io.OutputStream {
+        override def write(b: Int): Unit = out.write(b)
+        override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
+        override def flush(): Unit = out.flush()
+        private var closed = false
+        override def close(): Unit = if (!closed) {
+          closed = true
+          out.close()
+          val (from, to) = (java.nio.file.Paths.get(staged.toUri.getPath),
+            java.nio.file.Paths.get(dst.toUri.getPath))
+          try java.nio.file.Files.createLink(to, from)
+          catch { case _: java.nio.file.FileAlreadyExistsException => throw lost() }
+          finally java.nio.file.Files.deleteIfExists(from)
+        }
+      }
+      new FSDataOutputStream(put, null)
     }
+  }
 
   override def append(f: Path, bufferSize: Int, progress: Progressable): FSDataOutputStream =
     throw new UnsupportedOperationException("object stores do not append")
@@ -73,6 +100,7 @@ class ObjectStoreFileSystem extends FileSystem {
     * destination, handles directories recursively (Spark's committers
     * rename task/job dirs). */
   override def rename(src: Path, dst: Path): Boolean = {
+    ObjectStoreFileSystem.renames.add(src.toUri.getPath -> dst.toUri.getPath)
     val (s, d) = (toLocal(src), toLocal(dst))
     if (!local.exists(s)) return false
     FileUtil.copy(local, s, local, d, /*deleteSource=*/ true, /*overwrite=*/ true, getConf)
@@ -95,7 +123,11 @@ class ObjectStoreFileSystem extends FileSystem {
 }
 
 object ObjectStoreFileSystem {
-  /** Store-wide arbitration for conditional puts (stands in for the
-    * store's own request serialization). */
-  private val putLock = new Object
+  /** Every rename's (source, destination) path, in call order. */
+  val renames = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+
+  /** When set, `create` of a path whose name the regex finds a match in
+    * throws. */
+  val failCreate =
+    new java.util.concurrent.atomic.AtomicReference[Option[scala.util.matching.Regex]](None)
 }

@@ -29,6 +29,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         .map(s => s"metadata/manifests/${s.getPath.getName}").toSet
     listed -- t.snapshots().flatMap(s => s.manifests ++ s.deleteManifests)
   }
+
+  /** Names of the metadata-dir files of the Iceberg-spec table at `loc`
+    * that its committed versions reach: the version JSONs, every
+    * snapshot's manifest list, every manifest those lists carry, and the
+    * version hint. */
+  def reachableSpecMetadata(loc: String): Set[String] = {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    implicit val fmts: Formats = DefaultFormats
+    val mdDir = new org.apache.hadoop.fs.Path(loc, "metadata")
+    val fs    = mdDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val versions = fs.listStatus(mdDir).map(_.getPath)
+      .filter(_.getName.endsWith(".metadata.json"))
+    val lists = versions.flatMap { v =>
+      val in = fs.open(v)
+      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      (JsonMethods.parse(txt) \ "snapshots").extract[List[JObject]]
+        .map(s => (s \ "manifest-list").extract[String])
+    }.toSet
+    val manifests = lists.flatMap { lp =>
+      graft.icelite.IcebergFormat.readAvroForTest(fs, new org.apache.hadoop.fs.Path(lp))
+        .map(_.get("manifest_path").toString)
+    }
+    def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
+    versions.map(_.getName).toSet ++ lists.map(name) ++ manifests.map(name) + "version-hint.text"
+  }
 }
 
 object SparkSpec {

@@ -175,4 +175,18 @@ class StreamingSpec extends SparkSpec {
       }
     }
   }
+
+  test("the checkpoint-manager swap applies only to a file: checkpoint root") {
+    val key    = "spark.sql.streaming.checkpointFileManagerClass"
+    val before = spark.conf.getOption(key)
+    val remote = graft.streaming.StreamQueries.withLocalCkptManager(spark, "s3a://bucket/ckpt") {
+      spark.conf.getOption(key)
+    }
+    assert(remote == before, "a non-file: checkpoint root must keep Spark's checkpoint manager")
+    val local = graft.streaming.StreamQueries.withLocalCkptManager(spark) {
+      spark.conf.getOption(key)
+    }
+    assert(local.exists(_.endsWith(".FileSystemBasedCheckpointFileManager")), local)
+    assert(spark.conf.getOption(key) == before, "the swap was not restored")
+  }
 }

@@ -8,7 +8,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 /** Read/write support for the STANDARD Apache Iceberg table format (v2),
   * from the public spec at iceberg.apache.org/spec — this is the
@@ -20,10 +19,12 @@ import org.json4s.jackson.JsonMethods
   *
   * Reader: `vN.metadata.json` → current snapshot → manifest-list Avro →
   * manifest Avro entries (skipping deleted entries) → data and delete file
-  * plan. Planning cost is O(manifests) on the driver, exactly like
-  * Iceberg's own planner; the scans read through the DSv2 connector
-  * (`IcebergMorV2Table`), which applies deletes, partition values,
-  * defaults and lineage per file inside Spark's parquet reader.
+  * plan. The metadata JSON is read by ONE codec, [[SpecMetadata]]: every
+  * reader here parses it once into that typed value. Planning cost is
+  * O(manifests) on the driver, exactly like Iceberg's own planner; the
+  * scans read through the DSv2 connector (`IcebergMorV2Table`), which
+  * applies deletes, partition values, defaults and lineage per file inside
+  * Spark's parquet reader.
   *
   * Writer: data and delete files go through ONE writer, the library
   * write [[graft.sources.IcebergWrite.writeFiles]] that
@@ -32,70 +33,14 @@ import org.json4s.jackson.JsonMethods
   * and map keys/values included), inline bounds and null counts. The
   * commit is metadata only — per-commit manifest Avro (with spec
   * field-ids in the Avro schema), per-snapshot manifest list, and the
-  * metadata JSON with schemas / partition-specs / snapshot log — which an
-  * independent Iceberg reader can consume (the ic21 gate).
+  * metadata JSON — which an independent Iceberg reader can consume (the
+  * ic21 gate). The [[Writer]]'s JSON-level state is one [[SpecMetadata]]
+  * value; each version it publishes is `SpecMetadata.render` of it, and
+  * [[resumeWriter]] is one parse of the current version.
   */
 object IcebergFormat {
 
   // ------------------------------------------------------------------ schema
-
-  /** Iceberg schema JSON (struct of flat primitives) → Spark StructType. */
-  private[graft] def toSparkType(icebergType: String): DataType = icebergType match {
-    case "boolean"        => BooleanType
-    case "int"            => IntegerType
-    case "long"           => LongType
-    case "float"          => FloatType
-    case "double"         => DoubleType
-    case "string"         => StringType
-    case "date"           => DateType
-    case "timestamp"      => TimestampNTZType
-    case "timestamptz"    => TimestampType
-    case "binary"         => BinaryType
-    case "uuid"           => StringType
-    case t if t.startsWith("decimal(") =>
-      val Array(p, sc) = t.stripPrefix("decimal(").stripSuffix(")").split(',').map(_.trim.toInt)
-      DecimalType(p, sc)
-    case t if t.startsWith("fixed[") => BinaryType
-    case other =>
-      throw new UnsupportedOperationException(s"unknown Iceberg primitive type: $other")
-  }
-
-  /** Full Iceberg type JSON → Spark type: primitives are JSON strings,
-    * struct/list/map are objects (spec "Schemas and Data Types" JSON
-    * serialization). Recursive, so arbitrarily nested compositions —
-    * struct-of-list-of-struct etc. — round-trip. Manifest value bounds
-    * remain top-level-primitive only (the spec keeps bounds per leaf field;
-    * our planner consumes only top-level ids), so nested columns simply
-    * never participate in file skipping — conservative, never wrong. */
-  private[graft] def jsonToSparkType(j: JValue): DataType = {
-    implicit val fmts: Formats = DefaultFormats
-    j match {
-      case JString(s) => toSparkType(s)
-      case o: JObject =>
-        (o \ "type") match {
-          case JString("struct") =>
-            StructType((o \ "fields").extract[List[JObject]].map { f =>
-              StructField(
-                (f \ "name").extract[String],
-                jsonToSparkType(f \ "type"),
-                nullable = !(f \ "required").extractOpt[Boolean].getOrElse(false))
-            })
-          case JString("list") =>
-            ArrayType(
-              jsonToSparkType(o \ "element"),
-              containsNull = !(o \ "element-required").extractOpt[Boolean].getOrElse(false))
-          case JString("map") =>
-            MapType(
-              jsonToSparkType(o \ "key"),
-              jsonToSparkType(o \ "value"),
-              valueContainsNull = !(o \ "value-required").extractOpt[Boolean].getOrElse(false))
-          case other =>
-            throw new UnsupportedOperationException(s"unknown Iceberg composite type: $other")
-        }
-      case other =>
-        throw new UnsupportedOperationException(s"unparseable Iceberg type JSON: $other")
-    }
-  }
 
   /** Path → field id for every NON-top-level position of `schema`, under
     * the legacy positional rule (nested ids continue after the max top
@@ -133,103 +78,6 @@ object IcebergFormat {
     }
     schema.fields.foreach(f => walk(s"${f.name}.", f.dataType))
     out.toMap
-  }
-
-  /** The inverse extraction: path → id from a committed Iceberg schema
-    * JSON (ids are explicit there) — what resumeWriter restores so later
-    * evolutions never renumber a field another snapshot's files stamp. */
-  private[graft] def parseNestedIds(schemaObj: JValue): Map[String, Int] = {
-    implicit val fmts: Formats = DefaultFormats
-    val out = scala.collection.mutable.Map.empty[String, Int]
-    def walkType(prefix: String, t: JValue): Unit = t match {
-      case o: JObject =>
-        (o \ "type") match {
-          case JString("struct") =>
-            (o \ "fields").extract[List[JObject]].foreach { f =>
-              val name = (f \ "name").extract[String]
-              if (prefix.nonEmpty) out(prefix + name) = (f \ "id").extract[Int]
-              walkType(s"$prefix$name.", f \ "type")
-            }
-          case JString("list") =>
-            out(prefix + "element") = (o \ "element-id").extract[Int]
-            walkType(prefix + "element.", o \ "element")
-          case JString("map") =>
-            out(prefix + "key") = (o \ "key-id").extract[Int]
-            out(prefix + "value") = (o \ "value-id").extract[Int]
-            walkType(prefix + "key.", o \ "key")
-            walkType(prefix + "value.", o \ "value")
-          case _ => ()
-        }
-      case _ => ()
-    }
-    walkType("", schemaObj)
-    out.toMap
-  }
-
-  /** Top-level `initial-default` literals of a committed schema JSON:
-    * field id -> raw JSON value (absent fields omitted). */
-  private[graft] def parseDefaultsJson(schemaObj: JValue): Map[Int, JValue] = {
-    implicit val fmts: Formats = DefaultFormats
-    (schemaObj \ "fields") match {
-      case JArray(fs) => fs.flatMap { f =>
-        (f \ "initial-default") match {
-          case JNothing => None
-          case v        => Some((f \ "id").extract[Int] -> v)
-        }
-      }.toMap
-      case _ => Map.empty
-    }
-  }
-
-  private def fromSparkType(dt: DataType): String = dt match {
-    case BooleanType        => "boolean"
-    case IntegerType        => "int"
-    case LongType           => "long"
-    case FloatType          => "float"
-    case DoubleType         => "double"
-    case StringType         => "string"
-    case DateType           => "date"
-    case TimestampNTZType   => "timestamp"
-    case TimestampType      => "timestamptz"
-    case BinaryType         => "binary"
-    case d: DecimalType     => s"decimal(${d.precision}, ${d.scale})"
-    case other =>
-      throw new UnsupportedOperationException(s"cannot write Iceberg primitive for: $other")
-  }
-
-  /** Spark type → Iceberg type JSON (inverse of [[jsonToSparkType]]):
-    * primitives serialize as quoted strings, struct/list/map as spec
-    * objects. Nested field/element/key/value ids resolve through the
-    * tracked path map (see [[deriveNestedIds]]) so they stay STABLE
-    * across schema evolution — a missing path is a bug in the caller's
-    * map maintenance and fails loudly rather than inventing an id. */
-  private def typeJson(dt: DataType, prefix: String, idOf: String => Int): String = dt match {
-    case st: StructType =>
-      val fs = st.fields.map { f =>
-        s"""{"id":${idOf(prefix + f.name)},"name":"${f.name}","required":${!f.nullable},"type":${typeJson(f.dataType, s"$prefix${f.name}.", idOf)}}"""
-      }
-      s"""{"type":"struct","fields":[${fs.mkString(",")}]}"""
-    case at: ArrayType =>
-      s"""{"type":"list","element-id":${idOf(prefix + "element")},"element":${typeJson(at.elementType, prefix + "element.", idOf)},"element-required":${!at.containsNull}}"""
-    case mt: MapType =>
-      s"""{"type":"map","key-id":${idOf(prefix + "key")},"key":${typeJson(mt.keyType, prefix + "key.", idOf)},"value-id":${idOf(prefix + "value")},"value":${typeJson(mt.valueType, prefix + "value.", idOf)},"value-required":${!mt.valueContainsNull}}"""
-    case p => "\"" + fromSparkType(p) + "\""
-  }
-
-  /** (Spark schema, per-field Iceberg ids in schema order) — ids come from
-    * the spec's "id" attribute, NOT position: an evolved table's ids are
-    * sparse, and bounds maps key by id. */
-  private def schemaFields(schemaObj: JValue): (StructType, Seq[Int]) = {
-    implicit val fmts: Formats = DefaultFormats
-    val parsed = (schemaObj \ "fields").extract[List[JObject]].zipWithIndex.map {
-      case (f, i) =>
-        val name     = (f \ "name").extract[String]
-        val required = (f \ "required").extractOpt[Boolean].getOrElse(false)
-        val id       = (f \ "id").extractOpt[Int].getOrElse(i + 1)
-        val tpe = jsonToSparkType(f \ "type")
-        (StructField(name, tpe, nullable = !required), id)
-    }
-    (StructType(parsed.map(_._1)), parsed.map(_._2))
   }
 
   // ------------------------------------------------------------------ reader
@@ -446,69 +294,30 @@ object IcebergFormat {
     }
   }
 
-  /** Temporal/truncate fields of partition spec `specId`, as
-    * (partition field name, source field id, transform). Spec evolution
-    * means manifests written under different specs coexist in one table,
-    * so every lookup here is by the spec id recorded in the manifest
-    * list — files are pruned by the spec that WROTE them, never the
-    * current default. */
-  private def transformSpecFields(md: JValue, specId: Int): Seq[(String, Int, String)] = {
-    implicit val fmts: Formats = DefaultFormats
-    (md \ "partition-specs") match {
-      case JArray(specs) =>
-        specs.find(sp => (sp \ "spec-id").extractOpt[Int].contains(specId)).toSeq.flatMap { sp =>
-          (sp \ "fields").extract[List[JObject]].flatMap { f =>
-            (f \ "transform").extractOpt[String] match {
-              case Some(t @ ("year" | "month" | "day" | "hour")) =>
-                Some(((f \ "name").extract[String], (f \ "source-id").extract[Int], t))
-              case Some(t @ TruncatePat(_)) =>
-                Some(((f \ "name").extract[String], (f \ "source-id").extract[Int], t))
-              case _ => None
-            }
-          }
-        }
-      case _ => Nil
-    }
+  private val BucketTr = raw"bucket\[(\d+)\]".r
+
+  /** Transform kinds a planner selects spec fields by
+    * ([[SpecMetadata.specFields]]): identity values drive column
+    * reconstruction and exact pruning, bucket ids (with their modulus)
+    * prune point lookups, and the order-preserving temporal/truncate
+    * transforms prune ranges. */
+  private val IdentityKind: PartialFunction[String, Unit] = { case "identity" => () }
+  private val BucketKind: PartialFunction[String, Int] = { case BucketTr(n) => n.toInt }
+  private val RangeKind: PartialFunction[String, String] = {
+    case t @ ("year" | "month" | "day" | "hour") => t
+    case t @ TruncatePat(_)                      => t
   }
 
-  /** Bucket-transform fields of partition spec `specId`, as
-    * (partition field name, source field id, modulus). */
-  private def bucketSpecFields(md: JValue, specId: Int): Seq[(String, Int, Int)] = {
-    implicit val fmts: Formats = DefaultFormats
-    val Bucket = raw"bucket\[(\d+)\]".r
-    (md \ "partition-specs") match {
-      case JArray(specs) =>
-        specs.find(sp => (sp \ "spec-id").extractOpt[Int].contains(specId)).toSeq.flatMap { sp =>
-          (sp \ "fields").extract[List[JObject]].flatMap { f =>
-            (f \ "transform").extractOpt[String] match {
-              case Some(Bucket(n)) =>
-                Some(((f \ "name").extract[String], (f \ "source-id").extract[Int], n.toInt))
-              case _ => None
-            }
-          }
-        }
-      case _ => Nil
-    }
+  /** The metadata file at `metadataPath`, parsed, with its file system —
+    * the one read behind every reader below. */
+  private def open(spark: SparkSession, metadataPath: String): (FileSystem, SpecMetadata) = {
+    val p  = new Path(metadataPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (fs, SpecMetadata.read(fs, p))
   }
 
-  /** Identity-transform fields of partition spec `specId`, as
-    * (partition field name, source field id). Other transforms are
-    * handled separately (bucket) or conservatively ignored (truncate,
-    * day, ...): derived values drive neither column reconstruction nor
-    * range pruning — those files stay un-pruned. */
-  private def identitySpecFields(md: JValue, specId: Int): Seq[(String, Int)] = {
-    implicit val fmts: Formats = DefaultFormats
-    (md \ "partition-specs") match {
-      case JArray(specs) =>
-        specs.find(sp => (sp \ "spec-id").extractOpt[Int].contains(specId)).toSeq.flatMap { sp =>
-          (sp \ "fields").extract[List[JObject]].collect {
-            case f if (f \ "transform").extractOpt[String].contains("identity") =>
-              ((f \ "name").extract[String], (f \ "source-id").extract[Int])
-          }
-        }
-      case _ => Nil
-    }
-  }
+  private def load(spark: SparkSession, metadataPath: String): SpecMetadata =
+    open(spark, metadataPath)._2
 
   /** Stage-1 planning: ONE metadata-JSON read, no manifest (or even
     * manifest-list) IO. Gives a scan the schema plus the identity
@@ -516,40 +325,18 @@ object IcebergFormat {
     * pushed filters can become [[ManifestHandle]] keep predicates before
     * [[plan]] touches any manifest. */
   private[graft] def planHeader(spark: SparkSession, metadataPath: String): PlanHeader = {
-    implicit val fmts: Formats = DefaultFormats
-    val mPath = new Path(metadataPath)
-    val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
-    val schemaObj = (md \ "schemas") match {
-      case JArray(ss) =>
-        val cur = (md \ "current-schema-id").extractOpt[Int].getOrElse(0)
-        ss.find(s => (s \ "schema-id").extractOpt[Int].contains(cur))
-          .orElse(ss.headOption)
-          .getOrElse(throw new IllegalArgumentException("no schema in metadata"))
-      case _ => md \ "schema"
-    }
-    val (sparkSchema, fieldIds) = schemaFields(schemaObj)
-    val axes: Map[Int, Seq[(String, Int, String)]] = (md \ "partition-specs") match {
-      case JArray(specsJ) =>
-        specsJ.map { sp =>
-          val sid = (sp \ "spec-id").extractOpt[Int].getOrElse(0)
-          val fields = (sp \ "fields").extract[List[JObject]]
-          sid -> fields.zipWithIndex.flatMap { case (f, i) =>
-            val tr  = (f \ "transform").extractOpt[String].getOrElse("")
-            val idx = fieldIds.indexOf((f \ "source-id").extract[Int])
-            if (idx >= 0 && tr.nonEmpty && tr != "void")
-              Some((sparkSchema.fieldNames(idx), i, tr))
-            else None
-          }
-        }.toMap
-      case _ => Map.empty
-    }
-    PlanHeader(sparkSchema, fieldIds, axes,
-      (md \ "properties" \ "graft.read-by-id").extractOpt[String].contains("true"),
-      parseNestedIds(schemaObj),
-      parseDefaultsJson(schemaObj).map { case (id, v) =>
-        id -> JsonMethods.compact(JsonMethods.render(v))
-      })
+    val md     = load(spark, metadataPath)
+    val schema = md.currentSchema
+    val axes = md.specs.map { sp =>
+      sp.specId -> sp.fields.zipWithIndex.flatMap { case (f, i) =>
+        val idx = schema.fieldIds.indexOf(f.sourceId)
+        if (idx >= 0 && f.transform.nonEmpty && f.transform != "void")
+          Some((schema.struct.fieldNames(idx), i, f.transform))
+        else None
+      }
+    }.toMap
+    PlanHeader(schema.struct, schema.fieldIds, axes, md.readById, schema.nestedIds,
+      schema.defaultsJson)
   }
 
   /** `delete_files`-style metadata table for a STANDARD-format table:
@@ -603,18 +390,8 @@ object IcebergFormat {
 
   /** Parsed `partition-statistics` entries of the metadata file. */
   def partitionStatisticsEntries(
-      spark: SparkSession, metadataPath: String): Seq[PartitionStatsEntry] = {
-    implicit val fmts: Formats = DefaultFormats
-    val mPath = new Path(metadataPath)
-    val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
-    (md \ "partition-statistics").extractOpt[List[JObject]].getOrElse(Nil).map { e =>
-      PartitionStatsEntry(
-        (e \ "snapshot-id").extract[Long],
-        (e \ "statistics-path").extract[String],
-        (e \ "file-size-in-bytes").extract[Long])
-    }
-  }
+      spark: SparkSession, metadataPath: String): Seq[PartitionStatsEntry] =
+    load(spark, metadataPath).partitionStatistics
 
   /** `snapshots` metadata table for a NATIVE table: one row per snapshot
     * from the metadata JSON — id, parent, sequence number, commit
@@ -623,24 +400,10 @@ object IcebergFormat {
     * table size. */
   def snapshotsTable(spark: SparkSession, metadataPath: String): DataFrame = {
     import spark.implicits._
-    implicit val fmts: Formats = DefaultFormats
-    val mPath = new Path(metadataPath)
-    val fsys  = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(MetadataFiles.read(fsys, mPath))
-    val cur   = (md \ "current-snapshot-id").extractOpt[Long].getOrElse(-1L)
-    val rows = ((md \ "snapshots") match {
-      case JArray(ss) => ss
-      case _          => Nil
-    }).map { s =>
-      val id = (s \ "snapshot-id").extract[Long]
-      (id,
-        (s \ "parent-snapshot-id").extractOpt[Long],
-        (s \ "sequence-number").extractOpt[Long].getOrElse(0L),
-        (s \ "timestamp-ms").extractOpt[Long].getOrElse(0L),
-        (s \ "summary" \ "operation").extractOpt[String].getOrElse("append"),
-        (s \ "schema-id").extractOpt[Int].getOrElse(0),
-        (s \ "manifest-list").extractOpt[String].getOrElse(""),
-        id == cur)
+    val md = load(spark, metadataPath)
+    val rows = md.snapshots.map { s =>
+      (s.snapshotId, s.parentId, s.sequenceNumber, s.timestampMs, s.operation, s.schemaId,
+        s.manifestList.getOrElse(""), md.currentSnapshotId.contains(s.snapshotId))
     }
     rows.toDF("snapshot_id", "parent_id", "sequence_number", "committed_at_ms",
       "operation", "schema_id", "manifest_list", "is_current")
@@ -677,16 +440,8 @@ object IcebergFormat {
     * planning reads. One metadata read + one manifest-LIST avro read. */
   def manifestsTable(spark: SparkSession, metadataPath: String): DataFrame = {
     import spark.implicits._
-    implicit val fmts: Formats = DefaultFormats
-    val mPath = new Path(metadataPath)
-    val fsys  = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(MetadataFiles.read(fsys, mPath))
-    val cur   = (md \ "current-snapshot-id").extractOpt[Long].getOrElse(-1L)
-    val listPath = ((md \ "snapshots") match {
-      case JArray(ss) => ss
-      case _          => Nil
-    }).find(s => (s \ "snapshot-id").extract[Long] == cur)
-      .flatMap(s => (s \ "manifest-list").extractOpt[String])
+    val (fsys, md) = open(spark, metadataPath)
+    val listPath = md.currentSnapshot.flatMap(_.manifestList)
     val rows = listPath.toSeq.flatMap(lp => readAvro(fsys, new Path(lp))).map { r =>
       (r.get("manifest_path").toString,
         r.get("manifest_length").asInstanceOf[Long],
@@ -755,100 +510,59 @@ object IcebergFormat {
     * would prune away the restated rows. */
   private[graft] def defaultSpecIdentityCols(
       spark: SparkSession, metadataPath: String): Seq[(String, String)] = {
-    implicit val fmts: Formats = DefaultFormats
-    val mPath = new Path(metadataPath)
-    val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
-    val schemaObj = (md \ "schemas") match {
-      case JArray(ss) =>
-        val cur = (md \ "current-schema-id").extractOpt[Int].getOrElse(0)
-        ss.find(s => (s \ "schema-id").extractOpt[Int].contains(cur))
-          .orElse(ss.headOption).getOrElse(return Nil)
-      case _ => md \ "schema"
-    }
-    val (sparkSchema, fieldIds) = schemaFields(schemaObj)
-    val defaultSpecId = (md \ "default-spec-id").extractOpt[Int].getOrElse(0)
-    val fields = (md \ "partition-specs") match {
-      case JArray(specsJ) =>
-        specsJ.find(sp => (sp \ "spec-id").extractOpt[Int].getOrElse(0) == defaultSpecId)
-          .map(sp => (sp \ "fields").extract[List[JObject]]).getOrElse(Nil)
-      case _ => Nil
-    }
+    val md     = load(spark, metadataPath)
+    val schema = md.currentSchema
+    val fields = md.spec(md.defaultSpecId).map(_.fields).getOrElse(Nil)
     if (fields.isEmpty) return Nil
-    val cols = fields.map { f =>
-      if ((f \ "transform").extractOpt[String].getOrElse("") != "identity") return Nil
-      val idx = fieldIds.indexOf((f \ "source-id").extract[Int])
-      if (idx < 0) return Nil
-      val dt = sparkSchema.fields(idx).dataType
-      val stampable = dt match {
-        case org.apache.spark.sql.types.StringType | org.apache.spark.sql.types.IntegerType |
-            org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.BooleanType |
-            org.apache.spark.sql.types.DateType => true
-        case _ => false
+    fields.map { f =>
+      val idx = schema.fieldIds.indexOf(f.sourceId)
+      if (f.transform != "identity" || idx < 0) return Nil
+      schema.struct.fields(idx).dataType match {
+        case StringType | IntegerType | LongType | BooleanType | DateType => ()
+        case _ => return Nil
       }
-      if (!stampable) return Nil
-      val fieldName = (f \ "name").extractOpt[String].getOrElse(sparkSchema.fieldNames(idx))
-      (fieldName, sparkSchema.fieldNames(idx))
+      (f.name, schema.struct.fieldNames(idx))
     }
-    cols
   }
 
   private[graft] def plan(spark: SparkSession, metadataPath: String,
       snapshotId: Option[Long] = None,
       keepManifest: ManifestHandle => Boolean = _ => true): TablePlan = {
-    implicit val fmts: Formats = DefaultFormats
-    val mPath = new Path(metadataPath)
-    val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
+    val (fs, md) = open(spark, metadataPath)
+    require(md.formatVersion == 1 || md.formatVersion == 2,
+      s"unsupported format-version ${md.formatVersion}")
+    val location = md.location
+    val schema   = md.currentSchema
+    val (sparkSchema, fieldIds, nestedIds) = (schema.struct, schema.fieldIds, schema.nestedIds)
+    val readById = md.readById
 
-    val formatVersion = (md \ "format-version").extract[Int]
-    require(formatVersion == 1 || formatVersion == 2, s"unsupported format-version $formatVersion")
-    val location = (md \ "location").extract[String]
-
-    // v2 keeps a schemas list + current-schema-id; v1 may have only "schema"
-    val schemaObj = (md \ "schemas") match {
-      case JArray(ss) =>
-        val cur = (md \ "current-schema-id").extractOpt[Int].getOrElse(0)
-        ss.find(s => (s \ "schema-id").extractOpt[Int].contains(cur))
-          .orElse(ss.headOption)
-          .getOrElse(throw new IllegalArgumentException("no schema in metadata"))
-      case _ => md \ "schema"
-    }
-    val (sparkSchema, fieldIds) = schemaFields(schemaObj)
-    val nestedIds = parseNestedIds(schemaObj)
-    val readById =
-      (md \ "properties" \ "graft.read-by-id").extractOpt[String].contains("true")
-
-    val defaultSpecId = (md \ "default-spec-id").extractOpt[Int].getOrElse(0)
     // per-spec field lookups, memoized — an evolved table's manifests name
     // several specs, and each manifest prunes by its own
-    val specCache = scala.collection.mutable.Map.empty[Int, (Seq[(String, Int)], Seq[(String, Int, Int)], Seq[(String, Int, String)])]
+    val specCache = scala.collection.mutable.Map.empty[Int, (Seq[(String, Int, Unit)], Seq[(String, Int, Int)], Seq[(String, Int, String)])]
     def specFieldsOf(specId: Int) = specCache.getOrElseUpdate(specId,
-      (identitySpecFields(md, specId), bucketSpecFields(md, specId), transformSpecFields(md, specId)))
+      (md.specFields(specId)(IdentityKind), md.specFields(specId)(BucketKind),
+        md.specFields(specId)(RangeKind)))
 
     // time travel: an explicit snapshot id overrides the current pointer
-    val currentId = snapshotId.getOrElse(
-      (md \ "current-snapshot-id").extractOpt[Long].getOrElse(-1L))
+    val currentId = snapshotId.getOrElse(md.currentSnapshotId.getOrElse(-1L))
     if (currentId < 0)
       return TablePlan(sparkSchema, fieldIds, Nil, Nil, readById, nestedIds)
-    val snapshot = (md \ "snapshots").extract[List[JObject]]
-      .find(s => (s \ "snapshot-id").extract[Long] == currentId)
+    val snapshot = md.snapshot(currentId)
       .getOrElse(throw new NoSuchElementException(s"snapshot $currentId not in metadata"))
 
     // v2: snapshot → manifest-list avro (data AND delete manifests, each
     // carrying its sequence number AND its partition summaries — spec
     // field 507); v1 fallback: inline "manifests"
-    val handles: Seq[ManifestHandle] = (snapshot \ "manifest-list") match {
-      case JString(listPath) =>
+    val handles: Seq[ManifestHandle] = snapshot.manifestList match {
+      case Some(listPath) =>
         readAvro(fs, resolve(location, listPath)).map { rec =>
           val seq = Option(rec.get("sequence_number")).map(_.asInstanceOf[Long]).getOrElse(0L)
-          val sid = Option(rec.get("partition_spec_id")).map(_.asInstanceOf[Int]).getOrElse(defaultSpecId)
+          val sid = Option(rec.get("partition_spec_id")).map(_.asInstanceOf[Int]).getOrElse(md.defaultSpecId)
           val content = Option(rec.get("content")).map(_.asInstanceOf[Int]).getOrElse(0)
           ManifestHandle(rec.get("manifest_path").toString, seq, sid, content,
             parseSummaries(rec))
         }
-      case _ => (snapshot \ "manifests").extract[List[String]]
-        .map(ManifestHandle(_, 0L, defaultSpecId, 0, None))
+      case None => snapshot.manifests.map(ManifestHandle(_, 0L, md.defaultSpecId, 0, None))
     }
 
     // manifest-LIST pruning: a data manifest whose partition summaries
@@ -888,7 +602,7 @@ object IcebergFormat {
               // (matched by partition field name, keyed by source field id)
               val pvals: Map[Int, Any] = df.get("partition") match {
                 case r: GenericRecord =>
-                  identityFields.flatMap { case (pname, sid) =>
+                  identityFields.flatMap { case (pname, sid, _) =>
                     Option(r.getSchema.getField(pname))
                       .flatMap(_ => Option(r.get(pname)))
                       .map {
@@ -1065,16 +779,8 @@ object IcebergFormat {
     * `snapshots` array records them — real Iceberg ids are random longs,
     * so order must come from the log, never from id magnitude). The
     * streaming source's offset space. */
-  def snapshotLog(spark: SparkSession, metadataPath: String): Seq[Long] = {
-    implicit val fmts: Formats = DefaultFormats
-    val mPath = new Path(metadataPath)
-    val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
-    (md \ "snapshots") match {
-      case JArray(ss) => ss.map(s => (s \ "snapshot-id").extract[Long])
-      case _          => Nil
-    }
-  }
+  def snapshotLog(spark: SparkSession, metadataPath: String): Seq[Long] =
+    load(spark, metadataPath).snapshots.map(_.snapshotId)
 
   /** One blob's metadata as the TABLE metadata records it (spec
     * `statistics[].blob-metadata`): type + addressed field ids +
@@ -1092,48 +798,19 @@ object IcebergFormat {
 
   /** Parsed `statistics` entries of the metadata file (empty when the
     * table was never analyzed). */
-  def statisticsEntries(spark: SparkSession, metadataPath: String): Seq[StatsEntry] = {
-    implicit val fmts: Formats = DefaultFormats
-    val mPath = new Path(metadataPath)
-    val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
-    (md \ "statistics").extractOpt[List[JObject]].getOrElse(Nil).map { e =>
-      StatsEntry(
-        (e \ "snapshot-id").extract[Long],
-        (e \ "statistics-path").extract[String],
-        (e \ "file-size-in-bytes").extract[Long],
-        (e \ "file-footer-size-in-bytes").extract[Long],
-        (e \ "blob-metadata").extractOpt[List[JObject]].getOrElse(Nil).map { b =>
-          StatsBlobMeta(
-            (b \ "type").extract[String],
-            (b \ "snapshot-id").extract[Long],
-            (b \ "sequence-number").extract[Long],
-            (b \ "fields").extract[List[Int]],
-            (b \ "properties").extractOpt[Map[String, String]].getOrElse(Map.empty))
-        })
-    }
-  }
+  def statisticsEntries(spark: SparkSession, metadataPath: String): Seq[StatsEntry] =
+    load(spark, metadataPath).statistics
 
   /** Free-form table properties of the metadata file (spec `properties`
     * map) — how derived artifacts (materialized views, clustering
     * declarations) record their provenance on the table itself. */
-  def tableProperties(spark: SparkSession, metadataPath: String): Map[String, String] = {
-    implicit val fmts: Formats = DefaultFormats
-    val mPath = new Path(metadataPath)
-    val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
-    (md \ "properties").extractOpt[Map[String, String]].getOrElse(Map.empty)
-  }
+  def tableProperties(spark: SparkSession, metadataPath: String): Map[String, String] =
+    load(spark, metadataPath).properties
 
   /** The metadata file's `current-snapshot-id` pointer (None before the
     * first commit). */
-  def currentSnapshotId(spark: SparkSession, metadataPath: String): Option[Long] = {
-    implicit val fmts: Formats = DefaultFormats
-    val mPath = new Path(metadataPath)
-    val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
-    (md \ "current-snapshot-id").extractOpt[Long].filter(_ >= 0)
-  }
+  def currentSnapshotId(spark: SparkSession, metadataPath: String): Option[Long] =
+    load(spark, metadataPath).currentSnapshotId
 
   /** Absolute paths of data files ADDED between two snapshots of the log
     * (`fromId` None = table genesis) — the Iceberg streaming-read window.
@@ -1320,23 +997,16 @@ object IcebergFormat {
     * (e.g. rewrite_manifests collapsing O(commits) manifests to O(specs)). */
   private[graft] def manifestListPaths(
       spark: SparkSession, metadataPath: String): Seq[(String, Int)] = {
-    implicit val fmts: Formats = DefaultFormats
-    val mPath = new Path(metadataPath)
-    val fs    = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md    = JsonMethods.parse(MetadataFiles.read(fs, mPath))
-    val location  = (md \ "location").extract[String]
-    val currentId = (md \ "current-snapshot-id").extractOpt[Long].getOrElse(-1L)
-    if (currentId < 0) return Nil
-    val snapshot = (md \ "snapshots").extract[List[JObject]]
-      .find(s => (s \ "snapshot-id").extract[Long] == currentId)
-      .getOrElse(return Nil)
-    (snapshot \ "manifest-list") match {
-      case JString(listPath) =>
-        readAvro(fs, resolve(location, listPath)).map { rec =>
-          (rec.get("manifest_path").toString,
-            Option(rec.get("content")).map(_.asInstanceOf[Int]).getOrElse(0))
-        }
-      case _ => (snapshot \ "manifests").extract[List[String]].map((_, 0))
+    val (fs, md) = open(spark, metadataPath)
+    md.currentSnapshot.toSeq.flatMap { snapshot =>
+      snapshot.manifestList match {
+        case Some(listPath) =>
+          readAvro(fs, resolve(md.location, listPath)).map { rec =>
+            (rec.get("manifest_path").toString,
+              Option(rec.get("content")).map(_.asInstanceOf[Int]).getOrElse(0))
+          }
+        case None => snapshot.manifests.map((_, 0))
+      }
     }
   }
 
@@ -1591,56 +1261,23 @@ object IcebergFormat {
         ]}}]}
     ]}""".replaceAll("\n\\s*", ""))
 
-  /** Iceberg schema JSON for a flat Spark schema. Top-level ids default to
-    * the positional 1..n layout this writer historically produced; a
-    * restored externally-written table passes its REAL (possibly sparse —
-    * dropped-column history) ids and they re-emit verbatim. Nested ids
-    * continue after the max top-level id. */
-  private def icebergSchemaJson(
-      schema: StructType, schemaId: Int = 0, topIds: Seq[Int] = Nil,
-      nestedIds: Map[String, Int] = Map.empty,
-      defaults: Map[Int, String] = Map.empty): String = {
-    val ids = if (topIds.nonEmpty) topIds else 1 to schema.fields.length
-    require(ids.length == schema.fields.length,
-      s"field id count ${ids.length} != column count ${schema.fields.length}")
-    // nested ids come from the tracked map (stable across evolution); a
-    // caller without one gets the legacy positional derivation — which is
-    // IDENTICAL for the fresh-table case the default serves
-    val nested = if (nestedIds.nonEmpty) nestedIds else deriveNestedIds(schema, ids)
-    val idOf = (p: String) => nested.getOrElse(p,
-      throw new IllegalStateException(s"no tracked field id for nested path $p"))
-    val fields = schema.fields.zipWithIndex.map { case (f, i) =>
-      // v3 default values: pre-evolution files read `initial-default`
-      // instead of null; `write-default` documents the insert-side value
-      val dflt = defaults.get(ids(i))
-        .map(j => s""","initial-default":$j,"write-default":$j""").getOrElse("")
-      s"""{"id":${ids(i)},"name":"${f.name}","required":${!f.nullable},"type":${typeJson(f.dataType, s"${f.name}.", idOf)}$dflt}"""
-    }
-    s"""{"type":"struct","schema-id":$schemaId,"fields":[${fields.mkString(",")}]}"""
-  }
-
   /** Iceberg JSON single-value literal for a default (spec Appendix D
     * JSON serialization): numbers plain, strings quoted, date as its ISO
     * string. Primitives only — what ADD COLUMN ... DEFAULT supports. */
-  private[icelite] def defaultJson(dt: DataType, v: Any): String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    }
-    (dt, v) match {
-      case (BooleanType, b: Boolean)            => b.toString
-      case (IntegerType, n: Int)                => n.toString
-      case (LongType, n: Long)                  => n.toString
-      case (LongType, n: Int)                   => n.toString
-      case (FloatType, n: Float)                => n.toString
-      case (DoubleType, n: Double)              => n.toString
-      case (StringType, s: String)              => "\"" + esc(s) + "\""
-      case (DateType, d: java.sql.Date)         => "\"" + d.toLocalDate.toString + "\""
-      case (DateType, d: java.time.LocalDate)   => "\"" + d.toString + "\""
-      case (t, x) => throw new IllegalArgumentException(
-        s"unsupported DEFAULT ${Option(x).map(_.getClass.getSimpleName).getOrElse("null")} " +
-          s"for ${t.catalogString} (primitive defaults only)")
-    }
+  private[icelite] def defaultJson(dt: DataType, v: Any): JValue = (dt, v) match {
+    case (BooleanType, b: Boolean)          => JBool(b)
+    case (IntegerType, n: Int)              => JInt(n)
+    case (LongType, n: Long)                => JInt(n)
+    case (LongType, n: Int)                 => JInt(n)
+    // the float's own shortest decimal, not that of its widened double
+    case (FloatType, n: Float)              => JDouble(n.toString.toDouble)
+    case (DoubleType, n: Double)            => JDouble(n)
+    case (StringType, s: String)            => JString(s)
+    case (DateType, d: java.sql.Date)       => JString(d.toLocalDate.toString)
+    case (DateType, d: java.time.LocalDate) => JString(d.toString)
+    case (t, x) => throw new IllegalArgumentException(
+      s"unsupported DEFAULT ${Option(x).map(_.getClass.getSimpleName).getOrElse("null")} " +
+        s"for ${t.catalogString} (primitive defaults only)")
   }
 
   /** Decode a field's `initial-default` JSON back to the Scala value a
@@ -1793,104 +1430,154 @@ object IcebergFormat {
       throw new UnsupportedOperationException(s"identity partition on $other not supported")
   }
 
-  final class Writer(
+  /** The Avro type of spec field `f`'s values in a manifest's partition
+    * record: int for bucket ids and temporal transforms, the source
+    * column's own type (resolved in `schema` by its real field id) for
+    * identity and truncate. */
+  private def partitionAvroType(f: SpecMetadata.SpecField, schema: SpecMetadata.Schema): String = {
+    def sourceType: DataType = {
+      val idx = schema.fieldIds.indexOf(f.sourceId)
+      require(idx >= 0, s"partition source id ${f.sourceId} not in the current schema")
+      schema.struct.fields(idx).dataType
+    }
+    f.transform match {
+      case "identity" | TruncatePat(_)                     => avroPrimitive(sourceType)
+      case "year" | "month" | "day" | "hour" | BucketTr(_) => "int"
+      case other =>
+        throw new UnsupportedOperationException(s"unsupported partition transform $other")
+    }
+  }
+
+  private val BucketPat   = raw"bucket\((\d+)\s*,\s*(\w+)\)".r
+  private val TemporalPat = raw"(years|months|days|hours)\((\w+)\)".r
+  private val TruncPat    = raw"truncate\((\d+)\s*,\s*(\w+)\)".r
+
+  /** Partition fields from `partitionBy` entries: a bare column name is
+    * an identity transform; "bucket(N, col)" is the spec bucket[N]
+    * transform (partition field named col_bucket, int-typed bucket id);
+    * "years(col)"/"months(col)"/"days(col)"/"hours(col)" are the spec
+    * temporal transforms (int, epoch-relative); "truncate(W, col)" is
+    * truncate[W] (source-typed width-floor). Field ids count up from
+    * `baseFieldId`; source ids are the columns' REAL field ids in
+    * `schema` (sparse after drops). */
+  private def parseSpec(pb: Seq[String], schema: SpecMetadata.Schema,
+      baseFieldId: Int): Seq[SpecMetadata.SpecField] = {
+    val fields = pb.zipWithIndex.map { case (c, i) =>
+      def colIdx(colName: String): Int = {
+        val idx = schema.struct.fieldNames.indexOf(colName)
+        require(idx >= 0, s"partition column $colName not in schema")
+        idx
+      }
+      def field(colName: String, name: String, transform: String) =
+        SpecMetadata.SpecField(name, schema.fieldIds(colIdx(colName)), baseFieldId + i, transform)
+      c match {
+        case BucketPat(n, colName) => field(colName, s"${colName}_bucket", s"bucket[$n]")
+        case TemporalPat(unit, colName) =>
+          val tr = unit.stripSuffix("s") // spec transform names are singular
+          field(colName, s"${colName}_$tr", tr)
+        case TruncPat(w, colName) =>
+          val srcType = schema.struct.fields(colIdx(colName)).dataType
+          require(Seq(IntegerType, LongType, StringType).contains(srcType),
+            s"truncate[$w] unsupported on $srcType")
+          field(colName, s"${colName}_trunc", s"truncate[$w]")
+        case colName => field(colName, colName, "identity")
+      }
+    }
+    fields.foreach(partitionAvroType(_, schema)) // refuse unsupported source types now
+    fields
+  }
+
+  private val ts0 = 1704067200000L // fixed epoch (2024-01-01) — deterministic fixtures
+
+  /** A new table's metadata before its first commit: one schema (field
+    * ids `topLevelFieldIds`, else positional 1..n; nested ids derived
+    * past them) and one partition spec from `partitionBy`. */
+  private def freshMetadata(location: String, schema: StructType, partitionBy: Seq[String],
+      tableUuid: String, topLevelFieldIds: Seq[Int]): SpecMetadata = {
+    val ids = if (topLevelFieldIds.nonEmpty) topLevelFieldIds else 1 to schema.fields.length
+    val s0  = SpecMetadata.Schema(0, schema, ids, deriveNestedIds(schema, ids))
+    SpecMetadata(formatVersion = 2, tableUuid = tableUuid, location = location,
+      lastSequenceNumber = 0L, lastUpdatedMs = ts0,
+      lastColumnId = (ids ++ s0.nestedIds.values :+ 0).max, nextRowId = 0L,
+      schemas = Seq(s0), currentSchemaId = 0,
+      specs = Seq(SpecMetadata.PartitionSpec(0, parseSpec(partitionBy, s0, 1000))),
+      defaultSpecId = 0, snapshots = Nil, currentSnapshotId = None,
+      sortOrders = Nil, defaultSortOrderId = 0, properties = Map.empty,
+      statistics = Nil, partitionStatistics = Nil)
+  }
+
+  /** A manifest as the current snapshot's manifest list records it — what
+    * the next snapshot carries forward. */
+  private[icelite] final case class ManifestRec(path: String, len: Long, addedBy: Long,
+      seq: Long, content: Int, nFiles: Int, nRows: Long, specId: Int,
+      existing: Boolean = false, summaries: Option[Seq[FieldSummary]] = None)
+
+  /** One session over a spec table's lineage. Its whole JSON-level state
+    * is one [[SpecMetadata]] value, `md` — schemas, specs, snapshots, sort
+    * orders, properties, statistics and the row-id allocator; every
+    * metadata version it publishes is `SpecMetadata.render(md)`. Next to
+    * it sit the current snapshot's manifests (Avro-level) and the latest
+    * metadata version this session knows. Writer-born and resumed
+    * histories keep schema and spec ids equal to their positions, the
+    * current schema last. */
+  final class Writer private[IcebergFormat] (
       spark: SparkSession,
       val location: String,
-      schema: StructType,
-      partitionBy: Seq[String] = Nil, // identity-transform partition columns
-      tableUuid: String = "11111111-2222-3333-4444-555555555555",
-      // in-place REPLACE support: number new metadata JSONs above the old
-      // table's versions and tag manifest/list names so nothing the old
-      // snapshot references is overwritten before the new version is
-      // published — the superseded files are deleted only AFTER it is live
-      startVersion: Int = 0,
-      fileTag: String = "",
-      // REAL top-level field ids (possibly SPARSE — a dropped-column
-      // history leaves gaps); empty = the positional 1..n layout this
-      // writer produces for fresh tables
-      topLevelFieldIds: Seq[Int] = Nil) {
+      private var md: SpecMetadata,
+      private var manifests: List[ManifestRec],
+      private var version: Int,
+      fileTag: String) {
+
+    def this(
+        spark: SparkSession,
+        location: String,
+        schema: StructType,
+        partitionBy: Seq[String] = Nil, // see parseSpec
+        tableUuid: String = "11111111-2222-3333-4444-555555555555",
+        // in-place REPLACE support: number new metadata JSONs above the old
+        // table's versions and tag manifest/list names so nothing the old
+        // snapshot references is overwritten before the new version is
+        // published — the superseded files are deleted only AFTER it is live
+        startVersion: Int = 0,
+        fileTag: String = "",
+        // REAL top-level field ids (possibly SPARSE — a dropped-column
+        // history leaves gaps); empty = the positional 1..n layout this
+        // writer produces for fresh tables
+        topLevelFieldIds: Seq[Int] = Nil) =
+      this(spark, location,
+        freshMetadata(location, schema, partitionBy, tableUuid, topLevelFieldIds),
+        Nil, startVersion, fileTag)
 
     private val tagSuffix = if (fileTag.isEmpty) "" else s"-$fileTag"
 
     private val fs = new Path(location).getFileSystem(spark.sparkContext.hadoopConfiguration)
     private val metadataDir = new Path(location, "metadata")
-    private val ts0 = 1704067200000L // fixed epoch (2024-01-01) — deterministic fixtures
 
-    // partition fields from `partitionBy` entries: a bare column name is
-    // an identity transform; "bucket(N, col)" is the spec bucket[N]
-    // transform (partition field named col_bucket, int-typed bucket id);
-    // "years(col)"/"months(col)"/"days(col)"/"hours(col)" are the spec
-    // temporal transforms (int, epoch-relative); "truncate(W, col)" is
-    // truncate[W] (source-typed width-floor). Spec partition field-ids
-    // start at 1000.
-    private case class SpecField(
-        name: String, sourceId: Int, fieldId: Int, transform: String, avroType: String)
-    private val BucketPat   = raw"bucket\((\d+)\s*,\s*(\w+)\)".r
-    private val TemporalPat = raw"(years|months|days|hours)\((\w+)\)".r
-    private val TruncPat    = raw"truncate\((\d+)\s*,\s*(\w+)\)".r
-    private def parseSpec(pb: Seq[String], against: StructType, againstIds: Seq[Int],
-        baseFieldId: Int): Seq[SpecField] =
-      pb.zipWithIndex.map { case (c, i) =>
-        def colIdx(colName: String): Int = {
-          val idx = against.fieldNames.indexOf(colName)
-          require(idx >= 0, s"partition column $colName not in schema")
-          idx
-        }
-        // source-id = the column's REAL field id (sparse after drops)
-        def src(colName: String): Int = againstIds(colIdx(colName))
-        c match {
-          case BucketPat(n, colName) =>
-            SpecField(s"${colName}_bucket", src(colName), baseFieldId + i, s"bucket[$n]", "int")
-          case TemporalPat(unit, colName) =>
-            val tr = unit.stripSuffix("s") // spec transform names are singular
-            SpecField(s"${colName}_$tr", src(colName), baseFieldId + i, tr, "int")
-          case TruncPat(w, colName) =>
-            val srcType = against.fields(colIdx(colName)).dataType
-            require(Seq(IntegerType, LongType, StringType).contains(srcType),
-              s"truncate[$w] unsupported on $srcType")
-            SpecField(s"${colName}_trunc", src(colName), baseFieldId + i, s"truncate[$w]",
-              avroPrimitive(srcType))
-          case colName =>
-            SpecField(colName, src(colName), baseFieldId + i, "identity",
-              avroPrimitive(against.fields(colIdx(colName)).dataType))
-        }
-      }
-    // per-schema top-level field ids, index = schema-id (positional 1..n
-    // for writer-born tables; verbatim — possibly sparse — for restored
-    // externally-written ones). MUST initialize before `specs`: parseSpec
-    // resolves source ids through it.
-    private var allFieldIds: List[Seq[Int]] = List(
-      if (topLevelFieldIds.nonEmpty) topLevelFieldIds else 1 to schema.fields.length)
-    private def currentFieldIds: Seq[Int] = allFieldIds.last
-    // per-schema NESTED field ids (path -> id, index = schema-id): the
-    // source of truth keeping nested ids STABLE across evolution — the
-    // positional re-derivation this replaces renumbered every nested
-    // field whenever the schema changed shape (see deriveNestedIds).
-    private var allNestedIds: List[Map[String, Int]] =
-      List(deriveNestedIds(schema, allFieldIds.head))
-    private def currentNestedIds: Map[String, Int] = allNestedIds.last
-    // highest field id EVER allocated, at any nesting level — dropped ids
-    // retire forever (allocating from the live max would re-issue them
-    // and resurrect dropped values through read-by-id)
-    private def maxFieldIdEver: Int =
-      (allFieldIds.flatten ++ allNestedIds.flatMap(_.values) ++ Seq(0)).max
-    // all partition specs ever active, index = spec-id; commits use the
-    // DEFAULT spec (tracked separately — commitDelta may append an
-    // auxiliary unpartitioned spec past it without changing the default)
-    private var specs: List[Seq[SpecField]] =
-      List(parseSpec(partitionBy, schema, allFieldIds.head, 1000))
-    private var defaultSpec: Int = specs.size - 1
-    private def defaultSpecId: Int = defaultSpec
-    private def currentSpecFields: Seq[SpecField] = specs(defaultSpec)
+    private def currentSchema: StructType = md.currentSchema.struct
+    private def currentFieldIds: Seq[Int] = md.currentSchema.fieldIds
+    // the source of truth keeping nested ids STABLE across evolution (see
+    // deriveNestedIds): every evolution carries this map forward
+    private def currentNestedIds: Map[String, Int] = md.currentSchema.nestedIds
+    // commits use the DEFAULT spec; commitDelta may append an auxiliary
+    // unpartitioned spec past it without changing the default
+    private def defaultSpec: Int = md.defaultSpecId
+    // snapshot ids (= sequence numbers) are MONOTONE FOREVER, never
+    // recycled: re-issuing an expired snapshot's id would re-use its
+    // manifest/list names (a publish-if-absent conflict with the
+    // tombstoned files) and rewind sequence numbers the spec requires to
+    // only grow. Expiry always keeps the latest snapshot, so the log's max
+    // is the last id issued.
+    private def lastSnapId: Long = md.snapshots.map(_.snapshotId).foldLeft(0L)(math.max)
 
     /** Whether the default spec partitions — a rewrite that stages files
       * without partition tuples must refuse a partitioned table. */
-    def defaultSpecIsPartitioned: Boolean = currentSpecFields.nonEmpty
-    private def specJson(sf: Seq[SpecField]): String = sf.map(f =>
-      s"""{"name":"${f.name}","transform":"${f.transform}","source-id":${f.sourceId},"field-id":${f.fieldId}}""")
-      .mkString(",")
+    def defaultSpecIsPartitioned: Boolean = md.specs(defaultSpec).fields.nonEmpty
+
+    /** Spec `specId`'s fields with their manifest Avro types. */
+    private def specColumns(specId: Int): Seq[(SpecMetadata.SpecField, String)] =
+      md.specs(specId).fields.map(f => f -> partitionAvroType(f, md.currentSchema))
     private def entrySchemaOf(specId: Int): Schema = manifestEntrySchemaFor(
-      specs(specId).map(f => (f.name, f.avroType, f.fieldId)))
+      specColumns(specId).map { case (f, avroType) => (f.name, avroType, f.fieldId) })
 
     /** Partition-spec evolution, the spec way: the metadata keeps EVERY
       * historical spec in `partition-specs` and bumps `default-spec-id`;
@@ -1903,43 +1590,23 @@ object IcebergFormat {
     def evolveSpec(newPartitionBy: Seq[String]): Unit = {
       // fresh ids continue past the MAX existing field id (not a count —
       // restored externally-written specs may be sparse)
-      val nextBase = (specs.flatten.map(_.fieldId) :+ 999).max + 1
-      specs = specs :+ parseSpec(newPartitionBy, currentSchema, currentFieldIds, nextBase)
-      defaultSpec = specs.size - 1
+      val nextBase = (md.specs.flatMap(_.fields.map(_.fieldId)) :+ 999).max + 1
+      val id = md.specs.size
+      md = md.copy(defaultSpecId = id, specs = md.specs :+
+        SpecMetadata.PartitionSpec(id, parseSpec(newPartitionBy, md.currentSchema, nextBase)))
     }
 
-    private var version = startVersion
-    // snapshot ids (= sequence numbers) are MONOTONE FOREVER, never
-    // recycled: `committed.size + 1` would re-issue the ids of expired
-    // snapshots, re-using their manifest/list names (a publish-if-absent
-    // conflict with the tombstoned files) and rewinding sequence numbers
-    // the spec requires to only grow
-    private var lastSnapId = 0L
-    // historical schemas, index = schema-id; commits use the last (current)
-    private var allSchemas = List(schema)
-    private def currentSchema: StructType = allSchemas.last
-    // flips on rename/drop evolution; published as the `graft.read-by-id`
-    // table property so readers resolve file columns by parquet field id
-    private var readById: Boolean = false
-    private var committed = List.empty[(Long, String)] // (snapshotId, manifestListPath)
-    // summary.operation per snapshot id; absent = "append". Row-delta
-    // commits publish delete/overwrite, rewrites publish replace — the
-    // spec's summary contract, which changelog consumers key off.
-    private var snapOps = Map.empty[Long, String]
-    // schema-id each snapshot committed under; absent = 0. A snapshot
-    // after an evolveSchema/rename/drop must not claim the original
-    // schema id.
-    private var snapSchemaIds = Map.empty[Long, Int]
-    private case class ManifestRec(path: String, len: Long, addedBy: Long, seq: Long,
-        content: Int, nFiles: Int, nRows: Long, specId: Int, existing: Boolean = false,
-        summaries: Option[Seq[FieldSummary]] = None)
-    private var manifests = List.empty[ManifestRec]
-    // registered sort orders (spec §Sort Orders): order-id -> identity
-    // sort fields as (source-id, direction, null-order). Order 0
-    // (unsorted) is implicit; declared orders publish in every metadata
-    // JSON and the current default is what sorted rewrites' files claim.
-    private var sortOrders = List.empty[(Int, Seq[(Int, String, String)])]
-    private var defaultSortOrderId = 0
+    /** Append a new current schema. `lastColumnId` tracks the highest
+      * field id EVER allocated, at any nesting level — dropped ids retire
+      * forever (allocating from the live max would re-issue them and
+      * resurrect dropped values through read-by-id). Defaults carry over
+      * for the top-level ids the new schema keeps. */
+    private def pushSchema(struct: StructType, ids: Seq[Int], nested: Map[String, Int]): Unit = {
+      val s = SpecMetadata.Schema(md.schemas.size, struct, ids, nested,
+        md.currentSchema.defaults.filter { case (id, _) => ids.contains(id) })
+      md = md.copy(schemas = md.schemas :+ s, currentSchemaId = s.schemaId,
+        lastColumnId = (ids ++ nested.values :+ md.lastColumnId).max)
+    }
 
     /** Register (or find) the identity sort order over `cols` asc/
       * nulls-first and make it the table default — what a sorted
@@ -1953,98 +1620,69 @@ object IcebergFormat {
       val fields = cols.map { c =>
         val i = idx.indexOf(c)
         require(i >= 0, s"no column $c to sort by")
-        (currentFieldIds(i), "asc", "nulls-first")
+        SpecMetadata.SortField(currentFieldIds(i), "asc", "nulls-first")
       }
-      val id = sortOrders.find(_._2 == fields).map(_._1).getOrElse {
-        val next = sortOrders.map(_._1).foldLeft(0)(math.max) + 1
-        sortOrders = sortOrders :+ (next -> fields)
+      val id = md.sortOrders.find(_.fields == fields).map(_.orderId).getOrElse {
+        val next = md.sortOrders.map(_.orderId).foldLeft(0)(math.max) + 1
+        md = md.copy(sortOrders = md.sortOrders :+ SpecMetadata.SortOrder(next, fields))
         next
       }
-      defaultSortOrderId = id
+      md = md.copy(defaultSortOrderId = id)
       id
-    }
-
-    /** Restore declared sort orders (resumeWriter path) so the next
-      * writeMetadata re-emits them instead of silently dropping the
-      * table's clustering record. */
-    private[icelite] def setSortOrders(
-        orders: List[(Int, Seq[(Int, String, String)])], defaultId: Int): Unit = {
-      sortOrders = orders
-      defaultSortOrderId = defaultId
     }
 
     /** Re-point the default at order 0 (unsorted) — an export whose
       * source default is not spec-expressible keeps its declared orders
       * discoverable without claiming one as the table default. */
-    private[icelite] def clearDefaultSortOrder(): Unit = defaultSortOrderId = 0
+    private[icelite] def clearDefaultSortOrder(): Unit = md = md.copy(defaultSortOrderId = 0)
 
-    // free-form table properties (spec `properties` map) — e.g.
-    // `graft.clustering` records a z-order layout the spec's sort orders
-    // can't express (claiming identity would assert an order the files
-    // don't have; a property is honest AND discoverable)
-    private var extraProps = Map.empty[String, String]
-    def setProperty(k: String, v: String): Unit = extraProps += (k -> v)
+    /** Set a free-form table property (spec `properties` map) — e.g.
+      * `graft.clustering` records a z-order layout the spec's sort orders
+      * can't express (claiming identity would assert an order the files
+      * don't have; a property is honest AND discoverable). */
+    def setProperty(k: String, v: String): Unit =
+      md = md.copy(properties = md.properties + (k -> v))
 
-    // registered table-statistics files (spec `statistics`): Puffin NDV
-    // sketches per analyzed snapshot (TableStats.analyze). At most one
-    // entry per snapshot; emission drops entries whose snapshot has
-    // expired (the spec's GC contract for statistics).
-    private var statsRecs = List.empty[StatsEntry]
-
-    /** Register (or replace) the statistics file for a snapshot and
-      * publish a new metadata version — one metadata CAS. */
+    /** Register (or replace) the statistics file (spec `statistics`: at
+      * most one per snapshot, dropped when its snapshot expires) for a
+      * snapshot and publish a new metadata version — one metadata CAS. */
     def recordStatistics(e: StatsEntry): Unit = {
-      require(committed.exists(_._1 == e.snapshotId),
+      require(md.snapshot(e.snapshotId).isDefined,
         s"statistics target snapshot ${e.snapshotId} is not in the log")
-      statsRecs = statsRecs.filterNot(_.snapshotId == e.snapshotId) :+ e
-      writeMetadata()
+      withCommitRollback {
+        md = md.copy(statistics = md.statistics.filterNot(_.snapshotId == e.snapshotId) :+ e)
+        writeMetadata()
+      }
     }
 
-    private[icelite] def setStatistics(rs: List[StatsEntry]): Unit = statsRecs = rs
-
-    // v3 ROW LINEAGE allocator: the next unassigned implicit row id
-    // (spec `next-row-id`); per-snapshot bases for the metadata record
-    private var nextRowId: Long = 0L
-    private var snapFirstRow = Map.empty[Long, Long]
-    private[icelite] def setRowLineage(next: Long, bases: Map[Long, Long]): Unit = {
-      nextRowId = next; snapFirstRow = bases
-    }
-
-    // registered PARTITION-statistics files (spec `partition-statistics`):
-    // one per computed snapshot, replace-on-recompute, dropped with an
-    // expired snapshot — same lifecycle as `statistics` above.
-    private var partStatsRecs = List.empty[PartitionStatsEntry]
-
+    /** Register (or replace) a snapshot's partition-statistics file (spec
+      * `partition-statistics`) — same lifecycle as [[recordStatistics]]. */
     def recordPartitionStatistics(e: PartitionStatsEntry): Unit = {
-      require(committed.exists(_._1 == e.snapshotId),
+      require(md.snapshot(e.snapshotId).isDefined,
         s"partition-statistics target snapshot ${e.snapshotId} is not in the log")
-      partStatsRecs = partStatsRecs.filterNot(_.snapshotId == e.snapshotId) :+ e
-      writeMetadata()
+      withCommitRollback {
+        md = md.copy(partitionStatistics =
+          md.partitionStatistics.filterNot(_.snapshotId == e.snapshotId) :+ e)
+        writeMetadata()
+      }
     }
 
-    private[icelite] def setPartitionStatistics(rs: List[PartitionStatsEntry]): Unit =
-      partStatsRecs = rs
-
-    // v3 DEFAULT VALUES: field id -> Iceberg JSON single-value literal,
-    // emitted as `initial-default` + `write-default` on the field in
-    // every schema version that carries it. `initial-default` is what
-    // pre-evolution files read for the column INSTEAD of null — the
-    // metadata-only backfill the v3 spec added; an explicit null written
-    // after the evolution stays null (presence in the file decides).
-    private var fieldDefaults = Map.empty[Int, String]
-
-    /** Declare the initial/write default of (existing, top-level) column
-      * `colName`. Callers evolve the schema first (ADD COLUMN), then
-      * attach the default before publishing. */
+    /** Declare the initial/write default (v3 default values) of
+      * (existing, top-level) column `colName`, on every schema version
+      * that carries its field id. `initial-default` is what
+      * pre-evolution files read for the column INSTEAD of null — the
+      * metadata-only backfill the v3 spec added; an explicit null written
+      * after the evolution stays null (presence in the file decides).
+      * Callers evolve the schema first (ADD COLUMN), then attach the
+      * default before publishing. */
     def setInitialDefault(colName: String, value: Any): Unit = {
       val idx = currentSchema.fieldNames.indexOf(colName)
       require(idx >= 0, s"no column $colName to default")
-      fieldDefaults += (currentFieldIds(idx) ->
-        defaultJson(currentSchema.fields(idx).dataType, value))
+      val id = currentFieldIds(idx)
+      val v  = defaultJson(currentSchema.fields(idx).dataType, value)
+      md = md.copy(schemas = md.schemas.map(s =>
+        if (s.fieldIds.contains(id)) s.copy(defaults = s.defaults + (id -> v)) else s))
     }
-
-    private[icelite] def setDefaults(ds: Map[Int, String]): Unit = fieldDefaults = ds
-    private[icelite] def defaultsNow: Map[Int, String] = fieldDefaults
 
     // -------- partition summaries (manifest-list field 507): fold a
     // manifest's per-file partition values into per-spec-field
@@ -2081,19 +1719,17 @@ object IcebergFormat {
     /** Summaries for one manifest from each file's partition-value lookup
       * (None result = null partition value). None overall when the spec is
       * unpartitioned — field 507 is then omitted. */
-    private def summarize(
-        specFields: Seq[SpecField], values: Seq[String => Option[Any]]): Option[Seq[FieldSummary]] =
+    private def summarize(specFields: Seq[(SpecMetadata.SpecField, String)],
+        values: Seq[String => Option[Any]]): Option[Seq[FieldSummary]] =
       if (specFields.isEmpty) None
-      else Some(specFields.map { sf =>
+      else Some(specFields.map { case (sf, avroType) =>
         val vs = values.map(_(sf.name))
         val present = vs.flatten
         val containsNull = present.size < vs.size
+        val order = Ordering.fromLessThan((a: Any, b: Any) => partCmp(avroType, a, b) < 0)
         if (present.isEmpty) FieldSummary(containsNull, None, None)
         else FieldSummary(containsNull,
-          encodePartValue(sf.avroType, present.minBy(identity)(Ordering.fromLessThan(
-            (a: Any, b: Any) => partCmp(sf.avroType, a, b) < 0))),
-          encodePartValue(sf.avroType, present.maxBy(identity)(Ordering.fromLessThan(
-            (a: Any, b: Any) => partCmp(sf.avroType, a, b) < 0))))
+          encodePartValue(avroType, present.min(order)), encodePartValue(avroType, present.max(order)))
       })
 
     // files successfully created by the current commit attempt — the
@@ -2103,17 +1739,18 @@ object IcebergFormat {
 
     /** Run one optimistic commit attempt: on a lost race
       * (ConcurrentModificationException from any publish-if-absent), delete
-      * every file this attempt created, restore the writer's in-memory
-      * snapshot state, and rethrow — the caller resumes from the winner's
+      * every file this attempt created, restore the writer's state as it
+      * was before the attempt (the metadata value, the manifests and the
+      * version), and rethrow — the caller resumes from the winner's
       * metadata and retries (see [[IcebergFormat.withRetry]]). */
     private def withCommitRollback[T](body: => T): T = {
-      val (m0, c0, v0, s0) = (manifests, committed, version, lastSnapId)
+      val (md0, m0, v0) = (md, manifests, version)
       attemptCreated = Nil
       try body catch {
         case e: java.util.ConcurrentModificationException =>
           attemptCreated.foreach(p =>
             try fs.delete(p, false) catch { case _: Throwable => () })
-          manifests = m0; committed = c0; version = v0; lastSnapId = s0
+          md = md0; manifests = m0; version = v0
           throw e
       }
     }
@@ -2168,15 +1805,13 @@ object IcebergFormat {
       // any nesting level (sparse histories keep their gaps; new top ids
       // never collide with a live nested id — the positional scheme this
       // replaces could hand an appended column a nested field's id)
-      val maxId = maxFieldIdEver
+      val maxId = md.lastColumnId
       val fresh = (1 to (newSchema.fields.length - cur.fields.length)).map(_ + maxId)
-      allFieldIds = allFieldIds :+ (currentFieldIds ++ fresh)
       // existing nested ids carry UNCHANGED; appended columns' nested
       // trees (if any) take fresh ids past the new max
       val appended = StructType(newSchema.fields.drop(cur.fields.length))
       val newNested = deriveNestedIds(appended, Seq(maxId + fresh.length))
-      allNestedIds = allNestedIds :+ (currentNestedIds ++ newNested)
-      allSchemas = allSchemas :+ newSchema
+      pushSchema(newSchema, currentFieldIds ++ fresh, currentNestedIds ++ newNested)
     }
 
     /** RENAME COLUMN, the spec way: the field keeps its id (and with it
@@ -2191,16 +1826,15 @@ object IcebergFormat {
       require(idx >= 0, s"no column $oldName to rename")
       require(!cur.fieldNames.contains(newName), s"column $newName already exists")
       requireFieldIdStamps("rename column")
-      allFieldIds = allFieldIds :+ currentFieldIds
-      // nested paths move with the renamed column; their ids don't change
-      allNestedIds = allNestedIds :+ currentNestedIds.map {
-        case (p, id) if p.startsWith(s"$oldName.") =>
-          s"$newName.${p.stripPrefix(s"$oldName.")}" -> id
-        case other => other
-      }
-      allSchemas = allSchemas :+
-        StructType(cur.fields.updated(idx, cur.fields(idx).copy(name = newName)))
-      readById = true
+      pushSchema(StructType(cur.fields.updated(idx, cur.fields(idx).copy(name = newName))),
+        currentFieldIds,
+        // nested paths move with the renamed column; their ids don't change
+        currentNestedIds.map {
+          case (p, id) if p.startsWith(s"$oldName.") =>
+            s"$newName.${p.stripPrefix(s"$oldName.")}" -> id
+          case other => other
+        })
+      setReadById()
     }
 
     /** DROP COLUMN: the field leaves the current schema (its id is
@@ -2215,14 +1849,14 @@ object IcebergFormat {
       val idx = cur.fieldNames.indexOf(name)
       require(idx >= 0, s"no column $name to drop")
       val id = currentFieldIds(idx)
-      require(!specs.flatten.exists(_.sourceId == id),
+      require(!md.specs.exists(_.fields.exists(_.sourceId == id)),
         s"cannot drop partition source column $name")
       // a LIVE equality-delete file keying on this column would make every
       // subsequent scan throw (equality_ids resolve through the current
       // schema) — and retired ids are never reissued, so the table would
       // be bricked by a metadata-only op. Refuse instead; compact the
       // delete debt away first (rewrite_data_files), then drop.
-      if (committed.nonEmpty) {
+      if (md.snapshots.nonEmpty) {
         val liveEqIds = plan(spark, currentMetadataPath).deletes
           .filter(_.content == 2).flatMap(_.equalityIds).toSet
         require(!liveEqIds.contains(id),
@@ -2230,13 +1864,11 @@ object IcebergFormat {
             "(materialize the deletes with rewrite_data_files first)")
       }
       requireFieldIdStamps("drop column")
-      allFieldIds = allFieldIds :+ currentFieldIds.patch(idx, Nil, 1)
-      // the subtree's nested ids retire with the column (historical maps
-      // keep them, so maxFieldIdEver never re-issues one)
-      allNestedIds = allNestedIds :+
-        currentNestedIds.filterNot(_._1.startsWith(s"$name."))
-      allSchemas = allSchemas :+ StructType(cur.fields.patch(idx, Nil, 1))
-      readById = true
+      // the subtree's nested ids retire with the column (lastColumnId
+      // keeps them, so none is ever re-issued)
+      pushSchema(StructType(cur.fields.patch(idx, Nil, 1)), currentFieldIds.patch(idx, Nil, 1),
+        currentNestedIds.filterNot(_._1.startsWith(s"$name.")))
+      setReadById()
     }
 
     // -------------------------------------------- nested (struct) evolution
@@ -2283,15 +1915,12 @@ object IcebergFormat {
         s"field ${field.name} already exists at ${path.mkString(".")}")
       val prefix  = path.mkString("", ".", ".")
       val newPath = prefix + field.name
-      val baseId  = maxFieldIdEver
+      val baseId  = md.lastColumnId
       // the new field's own id, then its subtree's (if it is itself nested)
       val subtree = deriveNestedIds(StructType(Seq(field)), Seq(baseId + 1))
         .map { case (p, id) => (prefix + p, id) }
-      allFieldIds = allFieldIds :+ currentFieldIds
-      allNestedIds = allNestedIds :+
-        (currentNestedIds + (newPath -> (baseId + 1)) ++ subtree)
-      allSchemas = allSchemas :+
-        rebuild(StructType(parent.fields :+ field.copy(nullable = true)))
+      pushSchema(rebuild(StructType(parent.fields :+ field.copy(nullable = true))),
+        currentFieldIds, currentNestedIds + (newPath -> (baseId + 1)) ++ subtree)
     }
 
     /** RENAME the struct field at `path`: id (and whole subtree's ids)
@@ -2307,16 +1936,16 @@ object IcebergFormat {
       requireFieldIdStamps("rename nested column", nested = true)
       val oldPrefix = path.mkString(".")
       val newPrefix = (path.init :+ newName).mkString(".")
-      allFieldIds = allFieldIds :+ currentFieldIds
-      allNestedIds = allNestedIds :+ currentNestedIds.map {
-        case (p, id) if p == oldPrefix => newPrefix -> id
-        case (p, id) if p.startsWith(oldPrefix + ".") =>
-          (newPrefix + p.stripPrefix(oldPrefix)) -> id
-        case other => other
-      }
-      allSchemas = allSchemas :+ rebuild(StructType(
-        parent.fields.updated(idx, parent.fields(idx).copy(name = newName))))
-      readById = true
+      pushSchema(
+        rebuild(StructType(parent.fields.updated(idx, parent.fields(idx).copy(name = newName)))),
+        currentFieldIds,
+        currentNestedIds.map {
+          case (p, id) if p == oldPrefix => newPrefix -> id
+          case (p, id) if p.startsWith(oldPrefix + ".") =>
+            (newPrefix + p.stripPrefix(oldPrefix)) -> id
+          case other => other
+        })
+      setReadById()
     }
 
     /** DROP the struct field at `path`: its id retires forever (a re-add
@@ -2331,11 +1960,9 @@ object IcebergFormat {
         s"cannot drop the last field of struct ${path.init.mkString(".")}")
       requireFieldIdStamps("drop nested column", nested = true)
       val dead = path.mkString(".")
-      allFieldIds = allFieldIds :+ currentFieldIds
-      allNestedIds = allNestedIds :+ currentNestedIds
-        .filterNot { case (p, _) => p == dead || p.startsWith(dead + ".") }
-      allSchemas = allSchemas :+ rebuild(StructType(parent.fields.patch(idx, Nil, 1)))
-      readById = true
+      pushSchema(rebuild(StructType(parent.fields.patch(idx, Nil, 1))), currentFieldIds,
+        currentNestedIds.filterNot { case (p, _) => p == dead || p.startsWith(dead + ".") })
+      setReadById()
     }
 
     /** Guard for the read-by-id flip: a rename/drop makes every later scan
@@ -2346,7 +1973,7 @@ object IcebergFormat {
       * evenly spaced — a few KB of footer each) catches the adopted-file
       * case without an O(files) metadata-op cost. */
     private def requireFieldIdStamps(op: String, nested: Boolean = false): Unit = {
-      if (committed.isEmpty) return
+      if (md.snapshots.isEmpty) return
       import scala.jdk.CollectionConverters._
       // any read-by-id flip on a schema WITH struct columns makes readers
       // attach nested id metadata too — so the probe must go deep even
@@ -2389,13 +2016,15 @@ object IcebergFormat {
       * vN.metadata.json protocol as a commit, current snapshot pointer
       * unchanged. Requires at least one committed snapshot. */
     def publishSchemaChange(): Unit = {
-      require(committed.nonEmpty, "publishSchemaChange needs a committed snapshot")
-      writeMetadata()
+      require(md.snapshots.nonEmpty, "publishSchemaChange needs a committed snapshot")
+      withCommitRollback(writeMetadata())
     }
 
-    /** Mark the table read-by-id up front (exports of rename/drop-evolved
-      * standard tables, whose adopted files must bind by field id). */
-    private[icelite] def setReadById(): Unit = readById = true
+    /** Mark the table read-by-id (table property `graft.read-by-id`):
+      * readers then resolve file columns by parquet field id. A rename or
+      * drop sets it; so do exports of rename/drop-evolved standard tables,
+      * whose adopted files must bind by field id. */
+    private[icelite] def setReadById(): Unit = setProperty(SpecMetadata.ReadByIdKey, "true")
 
     /** The current (possibly evolved-but-unpublished) schema — what an
       * ALTER TABLE driver composes further changes against. */
@@ -2413,7 +2042,8 @@ object IcebergFormat {
     /** Commit `files` as snapshot N+1 (append semantics). Files with
       * `content` > 0 go into a separate DELETE manifest, listed with
       * content 1 in the manifest list, exactly as the spec splits them. */
-    def commit(files: Seq[DataFileInfo]): Unit = commitWith(files, defaultSpec)
+    def commit(files: Seq[DataFileInfo]): Unit =
+      withCommitRollback(commitGroups(Seq(files -> defaultSpec), "append"))
 
     /** Operation label for a delta commit's summary: all-deletes =
       * "delete", anything staging new rows = "overwrite". */
@@ -2429,16 +2059,20 @@ object IcebergFormat {
       * once, default-spec-id untouched), which every conforming reader
       * treats as global/unpruned — conservative and correct. Unpartitioned
       * tables take the ordinary path. */
-    def commitDelta(files: Seq[DataFileInfo]): Unit = {
-      if (currentSpecFields.isEmpty) return commitWith(files, defaultSpec, deltaOp(files))
-      val existing = specs.indexWhere(_.isEmpty)
-      val sid = if (existing >= 0) existing else { specs = specs :+ Seq.empty; specs.size - 1 }
-      commitWith(files, sid, deltaOp(files))
+    def commitDelta(files: Seq[DataFileInfo]): Unit = withCommitRollback {
+      val sid = if (defaultSpecIsPartitioned) auxSpecId() else defaultSpec
+      commitGroups(Seq(files -> sid), deltaOp(files))
     }
 
-    private def commitWith(files: Seq[DataFileInfo], specId: Int,
-        op: String = "append"): Unit =
-      commitGroups(Seq(files -> specId), op)
+    /** The auxiliary unpartitioned spec's id, appended to the history
+      * (default-spec-id untouched) the first time it is needed. */
+    private def auxSpecId(): Int = md.specs.indexWhere(_.fields.isEmpty) match {
+      case -1 =>
+        val id = md.specs.size
+        md = md.copy(specs = md.specs :+ SpecMetadata.PartitionSpec(id, Nil))
+        id
+      case existing => existing
+    }
 
     /** Row-delta commit in ONE snapshot with PER-GROUP partition specs:
       * insert files that carry real partition tuples land under the
@@ -2447,23 +2081,21 @@ object IcebergFormat {
       * nature) land under the auxiliary unpartitioned spec. The old
       * all-unpartitioned routing ([[commitDelta]]) remains the fallback
       * for transform specs the delta writer can't stamp. */
-    def commitRowDelta(inserts: Seq[DataFileInfo], deletes: Seq[DataFileInfo]): Unit = {
-      val op = deltaOp(inserts ++ deletes)
-      if (currentSpecFields.isEmpty) return commitWith(inserts ++ deletes, defaultSpec, op)
-      val delSpec = {
-        val existing = specs.indexWhere(_.isEmpty)
-        if (existing >= 0) existing else { specs = specs :+ Seq.empty; specs.size - 1 }
+    def commitRowDelta(inserts: Seq[DataFileInfo], deletes: Seq[DataFileInfo]): Unit =
+      withCommitRollback {
+        val op = deltaOp(inserts ++ deletes)
+        if (!defaultSpecIsPartitioned) commitGroups(Seq((inserts ++ deletes) -> defaultSpec), op)
+        else commitGroups(Seq(inserts -> defaultSpec, deletes -> auxSpecId()), op)
       }
-      commitGroups(Seq(inserts -> defaultSpec, deletes -> delSpec), op)
-    }
 
-    private def commitGroups(groups0: Seq[(Seq[DataFileInfo], Int)],
-        op: String = "append"): Unit = {
+    /** One snapshot of `groups` (files and the spec each group commits
+      * under), labelled `op`; callers run it inside [[withCommitRollback]]. */
+    private def commitGroups(groups0: Seq[(Seq[DataFileInfo], Int)], op: String): Unit = {
       // v3 ROW LINEAGE: newly-added data files take contiguous implicit
       // row ids — file `first_row_id` (manifest field 142) + position.
       // Files that MATERIALIZED their lineage columns (rewrites) carry
       // ids in the data itself and consume no id space.
-      var rowCursor = nextRowId
+      var rowCursor = md.nextRowId
       val groups = groups0.map { case (fs, sid) =>
         (fs.map { f =>
           if (f.content == 0 && !f.lineageMaterialized && f.firstRowId.isEmpty) {
@@ -2490,21 +2122,14 @@ object IcebergFormat {
       }
       val snapId = lastSnapId + 1L
       val seq    = snapId // one sequence number per commit
-      if (op != "append") snapOps += snapId -> op
-      if (allSchemas.size > 1) snapSchemaIds += snapId -> (allSchemas.size - 1)
-      // the snapshot's first-row-id (spec v3) + advance the allocator
-      snapFirstRow += snapId -> nextRowId
-      nextRowId = rowCursor
       fs.mkdirs(metadataDir)
-      withCommitRollback {
-        val seenManifestNames = scala.collection.mutable.Set.empty[String]
-        groups.filter(_._1.nonEmpty).foreach { case (groupFiles, specId) =>
-          writeGroupManifests(groupFiles, specId, snapId, seq, seenManifestNames)
-        }
-
-        // 2+3. the snapshot's manifest list + metadata JSON
-        publishSnapshot(snapId, seq)
+      val seenManifestNames = scala.collection.mutable.Set.empty[String]
+      groups.filter(_._1.nonEmpty).foreach { case (groupFiles, specId) =>
+        writeGroupManifests(groupFiles, specId, snapId, seq, seenManifestNames)
       }
+      // 2+3. the snapshot's manifest list + metadata JSON; its
+      // first-row-id (spec v3) is where the allocator stood
+      publishSnapshot(snapId, seq, op, Some(md.nextRowId), rowCursor)
     }
 
     /** One ADDED manifest per content kind for `files` under `specId` —
@@ -2513,7 +2138,7 @@ object IcebergFormat {
     private def writeGroupManifests(files: Seq[DataFileInfo], specId: Int,
         snapId: Long, seq: Long,
         seenNames: scala.collection.mutable.Set[String]): Unit = {
-      val specFields = specs(specId)
+      val specFields = specColumns(specId)
 
       // 1. the commit's manifest(s): one ADDED entry per file; data and
       // delete files may not share a manifest
@@ -2530,7 +2155,7 @@ object IcebergFormat {
           dataFile.put("content_size_in_bytes", Long.box(sz))
         }
         val partRec = new GenericData.Record(dataFile.getSchema.getField("partition").schema())
-        specFields.foreach { sf =>
+        specFields.foreach { case (sf, _) =>
           f.partitionValues.get(sf.name).foreach(v => partRec.put(sf.name, v))
         }
         dataFile.put("partition", partRec)
@@ -2601,17 +2226,21 @@ object IcebergFormat {
           else s"$base-s$specId"
         val manifestPath = new Path(metadataDir, f"m-$snapId%05d$suffix$tagSuffix.avro")
         val manifestLen = writeAvroFile(manifestPath, commitEntrySchema,
-          group.map(buildEntry), Map(
-            "schema" -> icebergSchemaJson(currentSchema, allSchemas.size - 1, currentFieldIds),
-            "partition-spec" -> s"[${specJson(specFields)}]",
-            "partition-spec-id" -> specId.toString,
-            "format-version" -> "2",
-            "content" -> (if (kind == 0) "data" else "deletes")))
+          group.map(buildEntry), manifestMeta(specId, if (kind == 0) "data" else "deletes"))
         manifests = manifests :+ ManifestRec(manifestPath.toString, manifestLen, snapId, seq,
           kind, group.size, group.map(_.recordCount).sum, specId,
           summaries = summarize(specFields, group.map(f => f.partitionValues.get _)))
       }
     }
+
+    /** A manifest's key-value header: the current schema and the spec its
+      * entries were written under, both as the table metadata renders them. */
+    private def manifestMeta(specId: Int, content: String): Map[String, String] = Map(
+      "schema" -> SpecMetadata.renderSchema(md.currentSchema),
+      "partition-spec" -> SpecMetadata.renderSpecFields(md.specs(specId).fields),
+      "partition-spec-id" -> specId.toString,
+      "format-version" -> "2",
+      "content" -> content)
 
     /** Data-file compaction (Iceberg `rewrite_data_files`, bin-pack with
       * delete materialization): the caller stages the compacted file(s) —
@@ -2623,9 +2252,9 @@ object IcebergFormat {
       * to any pre-rewrite snapshot, deletes included, is untouched. The
       * antidote to small-file sprawl AND to the per-read delete-join tax:
       * after the rewrite, scans are pure data-file reads again. */
-    def rewriteDataFiles(files: Seq[DataFileInfo]): Unit = {
+    def rewriteDataFiles(files: Seq[DataFileInfo]): Unit = withCommitRollback {
       manifests = List.empty // replaced wholesale; old snapshots keep theirs
-      commitWith(files, defaultSpec, "replace")
+      commitGroups(Seq(files -> defaultSpec), "replace")
     }
 
     /** Manifest compaction (Iceberg `rewrite_manifests`): merge every
@@ -2643,8 +2272,7 @@ object IcebergFormat {
       val seq    = snapId
       val (dataM, delM) = manifests.partition(_.content == 0)
       val merged = dataM.groupBy(_.specId).toSeq.sortBy(_._1).map { case (sid, group) =>
-        val schema = manifestEntrySchemaFor(
-          specs(sid).map(f => (f.name, f.avroType, f.fieldId)))
+        val schema = entrySchemaOf(sid)
         val entries = group.flatMap { m =>
           readAvro(fs, new Path(m.path)).map { e =>
             // rebind BY NAME into the current entry schema: carried
@@ -2686,22 +2314,15 @@ object IcebergFormat {
           }
         }
         val path = new Path(metadataDir, f"m-$snapId%05d-rw$sid$tagSuffix.avro")
-        val len = writeAvroFile(path, schema, entries, Map(
-          "schema" -> icebergSchemaJson(currentSchema, allSchemas.size - 1, currentFieldIds),
-          "partition-spec" -> s"[${specJson(specs(sid))}]",
-          "partition-spec-id" -> sid.toString,
-          "format-version" -> "2",
-          "content" -> "data"))
+        val len = writeAvroFile(path, schema, entries, manifestMeta(sid, "data"))
         // list seq = the group's MIN so a null-seq entry can never be
         // treated as newer than it was (entries carry explicit seqs anyway)
         ManifestRec(path.toString, len, snapId, group.map(_.seq).min, 0,
           group.map(_.nFiles).sum, group.map(_.nRows).sum, sid, existing = true,
-          summaries = summarize(specs(sid), entryValues))
+          summaries = summarize(specColumns(sid), entryValues))
       }
       manifests = merged.toList ++ delM
-      snapOps += snapId -> "replace"
-      if (allSchemas.size > 1) snapSchemaIds += snapId -> (allSchemas.size - 1)
-      publishSnapshot(snapId, seq)
+      publishSnapshot(snapId, seq, "replace", None, md.nextRowId)
     }
 
     /** Snapshot expiration (Iceberg `expire_snapshots`): drop all but the
@@ -2715,23 +2336,29 @@ object IcebergFormat {
       * a long-lived streaming table accumulates. */
     def expireSnapshots(keepLast: Int): Unit = {
       require(keepLast >= 1, "must keep at least the current snapshot")
-      val (expired, kept) = committed.splitAt((committed.size - keepLast).max(0))
+      val (expired, kept) = md.snapshots.splitAt((md.snapshots.size - keepLast).max(0))
       if (expired.isEmpty) return
-      val keptManifests: Set[String] = kept.flatMap { case (_, lp) =>
+      val keptManifests: Set[String] = kept.flatMap(_.manifestList).flatMap { lp =>
         readAvro(fs, new Path(lp)).map(_.get("manifest_path").toString)
       }.toSet
+      val keptIds = kept.map(_.snapshotId).toSet
       // publish the trimmed metadata FIRST (CAS, rollback-protected): a
       // lost commit race or a crash mid-expire must never have deleted
-      // files a still-current snapshot references
+      // files a still-current snapshot references. The first kept
+      // snapshot becomes the log's root, and statistics go with their
+      // snapshots (the spec's GC contract).
       withCommitRollback {
-        committed = kept
+        md = md.copy(
+          snapshots = kept.head.copy(parentId = None) +: kept.tail,
+          statistics = md.statistics.filter(e => keptIds(e.snapshotId)),
+          partitionStatistics = md.partitionStatistics.filter(e => keptIds(e.snapshotId)))
         writeMetadata()
       }
       // reclamation is BEST-EFFORT per entry: the expiration committed
       // above, so a missing/corrupt expired list (externally vacuumed)
       // must not fail the operation or strand the remaining deletions —
       // a skipped file is an orphan for the vacuum op, not an error
-      expired.foreach { case (_, lp) =>
+      expired.flatMap(_.manifestList).foreach { lp =>
         try {
           val p = new Path(lp)
           readAvro(fs, p).map(_.get("manifest_path").toString)
@@ -2742,7 +2369,14 @@ object IcebergFormat {
       }
     }
 
-    private def publishSnapshot(snapId: Long, seq: Long): Unit = {
+    /** Publish snapshot `snapId`: its manifest list (this commit's
+      * manifests + carried ones), then the metadata version that logs it
+      * as current — summary `op`, the current schema's id, the row-lineage
+      * base `firstRowId`, and the allocator advanced to `nextRowId`.
+      * Row-delta commits publish delete/overwrite and rewrites replace —
+      * the spec's summary contract, which changelog consumers key off. */
+    private def publishSnapshot(snapId: Long, seq: Long, op: String,
+        firstRowId: Option[Long], nextRowId: Long): Unit = {
       // the snapshot's manifest list: this commit's manifest(s) + carried ones
       val listRecords = manifests.map { m =>
         val added = m.addedBy == snapId && !m.existing
@@ -2780,142 +2414,33 @@ object IcebergFormat {
       val listPath = new Path(metadataDir, f"snap-$snapId%d-manifest-list$tagSuffix.avro")
       // parent = the actual previous head (ids are monotone but can GAP
       // past expired history, so snapId - 1 is not necessarily it)
-      val parent = committed.lastOption.map(_._1.toString).getOrElse("null")
+      val parent = md.snapshots.lastOption.map(_.snapshotId)
       writeAvroFile(listPath, manifestFileSchema, listRecords, Map(
         "format-version" -> "2",
         "snapshot-id" -> snapId.toString,
         "sequence-number" -> seq.toString,
-        "parent-snapshot-id" -> parent))
-      committed = committed :+ ((snapId, listPath.toString))
-      lastSnapId = snapId
+        "parent-snapshot-id" -> parent.map(_.toString).getOrElse("null")))
+      md = md.copy(
+        lastSequenceNumber = seq, lastUpdatedMs = ts0 + snapId, nextRowId = nextRowId,
+        snapshots = md.snapshots :+ SpecMetadata.Snapshot(snapId, parent, seq, ts0 + snapId, op,
+          md.currentSchemaId, Some(listPath.toString), firstRowId),
+        currentSnapshotId = Some(snapId))
       writeMetadata()
     }
 
-    /** The metadata JSON: full snapshot log, current pointer. Derives
-      * everything from `committed`, so both commits and expiration
-      * publish through the same path. */
+    /** Publish `md` as the next metadata version — commits, expiration,
+      * statistics and schema changes all go through here. Whoever
+      * publishes v{N}.metadata.json owns version N; a loser rolls back via
+      * withCommitRollback and retries from the winner's state. */
     private def writeMetadata(): Unit = {
-      val snapId = committed.last._1
-      val seq    = snapId
       version += 1
-      val snapshotsJson = committed.zipWithIndex.map { case ((id, lp), i) =>
-        val parent = if (i == 0) "" else s""""parent-snapshot-id":${committed(i - 1)._1},"""
-        val op     = snapOps.getOrElse(id, "append")
-        val schId  = snapSchemaIds.getOrElse(id, 0)
-        val firstRow = snapFirstRow.get(id)
-          .map(v => s""""first-row-id":$v,""").getOrElse("")
-        s"""{"snapshot-id":$id,$parent"timestamp-ms":${ts0 + id},"sequence-number":$id,
-           $firstRow"summary":{"operation":"$op"},"manifest-list":"$lp","schema-id":$schId}"""
-          .replaceAll("\n\\s*", "")
-      }.mkString(",")
-      val metadataJson =
-        s"""{"format-version":2,"table-uuid":"$tableUuid","location":"$location",
-           "last-sequence-number":$seq,"last-updated-ms":${ts0 + snapId},
-           "last-column-id":$maxFieldIdEver,
-           "next-row-id":$nextRowId,
-           "current-schema-id":${allSchemas.size - 1},
-           "schemas":[${allSchemas.zipWithIndex.map { case (sc, i) => icebergSchemaJson(sc, i, allFieldIds(i), allNestedIds(i), fieldDefaults) }.mkString(",")}],
-           "default-spec-id":$defaultSpecId,
-           "partition-specs":[${specs.zipWithIndex.map { case (sf, i) => s"""{"spec-id":$i,"fields":[${specJson(sf)}]}""" }.mkString(",")}],
-           "last-partition-id":${specs.flatten.map(_.fieldId).maxOption.getOrElse(999)},
-           "statistics":[${statsRecs.filter(r => committed.exists(_._1 == r.snapshotId))
-             .map { r =>
-               val bm = r.blobs.map(b =>
-                 s"""{"type":"${b.blobType}","snapshot-id":${b.snapshotId},"sequence-number":${b.sequenceNumber},"fields":[${b.fields.mkString(",")}],"properties":{${b.properties.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":"$v"""" }.mkString(",")}}}""").mkString(",")
-               s"""{"snapshot-id":${r.snapshotId},"statistics-path":"${r.path}","file-size-in-bytes":${r.fileSizeInBytes},"file-footer-size-in-bytes":${r.footerSizeInBytes},"blob-metadata":[$bm]}"""
-             }.mkString(",")}],
-           "partition-statistics":[${partStatsRecs
-             .filter(r => committed.exists(_._1 == r.snapshotId))
-             .map(r => s"""{"snapshot-id":${r.snapshotId},"statistics-path":"${r.path}","file-size-in-bytes":${r.fileSizeInBytes}}""")
-             .mkString(",")}],
-           "default-sort-order-id":$defaultSortOrderId,"sort-orders":[${
-             (s"""{"order-id":0,"fields":[]}""" :: sortOrders.map { case (oid, fs) =>
-               s"""{"order-id":$oid,"fields":[${fs.map { case (sid, dir, no) =>
-                 s"""{"transform":"identity","source-id":$sid,"direction":"$dir","null-order":"$no"}"""
-               }.mkString(",")}]}"""
-             }).mkString(",")}],
-           "properties":{${
-             ((if (readById) List(""""graft.read-by-id":"true"""") else Nil) ++
-               extraProps.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":"$v"""" })
-               .mkString(",")}},
-           "current-snapshot-id":$snapId,
-           "snapshots":[$snapshotsJson],
-           "snapshot-log":[],"metadata-log":[]}""".replaceAll("\n\\s*", "")
       val mdPath = new Path(metadataDir, metadataName(version))
-      // whoever publishes v{N}.metadata.json owns snapshot N; a loser
-      // rolls back via withCommitRollback and retries from the winner's
-      // state
-      if (!MetadataFiles.publishIfAbsent(fs, mdPath, metadataJson)) throw lostRace(mdPath)
+      if (!MetadataFiles.publishIfAbsent(fs, mdPath, SpecMetadata.render(md))) throw lostRace(mdPath)
       attemptCreated = mdPath :: attemptCreated
       MetadataFiles.writeHint(fs, metadataDir, version)
     }
 
     def currentMetadataPath: String = new Path(metadataDir, metadataName(version)).toString
-
-    /** Rehydrate a session over an EXISTING table (see
-      * [[IcebergFormat.resumeWriter]]): the snapshot log, the current
-      * snapshot's manifest pointers, the FULL schema history, and every
-      * historical partition spec (as (name, source-id, field-id,
-      * transform) tuples — avro types are re-derived from the current
-      * schema), exactly as a fresh commit would have left them in memory.
-      * The next writeMetadata re-emits schemas/specs from this state, so
-      * callers must have validated id layouts first. */
-    private[icelite] def restore(
-        committed0: List[(Long, String)],
-        manifests0: List[(String, Long, Long, Long, Int, Int, Long, Int, Boolean,
-          Option[Seq[FieldSummary]])],
-        schemas0: List[StructType],
-        specs0: List[Seq[(String, Int, Int, String)]],
-        defaultSpec0: Int,
-        fieldIds0: List[Seq[Int]],
-        readById: Boolean = false,
-        snapOps0: Map[Long, String] = Map.empty,
-        snapSchemaIds0: Map[Long, Int] = Map.empty,
-        nestedIds0: List[Map[String, Int]] = Nil): Unit = {
-      this.readById = readById
-      this.snapOps = snapOps0
-      this.snapSchemaIds = snapSchemaIds0
-      // nested ids restore from the committed JSONs (explicit there);
-      // a caller without them re-derives positionally — correct exactly
-      // when no nested evolution ever happened, which is the only state
-      // a pre-tracking JSON can be in
-      allNestedIds =
-        if (nestedIds0.nonEmpty) nestedIds0
-        else schemas0.zip(fieldIds0).map { case (sc, ids) => deriveNestedIds(sc, ids) }
-      committed = committed0
-      // resume the monotone id allocator past every snapshot the restored
-      // log has seen (expired history may have gone, so this is a floor —
-      // but the log keeps ids strictly growing, making max = latest)
-      lastSnapId = committed0.map(_._1).foldLeft(0L)(math.max)
-      manifests = manifests0.map {
-        case (p, len, addedBy, seq, content, nFiles, nRows, specId, ex, sums) =>
-          ManifestRec(p, len, addedBy, seq, content, nFiles, nRows, specId, existing = ex,
-            summaries = sums)
-      }
-      allSchemas  = schemas0 // before specs: identity avro types resolve here
-      allFieldIds = fieldIds0
-      val BucketTr = raw"bucket\[(\d+)\]".r
-      val TruncTr  = raw"truncate\[(\d+)\]".r
-      // partition source ids index through the REAL (possibly sparse)
-      // field-id table, never by position
-      def typeOf(sid: Int): DataType = {
-        val idx = currentFieldIds.indexOf(sid)
-        require(idx >= 0, s"partition source id $sid not in the current schema")
-        currentSchema.fields(idx).dataType
-      }
-      specs = specs0.map(_.map { case (name, sid, fid, tr) =>
-        val avroT = tr match {
-          case "identity" => avroPrimitive(typeOf(sid))
-          case "year" | "month" | "day" | "hour" => "int"
-          case BucketTr(_) => "int"
-          case TruncTr(_) => avroPrimitive(typeOf(sid))
-          case other =>
-            throw new UnsupportedOperationException(s"cannot resume partition transform $other")
-        }
-        SpecField(name, sid, fid, tr, avroT)
-      })
-      defaultSpec = defaultSpec0
-    }
   }
 
   /** Reopen an existing Iceberg v2 table directory as a live [[Writer]]
@@ -2964,83 +2489,41 @@ object IcebergFormat {
   }
 
   private def resumeWriterImpl(spark: SparkSession, location: String): Writer = {
-    implicit val fmts: Formats = DefaultFormats
     // the RESOLVED version (the resolver walks forward past a stale
     // hint), not the raw hint value
-    val version  = currentVersion(spark, location)
-    val metaPath = metadataPath(location, version)
-    val mPath    = new Path(metaPath)
-    val fs       = mPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val md       = JsonMethods.parse(MetadataFiles.read(fs, mPath))
-    require((md \ "format-version").extract[Int] == 2,
-      "resumeWriter supports format-version 2 only")
-    // schema history, ordered by schema-id; ids contiguous-from-0, current = last
-    val schemasJ = (md \ "schemas") match {
-      case JArray(ss) => ss.sortBy(s => (s \ "schema-id").extractOpt[Int].getOrElse(0))
-      case _          => List(md \ "schema")
-    }
-    require(schemasJ.zipWithIndex.forall { case (s, i) =>
-      (s \ "schema-id").extractOpt[Int].getOrElse(0) == i },
+    val version = currentVersion(spark, location)
+    val (fs, md) = open(spark, metadataPath(location, version))
+    require(md.formatVersion == 2, "resumeWriter supports format-version 2 only")
+    // histories ordered by id; ids contiguous from 0, current schema = last
+    val schemas = md.schemas.sortBy(_.schemaId)
+    require(schemas.map(_.schemaId) == schemas.indices,
       "resumeWriter requires contiguous schema ids from 0")
-    require((md \ "current-schema-id").extractOpt[Int].getOrElse(0) == schemasJ.size - 1,
+    require(md.currentSchemaId == schemas.size - 1,
       "resumeWriter requires the current schema to be the latest")
     // top-level field ids re-emit VERBATIM — sparse layouts (a
     // dropped-column history leaves gaps) resume fine; only duplicate or
     // non-positive ids are refused
-    val parsedSchemas = schemasJ.map(schemaFields)
-    parsedSchemas.foreach { case (st, ids) =>
-      require(ids.length == st.fields.length &&
-        ids.distinct.length == ids.length && ids.forall(_ > 0),
-        s"resumeWriter requires distinct positive field ids, got $ids")
+    schemas.foreach { s =>
+      require(s.fieldIds.distinct.length == s.fieldIds.length && s.fieldIds.forall(_ > 0),
+        s"resumeWriter requires distinct positive field ids, got ${s.fieldIds}")
     }
-    val allSchemas  = parsedSchemas.map(_._1)
-    val allFieldIds = parsedSchemas.map(_._2)
-    // nested ids restore from the JSON verbatim — the committed record is
-    // the truth a nested rename/drop must never renumber
-    val allNestedIds = schemasJ.map(parseNestedIds)
-    // spec history, same shape rules
-    val specsJ = (md \ "partition-specs").extract[List[JObject]]
-      .sortBy(sp => (sp \ "spec-id").extractOpt[Int].getOrElse(0))
-    require(specsJ.zipWithIndex.forall { case (sp, i) =>
-      (sp \ "spec-id").extractOpt[Int].getOrElse(0) == i },
+    val specs =
+      if (md.specs.isEmpty) Seq(SpecMetadata.PartitionSpec(0, Nil)) else md.specs.sortBy(_.specId)
+    require(specs.map(_.specId) == specs.indices,
       "resumeWriter requires contiguous spec ids from 0")
     // the default spec may point anywhere in the history (commitDelta
     // appends an auxiliary unpartitioned spec PAST the default)
-    val defaultSpecId0 = (md \ "default-spec-id").extractOpt[Int].getOrElse(0)
-    require(defaultSpecId0 >= 0 && defaultSpecId0 < math.max(1, specsJ.size),
-      s"default-spec-id $defaultSpecId0 out of range")
-    val specTuples: List[Seq[(String, Int, Int, String)]] =
-      if (specsJ.isEmpty) List(Seq.empty)
-      else specsJ.map { sp =>
-        (sp \ "fields").extract[List[JObject]].map { f =>
-          ((f \ "name").extract[String], (f \ "source-id").extract[Int],
-            (f \ "field-id").extract[Int], (f \ "transform").extract[String])
-        }: Seq[(String, Int, Int, String)]
-      }
-    val uuid = (md \ "table-uuid").extract[String]
-    // one walk over the snapshots array feeds all three restored maps —
-    // resumeWriter runs per DML commit, so the extraction cost matters
-    // on long snapshot logs
-    val snapsJ = (md \ "snapshots").extract[List[JObject]]
-    val committed = snapsJ.map { s =>
-      ((s \ "snapshot-id").extract[Long], (s \ "manifest-list").extract[String])
-    }
-    // summary operations and schema ids survive the resume
-    // (absent/legacy = append / schema 0)
-    val snapOps0 = snapsJ.flatMap { s =>
-      (s \ "summary" \ "operation").extractOpt[String].filter(_ != "append")
-        .map((s \ "snapshot-id").extract[Long] -> _)
-    }.toMap
-    val snapSchemaIds0 = snapsJ.flatMap { s =>
-      (s \ "schema-id").extractOpt[Int].filter(_ != 0)
-        .map((s \ "snapshot-id").extract[Long] -> _)
-    }.toMap
-    val curList = committed.lastOption.map(_._2).getOrElse(
+    require(md.defaultSpecId >= 0 && md.defaultSpecId < specs.size,
+      s"default-spec-id ${md.defaultSpecId} out of range")
+    val head = md.snapshots.lastOption.getOrElse(
       throw new IllegalStateException(s"no snapshots to resume at $location"))
-    val manifests = readAvro(fs, new Path(curList)).map { r =>
+    require(md.snapshots.forall(_.manifestList.isDefined),
+      "resumeWriter requires every snapshot to name a manifest list")
+    // the carried manifests, with every field the list schema records
+    val manifests = readAvro(fs, new Path(head.manifestList.get)).map { r =>
       val added    = r.get("added_files_count").asInstanceOf[Int]
       val existing = r.get("existing_files_count").asInstanceOf[Int]
-      (r.get("manifest_path").toString,
+      ManifestRec(r.get("manifest_path").toString,
         r.get("manifest_length").asInstanceOf[Long],
         r.get("added_snapshot_id").asInstanceOf[Long],
         r.get("sequence_number").asInstanceOf[Long],
@@ -3049,49 +2532,10 @@ object IcebergFormat {
         r.get("added_rows_count").asInstanceOf[Long] +
           r.get("existing_rows_count").asInstanceOf[Long],
         r.get("partition_spec_id").asInstanceOf[Int],
-        existing > 0,
-        parseSummaries(r)) // carried pruning evidence survives the resume
+        existing = existing > 0,
+        summaries = parseSummaries(r)) // carried pruning evidence survives the resume
     }.toList
-    val w = new Writer(spark, location, allSchemas.head, Nil, uuid, startVersion = version)
-    w.restore(committed, manifests, allSchemas, specTuples, defaultSpecId0, allFieldIds,
-      readById = (md \ "properties" \ "graft.read-by-id").extractOpt[String].contains("true"),
-      snapOps0 = snapOps0, snapSchemaIds0 = snapSchemaIds0, nestedIds0 = allNestedIds)
-    // declared sort orders survive the resume (identity fields are all
-    // this writer emits); order 0 is implicit and skipped
-    val orders = (md \ "sort-orders").extractOpt[List[JObject]].getOrElse(Nil).flatMap { o =>
-      val oid = (o \ "order-id").extract[Int]
-      if (oid == 0) None
-      else Some(oid -> ((o \ "fields").extract[List[JObject]].map { f =>
-        ((f \ "source-id").extract[Int],
-          (f \ "direction").extractOpt[String].getOrElse("asc"),
-          (f \ "null-order").extractOpt[String].getOrElse("nulls-first"))
-      }: Seq[(Int, String, String)]))
-    }
-    if (orders.nonEmpty)
-      w.setSortOrders(orders, (md \ "default-sort-order-id").extractOpt[Int].getOrElse(0))
-    // free-form properties survive too (read-by-id is restored above)
-    (md \ "properties").extractOpt[Map[String, String]].getOrElse(Map.empty)
-      .filter(_._1 != "graft.read-by-id")
-      .foreach { case (k, v) => w.setProperty(k, v) }
-    // registered statistics files survive the resume (dropped only when
-    // their snapshot expires)
-    w.setStatistics(statisticsEntries(spark, metaPath).toList)
-    // column defaults (v3 initial-default) re-emit verbatim
-    w.setDefaults(parseDefaultsJson(schemasJ.last).map { case (id, v) =>
-      id -> JsonMethods.compact(JsonMethods.render(v))
-    })
-    w.setPartitionStatistics(partitionStatisticsEntries(spark, metaPath).toList)
-    // v3 row-lineage allocator + per-snapshot bases re-emit verbatim
-    // (pre-lineage tables restore 0/empty: their files carry no field
-    // 142 and read null lineage, the spec's unassigned state)
-    w.setRowLineage(
-      (md \ "next-row-id").extractOpt[Long].getOrElse(0L),
-      (md \ "snapshots") match {
-        case JArray(ss) => ss.flatMap(s =>
-          (s \ "first-row-id").extractOpt[Long].map(v =>
-            (s \ "snapshot-id").extract[Long] -> v)).toMap
-        case _ => Map.empty[Long, Long]
-      })
-    w
+    new Writer(spark, location, md.copy(location = location, schemas = schemas, specs = specs),
+      manifests, version, fileTag = "")
   }
 }

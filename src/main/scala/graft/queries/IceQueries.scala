@@ -2394,18 +2394,9 @@ object IceQueries {
       }
       // the metadata carries BOTH specs, default = the evolved one
       locally {
-        import org.json4s._
-        import org.json4s.jackson.JsonMethods
-        implicit val fmts: Formats = DefaultFormats
-        val mdTxt = {
-          val p  = new Path(w.currentMetadataPath)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          val in = fs.open(p)
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        }
-        val md = JsonMethods.parse(mdTxt)
-        require((md \ "default-spec-id").extract[Int] == 1 &&
-          (md \ "partition-specs").extract[List[JObject]].size == 2,
+        val p  = new Path(w.currentMetadataPath)
+        val md = graft.icelite.SpecMetadata.read(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
+        require(md.defaultSpecId == 1 && md.specs.size == 2,
           "evolved metadata must keep both specs with default-spec-id 1")
       }
       // gate 1 — SHARED identity axis: a region filter prunes both eras'

@@ -585,9 +585,7 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     val fs = hfs(p)
     if (!fs.exists(p))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchViewException(ident)
-    val in   = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val j    = JsonMethods.parse(text)
+    val j = JsonMethods.parse(graft.icelite.MetadataFiles.read(fs, p))
     new View {
       override def name(): String = (Seq(catalogName) ++ ident.namespace() :+ ident.name()).mkString(".")
       override def query(): String = (j \ "sql").extract[String]

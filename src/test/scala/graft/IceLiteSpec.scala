@@ -80,7 +80,7 @@ class IceLiteSpec extends SparkSpec {
 
     // nested types are rejected loudly, not silently mangled
     intercept[UnsupportedOperationException](
-      IcebergFormat.toSparkType("struct<1: a: int>"))
+      SpecMetadata.toSparkType("struct<1: a: int>"))
   }
 
   test("exportIceberg is metadata-only: manifests adopt IceLite parquet in place") {

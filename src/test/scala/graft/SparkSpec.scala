@@ -35,18 +35,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * snapshot's manifest list, every manifest those lists carry, and the
     * version hint. */
   def reachableSpecMetadata(loc: String): Set[String] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    implicit val fmts: Formats = DefaultFormats
     val mdDir = new org.apache.hadoop.fs.Path(loc, "metadata")
     val fs    = mdDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val versions = fs.listStatus(mdDir).map(_.getPath)
       .filter(_.getName.endsWith(".metadata.json"))
     val lists = versions.flatMap { v =>
-      val in = fs.open(v)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      (JsonMethods.parse(txt) \ "snapshots").extract[List[JObject]]
-        .map(s => (s \ "manifest-list").extract[String])
+      graft.icelite.SpecMetadata.read(fs, v).snapshots.flatMap(_.manifestList)
     }.toSet
     val manifests = lists.flatMap { lp =>
       graft.icelite.IcebergFormat.readAvroForTest(fs, new org.apache.hadoop.fs.Path(lp))

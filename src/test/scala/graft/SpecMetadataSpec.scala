@@ -1,0 +1,102 @@
+package graft
+
+import graft.icelite.{IcebergFormat, MetadataFiles, SpecMetadata}
+import graft.icelite.IcebergFormat.DataFileInfo
+import org.apache.hadoop.fs.Path
+import org.json4s.jackson.JsonMethods
+
+/** The one codec for spec-table metadata (`SpecMetadata`): the golden
+  * fixture round-trips through it unchanged, the Writer replaying the
+  * fixture's operations writes the fixture again, strings that need JSON
+  * escaping survive a commit, and a lost commit attempt leaves the
+  * writer's metadata exactly as it was before the attempt. */
+class SpecMetadataSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val fixtureName = "v00009.metadata.json"
+
+  private def fixture: String = {
+    val in = getClass.getResourceAsStream(s"/spec_metadata/$fixtureName")
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  private def readText(p: String): String = {
+    val path = new Path(p)
+    MetadataFiles.read(path.getFileSystem(spark.sparkContext.hadoopConfiguration), path)
+  }
+
+  test("golden fixture: every modeled field is populated and render(parse(x)) == x as JSON") {
+    val md = SpecMetadata.parse(fixture)
+    assert(md.schemas.size >= 2 && md.schemas.exists(_.nestedIds.nonEmpty) &&
+      md.schemas.exists(_.defaults.nonEmpty))
+    assert(Set("identity", "bucket[4]", "day", "truncate[2]")
+      .subsetOf(md.specs.flatMap(_.fields.map(_.transform)).toSet))
+    assert(md.specs.exists(_.fields.isEmpty), "no auxiliary unpartitioned spec")
+    assert(md.sortOrders.nonEmpty && md.defaultSortOrderId != 0)
+    assert(md.statistics.exists(_.blobs.nonEmpty) && md.partitionStatistics.nonEmpty)
+    assert(md.readById && md.properties.size >= 2)
+    assert(md.nextRowId > 0 && md.snapshots.exists(_.firstRowId.isDefined))
+    assert(md.snapshots.size >= 3 && md.snapshots.map(_.operation).toSet.size >= 3)
+    assert(JsonMethods.parse(SpecMetadata.render(md)) == JsonMethods.parse(fixture))
+  }
+
+  test("the Writer replaying the fixture's operations writes the fixture") {
+    val loc = scratch("spec_golden") + "/t"
+    val mp  = GoldenSpecOps.run(spark, loc)
+    assert(new Path(mp).getName == fixtureName)
+    val written = readText(mp).replace(loc, GoldenSpecOps.FixtureLocation)
+    assert(JsonMethods.parse(written) == JsonMethods.parse(fixture))
+  }
+
+  test("quotes and backslashes in property values, the location and column names survive a commit") {
+    val loc   = scratch("spec_escape") + "/t \"q\" \\ b"
+    val df    = Seq((1L, "x"), (2L, "y")).toDF("id", "we\"ird\\col")
+    val value = "say \"hi\" \\ C:\\dir\\ \u0001 end"
+    val w = new IcebergFormat.Writer(spark, loc, df.schema)
+    w.setProperty("graft.note \"k\"", value)
+    w.commit(Seq(IcebergFormat.writeSingleFile(spark, loc, "f1", df)))
+    val mp = IcebergFormat.currentMetadataPath(spark, loc)
+    assert(IcebergFormat.tableProperties(spark, mp) == Map("graft.note \"k\"" -> value))
+    val md = SpecMetadata.parse(readText(mp))
+    assert(md.location == loc)
+    assert(md.currentSchema.struct.fieldNames.toSeq == Seq("id", "we\"ird\\col"))
+    val back = IcebergFormat.scan(spark, mp)
+    assert(back.columns.toSeq == Seq("id", "we\"ird\\col"))
+    assert(back.collect().map(r => (r.getLong(0), r.getString(1))).toSet ==
+      Set((1L, "x"), (2L, "y")))
+    // a resumed writer re-publishes the same strings
+    IcebergFormat.resumeWriter(spark, loc).commit(Nil)
+    assert(IcebergFormat.tableProperties(spark, IcebergFormat.currentMetadataPath(spark, loc)) ==
+      Map("graft.note \"k\"" -> value))
+  }
+
+  test("a lost commit attempt leaves the writer's metadata as it was") {
+    val loc  = scratch("spec_rollback") + "/t"
+    val part = Seq((1L, "x")).toDF("id", "k")
+    def file(n: String, rows: Long, content: Int = 0) =
+      DataFileInfo(s"$loc/data/$n.parquet", rows, 10L * rows, content = content,
+        partitionValues = if (content == 0) Map("k" -> "x") else Map.empty)
+    val w0 = new IcebergFormat.Writer(spark, loc, part.schema, Seq("k"))
+    w0.commit(Seq(file("base", 3)))
+    val winner = IcebergFormat.resumeWriter(spark, loc)
+    val loser  = IcebergFormat.resumeWriter(spark, loc)
+    winner.commit(Seq(file("w", 2)))
+    // the loser's row delta would add the auxiliary spec, a "delete"
+    // snapshot and advance the row-id allocator — all rolled back
+    intercept[java.util.ConcurrentModificationException] {
+      loser.commitDelta(Seq(file("del", 1, content = 1)))
+    }
+    // take the winner's snapshot away, so the loser's next attempt lands
+    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("v00002.metadata.json", "snap-2-manifest-list.avro", "m-00002.avro")
+      .foreach(n => assert(fs.delete(new Path(s"$loc/metadata/$n"), false), n))
+    MetadataFiles.writeHint(fs, new Path(loc, "metadata"), 1)
+    loser.commit(Seq(file("l", 4)))
+    val md = SpecMetadata.parse(readText(loser.currentMetadataPath))
+    assert(new Path(loser.currentMetadataPath).getName == "v00002.metadata.json")
+    assert(md.specs.size == 1, s"the lost attempt's auxiliary spec leaked: ${md.specs}")
+    assert(md.snapshots.map(s => (s.snapshotId, s.operation, s.firstRowId)) ==
+      Seq((1L, "append", Some(0L)), (2L, "append", Some(3L))))
+    assert(md.nextRowId == 7L)
+  }
+}

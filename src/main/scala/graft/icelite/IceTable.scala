@@ -44,10 +44,15 @@ import scala.util.control.NonFatal
   * hint and resolver that provide it, live in [[MetadataFiles]], which
   * the Iceberg-spec writer shares.
   *
-  * Scans hand Spark the snapshot's file list with the frozen schema —
-  * filters/projections push into the parquet reader exactly as for a plain
-  * `spark.read.parquet`, and partition-parallelism follows file/row-group
-  * splits, so a 1000-executor cluster scans an IceLite table at full width.
+  * Every scan (`scan`, time travel, `scanRange`, `scanIncremental`, the
+  * copy-on-write reads of `deleteRange`/`merge`, `scanMetadataFile`) is a
+  * DataFrame over the DataSource V2 connector's table
+  * ([[graft.sources.IceLiteV2Table]]) pinned to one resolved metadata
+  * version and snapshot, and optionally to a pruned subset of its files —
+  * the same scan a SQL read plans, so both read a table the same way:
+  * manifest file skipping for pushed filters, partition values from each
+  * file's own path, position deletes applied per file, metadata-only
+  * COUNT(*), Spark's parquet reader underneath.
   */
 final class IceTable private (val spark: SparkSession, val location: Path) {
 
@@ -1143,7 +1148,6 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
 
   // ------------------------------------------------------------------- reads
 
-  /** Lazy DataFrame over the current snapshot. */
   /** Metadata-only additive schema evolution (the ALTER TABLE ADD COLUMN
     * path): append nullable columns with fresh field ids and commit a new
     * metadata version — zero data IO; existing files surface NULL for the
@@ -1269,11 +1273,11 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
   /** Partition-layout evolution (the standard-format twin of the Iceberg
     * writer's `evolveSpec`): a metadata-only CAS commit switching the
     * hive layout NEW snapshots are written with. Files already on disk
-    * keep their directory layout — every snapshot dir is read with its
-    * own `basePath`, so partition values resolve per-era (an
-    * unpartitioned-era file carries every column in the parquet, a
-    * partitioned-era file restores the k=v dir values) and scans span
-    * both. This is the "table grew, add partitioning now" path — zero
+    * keep their directory layout — a scan takes each file's partition
+    * values from the `k=v` segments of its own path, so they resolve
+    * per-era (an unpartitioned-era file carries every column in the
+    * parquet, a partitioned-era file restores the k=v dir values) and
+    * scans span both. This is the "table grew, add partitioning now" path — zero
     * data rewritten, exactly the evolution story the Iceberg spec sells. */
   def evolvePartitioning(newCols: Seq[String]): IceTable = {
     commitMetadata("evolve partitioning") { md =>
@@ -1285,55 +1289,33 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     this
   }
 
-  def scan(): DataFrame = scanSnapshot(metadata.current_snapshot_id)
+  /** Lazy DataFrame over the current snapshot. */
+  def scan(): DataFrame = {
+    val md = metadata
+    frame(md, md.currentSnapshot)
+  }
 
   /** Time travel: lazy DataFrame over snapshot `id`'s file list. */
   def scanSnapshot(id: Long): DataFrame = {
     val md = metadata
     if (md.snapshots.isEmpty && id == 0L)
       // freshly-created table, no commits yet: empty relation, not an error
-      return emptyFrame(md)
-    val snap = md
-      .snapshot(id)
-      .getOrElse(throw new NoSuchElementException(s"snapshot $id of table ${md.name}"))
-    readFilesOf(md, snap, filesOf(snap))
+      return frame(md, None)
+    frame(md, Some(md.snapshot(id)
+      .getOrElse(throw new NoSuchElementException(s"snapshot $id of table ${md.name}"))))
   }
 
-  /** Read `files` of `snap`, applying the snapshot's merge-on-read
-    * position deletes when present (the library-path twin of the V2
-    * reader's per-file bitmap skip). */
-  private[icelite] def readFilesOf(md: TableMetadata, snap: Snapshot, files: Seq[String]): DataFrame =
-    if (!hasDeletes(snap)) readFiles(md, files)
-    else {
-      val delPaths = deleteEntriesOf(snap).map(e => new Path(location, e.file).toString)
-      readFiles(md, files, Some(delPaths))
-    }
-
-  /** Join one LEAF parquet read against position deletes:
-    * `_metadata.file_path` (URI-encoded, like input_file_name) is decoded
-    * and anchored at the `data/snap-` segment to recover the
-    * manifest-relative path, `_metadata.row_index` is the in-file
-    * position — exactly the `(file_path, pos)` key the delete files
-    * store. Applied PER LEAF because `_metadata` resolves only on a file
-    * scan, not through a union. Fully distributed: Spark broadcasts the
-    * delete side when it is small (the common case), and a mass-delete
-    * falls back to a shuffled join — never a driver loop.
-    * `left_anti` = live rows (delete application); `left_semi` = exactly
-    * the deleted rows (the changelog's -D side). */
-  private def joinPositionDeletes(
-      leaf: DataFrame, deleteDF: DataFrame, joinType: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr}
-    val keep = leaf.columns
-    leaf
-      .withColumn("__graft_fp", expr(
-        "url_decode(replace(substring(_metadata.file_path, " +
-          "instr(_metadata.file_path, '/data/snap-') + 1), '+', '%2B'))"))
-      .withColumn("__graft_pos", col("_metadata.row_index"))
-      .join(deleteDF,
-        col("__graft_fp") === deleteDF("file_path") && col("__graft_pos") === deleteDF("pos"),
-        joinType)
-      .select(keep.map(col).toIndexedSeq: _*)
-  }
+  /** Every library scan: a DataFrame over the connector's table
+    * ([[graft.sources.IceLiteV2Table]]) at `md`'s snapshot `snap` (None =
+    * the empty table), pinned to a subset `files` of its data files when
+    * given. A read through SQL and a library call are then the same scan:
+    * partition values from each file's own path, the snapshot's position
+    * deletes applied per file, pushed filters pruning files, metadata-only
+    * COUNT(*). */
+  private def frame(md: TableMetadata, snap: Option[Snapshot],
+      files: Option[Seq[String]] = None): DataFrame =
+    org.apache.spark.sql.graft.bridge.tableFrame(spark,
+      new graft.sources.IceLiteV2Table(this, md, snap, files = files))
 
   /** Time travel by wall clock (`FOR TIMESTAMP AS OF`): scan the latest
     * snapshot committed at or before `tsMillis`. Resolution is a pure
@@ -1346,57 +1328,6 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
       .getOrElse(throw new NoSuchElementException(
         s"no snapshot of table ${md.name} at or before $tsMillis"))
     scanSnapshot(snap.snapshot_id)
-  }
-
-  private def emptyFrame(md: TableMetadata): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], md.schema)
-
-  /** Plan a read over `files` (relative paths) with `md`'s schema; for
-    * partitioned tables the k=v directory values are restored via one
-    * basePath per snapshot dir (intermediate snap-N segments aren't k=v,
-    * ruling out a single table-root basePath) — commits union, and
-    * compaction collapses them when the union grows long. */
-  private[icelite] def readFiles(
-      md: TableMetadata,
-      files: Seq[String],
-      deletePaths: Option[Seq[String]] = None,
-      deleteJoin: String = "left_anti"): DataFrame = {
-    val deleteDF = deletePaths.filter(_.nonEmpty).map { ps =>
-      spark.read.schema(IceTable.PositionDeleteSchema).parquet(ps: _*)
-    }
-    def leafDone(leaf: DataFrame): DataFrame =
-      deleteDF.map(joinPositionDeletes(leaf, _, deleteJoin)).getOrElse(leaf)
-    // a rename/drop-evolved table binds file columns by the parquet field
-    // ids appendInternal stamps: the read schema carries the ids
-    // (TableMetadata.scanSchema), and the relations are built under the
-    // idReadSession twin so the id-matching flag is live at execution
-    // without leaking into the caller's session conf. Hive partition
-    // columns keep resolving from directory paths — id matching only
-    // applies to columns physically read.
-    val readSchema = md.scanSchema
-    val readSpark  = if (md.readById) IcebergFormat.idReadSession(spark) else spark
-    if (files.isEmpty) emptyFrame(md)
-    // the hive-restore branch also covers files written under a PRIOR
-    // partition layout (evolvePartitioning): their k=v dir segments need
-    // per-snapshot basePath discovery even if the table is unpartitioned
-    // NOW, and an unpartitioned-era dir under it degrades to a plain read
-    else if (md.partitionCols.nonEmpty || files.exists(_.contains("="))) {
-      files
-        .groupBy(snapDirOf)
-        .toSeq.sortBy(_._1)
-        .map { case (rel, fs) =>
-          leafDone(readSpark.read
-            .schema(readSchema)
-            .option("basePath", new Path(location, rel).toString)
-            .parquet(fs.map(f => new Path(location, f).toString): _*))
-        }
-        .reduce(_ unionByName _)
-        // a user schema + hive dirs comes back with the partition columns
-        // APPENDED (data-column order first), not in the declared order;
-        // positional consumers (union/except/writers) need md.schema order
-        .select(md.schema.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-    } else leafDone(
-      readSpark.read.schema(readSchema).parquet(files.map(f => new Path(location, f).toString): _*))
   }
 
   def snapshots(): Seq[Snapshot] = metadata.snapshots
@@ -1547,9 +1478,7 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * stats then prune within the manifests that remain. Missing summaries
     * or stats are conservatively kept. */
   def planFiles(colName: String, lower: Option[String], upper: Option[String]): Seq[String] =
-    metadata.currentSnapshot
-      .map(snap => planFilesBounds(snap, Map(colName -> (lower, upper))))
-      .getOrElse(Seq.empty)
+    rangeFiles(metadata, colName, lower, upper)
 
   /** Multi-column generalization of [[planFiles]] — the planning entry the
     * DataSource V2 scan builder calls with every pushed-down range bound at
@@ -1560,8 +1489,15 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * are conservative (file kept), identical to single-column planFiles. */
   def planFilesBounds(
       snap: Snapshot,
+      bounds: Map[String, (Option[String], Option[String])]): Seq[String] =
+    planFilesBounds(metadata, snap, bounds)
+
+  /** [[planFilesBounds]] with the column types and retired names of `md`,
+    * the metadata `snap` was resolved from. */
+  private[graft] def planFilesBounds(
+      md: TableMetadata,
+      snap: Snapshot,
       bounds: Map[String, (Option[String], Option[String])]): Seq[String] = {
-    val md = metadata
     if (bounds.isEmpty) return filesOf(snap)
     val types = bounds.keys.map { c =>
       c -> md.schema.fields.find(_.name == c).map(_.dataType)
@@ -1595,18 +1531,17 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * `colName` in [lower, upper]. The caller still applies the row-level
     * predicate (pruning is file-granular, like Iceberg manifests +
     * parquet row-group stats below it). Partition columns are restored
-    * exactly as in a full scan. */
+    * and position deletes applied exactly as in a full scan. */
   def scanRange(colName: String, lower: Option[String], upper: Option[String]): DataFrame = {
     val md = metadata
-    md.currentSnapshot match {
-      case None => emptyFrame(md)
-      case Some(snap) =>
-        // route through readFilesOf so a merge-on-read snapshot's position
-        // deletes are applied — a pruned scan must never resurrect rows a
-        // full scan hides
-        readFilesOf(md, snap, planFilesBounds(snap, Map(colName -> (lower, upper))))
-    }
+    frame(md, md.currentSnapshot, Some(rangeFiles(md, colName, lower, upper)))
   }
+
+  /** [[planFiles]] over `md`'s current snapshot. */
+  private def rangeFiles(md: TableMetadata, colName: String,
+      lower: Option[String], upper: Option[String]): Seq[String] =
+    md.currentSnapshot.fold(Seq.empty[String])(
+      planFilesBounds(md, _, Map(colName -> (lower, upper))))
 
   /** Export the current snapshot as a STANDARD Apache Iceberg v2 table at
     * `destLocation` — metadata only, zero data copy: the Iceberg manifests
@@ -1719,11 +1654,10 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     val md       = metadata
     val snap     = md.currentSnapshot
-    val affected = planFiles(colName, Some(lower), Some(upper))
+    val affected = rangeFiles(md, colName, Some(lower), Some(upper))
     val colType  = md.schema(colName).dataType
     val hit      = col(colName) >= lit(lower).cast(colType) && col(colName) <= lit(upper).cast(colType)
-    val survivors = snap.map(readFilesOf(md, _, affected)).getOrElse(readFiles(md, affected))
-      .filter(not(coalesce(hit, lit(false))))
+    val survivors = frame(md, snap, Some(affected)).filter(not(coalesce(hit, lit(false))))
     appendInternal(survivors, replace = true, operation = "delete",
       carry = snap.map(_ -> affected.toSet))
   }
@@ -1781,8 +1715,8 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     val bounds = aligned.agg(
       min(col(keyCol)).cast("string").as("lo"), max(col(keyCol)).cast("string").as("hi")).head()
     if (bounds.isNullAt(0)) return this // empty source: nothing matches, nothing inserts
-    val affected = planFiles(keyCol, Some(bounds.getString(0)), Some(bounds.getString(1)))
-    val t      = snap.map(readFilesOf(md, _, affected)).getOrElse(readFiles(md, affected)).alias("t")
+    val affected = rangeFiles(md, keyCol, Some(bounds.getString(0)), Some(bounds.getString(1)))
+    val t      = frame(md, snap, Some(affected)).alias("t")
     val srcA   = aligned.alias("s")
     val tKey   = col(s"t.$keyCol")
     val sKey   = col(s"s.$keyCol")
@@ -2010,82 +1944,12 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     require(isAncestor(fromSnapshotId, toSnapshotId),
       s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId — not an incremental window")
     // append-only window ⇒ the delta is exactly the manifests `to` gained
-    // over `from`: the reader opens only the delta's manifests, so an
-    // incremental consumer's planning cost is O(new commits) too
+    // over `from`: the file list comes from the delta's manifests alone,
+    // and the scan reads only their files (its planner statistics still
+    // consult `to`'s manifests, as every connector scan's do)
     val fromManifests = from.manifests.toSet
     val delta         = to.manifests.filterNot(fromManifests)
-    readFiles(md, delta.flatMap(readManifest(_).map(_.file)))
-  }
-
-  /** Row-level CHANGELOG of the snapshot window (from, to] — the CDC feed
-    * Iceberg exposes as `create_changelog_view`: one row per changed row,
-    * with `_change_type` ('insert' | 'delete') and `_commit_snapshot_id`.
-    * Appends and MERGE/UPDATE insert files emit +I rows; merge-on-read
-    * delta commits emit -D rows by SEMI-joining the parent's data files
-    * against exactly the delete files that commit ADDED (earlier deletes
-    * aren't re-emitted, and a delta scan only ever targets live rows, so
-    * the feed is exact). UPDATE appears as delete+insert, the standard
-    * MoR changelog shape.
-    *
-    * Scale: per commit, the -D side reads ONLY parent files inside the
-    * new delete entries' recorded path ranges (manifest-stat pruning,
-    * driver does O(files) string compares), and the +I side reads only
-    * the added files — a day's CDC costs a day's changes. Rewrite-style
-    * snapshots (compact / copy-on-write DML / overwrite) are rejected:
-    * they rewrite history rather than change rows, and diffing them
-    * row-wise would cost two full scans. */
-  def scanChangelog(fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
-    import org.apache.spark.sql.functions.lit
-    val md = metadata
-    require(fromSnapshotId <= toSnapshotId, s"from $fromSnapshotId > to $toSnapshotId")
-    val byId = md.snapshots.map(s => s.snapshot_id -> s).toMap
-    // walk the parent chain to -> from (rollbacks fork history: only a
-    // true ancestor path is a valid CDC window), then restore commit order
-    var cur = toSnapshotId
-    var chain: List[Snapshot] = Nil
-    while (cur != fromSnapshotId && cur != 0L) {
-      val sn = byId.getOrElse(cur, throw new NoSuchElementException(s"snapshot $cur"))
-      chain = sn :: chain
-      cur = sn.parent_snapshot_id.getOrElse(0L)
-    }
-    require(cur == fromSnapshotId,
-      s"snapshot $fromSnapshotId is not an ancestor of $toSnapshotId — not a changelog window")
-    val parts = chain.flatMap { sn =>
-      val parent          = sn.parent_snapshot_id.flatMap(byId.get)
-      val parentManifests = parent.toSeq.flatMap(_.manifests).toSet
-      val parentDeletes   = parent.toSeq.flatMap(_.deleteManifests).toSet
-      require(parentManifests.subsetOf(sn.manifests.toSet),
-        s"changelog window crosses a rewrite snapshot " +
-          s"(${sn.operation} ${sn.snapshot_id}) — rewrites restate files, not rows")
-      val newDataFiles =
-        sn.manifests.filterNot(parentManifests).flatMap(readManifest(_).map(_.file))
-      val inserted =
-        if (newDataFiles.isEmpty) None
-        else Some(readFiles(md, newDataFiles).withColumn("_change_type", lit("insert")))
-      val newDelEntries = sn.deleteManifests.filterNot(parentDeletes).flatMap(readManifest)
-      val deleted =
-        if (newDelEntries.isEmpty) None
-        else {
-          val ranges = newDelEntries.map(_.stats.flatMap(_.get("file_path")))
-          def covered(f: String): Boolean = ranges.exists {
-            case Some(r) =>
-              r.min.forall(BoundOrder.compareStrings(_, f) <= 0) &&
-                r.max.forall(BoundOrder.compareStrings(f, _) <= 0)
-            case None    => true // statless delete file: conservative keep
-          }
-          val cands    = parent.toSeq.flatMap(filesOf).filter(covered)
-          val delPaths = newDelEntries.map(e => new Path(location, e.file).toString)
-          Some(readFiles(md, cands, Some(delPaths), "left_semi")
-            .withColumn("_change_type", lit("delete")))
-        }
-      (inserted.toSeq ++ deleted.toSeq)
-        .map(_.withColumn("_commit_snapshot_id", lit(sn.snapshot_id)))
-    }
-    if (parts.isEmpty)
-      emptyFrame(md)
-        .withColumn("_change_type", lit(""))
-        .withColumn("_commit_snapshot_id", lit(0L))
-    else parts.reduce(_ unionByName _)
+    frame(md, Some(to), Some(delta.flatMap(readManifest(_).map(_.file))))
   }
 
   /** File paths ADDED in the append-only snapshot window (from, to] — the
@@ -2413,12 +2277,7 @@ object IceTable {
       s"not a metadata file path: $metadataPath")
     val t  = new IceTable(spark, p.getParent.getParent)
     val md = t.metadataAt(version.toInt)
-    md.currentSnapshot match {
-      // readFilesOf, not readFiles: the pinned snapshot's merge-on-read
-      // position deletes apply here exactly as in scan()/scanSnapshot
-      case Some(snap) => t.readFilesOf(md, snap, t.filesOf(snap))
-      case None       => t.emptyFrame(md)
-    }
+    t.frame(md, md.currentSnapshot)
   }
 
   /** Per-JVM cache of parsed manifests, keyed by absolute dir path.

@@ -865,14 +865,15 @@ object IcebergFormat {
     read(spark, metadataPath, Some(snapshotId))
   }
 
-  /** The data files `df`'s Iceberg-format connector scans read after
-    * manifest and pushed-filter pruning: `Dataset.inputFiles` for these
-    * scans, which Spark reports only for file-source relations. */
+  /** The data files `df`'s connector scans (of either table format) read
+    * after manifest and pushed-filter pruning: `Dataset.inputFiles` for
+    * these scans, which Spark reports only for file-source relations. */
   def inputFiles(df: DataFrame): Seq[String] =
     df.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
         r.scan match {
           case s: graft.sources.IcebergMorScan => s.survivors.map(_.path.toString)
+          case s: graft.sources.IceLiteScan    => s.inputFiles
           case _                               => Nil
         }
     }.flatten.distinct

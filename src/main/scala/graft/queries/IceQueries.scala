@@ -371,7 +371,7 @@ object IceQueries {
       orders.filter(col("o_orderkey") < 1000).coalesce(1))
     t.append(orders.filter(col("o_orderkey") >= 1000).coalesce(1))
     val pruned = t.scanRange("o_orderkey", Some("0"), Some("999"))
-    require(pruned.inputFiles.length == 1, "file skipping failed to prune")
+    require(IcebergFormat.inputFiles(pruned).length == 1, "file skipping failed to prune")
     pruned
       .filter(col("o_orderkey") <= 999)
       .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -385,7 +385,7 @@ object IceQueries {
     val t   = cat.createOrReplaceTable("graft", "nations_cp",
       Tables.nation(s, d).repartition(6))
     t.compact(1)
-    require(t.scan().inputFiles.length == 1, "compaction did not bin-pack")
+    require(IcebergFormat.inputFiles(t.scan()).length == 1, "compaction did not bin-pack")
     t.scan().orderBy("n_nationkey")
   }
 
@@ -398,10 +398,10 @@ object IceQueries {
       Tables.orders(s, d), Seq("o_orderpriority"))
     val pruned = t.scan().filter(col("o_orderpriority") === "1-URGENT")
     val plan   = pruned.queryExecution.executedPlan.toString
-    // the filter expression must appear INSIDE the PartitionFilters list
-    // ('PartitionFilters: [...]' exists on every file scan, even empty)
-    val prunedOk = raw"PartitionFilters: \[[^\]]*o_orderpriority[^\]]*=[^\]]*\]".r
-      .findFirstIn(plan).isDefined
+    // the filter must reach the scan as a bound on the partition column
+    // and drop the other partitions' files
+    val prunedOk = plan.contains("prunedBy=[o_orderpriority in [1-URGENT, 1-URGENT]]") &&
+      IcebergFormat.inputFiles(pruned).length < IcebergFormat.inputFiles(t.scan()).length
     require(prunedOk, "partition filter did not reach the scan: " + plan.take(400))
     pruned
       .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
@@ -503,7 +503,7 @@ object IceQueries {
     t.append(nation.filter(col("n_regionkey") === 0).coalesce(1)) // snapshot 2
     t.append(nation.filter(col("n_regionkey") === 1).coalesce(1)) // snapshot 3
     val delta = t.scanIncremental(1, 3)
-    require(delta.inputFiles.length == 2, "incremental scan read base files")
+    require(IcebergFormat.inputFiles(delta).length == 2, "incremental scan read base files")
     delta.orderBy("n_nationkey")
   }
 
@@ -547,7 +547,7 @@ object IceQueries {
     val t = cat.createOrReplaceTable("graft", "orders_zo",
       Tables.orders(s, d).repartition(8))
     t.compactZOrder(16, Seq("o_custkey", "o_orderkey"))
-    val total = t.scan().inputFiles.length
+    val total = IcebergFormat.inputFiles(t.scan()).length
     require(t.planFiles("o_custkey", Some("0"), Some("100")).size < total,
       "z-order: custkey slice did not prune")
     require(t.planFiles("o_orderkey", Some("0"), Some("100")).size < total,
@@ -955,7 +955,7 @@ object IceQueries {
     val sumT = cat.createOrReplaceTable("graft", "orders_iv_summary",
       aggOf(t.scanSnapshot(1)))
     val deltaScan = t.scanIncremental(1, 2)
-    require(deltaScan.inputFiles.length == 1, "incremental scan touched base files")
+    require(IcebergFormat.inputFiles(deltaScan).length == 1, "incremental scan touched base files")
     val merged = sumT.scan().as("a")
       .join(aggOf(deltaScan).as("b"), Seq("o_orderpriority"), "full_outer")
       .select(
@@ -1440,7 +1440,7 @@ object IceQueries {
     graft.sources.IceLiteSource.filesOpened.reset()
     val rows = joined.collect()
     val opened = graft.sources.IceLiteSource.filesOpened.sum()
-    val total  = t.scan().inputFiles.length.toLong
+    val total  = IcebergFormat.inputFiles(t.scan()).length.toLong
     require(opened < total,
       s"runtime filtering pruned nothing: opened $opened of $total files")
     require(rows.length == 1, s"expected one priority group, got ${rows.length}")
@@ -1466,8 +1466,8 @@ object IceQueries {
       .write.format("icelite").options(opts).mode("append").save()
     // writer-collected stats must drive file skipping like any append
     val pruned = t.scanRange("n_nationkey", Some("0"), Some("9"))
-    require(pruned.inputFiles.length == 1,
-      s"V2-written file stats failed to prune: read ${pruned.inputFiles.length} files")
+    require(IcebergFormat.inputFiles(pruned).length == 1,
+      s"V2-written file stats failed to prune: read ${IcebergFormat.inputFiles(pruned).length} files")
     require(t.snapshots().size == 3, s"expected 3 snapshots, got ${t.snapshots().size}")
     s.read.format("icelite").option("location", t.location.toString).load()
       .orderBy("n_nationkey")
@@ -1804,7 +1804,7 @@ object IceQueries {
 
   /** SQL metadata tables through the catalog plugin:
     * `SELECT ... FROM cat.ns.t.snapshots` joined with `.history` — the
-    * Iceberg inspection surface by name ([[graft.sources.IceLiteMetaTable]],
+    * Iceberg inspection surface by name ([[graft.sources.LocalDataFrameTable]],
     * a LocalScan over planning-sized metadata, zero data IO; the reference
     * reads the same via PyIceberg's `table.inspect`/DuckDB metadata
     * functions). Deterministic because each commit is a single write task
@@ -4464,9 +4464,9 @@ object IceQueries {
       base.repartitionByRange(8, col("xk")))
     val zScan = tz.scanRange("yk", Some("0"), Some("127"))
     val lScan = tl.scanRange("yk", Some("0"), Some("127"))
-    require(zScan.inputFiles.length < lScan.inputFiles.length,
-      s"z-order pruning opened ${zScan.inputFiles.length} files; " +
-        s"linear opened ${lScan.inputFiles.length} — interleave buys nothing")
+    val (zFiles, lFiles) = (IcebergFormat.inputFiles(zScan).length, IcebergFormat.inputFiles(lScan).length)
+    require(zFiles < lFiles,
+      s"z-order pruning opened $zFiles files; linear opened $lFiles — interleave buys nothing")
     zScan.filter(col("yk") <= 127)
       .groupBy("yk")
       .agg(count(lit(1)).as("n_rows"), sum("cents").as("cents_sum"))

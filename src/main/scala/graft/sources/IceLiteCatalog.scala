@@ -11,6 +11,81 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 
+/** Distributed serving of `position_deletes`: Spark's own V2 parquet
+  * table over the live content-1 delete files (schema pinned to
+  * (file_path, pos); delete-file provenance available as
+  * `_metadata.file_path`). An empty delete set degenerates to a zero-row
+  * LocalScan. */
+private[sources] object PositionDeletesTables {
+  def apply(name: String, paths: Seq[String]): Table = {
+    import graft.icelite.IcebergFormat
+    val spark = SparkSession.active
+    if (paths.isEmpty)
+      return new LocalDataFrameTable(name,
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          IcebergFormat.positionDeletesSchema))
+    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
+      name, spark, CaseInsensitiveStringMap.empty(), paths,
+      Some(IcebergFormat.positionDeletesSchema),
+      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
+  }
+}
+
+/** A read-only V2 table over a driver-local DataFrame: the SQL metadata
+  * tables — `SELECT * FROM cat.ns.t.snapshots` (and `.history`, `.files`,
+  * `.manifests`, `.partitions`, `.refs`, `.delete_files`), the Iceberg
+  * inspection surface by name — of both table formats. Each is
+  * planning-sized — O(commits) or O(files) rows derived from metadata
+  * with zero data IO — so it is served as a
+  * [[org.apache.spark.sql.connector.read.LocalScan]] (driver-local rows,
+  * Spark plans a LocalTableScan): correct at any table size because the
+  * row count scales with METADATA, not data. */
+private[sources] final class LocalDataFrameTable(
+    tableName: String, df: org.apache.spark.sql.DataFrame)
+    extends Table with SupportsRead {
+  import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, LocalScan}
+  override def name(): String = tableName
+  override def schema(): StructType = df.schema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new ScanBuilder {
+      override def build(): Scan = new LocalScan {
+        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
+          df.queryExecution.executedPlan.executeCollect()
+        override def readSchema(): StructType = df.schema
+        override def description(): String = s"LocalDataFrameTable($tableName)"
+      }
+    }
+}
+
+private[sources] object LocalDataFrameTable {
+  /** The metadata-table names `cat.ns.t.<kind>` resolves. */
+  val kinds: Set[String] =
+    Set("snapshots", "history", "files", "manifests", "partitions", "refs",
+      "delete_files", "position_deletes",
+      // native-dir only: registered Puffin statistics files (TableStats)
+      "statistics")
+
+  /** Metadata table `kind` of IceLite table `ice`. (`position_deletes` —
+    * the deleted POSITIONS — is data-proportional and therefore served as
+    * a distributed parquet table in loadTable, never as a LocalScan.) */
+  def of(ice: IceTable, kind: String): LocalDataFrameTable = {
+    val md = ice.metadata
+    new LocalDataFrameTable(s"${md.namespace}.${md.name}.$kind", kind match {
+      case "snapshots"  => ice.snapshotsTable()
+      case "history"    => ice.historyTable()
+      case "files"      => ice.filesTable()
+      case "manifests"  => ice.manifestsTable()
+      case "partitions" => ice.partitionsTable()
+      case "refs"       => ice.refsTable()
+      // live MoR delete-file debt (icelite carries position deletes only),
+      // one row per delete FILE as in Iceberg's `delete_files`
+      case "delete_files" => ice.deletesTable()
+    })
+  }
+}
+
 /** Spark catalog plugin over an IceLite catalog backend — the last mile of
   * the SQL surface. Two bindings:
   *
@@ -42,98 +117,6 @@ import scala.jdk.CollectionConverters._
   * pointer, and every write's FS commit is published by a CAS pointer
   * swap ([[RestCatalog.advancePointer]]) — the PyIceberg/Nessie commit
   * order, so concurrent writers race on the pointer, not on files. */
-/** Read-only SQL metadata tables — `SELECT * FROM cat.ns.t.snapshots`
-  * (and `.history`, `.files`, `.manifests`, `.partitions`, `.refs`), the
-  * Iceberg inspection surface by name. Each is planning-sized — O(commits)
-  * or O(files) rows derived from metadata JSON + manifests with zero data
-  * IO — so it is served as a [[org.apache.spark.sql.connector.read.LocalScan]]
-  * (driver-local rows, Spark plans a LocalTableScan): correct at any table
-  * size because the row count scales with METADATA, not data. */
-private[sources] object IceLiteMetaTable {
-  val kinds: Set[String] =
-    Set("snapshots", "history", "files", "manifests", "partitions", "refs",
-      "delete_files", "position_deletes",
-      // native-dir only: registered Puffin statistics files (TableStats)
-      "statistics")
-}
-
-private[sources] final class IceLiteMetaTable(ice: IceTable, kind: String)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, LocalScan}
-
-  private lazy val resolved: org.apache.spark.sql.DataFrame = kind match {
-    case "snapshots"  => ice.snapshotsTable()
-    case "history"    => ice.historyTable()
-    case "files"      => ice.filesTable()
-    case "manifests"  => ice.manifestsTable()
-    case "partitions" => ice.partitionsTable()
-    case "refs"       => ice.refsTable()
-    // live MoR delete-file debt (icelite carries position deletes only).
-    // Named `delete_files` to match Iceberg's metadata-table semantics:
-    // one row per delete FILE. (`position_deletes` — the deleted
-    // POSITIONS — is data-proportional and therefore served as a
-    // distributed parquet table in loadTable, never through this
-    // LocalScan path.)
-    case "delete_files" => ice.deletesTable()
-  }
-
-  override def name(): String =
-    s"${ice.metadata.namespace}.${ice.metadata.name}.$kind"
-  override def schema(): StructType = resolved.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new LocalScan {
-        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-          resolved.queryExecution.executedPlan.executeCollect()
-        override def readSchema(): StructType = resolved.schema
-        override def description(): String = s"IceLiteMetaTable(${name()})"
-      }
-    }
-}
-
-/** Distributed serving of `position_deletes`: Spark's own V2 parquet
-  * table over the live content-1 delete files (schema pinned to
-  * (file_path, pos); delete-file provenance available as
-  * `_metadata.file_path`). An empty delete set degenerates to a zero-row
-  * LocalScan. */
-private[sources] object PositionDeletesTables {
-  def apply(name: String, paths: Seq[String]): Table = {
-    import graft.icelite.IcebergFormat
-    val spark = SparkSession.active
-    if (paths.isEmpty)
-      return new LocalDataFrameTable(name,
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          IcebergFormat.positionDeletesSchema))
-    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
-      name, spark, CaseInsensitiveStringMap.empty(), paths,
-      Some(IcebergFormat.positionDeletesSchema),
-      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
-  }
-}
-
-/** A read-only V2 table over a driver-local DataFrame — the standard-
-  * format twin of [[IceLiteMetaTable]] (metadata-sized rows, LocalScan). */
-private[sources] final class LocalDataFrameTable(
-    tableName: String, df: org.apache.spark.sql.DataFrame)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, LocalScan}
-  override def name(): String = tableName
-  override def schema(): StructType = df.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new LocalScan {
-        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
-          df.queryExecution.executedPlan.executeCollect()
-        override def readSchema(): StructType = df.schema
-        override def description(): String = s"LocalDataFrameTable($tableName)"
-      }
-    }
-}
-
 final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with ProcedureCatalog
     with ViewCatalog {
 
@@ -219,7 +202,7 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     // Iceberg-style SQL metadata tables: `cat.ns.t.snapshots` resolves as
     // Identifier(ns = [ns, t], name = "snapshots") — intercept before the
     // single-level-namespace rule
-    if (nsArr.length == 2 && IceLiteMetaTable.kinds.contains(ident.name().toLowerCase)) {
+    if (nsArr.length == 2 && LocalDataFrameTable.kinds.contains(ident.name().toLowerCase)) {
       // standard-format dirs take precedence like the base-table dispatch
       // below: `t.delete_files` over one surfaces the live MoR debt
       // (position AND equality delete files) from its Avro manifests
@@ -270,7 +253,7 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
           return PositionDeletesTables(
             s"$catalogName.${nsArr(0)}.${nsArr(1)}.position_deletes",
             backend.loadTable(nsArr(0), nsArr(1)).positionDeleteFilePaths())
-        return new IceLiteMetaTable(backend.loadTable(nsArr(0), nsArr(1)),
+        return LocalDataFrameTable.of(backend.loadTable(nsArr(0), nsArr(1)),
           ident.name().toLowerCase)
       }
     }
@@ -282,8 +265,7 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     nativeDir(ns, ident.name()).foreach { loc =>
       return new IcebergMorV2Table(SparkSession.active, loc)
     }
-    val ice = loadIce(ns, ident)
-    new IceLiteV2Table(ice, ice.metadata.currentSnapshot, publishHook(ns, ident.name()))
+    IceLiteV2Table.current(loadIce(ns, ident), publishHook(ns, ident.name()))
   }
 
   /** SQL time travel by snapshot id or ref name: `SELECT ... FROM
@@ -295,17 +277,18 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
   override def loadTable(ident: Identifier, version: String): Table = {
     val ns  = ns1(ident.namespace())
     val ice = loadIce(ns, ident)
+    val md  = ice.metadata
     val snap = version.toLongOption match {
-      case Some(id) => Some(ice.metadata.snapshot(id).getOrElse(
+      case Some(id) => Some(md.snapshot(id).getOrElse(
         throw new NoSuchElementException(s"snapshot $id of ${ident.name()}")))
       case None =>
-        val info = ice.metadata.refMap.getOrElse(version,
+        val info = md.refMap.getOrElse(version,
           throw new NoSuchElementException(
             s"no snapshot id or ref '$version' of ${ident.name()}"))
         // a ref at snapshot 0 is an empty branch: scan as the empty table
-        ice.metadata.snapshot(info.snapshot_id)
+        md.snapshot(info.snapshot_id)
     }
-    new IceLiteV2Table(ice, snap)
+    new IceLiteV2Table(ice, md, snap)
   }
 
   /** SQL time travel by wall clock: `TIMESTAMP AS OF <ts>`. Spark hands
@@ -314,12 +297,13 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val ns  = ns1(ident.namespace())
     val ice = loadIce(ns, ident)
+    val md  = ice.metadata
     val ms  = Math.floorDiv(timestamp, 1000L)
-    val snap = ice.metadata.snapshots.filter(_.timestamp_ms <= ms)
+    val snap = md.snapshots.filter(_.timestamp_ms <= ms)
       .sortBy(sn => (sn.timestamp_ms, sn.snapshot_id)).lastOption.getOrElse(
         throw new NoSuchElementException(
           s"no snapshot of ${ident.name()} at or before ${ms} ms"))
-    new IceLiteV2Table(ice, Some(snap))
+    new IceLiteV2Table(ice, md, Some(snap))
   }
 
   override def createTable(
@@ -351,7 +335,7 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
       ident.name(), ns, schema, partCols.toIndexedSeq)
     // REST: adopt the new table by its metadata pointer (spec registerTable)
     rest.foreach(_.registerTable(ns, ident.name(), ice.metadataLocation))
-    new IceLiteV2Table(ice, ice.metadata.currentSnapshot, publishHook(ns, ident.name()))
+    IceLiteV2Table.current(ice, publishHook(ns, ident.name()))
   }
 
   /** ALTER TABLE ADD COLUMN(S) / ALTER COLUMN … TYPE: metadata-only
@@ -475,8 +459,7 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     if (drops.nonEmpty) ice.dropColumns(drops)
     val reloaded = backend.loadTable(ns, ident.name())
     publishHook(ns, ident.name()).foreach(_(reloaded))
-    new IceLiteV2Table(reloaded, reloaded.metadata.currentSnapshot,
-      publishHook(ns, ident.name()))
+    IceLiteV2Table.current(reloaded, publishHook(ns, ident.name()))
   }
 
   override def dropTable(ident: Identifier): Boolean =

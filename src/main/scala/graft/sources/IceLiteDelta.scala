@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.icelite.{IceTable, Snapshot}
+import graft.icelite.{IceTable, Snapshot, TableMetadata}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -42,16 +42,18 @@ import java.util.Locale
   * skipping bounds what is even read. */
 final class IceLiteDeltaBuilder(
     ice: IceTable,
+    md: TableMetadata,
     snap: Option[Snapshot],
     info: RowLevelOperationInfo,
     onCommit: Option[IceTable => Unit])
     extends RowLevelOperationBuilder {
   override def build(): RowLevelOperation =
-    new IceLiteDeltaOperation(ice, snap, info, onCommit)
+    new IceLiteDeltaOperation(ice, md, snap, info, onCommit)
 }
 
 final class IceLiteDeltaOperation(
     ice: IceTable,
+    md: TableMetadata,
     snap: Option[Snapshot],
     info: RowLevelOperationInfo,
     onCommit: Option[IceTable => Unit])
@@ -72,13 +74,12 @@ final class IceLiteDeltaOperation(
   override def representUpdateAsDeleteAndInsert(): Boolean = true
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new IceLiteScanBuilder(ice, snap)
+    new IceLiteScanBuilder(ice, md, snap)
 
   override def newWriteBuilder(writeInfo: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
       override def build(): DeltaWrite = {
-        val md = ice.metadata
-        // insert-bearing commands (UPDATE/MERGE) must hand rows in table
+          // insert-bearing commands (UPDATE/MERGE) must hand rows in table
         // schema order — partIdx/dataIdx in the partitioned writer are
         // derived from it; DELETE's row schema is empty (row-id only)
         require(

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.icelite.{IceTable, Snapshot}
+import graft.icelite.{IceTable, Snapshot, TableMetadata}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -37,16 +37,18 @@ import java.util.Locale
   * filtering has narrowed it). */
 final class IceLiteRowLevelBuilder(
     ice: IceTable,
+    md: TableMetadata,
     snap: Option[Snapshot],
     info: RowLevelOperationInfo,
     onCommit: Option[IceTable => Unit])
     extends RowLevelOperationBuilder {
   override def build(): RowLevelOperation =
-    new IceLiteRowLevelOperation(ice, snap, info, onCommit)
+    new IceLiteRowLevelOperation(ice, md, snap, info, onCommit)
 }
 
 final class IceLiteRowLevelOperation(
     ice: IceTable,
+    md: TableMetadata,
     snap: Option[Snapshot],
     info: RowLevelOperationInfo,
     onCommit: Option[IceTable => Unit])
@@ -60,7 +62,7 @@ final class IceLiteRowLevelOperation(
     s"icelite copy-on-write ${command().toString.toLowerCase(Locale.ROOT)}"
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new IceLiteScanBuilder(ice, snap, onBuild = {
+    new IceLiteScanBuilder(ice, md, snap, onBuild = {
       case s: IceLiteScan => configuredScan = s
       case other => throw new IllegalStateException(
         s"row-level operation scan must be a data scan, got ${other.getClass.getName}")
@@ -68,7 +70,6 @@ final class IceLiteRowLevelOperation(
 
   override def newWriteBuilder(writeInfo: LogicalWriteInfo): WriteBuilder = new WriteBuilder {
     override def build(): Write = {
-      val md = ice.metadata
     require(md.partitionCols.isEmpty,
       "icelite row-level SQL operations support unpartitioned tables; " +
         "use the library deleteRange/merge for hive layouts")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.icelite.{BoundOrder, FsCatalog, IceTable, IcebergFormat, Snapshot}
+import graft.icelite.{BoundOrder, FsCatalog, IceTable, IcebergFormat, Snapshot, TableMetadata}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.paths.SparkPath
@@ -31,8 +31,10 @@ import scala.collection.mutable
   * `spark.read.format("icelite").option("location", dir)` or
   * `.option("warehouse", wh).option("table", "ns.name")`).
   *
-  * What the V2 integration buys over the library-call scan
-  * (`Engine.table` / `IceTable.scan`):
+  * It is also the library's read path: `IceTable.scan` and its variants
+  * (`Engine.table`) are DataFrames over [[IceLiteV2Table]], so a library
+  * call and SQL read a table the same way. What the V2 integration buys
+  * over a plain parquet read of the snapshot's files:
   *
   *  - `SupportsPushDownFilters`: range/equality predicates from a plain SQL
   *    `WHERE` clause reach [[IceTable.planFilesBounds]], so manifest min/max
@@ -45,7 +47,8 @@ import scala.collection.mutable
   *    decoded — `ReadSchema` semantics at the file level.
   *  - `SupportsReportPartitioning` + `HasPartitionKey`: hive-layout
   *    partitioned tables report `KeyGroupedPartitioning(identity(p), n)`,
-  *    one input partition per partition value. Under
+  *    one input partition per partition value, when every file read sits
+  *    under the current layout (not across a partition evolution). Under
   *    `spark.sql.sources.v2.bucketing.enabled` two IceLite tables
   *    partitioned on the join key plan a STORAGE-PARTITIONED JOIN — zero
   *    Exchange on either side, co-location coming from OUR table metadata
@@ -55,7 +58,7 @@ import scala.collection.mutable
   * manifest-summary skip applies before any manifest is opened), and the
   * per-file readers run fully executor-side. Snapshot selection
   * (`option("snapshot", id)` / `option("asOfTimestamp", ms)`) gives SQL
-  * users the same time travel the library scan has.
+  * users the same time travel the library's `scanSnapshot`/`scanAsOf` have.
   */
 final class IceLiteSource extends TableProvider with DataSourceRegister {
 
@@ -114,13 +117,12 @@ final class IceLiteSource extends TableProvider with DataSourceRegister {
     val opts = new CaseInsensitiveStringMap(properties)
     if (isIceberg(opts))
       return new IcebergV2Table(resolveLocation(opts), schema)
-    val ice  = loadIce(opts)
-    val snap = resolveSnapshot(ice, opts)
-    new IceLiteV2Table(ice, snap, None, Option(opts.get("delete-mode")))
+    val ice = loadIce(opts)
+    val md  = ice.metadata
+    new IceLiteV2Table(ice, md, resolveSnapshot(md, opts), None, Option(opts.get("delete-mode")))
   }
 
-  private def resolveSnapshot(ice: IceTable, opts: CaseInsensitiveStringMap): Option[Snapshot] = {
-    val md = ice.metadata
+  private def resolveSnapshot(md: TableMetadata, opts: CaseInsensitiveStringMap): Option[Snapshot] = {
     Option(opts.get("snapshot")).map(_.toLong).map { id =>
       md.snapshot(id).getOrElse(throw new NoSuchElementException(s"snapshot $id of ${md.name}"))
     }.orElse {
@@ -144,23 +146,27 @@ object IceLiteSource {
   private[graft] val deleteFilesOpened = new java.util.concurrent.atomic.LongAdder()
 }
 
-/** V2 Table over one resolved IceLite snapshot (None = empty, pre-commit).
-  * `onCommit` is the catalog-publication hook: a REST-catalog-bound table
+/** V2 Table over one resolved IceLite snapshot (None = empty, pre-commit)
+  * of the metadata `md` its load resolved: schema, layout and every scan
+  * of the table read that one value. `files` pins scans to a subset of
+  * the snapshot's data files (the library's pruned reads); the
+  * snapshot's position deletes still apply to them. `onCommit` is the
+  * catalog-publication hook: a REST-catalog-bound table
   * must advance the catalog's metadata pointer after each write's FS
   * commit (pointer publication is what makes the commit visible to other
   * catalog users); path-addressed tables need no hook. */
 final class IceLiteV2Table(
     ice: IceTable,
+    md: TableMetadata,
     snap: Option[Snapshot],
     onCommit: Option[IceTable => Unit] = None,
-    deleteMode: Option[String] = None)
+    deleteMode: Option[String] = None,
+    files: Option[Seq[String]] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
-
-  private val md = ice.metadata
 
   /** Row-lineage metadata columns (Iceberg's `_file`/`_pos`): the
     * manifest-relative data file path and the 0-based row position within
@@ -215,7 +221,7 @@ final class IceLiteV2Table(
     md.partitionCols.map(Expressions.identity(_)).toArray
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new IceLiteScanBuilder(ice, snap,
+    new IceLiteScanBuilder(ice, md, snap, files,
       maxSnaps = Option(options.get("maxsnapshotspertrigger")).map(_.toInt))
 
   override def newWriteBuilder(
@@ -241,11 +247,19 @@ final class IceLiteV2Table(
       .orElse(Option(SparkSession.active.conf.get("graft.delete.mode", null)))
       .getOrElse("copy-on-write")
     mode match {
-      case "merge-on-read" => new IceLiteDeltaBuilder(ice, snap, info, onCommit)
-      case "copy-on-write" => new IceLiteRowLevelBuilder(ice, snap, info, onCommit)
+      case "merge-on-read" => new IceLiteDeltaBuilder(ice, md, snap, info, onCommit)
+      case "copy-on-write" => new IceLiteRowLevelBuilder(ice, md, snap, info, onCommit)
       case other => throw new IllegalArgumentException(
         s"unknown delete mode '$other' (expected copy-on-write | merge-on-read)")
     }
+  }
+}
+
+object IceLiteV2Table {
+  /** The table at `ice`'s current snapshot, from one metadata read. */
+  def current(ice: IceTable, onCommit: Option[IceTable => Unit] = None): IceLiteV2Table = {
+    val md = ice.metadata
+    new IceLiteV2Table(ice, md, md.currentSnapshot, onCommit)
   }
 }
 
@@ -260,13 +274,14 @@ final case class IceLiteMetaColumn(colName: String, dt: DataType)
 
 final class IceLiteScanBuilder(
     ice: IceTable,
+    md: TableMetadata,
     snap: Option[Snapshot],
+    files: Option[Seq[String]] = None,
     onBuild: Scan => Unit = _ => (),
     maxSnaps: Option[Int] = None)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit {
 
-  private val md = ice.metadata
   private var required: StructType = md.schema
   private var pushed: Array[Filter] = Array.empty
   private var countPushed = false
@@ -295,7 +310,11 @@ final class IceLiteScanBuilder(
       aggregation.groupByExpressions.isEmpty &&
       aggregation.aggregateExpressions.length == 1 &&
       aggregation.aggregateExpressions.head.isInstanceOf[CountStar] &&
-      snap.exists(sn => ice.statsRowCount(sn).isDefined)
+      rowCount.isDefined
+
+  // the manifests' record count of the snapshot, or of its pinned files
+  private lazy val rowCount: Option[Long] = snap.flatMap(sn =>
+    files.fold(ice.statsRowCount(sn))(fs => ice.statsRowCountForFiles(sn, fs.toSet)))
 
   /** Accept single-column comparison filters for FILE-granular pruning;
     * everything is returned as residual because manifest ranges can never
@@ -333,7 +352,7 @@ final class IceLiteScanBuilder(
 
   override def build(): Scan = {
     if (countPushed) {
-      val cs = new IceLiteCountScan(ice, snap.get)
+      val cs = new IceLiteCountScan(rowCount.get)
       onBuild(cs)
       return cs
     }
@@ -354,7 +373,7 @@ final class IceLiteScanBuilder(
       case StringStartsWith(c, p)   => add(c, Some(p), IcebergMorScan.prefixSuccessor(p))
       case _                        =>
     }
-    val s = new IceLiteScan(ice, snap, required, bounds.toMap, pushed, limit, maxSnaps)
+    val s = new IceLiteScan(ice, md, snap, files, required, bounds.toMap, pushed, limit, maxSnaps)
     onBuild(s)
     s
   }
@@ -362,10 +381,7 @@ final class IceLiteScanBuilder(
 
 /** Pushed-down ungrouped COUNT(*): one partition, one row, straight from
   * the manifests' record counts — the scan never touches a data file. */
-final class IceLiteCountScan(ice: IceTable, snap: Snapshot) extends Scan with Batch {
-  private val rows = ice.statsRowCount(snap).getOrElse(
-    throw new IllegalStateException("count pushdown accepted without full row counts"))
-
+final class IceLiteCountScan(rows: Long) extends Scan with Batch {
   override def readSchema(): StructType =
     StructType(Seq(StructField("count(*)", LongType, nullable = false)))
   override def description(): String =
@@ -391,7 +407,9 @@ final case class IceLiteCountPartition(rows: Long) extends InputPartition
 /** One scan = one snapshot's pruned file list. Also the Batch (stateless). */
 final class IceLiteScan(
     ice: IceTable,
+    md: TableMetadata,
     snap: Option[Snapshot],
+    files: Option[Seq[String]],
     required: StructType,
     bounds: Map[String, (Option[String], Option[String])],
     pushed: Array[Filter],
@@ -400,16 +418,15 @@ final class IceLiteScan(
     extends Scan with Batch with SupportsReportPartitioning with SupportsRuntimeFiltering
     with SupportsReportStatistics {
 
-  private val md       = ice.metadata
   private val partCols = md.partitionCols
 
-  /** Partition-column bounds are applied on the k=v path values (exact,
-    * directory-granular) — they never appear in file stats because hive
-    * layout strips them from the data files. */
-  private def partValueHit(col: String, raw: String): Boolean =
-    bounds.get(col) match {
-      case None => true
-      case Some((lo, hi)) =>
+  /** A bound on a column the file's path carries is applied to the path
+    * value (exact, directory-granular); a file whose path lacks the
+    * segment is left to stats pruning. */
+  private def pathHit(rel: String): Boolean = {
+    val kv = IceLiteScan.pathValues(rel)
+    bounds.forall { case (col, (lo, hi)) =>
+      kv.get(col).forall { raw =>
         val dt = md.schema.fields.find(_.name == col).map(_.dataType).getOrElse(StringType)
         val v  = IceLiteScan.unescapePath(raw)
         if (v == IceLiteScan.HiveNullPart) false // bounded col: null can't match a comparison
@@ -417,30 +434,39 @@ final class IceLiteScan(
           val cmp = BoundOrder.of(dt)
           lo.forall(l => cmp(v, l) >= 0) && hi.forall(h => cmp(v, h) <= 0)
         }
+      }
     }
-
-  /** Relative file path -> partition values in partCols order (raw path
-    * encoding), or Nil for unpartitioned tables. */
-  private def partValuesOf(rel: String): Seq[String] = {
-    if (partCols.isEmpty) return Nil
-    val kv = rel.split('/').iterator.filter(_.contains('=')).map { seg =>
-      val i = seg.indexOf('=')
-      seg.substring(0, i) -> seg.substring(i + 1)
-    }.toMap
-    partCols.map(c => kv.getOrElse(c,
-      throw new IllegalStateException(s"partition column $c missing from path $rel")))
   }
 
-  // planned once: stats-pruned (data cols) then path-pruned (partition cols)
-  private lazy val totalFiles: Int = snap.map(ice.filesOf(_).size).getOrElse(0)
+  // planned once: stats-pruned (every bound; a hive file's stats record
+  // its path value) then path-pruned, within the pinned files if any
+  private lazy val totalFiles: Int =
+    files.map(_.size).getOrElse(snap.map(ice.filesOf(_).size).getOrElse(0))
   private lazy val staticSurvivors: Seq[String] = snap match {
     case None => Nil
     case Some(sn) =>
-      val dataBounds = bounds.filterNot { case (c, _) => partCols.contains(c) }
-      ice.planFilesBounds(sn, dataBounds)
-        .filter(rel => partCols.isEmpty ||
-          partCols.zip(partValuesOf(rel)).forall { case (c, v) => partValueHit(c, v) })
+      val planned = files match {
+        case Some(pin) if bounds.isEmpty => pin
+        case Some(pin) =>
+          val keep = pin.toSet
+          ice.planFilesBounds(md, sn, bounds).filter(keep)
+        case None => ice.planFilesBounds(md, sn, bounds)
+      }
+      planned.filter(pathHit)
   }
+
+  /** The columns the survivors' paths lay out (see [[IceLiteScan.layoutOf]]):
+    * the reader's per-file constants, and the partition key. */
+  private lazy val layout: Seq[String] =
+    IceLiteScan.layoutOf(staticSurvivors, partCols, md.schema)
+
+  // key-grouped only when every survivor sits under the current layout
+  // and no other: then every file's key is its partition's value
+  private lazy val keyGrouped: Boolean =
+    partCols.nonEmpty && layout == partCols && staticSurvivors.forall { rel =>
+      val kv = IceLiteScan.pathValues(rel)
+      partCols.forall(kv.contains)
+    }
 
   // ------------------------------------------------ runtime (join) pruning
 
@@ -466,10 +492,13 @@ final class IceLiteScan(
     if (kept.nonEmpty) runtimeKept = kept
   }
 
-  private def runtimeHit(rel: String): Boolean =
-    runtimeKept.isEmpty || partCols.zip(partValuesOf(rel)).forall { case (c, raw) =>
-      runtimeKept.get(c).forall(_.contains(IceLiteScan.unescapePath(raw)))
+  // a file whose path lacks a filtered column's segment is kept
+  private def runtimeHit(rel: String): Boolean = {
+    val kv = IceLiteScan.pathValues(rel)
+    runtimeKept.forall { case (c, vs) =>
+      kv.get(c).forall(raw => vs.contains(IceLiteScan.unescapePath(raw)))
     }
+  }
 
   // planning-state memoization: description()/estimateStatistics()/
   // outputPartitioning()/planInputPartitions() each consult the survivor
@@ -506,36 +535,23 @@ final class IceLiteScan(
   private lazy val entryByFile =
     snap.toSeq.flatMap(ice.entriesOf).map(e => e.file -> e).toMap
 
+  /** Oversized files whose manifests recorded size + split offsets fan
+    * out into row-group-aligned ranged partitions (`_pos` is Spark's
+    * file-global row index, so position deletes apply the same in every
+    * split). Only files outside any partition are split: HasPartitionKey
+    * requires distinct keys across partitions, which splitting a keyed
+    * partition would violate. */
   private def buildPartitions(surv: Seq[String]): Array[InputPartition] = {
     val loc = ice.location.toString
-    if (partCols.isEmpty) {
-      // oversized files whose manifests recorded size + split offsets fan
-      // out into row-group-aligned ranged partitions (`_pos` is Spark's
-      // file-global row index, so position deletes apply the same in
-      // every split). Restricted to the
-      // unpartitioned path: HasPartitionKey requires distinct keys across
-      // partitions, which splitting a keyed partition would violate.
-      val target = SparkSession.active.conf.get("graft.split.size",
-        IcebergMorScan.DefaultSplitBytes.toString).toLong
-      surv.flatMap { rel =>
-        val abs = s"$loc/$rel"
-        val split = for {
-          e    <- entryByFile.get(rel)
-          sz   <- e.sizeBytes if target > 0 && sz >= 2 * target
-          offs <- e.splitOffsets
-          ps   <- IcebergMorScan.rangedFromOffsets(abs, sz, offs, target, null, 0L)
-        } yield ps
-        split.getOrElse(Seq(IceLitePartition(Array(abs), null): InputPartition))
-      }.toArray
-    } else {
-      val partTypes = partCols.map(c => md.schema.fields.find(_.name == c).get.dataType)
-      surv.groupBy(partValuesOf).toSeq.sortBy(_._1.mkString("/"))
-        .map { case (vals, files) =>
-          val key = new GenericInternalRow(
-            vals.zip(partTypes).map { case (v, dt) => IceLiteScan.partToCatalyst(v, dt) }.toArray)
-          IceLitePartition(files.map(f => s"$loc/$f").toArray, key): InputPartition
-        }.toArray
-    }
+    val target = SparkSession.active.conf.get("graft.split.size",
+      IcebergMorScan.DefaultSplitBytes.toString).toLong
+    IceLiteScan.inputPartitions(loc, surv, layout, md.schema, split = rel =>
+      for {
+        e    <- entryByFile.get(rel)
+        sz   <- e.sizeBytes if target > 0 && sz >= 2 * target
+        offs <- e.splitOffsets
+        ps   <- IcebergMorScan.rangedFromOffsets(s"$loc/$rel", sz, offs, target, null, 0L)
+      } yield ps)
   }
 
   /** The table-relative paths this scan reads — for a row-level (ReplaceData)
@@ -544,6 +560,10 @@ final class IceLiteScan(
     * any runtime group filtering that narrowed the scan narrows the
     * replacement identically. */
   private[sources] def replacedFiles: Set[String] = survivors.toSet
+
+  /** The data files this scan reads after manifest and pushed-filter
+    * pruning, as absolute paths ([[IcebergFormat.inputFiles]]). */
+  private[graft] def inputFiles: Seq[String] = survivors.map(rel => s"${ice.location}/$rel")
 
   override def readSchema(): StructType = required
 
@@ -562,7 +582,7 @@ final class IceLiteScan(
   /** Report key-grouped layout only when every partition column survives
     * column pruning (the keys must resolve against the scan output). */
   override def outputPartitioning(): Partitioning =
-    if (partCols.nonEmpty && partCols.forall(required.fieldNames.contains))
+    if (keyGrouped && partCols.forall(required.fieldNames.contains))
       new KeyGroupedPartitioning(
         partCols.map(c => Expressions.identity(c)).toArray, partitions.length)
     else new UnknownPartitioning(partitions.length)
@@ -590,19 +610,9 @@ final class IceLiteScan(
     }
   }
 
-  /** Live position-delete files of the scanned snapshot, each with its
-    * data-file path range: readers open a delete file only for data files
-    * inside that range (manifest-stat pruning, reader-side). */
-  private lazy val deleteFiles: Seq[PositionDeleteFile] =
-    snap.toSeq.flatMap(ice.deleteEntriesOf).map { e =>
-      val fp = e.stats.flatMap(_.get("file_path"))
-      PositionDeleteFile(new org.apache.hadoop.fs.Path(ice.location, e.file).toString,
-        fp.flatMap(_.min), fp.flatMap(_.max))
-    }
-
   override def createReaderFactory(): PartitionReaderFactory =
-    IceLiteReaderFactory(required, partCols.toArray, md.scanSchema, limit, deleteFiles, Nil,
-      partitionDeletes = false)
+    IceLiteReaderFactory(required, layout.toArray, md.scanSchema, limit,
+      snap.toSeq.flatMap(IceLiteScan.positionDeletes(ice, _)), Nil, partitionDeletes = false)
 
   /** `spark.readStream.format("icelite")`: tail the snapshot log as a
     * Structured Streaming source — each micro-batch is exactly the files
@@ -611,7 +621,7 @@ final class IceLiteScan(
     * window bit-identically. */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new IceLiteMicroBatchStream(ice, required, maxSnaps)
+    new IceLiteMicroBatchStream(ice, md.scanSchema, required, maxSnaps)
 }
 
 final case class IceLiteOffset(snapshotId: Long)
@@ -631,9 +641,14 @@ final case class IceLiteOffset(snapshotId: Long)
   * `Trigger.AvailableNow` is supported natively: the target snapshot is
   * pinned at query start, batches advance (rate-limited) to exactly
   * that pin and the query stops — later concurrent commits are left for
-  * the next run, as the contract requires. */
+  * the next run, as the contract requires.
+  *
+  * Windows differ in layout (a table's partitioning may evolve between
+  * commits) while one reader factory serves them all, so every projected
+  * column is read as its path value where a file's path carries one. */
 final class IceLiteMicroBatchStream(
     ice: IceTable,
+    tableSchema: StructType,
     required: StructType,
     maxSnaps: Option[Int] = None)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
@@ -642,7 +657,7 @@ final class IceLiteMicroBatchStream(
 
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
-  private val tableSchema = ice.metadata.scanSchema
+  private val layout = required.fieldNames.toSeq.filter(tableSchema.fieldNames.contains)
   @volatile private var availableNowTarget: Option[Long] = None
 
   override def initialOffset(): Offset = IceLiteOffset(0L)
@@ -668,8 +683,6 @@ final class IceLiteMicroBatchStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[IceLiteOffset].snapshotId
     val to   = end.asInstanceOf[IceLiteOffset].snapshotId
-    val loc  = ice.location.toString
-    val partCols = ice.metadata.partitionCols
     // The INITIAL batch of a merge-on-read table applies the pinned
     // snapshot's position deletes reader-side (per-file range-pruned
     // bitmaps — same machinery as the batch scan) instead of failing:
@@ -680,41 +693,15 @@ final class IceLiteMicroBatchStream(
     val (delta, deletes) =
       ice.metadata.snapshot(to).filter(_ => from == 0L && to > 0L) match {
         case Some(toSnap) if ice.hasDeletes(toSnap) =>
-          val dels = ice.deleteEntriesOf(toSnap).map { e =>
-            val fp = e.stats.flatMap(_.get("file_path"))
-            PositionDeleteFile(new org.apache.hadoop.fs.Path(ice.location, e.file).toString,
-              fp.flatMap(_.min), fp.flatMap(_.max))
-          }
-          (ice.filesOf(toSnap), dels)
+          (ice.filesOf(toSnap), IceLiteScan.positionDeletes(ice, toSnap))
         case _ => (ice.incrementalFiles(from, to), Nil)
       }
-    if (partCols.isEmpty)
-      delta.map(rel => IceLitePartition(Array(s"$loc/$rel"), null, deletes): InputPartition).toArray
-    else {
-      // hive-layout tables stream too: each delta file's partition values
-      // come off its path (the same parsing the batch scan uses), so the
-      // reader restores the partition columns the data files omit
-      val partTypes = partCols.map(c => tableSchema.fields.find(_.name == c).get.dataType)
-      def valsOf(rel: String): Seq[String] = {
-        val kv = rel.split('/').iterator.filter(_.contains('=')).map { seg =>
-          val i = seg.indexOf('=')
-          seg.substring(0, i) -> seg.substring(i + 1)
-        }.toMap
-        partCols.map(c => kv.getOrElse(c,
-          throw new IllegalStateException(s"partition column $c missing from path $rel")))
-      }
-      delta.groupBy(valsOf).toSeq.sortBy(_._1.mkString("/"))
-        .map { case (vals, files) =>
-          val key = new GenericInternalRow(
-            vals.zip(partTypes).map { case (v, dt) => IceLiteScan.partToCatalyst(v, dt) }.toArray)
-          IceLitePartition(files.map(f => s"$loc/$f").toArray, key, deletes): InputPartition
-        }.toArray
-    }
+    IceLiteScan.inputPartitions(ice.location.toString, delta, layout, tableSchema, deletes)
   }
 
   // the initial batch's partitions carry the pinned snapshot's deletes
   override def createReaderFactory(): PartitionReaderFactory =
-    IceLiteReaderFactory(required, ice.metadata.partitionCols.toArray, tableSchema, None, Nil, Nil,
+    IceLiteReaderFactory(required, layout.toArray, tableSchema, None, Nil, Nil,
       partitionDeletes = true)
 
   override def commit(end: Offset): Unit = () // snapshots are immutable
@@ -723,6 +710,67 @@ final class IceLiteMicroBatchStream(
 
 object IceLiteScan {
   val HiveNullPart = "__HIVE_DEFAULT_PARTITION__"
+
+  /** The `k=v` segments of a table-relative file path: each column the
+    * file's hive layout fixes, with its raw (path-escaped) value. */
+  private[sources] def pathValues(rel: String): Map[String, String] =
+    rel.split('/').iterator.filter(_.contains('=')).map { seg =>
+      val i = seg.indexOf('=')
+      seg.substring(0, i) -> seg.substring(i + 1)
+    }.toMap
+
+  /** The columns `files` are laid out by: the table's current partition
+    * columns, then every other column of `schema` some file's path
+    * carries — the layout an older file was written under before the
+    * table's partitioning evolved. */
+  private[sources] def layoutOf(
+      files: Seq[String], partCols: Seq[String], schema: StructType): Seq[String] = {
+    val carried = files.iterator.flatMap(pathValues(_).keys).toSet
+    partCols ++ schema.fieldNames.filter(c => carried(c) && !partCols.contains(c))
+  }
+
+  /** Input partitions over table-relative `files` of the table at `loc`,
+    * each carrying its files' values of the `layout` columns, taken from
+    * the `k=v` segments of each file's own path: null where a path lacks
+    * the segment, so the reader falls back to the column stored in the
+    * file. Files sharing their values share a partition (sorted by
+    * value); a file whose path carries none of them reads as in an
+    * unpartitioned table, split by `split` where it can be. `deletes`
+    * ride every partition. */
+  private[sources] def inputPartitions(
+      loc: String,
+      files: Seq[String],
+      layout: Seq[String],
+      schema: StructType,
+      deletes: Seq[PositionDeleteFile] = Nil,
+      split: String => Option[Seq[InputPartition]] = _ => None): Array[InputPartition] = {
+    val types = layout.map(c => schema(c).dataType)
+    val (bare, keyed) = files.map { rel =>
+      val kv = pathValues(rel)
+      rel -> layout.map(kv.get)
+    }.partition(_._2.forall(_.isEmpty))
+    val whole = bare.flatMap { case (rel, _) =>
+      split(rel).getOrElse(Seq(IceLitePartition(Array(s"$loc/$rel"), null, deletes)))
+    }
+    val grouped = keyed.groupBy(_._2).toSeq.sortBy(_._1.map(_.getOrElse("")).mkString("/"))
+      .map { case (vals, fs) =>
+        val key = new GenericInternalRow(vals.zip(types).map {
+          case (v, dt) => v.map(partToCatalyst(_, dt)).orNull
+        }.toArray)
+        IceLitePartition(fs.map { case (rel, _) => s"$loc/$rel" }.toArray, key, deletes)
+      }
+    (whole ++ grouped).toArray
+  }
+
+  /** Live position-delete files of `snap`, each with the data-file path
+    * range it can touch (from its manifest stats): readers open a delete
+    * file only for data files inside that range. */
+  private[sources] def positionDeletes(ice: IceTable, snap: Snapshot): Seq[PositionDeleteFile] =
+    ice.deleteEntriesOf(snap).map { e =>
+      val fp = e.stats.flatMap(_.get("file_path"))
+      PositionDeleteFile(new org.apache.hadoop.fs.Path(ice.location, e.file).toString,
+        fp.flatMap(_.min), fp.flatMap(_.max))
+    }
 
   /** Minimal hive path unescape (%XX sequences; malformed %-runs pass
     * through literally, matching Spark's lenient behavior). */

@@ -133,12 +133,12 @@ class MaintenanceSpec extends SparkSpec {
   test("compact bin-packs the current snapshot and preserves rows + history") {
     val cat = new FsCatalog(spark, scratch("cmp"))
     val t   = cat.createOrReplaceTable("ns", "orders", orders.repartition(8))
-    assert(t.scan().inputFiles.length == 8)
+    assert(IcebergFormat.inputFiles(t.scan()).length == 8)
     t.append(orders.repartition(4))
-    assert(t.scan().inputFiles.length == 12)
+    assert(IcebergFormat.inputFiles(t.scan()).length == 12)
     val before = t.scan().count()
     t.compact(2)
-    assert(t.scan().inputFiles.length == 2)
+    assert(IcebergFormat.inputFiles(t.scan()).length == 2)
     assert(t.scan().count() == before)
     assert(t.snapshots().last.operation == "compact")
     // time travel to the pre-compaction snapshot still sees the old files
@@ -152,7 +152,7 @@ class MaintenanceSpec extends SparkSpec {
     val t = cat.createOrReplaceTable("ns", "orders_cs", orders.repartition(8))
     assert(t.planFiles("o_orderkey", Some("42"), Some("42")).size == 8)
     t.compactSorted(8, Seq("o_orderkey"))
-    assert(t.scan().inputFiles.length == 8)
+    assert(IcebergFormat.inputFiles(t.scan()).length == 8)
     assert(t.scan().count() == orders.count())
     // ranges are now disjoint: the same lookup reads exactly one file
     assert(t.planFiles("o_orderkey", Some("42"), Some("42")).size == 1)
@@ -247,7 +247,7 @@ class MaintenanceSpec extends SparkSpec {
     val hi  = orders.filter(col("o_orderkey") >= 500).coalesce(1)
     val t   = cat.createOrReplaceTable("ns", "orders_parts", lo)
     t.append(hi)
-    assert(t.scan().inputFiles.length == 2)
+    assert(IcebergFormat.inputFiles(t.scan()).length == 2)
     val stats = t.statsOf(t.snapshots().last)
     assert(stats.size == 2)
     assert(stats.values.forall(_.contains("o_orderkey")))
@@ -256,7 +256,7 @@ class MaintenanceSpec extends SparkSpec {
     val planned = t.planFiles("o_orderkey", Some("100"), Some("100"))
     assert(planned.size == 1)
     val df = t.scanRange("o_orderkey", Some("100"), Some("100"))
-    assert(df.inputFiles.length == 1)
+    assert(IcebergFormat.inputFiles(df).length == 1)
     assert(df.filter(col("o_orderkey") === 100).count() ==
       orders.filter(col("o_orderkey") === 100).count())
 
@@ -289,15 +289,15 @@ class MaintenanceSpec extends SparkSpec {
     assert(back.count() == orders.count())
     assert(back.filter(col("o_orderpriority") === "1-URGENT").count() ==
       orders.filter(col("o_orderpriority") === "1-URGENT").count())
-    // partition pruning: the filter expression must land INSIDE the
-    // PartitionFilters list (the key itself exists on every file scan)
+    // partition pruning: the filter must reach the scan as a bound on the
+    // partition column and drop the other partitions' files
     val pruned = back.filter(col("o_orderpriority") === "1-URGENT")
     val plan   = pruned.queryExecution.executedPlan.toString
-    assert(raw"PartitionFilters: \[[^\]]*o_orderpriority[^\]]*=[^\]]*\]".r
-      .findFirstIn(plan).isDefined, plan.take(600))
-    // and an unfiltered scan must NOT have a partition filter expression
+    assert(plan.contains("prunedBy=[o_orderpriority in [1-URGENT, 1-URGENT]]"), plan.take(600))
+    assert(IcebergFormat.inputFiles(pruned).length < IcebergFormat.inputFiles(back).length)
+    // and an unfiltered scan must NOT carry a bound
     val flat = back.queryExecution.executedPlan.toString
-    assert(raw"PartitionFilters: \[[^\]]*=[^\]]*\]".r.findFirstIn(flat).isEmpty, flat.take(600))
+    assert(!flat.contains("prunedBy="), flat.take(600))
     // append goes into the partitioned layout too; stats still recorded
     t.append(orders.limit(100))
     assert(t.scan().count() == orders.count() + 100)
@@ -450,7 +450,7 @@ class MaintenanceSpec extends SparkSpec {
     t.append(nation.filter(col("n_regionkey") === 0).coalesce(1)) // snapshot 2
     t.append(nation.filter(col("n_regionkey") === 1).coalesce(1)) // snapshot 3
     val delta = t.scanIncremental(1, 3)
-    assert(delta.inputFiles.length == 2)
+    assert(IcebergFormat.inputFiles(delta).length == 2)
     assert(delta.count() == nation.filter(col("n_regionkey") <= 1).count())
     // sub-window
     assert(t.scanIncremental(2, 3).count() ==
@@ -468,7 +468,7 @@ class MaintenanceSpec extends SparkSpec {
     // hash layout: no slice on either column can prune
     assert(t.planFiles("o_custkey", Some("0"), Some("50")).size == 8)
     t.compactZOrder(16, Seq("o_custkey", "o_orderkey"))
-    val total = t.scan().inputFiles.length
+    val total = IcebergFormat.inputFiles(t.scan()).length
     assert(t.scan().count() == orders.count())
     // a quarter-range slice on either dimension should hit ~half the files
     val ckMax = orders.agg(max(col("o_custkey"))).head.getLong(0)

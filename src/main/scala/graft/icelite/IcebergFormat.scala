@@ -1,13 +1,11 @@
 package graft.icelite
 
-import org.apache.avro.Schema
-import org.apache.avro.file.{DataFileReader, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 import org.json4s._
+
+import SpecManifests.{FieldSummary, ManifestEntry, ManifestFile}
 
 /** Read/write support for the STANDARD Apache Iceberg table format (v2),
   * from the public spec at iceberg.apache.org/spec — this is the
@@ -19,8 +17,9 @@ import org.json4s._
   *
   * Reader: `vN.metadata.json` → current snapshot → manifest-list Avro →
   * manifest Avro entries (skipping deleted entries) → data and delete file
-  * plan. The metadata JSON is read by ONE codec, [[SpecMetadata]]: every
-  * reader here parses it once into that typed value. Planning cost is
+  * plan. The metadata JSON is read by ONE codec, [[SpecMetadata]], and the
+  * Avro files by ONE codec, [[SpecManifests]]: every reader here decodes
+  * each file once into their typed values. Planning cost is
   * O(manifests) on the driver, exactly like Iceberg's own planner; the
   * scans read through the DSv2 connector (`IcebergMorV2Table`), which
   * applies deletes, partition values, defaults and lineage per file inside
@@ -34,9 +33,15 @@ import org.json4s._
   * commit is metadata only — per-commit manifest Avro (with spec
   * field-ids in the Avro schema), per-snapshot manifest list, and the
   * metadata JSON — which an independent Iceberg reader can consume (the
-  * ic21 gate). The [[Writer]]'s JSON-level state is one [[SpecMetadata]]
-  * value; each version it publishes is `SpecMetadata.render` of it, and
-  * [[resumeWriter]] is one parse of the current version.
+  * ic21 gate). The [[Writer]]'s state is one [[SpecMetadata]] value and
+  * the current snapshot's manifest-list entries
+  * ([[SpecManifests.ManifestFile]]); each version it publishes is
+  * `SpecMetadata.render` of the first, each manifest and list
+  * `SpecManifests.writeManifest`/`writeList` of typed entries, and
+  * [[resumeWriter]] is one parse of the current version plus one read of
+  * its list. A list entry's file and row counts are set once, from the
+  * manifest's entries when it is written, and every later list carries
+  * the entry unchanged.
   */
 object IcebergFormat {
 
@@ -120,22 +125,6 @@ object IcebergFormat {
       // (by-name would miss every pre-rename file's column)
       readById: Boolean = false,
       nestedIds: Map[String, Int] = Map.empty) // path -> id (nested levels)
-
-  /** One partition field's summary from a manifest-LIST entry (spec field
-    * 507 `partitions`, ordered like the manifest's spec fields): whether
-    * any file in the manifest has a null partition value, and the
-    * single-value-serialized [lower, upper] of the non-null values. The
-    * evidence that lets a planner skip a whole manifest — thousands of
-    * file entries — without reading it. */
-  private[graft] final case class FieldSummary(
-      containsNull: Boolean, lower: Option[Array[Byte]], upper: Option[Array[Byte]])
-
-  /** A manifest as the manifest LIST describes it — everything known
-    * BEFORE the manifest avro is read. `keepManifest` predicates decide
-    * from this alone. */
-  private[graft] final case class ManifestHandle(
-      path: String, seq: Long, specId: Int, content: Int,
-      summaries: Option[Seq[FieldSummary]])
 
   /** Planning metadata that costs ONE metadata-JSON read: the schema, its
     * field ids, and per-spec partition axes — (source column name,
@@ -322,7 +311,7 @@ object IcebergFormat {
   /** Stage-1 planning: ONE metadata-JSON read, no manifest (or even
     * manifest-list) IO. Gives a scan the schema plus the identity
     * partition axes each spec's manifest summaries are ordered by, so
-    * pushed filters can become [[ManifestHandle]] keep predicates before
+    * pushed filters can become [[SpecManifests.ManifestFile]] keep predicates before
     * [[plan]] touches any manifest. */
   private[graft] def planHeader(spark: SparkSession, metadataPath: String): PlanHeader = {
     val md     = load(spark, metadataPath)
@@ -442,19 +431,11 @@ object IcebergFormat {
     import spark.implicits._
     val (fsys, md) = open(spark, metadataPath)
     val listPath = md.currentSnapshot.flatMap(_.manifestList)
-    val rows = listPath.toSeq.flatMap(lp => readAvro(fsys, new Path(lp))).map { r =>
-      (r.get("manifest_path").toString,
-        r.get("manifest_length").asInstanceOf[Long],
-        r.get("partition_spec_id").asInstanceOf[Int],
-        r.get("content").asInstanceOf[Int],
-        r.get("sequence_number").asInstanceOf[Long],
-        r.get("added_snapshot_id").asInstanceOf[Long],
-        r.get("added_files_count").asInstanceOf[Int],
-        r.get("existing_files_count").asInstanceOf[Int])
+    val rows = listPath.toSeq.flatMap(lp => SpecManifests.readList(fsys, new Path(lp))).map { m =>
+      (m.path, m.length, m.specId, m.content, m.sequenceNumber, m.addedSnapshotId,
+        m.addedFilesCount, m.existingFilesCount)
     }
-    rows.toDF("path", "length", "partition_spec_id", "content",
-      "sequence_number", "added_snapshot_id", "added_files_count",
-      "existing_files_count")
+    rows.toDF(SpecManifests.TableColumns: _*)
   }
 
   /** The SQL-visible schema of the `position_deletes` metadata table —
@@ -527,7 +508,7 @@ object IcebergFormat {
 
   private[graft] def plan(spark: SparkSession, metadataPath: String,
       snapshotId: Option[Long] = None,
-      keepManifest: ManifestHandle => Boolean = _ => true): TablePlan = {
+      keepManifest: ManifestFile => Boolean = _ => true): TablePlan = {
     val (fs, md) = open(spark, metadataPath)
     require(md.formatVersion == 1 || md.formatVersion == 2,
       s"unsupported format-version ${md.formatVersion}")
@@ -550,19 +531,12 @@ object IcebergFormat {
     val snapshot = md.snapshot(currentId)
       .getOrElse(throw new NoSuchElementException(s"snapshot $currentId not in metadata"))
 
-    // v2: snapshot → manifest-list avro (data AND delete manifests, each
+    // v2: snapshot → manifest list (data AND delete manifests, each
     // carrying its sequence number AND its partition summaries — spec
     // field 507); v1 fallback: inline "manifests"
-    val handles: Seq[ManifestHandle] = snapshot.manifestList match {
-      case Some(listPath) =>
-        readAvro(fs, resolve(location, listPath)).map { rec =>
-          val seq = Option(rec.get("sequence_number")).map(_.asInstanceOf[Long]).getOrElse(0L)
-          val sid = Option(rec.get("partition_spec_id")).map(_.asInstanceOf[Int]).getOrElse(md.defaultSpecId)
-          val content = Option(rec.get("content")).map(_.asInstanceOf[Int]).getOrElse(0)
-          ManifestHandle(rec.get("manifest_path").toString, seq, sid, content,
-            parseSummaries(rec))
-        }
-      case None => snapshot.manifests.map(ManifestHandle(_, 0L, md.defaultSpecId, 0, None))
+    val handles: Seq[ManifestFile] = snapshot.manifestList match {
+      case Some(listPath) => SpecManifests.readList(fs, resolve(location, listPath))
+      case None => snapshot.manifests.map(ManifestFile.inline(_, md.defaultSpecId))
     }
 
     // manifest-LIST pruning: a data manifest whose partition summaries
@@ -574,191 +548,44 @@ object IcebergFormat {
       if (h.content == 0 && !keepManifest(h)) Nil
       else {
       manifestReadsAtPlanning.increment()
-      val (mp, listSeq, manifestSpecId) = (h.path, h.seq, h.specId)
-      val (identityFields, bucketFields, transformFields) = specFieldsOf(manifestSpecId)
-      readAvro(fs, resolve(location, mp)).flatMap { entry =>
-        val status = entry.get("status").asInstanceOf[Int] // 0 existing, 1 added, 2 deleted
-        if (status == 2) None
-        else {
-          val df     = entry.get("data_file").asInstanceOf[GenericRecord]
-          val format = df.get("file_format").toString
-          // PUFFIN entries are v3 deletion vectors (fields 143-145 below)
-          require(format.equalsIgnoreCase("PARQUET") || format.equalsIgnoreCase("PUFFIN"),
-            s"unsupported file format $format")
+      val (identityFields, bucketFields, transformFields) = specFieldsOf(h.specId)
+      SpecManifests.readManifest(fs, resolve(location, h.path))
+        .filter(_.status != ManifestEntry.Deleted).map { e =>
+          val f = e.file
           // entry seq may be null for ADDED entries — inherit the manifest's
-          val seq = Option(entry.get("sequence_number")).map(_.asInstanceOf[Long]).getOrElse(listSeq)
-          val path = resolve(location, df.get("file_path").toString)
-          val fSize = Option(df.get("file_size_in_bytes")).map(_.asInstanceOf[Long]).getOrElse(0L)
-          val fRows = Option(df.get("record_count")).map(_.asInstanceOf[Long]).getOrElse(0L)
+          val seq  = e.sequenceNumber.getOrElse(h.sequenceNumber)
+          val path = resolve(location, f.path)
           // v2 data_file.content: 0 data, 1 position deletes, 2 equality deletes
-          Option(df.get("content")).map(_.asInstanceOf[Int]).getOrElse(0) match {
+          f.content match {
             case 0 =>
-              val lo = boundsMap(df.getSchema.getField("lower_bounds") != null, df, "lower_bounds")
-              val hi = boundsMap(df.getSchema.getField("upper_bounds") != null, df, "upper_bounds")
-              val merged = (lo.keySet ++ hi.keySet).flatMap { k =>
-                for (l <- lo.get(k); h <- hi.get(k)) yield k -> (l, h)
-              }.toMap
-              // identity partition values from the entry's partition record
-              // (matched by partition field name, keyed by source field id)
-              val pvals: Map[Int, Any] = df.get("partition") match {
-                case r: GenericRecord =>
-                  identityFields.flatMap { case (pname, sid, _) =>
-                    Option(r.getSchema.getField(pname))
-                      .flatMap(_ => Option(r.get(pname)))
-                      .map {
-                        case u: org.apache.avro.util.Utf8 => sid -> u.toString
-                        case v                            => sid -> v
-                      }
-                  }.toMap
-                case _ => Map.empty
-              }
-              // bucket values by source id, with the transform's modulus
-              val bvals: Map[Int, (Int, Int)] = df.get("partition") match {
-                case r: GenericRecord =>
-                  bucketFields.flatMap { case (pname, sid, n) =>
-                    Option(r.getSchema.getField(pname))
-                      .flatMap(_ => Option(r.get(pname)))
-                      .collect { case v: java.lang.Integer => sid -> ((v.intValue, n)) }
-                  }.toMap
-                case _ => Map.empty
-              }
-              // temporal/truncate values by source id, with the transform name
-              val tvals: Map[Int, (String, Any)] = df.get("partition") match {
-                case r: GenericRecord =>
-                  transformFields.flatMap { case (pname, sid, tr) =>
-                    Option(r.getSchema.getField(pname))
-                      .flatMap(_ => Option(r.get(pname)))
-                      .map {
-                        case u: org.apache.avro.util.Utf8 => sid -> ((tr, u.toString: Any))
-                        case v                            => sid -> ((tr, v))
-                      }
-                  }.toMap
-                case _ => Map.empty
-              }
-              val so: Seq[Long] = df.getSchema.getField("split_offsets") match {
-                case null => Nil
-                case _ => df.get("split_offsets") match {
-                  case l: java.util.List[_] => l.toArray.toSeq.map(_.asInstanceOf[Long])
-                  case _                    => Nil
-                }
-              }
-              // null_value_counts (spec field 110): both map encodings,
-              // same shapes as bounds
-              val nc: Map[Int, Long] = df.getSchema.getField("null_value_counts") match {
-                case null => Map.empty
-                case _ => df.get("null_value_counts") match {
-                  case l: java.util.List[_] =>
-                    l.toArray.collect { case r: GenericRecord =>
-                      r.get("key").asInstanceOf[Int] -> r.get("value").asInstanceOf[Long]
-                    }.toMap
-                  case m: java.util.Map[_, _] =>
-                    import scala.jdk.CollectionConverters._
-                    m.asScala.map { case (k, v) =>
-                      k.toString.toInt -> v.asInstanceOf[Long] }.toMap
-                  case _ => Map.empty
-                }
-              }
-              // spec field 140 (absent on pre-sort-order manifests = null)
-              val soId: Option[Int] = df.getSchema.getField("sort_order_id") match {
-                case null => None
-                case _    => Option(df.get("sort_order_id")).map(_.asInstanceOf[Int])
-              }
-              // spec field 142 (v3 row lineage; absent = unassigned)
-              val frId: Option[Long] = df.getSchema.getField("first_row_id") match {
-                case null => None
-                case _    => Option(df.get("first_row_id")).map(_.asInstanceOf[Long])
-              }
-              Some(Left(PlannedFile(
-                path, merged, seq, pvals, bvals, tvals, fSize, fRows, so, nc, soId, frId)))
+              // partition values (by spec field name) keyed by SOURCE field
+              // id: identity values, bucket ids with their modulus, and
+              // temporal/truncate values with the transform name
+              val pv = f.partitionValues
+              Left(PlannedFile(path, f.bounds, seq,
+                identityFields.flatMap { case (n, sid, _) => pv.get(n).map(sid -> _) }.toMap,
+                bucketFields.flatMap { case (n, sid, m) =>
+                  pv.get(n).collect { case v: java.lang.Integer => sid -> ((v.intValue, m)) }
+                }.toMap,
+                transformFields.flatMap { case (n, sid, tr) => pv.get(n).map(v => sid -> ((tr, v))) }.toMap,
+                f.sizeBytes, f.recordCount, f.splitOffsets, f.nullCounts, f.sortOrderId, f.firstRowId))
             case c @ (1 | 2) =>
-              val eqIds = df.getSchema.getField("equality_ids") match {
-                case null => Seq.empty[Int]
-                case _ => df.get("equality_ids") match {
-                  case l: java.util.List[_] => l.toArray.toSeq.map(_.asInstanceOf[Int])
-                  case _                    => Seq.empty[Int]
-                }
-              }
               // position-delete file_path [min, max] — bounds the delete's
               // data-file blast radius for the reader's range pruning
-              val pb = if (c != 1) None else {
-                val lo = boundsMap(df.getSchema.getField("lower_bounds") != null, df, "lower_bounds")
-                val hi = boundsMap(df.getSchema.getField("upper_bounds") != null, df, "upper_bounds")
-                for {
-                  l <- lo.get(PosDeletePathFieldId)
-                  h <- hi.get(PosDeletePathFieldId)
-                } yield (new String(l, "UTF-8"), new String(h, "UTF-8"))
+              val pb = if (c != 1) None else f.bounds.get(PosDeletePathFieldId).map {
+                case (l, h) => (new String(l, "UTF-8"), new String(h, "UTF-8"))
               }
-              // v3 deletion-vector fields (143-145) — absent on pre-DV
-              // manifests, so read null-safely like the other extensions
-              val dvRef = df.getSchema.getField("referenced_data_file") match {
-                case null => None
-                case _    => Option(df.get("referenced_data_file")).map(_.toString)
-              }
-              val dvOff = df.getSchema.getField("content_offset") match {
-                case null => 0L
-                case _ => Option(df.get("content_offset")).map(_.asInstanceOf[Long]).getOrElse(0L)
-              }
-              val dvSz = df.getSchema.getField("content_size_in_bytes") match {
-                case null => 0L
-                case _ => Option(df.get("content_size_in_bytes")).map(_.asInstanceOf[Long]).getOrElse(0L)
-              }
-              Some(Right(PlannedDelete(path, seq, c, eqIds, pb, fRows, dvRef, dvOff, dvSz)))
+              Right(PlannedDelete(path, seq, c, f.equalityIds, pb, f.recordCount,
+                f.dvRef.map(_._1), f.dvRef.fold(0L)(_._2), f.dvRef.fold(0L)(_._3)))
             case other =>
               throw new UnsupportedOperationException(s"unknown data_file content $other")
           }
         }
       }
-      }
     }
     TablePlan(sparkSchema, fieldIds,
       planned.collect { case Left(f) => f }, planned.collect { case Right(d) => d },
       readById, nestedIds)
-  }
-
-  /** Parse a manifest-list entry's `partitions` summaries (spec field 507)
-    * into [[FieldSummary]]s, None when absent/empty — shared by [[plan]]
-    * and [[resumeWriter]] so restored tables keep their pruning evidence. */
-  private def parseSummaries(rec: GenericRecord): Option[Seq[FieldSummary]] =
-    if (rec.getSchema.getField("partitions") == null) None
-    else rec.get("partitions") match {
-      case l: java.util.List[_] if !l.isEmpty =>
-        Some(l.toArray.toIndexedSeq.map { case r: GenericRecord =>
-          def bytes(n: String): Option[Array[Byte]] =
-            if (r.getSchema.getField(n) == null) None
-            else Option(r.get(n)).map {
-              case bb: java.nio.ByteBuffer =>
-                val a = new Array[Byte](bb.remaining()); bb.duplicate().get(a); a
-              case ab: Array[Byte] => ab
-              case other => other.toString.getBytes("UTF-8")
-            }
-          FieldSummary(
-            Option(r.get("contains_null")).exists(_.asInstanceOf[Boolean]),
-            bytes("lower_bound"), bytes("upper_bound"))
-        })
-      case _ => None
-    }
-
-  /** Parse a bounds field in either spec encoding: the array-of-records
-    * map (non-string keys) or a plain Avro string-keyed map. */
-  private def boundsMap(present: Boolean, df: GenericRecord, field: String): Map[Int, Array[Byte]] = {
-    if (!present) return Map.empty
-    def bytes(v: Any): Array[Byte] = v match {
-      case bb: java.nio.ByteBuffer =>
-        val b = new Array[Byte](bb.remaining()); bb.duplicate().get(b); b
-      case a: Array[Byte] => a
-      case other          => other.toString.getBytes("UTF-8")
-    }
-    df.get(field) match {
-      case null => Map.empty
-      case l: java.util.List[_] =>
-        l.toArray.collect { case r: GenericRecord =>
-          r.get("key").asInstanceOf[Int] -> bytes(r.get("value"))
-        }.toMap
-      case m: java.util.Map[_, _] =>
-        import scala.jdk.CollectionConverters._
-        m.asScala.map { case (k, v) => k.toString.toInt -> bytes(v) }.toMap
-      case _ => Map.empty
-    }
   }
 
   /** Scan a standard Iceberg table pinned to the given metadata file (the
@@ -1002,10 +829,7 @@ object IcebergFormat {
     md.currentSnapshot.toSeq.flatMap { snapshot =>
       snapshot.manifestList match {
         case Some(listPath) =>
-          readAvro(fs, resolve(md.location, listPath)).map { rec =>
-            (rec.get("manifest_path").toString,
-              Option(rec.get("content")).map(_.asInstanceOf[Int]).getOrElse(0))
-          }
+          SpecManifests.readList(fs, resolve(md.location, listPath)).map(m => (m.path, m.content))
         case None => snapshot.manifests.map((_, 0))
       }
     }
@@ -1146,20 +970,6 @@ object IcebergFormat {
     if (p.startsWith("/") || p.contains("://")) new Path(p)
     else new Path(new Path(location), p)
 
-  /** Test-only visibility for avro manifest reads (orphan audits). */
-  private[graft] def readAvroForTest(fs: FileSystem, p: Path): Seq[GenericRecord] =
-    readAvro(fs, p)
-
-  private def readAvro(fs: FileSystem, p: Path): Seq[GenericRecord] = {
-    val in  = new FsInput(p, fs.getConf)
-    val rdr = DataFileReader.openReader(in, new GenericDatumReader[GenericRecord]())
-    try {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[GenericRecord]
-      while (rdr.hasNext) buf += rdr.next()
-      buf.toIndexedSeq
-    } finally rdr.close()
-  }
-
   // ------------------------------------------------------------------ writer
 
   /** One committed file (a parquet file already on disk), optionally with
@@ -1187,80 +997,6 @@ object IcebergFormat {
       // (ids travel in the rows, no fresh span consumed).
       firstRowId: Option[Long] = None,
       lineageMaterialized: Boolean = false)
-
-  /** Avro schema of a v2 manifest entry for an unpartitioned table, with
-    * the spec's field-ids attached so spec-compliant readers can project
-    * by id (manifest_entry / data_file required fields per the spec's
-    * "Manifests" table). lower/upper bounds use the spec's map encoding —
-    * an array of key/value records (Avro maps can't key by int) holding
-    * field-id → single-value-serialized binary. */
-  private def manifestEntrySchemaFor(partitionFields: Seq[(String, String, Int)]): Schema = {
-    val pf = partitionFields.map { case (name, avroType, fieldId) =>
-      s"""{"name":"$name","type":["null","$avroType"],"default":null,"field-id":$fieldId}"""
-    }.mkString(",")
-    new Schema.Parser().parse(manifestEntryTemplate.replace("__PARTITION_FIELDS__", pf))
-  }
-
-  private val manifestEntryTemplate: String =
-    """{"type":"record","name":"manifest_entry","fields":[
-      {"name":"status","type":"int","field-id":0},
-      {"name":"snapshot_id","type":["null","long"],"default":null,"field-id":1},
-      {"name":"sequence_number","type":["null","long"],"default":null,"field-id":3},
-      {"name":"file_sequence_number","type":["null","long"],"default":null,"field-id":4},
-      {"name":"data_file","field-id":2,"type":{"type":"record","name":"r2","fields":[
-        {"name":"content","type":"int","field-id":134},
-        {"name":"file_path","type":"string","field-id":100},
-        {"name":"file_format","type":"string","field-id":101},
-        {"name":"partition","field-id":102,"type":{"type":"record","name":"r102","fields":[__PARTITION_FIELDS__]}},
-        {"name":"record_count","type":"long","field-id":103},
-        {"name":"file_size_in_bytes","type":"long","field-id":104},
-        {"name":"lower_bounds","field-id":125,"default":null,"type":["null",
-          {"type":"array","logicalType":"map","items":{"type":"record","name":"k126_v127","fields":[
-            {"name":"key","type":"int","field-id":126},
-            {"name":"value","type":"bytes","field-id":127}]}}]},
-        {"name":"upper_bounds","field-id":128,"default":null,"type":["null",
-          {"type":"array","logicalType":"map","items":{"type":"record","name":"k129_v130","fields":[
-            {"name":"key","type":"int","field-id":129},
-            {"name":"value","type":"bytes","field-id":130}]}}]},
-        {"name":"null_value_counts","field-id":110,"default":null,"type":["null",
-          {"type":"array","logicalType":"map","items":{"type":"record","name":"k121_v122","fields":[
-            {"name":"key","type":"int","field-id":121},
-            {"name":"value","type":"long","field-id":122}]}}]},
-        {"name":"split_offsets","field-id":132,"default":null,"type":["null",
-          {"type":"array","items":"long","element-id":133}]},
-        {"name":"equality_ids","field-id":135,"default":null,"type":["null",
-          {"type":"array","items":"int","element-id":136}]},
-        {"name":"sort_order_id","field-id":140,"default":null,"type":["null","int"]},
-        {"name":"referenced_data_file","field-id":143,"default":null,"type":["null","string"]},
-        {"name":"content_offset","field-id":144,"default":null,"type":["null","long"]},
-        {"name":"content_size_in_bytes","field-id":145,"default":null,"type":["null","long"]},
-        {"name":"first_row_id","field-id":142,"default":null,"type":["null","long"]}
-      ]}}]}""".replaceAll("\n\\s*", "")
-
-  /** Avro schema of a manifest-list entry (spec "Manifest Lists" table). */
-  private val manifestFileSchema: Schema = new Schema.Parser().parse(
-    """{"type":"record","name":"manifest_file","fields":[
-      {"name":"manifest_path","type":"string","field-id":500},
-      {"name":"manifest_length","type":"long","field-id":501},
-      {"name":"partition_spec_id","type":"int","field-id":502},
-      {"name":"content","type":"int","field-id":517},
-      {"name":"sequence_number","type":"long","field-id":515},
-      {"name":"min_sequence_number","type":"long","field-id":516},
-      {"name":"added_snapshot_id","type":"long","field-id":503},
-      {"name":"added_files_count","type":"int","field-id":504},
-      {"name":"existing_files_count","type":"int","field-id":505},
-      {"name":"deleted_files_count","type":"int","field-id":506},
-      {"name":"added_rows_count","type":"long","field-id":512},
-      {"name":"existing_rows_count","type":"long","field-id":513},
-      {"name":"deleted_rows_count","type":"long","field-id":514},
-      {"name":"partitions","field-id":507,"default":null,"type":["null",
-        {"type":"array","element-id":508,"items":{"type":"record","name":"field_summary","fields":[
-          {"name":"contains_null","type":"boolean","field-id":509},
-          {"name":"contains_nan","type":["null","boolean"],"default":null,"field-id":518},
-          {"name":"lower_bound","type":["null","bytes"],"default":null,"field-id":510},
-          {"name":"upper_bound","type":["null","bytes"],"default":null,"field-id":511}
-        ]}}]}
-    ]}""".replaceAll("\n\\s*", ""))
 
   /** Iceberg JSON single-value literal for a default (spec Appendix D
     * JSON serialization): numbers plain, strings quoted, date as its ISO
@@ -1418,32 +1154,23 @@ object IcebergFormat {
       group = Some(g))((_, key) => s"data/${nameOf(key)}.parquet").toMap
   }
 
-  /** Avro primitive for an identity partition value in the manifest's
-    * partition record. */
-  private def avroPrimitive(dt: DataType): String = dt match {
-    case IntegerType => "int"
-    case LongType    => "long"
-    case FloatType   => "float"
-    case DoubleType  => "double"
-    case BooleanType => "boolean"
-    case StringType  => "string"
-    case other =>
-      throw new UnsupportedOperationException(s"identity partition on $other not supported")
-  }
-
-  /** The Avro type of spec field `f`'s values in a manifest's partition
+  /** The Spark type of spec field `f`'s values in a manifest's partition
     * record: int for bucket ids and temporal transforms, the source
     * column's own type (resolved in `schema` by its real field id) for
     * identity and truncate. */
-  private def partitionAvroType(f: SpecMetadata.SpecField, schema: SpecMetadata.Schema): String = {
+  private def partitionValueType(f: SpecMetadata.SpecField, schema: SpecMetadata.Schema): DataType = {
     def sourceType: DataType = {
       val idx = schema.fieldIds.indexOf(f.sourceId)
       require(idx >= 0, s"partition source id ${f.sourceId} not in the current schema")
-      schema.struct.fields(idx).dataType
+      schema.struct.fields(idx).dataType match {
+        case t @ (IntegerType | LongType | FloatType | DoubleType | BooleanType | StringType) => t
+        case other =>
+          throw new UnsupportedOperationException(s"identity partition on $other not supported")
+      }
     }
     f.transform match {
-      case "identity" | TruncatePat(_)                     => avroPrimitive(sourceType)
-      case "year" | "month" | "day" | "hour" | BucketTr(_) => "int"
+      case "identity" | TruncatePat(_)                     => sourceType
+      case "year" | "month" | "day" | "hour" | BucketTr(_) => IntegerType
       case other =>
         throw new UnsupportedOperationException(s"unsupported partition transform $other")
     }
@@ -1484,7 +1211,7 @@ object IcebergFormat {
         case colName => field(colName, colName, "identity")
       }
     }
-    fields.foreach(partitionAvroType(_, schema)) // refuse unsupported source types now
+    fields.foreach(partitionValueType(_, schema)) // refuse unsupported source types now
     fields
   }
 
@@ -1507,25 +1234,20 @@ object IcebergFormat {
       statistics = Nil, partitionStatistics = Nil)
   }
 
-  /** A manifest as the current snapshot's manifest list records it — what
-    * the next snapshot carries forward. */
-  private[icelite] final case class ManifestRec(path: String, len: Long, addedBy: Long,
-      seq: Long, content: Int, nFiles: Int, nRows: Long, specId: Int,
-      existing: Boolean = false, summaries: Option[Seq[FieldSummary]] = None)
-
   /** One session over a spec table's lineage. Its whole JSON-level state
     * is one [[SpecMetadata]] value, `md` — schemas, specs, snapshots, sort
     * orders, properties, statistics and the row-id allocator; every
     * metadata version it publishes is `SpecMetadata.render(md)`. Next to
-    * it sit the current snapshot's manifests (Avro-level) and the latest
-    * metadata version this session knows. Writer-born and resumed
+    * it sit the current snapshot's manifest-list entries, which the next
+    * snapshot's list carries unchanged, and the latest metadata version
+    * this session knows. Writer-born and resumed
     * histories keep schema and spec ids equal to their positions, the
     * current schema last. */
   final class Writer private[IcebergFormat] (
       spark: SparkSession,
       val location: String,
       private var md: SpecMetadata,
-      private var manifests: List[ManifestRec],
+      private var manifests: List[ManifestFile], // the current snapshot's list entries
       private var version: Int,
       fileTag: String) {
 
@@ -1574,11 +1296,9 @@ object IcebergFormat {
       * without partition tuples must refuse a partitioned table. */
     def defaultSpecIsPartitioned: Boolean = md.specs(defaultSpec).fields.nonEmpty
 
-    /** Spec `specId`'s fields with their manifest Avro types. */
-    private def specColumns(specId: Int): Seq[(SpecMetadata.SpecField, String)] =
-      md.specs(specId).fields.map(f => f -> partitionAvroType(f, md.currentSchema))
-    private def entrySchemaOf(specId: Int): Schema = manifestEntrySchemaFor(
-      specColumns(specId).map { case (f, avroType) => (f.name, avroType, f.fieldId) })
+    /** Spec `specId`'s fields with the Spark type of their values. */
+    private def specColumns(specId: Int): Seq[(SpecMetadata.SpecField, DataType)] =
+      md.specs(specId).fields.map(f => f -> partitionValueType(f, md.currentSchema))
 
     /** Partition-spec evolution, the spec way: the metadata keeps EVERY
       * historical spec in `partition-specs` and bumps `default-spec-id`;
@@ -1685,54 +1405,6 @@ object IcebergFormat {
         if (s.fieldIds.contains(id)) s.copy(defaults = s.defaults + (id -> v)) else s))
     }
 
-    // -------- partition summaries (manifest-list field 507): fold a
-    // manifest's per-file partition values into per-spec-field
-    // (contains_null, lower, upper) so planners skip whole manifests
-    private def partCmp(avroType: String, a: Any, b: Any): Int = avroType match {
-      case "int" | "long" =>
-        java.lang.Long.compare(a.asInstanceOf[Number].longValue, b.asInstanceOf[Number].longValue)
-      case "float" | "double" =>
-        java.lang.Double.compare(a.asInstanceOf[Number].doubleValue, b.asInstanceOf[Number].doubleValue)
-      case "boolean" =>
-        java.lang.Boolean.compare(a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
-      case _ => BoundOrder.compareStrings(a.toString, b.toString)
-    }
-
-    /** Single-value serialization of a partition value (spec Appendix D —
-      * same encoding as column bounds). None for unencodable types: the
-      * summary then records no bound and the manifest is never pruned. */
-    private def encodePartValue(avroType: String, v: Any): Option[Array[Byte]] = {
-      import java.nio.{ByteBuffer, ByteOrder}
-      def le(n: Int)(f: ByteBuffer => Unit): Array[Byte] = {
-        val bb = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN); f(bb); bb.array()
-      }
-      avroType match {
-        case "int"     => Some(le(4)(_.putInt(v.asInstanceOf[Number].intValue)))
-        case "long"    => Some(le(8)(_.putLong(v.asInstanceOf[Number].longValue)))
-        case "float"   => Some(le(4)(_.putFloat(v.asInstanceOf[Number].floatValue)))
-        case "double"  => Some(le(8)(_.putDouble(v.asInstanceOf[Number].doubleValue)))
-        case "string"  => Some(v.toString.getBytes("UTF-8"))
-        case "boolean" => Some(Array[Byte](if (v.asInstanceOf[Boolean]) 1 else 0))
-        case _         => None
-      }
-    }
-
-    /** Summaries for one manifest from each file's partition-value lookup
-      * (None result = null partition value). None overall when the spec is
-      * unpartitioned — field 507 is then omitted. */
-    private def summarize(specFields: Seq[(SpecMetadata.SpecField, String)],
-        values: Seq[String => Option[Any]]): Option[Seq[FieldSummary]] =
-      if (specFields.isEmpty) None
-      else Some(specFields.map { case (sf, avroType) =>
-        val vs = values.map(_(sf.name))
-        val present = vs.flatten
-        val containsNull = present.size < vs.size
-        val order = Ordering.fromLessThan((a: Any, b: Any) => partCmp(avroType, a, b) < 0)
-        if (present.isEmpty) FieldSummary(containsNull, None, None)
-        else FieldSummary(containsNull,
-          encodePartValue(avroType, present.min(order)), encodePartValue(avroType, present.max(order)))
-      })
-
     // files successfully created by the current commit attempt — the
     // rollback set a losing optimistic commit deletes (exclusively
     // published if absent, so every tracked file is this attempt's own)
@@ -1756,21 +1428,13 @@ object IcebergFormat {
       }
     }
 
-    /** Publish an Avro file at a snapshot-scoped name (manifest, manifest
-      * list), claimed exactly once: a second writer racing the same
-      * snapshot id loses HERE, before any published metadata can point at
-      * overwritten files. Returns the file's length. */
-    private def writeAvroFile(p: Path, schema: Schema, records: Seq[GenericRecord],
-        meta: Map[String, String]): Long = {
-      val won = MetadataFiles.publishIfAbsent(fs, p) { out =>
-        val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
-        try {
-          meta.foreach { case (k, v) => w.setMeta(k, v) }
-          w.create(schema, out)
-          records.foreach(w.append)
-        } finally w.close()
-      }
-      if (!won) throw lostRace(p)
+    /** Publish a file at a snapshot-scoped name (manifest, manifest list)
+      * through `write`, which reports whether it claimed the path: a
+      * second writer racing the same snapshot id loses HERE, before any
+      * published metadata can point at overwritten files. Returns the
+      * file's length. */
+    private def publishClaimed(p: Path)(write: Path => Boolean): Long = {
+      if (!write(p)) throw lostRace(p)
       // only exclusively-claimed files may enter the rollback set: a
       // path that pre-existed is someone else's committed artifact
       attemptCreated = p :: attemptCreated
@@ -2140,83 +1804,8 @@ object IcebergFormat {
         snapId: Long, seq: Long,
         seenNames: scala.collection.mutable.Set[String]): Unit = {
       val specFields = specColumns(specId)
-
       // 1. the commit's manifest(s): one ADDED entry per file; data and
       // delete files may not share a manifest
-      val commitEntrySchema = entrySchemaOf(specId) // fixed for this commit
-      def buildEntry(f: DataFileInfo): GenericRecord = {
-        val dataFile = new GenericData.Record(commitEntrySchema.getField("data_file").schema())
-        dataFile.put("content", f.content)
-        dataFile.put("file_path", f.path)
-        dataFile.put("file_format", if (f.dvRef.isDefined) "PUFFIN" else "PARQUET")
-        // v3 deletion vector provenance (spec fields 143-145)
-        f.dvRef.foreach { case (ref, off, sz) =>
-          dataFile.put("referenced_data_file", ref)
-          dataFile.put("content_offset", Long.box(off))
-          dataFile.put("content_size_in_bytes", Long.box(sz))
-        }
-        val partRec = new GenericData.Record(dataFile.getSchema.getField("partition").schema())
-        specFields.foreach { case (sf, _) =>
-          f.partitionValues.get(sf.name).foreach(v => partRec.put(sf.name, v))
-        }
-        dataFile.put("partition", partRec)
-        dataFile.put("record_count", f.recordCount)
-        dataFile.put("file_size_in_bytes", f.sizeBytes)
-        if (f.bounds.nonEmpty) {
-          def boundList(field: String, pick: ((Array[Byte], Array[Byte])) => Array[Byte]) = {
-            val arraySchema = dataFile.getSchema.getField(field).schema().getTypes.get(1)
-            val items       = arraySchema.getElementType
-            val l = new java.util.ArrayList[GenericRecord]()
-            f.bounds.toSeq.sortBy(_._1).foreach { case (id, lohi) =>
-              val r = new GenericData.Record(items)
-              r.put("key", id)
-              r.put("value", java.nio.ByteBuffer.wrap(pick(lohi)))
-              l.add(r)
-            }
-            new GenericData.Array(arraySchema, l)
-          }
-          dataFile.put("lower_bounds", boundList("lower_bounds", _._1))
-          dataFile.put("upper_bounds", boundList("upper_bounds", _._2))
-        }
-        if (f.nullCounts.nonEmpty) {
-          // spec field 110: what IS NULL / IS NOT NULL predicates prune on
-          val arraySchema =
-            dataFile.getSchema.getField("null_value_counts").schema().getTypes.get(1)
-          val items = arraySchema.getElementType
-          val l = new java.util.ArrayList[GenericRecord]()
-          f.nullCounts.toSeq.sortBy(_._1).foreach { case (id, n) =>
-            val r = new GenericData.Record(items)
-            r.put("key", id); r.put("value", n); l.add(r)
-          }
-          dataFile.put("null_value_counts", new GenericData.Array(arraySchema, l))
-        }
-        if (f.splitOffsets.nonEmpty) {
-          // spec field 132: recorded at write time so planners can range-
-          // split oversized files with ZERO footer IO
-          val arraySchema = dataFile.getSchema.getField("split_offsets").schema().getTypes.get(1)
-          val l = new java.util.ArrayList[java.lang.Long]()
-          f.splitOffsets.foreach(o => l.add(o))
-          dataFile.put("split_offsets", new GenericData.Array[java.lang.Long](arraySchema, l))
-        }
-        if (f.equalityIds.nonEmpty) {
-          val arraySchema = dataFile.getSchema.getField("equality_ids").schema().getTypes.get(1)
-          val l = new java.util.ArrayList[Integer]()
-          f.equalityIds.foreach(id => l.add(id))
-          dataFile.put("equality_ids", new GenericData.Array[Integer](arraySchema, l))
-        }
-        // spec field 140: claim the registered sort order the file was
-        // actually written under; absent = unsorted (the honest default)
-        f.sortOrderId.foreach(id => dataFile.put("sort_order_id", Int.box(id)))
-        // spec field 142 (v3 row lineage): the file's implicit-id base
-        f.firstRowId.foreach(v => dataFile.put("first_row_id", Long.box(v)))
-        val entry = new GenericData.Record(commitEntrySchema)
-        entry.put("status", 1) // ADDED
-        entry.put("snapshot_id", snapId)
-        entry.put("sequence_number", seq)
-        entry.put("file_sequence_number", seq)
-        entry.put("data_file", dataFile)
-        entry
-      }
       val byKind = files.groupBy(f => if (f.content == 0) 0 else 1).toSeq.sortBy(_._1)
       byKind.foreach { case (kind, group) =>
         val base   = if (kind == 0) "" else "-deletes"
@@ -2226,11 +1815,11 @@ object IcebergFormat {
           if (seenNames.add(f"m-$snapId%05d$base$tagSuffix.avro")) base
           else s"$base-s$specId"
         val manifestPath = new Path(metadataDir, f"m-$snapId%05d$suffix$tagSuffix.avro")
-        val manifestLen = writeAvroFile(manifestPath, commitEntrySchema,
-          group.map(buildEntry), manifestMeta(specId, if (kind == 0) "data" else "deletes"))
-        manifests = manifests :+ ManifestRec(manifestPath.toString, manifestLen, snapId, seq,
-          kind, group.size, group.map(_.recordCount).sum, specId,
-          summaries = summarize(specFields, group.map(f => f.partitionValues.get _)))
+        val entries = group.map(ManifestEntry(ManifestEntry.Added, Some(snapId), Some(seq), Some(seq), _))
+        val manifestLen = publishClaimed(manifestPath)(SpecManifests.writeManifest(fs, _,
+          specFields, entries, manifestMeta(specId, if (kind == 0) "data" else "deletes")))
+        manifests = manifests :+ ManifestFile.of(manifestPath.toString, manifestLen, specId,
+          specFields, kind, seq, seq, snapId, entries)
       }
     }
 
@@ -2267,60 +1856,25 @@ object IcebergFormat {
       * commit-per-microbatch metadata sprawl: planning reads O(specs)
       * manifests afterward instead of O(commits) — at 100 TB with
       * streaming ingest the manifest list would otherwise grow without
-      * bound. Delete manifests are carried as-is. */
+      * bound. The merged manifest's list entry counts the entries it
+      * carries; delete manifests are carried as-is. */
     def rewriteManifests(): Unit = withCommitRollback {
       val snapId = lastSnapId + 1L
       val seq    = snapId
       val (dataM, delM) = manifests.partition(_.content == 0)
       val merged = dataM.groupBy(_.specId).toSeq.sortBy(_._1).map { case (sid, group) =>
-        val schema = entrySchemaOf(sid)
-        val entries = group.flatMap { m =>
-          readAvro(fs, new Path(m.path)).map { e =>
-            // rebind BY NAME into the current entry schema: carried
-            // records may predate later optional data_file fields
-            // (sort_order_id 140, first_row_id 142, DV 143-145), and
-            // Avro's datum writer resolves fields POSITIONALLY against
-            // the writing schema — a shorter source record would
-            // misalign or crash. Absent fields stay null (their spec
-            // defaults).
-            val out = new GenericData.Record(schema)
-            schema.getFields.forEach { f =>
-              if (f.name == "data_file") {
-                val dfT = schema.getField("data_file").schema()
-                val src = e.get("data_file").asInstanceOf[GenericRecord]
-                val d   = new GenericData.Record(dfT)
-                dfT.getFields.forEach { g =>
-                  if (src.getSchema.getField(g.name) != null) d.put(g.name, src.get(g.name))
-                }
-                out.put("data_file", d)
-              } else if (e.getSchema.getField(f.name) != null) {
-                out.put(f.name, e.get(f.name))
-              }
-            }
-            out.put("status", 0) // EXISTING — carried, not added, by this snapshot
-            out
-          }
-        }
-        // merged summaries recomputed from the carried entries' partition
-        // records (the union of the source manifests' summaries)
-        val entryValues: Seq[String => Option[Any]] = entries.map { e =>
-          e.get("data_file").asInstanceOf[GenericRecord].get("partition") match {
-            case pr: GenericRecord =>
-              (n: String) =>
-                Option(pr.getSchema.getField(n)).flatMap(_ => Option(pr.get(n))).map {
-                  case u: org.apache.avro.util.Utf8 => u.toString
-                  case v                            => v
-                }
-            case _ => (_: String) => None
-          }
-        }
+        val specFields = specColumns(sid)
+        // every live entry carried as EXISTING — by this snapshot, not
+        // added by it — with its own snapshot id and sequence numbers
+        val entries = group.flatMap(m => SpecManifests.readManifest(fs, new Path(m.path)))
+          .filter(_.status != ManifestEntry.Deleted).map(_.copy(status = ManifestEntry.Existing))
         val path = new Path(metadataDir, f"m-$snapId%05d-rw$sid$tagSuffix.avro")
-        val len = writeAvroFile(path, schema, entries, manifestMeta(sid, "data"))
+        val len = publishClaimed(path)(SpecManifests.writeManifest(fs, _,
+          specFields, entries, manifestMeta(sid, "data")))
         // list seq = the group's MIN so a null-seq entry can never be
         // treated as newer than it was (entries carry explicit seqs anyway)
-        ManifestRec(path.toString, len, snapId, group.map(_.seq).min, 0,
-          group.map(_.nFiles).sum, group.map(_.nRows).sum, sid, existing = true,
-          summaries = summarize(specColumns(sid), entryValues))
+        ManifestFile.of(path.toString, len, sid, specFields, 0, group.map(_.sequenceNumber).min,
+          group.map(_.minSequenceNumber).min, snapId, entries)
       }
       manifests = merged.toList ++ delM
       publishSnapshot(snapId, seq, "replace", None, md.nextRowId)
@@ -2340,17 +1894,17 @@ object IcebergFormat {
       val (expired, kept) = md.snapshots.splitAt((md.snapshots.size - keepLast).max(0))
       if (expired.isEmpty) return
       val keptManifests: Set[String] = kept.flatMap(_.manifestList).flatMap { lp =>
-        readAvro(fs, new Path(lp)).map(_.get("manifest_path").toString)
+        SpecManifests.readList(fs, new Path(lp)).map(_.path)
       }.toSet
       val keptIds = kept.map(_.snapshotId).toSet
       // publish the trimmed metadata FIRST (CAS, rollback-protected): a
       // lost commit race or a crash mid-expire must never have deleted
       // files a still-current snapshot references. The first kept
-      // snapshot becomes the log's root, and statistics go with their
-      // snapshots (the spec's GC contract).
+      // snapshot keeps its parent's id, as Iceberg's expiry does, and
+      // statistics go with their snapshots (the spec's GC contract).
       withCommitRollback {
         md = md.copy(
-          snapshots = kept.head.copy(parentId = None) +: kept.tail,
+          snapshots = kept,
           statistics = md.statistics.filter(e => keptIds(e.snapshotId)),
           partitionStatistics = md.partitionStatistics.filter(e => keptIds(e.snapshotId)))
         writeMetadata()
@@ -2362,7 +1916,7 @@ object IcebergFormat {
       expired.flatMap(_.manifestList).foreach { lp =>
         try {
           val p = new Path(lp)
-          readAvro(fs, p).map(_.get("manifest_path").toString)
+          SpecManifests.readList(fs, p).map(_.path)
             .filterNot(keptManifests)
             .foreach(mp => fs.delete(new Path(mp), false))
           fs.delete(p, false)
@@ -2378,49 +1932,17 @@ object IcebergFormat {
       * the spec's summary contract, which changelog consumers key off. */
     private def publishSnapshot(snapId: Long, seq: Long, op: String,
         firstRowId: Option[Long], nextRowId: Long): Unit = {
-      // the snapshot's manifest list: this commit's manifest(s) + carried ones
-      val listRecords = manifests.map { m =>
-        val added = m.addedBy == snapId && !m.existing
-        val r = new GenericData.Record(manifestFileSchema)
-        r.put("manifest_path", m.path)
-        r.put("manifest_length", m.len)
-        r.put("partition_spec_id", m.specId)
-        r.put("content", m.content)
-        r.put("sequence_number", m.seq)
-        r.put("min_sequence_number", m.seq)
-        r.put("added_snapshot_id", m.addedBy)
-        r.put("added_files_count", if (added) m.nFiles else 0)
-        r.put("existing_files_count", if (m.existing) m.nFiles else 0)
-        r.put("deleted_files_count", 0)
-        r.put("added_rows_count", if (added) m.nRows else 0L)
-        r.put("existing_rows_count", if (m.existing) m.nRows else 0L)
-        r.put("deleted_rows_count", 0L)
-        m.summaries.foreach { ss =>
-          // spec field 507: what manifest-LIST pruning reads
-          val arraySchema =
-            manifestFileSchema.getField("partitions").schema().getTypes.get(1)
-          val items = arraySchema.getElementType
-          val l = new java.util.ArrayList[GenericRecord]()
-          ss.foreach { s =>
-            val fr = new GenericData.Record(items)
-            fr.put("contains_null", s.containsNull)
-            s.lower.foreach(b => fr.put("lower_bound", java.nio.ByteBuffer.wrap(b)))
-            s.upper.foreach(b => fr.put("upper_bound", java.nio.ByteBuffer.wrap(b)))
-            l.add(fr)
-          }
-          r.put("partitions", new GenericData.Array(arraySchema, l))
-        }
-        r
-      }
+      // the snapshot's manifest list: this commit's manifest(s) + carried
+      // ones, each entry as it was first listed
       val listPath = new Path(metadataDir, f"snap-$snapId%d-manifest-list$tagSuffix.avro")
       // parent = the actual previous head (ids are monotone but can GAP
       // past expired history, so snapId - 1 is not necessarily it)
       val parent = md.snapshots.lastOption.map(_.snapshotId)
-      writeAvroFile(listPath, manifestFileSchema, listRecords, Map(
+      publishClaimed(listPath)(SpecManifests.writeList(fs, _, manifests, Map(
         "format-version" -> "2",
         "snapshot-id" -> snapId.toString,
         "sequence-number" -> seq.toString,
-        "parent-snapshot-id" -> parent.map(_.toString).getOrElse("null")))
+        "parent-snapshot-id" -> parent.map(_.toString).getOrElse("null"))))
       md = md.copy(
         lastSequenceNumber = seq, lastUpdatedMs = ts0 + snapId, nextRowId = nextRowId,
         snapshots = md.snapshots :+ SpecMetadata.Snapshot(snapId, parent, seq, ts0 + snapId, op,
@@ -2450,8 +1972,8 @@ object IcebergFormat {
     * snapshots onto tables loaded from disk (ic76–ic79). State is rebuilt
     * from public metadata only: version from [[currentVersion]], the
     * snapshot log from the metadata JSON's `snapshots` array, the carried
-    * manifest pointers from the current snapshot's manifest list avro
-    * (every field the list schema records), and the FULL schema + spec
+    * manifest-list entries from the current snapshot's manifest list
+    * (verbatim, every field the list schema records), and the FULL schema + spec
     * histories — evolved and partitioned tables resume too. Top-level
     * field ids re-emit VERBATIM, so sparse layouts (a dropped+re-added
     * column history) resume and take SQL DML; only duplicate/non-positive
@@ -2520,22 +2042,8 @@ object IcebergFormat {
       throw new IllegalStateException(s"no snapshots to resume at $location"))
     require(md.snapshots.forall(_.manifestList.isDefined),
       "resumeWriter requires every snapshot to name a manifest list")
-    // the carried manifests, with every field the list schema records
-    val manifests = readAvro(fs, new Path(head.manifestList.get)).map { r =>
-      val added    = r.get("added_files_count").asInstanceOf[Int]
-      val existing = r.get("existing_files_count").asInstanceOf[Int]
-      ManifestRec(r.get("manifest_path").toString,
-        r.get("manifest_length").asInstanceOf[Long],
-        r.get("added_snapshot_id").asInstanceOf[Long],
-        r.get("sequence_number").asInstanceOf[Long],
-        r.get("content").asInstanceOf[Int],
-        added + existing,
-        r.get("added_rows_count").asInstanceOf[Long] +
-          r.get("existing_rows_count").asInstanceOf[Long],
-        r.get("partition_spec_id").asInstanceOf[Int],
-        existing = existing > 0,
-        summaries = parseSummaries(r)) // carried pruning evidence survives the resume
-    }.toList
+    // the carried manifests: the head's list entries, verbatim
+    val manifests = SpecManifests.readList(fs, new Path(head.manifestList.get)).toList
     new Writer(spark, location, md.copy(location = location, schemas = schemas, specs = specs),
       manifests, version, fileTag = "")
   }

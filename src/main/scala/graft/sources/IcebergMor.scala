@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.icelite.{IceTable, IcebergFormat}
+import graft.icelite.SpecManifests.{FieldSummary, ManifestFile}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -78,7 +79,7 @@ final class IcebergMorV2Table private (
   // manifest walk is deferred until a scan (which prunes whole manifests
   // by the pushed filters) or a DML op (which needs every file) forces it
   private val header = IcebergFormat.planHeader(spark, metaPath)
-  private def planWith(keep: IcebergFormat.ManifestHandle => Boolean) =
+  private def planWith(keep: ManifestFile => Boolean) =
     planned.getOrElse(IcebergFormat.plan(spark, metaPath, snapshotId, keep))
   private[sources] lazy val tablePlan = planWith(_ => true)
 
@@ -145,7 +146,7 @@ final class IcebergMorV2Table private (
 final class IcebergMorScanBuilder(
     tableSchema: StructType,
     header: IcebergFormat.PlanHeader,
-    loadPlan: (IcebergFormat.ManifestHandle => Boolean) => IcebergFormat.TablePlan)
+    loadPlan: (ManifestFile => Boolean) => IcebergFormat.TablePlan)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
@@ -337,11 +338,11 @@ object IcebergMorScan {
     * without summaries, unresolvable axes, and undecodable bounds always
     * survive — the file-level predicates re-check everything read. */
   private[graft] def manifestPredicate(
-      h: IcebergFormat.PlanHeader, f: Filter): Option[IcebergFormat.ManifestHandle => Boolean] = {
+      h: IcebergFormat.PlanHeader, f: Filter): Option[ManifestFile => Boolean] = {
     def known(c: String) = h.schema.fieldNames.contains(c)
     def dtOf(c: String) = h.schema.fields(h.schema.fieldNames.indexOf(c)).dataType
     // the (transform, summary) axes covering column c under mh's spec
-    def axesOf(mh: IcebergFormat.ManifestHandle, c: String): Seq[(String, IcebergFormat.FieldSummary)] =
+    def axesOf(mh: ManifestFile, c: String): Seq[(String, FieldSummary)] =
       (for {
         ss <- mh.summaries.toSeq
         ax <- h.axes.get(mh.specId).toSeq
@@ -378,7 +379,7 @@ object IcebergMorScan {
       case _                      => None
     }
     /** Can the axis's summary overlap the SOURCE-value range [lo, hi]? */
-    def axisOverlap(c: String, tr: String, s: IcebergFormat.FieldSummary,
+    def axisOverlap(c: String, tr: String, s: FieldSummary,
         lo: Option[String], hi: Option[String]): Boolean = {
       val dt = dtOf(c)
       tr match {
@@ -421,7 +422,7 @@ object IcebergMorScan {
     }
     // a manifest survives only if EVERY axis of the column says "possible"
     def rangeKeep(c: String, lo: Option[String], hi: Option[String]) =
-      (mh: IcebergFormat.ManifestHandle) =>
+      (mh: ManifestFile) =>
         axesOf(mh, c).forall { case (tr, s) => axisOverlap(c, tr, s, lo, hi) }
     f match {
       case In(c, vs) if known(c) =>
@@ -449,7 +450,7 @@ object IcebergMorScan {
         }
       case Or(l, r) =>
         for { a <- manifestPredicate(h, l); b <- manifestPredicate(h, r) }
-          yield (mh: IcebergFormat.ManifestHandle) => a(mh) || b(mh)
+          yield (mh: ManifestFile) => a(mh) || b(mh)
       case other =>
         pruningRange(other).filter { case (c, _, _) => known(c) }.map {
           case (c, lo, hi) => rangeKeep(c, lo, hi)

@@ -43,8 +43,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.icelite.SpecMetadata.read(fs, v).snapshots.flatMap(_.manifestList)
     }.toSet
     val manifests = lists.flatMap { lp =>
-      graft.icelite.IcebergFormat.readAvroForTest(fs, new org.apache.hadoop.fs.Path(lp))
-        .map(_.get("manifest_path").toString)
+      graft.icelite.SpecManifests.readList(fs, new org.apache.hadoop.fs.Path(lp)).map(_.path)
     }
     def name(p: String) = new org.apache.hadoop.fs.Path(p).getName
     versions.map(_.getName).toSet ++ lists.map(name) ++ manifests.map(name) + "version-hint.text"

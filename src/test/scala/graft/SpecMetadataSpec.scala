@@ -3,22 +3,28 @@ package graft
 import graft.icelite.{IcebergFormat, MetadataFiles, SpecMetadata}
 import graft.icelite.IcebergFormat.DataFileInfo
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.json4s.jackson.JsonMethods
 
-/** The one codec for spec-table metadata (`SpecMetadata`): the golden
-  * fixture round-trips through it unchanged, the Writer replaying the
-  * fixture's operations writes the fixture again, strings that need JSON
-  * escaping survive a commit, and a lost commit attempt leaves the
-  * writer's metadata exactly as it was before the attempt. */
+/** The codecs for spec-table metadata (`SpecMetadata` for the metadata
+  * JSON, `SpecManifests` for the Avro manifests and manifest lists): the
+  * golden fixture round-trips through the JSON codec unchanged, the
+  * Writer replaying the fixture's operations writes the metadata fixture
+  * and the Avro fixture again, every manifest-list entry counts its own
+  * manifest's entries, strings that need JSON escaping survive a commit,
+  * and a lost commit attempt leaves the writer's metadata exactly as it
+  * was before the attempt. */
 class SpecMetadataSpec extends SparkSpec {
   import spark.implicits._
 
   private val fixtureName = "v00009.metadata.json"
 
-  private def fixture: String = {
-    val in = getClass.getResourceAsStream(s"/spec_metadata/$fixtureName")
+  private def resource(name: String): String = {
+    val in = getClass.getResourceAsStream(s"/spec_metadata/$name")
     try new String(in.readAllBytes(), "UTF-8") finally in.close()
   }
+
+  private def fixture: String = resource(fixtureName)
 
   private def readText(p: String): String = {
     val path = new Path(p)
@@ -46,6 +52,45 @@ class SpecMetadataSpec extends SparkSpec {
     assert(new Path(mp).getName == fixtureName)
     val written = readText(mp).replace(loc, GoldenSpecOps.FixtureLocation)
     assert(JsonMethods.parse(written) == JsonMethods.parse(fixture))
+  }
+
+  test("the Writer replaying the fixture's operations writes the Avro fixture's manifests and lists") {
+    val loc = scratch("spec_golden_avro") + "/t"
+    GoldenSpecOps.run(spark, loc)
+    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(JsonMethods.parse(SpecAvroDump(fs, loc)) ==
+      JsonMethods.parse(resource("v00009.avro.json")))
+  }
+
+  test("each manifest-list entry counts its own manifest's files and rows, carried or merged") {
+    val loc = scratch("spec_counts") + "/t"
+    val fs  = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def file(n: String, rows: Long) = DataFileInfo(s"$loc/data/$n.parquet", rows, 10L * rows)
+    // (added files, existing files, added rows, existing rows)
+    def listed(metadataPath: String) = {
+      val list = SpecMetadata.read(fs, new Path(metadataPath)).currentSnapshot.get.manifestList.get
+      SpecAvroDump.records(fs, new Path(list)).map { m =>
+        val stated = Seq("added_files_count", "existing_files_count", "added_rows_count",
+          "existing_rows_count").map(k => m.get(k).asInstanceOf[Number].longValue)
+        val entries = SpecAvroDump.records(fs, new Path(m.get("manifest_path").toString)).map { e =>
+          (e.get("status").asInstanceOf[Int],
+            e.get("data_file").asInstanceOf[org.apache.avro.generic.GenericRecord]
+              .get("record_count").asInstanceOf[Long])
+        }
+        def files(status: Int) = entries.count(_._1 == status).toLong
+        def rows(status: Int)  = entries.filter(_._1 == status).map(_._2).sum
+        (stated, Seq(files(1), files(0), rows(1), rows(0)))
+      }
+    }
+    val w = new IcebergFormat.Writer(spark, loc, StructType(Seq(StructField("id", LongType))))
+    w.commit(Seq(file("a", 3)))
+    w.commit(Seq(file("b", 2)))
+    val two = listed(w.currentMetadataPath)
+    assert(two.size == 2)
+    two.foreach { case (stated, actual) => assert(stated == actual) }
+    val r = IcebergFormat.resumeWriter(spark, loc)
+    r.rewriteManifests()
+    assert(listed(r.currentMetadataPath) == Seq((Seq(0L, 2L, 0L, 5L), Seq(0L, 2L, 0L, 5L))))
   }
 
   test("quotes and backslashes in property values, the location and column names survive a commit") {

@@ -1215,21 +1215,24 @@ object IcebergFormat {
     fields
   }
 
-  private val ts0 = 1704067200000L // fixed epoch (2024-01-01) — deterministic fixtures
+  /** The clock a [[Writer]] stamps commit times with unless it is given
+    * another (a fixture passes a fixed one). */
+  val WallClock: () => Long = () => System.currentTimeMillis()
 
-  /** A new table's metadata before its first commit: one schema (field
-    * ids `topLevelFieldIds`, else positional 1..n; nested ids derived
-    * past them) and one partition spec from `partitionBy`. */
+  /** A new table's metadata before its first commit, last updated at
+    * `now`: one schema (field ids `topLevelFieldIds`, else positional
+    * 1..n; nested ids derived past them) and one partition spec from
+    * `partitionBy`. */
   private def freshMetadata(location: String, schema: StructType, partitionBy: Seq[String],
-      tableUuid: String, topLevelFieldIds: Seq[Int]): SpecMetadata = {
+      tableUuid: String, topLevelFieldIds: Seq[Int], now: Long): SpecMetadata = {
     val ids = if (topLevelFieldIds.nonEmpty) topLevelFieldIds else 1 to schema.fields.length
     val s0  = SpecMetadata.Schema(0, schema, ids, deriveNestedIds(schema, ids))
     SpecMetadata(formatVersion = 2, tableUuid = tableUuid, location = location,
-      lastSequenceNumber = 0L, lastUpdatedMs = ts0,
+      lastSequenceNumber = 0L, lastUpdatedMs = now,
       lastColumnId = (ids ++ s0.nestedIds.values :+ 0).max, nextRowId = 0L,
       schemas = Seq(s0), currentSchemaId = 0,
       specs = Seq(SpecMetadata.PartitionSpec(0, parseSpec(partitionBy, s0, 1000))),
-      defaultSpecId = 0, snapshots = Nil, currentSnapshotId = None,
+      defaultSpecId = 0, snapshots = Nil, currentSnapshotId = None, snapshotLog = Nil,
       sortOrders = Nil, defaultSortOrderId = 0, properties = Map.empty,
       statistics = Nil, partitionStatistics = Nil)
   }
@@ -1242,14 +1245,16 @@ object IcebergFormat {
     * snapshot's list carries unchanged, and the latest metadata version
     * this session knows. Writer-born and resumed
     * histories keep schema and spec ids equal to their positions, the
-    * current schema last. */
+    * current schema last. A snapshot's commit time comes from `clock`,
+    * kept strictly past the table's previous update. */
   final class Writer private[IcebergFormat] (
       spark: SparkSession,
       val location: String,
       private var md: SpecMetadata,
       private var manifests: List[ManifestFile], // the current snapshot's list entries
       private var version: Int,
-      fileTag: String) {
+      fileTag: String,
+      clock: () => Long) {
 
     def this(
         spark: SparkSession,
@@ -1266,10 +1271,11 @@ object IcebergFormat {
         // REAL top-level field ids (possibly SPARSE — a dropped-column
         // history leaves gaps); empty = the positional 1..n layout this
         // writer produces for fresh tables
-        topLevelFieldIds: Seq[Int] = Nil) =
+        topLevelFieldIds: Seq[Int] = Nil,
+        clock: () => Long = WallClock) =
       this(spark, location,
-        freshMetadata(location, schema, partitionBy, tableUuid, topLevelFieldIds),
-        Nil, startVersion, fileTag)
+        freshMetadata(location, schema, partitionBy, tableUuid, topLevelFieldIds, clock()),
+        Nil, startVersion, fileTag, clock)
 
     private val tagSuffix = if (fileTag.isEmpty) "" else s"-$fileTag"
 
@@ -1905,6 +1911,7 @@ object IcebergFormat {
       withCommitRollback {
         md = md.copy(
           snapshots = kept,
+          snapshotLog = md.snapshotLog.filter(e => keptIds(e.snapshotId)),
           statistics = md.statistics.filter(e => keptIds(e.snapshotId)),
           partitionStatistics = md.partitionStatistics.filter(e => keptIds(e.snapshotId)))
         writeMetadata()
@@ -1927,7 +1934,9 @@ object IcebergFormat {
     /** Publish snapshot `snapId`: its manifest list (this commit's
       * manifests + carried ones), then the metadata version that logs it
       * as current — summary `op`, the current schema's id, the row-lineage
-      * base `firstRowId`, and the allocator advanced to `nextRowId`.
+      * base `firstRowId`, the allocator advanced to `nextRowId`, and a
+      * commit time from the clock that stays past the last update, so
+      * snapshot times and the `snapshot-log` only grow.
       * Row-delta commits publish delete/overwrite and rewrites replace —
       * the spec's summary contract, which changelog consumers key off. */
     private def publishSnapshot(snapId: Long, seq: Long, op: String,
@@ -1943,11 +1952,13 @@ object IcebergFormat {
         "snapshot-id" -> snapId.toString,
         "sequence-number" -> seq.toString,
         "parent-snapshot-id" -> parent.map(_.toString).getOrElse("null"))))
+      val at = math.max(clock(), md.lastUpdatedMs + 1)
       md = md.copy(
-        lastSequenceNumber = seq, lastUpdatedMs = ts0 + snapId, nextRowId = nextRowId,
-        snapshots = md.snapshots :+ SpecMetadata.Snapshot(snapId, parent, seq, ts0 + snapId, op,
+        lastSequenceNumber = seq, lastUpdatedMs = at, nextRowId = nextRowId,
+        snapshots = md.snapshots :+ SpecMetadata.Snapshot(snapId, parent, seq, at, op,
           md.currentSchemaId, Some(listPath.toString), firstRowId),
-        currentSnapshotId = Some(snapId))
+        currentSnapshotId = Some(snapId),
+        snapshotLog = md.snapshotLog :+ SpecMetadata.SnapshotLogEntry(at, snapId))
       writeMetadata()
     }
 
@@ -1964,23 +1975,6 @@ object IcebergFormat {
     }
 
     def currentMetadataPath: String = new Path(metadataDir, metadataName(version)).toString
-  }
-
-  /** Reopen an existing Iceberg v2 table directory as a live [[Writer]]
-    * session — the missing half of the writer's "single session owns the
-    * lineage" design, and what lets SQL row-level operations commit DELTA
-    * snapshots onto tables loaded from disk (ic76–ic79). State is rebuilt
-    * from public metadata only: version from [[currentVersion]], the
-    * snapshot log from the metadata JSON's `snapshots` array, the carried
-    * manifest-list entries from the current snapshot's manifest list
-    * (verbatim, every field the list schema records), and the FULL schema + spec
-    * histories — evolved and partitioned tables resume too. Top-level
-    * field ids re-emit VERBATIM, so sparse layouts (a dropped+re-added
-    * column history) resume and take SQL DML; only duplicate/non-positive
-    * ids are refused. The current schema must be the LATEST of the
-    * history (the writer always commits with the last). Format v2 only. */
-  def resumeWriter(spark: SparkSession, location: String): Writer = {
-    resumeWriterImpl(spark, location)
   }
 
   /** Optimistic-concurrency append: commit `files` to the table at
@@ -2001,7 +1995,7 @@ object IcebergFormat {
   def withRetry(spark: SparkSession, location: String)(op: Writer => Unit): Writer = {
     var attempt = 1
     while (true) {
-      val w = resumeWriterImpl(spark, location)
+      val w = resumeWriter(spark, location)
       try { op(w); return w }
       catch {
         case e: java.util.ConcurrentModificationException
@@ -2011,7 +2005,22 @@ object IcebergFormat {
     throw new IllegalStateException("unreachable")
   }
 
-  private def resumeWriterImpl(spark: SparkSession, location: String): Writer = {
+  /** Reopen an existing Iceberg v2 table directory as a live [[Writer]]
+    * session — the missing half of the writer's "single session owns the
+    * lineage" design, and what lets SQL row-level operations commit DELTA
+    * snapshots onto tables loaded from disk (ic76–ic79). State is rebuilt
+    * from public metadata only: version from [[currentVersion]], the
+    * snapshots and the `snapshot-log` from the metadata JSON, the carried
+    * manifest-list entries from the current snapshot's manifest list
+    * (verbatim, every field the list schema records), and the FULL schema + spec
+    * histories — evolved and partitioned tables resume too. Top-level
+    * field ids re-emit VERBATIM, so sparse layouts (a dropped+re-added
+    * column history) resume and take SQL DML; only duplicate/non-positive
+    * ids are refused. The current schema must be the LATEST of the
+    * history (the writer always commits with the last). Format v2 only.
+    * Its commits take their times from `clock`. */
+  def resumeWriter(spark: SparkSession, location: String,
+      clock: () => Long = WallClock): Writer = {
     // the RESOLVED version (the resolver walks forward past a stale
     // hint), not the raw hint value
     val version = currentVersion(spark, location)
@@ -2045,6 +2054,6 @@ object IcebergFormat {
     // the carried manifests: the head's list entries, verbatim
     val manifests = SpecManifests.readList(fs, new Path(head.manifestList.get)).toList
     new Writer(spark, location, md.copy(location = location, schemas = schemas, specs = specs),
-      manifests, version, fileTag = "")
+      manifests, version, fileTag = "", clock)
   }
 }

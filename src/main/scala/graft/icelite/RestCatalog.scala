@@ -57,10 +57,33 @@ object RestProtocol {
     (j \ field) match { case JString(s) => Some(s); case _ => None }
 }
 
+/** The loopback JDK `HttpServer` every in-process graft service runs on.
+  * The JDK server sends a response's headers and its body as two TCP
+  * segments; with Nagle's algorithm on, the body then waits for the
+  * client's delayed ACK, about 40 ms per exchange that has a body.
+  * `sun.net.httpserver.nodelay` sets TCP_NODELAY on the server's
+  * connections. The JDK reads that property once per JVM, when the first
+  * server is created, so it is set here, before any graft server exists;
+  * a value already set for the JVM is left alone. */
+object LoopbackHttp {
+  private val NoDelay = "sun.net.httpserver.nodelay"
+
+  def server(): HttpServer = {
+    if (System.getProperty(NoDelay) == null) System.setProperty(NoDelay, "true")
+    HttpServer.create(new InetSocketAddress(InetAddress.getLoopbackAddress, 0), 0)
+  }
+}
+
 /** Embeddable loopback REST catalog server (JDK HttpServer, no deps).
   * State is the `(ns, table) -> metadata-location` registry; data and
   * metadata files live wherever the writers put them (the shared
-  * warehouse), as with a real Nessie deployment. */
+  * warehouse), as with a real Nessie deployment.
+  *
+  * It is created through [[LoopbackHttp.server]], which turns on
+  * `sun.net.httpserver.nodelay` for the whole JVM: without it every
+  * exchange with a body (each commit and `loadTable`) stalls about 40 ms
+  * on a delayed ACK. That holds for every JDK `HttpServer` the process
+  * creates afterwards, not only this one. */
 final class RestCatalogServer(val warehouse: String,
     requiredToken: Option[String] = None) {
   import RestProtocol._
@@ -68,8 +91,7 @@ final class RestCatalogServer(val warehouse: String,
   private val namespaces = ConcurrentHashMap.newKeySet[String]()
   private val tables     = new ConcurrentHashMap[(String, String), String]() // -> metadata-location
 
-  private val server: HttpServer =
-    HttpServer.create(new InetSocketAddress(InetAddress.getLoopbackAddress, 0), 0)
+  private val server: HttpServer = LoopbackHttp.server()
 
   def port: Int   = server.getAddress.getPort
   def uri: String = s"http://127.0.0.1:$port"
@@ -328,8 +350,14 @@ final class RestCatalog(spark: SparkSession, val uri: String,
       throw new IllegalStateException(s"register $ns.$table -> HTTP $code: ${errMsg(j)}")
   }
 
-  override def loadTable(ns: String, table: String): IceTable =
-    IceTable.load(spark, tableLocation(metadataLocation(ns, table)))
+  override def loadTable(ns: String, table: String): IceTable = loadTableAt(ns, table)._1
+
+  /** The table with the catalog pointer it was loaded through: a writer
+    * hands that pointer to [[advancePointer]] as the base of its CAS. */
+  def loadTableAt(ns: String, table: String): (IceTable, String) = {
+    val pointer = metadataLocation(ns, table)
+    (IceTable.load(spark, tableLocation(pointer)), pointer)
+  }
 
   override def metadataLocation(ns: String, table: String): String = {
     val (code, j) = get(s"$uri/v1/namespaces/${enc(ns)}/tables/${enc(table)}")
@@ -386,14 +414,19 @@ final class RestCatalog(spark: SparkSession, val uri: String,
   /** Advance the catalog pointer to `next` after an out-of-band FS commit
     * (the V2 write path commits table metadata first, then publishes the
     * pointer — the same order PyIceberg writers use against Nessie).
-    * Per-table versions are linear and FS commits rebase, so a fresher
-    * pointer than `next` means a later writer already carried our commit
-    * forward — adopt it; otherwise CAS from whatever is current. Bounded
-    * retries keep a livelocked catalog from spinning. */
-  def advancePointer(ns: String, table: String, next: String, maxRetries: Int = 5): Unit = {
+    * `expected` is the pointer the writer loaded the table through: the
+    * first CAS swaps from it, so an uncontended publish is one POST and
+    * no pointer read. Only a lost CAS (409), or no usable `expected`,
+    * reads the pointer. Per-table versions are linear and FS commits
+    * rebase, so a pointer at or past `next` means a later writer already
+    * carried our commit forward — adopt it; otherwise CAS from the pointer
+    * read. Bounded retries keep a livelocked catalog from spinning. */
+  def advancePointer(ns: String, table: String, next: String,
+      expected: Option[String] = None, maxRetries: Int = 5): Unit = {
+    var base    = expected.filter(metadataVersion(_) < metadataVersion(next))
     var attempt = 0
     while (true) {
-      val cur = metadataLocation(ns, table)
+      val cur = base.getOrElse(metadataLocation(ns, table))
       if (metadataVersion(cur) >= metadataVersion(next)) return
       try { commitSwap(ns, table, cur, next); return }
       catch {
@@ -401,6 +434,7 @@ final class RestCatalog(spark: SparkSession, val uri: String,
           attempt += 1
           if (attempt > maxRetries) throw e
       }
+      base = None
     }
   }
 

@@ -19,8 +19,8 @@ import SpecMetadata._
   * `current-schema-id` (= 0), top-level field ids by position, and
   * snapshots that list their `manifests` inline instead of naming a
   * manifest list. `render` derives `last-partition-id` from the specs and
-  * writes the implicit unsorted order 0 first; the snapshot and metadata
-  * logs are written empty. */
+  * writes the implicit unsorted order 0 first; the metadata log is
+  * written empty. */
 private[graft] final case class SpecMetadata(
     formatVersion: Int,
     tableUuid: String,
@@ -35,6 +35,7 @@ private[graft] final case class SpecMetadata(
     defaultSpecId: Int,
     snapshots: Seq[Snapshot], // in log (append) order
     currentSnapshotId: Option[Long],
+    snapshotLog: Seq[SnapshotLogEntry], // when each snapshot became current, oldest first
     sortOrders: Seq[SortOrder], // declared orders; the unsorted order 0 is implicit
     defaultSortOrderId: Int,
     properties: Map[String, String],
@@ -86,6 +87,9 @@ private[graft] object SpecMetadata {
       timestampMs: Long, operation: String, schemaId: Int, manifestList: Option[String],
       firstRowId: Option[Long] = None,
       manifests: Seq[String] = Nil) // v1: manifest paths inline, no manifest list
+
+  /** One `snapshot-log` entry: `snapshotId` became current at `timestampMs`. */
+  final case class SnapshotLogEntry(timestampMs: Long, snapshotId: Long)
 
   final case class SortField(sourceId: Int, direction: String, nullOrder: String)
   final case class SortOrder(orderId: Int, fields: Seq[SortField])
@@ -163,6 +167,10 @@ private[graft] object SpecMetadata {
           manifests = list(s \ "manifests").flatMap(str))
       },
       currentSnapshotId = long(md \ "current-snapshot-id").filter(_ >= 0),
+      snapshotLog = list(md \ "snapshot-log").map { e =>
+        SnapshotLogEntry(need(long(e \ "timestamp-ms"), "snapshot-log timestamp-ms"),
+          need(long(e \ "snapshot-id"), "snapshot-log snapshot-id"))
+      },
       sortOrders = list(md \ "sort-orders").flatMap { o =>
         val id = need(int(o \ "order-id"), "sort order-id")
         if (id == 0) None // the implicit unsorted order
@@ -335,7 +343,9 @@ private[graft] object SpecMetadata {
             (if (s.manifests.isEmpty) JNothing else JArray(s.manifests.map(JString(_)).toList)),
           "schema-id"          -> JInt(s.schemaId))
       }.toList),
-      "snapshot-log" -> JArray(Nil),
+      "snapshot-log" -> JArray(md.snapshotLog.map { e =>
+        JObject("timestamp-ms" -> JLong(e.timestampMs), "snapshot-id" -> JLong(e.snapshotId))
+      }.toList),
       "metadata-log" -> JArray(Nil)))
   }
 

@@ -113,8 +113,7 @@ object IceQueries {
       buf.toByteArray
     }
     val served = new java.util.concurrent.atomic.AtomicInteger(0)
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.icelite.LoopbackHttp.server()
     server.createContext("/nation_remote.csv",
       (ex: com.sun.net.httpserver.HttpExchange) => {
         served.incrementAndGet()

@@ -161,9 +161,20 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
 
   /** Post-commit publication hook for a named table: REST-bound tables
     * must CAS the catalog pointer to the fresh metadata after every FS
-    * commit; FS-bound tables resolve through version-hint, no hook. */
-  private def publishHook(ns: String, table: String): Option[IceTable => Unit] =
-    rest.map(rc => (ice: IceTable) => rc.advancePointer(ns, table, ice.metadataLocation))
+    * commit; FS-bound tables resolve through version-hint, no hook.
+    * `loaded` is the pointer the table was loaded through: the first
+    * publish swaps from it and each later one from the pointer the one
+    * before set, so an uncontended commit is a single POST. */
+  private def publishHook(ns: String, table: String,
+      loaded: Option[String]): Option[IceTable => Unit] =
+    rest.map { rc =>
+      var base = loaded
+      (ice: IceTable) => {
+        val next = ice.metadataLocation
+        rc.advancePointer(ns, table, next, base)
+        base = Some(next)
+      }
+    }
 
   private def ns1(namespace: Array[String]): String = {
     require(namespace.length == 1,
@@ -177,9 +188,15 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     backend.listTables(ns1(namespace))
       .map(t => Identifier.of(namespace, t)).toArray
 
-  private def loadIce(ns: String, ident: Identifier): IceTable =
-    try backend.loadTable(ns, ident.name())
-    catch {
+  /** The table, and the catalog pointer it was loaded through when the
+    * binding is REST. */
+  private def loadIce(ns: String, ident: Identifier): (IceTable, Option[String]) =
+    try rest match {
+      case Some(rc) =>
+        val (ice, pointer) = rc.loadTableAt(ns, ident.name())
+        (ice, Some(pointer))
+      case None => (backend.loadTable(ns, ident.name()), None)
+    } catch {
       case _: NoSuchElementException =>
         throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
           Seq(catalogName) ++ ident.namespace() :+ ident.name())
@@ -265,7 +282,8 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     nativeDir(ns, ident.name()).foreach { loc =>
       return new IcebergMorV2Table(SparkSession.active, loc)
     }
-    IceLiteV2Table.current(loadIce(ns, ident), publishHook(ns, ident.name()))
+    val (ice, pointer) = loadIce(ns, ident)
+    IceLiteV2Table.current(ice, publishHook(ns, ident.name(), pointer))
   }
 
   /** SQL time travel by snapshot id or ref name: `SELECT ... FROM
@@ -276,7 +294,7 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     * through time-travel relations. */
   override def loadTable(ident: Identifier, version: String): Table = {
     val ns  = ns1(ident.namespace())
-    val ice = loadIce(ns, ident)
+    val (ice, _) = loadIce(ns, ident)
     val md  = ice.metadata
     val snap = version.toLongOption match {
       case Some(id) => Some(md.snapshot(id).getOrElse(
@@ -296,7 +314,7 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     * floor-divide so the pin lands on the latest snapshot at-or-before. */
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val ns  = ns1(ident.namespace())
-    val ice = loadIce(ns, ident)
+    val (ice, _) = loadIce(ns, ident)
     val md  = ice.metadata
     val ms  = Math.floorDiv(timestamp, 1000L)
     val snap = md.snapshots.filter(_.timestamp_ms <= ms)
@@ -334,8 +352,12 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     val ice = IceTable.create(SparkSession.active, loc.toString,
       ident.name(), ns, schema, partCols.toIndexedSeq)
     // REST: adopt the new table by its metadata pointer (spec registerTable)
-    rest.foreach(_.registerTable(ns, ident.name(), ice.metadataLocation))
-    IceLiteV2Table.current(ice, publishHook(ns, ident.name()))
+    val pointer = rest.map { rc =>
+      val p = ice.metadataLocation
+      rc.registerTable(ns, ident.name(), p)
+      p
+    }
+    IceLiteV2Table.current(ice, publishHook(ns, ident.name(), pointer))
   }
 
   /** ALTER TABLE ADD COLUMN(S) / ALTER COLUMN … TYPE: metadata-only
@@ -452,14 +474,16 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     require(addDefaults.isEmpty,
       "ADD COLUMN ... DEFAULT is supported on native Iceberg v2 tables only " +
         "(v3 initial-default metadata)")
-    val ice = backend.loadTable(ns, ident.name())
+    val (ice, pointer) = loadIce(ns, ident)
     if (adds.nonEmpty) ice.addColumns(adds)
     if (promotes.nonEmpty) ice.promoteColumnTypes(promotes)
     if (renames.nonEmpty) ice.renameColumns(renames)
     if (drops.nonEmpty) ice.dropColumns(drops)
-    val reloaded = backend.loadTable(ns, ident.name())
-    publishHook(ns, ident.name()).foreach(_(reloaded))
-    IceLiteV2Table.current(reloaded, publishHook(ns, ident.name()))
+    // `ice` resolves its current version on each read, so it now sees the
+    // evolved metadata
+    val publish = publishHook(ns, ident.name(), pointer)
+    publish.foreach(_(ice))
+    IceLiteV2Table.current(ice, publish)
   }
 
   override def dropTable(ident: Identifier): Boolean =
@@ -515,7 +539,7 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
   override def loadProcedure(ident: Identifier)
       : org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure =
     IceLiteProcedures.load(backend, ident,
-      (ns, tbl, ice) => publishHook(ns, tbl).foreach(_(ice))).getOrElse(
+      (ns, tbl, ice) => publishHook(ns, tbl, None).foreach(_(ice))).getOrElse(
       throw new RuntimeException(
         s"no such procedure: ${(ident.namespace() :+ ident.name()).mkString(".")}"))
 

@@ -356,12 +356,16 @@ final class IceLiteScanBuilder(
       onBuild(cs)
       return cs
     }
-    // fold pushed filters into per-column [lower, upper] bounds (first
-    // bound per column wins; later ones stay row-level residuals — sound
-    // because pruning only ever widens what survives)
+    // fold pushed filters into per-column [lower, upper] bounds: the
+    // first lower and the first upper bound of a column win, so
+    // `BETWEEN a AND b` prunes on both ends; later ones stay row-level
+    // residuals — sound because every pushed filter is a conjunct, and
+    // pruning on fewer of them only widens what survives
     val bounds = mutable.LinkedHashMap.empty[String, (Option[String], Option[String])]
-    def add(c: String, lo: Option[String], hi: Option[String]): Unit =
-      if (!bounds.contains(c)) bounds(c) = (lo, hi)
+    def add(c: String, lo: Option[String], hi: Option[String]): Unit = {
+      val (lo0, hi0) = bounds.getOrElse(c, (None, None))
+      bounds(c) = (lo0.orElse(lo), hi0.orElse(hi))
+    }
     pushed.foreach {
       case EqualTo(c, v)            => add(c, Some(v.toString), Some(v.toString))
       case GreaterThan(c, v)        => add(c, Some(v.toString), None)
@@ -610,9 +614,13 @@ final class IceLiteScan(
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  // built once per scan: the driver-side parquet reader setup and the
+  // position-delete read are not free, and Spark's physical planning asks
+  // for the factory more than once
+  private lazy val readerFactory =
     IceLiteReaderFactory(required, layout.toArray, md.scanSchema, limit,
       snap.toSeq.flatMap(IceLiteScan.positionDeletes(ice, _)), Nil, partitionDeletes = false)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** `spark.readStream.format("icelite")`: tail the snapshot log as a
     * Structured Streaming source — each micro-batch is exactly the files

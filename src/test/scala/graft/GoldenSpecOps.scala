@@ -13,7 +13,8 @@ import org.apache.spark.sql.types._
   * statistics entry with a blob, a partition-statistics entry, properties
   * (`graft.read-by-id` among them), row lineage, delete / replace
   * snapshots next to appends, and an expiry. Half of the sequence runs on
-  * a resumed writer, so resume takes part too. No data file is opened:
+  * a resumed writer, so resume takes part too, and both run on a fixed
+  * clock, so commit times repeat run to run. No data file is opened:
   * the files are manifest entries only. Returns the final metadata path. */
 object GoldenSpecOps {
 
@@ -22,6 +23,11 @@ object GoldenSpecOps {
   /** Location prefix the checked-in fixture names instead of the
     * directory it was written in. */
   val FixtureLocation = "/warehouse/golden/t"
+
+  /** The fixed clock both writers stamp commit times with: every snapshot
+    * lands one millisecond after the table's previous update, counting
+    * from 2024-01-01. */
+  private val Epoch: () => Long = () => 1704067200000L
 
   private val schema0 = StructType(Seq(
     StructField("id", IntegerType),
@@ -35,7 +41,8 @@ object GoldenSpecOps {
   def run(spark: SparkSession, loc: String): String = {
     def file(n: String, rows: Long, parts: Map[String, Any] = Map.empty) =
       DataFileInfo(s"$loc/data/$n.parquet", rows, 100L * rows, partitionValues = parts)
-    val w = new IcebergFormat.Writer(spark, loc, schema0, Seq("id"), tableUuid = TableUuid)
+    val w = new IcebergFormat.Writer(spark, loc, schema0, Seq("id"), tableUuid = TableUuid,
+      clock = Epoch)
     w.dropColumn("junk")
     w.renameNestedColumn(Seq("info", "a"), "alpha")
     w.commit(Seq(file("a", 3, Map("id" -> 1)), file("b", 2, Map("id" -> 2))))
@@ -46,7 +53,7 @@ object GoldenSpecOps {
     w.evolveSpec(Seq("days(day)"))
     w.commit(Seq(file("d", 5, Map("day_day" -> 19000))))
 
-    val r = IcebergFormat.resumeWriter(spark, loc)
+    val r = IcebergFormat.resumeWriter(spark, loc, Epoch)
     r.evolveSpec(Seq("truncate(2, name)"))
     r.commitDelta(Seq(DataFileInfo(s"$loc/data/del.parquet", 1, 50, content = 1)))
     val order = r.declareSortOrder(Seq("id", "name"))

@@ -609,4 +609,47 @@ class IceLiteSpec extends SparkSpec {
     val left = Option(data.listFiles()).toSeq.flatten.map(_.getName).filter(_.endsWith(".parquet"))
     assert(left.isEmpty, s"aborted write left ${left.mkString(", ")}")
   }
+
+  test("a two-sided range prunes on both bounds: BETWEEN plans one file, UPDATE rewrites one") {
+    val wh = scratch("range_both")
+    spark.conf.set("spark.sql.catalog.rng", "graft.sources.IceLiteCatalog")
+    spark.conf.set("spark.sql.catalog.rng.warehouse", wh)
+    try {
+      spark.range(1, 4001).selectExpr("id AS k", "id * 2 AS v").createOrReplaceTempView("rng_src")
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS rng.ns")
+      spark.sql("CREATE TABLE rng.ns.t AS SELECT /*+ REPARTITION_BY_RANGE(4, k) */ * FROM rng_src")
+      val ice    = new FsCatalog(spark, wh).loadTable("ns", "t")
+      val before = ice.filesOf(ice.metadata.currentSnapshot.get).toSet
+      assert(before.size == 4, s"expected 4 range files, got $before")
+      // a key range strictly inside the second file's keys
+      val ranges = spark.sql("SELECT min(k), max(k) FROM rng.ns.t GROUP BY _file ORDER BY 1")
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      val (a, b) = (ranges(1)._1 + 10, ranges(1)._2 - 10)
+      val where  = s"k BETWEEN $a AND $b"
+      val q    = spark.sql(s"SELECT count(*) FROM rng.ns.t WHERE $where")
+      val plan = q.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      assert(plan.contains("files=1/4"), s"both bounds did not prune:\n${plan.take(800)}")
+      assert(q.head().getLong(0) == b - a + 1)
+      spark.sql(s"UPDATE rng.ns.t SET v = -v WHERE $where")
+      val after = ice.filesOf(ice.metadata.currentSnapshot.get).toSet
+      assert((before -- after).size == 1, s"UPDATE replaced ${before -- after}")
+      assert(spark.sql("SELECT count(*) FROM rng.ns.t WHERE v < 0").head().getLong(0) == b - a + 1)
+      assert(spark.sql("SELECT count(*) FROM rng.ns.t").head().getLong(0) == 4000L)
+    } finally {
+      spark.conf.unset("spark.sql.catalog.rng")
+      spark.conf.unset("spark.sql.catalog.rng.warehouse")
+    }
+  }
+
+  test("an IceLite scan builds its reader factory once") {
+    val loc = scratch("one_factory")
+    IceTable.create(spark, loc, "f", "ns", nation.schema, Nil).append(nation)
+    val df = spark.read.format("icelite").option("location", loc).load()
+    val scan = df.queryExecution.optimizedPlan.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+    }.get.toBatch
+    assert(scan.createReaderFactory() eq scan.createReaderFactory())
+    assert(df.count() == nation.count())
+  }
 }

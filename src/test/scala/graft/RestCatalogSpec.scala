@@ -1,7 +1,14 @@
 package graft
 
-import graft.icelite.{IceTable, RestCatalog, RestCatalogServer}
+import graft.icelite.{IceTable, LoopbackHttp, RestCatalog, RestCatalogServer}
 import org.apache.spark.sql.Row
+
+import com.sun.net.httpserver.HttpExchange
+
+import java.net.URI
+import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 /** The REST catalog protocol end-to-end over loopback HTTP: the Nessie
   * role from the reference (`bot_iceberg_loader.py:245-262`) — namespace
@@ -243,5 +250,93 @@ class RestCatalogSpec extends SparkSpec {
     catalog.dropTable("tmpns", "t")
     assert(dropNs("tmpns") == 204)
     assert(!catalog.listNamespaces().contains("tmpns"))
+  }
+
+  test("a commit swap is one quick loopback exchange, without a delayed-ACK stall") {
+    catalog.createOrReplaceTable("lakehouse", "quick", demo(2))
+    var cur = catalog.metadataLocation("lakehouse", "quick")
+    val ms = (1 to 20).map { i =>
+      val next = cur.stripSuffix(".json") + s"-q$i.json"
+      val t0   = System.nanoTime()
+      catalog.commitSwap("lakehouse", "quick", cur, next)
+      cur = next
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    val median = ms(ms.length / 2)
+    info(f"commitSwap median $median%.1f ms over ${ms.length} swaps")
+    assert(median < 15.0, s"commitSwap median $median ms (all: ${ms.mkString(", ")})")
+  }
+
+  test("an uncontended advancePointer from the loaded pointer is one POST and no GET") {
+    catalog.createOrReplaceTable("lakehouse", "onetrip", demo(2))
+    val (ice, loaded) = catalog.loadTableAt("lakehouse", "onetrip")
+    val next = ice.append(demo(3)).metadataLocation
+    val fwd  = new CountingForwarder(server.uri)
+    try {
+      new RestCatalog(spark, fwd.uri).advancePointer("lakehouse", "onetrip", next, Some(loaded))
+      assert(fwd.seen == Seq("POST /v1/namespaces/lakehouse/tables/onetrip"), fwd.seen)
+      assert(catalog.metadataLocation("lakehouse", "onetrip") == next)
+      // a stale base loses its CAS and falls back to reading the pointer
+      val later = ice.append(demo(1)).metadataLocation
+      fwd.clear()
+      new RestCatalog(spark, fwd.uri).advancePointer("lakehouse", "onetrip", later, Some(loaded))
+      assert(fwd.seen == Seq("POST /v1/namespaces/lakehouse/tables/onetrip",
+        "GET /v1/namespaces/lakehouse/tables/onetrip",
+        "POST /v1/namespaces/lakehouse/tables/onetrip"), fwd.seen)
+      assert(catalog.metadataLocation("lakehouse", "onetrip") == later)
+    } finally fwd.stop()
+  }
+
+  test("a SQL INSERT through the REST binding publishes with one POST and no extra pointer read") {
+    val fwd = new CountingForwarder(server.uri)
+    spark.conf.set("spark.sql.catalog.rone", "graft.sources.IceLiteCatalog")
+    spark.conf.set("spark.sql.catalog.rone.uri", fwd.uri)
+    try {
+      demo(10).createOrReplaceTempView("rone_src")
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS rone.ons")
+      spark.sql("CREATE TABLE rone.ons.t AS SELECT * FROM rone_src")
+      fwd.clear()
+      spark.sql("INSERT INTO rone.ons.t SELECT id + 100, name FROM rone_src WHERE id <= 3")
+      // the statement's one pointer read is its table load; the publish
+      // swaps from that pointer
+      assert(fwd.seen == Seq("GET /v1/namespaces/ons/tables/t",
+        "POST /v1/namespaces/ons/tables/t"), fwd.seen)
+      assert(catalog.metadataLocation("ons", "t").endsWith("v3.json"))
+    } finally {
+      spark.conf.unset("spark.sql.catalog.rone")
+      spark.conf.unset("spark.sql.catalog.rone.uri")
+      fwd.stop()
+    }
+  }
+
+  /** Loopback forwarder in front of the catalog server that records each
+    * request as `METHOD path`. */
+  private final class CountingForwarder(target: String) {
+    private val requests = new ConcurrentLinkedQueue[String]()
+    private val client   = HttpClient.newHttpClient()
+    private val server   = LoopbackHttp.server()
+    server.createContext("/", (ex: HttpExchange) => {
+      requests.add(s"${ex.getRequestMethod} ${ex.getRequestURI.getPath}")
+      val body = ex.getRequestBody.readAllBytes()
+      val b    = HttpRequest.newBuilder(URI.create(target + ex.getRequestURI.toString))
+      Option(ex.getRequestHeaders.getFirst("Content-Type")).foreach(b.header("Content-Type", _))
+      val resp = client.send(b.method(ex.getRequestMethod,
+        if (body.isEmpty) HttpRequest.BodyPublishers.noBody()
+        else HttpRequest.BodyPublishers.ofByteArray(body)).build(),
+        HttpResponse.BodyHandlers.ofByteArray())
+      val out = resp.body()
+      if (ex.getRequestMethod == "HEAD" || out.isEmpty) ex.sendResponseHeaders(resp.statusCode(), -1)
+      else {
+        ex.sendResponseHeaders(resp.statusCode(), out.length.toLong)
+        ex.getResponseBody.write(out)
+      }
+      ex.close()
+    })
+    server.start()
+
+    def uri: String         = s"http://127.0.0.1:${server.getAddress.getPort}"
+    def seen: Seq[String]   = requests.asScala.toSeq
+    def clear(): Unit       = requests.clear()
+    def stop(): Unit        = server.stop(0)
   }
 }

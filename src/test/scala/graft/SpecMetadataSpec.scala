@@ -43,7 +43,34 @@ class SpecMetadataSpec extends SparkSpec {
     assert(md.readById && md.properties.size >= 2)
     assert(md.nextRowId > 0 && md.snapshots.exists(_.firstRowId.isDefined))
     assert(md.snapshots.size >= 3 && md.snapshots.map(_.operation).toSet.size >= 3)
+    assert(md.snapshotLog.map(e => (e.snapshotId, e.timestampMs)) ==
+      md.snapshots.map(s => (s.snapshotId, s.timestampMs)))
     assert(JsonMethods.parse(SpecMetadata.render(md)) == JsonMethods.parse(fixture))
+  }
+
+  test("commit times come from the wall clock, only grow, and the snapshot log follows them") {
+    val loc = scratch("spec_clock") + "/t"
+    def file(n: String) = DataFileInfo(s"$loc/data/$n.parquet", 1L, 10L)
+    val t0 = System.currentTimeMillis()
+    val w  = new IcebergFormat.Writer(spark, loc, StructType(Seq(StructField("x", LongType))))
+    (1 to 4).foreach(i => w.commit(Seq(file(s"f$i"))))
+    val t1 = System.currentTimeMillis()
+    def read() = SpecMetadata.parse(readText(w.currentMetadataPath))
+    val md = read()
+    val times = md.snapshots.map(_.timestampMs)
+    assert(times.head >= t0 && times.zip(times.tail).forall { case (a, b) => a < b },
+      s"commit times not wall-clock and increasing: $times (start $t0)")
+    assert(times.last <= t1 + times.size && md.lastUpdatedMs == times.last)
+    assert(md.snapshotLog.map(e => (e.snapshotId, e.timestampMs)) ==
+      md.snapshots.map(s => (s.snapshotId, s.timestampMs)))
+    // expiry drops the expired snapshots' log entries; a resumed writer
+    // keeps stamping past the last update
+    w.expireSnapshots(2)
+    IcebergFormat.resumeWriter(spark, loc).commit(Seq(file("f5")))
+    val after = SpecMetadata.parse(readText(IcebergFormat.currentMetadataPath(spark, loc)))
+    assert(after.snapshotLog.map(_.snapshotId) == after.snapshots.map(_.snapshotId))
+    assert(after.snapshots.map(_.snapshotId) == md.snapshots.map(_.snapshotId).takeRight(2) :+ 5L)
+    assert(after.snapshots.last.timestampMs > times.last)
   }
 
   test("the Writer replaying the fixture's operations writes the fixture") {

@@ -2,8 +2,6 @@ package graft.icelite
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.collection.mutable.ArrayBuffer
-import scala.util.control.NonFatal
 
 /** A snapshot-versioned parquet table (the IceLite format):
   *
@@ -24,25 +22,26 @@ import scala.util.control.NonFatal
   * the hint (or highest vN) and plan from the snapshot's manifests — so a
   * reader never observes a half-committed version.
   *
-  * Every committing method goes through ONE primitive, [[commit]]. Each
-  * attempt reads the current version and its metadata once, resolves the
-  * base snapshot (a branch head, or main), and calls the operation's
+  * Every committing method goes through ONE primitive, [[commit]], which
+  * runs the commit loop both table formats share, [[MetadataFiles.commit]].
+  * Each attempt reads the current version and its metadata once, resolves
+  * the base snapshot (a branch head, or main), and calls the operation's
   * build function, which validates and returns the change: a new snapshot
   * (the primitive numbers it and advances the branch or main), new
-  * metadata, or "already applied" for a replayed commit token. The CAS
-  * then publishes `v<N+1>.json`. Data commits rebase on a lost race and
-  * retry, up to [[IceTable.MaxCommitAttempts]] attempts; metadata-only
-  * operations (rollback, refs, schema evolution, cherry-pick, expire)
-  * make one attempt and fail loudly, because their change was computed
-  * from a version that is no longer current. The manifests a commit
-  * staged are deleted only when it is known not to have published: its
-  * build function threw before the CAS, or every CAS attempt lost. An
-  * exception from the CAS itself deletes nothing — the version may have
+  * metadata, or "already applied" for a replayed commit token. The loop
+  * then publishes `v<N+1>.json` if it is absent. Data commits rebase on a
+  * lost race and retry, up to the loop's bound on attempts; metadata-only
+  * operations (rollback, refs, schema evolution, cherry-pick, expire) make
+  * one attempt and fail loudly, because their change was computed from a
+  * version that is no longer current. The abort rule is the loop's: the
+  * manifests a commit staged are deleted only when it is known not to
+  * have published — its build function threw, or every attempt lost (a
+  * lost attempt's own manifests go at once). An exception from the
+  * version-file publish itself deletes nothing — the version may have
   * landed.
   *
   * What the protocol needs from the store, and the version-file CAS,
-  * hint and resolver that provide it, live in [[MetadataFiles]], which
-  * the Iceberg-spec writer shares.
+  * hint and resolver that provide it, live in [[MetadataFiles]] too.
   *
   * Every scan (`scan`, time travel, `scanRange`, `scanIncremental`, the
   * copy-on-write reads of `deleteRange`/`merge`, `scanMetadataFile`) is a
@@ -74,25 +73,15 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
 
   def metadataLocation: String = versionFile(currentVersion).toString
 
-  /** CAS commit of `md` as version `next`; false = lost the race. The
-    * hint update runs only after winning and never throws: `v<next>.json`
-    * is already published, so a failed hint write must not report (or
-    * make a caller undo) a commit that landed. */
-  private def commitCasAt(next: Int, md: TableMetadata): Boolean =
-    MetadataFiles.publishIfAbsent(fs, versionFile(next), md.toJson) && {
-      MetadataFiles.writeHint(fs, metadataDir, next)
-      true
-    }
-
   /** One commit attempt as a build function sees it: the metadata read at
     * the attempt's version and the base snapshot (the branch head, or
     * main's). A manifest the build writes goes through [[stage]], so an
     * aborted commit reclaims it. */
   private final class Attempt(
-      val md: TableMetadata, val base: Option[Snapshot], staged: ArrayBuffer[String]) {
+      val md: TableMetadata, val base: Option[Snapshot], staged: MetadataFiles.Staged) {
     def stage(prefix: String, entries: Seq[ManifestEntry]): String = {
       val rel = stageManifest(prefix, entries)
-      staged += rel
+      staged += new Path(location, rel)
       rel
     }
   }
@@ -102,51 +91,36 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
     * retries a lost race on the winner's metadata, otherwise the first
     * lost race fails loudly. `ref` names the branch a snapshot commits to
     * (None = main). `staged` are the manifests written for this commit
-    * before it started; they and every manifest the build staged are
-    * deleted if the build throws or every CAS loses. Returns the table's
-    * metadata after the commit. */
+    * before it started, deleted with the build's own if it does not
+    * publish. Returns the table's metadata after the commit. */
   private def commit(what: String, rebase: Boolean, ref: Option[String], staged: Seq[String])(
       build: Attempt => IceTable.Change): TableMetadata = {
-    val written = ArrayBuffer(staged: _*)
-    def abort(e: Throwable): Nothing = {
-      written.foreach(rel => fs.delete(new Path(location, rel), true))
-      throw e
-    }
-    val attempts = if (rebase) IceTable.MaxCommitAttempts else 1
-    var attempt  = 0
-    while (attempt < attempts) {
-      val (v, md, base, change) =
-        try {
-          val v  = currentVersion
-          val md = metadataAt(v)
-          val base = ref match {
-            case Some(r) =>
-              val info = md.refMap.getOrElse(r, throw new NoSuchElementException(s"no ref $r"))
-              require(info.ref_type == "branch", s"ref $r is a tag — tags are immutable")
-              md.snapshot(info.snapshot_id)
-            case None => md.currentSnapshot
-          }
-          (v, md, base, build(new Attempt(md, base, written)))
-        } catch { case NonFatal(e) => abort(e) }
-      val next = change match {
-        case IceTable.AlreadyApplied => return md
-        case IceTable.NewMetadata(m) => m
+    def read() = { val v = currentVersion; MetadataFiles.Versioned(v, metadataAt(v)) }
+    MetadataFiles.commit(fs, metadataDir, IceTable.versionName, s"$what commit to $location",
+        (md: TableMetadata) => md.toJson, staged.map(new Path(location, _)))(
+        read(), if (rebase) Some(() => read()) else None) { (b, files) =>
+      val md = b.value
+      val base = ref match {
+        case Some(r) =>
+          val info = md.refMap.getOrElse(r, throw new NoSuchElementException(s"no ref $r"))
+          require(info.ref_type == "branch", s"ref $r is a tag — tags are immutable")
+          md.snapshot(info.snapshot_id)
+        case None => md.currentSnapshot
+      }
+      build(new Attempt(md, base, files)) match {
+        case IceTable.AlreadyApplied => None
+        case IceTable.NewMetadata(m) => Some(m)
         case IceTable.NewSnapshot(m, draft) =>
           val id   = IceTable.nextSnapshotId(m)
           val snap = draft.copy(snapshot_id = id, timestamp_ms = System.currentTimeMillis(),
             parent_snapshot_id = base.map(_.snapshot_id))
           val withSnap = m.copy(snapshots = m.snapshots :+ snap)
-          ref match {
+          Some(ref match {
             case Some(r) => withSnap.copy(refs = Some(m.refMap + (r -> RefInfo(id, "branch"))))
             case None    => withSnap.copy(current_snapshot_id = id)
-          }
+          })
       }
-      if (commitCasAt(v + 1, next)) return next
-      attempt += 1
-    }
-    abort(new java.util.ConcurrentModificationException(
-      s"$what commit to $location lost the commit race $attempts time(s) — " +
-        "re-read the table and retry the operation"))
+    }.value
   }
 
   /** One-attempt [[commit]] of a metadata-only change built from the
@@ -2163,10 +2137,6 @@ final class IceTable private (val spark: SparkSession, val location: Path) {
 }
 
 object IceTable {
-
-  /** Attempts a rebasing commit makes before giving up on a contended
-    * table (the Iceberg-spec writer's retry loop shares it). */
-  private[icelite] val MaxCommitAttempts = 10
 
   /** File name of metadata version `v`. */
   private def versionName(v: Int): String = s"v$v.json"

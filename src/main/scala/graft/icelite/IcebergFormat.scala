@@ -33,11 +33,17 @@ import SpecManifests.{FieldSummary, ManifestEntry, ManifestFile}
   * commit is metadata only — per-commit manifest Avro (with spec
   * field-ids in the Avro schema), per-snapshot manifest list, and the
   * metadata JSON — which an independent Iceberg reader can consume (the
-  * ic21 gate). The [[Writer]]'s state is one [[SpecMetadata]] value and
-  * the current snapshot's manifest-list entries
-  * ([[SpecManifests.ManifestFile]]); each version it publishes is
-  * `SpecMetadata.render` of the first, each manifest and list
-  * `SpecManifests.writeManifest`/`writeList` of typed entries, and
+  * ic21 gate). A table's state is a [[SpecState]]: one [[SpecMetadata]]
+  * value and the current snapshot's manifest-list entries
+  * ([[SpecManifests.ManifestFile]]). Every [[Writer]] operation that
+  * publishes is a build function from a base state to the next, run by
+  * the commit loop both formats share, [[MetadataFiles.commit]]: the
+  * build claims the snapshot's manifests and list by name
+  * (`SpecManifests.writeManifest`/`writeList`; a taken name is a lost
+  * race) and the loop publishes `SpecMetadata.render` of the result. On
+  * a throw or a lost race the claimed files are deleted, unless the
+  * version-file publish itself threw. A Writer makes one attempt;
+  * [[appendWithRetry]] and [[publishEdits]] rebase and build again.
   * [[resumeWriter]] is one parse of the current version plus one read of
   * its list. A list entry's file and row counts are set once, from the
   * manifest's entries when it is written, and every later list carries
@@ -1237,22 +1243,22 @@ object IcebergFormat {
       statistics = Nil, partitionStatistics = Nil)
   }
 
-  /** One session over a spec table's lineage. Its whole JSON-level state
-    * is one [[SpecMetadata]] value, `md` — schemas, specs, snapshots, sort
-    * orders, properties, statistics and the row-id allocator; every
-    * metadata version it publishes is `SpecMetadata.render(md)`. Next to
-    * it sit the current snapshot's manifest-list entries, which the next
-    * snapshot's list carries unchanged, and the latest metadata version
-    * this session knows. Writer-born and resumed
+  /** A spec table's state: its metadata and the current snapshot's
+    * manifest-list entries, which the next snapshot's list carries. */
+  private[icelite] final case class SpecState(md: SpecMetadata, manifests: List[ManifestFile])
+
+  /** One session over a spec table's lineage. Its state is `head`, the
+    * latest version it knows, whose metadata also holds the session's
+    * pending (unpublished) edits. A publishing operation takes the new
+    * state only once it is published, so a commit that fails or loses
+    * the race leaves the writer as it was. Writer-born and resumed
     * histories keep schema and spec ids equal to their positions, the
     * current schema last. A snapshot's commit time comes from `clock`,
     * kept strictly past the table's previous update. */
   final class Writer private[IcebergFormat] (
       spark: SparkSession,
       val location: String,
-      private var md: SpecMetadata,
-      private var manifests: List[ManifestFile], // the current snapshot's list entries
-      private var version: Int,
+      private[IcebergFormat] var head: MetadataFiles.Versioned[SpecState],
       fileTag: String,
       clock: () => Long) {
 
@@ -1273,38 +1279,40 @@ object IcebergFormat {
         // writer produces for fresh tables
         topLevelFieldIds: Seq[Int] = Nil,
         clock: () => Long = WallClock) =
-      this(spark, location,
-        freshMetadata(location, schema, partitionBy, tableUuid, topLevelFieldIds, clock()),
-        Nil, startVersion, fileTag, clock)
+      this(spark, location, MetadataFiles.Versioned(startVersion, SpecState(
+        freshMetadata(location, schema, partitionBy, tableUuid, topLevelFieldIds, clock()), Nil)),
+        fileTag, clock)
 
     private val tagSuffix = if (fileTag.isEmpty) "" else s"-$fileTag"
 
     private val fs = new Path(location).getFileSystem(spark.sparkContext.hadoopConfiguration)
     private val metadataDir = new Path(location, "metadata")
 
+    // the metadata of `head`: only the pending edits below set it
+    private def md: SpecMetadata = head.value.md
+    private def md_=(m: SpecMetadata): Unit = head = head.copy(value = head.value.copy(md = m))
+
     private def currentSchema: StructType = md.currentSchema.struct
     private def currentFieldIds: Seq[Int] = md.currentSchema.fieldIds
     // the source of truth keeping nested ids STABLE across evolution (see
     // deriveNestedIds): every evolution carries this map forward
     private def currentNestedIds: Map[String, Int] = md.currentSchema.nestedIds
-    // commits use the DEFAULT spec; commitDelta may append an auxiliary
-    // unpartitioned spec past it without changing the default
-    private def defaultSpec: Int = md.defaultSpecId
     // snapshot ids (= sequence numbers) are MONOTONE FOREVER, never
     // recycled: re-issuing an expired snapshot's id would re-use its
     // manifest/list names (a publish-if-absent conflict with the
     // tombstoned files) and rewind sequence numbers the spec requires to
     // only grow. Expiry always keeps the latest snapshot, so the log's max
     // is the last id issued.
-    private def lastSnapId: Long = md.snapshots.map(_.snapshotId).foldLeft(0L)(math.max)
+    private def nextSnapId(m: SpecMetadata): Long =
+      m.snapshots.map(_.snapshotId).foldLeft(0L)(math.max) + 1L
 
     /** Whether the default spec partitions — a rewrite that stages files
       * without partition tuples must refuse a partitioned table. */
-    def defaultSpecIsPartitioned: Boolean = md.specs(defaultSpec).fields.nonEmpty
+    def defaultSpecIsPartitioned: Boolean = md.specs(md.defaultSpecId).fields.nonEmpty
 
-    /** Spec `specId`'s fields with the Spark type of their values. */
-    private def specColumns(specId: Int): Seq[(SpecMetadata.SpecField, DataType)] =
-      md.specs(specId).fields.map(f => f -> partitionValueType(f, md.currentSchema))
+    /** Spec `specId` of `m` with the Spark type of each field's values. */
+    private def specColumns(m: SpecMetadata, specId: Int): Seq[(SpecMetadata.SpecField, DataType)] =
+      m.specs(specId).fields.map(f => f -> partitionValueType(f, m.currentSchema))
 
     /** Partition-spec evolution, the spec way: the metadata keeps EVERY
       * historical spec in `partition-specs` and bumps `default-spec-id`;
@@ -1376,10 +1384,8 @@ object IcebergFormat {
     def recordStatistics(e: StatsEntry): Unit = {
       require(md.snapshot(e.snapshotId).isDefined,
         s"statistics target snapshot ${e.snapshotId} is not in the log")
-      withCommitRollback {
-        md = md.copy(statistics = md.statistics.filterNot(_.snapshotId == e.snapshotId) :+ e)
-        writeMetadata()
-      }
+      publishMetadata("statistics")(m =>
+        m.copy(statistics = m.statistics.filterNot(_.snapshotId == e.snapshotId) :+ e))
     }
 
     /** Register (or replace) a snapshot's partition-statistics file (spec
@@ -1387,11 +1393,8 @@ object IcebergFormat {
     def recordPartitionStatistics(e: PartitionStatsEntry): Unit = {
       require(md.snapshot(e.snapshotId).isDefined,
         s"partition-statistics target snapshot ${e.snapshotId} is not in the log")
-      withCommitRollback {
-        md = md.copy(partitionStatistics =
-          md.partitionStatistics.filterNot(_.snapshotId == e.snapshotId) :+ e)
-        writeMetadata()
-      }
+      publishMetadata("partition statistics")(m => m.copy(partitionStatistics =
+        m.partitionStatistics.filterNot(_.snapshotId == e.snapshotId) :+ e))
     }
 
     /** Declare the initial/write default (v3 default values) of
@@ -1410,46 +1413,6 @@ object IcebergFormat {
       md = md.copy(schemas = md.schemas.map(s =>
         if (s.fieldIds.contains(id)) s.copy(defaults = s.defaults + (id -> v)) else s))
     }
-
-    // files successfully created by the current commit attempt — the
-    // rollback set a losing optimistic commit deletes (exclusively
-    // published if absent, so every tracked file is this attempt's own)
-    private var attemptCreated: List[Path] = Nil
-
-    /** Run one optimistic commit attempt: on a lost race
-      * (ConcurrentModificationException from any publish-if-absent), delete
-      * every file this attempt created, restore the writer's state as it
-      * was before the attempt (the metadata value, the manifests and the
-      * version), and rethrow — the caller resumes from the winner's
-      * metadata and retries (see [[IcebergFormat.withRetry]]). */
-    private def withCommitRollback[T](body: => T): T = {
-      val (md0, m0, v0) = (md, manifests, version)
-      attemptCreated = Nil
-      try body catch {
-        case e: java.util.ConcurrentModificationException =>
-          attemptCreated.foreach(p =>
-            try fs.delete(p, false) catch { case _: Throwable => () })
-          md = md0; manifests = m0; version = v0
-          throw e
-      }
-    }
-
-    /** Publish a file at a snapshot-scoped name (manifest, manifest list)
-      * through `write`, which reports whether it claimed the path: a
-      * second writer racing the same snapshot id loses HERE, before any
-      * published metadata can point at overwritten files. Returns the
-      * file's length. */
-    private def publishClaimed(p: Path)(write: Path => Boolean): Long = {
-      if (!write(p)) throw lostRace(p)
-      // only exclusively-claimed files may enter the rollback set: a
-      // path that pre-existed is someone else's committed artifact
-      attemptCreated = p :: attemptCreated
-      fs.getFileStatus(p).getLen
-    }
-
-    private def lostRace(p: Path) = new java.util.ConcurrentModificationException(
-      s"concurrent commit to $location: ${p.getName} already exists; " +
-        "resume the writer from current metadata and retry")
 
     /** Additive schema evolution for subsequent commits, the spec way:
       * the metadata JSON keeps EVERY historical schema in `schemas` and
@@ -1688,7 +1651,7 @@ object IcebergFormat {
       * unchanged. Requires at least one committed snapshot. */
     def publishSchemaChange(): Unit = {
       require(md.snapshots.nonEmpty, "publishSchemaChange needs a committed snapshot")
-      withCommitRollback(writeMetadata())
+      publishMetadata("schema change")(identity)
     }
 
     /** Mark the table read-by-id (table property `graft.read-by-id`):
@@ -1713,8 +1676,12 @@ object IcebergFormat {
     /** Commit `files` as snapshot N+1 (append semantics). Files with
       * `content` > 0 go into a separate DELETE manifest, listed with
       * content 1 in the manifest list, exactly as the spec splits them. */
-    def commit(files: Seq[DataFileInfo]): Unit =
-      withCommitRollback(commitGroups(Seq(files -> defaultSpec), "append"))
+    def commit(files: Seq[DataFileInfo]): Unit = append(files, rebase = false)
+
+    /** [[commit]], rebasing on a lost race with `rebase`. */
+    private[IcebergFormat] def append(files: Seq[DataFileInfo], rebase: Boolean): Writer =
+      publish("append", rebase)((b, staged) =>
+        withSnapshot(b.value, staged, Seq(files -> b.value.md.defaultSpecId), "append"))
 
     /** Operation label for a delta commit's summary: all-deletes =
       * "delete", anything staging new rows = "overwrite". */
@@ -1730,20 +1697,22 @@ object IcebergFormat {
       * once, default-spec-id untouched), which every conforming reader
       * treats as global/unpruned — conservative and correct. Unpartitioned
       * tables take the ordinary path. */
-    def commitDelta(files: Seq[DataFileInfo]): Unit = withCommitRollback {
-      val sid = if (defaultSpecIsPartitioned) auxSpecId() else defaultSpec
-      commitGroups(Seq(files -> sid), deltaOp(files))
+    def commitDelta(files: Seq[DataFileInfo]): Unit = publish("delta") { (b, staged) =>
+      val (s, sid) = deltaSpec(b.value)
+      withSnapshot(s, staged, Seq(files -> sid), deltaOp(files))
     }
 
-    /** The auxiliary unpartitioned spec's id, appended to the history
-      * (default-spec-id untouched) the first time it is needed. */
-    private def auxSpecId(): Int = md.specs.indexWhere(_.fields.isEmpty) match {
-      case -1 =>
-        val id = md.specs.size
-        md = md.copy(specs = md.specs :+ SpecMetadata.PartitionSpec(id, Nil))
-        id
-      case existing => existing
-    }
+    /** `s` with the spec files without partition values commit under, and
+      * its id: the default if unpartitioned, else the auxiliary unpartitioned
+      * spec, appended (default-spec-id untouched) the first time it is needed. */
+    private def deltaSpec(s: SpecState): (SpecState, Int) =
+      if (s.md.specs(s.md.defaultSpecId).fields.isEmpty) (s, s.md.defaultSpecId)
+      else s.md.specs.indexWhere(_.fields.isEmpty) match {
+        case -1 =>
+          val id = s.md.specs.size
+          (s.copy(md = s.md.copy(specs = s.md.specs :+ SpecMetadata.PartitionSpec(id, Nil))), id)
+        case existing => (s, existing)
+      }
 
     /** Row-delta commit in ONE snapshot with PER-GROUP partition specs:
       * insert files that carry real partition tuples land under the
@@ -1753,20 +1722,22 @@ object IcebergFormat {
       * all-unpartitioned routing ([[commitDelta]]) remains the fallback
       * for transform specs the delta writer can't stamp. */
     def commitRowDelta(inserts: Seq[DataFileInfo], deletes: Seq[DataFileInfo]): Unit =
-      withCommitRollback {
-        val op = deltaOp(inserts ++ deletes)
-        if (!defaultSpecIsPartitioned) commitGroups(Seq((inserts ++ deletes) -> defaultSpec), op)
-        else commitGroups(Seq(inserts -> defaultSpec, deletes -> auxSpecId()), op)
+      publish("row delta") { (b, staged) =>
+        val (s, sid) = deltaSpec(b.value)
+        withSnapshot(s, staged, Seq(inserts -> s.md.defaultSpecId, deletes -> sid),
+          deltaOp(inserts ++ deletes))
       }
 
-    /** One snapshot of `groups` (files and the spec each group commits
-      * under), labelled `op`; callers run it inside [[withCommitRollback]]. */
-    private def commitGroups(groups0: Seq[(Seq[DataFileInfo], Int)], op: String): Unit = {
+    /** `s` with one more snapshot, of `groups0` (files and the spec each
+      * group commits under) labelled `op`, whose manifests and list are
+      * claimed through `staged`. */
+    private def withSnapshot(s: SpecState, staged: MetadataFiles.Staged,
+        groups0: Seq[(Seq[DataFileInfo], Int)], op: String): SpecState = {
       // v3 ROW LINEAGE: newly-added data files take contiguous implicit
       // row ids — file `first_row_id` (manifest field 142) + position.
       // Files that MATERIALIZED their lineage columns (rewrites) carry
       // ids in the data itself and consume no id space.
-      var rowCursor = md.nextRowId
+      var rowCursor = s.md.nextRowId
       val groups = groups0.map { case (fs, sid) =>
         (fs.map { f =>
           if (f.content == 0 && !f.lineageMaterialized && f.firstRowId.isEmpty) {
@@ -1774,7 +1745,6 @@ object IcebergFormat {
           } else f
         }, sid)
       }
-      val files = groups.flatMap(_._1)
       // stats keys MUST be real field ids of the current schema: a sparse-id
       // table (dropped-column history) whose stats arrive keyed positionally
       // (1..n from a writeSingleFile call that omitted fieldIds) would
@@ -1784,59 +1754,55 @@ object IcebergFormat {
       // DELETE files (content != 0) are exempt: position deletes key their
       // stats by the spec's RESERVED ids (2147483546 file_path /
       // 2147483545 pos), which are never in the table schema.
-      val idSet = currentFieldIds.toSet
-      files.filter(_.content == 0).foreach { f =>
+      val fieldIds = s.md.currentSchema.fieldIds
+      val idSet    = fieldIds.toSet
+      groups.flatMap(_._1).filter(_.content == 0).foreach { f =>
         val bad = (f.nullCounts.keySet ++ f.bounds.keySet).filterNot(idSet)
         require(bad.isEmpty,
           s"stats keyed by non-schema field ids ${bad.toSeq.sorted.mkString(",")} " +
-            s"(schema ids: ${currentFieldIds.mkString(",")}) — pass fieldIds to the stage writer")
+            s"(schema ids: ${fieldIds.mkString(",")}) — pass fieldIds to the stage writer")
       }
-      val snapId = lastSnapId + 1L
+      val snapId = nextSnapId(s.md)
       val seq    = snapId // one sequence number per commit
-      fs.mkdirs(metadataDir)
-      val seenManifestNames = scala.collection.mutable.Set.empty[String]
-      groups.filter(_._1.nonEmpty).foreach { case (groupFiles, specId) =>
-        writeGroupManifests(groupFiles, specId, snapId, seq, seenManifestNames)
-      }
-      // 2+3. the snapshot's manifest list + metadata JSON; its
-      // first-row-id (spec v3) is where the allocator stood
-      publishSnapshot(snapId, seq, op, Some(md.nextRowId), rowCursor)
-    }
-
-    /** One ADDED manifest per content kind for `files` under `specId` —
-      * the manifest-writing half of a commit (data and delete files may
-      * not share a manifest, nor may two specs). */
-    private def writeGroupManifests(files: Seq[DataFileInfo], specId: Int,
-        snapId: Long, seq: Long,
-        seenNames: scala.collection.mutable.Set[String]): Unit = {
-      val specFields = specColumns(specId)
       // 1. the commit's manifest(s): one ADDED entry per file; data and
-      // delete files may not share a manifest
-      val byKind = files.groupBy(f => if (f.content == 0) 0 else 1).toSeq.sortBy(_._1)
-      byKind.foreach { case (kind, group) =>
-        val base   = if (kind == 0) "" else "-deletes"
+      // delete files may not share a manifest, nor may two specs
+      val seenNames = scala.collection.mutable.Set.empty[String]
+      val added = for {
+        (groupFiles, specId) <- groups
+        (kind, group) <- groupFiles.groupBy(f => if (f.content == 0) 0 else 1).toSeq.sortBy(_._1)
+      } yield {
+        val base = if (kind == 0) "" else "-deletes"
         // same-kind manifests from ANOTHER spec group in this commit get a
         // spec-id suffix — names must stay unique within the snapshot
         val suffix =
           if (seenNames.add(f"m-$snapId%05d$base$tagSuffix.avro")) base
           else s"$base-s$specId"
-        val manifestPath = new Path(metadataDir, f"m-$snapId%05d$suffix$tagSuffix.avro")
         val entries = group.map(ManifestEntry(ManifestEntry.Added, Some(snapId), Some(seq), Some(seq), _))
-        val manifestLen = publishClaimed(manifestPath)(SpecManifests.writeManifest(fs, _,
-          specFields, entries, manifestMeta(specId, if (kind == 0) "data" else "deletes")))
-        manifests = manifests :+ ManifestFile.of(manifestPath.toString, manifestLen, specId,
-          specFields, kind, seq, seq, snapId, entries)
+        manifest(s.md, staged, new Path(metadataDir, f"m-$snapId%05d$suffix$tagSuffix.avro"),
+          specId, kind, entries, seq, seq, snapId)
       }
+      // 2+3. the snapshot's manifest list + metadata; its first-row-id
+      // (spec v3) is where the allocator stood
+      listed(s.copy(manifests = s.manifests ++ added), staged, snapId, seq, op,
+        Some(s.md.nextRowId), rowCursor)
     }
 
-    /** A manifest's key-value header: the current schema and the spec its
-      * entries were written under, both as the table metadata renders them. */
-    private def manifestMeta(specId: Int, content: String): Map[String, String] = Map(
-      "schema" -> SpecMetadata.renderSchema(md.currentSchema),
-      "partition-spec" -> SpecMetadata.renderSpecFields(md.specs(specId).fields),
-      "partition-spec-id" -> specId.toString,
-      "format-version" -> "2",
-      "content" -> content)
+    /** Claim the manifest of `entries` (content `kind`, spec `specId` of `m`)
+      * at `path` and return its list entry. Its header holds `m`'s current
+      * schema and that spec, both as the table metadata renders them. */
+    private def manifest(m: SpecMetadata, staged: MetadataFiles.Staged, path: Path, specId: Int,
+        kind: Int, entries: Seq[ManifestEntry], seq: Long, minSeq: Long, snapId: Long)
+        : ManifestFile = {
+      val specFields = specColumns(m, specId)
+      staged.claim(path)(SpecManifests.writeManifest(fs, _, specFields, entries, Map(
+        "schema" -> SpecMetadata.renderSchema(m.currentSchema),
+        "partition-spec" -> SpecMetadata.renderSpecFields(m.specs(specId).fields),
+        "partition-spec-id" -> specId.toString,
+        "format-version" -> "2",
+        "content" -> (if (kind == 0) "data" else "deletes"))))
+      ManifestFile.of(path.toString, fs.getFileStatus(path).getLen, specId, specFields, kind, seq,
+        minSeq, snapId, entries)
+    }
 
     /** Data-file compaction (Iceberg `rewrite_data_files`, bin-pack with
       * delete materialization): the caller stages the compacted file(s) —
@@ -1848,9 +1814,10 @@ object IcebergFormat {
       * to any pre-rewrite snapshot, deletes included, is untouched. The
       * antidote to small-file sprawl AND to the per-read delete-join tax:
       * after the rewrite, scans are pure data-file reads again. */
-    def rewriteDataFiles(files: Seq[DataFileInfo]): Unit = withCommitRollback {
-      manifests = List.empty // replaced wholesale; old snapshots keep theirs
-      commitGroups(Seq(files -> defaultSpec), "replace")
+    def rewriteDataFiles(files: Seq[DataFileInfo]): Unit = publish("rewrite") { (b, staged) =>
+      // manifests replaced wholesale; old snapshots keep theirs
+      withSnapshot(b.value.copy(manifests = Nil), staged,
+        Seq(files -> b.value.md.defaultSpecId), "replace")
     }
 
     /** Manifest compaction (Iceberg `rewrite_manifests`): merge every
@@ -1864,26 +1831,23 @@ object IcebergFormat {
       * streaming ingest the manifest list would otherwise grow without
       * bound. The merged manifest's list entry counts the entries it
       * carries; delete manifests are carried as-is. */
-    def rewriteManifests(): Unit = withCommitRollback {
-      val snapId = lastSnapId + 1L
+    def rewriteManifests(): Unit = publish("rewrite manifests") { (b, staged) =>
+      val s      = b.value
+      val snapId = nextSnapId(s.md)
       val seq    = snapId
-      val (dataM, delM) = manifests.partition(_.content == 0)
+      val (dataM, delM) = s.manifests.partition(_.content == 0)
       val merged = dataM.groupBy(_.specId).toSeq.sortBy(_._1).map { case (sid, group) =>
-        val specFields = specColumns(sid)
         // every live entry carried as EXISTING — by this snapshot, not
         // added by it — with its own snapshot id and sequence numbers
         val entries = group.flatMap(m => SpecManifests.readManifest(fs, new Path(m.path)))
           .filter(_.status != ManifestEntry.Deleted).map(_.copy(status = ManifestEntry.Existing))
-        val path = new Path(metadataDir, f"m-$snapId%05d-rw$sid$tagSuffix.avro")
-        val len = publishClaimed(path)(SpecManifests.writeManifest(fs, _,
-          specFields, entries, manifestMeta(sid, "data")))
         // list seq = the group's MIN so a null-seq entry can never be
         // treated as newer than it was (entries carry explicit seqs anyway)
-        ManifestFile.of(path.toString, len, sid, specFields, 0, group.map(_.sequenceNumber).min,
-          group.map(_.minSequenceNumber).min, snapId, entries)
+        manifest(s.md, staged, new Path(metadataDir, f"m-$snapId%05d-rw$sid$tagSuffix.avro"), sid,
+          0, entries, group.map(_.sequenceNumber).min, group.map(_.minSequenceNumber).min, snapId)
       }
-      manifests = merged.toList ++ delM
-      publishSnapshot(snapId, seq, "replace", None, md.nextRowId)
+      listed(s.copy(manifests = merged.toList ++ delM), staged, snapId, seq, "replace", None,
+        s.md.nextRowId)
     }
 
     /** Snapshot expiration (Iceberg `expire_snapshots`): drop all but the
@@ -1903,19 +1867,16 @@ object IcebergFormat {
         SpecManifests.readList(fs, new Path(lp)).map(_.path)
       }.toSet
       val keptIds = kept.map(_.snapshotId).toSet
-      // publish the trimmed metadata FIRST (CAS, rollback-protected): a
-      // lost commit race or a crash mid-expire must never have deleted
-      // files a still-current snapshot references. The first kept
-      // snapshot keeps its parent's id, as Iceberg's expiry does, and
-      // statistics go with their snapshots (the spec's GC contract).
-      withCommitRollback {
-        md = md.copy(
-          snapshots = kept,
-          snapshotLog = md.snapshotLog.filter(e => keptIds(e.snapshotId)),
-          statistics = md.statistics.filter(e => keptIds(e.snapshotId)),
-          partitionStatistics = md.partitionStatistics.filter(e => keptIds(e.snapshotId)))
-        writeMetadata()
-      }
+      // publish the trimmed metadata FIRST: a lost commit race or a crash
+      // mid-expire must never have deleted files a still-current snapshot
+      // references. The first kept snapshot keeps its parent's id, as
+      // Iceberg's expiry does, and statistics go with their snapshots
+      // (the spec's GC contract).
+      publishMetadata("expire")(m => m.copy(
+        snapshots = kept,
+        snapshotLog = m.snapshotLog.filter(e => keptIds(e.snapshotId)),
+        statistics = m.statistics.filter(e => keptIds(e.snapshotId)),
+        partitionStatistics = m.partitionStatistics.filter(e => keptIds(e.snapshotId))))
       // reclamation is BEST-EFFORT per entry: the expiration committed
       // above, so a missing/corrupt expired list (externally vacuumed)
       // must not fail the operation or strand the remaining deletions —
@@ -1931,79 +1892,75 @@ object IcebergFormat {
       }
     }
 
-    /** Publish snapshot `snapId`: its manifest list (this commit's
-      * manifests + carried ones), then the metadata version that logs it
-      * as current — summary `op`, the current schema's id, the row-lineage
-      * base `firstRowId`, the allocator advanced to `nextRowId`, and a
-      * commit time from the clock that stays past the last update, so
-      * snapshot times and the `snapshot-log` only grow.
+    /** `s` with snapshot `snapId` as current: its manifest list (claimed
+      * through `staged`) of `s`'s manifests, and the metadata that logs it
+      * — summary `op`, the current schema's id, the row-lineage base
+      * `firstRowId`, the allocator advanced to `nextRowId`, and a commit
+      * time from the clock that stays past the last update, so snapshot
+      * times and the `snapshot-log` only grow.
       * Row-delta commits publish delete/overwrite and rewrites replace —
       * the spec's summary contract, which changelog consumers key off. */
-    private def publishSnapshot(snapId: Long, seq: Long, op: String,
-        firstRowId: Option[Long], nextRowId: Long): Unit = {
-      // the snapshot's manifest list: this commit's manifest(s) + carried
-      // ones, each entry as it was first listed
+    private def listed(s: SpecState, staged: MetadataFiles.Staged, snapId: Long, seq: Long,
+        op: String, firstRowId: Option[Long], nextRowId: Long): SpecState = {
       val listPath = new Path(metadataDir, f"snap-$snapId%d-manifest-list$tagSuffix.avro")
       // parent = the actual previous head (ids are monotone but can GAP
       // past expired history, so snapId - 1 is not necessarily it)
-      val parent = md.snapshots.lastOption.map(_.snapshotId)
-      publishClaimed(listPath)(SpecManifests.writeList(fs, _, manifests, Map(
+      val parent = s.md.snapshots.lastOption.map(_.snapshotId)
+      staged.claim(listPath)(SpecManifests.writeList(fs, _, s.manifests, Map(
         "format-version" -> "2",
         "snapshot-id" -> snapId.toString,
         "sequence-number" -> seq.toString,
         "parent-snapshot-id" -> parent.map(_.toString).getOrElse("null"))))
-      val at = math.max(clock(), md.lastUpdatedMs + 1)
-      md = md.copy(
+      val at = math.max(clock(), s.md.lastUpdatedMs + 1)
+      s.copy(md = s.md.copy(
         lastSequenceNumber = seq, lastUpdatedMs = at, nextRowId = nextRowId,
-        snapshots = md.snapshots :+ SpecMetadata.Snapshot(snapId, parent, seq, at, op,
-          md.currentSchemaId, Some(listPath.toString), firstRowId),
+        snapshots = s.md.snapshots :+ SpecMetadata.Snapshot(snapId, parent, seq, at, op,
+          s.md.currentSchemaId, Some(listPath.toString), firstRowId),
         currentSnapshotId = Some(snapId),
-        snapshotLog = md.snapshotLog :+ SpecMetadata.SnapshotLogEntry(at, snapId))
-      writeMetadata()
+        snapshotLog = s.md.snapshotLog :+ SpecMetadata.SnapshotLogEntry(at, snapId)))
     }
 
-    /** Publish `md` as the next metadata version — commits, expiration,
-      * statistics and schema changes all go through here. Whoever
-      * publishes v{N}.metadata.json owns version N; a loser rolls back via
-      * withCommitRollback and retries from the winner's state. */
-    private def writeMetadata(): Unit = {
-      version += 1
-      val mdPath = new Path(metadataDir, metadataName(version))
-      if (!MetadataFiles.publishIfAbsent(fs, mdPath, SpecMetadata.render(md))) throw lostRace(mdPath)
-      attemptCreated = mdPath :: attemptCreated
-      MetadataFiles.writeHint(fs, metadataDir, version)
+    /** Publish the state `build` makes from `head` in one attempt of
+      * [[MetadataFiles.commit]] and take it as `head`. With `rebase` a lost
+      * race builds on a fresh read, without pending edits: only a fresh
+      * resume rebases. */
+    private[IcebergFormat] def publish(what: String, rebase: Boolean = false)(
+        build: (MetadataFiles.Versioned[SpecState], MetadataFiles.Staged) => SpecState): Writer = {
+      head = MetadataFiles.commit(fs, metadataDir, metadataName, s"$what commit to $location",
+          (s: SpecState) => SpecMetadata.render(s.md))(
+          head, if (rebase) Some(() => resumeWriter(spark, location, clock).head) else None)(
+          (b, staged) => Some(build(b, staged)))
+      this
     }
 
-    def currentMetadataPath: String = new Path(metadataDir, metadataName(version)).toString
+    /** [[publish]] of the base with its metadata mapped by `f`. */
+    private def publishMetadata(what: String)(f: SpecMetadata => SpecMetadata): Unit =
+      publish(what)((b, _) => b.value.copy(md = f(b.value.md)))
+
+    def currentMetadataPath: String = new Path(metadataDir, metadataName(head.version)).toString
   }
 
   /** Optimistic-concurrency append: commit `files` to the table at
-    * `location` through [[withRetry]] — the Iceberg commit protocol for
-    * parallel jobs appending to one table. The data files are already
-    * staged and immutable, so a retry re-publishes metadata only
-    * (O(manifest), no data IO). Returns the winning writer (for
-    * follow-up reads). */
+    * `location`, rebasing on a concurrent winner's state — the Iceberg
+    * commit protocol for parallel jobs appending to one table. The data
+    * files are already staged and immutable, so a retry re-publishes
+    * metadata only (O(manifest), no data IO). Returns the winning writer
+    * (for follow-up reads). */
   def appendWithRetry(spark: SparkSession, location: String, files: Seq[DataFileInfo]): Writer =
-    withRetry(spark, location)(_.commit(files))
+    resumeWriter(spark, location).append(files, rebase = true)
 
-  /** The resume-and-retry loop of every optimistic commit to a spec table:
-    * resume a writer from the CURRENT metadata, apply `op` (which
-    * publishes), and on a lost commit race — whose partial metadata files
-    * the writer rolled back before the ConcurrentModificationException
-    * surfaced — start over from the winner's metadata, up to
-    * [[IceTable.MaxCommitAttempts]] attempts. Returns the winning writer. */
-  def withRetry(spark: SparkSession, location: String)(op: Writer => Unit): Writer = {
-    var attempt = 1
-    while (true) {
-      val w = resumeWriter(spark, location)
-      try { op(w); return w }
-      catch {
-        case e: java.util.ConcurrentModificationException
-            if attempt < IceTable.MaxCommitAttempts => attempt += 1
-      }
+  /** Apply `edit` — calls of a [[Writer]]'s schema, default and property
+    * methods — to the table's current metadata and publish the result as
+    * one metadata-only version. A concurrent commit that wins the race
+    * rebases it: `edit` runs again on the winner's state, up to the
+    * loop's bound on attempts. Returns the writer at the published
+    * version. */
+  def publishEdits(spark: SparkSession, location: String)(edit: Writer => Unit): Writer =
+    resumeWriter(spark, location).publish("schema change", rebase = true) { (b, _) =>
+      val w = new Writer(spark, location, b, fileTag = "", WallClock)
+      edit(w)
+      w.head.value
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Reopen an existing Iceberg v2 table directory as a live [[Writer]]
     * session — the missing half of the writer's "single session owns the
@@ -2053,7 +2010,8 @@ object IcebergFormat {
       "resumeWriter requires every snapshot to name a manifest list")
     // the carried manifests: the head's list entries, verbatim
     val manifests = SpecManifests.readList(fs, new Path(head.manifestList.get)).toList
-    new Writer(spark, location, md.copy(location = location, schemas = schemas, specs = specs),
-      manifests, version, fileTag = "", clock)
+    new Writer(spark, location, MetadataFiles.Versioned(version,
+      SpecState(md.copy(location = location, schemas = schemas, specs = specs), manifests)),
+      fileTag = "", clock)
   }
 }

@@ -7,10 +7,10 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.util.control.NonFatal
 
 /** How both table formats publish metadata on a store: the version-file
-  * CAS, the version hint, and the version resolver. IceLite
+  * CAS, the version hint, the version resolver and the commit loop. IceLite
   * (`metadata/v<N>.json`) and the Iceberg-spec writer
   * (`metadata/v<NNNNN>.metadata.json`, snapshot-scoped Avro manifests and
-  * manifest lists) go through the same three calls.
+  * manifest lists) go through the same calls.
   *
   * STORE CONTRACT. The commit protocols need exactly two guarantees from
   * the underlying store: (1) per-object atomic visibility — a written
@@ -149,6 +149,75 @@ object MetadataFiles {
           }
         }
     }
+  }
+
+  /** Attempts a rebasing [[commit]] makes on a contended table. */
+  val MaxCommitAttempts = 10
+
+  /** A table's metadata value as published at `version`. */
+  final case class Versioned[+A](version: Int, value: A)
+
+  /** The files one commit attempt wrote for its version to reference. */
+  final class Staged private[MetadataFiles] () {
+    private[MetadataFiles] var files = List.empty[Path]
+
+    /** Record `p`, which this attempt wrote. */
+    def +=(p: Path): Unit = files ::= p
+
+    /** Publish `p` through `write` (false = the path was taken) and record
+      * it. A taken path — a spec manifest or list, named by its snapshot —
+      * is a lost race, as a taken version file is. */
+    def claim(p: Path)(write: Path => Boolean): Unit =
+      if (write(p)) files ::= p else throw new LostRace(p)
+  }
+
+  private final class LostRace(val path: Path) extends RuntimeException(null, null, false, false)
+
+  /** The one optimistic commit of both table formats. Each attempt takes
+    * a base — `base`, then `rebase()` after a lost race — and runs `build`
+    * over it, which returns the next value (None: nothing to publish) and
+    * records the files it wrote in its [[Staged]]. The value is rendered,
+    * published if absent as version N+1 of `metadataDir` (files named
+    * `nameOf`), and the hint follows. A lost race — the version file or a
+    * claimed path was taken — deletes the attempt's files and rebases, up
+    * to [[MaxCommitAttempts]] attempts (one without `rebase`). When the
+    * build throws or the last race is lost, every staged file goes,
+    * `staged` (written before the commit started) included; when the
+    * version-file publish itself throws nothing does, because the version
+    * may have landed. */
+  def commit[A](fs: FileSystem, metadataDir: Path, nameOf: Int => String, what: String,
+      render: A => String, staged: Seq[Path] = Nil)(
+      base: => Versioned[A], rebase: Option[() => Versioned[A]])(
+      build: (Versioned[A], Staged) => Option[A]): Versioned[A] = {
+    def discard(files: Seq[Path]): Unit =
+      files.foreach(p => try fs.delete(p, true) catch { case NonFatal(_) => () })
+    val attempts = if (rebase.isDefined) MaxCommitAttempts else 1
+    def attempt(n: Int): Versioned[A] = {
+      val mine       = new Staged
+      var publishing = false
+      try {
+        val b = if (n == 1) base else rebase.get()
+        build(b, mine) match {
+          case None => discard(mine.files ++ staged); b
+          case Some(next) =>
+            val (v, text) = (b.version + 1, render(next))
+            val p         = new Path(metadataDir, nameOf(v))
+            publishing = true
+            if (!publishIfAbsent(fs, p, text)) throw new LostRace(p)
+            writeHint(fs, metadataDir, v)
+            Versioned(v, next)
+        }
+      } catch {
+        case _: LostRace if n < attempts => discard(mine.files); attempt(n + 1)
+        case e: LostRace =>
+          discard(mine.files ++ staged)
+          throw new java.util.ConcurrentModificationException(
+            s"$what lost the commit race $n time(s) (${e.path.getName} was taken) — " +
+              "re-read the table and retry the operation")
+        case NonFatal(e) if !publishing => discard(mine.files ++ staged); throw e
+      }
+    }
+    attempt(1)
   }
 
   /** Point the hint in `metadataDir` at `version`, best-effort: it runs

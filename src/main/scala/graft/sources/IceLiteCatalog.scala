@@ -446,11 +446,11 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     // drops), and every promoted name must resolve — a rename in the
     // same batch must not silently swallow a promotion. The publish can
     // lose a race to a concurrent data commit; the change is metadata-only
-    // and idempotent to re-derive, so it goes through the same
-    // resume-and-retry loop as appends.
+    // and idempotent to re-derive, so a lost race applies the same edits
+    // to the winner's metadata, as a rebased append does.
     nativeDir(ns, ident.name()).foreach { loc =>
       val spark = SparkSession.active
-      graft.icelite.IcebergFormat.withRetry(spark, loc) { w =>
+      graft.icelite.IcebergFormat.publishEdits(spark, loc) { w =>
         val pm = promotes.toMap
         pm.keys.foreach(c => require(w.schemaNow.fieldNames.contains(c),
           s"no column $c to promote"))
@@ -464,7 +464,6 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
         nestedAdds.foreach { case (path, f) => w.addNestedColumn(path, f) }
         nestedRenames.foreach { case (path, n) => w.renameNestedColumn(path, n) }
         nestedDrops.foreach(w.dropNestedColumn)
-        w.publishSchemaChange()
       }
       return new IcebergMorV2Table(spark, loc)
     }

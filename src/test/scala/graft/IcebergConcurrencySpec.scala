@@ -98,6 +98,29 @@ class IcebergConcurrencySpec extends SparkSpec {
       s"orphan metadata files: ${(onDisk -- reachable).mkString(",")}")
   }
 
+  test("a schema change that loses the race applies its edits again to the winner's state") {
+    val loc = scratch("conc_edits") + "/t"
+    new IcebergFormat.Writer(spark, loc, nation.schema).commit(Seq(
+      IcebergFormat.writeSingleFile(spark, loc, "base", nation.filter(col("n_nationkey") < 10))))
+    val late = IcebergFormat.writeSingleFile(spark, loc, "late", nation.filter(col("n_nationkey") >= 10))
+    var runs = 0
+    IcebergFormat.publishEdits(spark, loc) { w =>
+      runs += 1
+      // an append lands between the first attempt's read and its publish
+      if (runs == 1) IcebergFormat.resumeWriter(spark, loc).commit(Seq(late))
+      w.evolveSchema(w.schemaNow.add("note", org.apache.spark.sql.types.StringType))
+    }
+    assert(runs == 2, s"the edits ran $runs time(s)")
+    val mdPath = IcebergFormat.currentMetadataPath(spark, loc)
+    assert(mdPath.endsWith("/metadata/v00003.metadata.json"), mdPath)
+    val scanned = IcebergFormat.scan(spark, mdPath)
+    assert(scanned.columns.last == "note", scanned.columns.mkString(","))
+    assert(scanned.count() == nation.count(), "the rebased schema change lost the winner's append")
+    val onDisk = fsOf(loc).listStatus(new Path(loc, "metadata")).map(_.getPath.getName).toSet
+    assert((onDisk -- reachableSpecMetadata(loc)).isEmpty,
+      s"orphan metadata files: ${(onDisk -- reachableSpecMetadata(loc)).mkString(",")}")
+  }
+
   test("concurrent manifest-planned scans never leak the discovery threshold") {
     // Library scans read through the DSv2 connector and set no session
     // conf, so racing scans cannot leave a discovery threshold behind.

@@ -6,23 +6,29 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The store contract — the version-file CAS, the hint and its file name —
-  * is decided in one place, `graft/icelite/MetadataFiles.scala`. A second
-  * publish path in `src/main/scala` (a hard link, a scheme table or a hand
-  * written hint reader somewhere else) fails this spec. */
+  * and the optimistic commit loop are decided in one place,
+  * `graft/icelite/MetadataFiles.scala`. A second publish path in
+  * `src/main/scala` (a hard link, a scheme table, a hand written hint
+  * reader or a retry loop with its own attempt bound somewhere else)
+  * fails this spec. */
 class MetadataPublishGuardSpec extends AnyFunSuite {
 
   private val root   = Paths.get("src", "main", "scala")
   private val module = root.resolve(Paths.get("graft", "icelite", "MetadataFiles.scala"))
 
   /** What only the module may say: the `file:` CAS, the object-store
-    * scheme table, and the hint's name in a string literal. */
+    * scheme table, the hint's name in a string literal, and the commit
+    * loop's attempt bound. */
   private val owned = Seq(
     "createLink"            -> "createLink".r,
     "conditionalPutSchemes" -> "conditionalPutSchemes".r,
-    "\"version-hint.text\"" -> "\"[^\"\\n]*version-hint\\.text".r)
+    "\"version-hint.text\"" -> "\"[^\"\\n]*version-hint\\.text".r,
+    "MaxCommitAttempts"     -> "MaxCommitAttempts".r)
 
-  /** Names of the deleted second copies, which no file may bring back. */
-  private val gone = "claimExactlyOnce|writeFileIfAbsent|noClobber|listVersions".r
+  /** Names of the deleted second copies, which no file may bring back:
+    * publish helpers, and the spec writer's own rollback and retry loop. */
+  private val gone = ("claimExactlyOnce|writeFileIfAbsent|noClobber|listVersions|" +
+    "withCommitRollback|attemptCreated|withRetry\\b").r
 
   private def sources: Seq[Path] =
     Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq

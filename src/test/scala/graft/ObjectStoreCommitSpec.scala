@@ -170,6 +170,37 @@ class ObjectStoreCommitSpec extends SparkSpec {
     assert(orphans.isEmpty, s"orphan metadata files: ${orphans.mkString(",")}")
   }
 
+  // a PUT the store rejects, once on the manifest list and once on the
+  // manifest itself: the commit must fail without leaving its other files
+  // behind or changing the writer, so the table takes the next commit
+  Seq("^snap-", "^m-0").foreach { fault =>
+    test(s"a spec commit whose create fails ($fault) leaves metadata/ as it was and commits next") {
+      val loc = objScratch(s"createfault_${fault.filter(_.isLetter)}")
+      val w   = new IcebergFormat.Writer(spark, loc, nation.schema)
+      w.commit(Seq(specFile(loc, "a", col("n_nationkey") < 5)))
+      val b  = specFile(loc, "b", col("n_nationkey") >= 5 && col("n_nationkey") < 15)
+      val c  = specFile(loc, "c", col("n_nationkey") >= 15)
+      val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def listing = fs.listStatus(new Path(loc, "metadata")).map(_.getPath.getName).toSet
+      val before = listing
+      ObjectStoreFileSystem.failCreate.set(Some(fault.r))
+      try intercept[java.io.IOException](w.commit(Seq(b)))
+      finally ObjectStoreFileSystem.failCreate.set(None)
+      assert(listing == before,
+        s"the failed commit changed metadata/: +${(listing -- before).mkString(",")} " +
+          s"-${(before -- listing).mkString(",")}")
+      w.commit(Seq(b))
+      assert(new Path(w.currentMetadataPath).getName == "v00002.metadata.json", w.currentMetadataPath)
+      IcebergFormat.appendWithRetry(spark, loc, Seq(c))
+      val mp = IcebergFormat.currentMetadataPath(spark, loc)
+      assert(mp.endsWith("/metadata/v00003.metadata.json"), mp)
+      assert(IcebergFormat.snapshotLog(spark, mp) == Seq(1L, 2L, 3L))
+      assert(IcebergFormat.scan(spark, mp).count() == nation.count())
+      val orphans = listing -- reachableSpecMetadata(loc)
+      assert(orphans.isEmpty, s"orphan metadata files: ${orphans.mkString(",")}")
+    }
+  }
+
   test("a commit whose hint write fails returns normally; the next resolution finds it") {
     val loc = objScratch("hintfault_spec")
     val w   = new IcebergFormat.Writer(spark, loc, nation.schema)

@@ -1259,7 +1259,6 @@ object IcebergFormat {
       spark: SparkSession,
       val location: String,
       private[IcebergFormat] var head: MetadataFiles.Versioned[SpecState],
-      fileTag: String,
       clock: () => Long) {
 
     def this(
@@ -1268,22 +1267,14 @@ object IcebergFormat {
         schema: StructType,
         partitionBy: Seq[String] = Nil, // see parseSpec
         tableUuid: String = "11111111-2222-3333-4444-555555555555",
-        // in-place REPLACE support: number new metadata JSONs above the old
-        // table's versions and tag manifest/list names so nothing the old
-        // snapshot references is overwritten before the new version is
-        // published — the superseded files are deleted only AFTER it is live
-        startVersion: Int = 0,
-        fileTag: String = "",
         // REAL top-level field ids (possibly SPARSE — a dropped-column
         // history leaves gaps); empty = the positional 1..n layout this
         // writer produces for fresh tables
         topLevelFieldIds: Seq[Int] = Nil,
         clock: () => Long = WallClock) =
-      this(spark, location, MetadataFiles.Versioned(startVersion, SpecState(
+      this(spark, location, MetadataFiles.Versioned(0, SpecState(
         freshMetadata(location, schema, partitionBy, tableUuid, topLevelFieldIds, clock()), Nil)),
-        fileTag, clock)
-
-    private val tagSuffix = if (fileTag.isEmpty) "" else s"-$fileTag"
+        clock)
 
     private val fs = new Path(location).getFileSystem(spark.sparkContext.hadoopConfiguration)
     private val metadataDir = new Path(location, "metadata")
@@ -1678,10 +1669,25 @@ object IcebergFormat {
       * content 1 in the manifest list, exactly as the spec splits them. */
     def commit(files: Seq[DataFileInfo]): Unit = append(files, rebase = false)
 
-    /** [[commit]], rebasing on a lost race with `rebase`. */
-    private[IcebergFormat] def append(files: Seq[DataFileInfo], rebase: Boolean): Writer =
-      publish("append", rebase)((b, staged) =>
-        withSnapshot(b.value, staged, Seq(files -> b.value.md.defaultSpecId), "append"))
+    /** [[commit]], rebasing on a lost race with `rebase`. Files that do
+      * not carry the default spec's partition tuples (`stamped` false)
+      * commit under [[deltaSpec]]. With `overwrite` the snapshot is an
+      * "overwrite" that lists only `files`, as [[rewriteDataFiles]] does. */
+    private[IcebergFormat] def append(files: Seq[DataFileInfo], rebase: Boolean,
+        stamped: Boolean = true, overwrite: Boolean = false): Writer = {
+      val op = if (overwrite) "overwrite" else "append"
+      publish(op, rebase)((b, staged) => added(
+        if (overwrite) b.value.copy(manifests = Nil) else b.value, staged, files, stamped, op))
+    }
+
+    /** `s` with one more snapshot, of `files` labelled `op`: under the
+      * default spec when they carry its partition tuples (`stamped`), else
+      * under [[deltaSpec]]. */
+    private def added(s: SpecState, staged: MetadataFiles.Staged, files: Seq[DataFileInfo],
+        stamped: Boolean, op: String): SpecState = {
+      val (t, sid) = if (stamped) (s, s.md.defaultSpecId) else deltaSpec(s)
+      withSnapshot(t, staged, Seq(files -> sid), op)
+    }
 
     /** Operation label for a delta commit's summary: all-deletes =
       * "delete", anything staging new rows = "overwrite". */
@@ -1697,10 +1703,8 @@ object IcebergFormat {
       * once, default-spec-id untouched), which every conforming reader
       * treats as global/unpruned — conservative and correct. Unpartitioned
       * tables take the ordinary path. */
-    def commitDelta(files: Seq[DataFileInfo]): Unit = publish("delta") { (b, staged) =>
-      val (s, sid) = deltaSpec(b.value)
-      withSnapshot(s, staged, Seq(files -> sid), deltaOp(files))
-    }
+    def commitDelta(files: Seq[DataFileInfo]): Unit =
+      publish("delta")((b, staged) => added(b.value, staged, files, stamped = false, deltaOp(files)))
 
     /** `s` with the spec files without partition values commit under, and
       * its id: the default if unpartitioned, else the auxiliary unpartitioned
@@ -1775,10 +1779,10 @@ object IcebergFormat {
         // same-kind manifests from ANOTHER spec group in this commit get a
         // spec-id suffix — names must stay unique within the snapshot
         val suffix =
-          if (seenNames.add(f"m-$snapId%05d$base$tagSuffix.avro")) base
+          if (seenNames.add(f"m-$snapId%05d$base.avro")) base
           else s"$base-s$specId"
         val entries = group.map(ManifestEntry(ManifestEntry.Added, Some(snapId), Some(seq), Some(seq), _))
-        manifest(s.md, staged, new Path(metadataDir, f"m-$snapId%05d$suffix$tagSuffix.avro"),
+        manifest(s.md, staged, new Path(metadataDir, f"m-$snapId%05d$suffix.avro"),
           specId, kind, entries, seq, seq, snapId)
       }
       // 2+3. the snapshot's manifest list + metadata; its first-row-id
@@ -1816,8 +1820,7 @@ object IcebergFormat {
       * after the rewrite, scans are pure data-file reads again. */
     def rewriteDataFiles(files: Seq[DataFileInfo]): Unit = publish("rewrite") { (b, staged) =>
       // manifests replaced wholesale; old snapshots keep theirs
-      withSnapshot(b.value.copy(manifests = Nil), staged,
-        Seq(files -> b.value.md.defaultSpecId), "replace")
+      added(b.value.copy(manifests = Nil), staged, files, stamped = true, "replace")
     }
 
     /** Manifest compaction (Iceberg `rewrite_manifests`): merge every
@@ -1843,7 +1846,7 @@ object IcebergFormat {
           .filter(_.status != ManifestEntry.Deleted).map(_.copy(status = ManifestEntry.Existing))
         // list seq = the group's MIN so a null-seq entry can never be
         // treated as newer than it was (entries carry explicit seqs anyway)
-        manifest(s.md, staged, new Path(metadataDir, f"m-$snapId%05d-rw$sid$tagSuffix.avro"), sid,
+        manifest(s.md, staged, new Path(metadataDir, f"m-$snapId%05d-rw$sid.avro"), sid,
           0, entries, group.map(_.sequenceNumber).min, group.map(_.minSequenceNumber).min, snapId)
       }
       listed(s.copy(manifests = merged.toList ++ delM), staged, snapId, seq, "replace", None,
@@ -1852,13 +1855,13 @@ object IcebergFormat {
 
     /** Snapshot expiration (Iceberg `expire_snapshots`): drop all but the
       * last `keepLast` snapshots from the metadata, delete their manifest
-      * lists, and delete any manifest file no kept snapshot references —
-      * the complement of rewrite_manifests: rewrite makes old per-commit
-      * manifests unreachable, expiration reclaims them. Data files are
-      * never touched here: in this append-only writer every data file is
-      * carried forward into the kept snapshots (unreachable-DATA sweeping
-      * is the vacuum operation's job, ic27). Bounds the metadata history
-      * a long-lived streaming table accumulates. */
+      * lists, delete any manifest file no kept snapshot references, and
+      * delete the data and delete files that only those manifests list —
+      * the complement of the rewrites: rewrite_manifests makes old
+      * per-commit manifests unreachable and rewrite_data_files or an
+      * overwrite makes old files unreachable, expiration reclaims them.
+      * A file carried into a kept snapshot stays. Bounds the metadata
+      * history a long-lived streaming table accumulates. */
     def expireSnapshots(keepLast: Int): Unit = {
       require(keepLast >= 1, "must keep at least the current snapshot")
       val (expired, kept) = md.snapshots.splitAt((md.snapshots.size - keepLast).max(0))
@@ -1878,18 +1881,29 @@ object IcebergFormat {
         statistics = m.statistics.filter(e => keptIds(e.snapshotId)),
         partitionStatistics = m.partitionStatistics.filter(e => keptIds(e.snapshotId))))
       // reclamation is BEST-EFFORT per entry: the expiration committed
-      // above, so a missing/corrupt expired list (externally vacuumed)
-      // must not fail the operation or strand the remaining deletions —
-      // a skipped file is an orphan for the vacuum op, not an error
-      expired.flatMap(_.manifestList).foreach { lp =>
-        try {
-          val p = new Path(lp)
-          SpecManifests.readList(fs, p).map(_.path)
-            .filterNot(keptManifests)
-            .foreach(mp => fs.delete(new Path(mp), false))
-          fs.delete(p, false)
-        } catch { case _: Exception => () }
+      // above, so a missing/corrupt expired list or manifest (externally
+      // vacuumed) must not fail the operation or strand the remaining
+      // deletions — a skipped file is an orphan for the vacuum op, not an
+      // error
+      import scala.util.Try
+      val lists = expired.flatMap(_.manifestList).map(new Path(_))
+      val gone  = lists.flatMap(p => Try(SpecManifests.readList(fs, p)).getOrElse(Nil))
+        .map(_.path).distinct.filterNot(keptManifests).map(new Path(_))
+      // kept manifests' entries are read only when a manifest goes; a file
+      // outside the table's location (adopted by an export) is never
+      // deleted, and a directory a write staged into goes with its last file
+      if (gone.nonEmpty) Try {
+        def files(m: Path) = SpecManifests.readManifest(fs, m)
+          .map(e => fs.makeQualified(new Path(e.file.path)))
+        val live = keptManifests.toSeq.flatMap(m => files(new Path(m))).toSet
+        val own  = fs.makeQualified(new Path(location))
+        val dead = gone.flatMap(m => Try(files(m)).getOrElse(Nil)).distinct
+          .filter(f => !live(f) && f.toString.startsWith(s"$own/"))
+        dead.foreach(f => Try(fs.delete(f, false)))
+        dead.map(_.getParent).distinct.filter(_ != new Path(own, "data"))
+          .foreach(d => Try(if (fs.listStatus(d).isEmpty) fs.delete(d, false)))
       }
+      (gone ++ lists).foreach(p => Try(fs.delete(p, false)))
     }
 
     /** `s` with snapshot `snapId` as current: its manifest list (claimed
@@ -1902,7 +1916,7 @@ object IcebergFormat {
       * the spec's summary contract, which changelog consumers key off. */
     private def listed(s: SpecState, staged: MetadataFiles.Staged, snapId: Long, seq: Long,
         op: String, firstRowId: Option[Long], nextRowId: Long): SpecState = {
-      val listPath = new Path(metadataDir, f"snap-$snapId%d-manifest-list$tagSuffix.avro")
+      val listPath = new Path(metadataDir, f"snap-$snapId%d-manifest-list.avro")
       // parent = the actual previous head (ids are monotone but can GAP
       // past expired history, so snapId - 1 is not necessarily it)
       val parent = s.md.snapshots.lastOption.map(_.snapshotId)
@@ -1945,9 +1959,12 @@ object IcebergFormat {
     * commit protocol for parallel jobs appending to one table. The data
     * files are already staged and immutable, so a retry re-publishes
     * metadata only (O(manifest), no data IO). Returns the winning writer
-    * (for follow-up reads). */
-  def appendWithRetry(spark: SparkSession, location: String, files: Seq[DataFileInfo]): Writer =
-    resumeWriter(spark, location).append(files, rebase = true)
+    * (for follow-up reads). `stamped` and `overwrite` are the connector
+    * write's: files without the default spec's partition tuples, and a
+    * snapshot that replaces the table's files (see [[Writer.append]]). */
+  def appendWithRetry(spark: SparkSession, location: String, files: Seq[DataFileInfo],
+      stamped: Boolean = true, overwrite: Boolean = false): Writer =
+    resumeWriter(spark, location).append(files, rebase = true, stamped, overwrite)
 
   /** Apply `edit` — calls of a [[Writer]]'s schema, default and property
     * methods — to the table's current metadata and publish the result as
@@ -1957,7 +1974,7 @@ object IcebergFormat {
     * version. */
   def publishEdits(spark: SparkSession, location: String)(edit: Writer => Unit): Writer =
     resumeWriter(spark, location).publish("schema change", rebase = true) { (b, _) =>
-      val w = new Writer(spark, location, b, fileTag = "", WallClock)
+      val w = new Writer(spark, location, b, WallClock)
       edit(w)
       w.head.value
     }
@@ -2012,6 +2029,6 @@ object IcebergFormat {
     val manifests = SpecManifests.readList(fs, new Path(head.manifestList.get)).toList
     new Writer(spark, location, MetadataFiles.Versioned(version,
       SpecState(md.copy(location = location, schemas = schemas, specs = specs), manifests)),
-      fileTag = "", clock)
+      clock)
   }
 }

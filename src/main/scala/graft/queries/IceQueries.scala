@@ -1118,7 +1118,8 @@ object IceQueries {
     * metadata (time travel to them now throws), and the table's data —
     * every file carried into the kept snapshot — reads in full. This
     * bounds the metadata history a long-lived streaming table
-    * accumulates; data-file sweeping stays the vacuum op's job (ic27). */
+    * accumulates; expiry deletes only data files no kept snapshot lists,
+    * and here every one is carried. */
   private def icebergExpireQ(s: SparkSession, d: String): DataFrame = {
     val root   = freshDir(s, "icexp")
     val loc    = s"$root/nations_exp"

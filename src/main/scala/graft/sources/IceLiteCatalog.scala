@@ -280,7 +280,7 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
     // standard-format table: batch reads + merge-on-read SQL DELETE
     // through spec-shaped position deletes (ic76).
     nativeDir(ns, ident.name()).foreach { loc =>
-      return new IcebergMorV2Table(SparkSession.active, loc)
+      return IcebergMorV2Table(SparkSession.active, loc)
     }
     val (ice, pointer) = loadIce(ns, ident)
     IceLiteV2Table.current(ice, publishHook(ns, ident.name(), pointer))
@@ -465,7 +465,7 @@ final class IceLiteCatalog extends TableCatalog with SupportsNamespaces with Pro
         nestedRenames.foreach { case (path, n) => w.renameNestedColumn(path, n) }
         nestedDrops.foreach(w.dropNestedColumn)
       }
-      return new IcebergMorV2Table(spark, loc)
+      return IcebergMorV2Table(spark, loc)
     }
     require(nestedAdds.isEmpty && nestedRenames.isEmpty && nestedDrops.isEmpty,
       "nested-column ALTER is supported on native Iceberg v2 tables only " +

@@ -93,17 +93,16 @@ final class IceLiteSource extends TableProvider with DataSourceRegister {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     if (isIceberg(options)) {
-      // an EXISTING table infers from its committed metadata (the
-      // streaming-read path); an absent one has no schema to infer — the
-      // write path hands the DataFrame schema to getTable directly
+      // an EXISTING table infers from its committed metadata (the read
+      // paths); an absent one has no schema to infer — the write path
+      // hands the DataFrame schema to getTable directly
       val loc = resolveLocation(options)
       if (IcebergFormat.currentVersion(SparkSession.active, loc) == 0)
         throw new UnsupportedOperationException(
-          s"no Iceberg table at $loc to infer a schema from; writes pass the " +
-            "DataFrame schema, batch reads go through Engine.scanIcebergMetadata")
+          s"no Iceberg table at $loc to infer a schema from; writes pass the DataFrame schema")
       // the library scan's schema from ONE metadata-JSON read (the
       // table's plan header); no manifest is planned
-      new IcebergMorV2Table(SparkSession.active, loc).schema()
+      IcebergMorV2Table(SparkSession.active, loc).schema()
     } else loadIce(options).metadata.schema
 
   override def inferPartitioning(options: CaseInsensitiveStringMap): Array[Transform] =
@@ -116,7 +115,7 @@ final class IceLiteSource extends TableProvider with DataSourceRegister {
       properties: JMap[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
     if (isIceberg(opts))
-      return new IcebergV2Table(resolveLocation(opts), schema)
+      return IcebergMorV2Table.at(SparkSession.active, resolveLocation(opts), schema)
     val ice = loadIce(opts)
     val md  = ice.metadata
     new IceLiteV2Table(ice, md, resolveSnapshot(md, opts), None, Option(opts.get("delete-mode")))

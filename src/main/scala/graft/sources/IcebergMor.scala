@@ -6,28 +6,30 @@ import graft.icelite.SpecManifests.{FieldSummary, ManifestFile}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsRowLevelOperations, Table, TableCapability}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Or, StringStartsWith}
-import org.apache.spark.sql.types.{BooleanType, DateType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{BooleanType, DateType, IntegerType, LongType, StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import java.util.Locale
 
-/** SQL row-level DML over a table in the STANDARD Iceberg v2 format
+/** The one DSv2 table over a directory in the STANDARD Iceberg v2 format
   * (Avro manifests + metadata JSON — the layout the reference's external
   * tools read: `/root/reference/query_iceberg_minio.ipynb:1119-1180` runs
-  * SQL DML against exactly such tables), merge-on-read: the `SupportsDelta`
-  * operation writes spec-shaped POSITION DELETE files (content 1,
-  * `file_path`/`pos` rows) plus ordinary v2-layout data files for
-  * UPDATE/MERGE inserts, and [[IcebergFormat.resumeWriter]] commits them
-  * as one delta snapshot — every existing data file is carried by pointer,
-  * byte-untouched. This table's V2 batch scan applies the deletes from
-  * per-file bitmaps, and it is also the library reader: `IcebergFormat
-  * .scan` and its siblings (the DuckDB `iceberg_scan` path, ic21/ic51)
-  * are DataFrames over [[IcebergMorV2Table.pinned]].
+  * SQL DML against exactly such tables): it reads, streams
+  * ([[IcebergMicroBatchStream]]), writes ([[IcebergMorWrite]]) and runs
+  * DML. DML is merge-on-read: the `SupportsDelta` operation writes
+  * spec-shaped POSITION DELETE files (content 1, `file_path`/`pos` rows)
+  * plus ordinary v2-layout data files for UPDATE/MERGE inserts, and
+  * [[IcebergFormat.resumeWriter]] commits them as one delta snapshot —
+  * every existing data file is carried by pointer, byte-untouched. The
+  * batch scan applies the deletes from per-file bitmaps, and it is also
+  * the library reader: `IcebergFormat.scan` and its siblings (the DuckDB
+  * `iceberg_scan` path, ic21/ic51) are DataFrames over
+  * [[IcebergMorV2Table.pinned]].
   *
   * Scope mirrors the resumed-commit surface: flat primitive schemas,
   * including identity/bucket/temporal-partitioned and additively
@@ -59,28 +61,39 @@ object IcebergMorV2Table {
     * files and deletes instead of planning the manifests again. */
   def pinned(spark: SparkSession, metaPath: String, snapshotId: Option[Long] = None,
       planned: Option[IcebergFormat.TablePlan] = None): IcebergMorV2Table =
-    new IcebergMorV2Table(spark, new Path(metaPath).getParent.getParent.toString, metaPath,
-      snapshotId, planned)
+    new IcebergMorV2Table(spark, new Path(metaPath).getParent.getParent.toString, Some(metaPath),
+      IcebergFormat.planHeader(spark, metaPath), snapshotId, planned)
+
+  def apply(spark: SparkSession, location: String): IcebergMorV2Table =
+    pinned(spark, IcebergFormat.currentMetadataPath(spark, location))
+
+  /** The connector's table at `location`: the current one, or, where no
+    * table exists yet, an empty one of `schema` (the DataFrame's, field
+    * ids 1..n) that its first write creates. */
+  def at(spark: SparkSession, location: String, schema: StructType): IcebergMorV2Table =
+    if (IcebergFormat.currentVersion(spark, location) > 0) apply(spark, location)
+    else {
+      val ids = 1 to schema.length
+      new IcebergMorV2Table(spark, location, None, IcebergFormat.PlanHeader(schema, ids, Map.empty),
+        None, Some(IcebergFormat.TablePlan(schema, ids, Nil, Nil)))
+    }
 }
 
 final class IcebergMorV2Table private (
     spark: SparkSession,
     location: String,
-    metaPath: String,
+    metaPath: Option[String], // None before the table's first commit
+    // stage-1: ONE metadata-JSON read — schema + identity axes; the full
+    // manifest walk is deferred until a scan (which prunes whole manifests
+    // by the pushed filters) or a DML op (which needs every file) forces it
+    header: IcebergFormat.PlanHeader,
     snapshotId: Option[Long],
     planned: Option[IcebergFormat.TablePlan])
-    extends Table with SupportsRead with SupportsRowLevelOperations
+    extends Table with SupportsRead with SupportsWrite with SupportsRowLevelOperations
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
-  def this(spark: SparkSession, location: String) =
-    this(spark, location, IcebergFormat.currentMetadataPath(spark, location), None, None)
-
-  // stage-1: ONE metadata-JSON read — schema + identity axes; the full
-  // manifest walk is deferred until a scan (which prunes whole manifests
-  // by the pushed filters) or a DML op (which needs every file) forces it
-  private val header = IcebergFormat.planHeader(spark, metaPath)
   private def planWith(keep: ManifestFile => Boolean) =
-    planned.getOrElse(IcebergFormat.plan(spark, metaPath, snapshotId, keep))
+    planned.getOrElse(IcebergFormat.plan(spark, metaPath.get, snapshotId, keep))
   private[sources] lazy val tablePlan = planWith(_ => true)
 
   override def name(): String = s"iceberg.$location"
@@ -109,7 +122,8 @@ final class IcebergMorV2Table private (
   }
   override def partitioning(): Array[Transform] = Array.empty
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
+    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
+      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE)
 
   override def metadataColumns(): Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     Array(IceLiteMetaColumn("_file", StringType), IceLiteMetaColumn("_pos", LongType),
@@ -119,7 +133,18 @@ final class IcebergMorV2Table private (
       IceLiteMetaColumn("_last_updated_sequence_number", LongType))
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new IcebergMorScanBuilder(schema(), header, planWith)
+    new IcebergMorScanBuilder(location, schema(), header, planWith)
+
+  // rows arrive in this table's column order, so files take its field ids
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new WriteBuilder with SupportsTruncate {
+      private var overwrite = false
+      override def truncate(): WriteBuilder = { overwrite = true; this }
+      override def build(): Write = new IcebergMorWrite(location, info.schema(),
+        header.fieldIds, header.nestedIds,
+        metaPath.fold(Seq.empty[(String, String)])(IcebergFormat.defaultSpecIdentityCols(spark, _)),
+        created = metaPath.isEmpty, overwrite)
+    }
 
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder =
@@ -144,6 +169,7 @@ final class IcebergMorV2Table private (
   * position deletes ride with their manifest `file_path` bounds so the
   * reader opens a delete file only for data files inside its range. */
 final class IcebergMorScanBuilder(
+    location: String,
     tableSchema: StructType,
     header: IcebergFormat.PlanHeader,
     loadPlan: (ManifestFile => Boolean) => IcebergFormat.TablePlan)
@@ -154,8 +180,8 @@ final class IcebergMorScanBuilder(
   /** Pre-planned compatibility entry (the row-level-operation scan, which
     * needs every file anyway): no manifest-list pruning, same behavior as
     * handing the full plan directly. */
-  def this(tableSchema: StructType, p: IcebergFormat.TablePlan) =
-    this(tableSchema, IcebergFormat.PlanHeader(p.schema, p.fieldIds, Map.empty), _ => p)
+  def this(location: String, tableSchema: StructType, p: IcebergFormat.TablePlan) =
+    this(location, tableSchema, IcebergFormat.PlanHeader(p.schema, p.fieldIds, Map.empty), _ => p)
 
   // filter translation needs only schema + field ids — no files
   private val predPlan =
@@ -214,7 +240,7 @@ final class IcebergMorScanBuilder(
   override def build(): Scan = {
     if (countPushed) return new IcebergMorCountScan(fullPlan.files.map(_.rowCount).sum)
     val keeps = pushed.flatMap(IcebergMorScan.manifestPredicate(header, _))
-    new IcebergMorScan(required, tableSchema,
+    new IcebergMorScan(location, required, tableSchema,
       if (keeps.isEmpty) fullPlan else loadPlan(mh => keeps.forall(_(mh))), pushed, limit)
   }
 }
@@ -595,20 +621,24 @@ object IcebergMorScan {
 }
 
 final class IcebergMorScan(
+    location: String,
     required: StructType,
     tableSchema: StructType,
-    p: IcebergFormat.TablePlan,
+    plan: => IcebergFormat.TablePlan,
     pushed: Array[Filter],
     limit: Option[Int] = None)
     extends Scan with Batch with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+
+  // planned on first use: a stream (toMicroBatchStream) never plans
+  private lazy val p = plan
 
   // position deletes name files by path and apply to data files whose
   // data sequence number is at most theirs (spec "Scan Planning"): a
   // delete naming a path before that file was committed leaves its rows.
   // The manifest's file_path [min, max] rides along so the reader opens a
   // delete file only for data files inside its range.
-  private val deleteFiles: Seq[PositionDeleteFile] =
+  private lazy val deleteFiles: Seq[PositionDeleteFile] =
     p.deletes.filter(_.content == 1).map { d =>
       d.dvRef match {
         // v3 deletion vector: exact-file application via the blob range
@@ -623,7 +653,7 @@ final class IcebergMorScan(
   // apply reader-side per data file, gated by the spec's strictly-older
   // sequence rule; `equality_ids` resolve to column names HERE, where the
   // field-id table lives, so executors stay id-free
-  private val eqDeleteFiles: Seq[EqualityDeleteFile] = {
+  private lazy val eqDeleteFiles: Seq[EqualityDeleteFile] = {
     val idToName = p.fieldIds.zip(p.schema.fieldNames).toMap
     p.deletes.filter(_.content == 2).map { d =>
       require(d.equalityIds.nonEmpty, "equality delete file without equality_ids")
@@ -636,8 +666,8 @@ final class IcebergMorScan(
   // manifest-level file skipping: a file survives only if EVERY pushed
   // filter's pruning predicate can match its recorded bounds / partition
   // values (conjunction semantics; a file with no evidence is kept)
-  private val filePreds = pushed.flatMap(IcebergMorScan.filePredicate(p, _))
-  private[graft] val survivors: Seq[IcebergFormat.PlannedFile] =
+  private lazy val filePreds = pushed.flatMap(IcebergMorScan.filePredicate(p, _))
+  private[graft] lazy val survivors: Seq[IcebergFormat.PlannedFile] =
     p.files.filter(f => filePreds.forall(_(f)))
 
   // identity-partition columns any surviving file records a value for:
@@ -645,7 +675,7 @@ final class IcebergMorScan(
   // file physically omits the column (spec "Column Projection" — the
   // layout identity-partitioned writers commonly produce). Files that DO
   // hold the column decode it normally; the key is inert then.
-  private val partCols: Array[String] =
+  private lazy val partCols: Array[String] =
     survivors.flatMap(_.partition.keys).distinct.sorted
       .flatMap { id =>
         val i = p.fieldIds.indexOf(id)
@@ -727,6 +757,19 @@ final class IcebergMorScan(
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] = partitions
 
+  /** `readStream`: tail the snapshot log (st17). The stream rejects what
+    * the batch scan applies — deletes, nested projection, time travel —
+    * so it takes flat primitive schemas only. */
+  override def toMicroBatchStream(checkpointLocation: String)
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    tableSchema.fields.foreach(f => require(
+      graft.icelite.BoundOrder.rangeable(f.dataType) || f.dataType == BooleanType ||
+        f.dataType == DateType || f.dataType == TimestampType ||
+        f.dataType == TimestampNTZType,
+      s"iceberg streaming read supports flat primitive schemas; got ${f.dataType} for ${f.name}"))
+    new IcebergMicroBatchStream(location, tableSchema)
+  }
+
   /** Manifest-derived estimates for the optimizer: rows = sum of the
     * surviving files' required `record_count` (an over-count while
     * row-level deletes are live — conservative for broadcast decisions),
@@ -776,7 +819,7 @@ final class IcebergMorScan(
 /** Row-level WriteDelta over a standard-format v2 table: DELETE matched
   * rows → position-delete files; UPDATE/MERGE additionally stage
   * v2-layout data parquet (field-id'd columns, inline min/max stats) for
-  * the insert/reinsert arm, exactly the file shape [[IcebergV2Write]]
+  * the insert/reinsert arm, exactly the file shape [[IcebergMorWrite]]
   * commits. One resumed commit publishes both (content-0 + content-1
   * manifests in a single delta snapshot). */
 final class IcebergMorDeltaOperation(
@@ -797,7 +840,7 @@ final class IcebergMorDeltaOperation(
   override def representUpdateAsDeleteAndInsert(): Boolean = true
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new IcebergMorScanBuilder(tableSchema, p)
+    new IcebergMorScanBuilder(location, tableSchema, p)
 
   override def newWriteBuilder(writeInfo: LogicalWriteInfo): DeltaWriteBuilder =
     new DeltaWriteBuilder {
@@ -811,20 +854,42 @@ final class IcebergMorDeltaOperation(
             tableSchema.catalogString,
           s"delta write schema ${writeInfo.schema().catalogString} != table schema ${tableSchema.catalogString}")
         // identity default-spec columns the rolling writer can stamp —
-        // empty for transform specs, which keep the unpartitioned fallback
-        val partCols = IcebergFormat.defaultSpecIdentityCols(
-          SparkSession.active, IcebergFormat.currentMetadataPath(SparkSession.active, location))
+        // empty for transform specs, which keep the unpartitioned fallback,
+        // and for DELETE, whose rows carry no data columns (row-id
+        // projection only) a distribution over them could resolve against
+        val partCols =
+          if (command() == RowLevelOperation.Command.DELETE) Nil
+          else IcebergFormat.defaultSpecIdentityCols(
+            SparkSession.active, IcebergFormat.currentMetadataPath(SparkSession.active, location))
         new IcebergMorDeltaWrite(location, tableSchema, p, command(), partCols)
       }
     }
 }
 
+/** A write that asks for its rows CLUSTERED + SORTED on the identity
+  * partition columns `clustered` ((spec field name, source column)), so
+  * the rolling insert writer ([[IcebergMorDeltaWriter]]) stages one file
+  * per touched value per task, each stamped with its REAL partition
+  * tuple. Empty asks for nothing. */
+trait IcebergClusteredWrite extends org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
+  import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+  import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection, SortOrder}
+
+  protected def clustered: Seq[(String, String)]
+
+  override def requiredDistribution(): Distribution =
+    if (clustered.isEmpty) Distributions.unspecified()
+    else Distributions.clustered(clustered.map(c => Expressions.identity(c._2)).toArray)
+
+  override def requiredOrdering(): Array[SortOrder] =
+    clustered.map(c => Expressions.sort(
+      Expressions.identity(c._2), SortDirection.ASCENDING, NullOrdering.NULLS_FIRST)).toArray
+}
+
 /** The standard-format WriteDelta write. On an identity-partitioned
-  * default spec the insert rows are requested CLUSTERED + SORTED on the
-  * partition columns (same contract as the icelite delta write, ic75), so
-  * the rolling writer stages one file per touched value per task, each
-  * stamped with its REAL partition tuple and committed under the
-  * PARTITIONED spec — external engines prune post-DML insert files by
+  * default spec the insert rows are clustered on the partition columns
+  * (same contract as the icelite delta write, ic75) and committed under
+  * the PARTITIONED spec — external engines prune post-DML insert files by
   * partition value instead of treating them as global. Deletes stay on
   * the auxiliary unpartitioned spec (position deletes are global). */
 final class IcebergMorDeltaWrite(
@@ -832,26 +897,8 @@ final class IcebergMorDeltaWrite(
     tableSchema: StructType,
     p: IcebergFormat.TablePlan,
     command: RowLevelOperation.Command,
-    partCols: Seq[(String, String)]) // (spec field name, source column)
-    extends DeltaWrite
-    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-
-  import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-  import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection, SortOrder}
-
-  /** DELETE rows carry no data columns (row-id projection only) — a
-    * distribution over partition columns would not resolve there. */
-  private def wantsClustering =
-    partCols.nonEmpty && command != RowLevelOperation.Command.DELETE
-
-  override def requiredDistribution(): Distribution =
-    if (!wantsClustering) Distributions.unspecified()
-    else Distributions.clustered(partCols.map(c => Expressions.identity(c._2)).toArray)
-
-  override def requiredOrdering(): Array[SortOrder] =
-    if (!wantsClustering) Array.empty
-    else partCols.map(c => Expressions.sort(
-      Expressions.identity(c._2), SortDirection.ASCENDING, NullOrdering.NULLS_FIRST)).toArray
+    protected val clustered: Seq[(String, String)]) // (spec field name, source column)
+    extends DeltaWrite with IcebergClusteredWrite {
 
   override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
     private val tag       = java.util.UUID.randomUUID().toString.take(8)
@@ -862,11 +909,10 @@ final class IcebergMorDeltaWrite(
     // nested ids (stable across nested evolution); inserts exist only
     // for UPDATE/MERGE
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
-      new IcebergMorDeltaWriterFactory(IceLiteWrite.files(IceTable.PositionDeleteSchema),
+      new IcebergMorDeltaWriterFactory(Some(IceLiteWrite.files(IceTable.PositionDeleteSchema)),
         Option.when(command != RowLevelOperation.Command.DELETE)(
           IcebergWrite.files(tableSchema, p.fieldIds, p.nestedIds)),
-        location, deleteRel, dataRel, tableSchema,
-        if (wantsClustering) partCols else Nil)
+        location, deleteRel, dataRel, tableSchema, clustered)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val msgs = messages.toSeq.map(_.asInstanceOf[IcebergMorDeltaMessage])
@@ -885,7 +931,7 @@ final class IcebergMorDeltaWrite(
       }
       if (delInfos.isEmpty && dataInfos.isEmpty) return // nothing matched: no snapshot
       val w = IcebergFormat.resumeWriter(s, location)
-      if (wantsClustering)
+      if (clustered.nonEmpty)
         // partition-stamped inserts under the DEFAULT spec (prunable by
         // every engine); deletes under the auxiliary unpartitioned spec
         w.commitRowDelta(dataInfos, delInfos)
@@ -904,6 +950,53 @@ final class IcebergMorDeltaWrite(
   }
 }
 
+/** A batch write: `df.write.format("icelite").option("iceberg", "true")`
+  * or SQL `INSERT INTO` / `INSERT OVERWRITE`. Executors stage the rows
+  * under `data/snap-w-<tag>` through the insert arm of
+  * [[IcebergMorDeltaWriter]] — nested types included, every parquet node
+  * carrying the field id the committed schema JSON assigns — and the
+  * driver commits one snapshot: the table's first (`created`), an
+  * append, or with `overwrite` (truncate) an "overwrite" snapshot that
+  * lists only the new files. Earlier snapshots keep theirs, so a pinned
+  * read and time travel see the old rows until
+  * [[IcebergFormat.Writer.expireSnapshots]] reclaims them. Files of an
+  * identity-partitioned default spec carry their partition tuples; a
+  * transform spec's go under the auxiliary unpartitioned spec. */
+final class IcebergMorWrite(
+    location: String,
+    schema: StructType,
+    ids: Seq[Int],
+    nestedIds: Map[String, Int],
+    protected val clustered: Seq[(String, String)], // (spec field name, source column)
+    created: Boolean,
+    overwrite: Boolean)
+    extends Write with IcebergClusteredWrite {
+
+  override def toBatch: BatchWrite = new BatchWrite {
+    private val dataRel = s"data/snap-w-${java.util.UUID.randomUUID().toString.take(8)}"
+
+    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+      new IcebergMorDeltaWriterFactory(None, Some(IcebergWrite.files(schema, ids, nestedIds)),
+        location, deleteRel = "", dataRel, schema, clustered)
+
+    override def commit(messages: Array[WriterCommitMessage]): Unit = {
+      val s = SparkSession.active
+      val files = messages.toSeq.flatMap(_.asInstanceOf[IcebergMorDeltaMessage].dataFiles)
+        .filter(_._1.rows > 0L)
+        .map { case (m, pv) => IcebergWrite.dataFileInfo(location, schema, ids, m, pv) }
+      if (created) new IcebergFormat.Writer(s, location, schema).commit(files)
+      else IcebergFormat.appendWithRetry(s, location, files, stamped = clustered.nonEmpty, overwrite)
+    }
+
+    override def abort(messages: Array[WriterCommitMessage]): Unit = {
+      val fs = new Path(location)
+        .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+      fs.delete(new Path(location, dataRel), true)
+      ()
+    }
+  }
+}
+
 /** A task's position-delete file and its insert files, each insert with
   * its REAL partition tuple (identity values by spec field name; empty
   * when unpartitioned), so DML insert files commit under the partitioned
@@ -914,9 +1007,11 @@ final case class IcebergMorDeltaMessage(
     extends WriterCommitMessage
 
 /** Top-level (serializable) factory — an inner anonymous class would drag
-  * the whole operation, table plan included, into the task closure. */
+  * the whole operation, table plan included, into the task closure. A
+  * batch write has no `deletes`; its rows reach the insert arm through
+  * `write`. */
 final class IcebergMorDeltaWriterFactory(
-    deletes: ParquetFiles,
+    deletes: Option[ParquetFiles],
     inserts: Option[ParquetFiles],
     location: String,
     deleteRel: String,
@@ -941,7 +1036,7 @@ final class IcebergMorDeltaWriterFactory(
   * the REAL partition tuple on its commit message — the files then commit
   * under the partitioned spec and every conforming engine prunes them. */
 final class IcebergMorDeltaWriter(
-    deletes: ParquetFiles,
+    deletes: Option[ParquetFiles],
     inserts: Option[ParquetFiles],
     location: String,
     deleteRel: String,
@@ -993,7 +1088,9 @@ final class IcebergMorDeltaWriter(
 
   override def delete(metadata: InternalRow, id: InternalRow): Unit = {
     if (delWriter == null)
-      delWriter = deletes.writer(location, ParquetFiles.partFile(deleteRel, partitionId, taskId))
+      delWriter = deletes.getOrElse(throw new IllegalStateException(
+        "iceberg-format batch write received a delete row"))
+        .writer(location, ParquetFiles.partFile(deleteRel, partitionId, taskId))
     delRow.update(0, id.getUTF8String(0).clone())
     delRow.update(1, id.getLong(1))
     delWriter.write(delRow)
@@ -1034,7 +1131,7 @@ final class IcebergMorDeltaWriter(
     // to the table — a retried task would otherwise leave them as orphans
     // next to live data (the job-level abort never runs when the retry
     // succeeds); same pattern as IceLitePartitionedWriter.abort
-    val fs = new Path(location).getFileSystem(deletes.conf.value)
+    val fs = new Path(location).getFileSystem((deletes ++ inserts).head.conf.value)
     rolled.foreach { case (m, _) => fs.delete(new Path(location, m.relPath), false) }
     rolled.clear()
   }

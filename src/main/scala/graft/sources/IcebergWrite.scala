@@ -6,137 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
-import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-
-/** NESTED-TYPE write path into a REAL Iceberg v2 table through the V2
-  * connector: `df.write.format("icelite").option("iceberg", "true")
-  * .option("location", dir).mode("overwrite").save()` — executors write
-  * nested parquet (struct / list / map over the primitive surface) with
-  * Spark's own parquet writer under the session codec
-  * ([[ParquetDataWriter]]), with every parquet field — list elements and
-  * map keys and values included — carrying the SAME field id the
-  * committed Iceberg schema JSON assigns (the spec's name-independent
-  * column identity — id-based projection is what makes rename/evolution
-  * safe), and the driver commit is pure metadata through
-  * [[IcebergFormat.Writer]] (Avro manifests, snapshot log, version hint).
-  * Top-level primitive columns collect inline min/max stats so the
-  * committed manifests file-skip exactly like the flat path.
-  *
-  * Round-trips against the v2 READER (`Engine.scanIcebergMetadata`, ic51)
-  * and DuckDB's nested-parquet reader (the ic61 oracle). Scope: table
-  * CREATE (empty or absent location) or full REPLACE (`overwrite`);
-  * appending to a pre-existing Iceberg table needs the library
-  * [[IcebergFormat.Writer]] session, which owns the snapshot lineage. */
-final class IcebergV2Table(location: String, providedSchema: StructType) extends Table
-    with SupportsWrite with org.apache.spark.sql.connector.catalog.SupportsRead {
-
-  override def name(): String = s"iceberg.$location"
-  override def schema(): StructType = providedSchema
-  override def partitioning(): Array[Transform] = Array.empty
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(
-      TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE,
-      TableCapability.MICRO_BATCH_READ)
-
-  /** `spark.readStream.format("icelite").option("iceberg", "true")`: tail
-    * the Iceberg v2 snapshot log as a Structured Streaming source (st17).
-    * BATCH reads stay on `Engine.scanIcebergMetadata` (ic21/ic51) — it
-    * applies MoR deletes, nested projection and time travel that this
-    * streaming surface deliberately rejects. */
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): org.apache.spark.sql.connector.read.Scan =
-        new org.apache.spark.sql.connector.read.Scan {
-          override def readSchema(): StructType = providedSchema
-          override def toBatch: org.apache.spark.sql.connector.read.Batch =
-            throw new UnsupportedOperationException(
-              "iceberg batch reads go through Engine.scanIcebergMetadata; " +
-                "this V2 surface serves readStream")
-          override def toMicroBatchStream(checkpointLocation: String)
-              : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-            providedSchema.fields.foreach(f => require(
-              graft.icelite.BoundOrder.rangeable(f.dataType) || f.dataType == BooleanType ||
-                f.dataType == DateType || f.dataType == TimestampType ||
-                f.dataType == TimestampNTZType,
-              s"iceberg streaming read supports flat primitive schemas; got ${f.dataType} for ${f.name}"))
-            new IcebergMicroBatchStream(location, providedSchema)
-          }
-        }
-    }
-
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder with SupportsTruncate {
-      private var replace = false
-      override def truncate(): WriteBuilder = { replace = true; this }
-      override def build(): Write =
-        new IcebergV2Write(location, info.schema(), replace)
-    }
-}
-
-final class IcebergV2Write(location: String, schema: StructType, replace: Boolean)
-    extends Write {
-
-  override def toBatch: BatchWrite = new BatchWrite {
-    private val dataRel = s"data/snap-w-${java.util.UUID.randomUUID().toString.take(8)}"
-
-    // fresh table: top-level ids 1..n, nested ids derived after them,
-    // exactly as the committed schema JSON assigns them
-    private val ids = 1 to schema.length
-
-    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      new ParquetDataWriterFactory(IcebergWrite.files(schema, ids, Map.empty), location, dataRel)
-
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val s    = SparkSession.active
-      val loc  = new Path(location)
-      val fs   = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val metaDir = new Path(location, "metadata")
-      val oldVersion = IcebergFormat.currentVersion(s, location)
-      val existed    = oldVersion > 0
-      if (existed) require(replace,
-        s"$location already holds an Iceberg table; the V2 writer supports " +
-          "mode(\"overwrite\") (full replace) — use IcebergFormat.Writer to append")
-      // replace is commit-THEN-delete: the new metadata is written under
-      // names the old snapshot can't collide with (version numbered past
-      // the old one, tag-suffixed manifests), the new version publishes
-      // it, and only then is the superseded state reclaimed — a failure at
-      // any point leaves a readable table (old before the publish, new
-      // after), never a destroyed one.
-      val (oldMetaFiles, oldDataDirs) = if (existed) {
-        val metas = fs.listStatus(metaDir).map(_.getPath)
-          .filterNot(graft.icelite.MetadataFiles.isHint).toSeq
-        val dataDir = new Path(location, "data")
-        val datas = if (fs.exists(dataDir))
-          fs.listStatus(dataDir).map(_.getPath)
-            .filterNot(p => s"data/${p.getName}" == dataRel).toSeq
-        else Nil
-        (metas, datas)
-      } else (Nil, Nil)
-      val infos = messages.toSeq.collect {
-        case m: WrittenFile if m.rows > 0 =>
-          IcebergWrite.dataFileInfo(location, schema, ids, m, Map.empty)
-      }
-      val w = new IcebergFormat.Writer(s, location, schema,
-        startVersion = oldVersion, fileTag = dataRel.stripPrefix("data/snap-w-"))
-      w.commit(infos)
-      // the new version is live — reclaim the old snapshot's files
-      oldMetaFiles.foreach(p => fs.delete(p, true))
-      oldDataDirs.foreach(p => fs.delete(p, true))
-    }
-
-    override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new Path(location)
-        .getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(location, dataRel), true)
-    }
-  }
-}
 
 /** Snapshot-log tailing micro-batch stream over REAL Iceberg v2 metadata
   * (st14's IceLite source re-expressed on the spec's metadata/manifest

@@ -342,27 +342,40 @@ class DataSourceV2Spec extends SparkSpec {
       .write.format("icelite").option("iceberg", "true")
       .option("location", loc).mode("overwrite").save()
     val v1 = hintVersion
+    // the old state: its snapshot, manifest list, manifests and data dir
+    val oldMd   = f"$loc/metadata/v$v1%05d.metadata.json"
+    val oldSnap = graft.icelite.IcebergFormat.currentSnapshotId(spark, oldMd).get
+    val oldList = new org.apache.hadoop.fs.Path(graft.icelite.SpecMetadata.read(fs,
+      new org.apache.hadoop.fs.Path(oldMd)).snapshots.last.manifestList.get)
+    val oldManifests = graft.icelite.IcebergFormat.manifestListPaths(spark, oldMd).map(_._1)
+    val dataDir  = new org.apache.hadoop.fs.Path(loc, "data")
+    val oldDirs  = fs.listStatus(dataDir).map(_.getPath)
+    assert(oldDirs.nonEmpty && oldDirs.forall(_.getName.startsWith("snap-w-")),
+      oldDirs.mkString(","))
     Seq((10L, "x")).toDF("k", "v")
       .write.format("icelite").option("iceberg", "true")
       .option("location", loc).mode("overwrite").save()
     val v2ver = hintVersion
-    // the replace NUMBERED its metadata past the old table's versions
-    // (proof nothing was wiped before the new hint landed) and the old
-    // metadata files are reclaimed only after the flip
+    // the overwrite is a new version of the same table
     assert(v2ver > v1, s"replace must bump the version past the old table ($v1 -> $v2ver)")
     val metaFiles = fs.listStatus(new org.apache.hadoop.fs.Path(loc, "metadata"))
       .map(_.getPath.getName).toSet
-    assert(!metaFiles.contains(f"v$v1%05d.metadata.json"),
-      s"old metadata not reclaimed after publish: $metaFiles")
     assert(metaFiles.contains(f"v$v2ver%05d.metadata.json"))
     // the replaced table reads the NEW rows through the v2 reader
     val md = f"$loc/metadata/v$v2ver%05d.metadata.json"
     val eng = new graft.icelite.Engine(spark, new FsCatalog(spark, scratch("v2icereplace_wh")))
     val got = eng.scanIcebergMetadata(md).as[(Long, String)].collect().toSet
     assert(got == Set((10L, "x")), s"replaced table read $got")
-    // exactly one data dir remains (the new stage)
-    val dataDirs = fs.listStatus(new org.apache.hadoop.fs.Path(loc, "data")).map(_.getPath.getName)
-    assert(dataDirs.length == 1, s"old data dirs not reclaimed: ${dataDirs.mkString(",")}")
+    // the old snapshot still time-travels
+    val old = graft.icelite.IcebergFormat.scanAt(spark, md, oldSnap)
+      .as[(Long, String)].collect().toSet
+    assert(old == Set((1L, "a"), (2L, "b")), s"pre-overwrite snapshot read $old")
+    // expiry reclaims the old state: list, manifests and data dir
+    graft.icelite.IcebergFormat.resumeWriter(spark, loc).expireSnapshots(1)
+    assert(!fs.exists(oldList), s"old manifest list not reclaimed: $oldList")
+    assert(oldManifests.nonEmpty && oldManifests.forall(m =>
+      !fs.exists(new org.apache.hadoop.fs.Path(m))), s"old manifests not reclaimed: $oldManifests")
+    assert(oldDirs.forall(!fs.exists(_)), s"old data dirs not reclaimed: ${oldDirs.mkString(",")}")
   }
 
   test("persistent SQL views: full lifecycle through the ViewCatalog") {

@@ -26,9 +26,11 @@ class MetadataPublishGuardSpec extends AnyFunSuite {
     "MaxCommitAttempts"     -> "MaxCommitAttempts".r)
 
   /** Names of the deleted second copies, which no file may bring back:
-    * publish helpers, and the spec writer's own rollback and retry loop. */
+    * publish helpers, the spec writer's own rollback and retry loop, and
+    * the second DSv2 table for spec directories with its in-place replace. */
   private val gone = ("claimExactlyOnce|writeFileIfAbsent|noClobber|listVersions|" +
-    "withCommitRollback|attemptCreated|withRetry\\b").r
+    "withCommitRollback|attemptCreated|withRetry\\b|" +
+    "IcebergV2Table|IcebergV2Write|startVersion|fileTag").r
 
   private def sources: Seq[Path] =
     Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq

@@ -171,4 +171,21 @@ class SpecMetadataSpec extends SparkSpec {
       Seq((1L, "append", Some(0L)), (2L, "append", Some(3L))))
     assert(md.nextRowId == 7L)
   }
+
+  test("expiry deletes the data files only expired snapshots list and keeps the live one") {
+    val loc = scratch("spec_expire_files") + "/t"
+    val df  = Seq(1L, 2L, 3L).toDF("x")
+    val w   = new IcebergFormat.Writer(spark, loc, df.schema)
+    val old = Seq(IcebergFormat.writeSingleFile(spark, loc, "a", df.filter($"x" < 2)),
+      IcebergFormat.writeSingleFile(spark, loc, "b", df.filter($"x" >= 2)))
+    w.commit(old)
+    val live = IcebergFormat.writeSingleFile(spark, loc, "c", df)
+    w.rewriteDataFiles(Seq(live))
+    w.expireSnapshots(1)
+    val fs = new Path(loc).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(old.forall(f => !fs.exists(new Path(f.path))), old.map(_.path))
+    assert(fs.exists(new Path(live.path)))
+    assert(IcebergFormat.scan(spark, w.currentMetadataPath).as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L))
+  }
 }

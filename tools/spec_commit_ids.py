@@ -6,11 +6,13 @@ How: grep IceQueries, MvQueries, StreamQueries and every file under ops/ for
 the Writer's entry points (`IcebergFormat.Writer`, `resumeWriter`,
 `appendWithRetry`, `publishEdits`) and for the library calls that resume one
 (`exportIceberg`, `TableStats.analyze`/`computePartitionStats`,
-`DeletionVectors.deleteWhere`); take the member each hit sits in, then every
+`DeletionVectors.deleteWhere`) and for the connector's DataFrame write into
+a spec directory (`.write.format("icelite").option("iceberg", "true")`,
+which commits through the Writer); take the member each hit sits in, then every
 member of the same file that calls a marked one (MatView's through
 `MatView.<name>`), until nothing changes; print the `Q("id", fn, ...)`
 entries whose `fn` is marked. Queries that reach the Writer only through
-the SQL connector (an INSERT into a native Iceberg directory) are not found.
+SQL (an INSERT into a native Iceberg directory) are not found.
 
 Run from the repository root: python3 tools/spec_commit_ids.py
 """
@@ -23,7 +25,8 @@ files = (['src/main/scala/graft/queries/IceQueries.scala',
          sorted(glob.glob('src/main/scala/graft/ops/*.scala')))
 hit = re.compile(r'IcebergFormat\.Writer|resumeWriter|appendWithRetry|publishEdits|'
                  r'exportIceberg|TableStats\.(analyze|computePartitionStats)|'
-                 r'DeletionVectors\.deleteWhere')
+                 r'DeletionVectors\.deleteWhere|'
+                 r'write\.format\("icelite"\)\.option\("iceberg", "true"\)')
 member = re.compile(r'^  (?:private(?:\[\w+\])? )?(?:final )?def (\w+)')
 
 bodies = {}  # (file, def name) -> its text, up to the next member at its indent
